@@ -11,6 +11,8 @@ Arrow; all other envelope columns stay JVM-side.
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -39,6 +41,21 @@ def spark_type_of(codec: RecordCodec) -> str:
     return f"struct<{', '.join(fields)}>"
 
 
+def frame_rows(pdf: pd.DataFrame, codec: RecordCodec, schema_id: int) -> list[bytes]:
+    """Per-row body of :func:`to_confluent_avro`: each row of ``pdf`` (one
+    column per record field) as Confluent-framed Avro bytes, a NaN in a
+    nullable field encoded as Avro null (see there)."""
+    nullable = {name for name, t in codec.fields if isinstance(t, list)}
+    out = []
+    for row in pdf.to_dict("records"):
+        clean = {
+            k: (None if k in nullable and isinstance(v, float) and math.isnan(v) else v)
+            for k, v in row.items()
+        }
+        out.append(frame(schema_id, codec.encode(clean)))
+    return out
+
+
 def to_confluent_avro(payload: Column, schema: dict | str, schema_id: int) -> Column:
     """struct column → Confluent-framed Avro binary column.
 
@@ -52,26 +69,10 @@ def to_confluent_avro(payload: Column, schema: dict | str, schema_id: int) -> Co
     """
     ensure_shipped()
     codec = RecordCodec(schema)
-    nullable = {name for name, t in codec.fields if isinstance(t, list)}
 
     @F.pandas_udf("binary")
     def ser(pdf: pd.DataFrame) -> pd.Series:
-        import math
-
-        out = []
-        for row in pdf.to_dict("records"):
-            clean = {
-                k: (
-                    None
-                    if k in nullable
-                    and isinstance(v, float)
-                    and math.isnan(v)
-                    else v
-                )
-                for k, v in row.items()
-            }
-            out.append(frame(schema_id, codec.encode(clean)))
-        return pd.Series(out)
+        return pd.Series(frame_rows(pdf, codec, schema_id))
 
     return ser(payload)
 

@@ -21,6 +21,11 @@ from pyspark.sql import functions as F
 from event_store_spark.avro.registry import LocalSchemaRegistry
 from event_store_spark.avro.spark import from_confluent_avro, to_confluent_avro
 from event_store_spark.core.cursor import Cursor
+from event_store_spark.core.envelope import (
+    canonical_key,
+    truncate_millis,
+    validate_metadata,
+)
 from event_store_spark.core.store import EventStore
 from event_store_spark.crypto.aead import EventEncryptor
 
@@ -54,60 +59,64 @@ class AvroEventStore(EventStore):
         one column per field of the registered record schema.
         ``encryption_key`` (a kid URI) enables AEAD, mirroring
         ``save(topic, event, encryptionKey)`` (`EventStore.java:94`).
+
+        Each row crosses into Python once: an encrypted save serializes
+        and seals in one Arrow UDF (:meth:`EventEncryptor.encrypt_avro_df`),
+        and ``append`` persists the batch so the write reuses that pass. A
+        batch under the store's file-size target lands as one file.
         """
         codec = self.registry.codec_by_name(record_name)
         sid = self.registry.id_by_name(record_name)
-        field_names = [n for n, _ in codec.fields]
-        envelope_cols = [c for c in ("key", "timestamp", "metadata") if c in df.columns]
-        payload = df.select(
-            *envelope_cols,
-            to_confluent_avro(F.struct(*field_names), codec.schema, sid).alias("data"),
-        )
-        if encryption_key is not None:
-            if self.encryptor is None:
-                raise ValueError("no encryptor configured for encryption_key")
-            # validate USER metadata now — the store itself then adds `kid`
-            # (allowed: PostgresEventStore.java:152-160 does the same), so
-            # the final append skips re-validation
-            from event_store_spark.core.envelope import (
-                canonical_key,
-                truncate_millis,
-                validate_metadata,
+        payload = F.struct(*[n for n, _ in codec.fields])
+        if encryption_key is None:
+            envelope_cols = [
+                c for c in ("key", "timestamp", "metadata") if c in df.columns
+            ]
+            serialized = df.select(
+                *envelope_cols,
+                to_confluent_avro(payload, codec.schema, sid).alias("data"),
             )
-
-            validate_metadata(payload)
-
-            ts = (
-                F.col("timestamp").cast("timestamp_ltz")
-                if "timestamp" in payload.columns
-                else F.current_timestamp()
-            )
-            md = (
-                F.col("metadata")
-                if "metadata" in payload.columns
-                else F.lit(None).cast("map<string,binary>")
-            )
-            staged_df = payload.select(
-                canonical_key(F.col("key"), key_type).alias("key"),
-                truncate_millis(ts).alias("timestamp"),
-                md.alias("metadata"),
-                F.col("data"),
-            )
-            encrypted = self.encryptor.encrypt_df(staged_df, encryption_key)
-            # keep the CALLER's key_type: canonical_key is idempotent (the
-            # staged key is UTF-8 bytes of the string form, and re-encoding
-            # round-trips), so the ticket records the true type — encrypted
-            # and plaintext saves stay interchangeable per topic
-            # (EventStore.java:94) and typed key views keep working
             return self.append(
-                topic,
-                encrypted,
-                key_type=key_type,
-                validate=False,  # kid was added by the store, not the user
-                partition_by_day=partition_by_day,
+                topic, serialized, key_type=key_type, partition_by_day=partition_by_day
             )
+        if self.encryptor is None:
+            raise ValueError("no encryptor configured for encryption_key")
+        # validate USER metadata now — the store itself then adds `kid`
+        # (allowed: PostgresEventStore.java:152-160 does the same), so the
+        # final append skips re-validation
+        validate_metadata(df)
+        ts = (
+            F.col("timestamp").cast("timestamp_ltz")
+            if "timestamp" in df.columns
+            else F.current_timestamp()
+        )
+        md = (
+            F.col("metadata")
+            if "metadata" in df.columns
+            else F.lit(None).cast("map<string,binary>")
+        )
+        # the AAD covers the canonical key and the ms-truncated timestamp,
+        # so both are fixed before sealing
+        staged = df.select(
+            canonical_key(F.col("key"), key_type).alias("key"),
+            truncate_millis(ts).alias("timestamp"),
+            md.alias("metadata"),
+            payload.alias("payload"),
+        )
+        encrypted = self.encryptor.encrypt_avro_df(
+            staged, F.col("payload"), codec.schema, sid, encryption_key
+        ).drop("payload")
+        # keep the CALLER's key_type: canonical_key is idempotent (the
+        # staged key is UTF-8 bytes of the string form, and re-encoding
+        # round-trips), so the ticket records the true type — encrypted
+        # and plaintext saves stay interchangeable per topic
+        # (EventStore.java:94) and typed key views keep working
         return self.append(
-            topic, payload, key_type=key_type, partition_by_day=partition_by_day
+            topic,
+            encrypted,
+            key_type=key_type,
+            validate=False,  # kid was added by the store, not the user
+            partition_by_day=partition_by_day,
         )
 
     def load(

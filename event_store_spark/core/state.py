@@ -373,7 +373,7 @@ class OffsetsTable(_AtomicJsonState):
 
 class TicketStore(_AtomicJsonState):
     """Per-topic append ticket: high-water ``(lsn, max_id)``, cumulative row
-    count, and layout facts (``key_type``, day-partitioning).
+    count, and layout facts (``key_type``, day-partitioning, row schema).
 
     The Spark-file analog of the reference's transactional id/lsn sequence:
     the reference gets MAX(lsn)/MAX(id) for free from Postgres sequences and
@@ -411,6 +411,7 @@ class TicketStore(_AtomicJsonState):
         key_type: str,
         day_partitioned: bool,
         clock: int = 0,
+        schema: dict | None = None,
     ) -> None:
         data = self._read()
         data[topic] = {
@@ -425,6 +426,9 @@ class TicketStore(_AtomicJsonState):
             # pickup by (modTime, path) observe commit order — the property
             # the Replicator's keyset cursor depends on
             "clock": clock,
+            # the rows' Spark schema (StructType JSON, all nullable): reads
+            # pass it to `.schema(...)` instead of inferring it from footers
+            "schema": schema,
         }
         self._write(data)
 

@@ -17,12 +17,17 @@ The Spark-native re-expression of the reference's write/read paths:
 
 Scale posture: one directory per topic; each append writes parquet files
 whose (lsn, id) min/max footer stats give keyset-predicate file skipping —
-the same role the reference's lsn index plays. Appends never shuffle: id
-assignment is `monotonically_increasing_id()` (partition-local), and replay
-order is reconstructed from (lsn, id) at read time. A single writer per
-topic is assumed, mirroring the reference's advisory-lock single-writer
-model (`LockManager.java:45-84`); multi-writer coordination would move the
-lsn ticket into a lock service or table MERGE.
+the same role the reference's lsn index plays. A flat append whose batch
+fits :data:`TARGET_FILE_BYTES` writes ONE file, so replication,
+subscription and replay handle one split per append; a larger batch (and
+every day-partitioned one) writes one file per input partition. Appends
+never shuffle: id assignment is `monotonically_increasing_id()`
+(partition-local), and replay order is reconstructed from (lsn, id) at
+read time. The topic's row schema is recorded in its ticket, so reads
+never run a footer-inference job. A single writer per topic is assumed,
+mirroring the reference's advisory-lock single-writer model
+(`LockManager.java:45-84`); multi-writer coordination would move the lsn
+ticket into a lock service or table MERGE.
 """
 
 from __future__ import annotations
@@ -32,9 +37,12 @@ import re
 import shutil
 import time
 import uuid
+from functools import reduce
+from operator import add
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from event_store_spark.core.cursor import Cursor, keyset_after
 from event_store_spark.core.envelope import (
@@ -47,6 +55,41 @@ from event_store_spark.core.envelope import (
 from event_store_spark.core.state import TicketStore, TopicMutex
 
 TOPIC_SUFFIX = "_events"
+
+#: data-file size target shared by append and compact: an append whose
+#: batch fits writes one file, and compaction sizes its output by it
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable and no field
+    metadata — the shape a parquet read reports for what a write sent."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _row_bytes(schema: T.StructType) -> Column:
+    """Uncompressed size of a row: byte lengths of string and binary cells,
+    JSON length of nested ones, 8 per other cell. Parquet encodes smaller,
+    so summed over a batch it bounds the file the batch writes."""
+    sizes = []
+    for f in schema.fields:
+        c = F.col(f.name)
+        if isinstance(f.dataType, (T.StringType, T.BinaryType)):
+            size = F.octet_length(c)
+        elif isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType)):
+            size = F.octet_length(F.to_json(c))
+        else:
+            size = F.lit(8)
+        sizes.append(F.coalesce(size, F.lit(0)))
+    return reduce(add, sizes)
 
 
 class EventStore:
@@ -237,14 +280,28 @@ class EventStore:
             )
         else:
             out = df.select(F.monotonically_increasing_id().alias("id"), *body)
+        # One row schema per topic, like one key type: reads trust the
+        # ticket's schema instead of inferring it from file footers
+        row_schema = out.schema
+        schema = _as_nullable(row_schema).jsonValue()
+        if ticket is not None and ticket.get("schema") not in (None, schema):
+            raise ValueError(
+                f"topic {topic!r} stores rows of "
+                f"{T.StructType.fromJson(ticket['schema']).simpleString()}; cannot "
+                f"append {T.StructType.fromJson(schema).simpleString()}"
+            )
         # Persist so the high-water agg and the write see the SAME partition
         # evaluations (monotonically_increasing_id is deterministic per
-        # partition layout; the cache removes even recompute-order risk).
-        # Both jobs are O(batch): new data only, bounded, spills if large.
+        # partition layout; the cache removes even recompute-order risk),
+        # and so the write reuses the batch's one Python pass (serialize,
+        # encrypt) instead of re-running it. Both jobs are O(batch): new
+        # data only, bounded, spills if large.
         out = out.persist()
         try:
             stats = out.agg(
-                F.max("id").alias("max_id"), F.count(F.lit(1)).alias("n")
+                F.max("id").alias("max_id"),
+                F.count(F.lit(1)).alias("n"),
+                F.sum(_row_bytes(row_schema)).alias("bytes"),
             ).first()
             if stats.n == 0:
                 return (
@@ -280,6 +337,7 @@ class EventStore:
                 key_type=key_type,
                 day_partitioned=partition_by_day,
                 clock=clock_start + stats.n,
+                schema=schema,
             )
             # Stage-then-publish: write the batch OUTSIDE the topic dir,
             # then move each data file into place in (lsn, id) order with a
@@ -304,7 +362,15 @@ class EventStore:
                 # simply a lost batch — its lsn stays a gap, as documented
                 shutil.rmtree(topic_staging_root, ignore_errors=True)
             staging = os.path.join(topic_staging_root, f"{lsn}-{uuid.uuid4().hex}")
-            writer = out.sortWithinPartitions("id").write
+            # A flat batch that fits the file-size target is written by ONE
+            # task from the persisted partitions: ids are partition-local
+            # blocks, so the id sort lays them out in order. Day-partitioned
+            # batches keep one writer per partition — their ids were
+            # assigned per partition after a day sort, so one task's dt=
+            # files would hold interleaved id ranges.
+            single_file = not partition_by_day and stats.bytes <= TARGET_FILE_BYTES
+            laid_out = out.coalesce(1) if single_file else out
+            writer = laid_out.sortWithinPartitions("id").write
             if partition_by_day:
                 # hive-style dt= layout: time-range replay prunes whole
                 # partitions statically (the 100 TB event-table layout);
@@ -331,6 +397,7 @@ class EventStore:
                     key_type=key_type,
                     day_partitioned=partition_by_day,
                     clock=clock_start + published,
+                    schema=schema,
                 )
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
@@ -388,14 +455,21 @@ class EventStore:
     def _ticket(self, topic: str) -> dict | None:
         """The topic's append ticket; recovered by one explicit scan for
         topics written before the ticket store existed (or after losing it —
-        the parquet data remains the source of truth)."""
+        the parquet data remains the source of truth). A ticket written
+        before row schemas were recorded keeps its counters and gains the
+        schema from one footer inference."""
         ticket = self._tickets.get(topic)
-        if ticket is not None:
+        if ticket is not None and ticket.get("schema") is not None:
             return ticket
         path = self.topic_path(topic)
         if not self._has_data(path):
-            return None
+            return ticket
         df = self.spark.read.parquet(path)
+        schema = _as_nullable(df.schema).jsonValue()
+        if ticket is not None:
+            ticket = {**ticket, "schema": schema}
+            self._tickets.save(topic, **ticket)
+            return ticket
         row = df.agg(
             F.max(F.struct("lsn", "id")).alias("hw"),
             F.count(F.lit(1)).alias("n"),
@@ -416,9 +490,20 @@ class EventStore:
                 )
                 * 1000
             ),
+            "schema": schema,
         }
         self._tickets.save(topic, **ticket)
         return ticket
+
+    def event_schema(self, topic: str) -> T.StructType:
+        """The schema of the topic's rows (``dt`` included on day-partitioned
+        topics), from its ticket — readers pass it to ``.schema(...)`` so no
+        read starts a footer-inference job. A topic without rows has no
+        schema; parquet reports that as it always has."""
+        ticket = self._ticket(topic)
+        if ticket is None or ticket.get("schema") is None:
+            return self.spark.read.parquet(self.topic_path(topic)).schema
+        return T.StructType.fromJson(ticket["schema"])
 
     def high_water(self, topic: str) -> dict | None:
         """Bookkept high-water facts ``{lsn, max_id, total, ...}`` (O(1) once
@@ -490,7 +575,9 @@ class EventStore:
                 f"topic {topic!r} is not day-partitioned; day-range reads "
                 "require append(..., partition_by_day=True)"
             )
-        df = self.spark.read.parquet(self.topic_path(topic))
+        df = self.spark.read.schema(self.event_schema(topic)).parquet(
+            self.topic_path(topic)
+        )
         if start_day is not None:
             df = df.where(F.col("dt") >= F.lit(start_day).cast("date"))
         if end_day is not None:
@@ -498,11 +585,10 @@ class EventStore:
         if after is not None:
             df = df.where(keyset_after(after))
         if typed_key:
-            key_type = df.select("key_type").first()
-            if key_type is not None:
-                df = df.withColumn(
-                    "key_view", typed_key_view(F.col("key"), key_type[0])
-                )
+            df = df.withColumn(
+                "key_view",
+                typed_key_view(F.col("key"), self._topic_key_type(topic)),
+            )
         return df
 
     def view(self, topic: str, name: str | None = None) -> str:
@@ -531,10 +617,13 @@ class EventStore:
         """Rewrite accumulated small append files into (lsn, id)-range
         partitioned, internally sorted files; returns the new file count.
 
-        Every append creates at least one file, so a long-lived topic
-        accumulates small files — the classic streaming-table problem. The
-        rewrite uses ``repartitionByRange(lsn, id)`` so each output file
-        covers a contiguous cursor range (maximum min/max-stat pruning for
+        Every append creates at least one file (exactly one for a flat
+        batch under :data:`TARGET_FILE_BYTES`), so a long-lived topic
+        accumulates small files — the classic streaming-table problem.
+        Without ``target_files`` the output count is the topic's bytes
+        over the same target. The rewrite uses
+        ``repartitionByRange(lsn, id)`` so each output file covers a
+        contiguous cursor range (maximum min/max-stat pruning for
         keyset predicates) and is sorted within, keeping replay merges
         cheap. Takes the topic's append mutex (X4) for the swap. The swap
         is TWO renames (old out, compacted in) — not atomic; a crash
@@ -568,13 +657,13 @@ class EventStore:
         if not self._has_data(path):
             return 0
         day_partitioned = self._is_day_partitioned(topic)
-        df = self.spark.read.parquet(path)
+        df = self.spark.read.schema(self.event_schema(topic)).parquet(path)
         if target_files is None:
             # walk dt= subdirectories too: a day-partitioned topic has NO
             # top-level parquet files, so a flat listing would see total=0
             # and always compact to a single file
             total = sum(os.path.getsize(f) for f in self._parquet_files(path))
-            target_files = max(1, total // (128 * 1024 * 1024))  # ~128 MB files
+            target_files = max(1, total // TARGET_FILE_BYTES)
         tmp = f"{path}.compacting"
         ordered = f"{path}.compacted"
         old = f"{path}.old"

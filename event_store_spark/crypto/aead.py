@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import os
 import struct
+from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -69,6 +70,54 @@ def build_aad(key: bytes, ts_millis: int, metadata: dict[str, bytes] | None) -> 
     }
     md = encode_map_bytes(clean) if clean else b""
     return bytes(key) + struct.pack(">q", ts_millis) + md
+
+
+def aead_rows(
+    mode: str,
+    resolver: KeyResolver,
+    data: Iterable,
+    key: Iterable,
+    ts_ms: Iterable,
+    md: Iterable,
+    kid: Iterable,
+    missing_key: str = "error",
+) -> list:
+    """Per-row body of the AEAD UDFs: encrypt or decrypt each ``data``
+    cell under its row's kid, with the AAD from :func:`build_aad` — the
+    ONE source of truth for the security-critical layout (a hand-rolled
+    copy inside a UDF once drifted on key-sort order). ``md`` holds the
+    metadata entries (``[{key, value}]``) with ``id``/``kid`` already
+    filtered. Rows without a kid pass through (C2); a kid the resolver
+    does not know fails, or yields None under ``missing_key="null"``
+    (crypto-shredding). Resolutions memoize per call, so a KMS-backed
+    resolver is hit once per distinct kid per batch."""
+    batch_keys: dict = {}
+
+    def resolve(ki):
+        if ki not in batch_keys:
+            batch_keys[ki] = resolver.resolve(ki)
+        return batch_keys[ki]
+
+    out = []
+    for d, k, t, m, ki in zip(data, key, ts_ms, md, kid):
+        if ki is None:  # no kid → passthrough (C2)
+            out.append(d)
+            continue
+        kbytes = resolve(ki)
+        if kbytes is None:
+            if missing_key == "null":  # shredded key → unreadable
+                out.append(None)
+                continue
+            raise KeyError(f"unknown encryption key id {ki!r}")
+        meta = {e["key"]: bytes(e["value"]) for e in (m if m is not None else [])}
+        aad = build_aad(bytes(k), int(t), meta)
+        cipher = AESGCM(kbytes)
+        if mode == "encrypt":
+            nonce = os.urandom(_NONCE_LEN)
+            out.append(nonce + cipher.encrypt(nonce, bytes(d), aad))
+        else:
+            out.append(cipher.decrypt(bytes(d[:_NONCE_LEN]), bytes(d[_NONCE_LEN:]), aad))
+    return out
 
 
 class KeyResolver:
@@ -175,62 +224,22 @@ class EventEncryptor:
         from event_store_spark.shipping import ensure_shipped
 
         ensure_shipped()
-        # Everything the UDF needs is either stdlib, imported inside the
-        # function body, or a plain closure value, so cloudpickle ships it
-        # cleanly to workers regardless of their import environment. The
-        # resolver rides the closure; per-batch resolutions memoize locally
-        # so a KMS-backed resolver is hit once per distinct kid per batch.
+        # The resolver rides the closure; the per-row work is the shipped
+        # module's aead_rows, so cloudpickle carries only plain values.
         resolver = self.resolver
-        nonce_len = _NONCE_LEN
 
         @F.pandas_udf("binary")
         def fn(
             data: pd.Series, key: pd.Series, ts_ms: pd.Series, md: pd.Series, kid: pd.Series
         ) -> pd.Series:
-            import os as _os
-
-            from cryptography.hazmat.primitives.ciphers.aead import AESGCM as _AESGCM
-
-            # ONE source of truth for the security-critical AAD layout:
-            # ensure_shipped() makes the package importable on executors, so
-            # the UDF uses the same build_aad (and its canonical Java-order
-            # map encoding) the bytes API and the golden tests pin — a
-            # hand-rolled copy here once drifted on key-sort order.
-            from event_store_spark.crypto.aead import build_aad as _build_aad
-
-            batch_keys: dict = {}
-
-            def _resolve(ki):
-                if ki not in batch_keys:
-                    batch_keys[ki] = resolver.resolve(ki)
-                return batch_keys[ki]
-
-            out = []
-            for d, k, t, m, ki in zip(data, key, ts_ms, md, kid):
-                if ki is None:  # no kid → passthrough (C2)
-                    out.append(d)
-                    continue
-                kbytes = _resolve(ki)
-                if kbytes is None:
-                    if missing_key == "null":  # shredded key → unreadable
-                        out.append(None)
-                        continue
-                    raise KeyError(f"unknown encryption key id {ki!r}")
-                meta = {e["key"]: bytes(e["value"]) for e in (m or [])}
-                aad = _build_aad(bytes(k), int(t), meta)
-                cipher = _AESGCM(kbytes)
-                if mode == "encrypt":
-                    nonce = _os.urandom(nonce_len)
-                    out.append(nonce + cipher.encrypt(nonce, bytes(d), aad))
-                else:
-                    out.append(
-                        cipher.decrypt(bytes(d[:nonce_len]), bytes(d[nonce_len:]), aad)
-                    )
-            return pd.Series(out)
+            return pd.Series(
+                aead_rows(mode, resolver, data, key, ts_ms, md, kid, missing_key)
+            )
 
         return fn
 
-    def _args(self, df: DataFrame, kid: Column) -> list[Column]:
+    @staticmethod
+    def _args(kid: Column) -> list[Column]:
         # entries ship UNSORTED: canonical (Java-order) sorting happens once
         # inside build_aad's map encoding — a JVM-side array_sort here would
         # be dead work (and sorted differently: UTF-8 bytes vs UTF-16 units)
@@ -247,22 +256,59 @@ class EventEncryptor:
             kid,
         ]
 
-    def encrypt_df(self, df: DataFrame, kid: str) -> DataFrame:
-        """Encrypt ``data`` and record ``kid`` in metadata (C1 + C3).
-
-        Any pre-existing kid entry is replaced (re-encryption / key
-        rotation): map_concat under the default EXCEPTION dedup policy
-        would otherwise fail at runtime on the duplicate key.
-        """
-        encrypted = self._udf("encrypt")(F.col("data"), *self._args(df, F.lit(kid)))
-        with_kid = F.map_concat(
+    @staticmethod
+    def _with_kid(kid: str) -> Column:
+        """``metadata`` with ``kid`` recorded (C3). Any pre-existing kid
+        entry is replaced (re-encryption / key rotation): map_concat under
+        the default EXCEPTION dedup policy would otherwise fail at runtime
+        on the duplicate key."""
+        return F.map_concat(
             F.map_filter(
                 F.coalesce(F.col("metadata"), F.expr("map()")),
                 lambda k, _: k != ENCRYPTION_KEY_ID,
             ),
             F.create_map(F.lit(ENCRYPTION_KEY_ID), F.encode(F.lit(kid), "UTF-8")),
         )
-        return df.withColumn("data", encrypted).withColumn("metadata", with_kid)
+
+    def encrypt_df(self, df: DataFrame, kid: str) -> DataFrame:
+        """Encrypt ``data`` and record ``kid`` in metadata (C1 + C3)."""
+        encrypted = self._udf("encrypt")(F.col("data"), *self._args(F.lit(kid)))
+        return df.withColumn("data", encrypted).withColumn(
+            "metadata", self._with_kid(kid)
+        )
+
+    def encrypt_avro_df(
+        self, df: DataFrame, payload: Column, schema: dict | str, schema_id: int, kid: str
+    ) -> DataFrame:
+        """Serialize ``payload`` to Confluent-framed Avro and encrypt it
+        into ``data`` in ONE Arrow UDF, recording ``kid`` in metadata.
+
+        Same result as ``to_confluent_avro`` then :meth:`encrypt_df` —
+        the plaintext frame, AAD and ciphertext layout come from the same
+        per-row helpers — but each row crosses into Python once: the
+        five-argument encrypt UDF cannot chain onto the serialize UDF, so
+        the two-step plan starts two Python workers per input partition.
+        ``df`` needs the canonical ``key``, ms-truncated ``timestamp`` and
+        ``metadata`` columns."""
+        from event_store_spark.avro.codec import RecordCodec
+        from event_store_spark.avro.spark import frame_rows
+        from event_store_spark.shipping import ensure_shipped
+
+        ensure_shipped()
+        codec = RecordCodec(schema)
+        resolver = self.resolver
+
+        @F.pandas_udf("binary")
+        def seal(
+            rows: pd.DataFrame, key: pd.Series, ts_ms: pd.Series, md: pd.Series, kids: pd.Series
+        ) -> pd.Series:
+            frames = frame_rows(rows, codec, schema_id)
+            return pd.Series(aead_rows("encrypt", resolver, frames, key, ts_ms, md, kids))
+
+        sealed = seal(payload, *self._args(F.lit(kid)))
+        return df.withColumn("data", sealed).withColumn(
+            "metadata", self._with_kid(kid)
+        )
 
     def decrypt_df(self, df: DataFrame, missing_key: str = "error") -> DataFrame:
         """Decrypt rows that carry a ``kid``; pass others through (C2).
@@ -277,7 +323,7 @@ class EventEncryptor:
             F.map_contains_key(F.coalesce(F.col("metadata"), F.expr("map()")), ENCRYPTION_KEY_ID),
             F.decode(F.col("metadata")[ENCRYPTION_KEY_ID], "UTF-8"),
         )
-        decrypted = self._udf("decrypt", missing_key)(F.col("data"), *self._args(df, kid))
+        decrypted = self._udf("decrypt", missing_key)(F.col("data"), *self._args(kid))
         return df.withColumn("data", decrypted)
 
     # ------------------------------------------------------ crypto-shredding

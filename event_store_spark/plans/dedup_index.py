@@ -227,6 +227,11 @@ class DedupIndex:
             # stale serving path)
         with open(os.path.join(path, "meta.json"), "w") as fh:
             json.dump(meta, fh)
+        # a rebuilt generation retires memoized plans that pinned the old
+        # file listing
+        from event_store_spark.plans.registry import forget_all_plans
+
+        forget_all_plans(spark)
         return idx
 
     @classmethod
@@ -423,6 +428,8 @@ class DedupIndex:
         readable and the append idempotent."""
         import shutil
 
+        from event_store_spark.plans.registry import forget_all_plans
+
         sig = _signatures(batch_docs, self.kind)
         if batch_id is None:
             if sig.isEmpty():
@@ -434,10 +441,13 @@ class DedupIndex:
             seg = os.path.join(self.path, f"segment-b{batch_id}")
             if sig.isEmpty():
                 shutil.rmtree(seg, ignore_errors=True)
-                return
-            sig.write.mode("overwrite").partitionBy(
-                _PART_COL[self.kind]
-            ).parquet(seg)
+            else:
+                sig.write.mode("overwrite").partitionBy(
+                    _PART_COL[self.kind]
+                ).parquet(seg)
+        # a memoized plan pinned the segment listing it first resolved;
+        # evict so the next probe sees this one
+        forget_all_plans(self.spark)
 
     def compact(self) -> None:
         """Merge base + every segment dir into a fresh generation and

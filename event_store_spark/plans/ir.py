@@ -326,6 +326,8 @@ class PostingsIndex:
     # --------------------------------------------------------- maintenance
 
     def append(self, docs: DataFrame, batch_id: int) -> None:
+        from event_store_spark.plans.registry import forget_all_plans
+
         seg_dir = os.path.join(self.path, f"segment-b{batch_id}")
         seg_meta = os.path.join(self.path, f"segmeta-b{batch_id}.json")
         stats = _doc_stats(docs)
@@ -335,14 +337,17 @@ class PostingsIndex:
                 os.remove(seg_meta)
             except OSError:
                 pass
-            return
-        _postings_rows(docs).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(seg_dir)
-        tmp = seg_meta + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(stats, fh)
-        os.replace(tmp, seg_meta)  # marker LAST, atomically
+        else:
+            _postings_rows(docs).write.mode("overwrite").partitionBy(
+                "bucket"
+            ).parquet(seg_dir)
+            tmp = seg_meta + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump(stats, fh)
+            os.replace(tmp, seg_meta)  # marker LAST, atomically
+        # a memoized plan pinned the segment listing it first resolved;
+        # evict so the next query sees this one
+        forget_all_plans(self.spark)
 
     def compact(self) -> None:
         """Merge base + segments into a fresh generation and flip.

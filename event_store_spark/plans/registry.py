@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import inspect
 import os
+import warnings
 from collections.abc import Callable
 from weakref import WeakKeyDictionary
 
@@ -69,6 +70,9 @@ _EAGER_MARKERS = (
     r"\.persist\(",
     r"createDataFrame",
 )
+
+#: set once `_jobs_seen` has warned that its total-job probe fell back
+_PROBE_FALLBACK_WARNED = False
 
 #: per-session plan memo: {session: {(name, sf_dir): DataFrame}}
 _PLAN_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
@@ -101,7 +105,16 @@ def _jobs_seen(spark: SparkSession) -> tuple:
             .jobsList(None)
             .size()
         )
-    except Exception:  # pragma: no cover - internal API drift
+    except Exception as exc:  # internal API drift
+        global _PROBE_FALLBACK_WARNED
+        if not _PROBE_FALLBACK_WARNED:
+            _PROBE_FALLBACK_WARNED = True
+            warnings.warn(
+                "plan memo job probe cannot read the status store's total "
+                f"job count ({exc!r}); it now sees default-group jobs only",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         total = 0
     return (hi, total)
 

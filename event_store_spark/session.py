@@ -15,6 +15,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Local-mode heap: half of the machine's ``MemTotal``, between 1 and
+    16 GB. The heap holds the executors too, and the Python workers and
+    page cache need the other half; a fixed 16 GB heap on a 16 GB machine
+    gets the JVM OOM-killed. 16 GB where ``MemTotal`` is unreadable."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{min(16 * 1024, max(1024, kib // 2048))}m"
+
+
 def get_spark(
     app_name: str = "event-store-spark",
     cpus: int | None = None,
@@ -80,7 +93,8 @@ def get_spark(
     )
     if not SparkSession.getActiveSession():
         builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -198,8 +198,7 @@ class Replicator:
         # frozen at query start: an ADVANCING cursor filter can outrun a
         # file the listing missed; the frozen one cannot (module docstring)
         start_cursor = self.progress.last_cursor(topic) or Cursor.zero()
-        schema = spark.read.parquet(path).schema
-        reader = spark.readStream.schema(schema)
+        reader = spark.readStream.schema(self.store.event_schema(topic))
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         stream = reader.parquet(path)

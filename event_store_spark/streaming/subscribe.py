@@ -107,8 +107,7 @@ class Subscription:
                 **extra,
             )
         path = self.store.topic_path(topic)
-        schema = self._spark().read.parquet(path).schema
-        reader = self._spark().readStream.schema(schema)
+        reader = self._spark().readStream.schema(self.store.event_schema(topic))
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         return reader.parquet(path)

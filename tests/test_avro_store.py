@@ -192,3 +192,96 @@ def test_encrypted_and_plaintext_saves_share_topic_and_key_type(spark, tmp_path)
     typed = store.read_events("mix_events", typed_key=True)
     keys = {r.key_view for r in typed.collect()}
     assert keys == {"u1", "u2"}  # typed view intact for BOTH rows
+
+
+def _decrypt_stored(store, topic, enc):
+    """Each stored row's plaintext, opened with the bytes API and the
+    reference AAD layout: {typed key: Confluent frame}."""
+    from pyspark.sql import functions as F
+
+    from event_store_spark.crypto import build_aad
+
+    out = {}
+    rows = store.read_events(topic).select(
+        "key", "metadata", "data", F.unix_millis("timestamp").alias("ts_ms")
+    )
+    for r in rows.collect():
+        kid = bytes(r.metadata["kid"]).decode()
+        md = {k: bytes(v) for k, v in r.metadata.items()}
+        aad = build_aad(bytes(r.key), r.ts_ms, md)
+        out[bytes(r.key).decode()] = enc.decrypt(bytes(r.data), aad, kid)
+    return out
+
+
+def test_fused_encrypted_save_opens_with_build_aad_and_codec(spark, tmp_path):
+    """The encrypted save serializes and seals in ONE Python UDF; what it
+    stores opens with EventEncryptor.decrypt under build_aad and decodes
+    with RecordCodec — the same bytes as to_confluent_avro + encrypt_df."""
+    from pyspark.sql import functions as F
+
+    from event_store_spark.avro import RecordCodec, unframe
+
+    reg = LocalSchemaRegistry()
+    sid = reg.register(SCHEMA)
+    enc = EventEncryptor({"kms://k": EventEncryptor.generate_key()})
+    store = AvroEventStore(spark, str(tmp_path / "s"), reg, encryptor=enc)
+    df = spark.createDataFrame(
+        [
+            ("u1", "widget", 3, TS, {"zTest": bytearray(b"z"), "aTest": bytearray(b"a")}),
+            ("u2", "gadget", 1, TS, None),
+        ],
+        "key string, item string, qty long, timestamp timestamp, metadata map<string,binary>",
+    )
+    store.save("fused_events", df, "OrderPlaced", encryption_key="kms://k")
+    opened = _decrypt_stored(store, "fused_events", enc)
+    codec = RecordCodec(SCHEMA)
+    decoded = {}
+    for key, plain in opened.items():
+        frame_sid, body = unframe(plain)
+        assert frame_sid == sid
+        decoded[key] = codec.decode(body)
+        assert plain == reg.serialize("OrderPlaced", decoded[key])
+    assert decoded == {"u1": {"item": "widget", "qty": 3}, "u2": {"item": "gadget", "qty": 1}}
+
+    staged = df.select("key", "timestamp", "metadata", F.struct("item", "qty").alias("p"))
+    sealed = enc.encrypt_avro_df(staged, F.col("p"), SCHEMA, sid, "kms://k")
+    plan = sealed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+
+
+def test_fused_save_nulls_nan_like_to_confluent_avro(spark, tmp_path):
+    """Arrow hands null numeric cells to pandas as NaN; the fused save
+    restores them to Avro null for nullable fields exactly as
+    to_confluent_avro does (a literal NaN in a nullable double too)."""
+    from pyspark.sql import functions as F
+
+    from event_store_spark.avro.spark import to_confluent_avro
+
+    schema = {
+        "type": "record",
+        "name": "Reading",
+        "fields": [
+            {"name": "text", "type": "string"},
+            {"name": "n", "type": ["null", "long"], "default": None},
+            {"name": "x", "type": ["null", "double"], "default": None},
+        ],
+    }
+    reg = LocalSchemaRegistry()
+    sid = reg.register(schema)
+    enc = EventEncryptor({"kms://k": EventEncryptor.generate_key()})
+    store = AvroEventStore(spark, str(tmp_path / "s"), reg, encryptor=enc)
+    df = spark.createDataFrame(
+        [("a", "a", 7, 1.5, TS), ("b", "b", None, float("nan"), TS), ("c", "c", None, None, TS)],
+        "key string, text string, n bigint, x double, timestamp timestamp",
+    )
+    want = {
+        r.key: bytes(r.data)
+        for r in df.select(
+            "key", to_confluent_avro(F.struct("text", "n", "x"), schema, sid).alias("data")
+        ).collect()
+    }
+    store.save("nan_events", df, "Reading", encryption_key="kms://k")
+    assert _decrypt_stored(store, "nan_events", enc) == want
+    loaded = store.load("nan_events", "Reading").collect()
+    decoded = {bytes(r.key).decode(): r.payload for r in loaded}
+    assert decoded["b"].n is None and decoded["b"].x is None

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from event_store_spark.core import Cursor, EventStore
+from event_store_spark.core import store as store_module
 from event_store_spark.core.cursor import keyset_after
 from event_store_spark.core.envelope import (
     canonical_metadata_entries,
@@ -571,7 +572,7 @@ def _published_ranges(files):
     return out
 
 
-def test_publication_order_matches_commit_order(store, spark):
+def test_publication_order_matches_commit_order(store, spark, monkeypatch):
     """Interleaved multi-file appends must become visible in (lsn, id)
     order: stream sources pick files up by (modTime, path), and the
     Replicator/Subscription keyset cursor silently DROPS rows that arrive
@@ -579,7 +580,10 @@ def test_publication_order_matches_commit_order(store, spark):
     interleaved alphabetically (part-00000-<uuidA> < part-00000-<uuidB> <
     part-00001-<uuidA>) and lost half the events. Pins both orderings the
     ordered publication provides — mtime sequence and sortable file names —
-    with disjoint, ascending per-file (lsn, id) ranges."""
+    with disjoint, ascending per-file (lsn, id) ranges. A batch under the
+    file-size target is one file, so the target is lowered to keep these
+    appends multi-file."""
+    monkeypatch.setattr(store_module, "TARGET_FILE_BYTES", 1)
     for b in range(3):  # appends land within the same millisecond
         rows = [(f"k{b}-{i}", f"p{b}-{i}", TS) for i in range(4)]
         store.append("ord_events", _payload_df(spark, rows).repartition(4))
@@ -878,3 +882,84 @@ def test_zorder_key_negative_and_fractional_dims(store, spark):
     z = store._zorder_key(nulls, ("a", "b"))
     got = nulls.withColumn("_z", z).select("_z").collect()
     assert all(r["_z"] is not None for r in got)
+
+
+def _parquet_in(path):
+    return [
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
+    ]
+
+
+def _jobs(spark):
+    """The registry memo's job probe, after the listener bus has caught up
+    with every job already started."""
+    from event_store_spark.plans.registry import _jobs_seen
+
+    for query in spark.streams.active:  # a stray query's triggers are jobs too
+        query.stop()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return _jobs_seen(spark)
+
+
+def test_small_flat_append_writes_one_file(store, spark, monkeypatch):
+    """A flat batch under the file-size target lands as ONE file, however
+    many partitions it arrives in; above the target it keeps one file per
+    partition, published in (lsn, id) order."""
+    rows = [(f"k{i}", f"p{i}", TS) for i in range(8)]
+    store.append("one_events", _payload_df(spark, rows).repartition(4))
+    assert len(_parquet_in(store.topic_path("one_events"))) == 1
+
+    monkeypatch.setattr(store_module, "TARGET_FILE_BYTES", 1)
+    store.append("one_events", _payload_df(spark, rows).repartition(4))
+    files = _parquet_in(store.topic_path("one_events"))
+    assert len(files) == 5
+    ranges = _published_ranges(files)
+    for (_, prev_hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert prev_hi < lo
+    got = store.replay("one_events").select("lsn", "payload").collect()
+    assert [r.lsn for r in got] == [1] * 8 + [2] * 8
+    for lsn in (1, 2):
+        assert sorted(r.payload for r in got if r.lsn == lsn) == [f"p{i}" for i in range(8)]
+
+
+def test_ticketed_reads_start_no_job(store, spark):
+    """The append records the row schema in the ticket, so reading a
+    ticketed topic plans without a footer-inference (or key-type) job."""
+    store.append("nojob_events", _payload_df(spark, [("a", "1", TS), ("b", "2", TS)]))
+    before = _jobs(spark)
+    plain = store.read_events("nojob_events")
+    typed = store.read_events("nojob_events", typed_key=True)
+    ordered = store.replay("nojob_events", after=Cursor(1, -1))
+    assert _jobs(spark) == before
+    assert plain.count() == 2 and ordered.count() == 2
+    assert sorted(r.key_view for r in typed.collect()) == ["a", "b"]
+    assert plain.schema == store.event_schema("nojob_events")
+
+
+def test_append_with_different_schema_refused(store, spark):
+    """One row schema per topic, as one key type: readers trust the
+    ticket's schema, so an append that would change it is refused and
+    nothing is written."""
+    store.append("schema_events", _payload_df(spark, [("a", "1", TS)]))
+    other = spark.createDataFrame([("b", 2, TS)], "key string, payload int, timestamp timestamp")
+    with pytest.raises(ValueError, match="stores rows of"):
+        store.append("schema_events", other)
+    assert store.high_water("schema_events")["lsn"] == 1
+    assert [r.payload for r in store.read_events("schema_events").collect()] == ["1"]
+
+
+def test_pre_schema_ticket_infers_schema_once(store, spark):
+    """A ticket saved without a row schema (written before schemas were
+    recorded) keeps its counters and gains the schema from one footer
+    read; later reads run no job."""
+    store.append("legacy_events", _payload_df(spark, [("a", "1", TS)]))
+    ticket = store.high_water("legacy_events")
+    store._tickets.save(
+        "legacy_events", **{k: v for k, v in ticket.items() if k != "schema"}
+    )
+    assert store._tickets.get("legacy_events")["schema"] is None
+    assert store.event_schema("legacy_events") == store.read_events("legacy_events").schema
+    assert store.high_water("legacy_events") == ticket
+    before = _jobs(spark)
+    store.read_events("legacy_events")
+    assert _jobs(spark) == before

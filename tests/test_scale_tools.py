@@ -276,3 +276,20 @@ def test_runtime_bloom_filter_semi_pushdown(spark, sf_correct):
         .head()["s"]
     )
     assert filtered == plain
+
+
+def test_default_driver_memory_follows_memtotal(tmp_path):
+    """Without SPARK_DRIVER_MEMORY the local heap is half of MemTotal,
+    clamped to [1 GB, 16 GB]: a fixed 16 GB heap on a 16 GB machine got
+    the suite's JVM OOM-killed."""
+    from event_store_spark.session import default_driver_memory
+
+    def on(kib):
+        f = tmp_path / f"meminfo-{kib}"
+        f.write_text(f"MemTotal:       {kib} kB\nMemFree:        1024 kB\n")
+        return default_driver_memory(str(f))
+
+    assert on(16_000_000) == "7812m"
+    assert on(1_000_000) == "1024m"
+    assert on(128 * 1024 * 1024) == "16384m"
+    assert default_driver_memory(str(tmp_path / "absent")) == "16g"

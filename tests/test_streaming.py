@@ -438,14 +438,19 @@ def test_streaming_hopping_window_matches_batch(spark, tmp_path, sf_smoke):
     assert got == expected
 
 
-def test_live_replication_races_concurrent_appends(spark, tmp_path, store):
+def test_live_replication_races_concurrent_appends(spark, tmp_path, store, monkeypatch):
     """Appends racing a RUNNING replication stream lose nothing: ordered
     publication lands each append's files one rename at a time, oldest
     (lsn, id) range first, so any trigger's directory listing catches a
     commit-order PREFIX — the keyset cursor can never advance past a row
-    that hasn't become visible yet. Multi-file appends (repartition(4))
+    that hasn't become visible yet. Multi-file appends (repartition(4),
+    with the file-size target lowered so a small batch still splits)
     against a free-running micro-batch trigger; exactly-once at the end."""
     import time as _time
+
+    from event_store_spark.core import store as store_module
+
+    monkeypatch.setattr(store_module, "TARGET_FILE_BYTES", 1)
 
     topic = "live_events"
     store.append(
@@ -554,3 +559,36 @@ def test_run_records_resumes_mid_batch_after_handler_crash(spark, tmp_path, stor
     sub2 = Subscription(store, offsets, str(tmp_path / "ck_retry"))
     sub2.run_records(topic, lambda r: handled.append(r["payload"])).awaitTermination(120)
     assert handled == ["0", "1", "2", "3", "4"]  # exactly once each, in order
+
+
+def test_ticketed_stream_readers_start_no_job(spark, tmp_path, store, monkeypatch):
+    """Replicator.replicate and Subscription.stream take the row schema
+    from the topic's ticket: neither starts a Spark job before its query
+    runs (a footer-inference read used to, on every call)."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from event_store_spark.plans.registry import _jobs_seen
+
+    def jobs():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return _jobs_seen(spark)
+
+    for query in spark.streams.active:  # a stray query's triggers are jobs too
+        query.stop()
+
+    topic = _seed(spark, store)
+    started = []
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **k: started.append(jobs()))
+    rep = Replicator(
+        store,
+        str(tmp_path / "target"),
+        ProgressStore(str(tmp_path / "progress.json")),
+        str(tmp_path / "rckpt"),
+    )
+    sub = Subscription(store, OffsetsTable(str(tmp_path / "offsets.json")), str(tmp_path / "sckpt"))
+    before = jobs()
+    rep.replicate(topic)
+    stream = sub.stream(topic)
+    assert started == [before]
+    assert jobs() == before
+    assert stream.isStreaming and stream.schema == store.event_schema(topic)
