@@ -28,6 +28,21 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{min(16 * 1024, max(1024, kib // 2048))}m"
 
 
+def python_worker_conf() -> dict[str, str]:
+    """Run Python workers through the package's daemon,
+    :mod:`event_store_spark._pyworker`, which stops every task re-reading
+    the unchanged ``pyspark.zip``. The daemon starts before any shipped
+    zip arrives, so the executor's ``PYTHONPATH`` starts with the
+    package's parent directory (the caller's ``PYTHONPATH`` follows);
+    workers then import the package from the tree the driver runs."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.pathsep.join(p for p in (parent, os.environ.get("PYTHONPATH")) if p)
+    return {
+        "spark.python.daemon.module": "event_store_spark._pyworker",
+        "spark.executorEnv.PYTHONPATH": path,
+    }
+
+
 def get_spark(
     app_name: str = "event-store-spark",
     cpus: int | None = None,
@@ -37,7 +52,9 @@ def get_spark(
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or all
     local cores. On a real cluster the master/conf come from spark-submit;
-    everything set here is safe to carry over.
+    everything set here is safe to carry over. A new local-master
+    context also gets :func:`python_worker_conf`; ``extra_conf`` overrides
+    any of it, and a reused active session is left as it is.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -96,6 +113,8 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
         )
+        for k, v in python_worker_conf().items():
+            builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
