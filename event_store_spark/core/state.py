@@ -35,6 +35,38 @@ from event_store_spark.core.cursor import Cursor
 NOOP_KEY = "noop"  # progress-topic priming record parity (EventReplicator.java:85)
 
 
+def atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` atomically and durably: a temp file in
+    the same directory, fsync'd, then ``os.replace``d over the name, then a
+    best-effort directory fsync. Readers see the old bytes or the new,
+    never a torn file; a failure removes the temp file."""
+    d = os.path.dirname(path) or "."
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=f".{os.path.basename(path)}.")
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+            # flush file DATA before the rename commits the name: on
+            # journaled filesystems the rename metadata can land before
+            # unsynced data, and a power loss then leaves a truncated
+            # file that poisons every later read
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+        # best-effort directory fsync so the rename itself is durable
+        try:
+            dfd = os.open(d, os.O_RDONLY)
+            try:
+                os.fsync(dfd)
+            finally:
+                os.close(dfd)
+        except OSError:
+            pass
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
 class TopicMutex:
     """O_EXCL-based per-topic append mutex.
 
@@ -258,30 +290,7 @@ class _AtomicJsonState:
             return json.load(f)
 
     def _write(self, data: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(data, f)
-                # flush file DATA before the rename commits the name: on
-                # journaled filesystems the rename metadata can land before
-                # unsynced data, and a power loss then leaves a truncated
-                # state file that poisons every later _read
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self.path)
-            # best-effort directory fsync so the rename itself is durable
-            try:
-                dfd = os.open(os.path.dirname(self.path) or ".", os.O_RDONLY)
-                try:
-                    os.fsync(dfd)
-                finally:
-                    os.close(dfd)
-            except OSError:
-                pass
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
+        atomic_write(self.path, json.dumps(data))
 
 
 class OffsetsTable(_AtomicJsonState):

@@ -211,27 +211,14 @@ class DedupIndex:
         if kind not in KINDS:
             raise ValueError(f"kind must be one of {KINDS}, got {kind!r}")
         idx = cls(spark, path, kind)
-        os.makedirs(path, exist_ok=True)
-        target_dir, target_meta = idx._gen.next_names()
         sig = _enforce_stoplist(_signatures(docs, kind), kind)
-        sig.write.mode("overwrite").partitionBy(_PART_COL[kind]).parquet(
-            os.path.join(path, target_dir)
+        idx._gen.publish(
+            spark,
+            lambda out: sig.write.mode("overwrite")
+            .partitionBy(_PART_COL[kind])
+            .parquet(out),
+            meta=json.dumps({"kind": kind, "format": 1}),
         )
-        meta = {"kind": kind, "format": 1}
-        if target_meta != "meta.json":
-            with open(os.path.join(path, target_meta), "w") as fh:
-                json.dump(meta, fh)
-            idx._gen.flip(target_dir, target_meta)
-            # refresh the convenience marker copy (loaders resolve through
-            # the pointer; a crash here leaves a stale marker, never a
-            # stale serving path)
-        with open(os.path.join(path, "meta.json"), "w") as fh:
-            json.dump(meta, fh)
-        # a rebuilt generation retires memoized plans that pinned the old
-        # file listing
-        from event_store_spark.plans.registry import forget_all_plans
-
-        forget_all_plans(spark)
         return idx
 
     @classmethod
@@ -469,17 +456,12 @@ class DedupIndex:
             base.join(seg_ids, "doc_id", "left_anti").unionByName(seg),
             self.kind,
         )
-        target_dir, target_meta = self._gen.next_names()
-        merged.write.mode("overwrite").partitionBy(
-            _PART_COL[self.kind]
-        ).parquet(os.path.join(self.path, target_dir))
-        with open(os.path.join(self.path, target_meta), "w") as fh:
-            json.dump({"kind": self.kind, "format": 1}, fh)
-        self._gen.flip(target_dir, target_meta)
+        self._gen.publish(
+            self.spark,
+            lambda out: merged.write.mode("overwrite")
+            .partitionBy(_PART_COL[self.kind])
+            .parquet(out),
+            meta=json.dumps({"kind": self.kind, "format": 1}),
+        )
         for seg_path in seg_dirs:
             shutil.rmtree(seg_path, ignore_errors=True)
-        # a new artifact generation retires memoized plans that pinned
-        # the old file listing (VERDICT r12 staleness hazard)
-        from event_store_spark.plans.registry import forget_all_plans
-
-        forget_all_plans(self.spark)

@@ -39,6 +39,7 @@ from weakref import WeakKeyDictionary
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from event_store_spark.plans.generations import GenerationPair
 from event_store_spark.plans.ivf import _ivf_index
 from event_store_spark.plans.registry import ORACLE, register
 
@@ -476,43 +477,26 @@ def save_hnsw_index(
     repo-wide `GenerationPair` pointer flip — readers never observe a
     graph under foreign centroids."""
     import json as _json
-    import os as _os
-
-    from event_store_spark.plans.generations import GenerationPair
 
     centroids, _ = _ivf_index(spark, sf_dir, "full")
     graph = _hnsw_graph(spark, sf_dir, spill)
-    gp = GenerationPair(path, "graph", "hnsw.json")
-    _os.makedirs(path, exist_ok=True)
-    new_dir, new_meta = gp.next_names()
-    graph.write.mode("overwrite").partitionBy("cell").parquet(
-        _os.path.join(path, new_dir)
-    )
     meta = {
         "centroids": [[cell, list(c)] for cell, c in centroids],
         "m": HNSW_M,
         "ef": HNSW_EF,
         "spill": spill,
     }
-    # meta written AFTER the bulk dir: on a fresh build its presence marks
-    # the index complete; on a retrain the pointer flip publishes the pair
-    with open(_os.path.join(path, new_meta), "w") as fh:
-        _json.dump(meta, fh)
-    if (new_dir, new_meta) != ("graph", "hnsw.json"):
-        gp.flip(new_dir, new_meta)
-    # a new artifact generation retires memoized plans that pinned the
-    # old file listing (VERDICT r12 staleness hazard)
-    from event_store_spark.plans.registry import forget_all_plans
-
-    forget_all_plans(spark)
+    GenerationPair(path, "graph", "hnsw.json").publish(
+        spark,
+        lambda out: graph.write.mode("overwrite").partitionBy("cell").parquet(out),
+        meta=_json.dumps(meta),
+    )
 
 
 def load_hnsw_index(spark: SparkSession, path: str):
     """(centroids, graph DataFrame) — lazy, cell-pruned reads."""
     import json as _json
     import os as _os
-
-    from event_store_spark.plans.generations import GenerationPair
 
     gp = GenerationPair(path, "graph", "hnsw.json")
     d, m = gp.live()
@@ -598,10 +582,7 @@ def compact_hnsw_index(
     over unchanged. Published behind the same GenerationPair flip as
     `save_hnsw_index` — a reader mid-scan on the previous generation
     finishes (deferred GC)."""
-    import json as _json
     import os as _os
-
-    from event_store_spark.plans.generations import GenerationPair
 
     gp = GenerationPair(path, "graph", "hnsw.json")
     d, m = gp.live()
@@ -628,20 +609,16 @@ def compact_hnsw_index(
     relinked = relink_src.join(relinked, ["cell", "vec_id"]).select(
         *untouched.columns
     )
-    new_dir, new_meta = gp.next_names()
-    untouched.unionByName(relinked).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(_os.path.join(path, new_dir))
     with open(_os.path.join(path, m)) as fh:
         meta_body = fh.read()
-    with open(_os.path.join(path, new_meta), "w") as fh:
-        fh.write(meta_body)
-    gp.flip(new_dir, new_meta)
-    # a new artifact generation retires memoized plans that pinned the
-    # old file listing (VERDICT r12 staleness hazard)
-    from event_store_spark.plans.registry import forget_all_plans
-
-    forget_all_plans(spark)
+    gp.publish(
+        spark,
+        lambda out: untouched.unionByName(relinked)
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(out),
+        meta=meta_body,
+    )
 
 
 @register("ann_hnsw_topk", oracle=ORACLE["ann_ivf_topk"])

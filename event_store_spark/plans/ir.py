@@ -45,6 +45,7 @@ from weakref import WeakKeyDictionary
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from event_store_spark.core.state import atomic_write
 from event_store_spark.plans.generations import GenerationPair
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table, table_path
@@ -341,10 +342,7 @@ class PostingsIndex:
             _postings_rows(docs).write.mode("overwrite").partitionBy(
                 "bucket"
             ).parquet(seg_dir)
-            tmp = seg_meta + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(stats, fh)
-            os.replace(tmp, seg_meta)  # marker LAST, atomically
+            atomic_write(seg_meta, json.dumps(stats))  # marker LAST
         # a memoized plan pinned the segment listing it first resolved;
         # evict so the next query sees this one
         forget_all_plans(self.spark)
@@ -377,24 +375,27 @@ class PostingsIndex:
         seg = seg.join(latest, ["doc_id", "_b"]).drop("_b")
         seg_ids = seg.select("doc_id").distinct()
         merged = base.join(seg_ids, "doc_id", "left_anti").unionByName(seg)
-        target_dir, target_meta = self._gen.next_names()
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(self.path, target_dir)
-        )
-        # stats recomputed from the merged rows (exact: one first(dl) per
-        # doc) — segment-wins collisions and any drift self-heal here
-        written = self.spark.read.parquet(os.path.join(self.path, target_dir))
-        per_doc = written.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-        n_docs, sum_dl = per_doc.agg(
-            F.count(F.lit(1)), F.sum("dl")
-        ).first()
-        with open(os.path.join(self.path, target_meta), "w") as fh:
-            json.dump(
-                {"n_docs": int(n_docs), "sum_dl": int(sum_dl or 0),
-                 "format": 1},
-                fh,
+
+        def stats(out: str) -> str:
+            # recomputed from the written rows (exact: one first(dl) per
+            # doc) — segment-wins collisions and any drift self-heal here
+            per_doc = (
+                self.spark.read.parquet(out)
+                .groupBy("doc_id")
+                .agg(F.first("dl").alias("dl"))
             )
-        self._gen.flip(target_dir, target_meta)
+            n_docs, sum_dl = per_doc.agg(F.count(F.lit(1)), F.sum("dl")).first()
+            return json.dumps(
+                {"n_docs": int(n_docs), "sum_dl": int(sum_dl or 0), "format": 1}
+            )
+
+        self._gen.publish(
+            self.spark,
+            lambda out: merged.write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(out),
+            meta=stats,
+        )
         for s in segs:
             try:
                 os.remove(os.path.join(self.path, f"segmeta-b{s}.json"))
@@ -403,11 +404,6 @@ class PostingsIndex:
             shutil.rmtree(
                 os.path.join(self.path, f"segment-b{s}"), ignore_errors=True
             )
-        # a new artifact generation retires memoized plans that pinned
-        # the old file listing (VERDICT r12 staleness hazard)
-        from event_store_spark.plans.registry import forget_all_plans
-
-        forget_all_plans(self.spark)
 
 
 def bm25_index(spark: SparkSession, sf_dir: str) -> PostingsIndex:

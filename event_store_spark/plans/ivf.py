@@ -25,10 +25,11 @@ cells, exactly like `ann_multiprobe_topk`'s probe union."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.vectors import as_double, cosine
+from event_store_spark.plans.generations import GenerationPair, segment_wins
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table
 
@@ -596,45 +597,19 @@ def save_ivf_index(
     serving; this function is the periodic retrain checkpoint that
     folds the segment back in."""
     import json
-    import os
 
     centroids, assigned = _ivf_index(spark, sf_dir, variant)
-    os.makedirs(path, exist_ok=True)
-    # A retrain over an existing index must stay atomic for readers: both
-    # halves (assignments AND the centroids they were trained by) are
-    # written fully as a fresh generation, then ONE pointer flip names the
-    # pair — the naive in-place overwrite raced readers, could be shadowed
-    # by a post-compaction pointer, and had a crash window serving new
-    # assignments under old centroids.
-    cur, prev_cfile = _live_names(path)
-    if os.path.isdir(os.path.join(path, cur)):
-        gen = int(cur.rsplit("-", 1)[1]) + 1 if "-" in cur else 1
-        target, cfile = f"cells-{gen}", f"centroids-{gen}.json"
-    else:
-        target, cfile = "cells", "centroids.json"  # fresh: original layout
-    if target != "cells":
-        with open(os.path.join(path, cfile), "w") as fh:
-            json.dump([[cell, c] for cell, c in centroids], fh)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(path, target)
+    # A retrain over an existing index publishes both halves (assignments
+    # AND the centroids they were trained by) as one generation behind one
+    # pointer flip: an in-place overwrite would race readers and leave a
+    # crash window serving new assignments under old centroids.
+    _generations(path).publish(
+        spark,
+        lambda out: assigned.write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(out),
+        meta=json.dumps([[cell, c] for cell, c in centroids]),
     )
-    if target != "cells":
-        _flip_pointer(path, target, cfile, keep={cur, prev_cfile})
-        # refresh the convenience marker copy (loaders resolve through the
-        # pointer; a crash here leaves only a stale marker, never a stale
-        # serving path)
-        with open(os.path.join(path, "centroids.json"), "w") as fh:
-            json.dump([[cell, c] for cell, c in centroids], fh)
-    else:
-        # write centroids LAST: their presence marks the index complete
-        # (readers of a half-written cells/ dir fail loudly on load)
-        with open(os.path.join(path, cfile), "w") as fh:
-            json.dump([[cell, c] for cell, c in centroids], fh)
-    # a new artifact generation retires memoized plans that pinned the
-    # old file listing (VERDICT r12 staleness hazard)
-    from event_store_spark.plans.registry import forget_all_plans
-
-    forget_all_plans(spark)
 
 
 def load_ivf_index(
@@ -708,74 +683,20 @@ def ivf_search(
     )
 
 
-def _live_names(path: str) -> tuple[str, str]:
-    """Resolve the LIVE (cells dir, centroids file) pair: the `CELLS`
-    pointer names both (post-retrain/compaction generations `cells-<n>
-    centroids-<n>.json`), so the pair always flips ATOMICALLY — a
-    pointerless layout is `save_ivf_index`'s original (cells,
-    centroids.json). Naming both in one pointer closes the retrain crash
-    window where new assignments could be served under old centroids
-    (two separate artifact writes can never be individually atomic)."""
-    import os
+def _generations(path: str) -> GenerationPair:
+    return GenerationPair(path, "cells", "centroids.json", pointer="CELLS")
 
-    try:
-        with open(os.path.join(path, "CELLS")) as fh:
-            parts = fh.read().split()
-    except OSError:
-        return "cells", "centroids.json"
-    if len(parts) == 1:  # pre-round-7 pointer: cells only
-        return parts[0], "centroids.json"
-    return parts[0], parts[1]
+
+def _live_names(path: str) -> tuple[str, str]:
+    """The LIVE (cells dir, centroids file) pair. The `CELLS` pointer names
+    both (`cells-<n> centroids-<n>.json` after a retrain), so the pair
+    always flips atomically; a pointerless layout is the first build's
+    (cells, centroids.json)."""
+    return _generations(path).live()
 
 
 def _cells_dirname(path: str) -> str:
     return _live_names(path)[0]
-
-
-def _flip_pointer(
-    path: str,
-    cells_dir: str,
-    centroids_file: str,
-    keep: frozenset[str] | set[str] = frozenset(),
-) -> None:
-    """Atomically publish the (cells, centroids) pair, then GC superseded
-    generation artifacts — EXCEPT the ``keep`` set: callers pass the
-    generation that was live just before this flip, so a reader that
-    resolved `_live_names` immediately pre-flip (or holds a lazily-listed
-    DataFrame over the old dir) can finish its scan instead of failing on
-    a mid-read rmtree (ADVICE r7 — "atomic for readers" requires the N-1
-    generation to outlive in-flight reads; it is GC'd by the NEXT flip).
-    Orphans from a crash-before-flip and generations ≤ N-2 are swept.
-    centroids.json survives as the index-exists marker (it may be stale;
-    loaders resolve through the pointer, never the marker)."""
-    import os
-    import shutil
-
-    tmp, ptr = os.path.join(path, "CELLS.tmp"), os.path.join(path, "CELLS")
-    with open(tmp, "w") as fh:
-        fh.write(f"{cells_dir} {centroids_file}")
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, ptr)  # atomic publish
-
-    for entry in os.listdir(path):
-        if entry in keep:
-            continue
-        if (
-            (entry == "cells" or entry.startswith("cells-"))
-            and entry != cells_dir
-            and not entry.endswith(".tmp")
-        ):
-            shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-        if (
-            entry.startswith("centroids-")
-            and entry.endswith(".json")
-            and entry != centroids_file
-        ):
-            try:
-                os.remove(os.path.join(path, entry))
-            except OSError:
-                pass
 
 
 def compact_ivf_index(
@@ -787,52 +708,22 @@ def compact_ivf_index(
     centroids are untouched, so every existing cell assignment stays
     valid; the merge is one union + cell-partitioned rewrite.
 
-    Publication is a POINTER FLIP (ADVICE r6): the merged generation is
-    written fully to a fresh `cells-<n>` dir, then the `CELLS` pointer
-    file is os.replace()d to name it — one atomic step, so a crash at
-    any point leaves either the old or the new generation fully live
-    (the prior rename-rename scheme had a window with NO cells dir at
-    all, and concurrent loads during the swap errored). Matches the
-    repo's commit-marker discipline (CdcMaterializer, ivm._SNAP). The
-    N-1 generation survives this flip for in-flight readers and is GC'd
-    by the NEXT one (ADVICE r7); older generations and crash orphans are
-    swept now. The additions segment is left in place — its stream owns
-    its directory and checkpoint, and re-folding the same rows on the
-    next compaction is idempotent. When a vec_id exists in BOTH base and
-    segment (a re-assigned/updated vector), the SEGMENT row wins
-    explicitly — dropDuplicates kept an arbitrary one, which could
-    nondeterministically resurrect the stale base assignment (ADVICE
-    r7)."""
+    Publication is a generation flip (`GenerationPair.publish`): a crash
+    at any point leaves either the old or the new generation fully live,
+    and the N-1 generation survives for in-flight readers. The additions
+    segment is left in place — its stream owns its directory and
+    checkpoint, and re-folding the same rows on the next compaction is
+    idempotent. When a vec_id exists in BOTH base and segment (a
+    re-assigned/updated vector), the SEGMENT row wins explicitly, so the
+    stale base assignment can never be resurrected."""
     import os
 
-    from pyspark.sql import Window
-
-    cur, cfile = _live_names(path)
-    base = spark.read.parquet(os.path.join(path, cur))
-    seg = spark.read.parquet(additions_path).select(*base.columns)
-    merged = (
-        base.withColumn("_pri", F.lit(0))
-        .unionByName(seg.withColumn("_pri", F.lit(1)))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("_pri").desc())
-            ),
-        )
-        .where(F.col("_rn") == 1)
-        .drop("_pri", "_rn")
-    )
-    gen = int(cur.rsplit("-", 1)[1]) + 1 if "-" in cur else 1
-    nxt = f"cells-{gen}"
-    merged.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(path, nxt)
-    )
+    base = spark.read.parquet(os.path.join(path, _cells_dirname(path)))
+    merged = segment_wins(base, spark.read.parquet(additions_path), "vec_id")
     # compaction never retrains: the pointer keeps naming the SAME
     # centroids file, only the cells generation advances
-    _flip_pointer(path, nxt, cfile, keep={cur, cfile})
-    spark.catalog.refreshByPath(os.path.join(path, nxt))
-    # a new artifact generation retires memoized plans that pinned the
-    # old file listing (VERDICT r12 staleness hazard)
-    from event_store_spark.plans.registry import forget_all_plans
-
-    forget_all_plans(spark)
+    _generations(path).publish(
+        spark,
+        lambda out: merged.write.mode("overwrite").partitionBy("cell").parquet(out),
+        meta=None,
+    )

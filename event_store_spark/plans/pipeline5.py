@@ -22,11 +22,12 @@ DuckDB-oracle-checked, no corpus-global single-partition stage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.text import whitespace_tokens, word_ngram_hashes
 from event_store_spark.functions.vectors import as_double, cosine
+from event_store_spark.plans.generations import GenerationPair, segment_wins
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table
 
@@ -372,7 +373,6 @@ def save_sq8_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     `pq.save_pq_index` (scoring is a scan, not a probe); limits written
     last as the completeness marker."""
     import json
-    import os
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
@@ -387,133 +387,45 @@ def save_sq8_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     mns = [float(mn) for _, mn, _ in rows]
     mxs = [float(mx) for _, _, mx in rows]
     quant = sq8_quantize(emb, mns, mxs)
-    os.makedirs(path, exist_ok=True)
     # retrain over an existing index: both halves (codes AND the limits
-    # they were quantized by) publish as one fresh generation behind one
-    # atomic pointer flip — int8 codes reconstructed under the wrong
-    # limits are wrong values (the PQ/IVF pair discipline; additions can
-    # move per-dimension limits, which is also why SQ8 has no compaction)
-    cur, prev_lfile = _sq8_live_names(path)
-    if os.path.isdir(os.path.join(path, cur)):
-        gen = int(cur.rsplit("-", 1)[1]) + 1 if "-" in cur else 1
-        target, lfile = f"codes-{gen}", f"limits-{gen}.json"
-    else:
-        target, lfile = "codes", "limits.json"  # fresh: original layout
-    if target != "codes":
-        with open(os.path.join(path, lfile), "w") as fh:
-            json.dump({"mns": mns, "mxs": mxs}, fh)
-    quant.write.mode("overwrite").parquet(os.path.join(path, target))
-    if target != "codes":
-        _sq8_flip_pointer(path, target, lfile, keep={cur, prev_lfile})
-        with open(os.path.join(path, "limits.json"), "w") as fh:
-            json.dump({"mns": mns, "mxs": mxs}, fh)  # marker copy
-    else:
-        # limits written LAST: their presence marks the index complete
-        with open(os.path.join(path, lfile), "w") as fh:
-            json.dump({"mns": mns, "mxs": mxs}, fh)
-    # a new artifact generation retires memoized plans that pinned the
-    # old file listing (VERDICT r12 staleness hazard)
-    from event_store_spark.plans.registry import forget_all_plans
-
-    forget_all_plans(spark)
-
-
-def _sq8_flip_pointer(
-    path: str,
-    codes_dir: str,
-    limits_file: str,
-    keep: frozenset[str] | set[str] = frozenset(),
-) -> None:
-    """Atomically publish the (codes, limits) pair, then GC superseded
-    generations EXCEPT the ``keep`` set (the just-superseded generation
-    survives for in-flight readers and is swept by the NEXT flip —
-    ADVICE r7, matching ivf/pq._flip_pointer). The root limits.json
-    survives as the index-exists marker."""
-    import os
-    import shutil
-
-    tmp, ptr = os.path.join(path, "CODES.tmp"), os.path.join(path, "CODES")
-    with open(tmp, "w") as fh:
-        fh.write(f"{codes_dir} {limits_file}")
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, ptr)  # atomic publish
-    for entry in os.listdir(path):
-        if entry in keep:
-            continue
-        if (
-            (entry == "codes" or entry.startswith("codes-"))
-            and entry != codes_dir
-            and not entry.endswith(".tmp")
-        ):
-            shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-        if (
-            entry.startswith("limits-")
-            and entry.endswith(".json")
-            and entry != limits_file
-        ):
-            try:
-                os.remove(os.path.join(path, entry))
-            except OSError:
-                pass
+    # they were quantized by) publish as one generation behind one pointer
+    # flip — int8 codes reconstructed under the wrong limits are wrong
+    # values (the PQ/IVF pair discipline)
+    _sq8_generations(path).publish(
+        spark,
+        lambda out: quant.write.mode("overwrite").parquet(out),
+        meta=json.dumps({"mns": mns, "mxs": mxs}),
+    )
 
 
 def compact_sq8_index(spark: SparkSession, path: str, additions_path: str) -> None:
     """Fold a `sq8_encode_stream` additions segment into the base codes
-    table. Round 7 refused this on "additions can move the limits" —
-    which conflated compaction with RETRAIN: the streaming encoder
-    quantizes under the FROZEN published limits (saturating at the code
-    ends), so segment codes are exactly as valid under those limits as
-    the base's, and folding is the same flat union + pointer-flip as
+    table. Compaction is not RETRAIN: the streaming encoder quantizes
+    under the FROZEN published limits (saturating at the code ends), so
+    segment codes are exactly as valid under those limits as the base's,
+    and folding is the same flat union + generation flip as
     `pq.compact_pq_index` (segment wins on vec_id collisions; N-1
     generation kept for in-flight readers). Moving the limits themselves
     remains `save_sq8_index`'s retrain, which re-encodes everything."""
     import os
 
-    from pyspark.sql import Window
-
-    cur, lfile = _sq8_live_names(path)
-    base = spark.read.parquet(os.path.join(path, cur))
-    seg = spark.read.parquet(additions_path).select(*base.columns)
-    merged = (
-        base.withColumn("_pri", F.lit(0))
-        .unionByName(seg.withColumn("_pri", F.lit(1)))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("_pri").desc())
-            ),
-        )
-        .where(F.col("_rn") == 1)
-        .drop("_pri", "_rn")
-    )
-    gen = int(cur.rsplit("-", 1)[1]) + 1 if "-" in cur else 1
-    nxt = f"codes-{gen}"
-    merged.write.mode("overwrite").parquet(os.path.join(path, nxt))
+    base = spark.read.parquet(os.path.join(path, _sq8_live_names(path)[0]))
+    merged = segment_wins(base, spark.read.parquet(additions_path), "vec_id")
     # compaction never retrains: the pointer keeps naming the SAME
     # limits file, only the codes generation advances
-    _sq8_flip_pointer(path, nxt, lfile, keep={cur, lfile})
-    spark.catalog.refreshByPath(os.path.join(path, nxt))
-    # a new artifact generation retires memoized plans that pinned the
-    # old file listing (VERDICT r12 staleness hazard)
-    from event_store_spark.plans.registry import forget_all_plans
+    _sq8_generations(path).publish(
+        spark, lambda out: merged.write.mode("overwrite").parquet(out), meta=None
+    )
 
-    forget_all_plans(spark)
+
+def _sq8_generations(path: str) -> GenerationPair:
+    return GenerationPair(path, "codes", "limits.json", pointer="CODES")
 
 
 def _sq8_live_names(path: str) -> tuple[str, str]:
     """Resolve the LIVE (codes dir, limits file) pair via the `CODES`
     pointer; pointerless = the original (codes, limits.json) layout."""
-    import os
-
-    try:
-        with open(os.path.join(path, "CODES")) as fh:
-            parts = fh.read().split()
-    except OSError:
-        return "codes", "limits.json"
-    if len(parts) == 1:
-        return parts[0], "limits.json"
-    return parts[0], parts[1]
+    return _sq8_generations(path).live()
 
 
 def load_sq8_index(spark: SparkSession, path: str):

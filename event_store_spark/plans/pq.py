@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.vectors import as_double
+from event_store_spark.plans.generations import GenerationPair, segment_wins
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table
 
@@ -353,105 +354,37 @@ def save_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     `ivf.save_ivf_index`, matching how FAISS stores Flat-PQ vs IVF
     lists. Codebook written last as the completeness marker."""
     import json
-    import os
 
     book, encoded = _pq_index(spark, sf_dir)
-    os.makedirs(path, exist_ok=True)
-    # A retrain over an existing index publishes BOTH halves (codes AND
-    # the codebook that encoded them) as one fresh generation behind one
-    # atomic pointer flip — ADC codes are meaningless under the wrong
-    # codebook, so the two artifacts must never be observable out of
-    # step (the IVF save's pair discipline, where the stake is merely
-    # wrong pruning; here it is wrong distances).
-    cur, prev_bfile = _live_names(path)
-    if os.path.isdir(os.path.join(path, cur)):
-        gen = int(cur.rsplit("-", 1)[1]) + 1 if "-" in cur else 1
-        target, bfile = f"codes-{gen}", f"codebook-{gen}.json"
-    else:
-        target, bfile = "codes", "codebook.json"  # fresh: original layout
-    book_json = [[[cid, c] for cid, c in rows] for rows in book]
-    if target != "codes":
-        with open(os.path.join(path, bfile), "w") as fh:
-            json.dump(book_json, fh)
-    encoded.select("vec_id", "codes").write.mode("overwrite").parquet(
-        os.path.join(path, target)
+    # A retrain over an existing index publishes BOTH halves (codes AND the
+    # codebook that encoded them) as one generation behind one pointer
+    # flip — ADC codes are meaningless under the wrong codebook, so the two
+    # artifacts must never be observable out of step (the IVF pair
+    # discipline, where the stake is merely wrong pruning; here it is
+    # wrong distances).
+    _generations(path).publish(
+        spark,
+        lambda out: encoded.select("vec_id", "codes")
+        .write.mode("overwrite")
+        .parquet(out),
+        meta=json.dumps([[[cid, c] for cid, c in rows] for rows in book]),
     )
-    if target != "codes":
-        _flip_pointer(path, target, bfile, keep={cur, prev_bfile})
-        with open(os.path.join(path, "codebook.json"), "w") as fh:
-            json.dump(book_json, fh)  # marker copy; never load-bearing
-    else:
-        # codebook written LAST: its presence marks the index complete
-        with open(os.path.join(path, bfile), "w") as fh:
-            json.dump(book_json, fh)
-    # a new artifact generation retires memoized plans that pinned the
-    # old file listing (VERDICT r12 staleness hazard)
-    from event_store_spark.plans.registry import forget_all_plans
 
-    forget_all_plans(spark)
+
+def _generations(path: str) -> GenerationPair:
+    return GenerationPair(path, "codes", "codebook.json", pointer="CODES")
 
 
 def _live_names(path: str) -> tuple[str, str]:
-    """Resolve the LIVE (codes dir, codebook file) pair: the `CODES`
-    pointer names both (generations `codes-<n> codebook-<n>.json`) so the
-    pair flips atomically; a pointerless layout is the original (codes,
+    """The LIVE (codes dir, codebook file) pair: the `CODES` pointer names
+    both (generations `codes-<n> codebook-<n>.json`) so the pair flips
+    atomically; a pointerless layout is the original (codes,
     codebook.json)."""
-    import os
-
-    try:
-        with open(os.path.join(path, "CODES")) as fh:
-            parts = fh.read().split()
-    except OSError:
-        return "codes", "codebook.json"
-    if len(parts) == 1:  # early pointer format: codes dir only
-        return parts[0], "codebook.json"
-    return parts[0], parts[1]
+    return _generations(path).live()
 
 
 def _codes_dirname(path: str) -> str:
     return _live_names(path)[0]
-
-
-def _flip_pointer(
-    path: str,
-    codes_dir: str,
-    codebook_file: str,
-    keep: frozenset[str] | set[str] = frozenset(),
-) -> None:
-    """Atomically publish the (codes, codebook) pair, then GC superseded
-    generations EXCEPT the ``keep`` set — callers pass the just-superseded
-    generation so in-flight readers of it finish their scans; it is GC'd
-    by the NEXT flip (ADVICE r7). The root codebook.json survives as the
-    index-exists marker — loaders resolve through the pointer, never the
-    marker."""
-    import os
-    import shutil
-
-    tmp, ptr = os.path.join(path, "CODES.tmp"), os.path.join(path, "CODES")
-    with open(tmp, "w") as fh:
-        fh.write(f"{codes_dir} {codebook_file}")
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, ptr)  # atomic publish
-
-    for entry in os.listdir(path):
-        if entry in keep:
-            continue
-        if (
-            (entry == "codes" or entry.startswith("codes-"))
-            and entry != codes_dir
-            and not entry.endswith(".tmp")
-        ):
-            shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-        if (
-            entry.startswith("codebook-")
-            and entry.endswith(".json")
-            and entry != codebook_file
-        ):
-            try:
-                os.remove(os.path.join(path, entry))
-            except OSError:
-                pass
 
 
 def load_pq_index(spark: SparkSession, path: str):
@@ -472,48 +405,21 @@ def load_pq_index(spark: SparkSession, path: str):
 def compact_pq_index(spark: SparkSession, path: str, additions_path: str) -> None:
     """Fold a `pq_encode_stream` additions segment into the base codes
     table WITHOUT re-encoding — the codebook is untouched, so every code
-    stays valid; the fold is one union + flat rewrite. Same atomic
-    pointer-flip publication as `ivf.compact_ivf_index` (ADVICE r6): the
-    merged generation writes fully to `codes-<n>`, then the `CODES`
-    pointer os.replace()s to name it; the N-1 generation survives this
-    flip for in-flight readers (GC'd by the next one — ADVICE r7), older
-    generations and crash orphans are swept now. Re-folding the same
-    segment is idempotent (full rewrite, not append). When a vec_id
-    exists in BOTH base and segment with different codes (a re-encoded
-    vector), the SEGMENT row wins explicitly — dropDuplicates kept an
-    arbitrary one, which could nondeterministically resurrect the stale
-    base code (ADVICE r7)."""
+    stays valid; the fold is one union + flat rewrite. Same generation
+    flip as `ivf.compact_ivf_index`: the N-1 generation survives for
+    in-flight readers, and re-folding the same segment is idempotent
+    (full rewrite, not append). When a vec_id exists in BOTH base and
+    segment with different codes (a re-encoded vector), the SEGMENT row
+    wins explicitly, so the stale base code can never be resurrected."""
     import os
 
-    from pyspark.sql import Window
-
-    cur, bfile = _live_names(path)
-    base = spark.read.parquet(os.path.join(path, cur))
-    seg = spark.read.parquet(additions_path).select(*base.columns)
-    merged = (
-        base.withColumn("_pri", F.lit(0))
-        .unionByName(seg.withColumn("_pri", F.lit(1)))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("_pri").desc())
-            ),
-        )
-        .where(F.col("_rn") == 1)
-        .drop("_pri", "_rn")
-    )
-    gen = int(cur.rsplit("-", 1)[1]) + 1 if "-" in cur else 1
-    nxt = f"codes-{gen}"
-    merged.write.mode("overwrite").parquet(os.path.join(path, nxt))
+    base = spark.read.parquet(os.path.join(path, _codes_dirname(path)))
+    merged = segment_wins(base, spark.read.parquet(additions_path), "vec_id")
     # compaction never retrains: the pointer keeps naming the SAME
     # codebook file, only the codes generation advances
-    _flip_pointer(path, nxt, bfile, keep={cur, bfile})
-    spark.catalog.refreshByPath(os.path.join(path, nxt))
-    # a new artifact generation retires memoized plans that pinned the
-    # old file listing (VERDICT r12 staleness hazard)
-    from event_store_spark.plans.registry import forget_all_plans
-
-    forget_all_plans(spark)
+    _generations(path).publish(
+        spark, lambda out: merged.write.mode("overwrite").parquet(out), meta=None
+    )
 
 
 def pq_search(

@@ -131,9 +131,9 @@ def forget_plan(spark: SparkSession, name: str) -> None:
 def forget_all_plans(spark: SparkSession) -> None:
     """Evict every memoized plan for this session.
 
-    Called by artifact-maintenance paths (``save_*_index``, ``compact``,
-    ``VectorIndex.maintain`` — anything that retires an index generation
-    or re-materializes a side table): a memoized ANALYZED plan pins the
+    Called by ``generations.GenerationPair.publish`` (every index
+    generation) and by the two segment appends (``DedupIndex.append``,
+    ``PostingsIndex.append``): a memoized ANALYZED plan pins the
     parquet file listing and generation paths resolved at first
     construction, so serving it after maintenance would silently read
     the retired generation (VERDICT r12 "what's wrong" #3). Eviction

@@ -26,10 +26,9 @@ ingest path), which is exactly the comparison the scale story needs.
 
 Publication is atomic (staged dir + os.rename), keyed by a digest of the
 source parquet's identity so a regenerated fixture re-materializes —
-identical discipline to `_typed_dir`. bench.py / scale_bench.py
-materialize this in their warm/write-path section (the typed_events
-accounting), so the build is billed to ingest, not to the
-alphabetically-first text query.
+identical discipline to `_typed_dir`. bench.py materializes this in its
+warm/write-path section (the typed_events accounting), so the build is
+billed to ingest, not to the alphabetically-first text query.
 """
 
 from __future__ import annotations

@@ -8,7 +8,8 @@ to get a Postgres changefeed into Spark is Debezium's envelope —
 consumer: parse the envelope declaratively (`from_json`, no UDF), fold
 each micro-batch to its per-key winners, and merge into a versioned
 parquet table behind the same atomic pointer flip / idempotent-replay
-contract as `streaming.rollup.ContinuousRollup` (crash-safe: the flip
+contract as `streaming.rollup.ContinuousRollup` (both are a
+`plans.generations.VersionedTable`; crash-safe: the flip
 is the commit marker; a replayed batch rebuilds its version directory
 and re-flips; a batch that already flipped is skipped).
 
@@ -31,17 +32,13 @@ partitionBy(bucket(key)) with the same pointer contract.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-#: superseded versions retained for in-flight readers (rollup contract)
-_KEEP_VERSIONS = 2
+from event_store_spark.plans.generations import VersionedTable
 
 
-class CdcMaterializer:
+class CdcMaterializer(VersionedTable):
     """Materialize Debezium changes for one table.
 
     ``row_schema`` is the Spark DDL of the table row (the Debezium
@@ -56,12 +53,10 @@ class CdcMaterializer:
         target_path: str,
         checkpoint: str,
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, target_path)
         self.row_schema = row_schema
         self.keys = list(keys)
-        self.target_path = target_path
         self.checkpoint = checkpoint
-        os.makedirs(target_path, exist_ok=True)
 
     # -------------------------------------------------------------- parsing
 
@@ -109,30 +104,6 @@ class CdcMaterializer:
         )
 
     # --------------------------------------------------------------- reading
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.target_path, "_CURRENT")
-
-    def _current_version(self) -> str | None:
-        try:
-            with open(self._pointer_path()) as fh:
-                return fh.read().strip() or None
-        except FileNotFoundError:
-            return None
-
-    def _full(self, version: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.target_path, version)
-        )
-
-    def versions(self) -> list[str]:
-        """Version directories still on disk, oldest→newest (the last is
-        not necessarily committed; `_KEEP_VERSIONS` superseded snapshots
-        survive GC for time travel, as in `ContinuousRollup`)."""
-        return sorted(
-            (d for d in os.listdir(self.target_path) if d.startswith("_v")),
-            key=lambda d: int(d[2:]),
-        )
 
     def table(self, version: str | None = None) -> DataFrame:
         """Live rows (tombstones filtered) as of the last committed merge
@@ -192,16 +163,7 @@ class CdcMaterializer:
             merged = existing.join(touched, self.keys, "left_anti").unionByName(
                 winners
             )
-        out_dir = os.path.join(self.target_path, version)
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)  # replayed uncommitted batch: rebuild
-        merged.write.mode("overwrite").parquet(out_dir)
-        self.spark.catalog.refreshByPath(out_dir)
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer_path())
-        self._gc(keep=version)
+        self._publish(merged, batch_id)
 
     def gc_tombstones(self, older_than_ms: int, batch_id: int) -> int:
         """Drop tombstones with ``ts_ms < older_than_ms`` from the current
@@ -232,29 +194,8 @@ class CdcMaterializer:
         n = full.where(dead).count()
         if n == 0:
             return 0
-        version = f"_v{batch_id}"
-        out_dir = os.path.join(self.target_path, version)
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)
-        full.where(~dead).write.mode("overwrite").parquet(out_dir)
-        self.spark.catalog.refreshByPath(out_dir)
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer_path())
-        self._gc(keep=version)
+        self._publish(full.where(~dead), batch_id)
         return n
-
-    def _gc(self, keep: str) -> None:
-        versions = sorted(
-            (d for d in os.listdir(self.target_path) if d.startswith("_v")),
-            key=lambda d: int(d[2:]),
-        )
-        for stale in versions[: -(_KEEP_VERSIONS + 1)]:
-            if stale != keep:
-                shutil.rmtree(
-                    os.path.join(self.target_path, stale), ignore_errors=True
-                )
 
     # --------------------------------------------------------------- running
 

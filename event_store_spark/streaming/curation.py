@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from event_store_spark.core.state import atomic_write
+
 #: batch-plan constants (plans/pipeline.py quality_filter/corpus_curation)
 QUALITY_MIN = 0.55
 LEN_LO, LEN_HI = 100, 20_000
@@ -79,13 +81,8 @@ class CurationPipeline:
             return -1
 
     def _commit(self, batch_id: int) -> None:
-        tmp = self._ptr() + ".tmp"
         os.makedirs(self.target_path, exist_ok=True)
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._ptr())
+        atomic_write(self._ptr(), json.dumps({"batch_id": batch_id}))
 
     def _snapshot(self, kind: str) -> tuple[int, str] | None:
         """(watermark batch id, dir name) of the kind's folded snapshot."""
@@ -135,12 +132,7 @@ class CurationPipeline:
         self.spark.read.parquet(*paths).write.mode("overwrite").parquet(out)
         self.spark.catalog.refreshByPath(out)
         old_snap = self._snapshot(kind)
-        tmp = os.path.join(root, "_SNAP.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"{upto} snap{upto}")
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(root, "_SNAP"))
+        atomic_write(os.path.join(root, "_SNAP"), f"{upto} snap{upto}")
         for p in live:
             shutil.rmtree(p, ignore_errors=True)
         if old_snap is not None and old_snap[1] != f"snap{upto}":

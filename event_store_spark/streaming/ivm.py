@@ -21,8 +21,9 @@ addition. This module maintains exactly that:
   keep the module self-contained;
 - the view table lives behind the same atomic pointer flip /
   idempotent-replay contract as `ContinuousRollup`/`CdcMaterializer`
-  (the flip is the commit marker; replays of committed batches skip;
-  replays of uncommitted batches rebuild) — crucially the side
+  (all are a `plans.generations.VersionedTable`; the flip is the
+  commit marker; replays of committed batches skip; replays of
+  uncommitted batches rebuild) — crucially the side
   snapshots are also rolled forward idempotently: a replayed committed
   batch must not re-append its deltas. Side subdirs self-compact every
   ``compact_every`` batches behind a _SNAP pointer (same flip
@@ -48,10 +49,11 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_KEEP_VERSIONS = 2
+from event_store_spark.core.state import atomic_write
+from event_store_spark.plans.generations import VersionedTable
 
 
-class JoinAggregateView:
+class JoinAggregateView(VersionedTable):
     """Maintain ``agg(R ⋈ S) GROUP BY group_cols`` incrementally.
 
     ``join_keys``: equi-join column names shared by both sides.
@@ -85,30 +87,18 @@ class JoinAggregateView:
         into one snapshot once this many accumulate since the last fold —
         long-running streams otherwise grow unbounded small files and
         ever-longer per-refresh listing/read work (ADVICE r5)."""
-        self.spark = spark
+        super().__init__(spark, target_path)
         self.join_keys = list(join_keys)
         self.left_cols = list(left_cols)  # incl. join keys
         self.right_cols = list(right_cols)
         self.group_cols = list(group_cols)
         self.measures = dict(measures)
-        self.target_path = target_path
         self.checkpoint = checkpoint
         self.left_schema = left_schema
         self.right_schema = right_schema
         self.compact_every = int(compact_every)
-        os.makedirs(target_path, exist_ok=True)
 
     # ------------------------------------------------------------- plumbing
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.target_path, "_CURRENT")
-
-    def _current_version(self) -> str | None:
-        try:
-            with open(self._pointer_path()) as fh:
-                return fh.read().strip() or None
-        except FileNotFoundError:
-            return None
 
     def _side_dir(self, side: str) -> str:
         return os.path.join(self.target_path, f"_side_{side}")
@@ -185,9 +175,7 @@ class JoinAggregateView:
                 .groupBy(*self.group_cols)
                 .agg(*[m.alias(n) for n, m in self.measures.items()])
             )
-        return self.spark.read.parquet(
-            os.path.join(self.target_path, current)
-        )
+        return self._full(current)
 
     # ------------------------------------------------------------ the rule
 
@@ -235,16 +223,7 @@ class JoinAggregateView:
                         ],
                     )
                 )
-            out_dir = os.path.join(self.target_path, version)
-            if os.path.exists(out_dir):
-                shutil.rmtree(out_dir)
-            merged.write.mode("overwrite").parquet(out_dir)
-            self.spark.catalog.refreshByPath(out_dir)
-            tmp = self._pointer_path() + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(version)
-            os.replace(tmp, self._pointer_path())
-            self._gc(keep=version)
+            self._publish(merged, batch_id)
         # roll the side snapshots forward: each batch's delta goes to its
         # OWN subdir with overwrite semantics (idempotent under replay;
         # see _side_pre for why the layout also keeps the pre-state exact)
@@ -289,10 +268,7 @@ class JoinAggregateView:
             shutil.rmtree(out)  # crashed earlier attempt at the same fold
         self.spark.read.parquet(*paths).write.mode("overwrite").parquet(out)
         self.spark.catalog.refreshByPath(out)
-        tmp = self._snap_pointer(side) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(f"{upto} {name}")
-        os.replace(tmp, self._snap_pointer(side))
+        atomic_write(self._snap_pointer(side), f"{upto} {name}")
         for _, p in live:
             shutil.rmtree(p, ignore_errors=True)
         if snap is not None and snap[1] != name:
@@ -305,17 +281,6 @@ class JoinAggregateView:
         for i, p in self._side_subdirs(side):
             if i <= base_w:
                 shutil.rmtree(p, ignore_errors=True)
-
-    def _gc(self, keep: str) -> None:
-        versions = sorted(
-            (d for d in os.listdir(self.target_path) if d.startswith("_v")),
-            key=lambda d: int(d[2:]),
-        )
-        for stale in versions[: -(_KEEP_VERSIONS + 1)]:
-            if stale != keep:
-                shutil.rmtree(
-                    os.path.join(self.target_path, stale), ignore_errors=True
-                )
 
     # ------------------------------------------------------------- running
 
@@ -333,7 +298,7 @@ class JoinAggregateView:
         return writer.start()
 
 
-class DistinctCountView:
+class DistinctCountView(VersionedTable):
     """Incrementally-maintained per-group DISTINCT counts.
 
     COUNT(DISTINCT) is not additive — re-appearing members must not
@@ -367,31 +332,15 @@ class DistinctCountView:
         :meth:`table` schema exact — same fix as JoinAggregateView's
         left/right schemas (ADVICE r5); without it the empty frame
         falls back to all-string group keys."""
-        self.spark = spark
+        super().__init__(spark, target_path)
         self.group_cols = list(group_cols)
         self.value_col = value_col
-        self.target_path = target_path
         self.checkpoint = checkpoint
         self.input_schema = input_schema
-        os.makedirs(target_path, exist_ok=True)
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.target_path, "_CURRENT")
-
-    def _current_version(self) -> str | None:
-        try:
-            with open(self._pointer_path()) as fh:
-                return fh.read().strip() or None
-        except FileNotFoundError:
-            return None
 
     def _sketches(self) -> DataFrame | None:
         current = self._current_version()
-        if current is None:
-            return None
-        return self.spark.read.parquet(
-            os.path.join(self.target_path, current)
-        )
+        return None if current is None else self._full(current)
 
     def table(self) -> DataFrame:
         """(group_cols..., approx_distinct) as of the last commit."""
@@ -437,24 +386,7 @@ class DistinctCountView:
                 .groupBy(*self.group_cols)
                 .agg(F.hll_union_agg("sk").alias("sk"))
             )
-        out_dir = os.path.join(self.target_path, version)
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)
-        merged.write.mode("overwrite").parquet(out_dir)
-        self.spark.catalog.refreshByPath(out_dir)
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer_path())
-        versions = sorted(
-            (d for d in os.listdir(self.target_path) if d.startswith("_v")),
-            key=lambda d: int(d[2:]),
-        )
-        for stale in versions[: -(_KEEP_VERSIONS + 1)]:
-            if stale != version:
-                shutil.rmtree(
-                    os.path.join(self.target_path, stale), ignore_errors=True
-                )
+        self._publish(merged, batch_id)
 
     def start(self, stream: DataFrame, available_now: bool = True):
         writer = (

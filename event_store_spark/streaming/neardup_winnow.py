@@ -56,6 +56,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from event_store_spark.core.state import atomic_write
 from event_store_spark.plans.dedup_index import DedupIndex
 from event_store_spark.streaming.eos import exactly_once_batch
 
@@ -91,13 +92,8 @@ class WinnowDedupGate:
             return None
 
     def _commit(self, _topic: str, batch_id: int) -> None:
-        tmp = self.state_path + ".tmp"
         os.makedirs(os.path.dirname(self.state_path) or ".", exist_ok=True)
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self.state_path)
+        atomic_write(self.state_path, json.dumps({"batch_id": batch_id}))
 
     # -------------------------------------------------------------- gate
 

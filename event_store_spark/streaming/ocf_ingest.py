@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.avro.container import read_avro_container
+from event_store_spark.core.state import atomic_write
 from event_store_spark.core.store import EventStore
 
 #: reserved metadata key naming the source file of an ingested row
@@ -102,13 +103,8 @@ class OcfIngest:
             return set()
 
     def _record(self, done: set[str]) -> None:
-        tmp = self.state_path + ".tmp"
         os.makedirs(os.path.dirname(self.state_path) or ".", exist_ok=True)
-        with open(tmp, "w") as fh:
-            json.dump({"files": sorted(done)}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self.state_path)
+        atomic_write(self.state_path, json.dumps({"files": sorted(done)}))
 
     def _srcs_in_topic(self) -> set[str]:
         """Recovery-only presence probe: which src keys did a crashed run

@@ -12,11 +12,11 @@ Exactly-once composition:
 - the streaming agg replays deterministically from the checkpoint (same
   batch id → same cumulative rows), so the upsert is idempotent by
   construction — re-merging a replayed batch writes identical values;
-- the table swap is a crash-safe pointer flip: each merge writes a fresh
-  ``_v<epoch>`` parquet directory, then atomically replaces the ``_CURRENT``
-  pointer file (temp-write + os.replace, the TicketStore pattern). A crash
-  between the two leaves the previous version intact and the replayed batch
-  re-produces the same new version.
+- the table swap is a crash-safe pointer flip (`plans.generations.
+  VersionedTable`): each merge writes a fresh ``_v<epoch>`` parquet
+  directory, then atomically replaces the ``_CURRENT`` pointer file. A
+  crash between the two leaves the previous version intact and the
+  replayed batch re-produces the same new version.
 - late rows: ``withWatermark`` bounds state; rows later than the watermark
   delay are dropped by the aggregation (never reach the table). The
   watermark itself persists across restarts in the checkpoint commit log.
@@ -32,17 +32,13 @@ event stream it summarizes.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: how many superseded versions to retain for concurrent readers mid-swap
-_KEEP_VERSIONS = 2
+from event_store_spark.plans.generations import VersionedTable
 
 
-class ContinuousRollup:
+class ContinuousRollup(VersionedTable):
     """Incrementally-maintained hourly rollup of an events stream.
 
     Parameters mirror the batch q36 contract: tumbling ``window_duration``
@@ -78,35 +74,14 @@ class ContinuousRollup:
         watermark_delay: str = "2 hours",
         max_files_per_trigger: int | None = None,
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, target_path)
         self.source_path = source_path
-        self.target_path = target_path
         self.checkpoint = checkpoint
         self.window_duration = window_duration
         self.watermark_delay = watermark_delay
         self.max_files_per_trigger = max_files_per_trigger
-        os.makedirs(target_path, exist_ok=True)
 
     # ------------------------------------------------------------- table read
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.target_path, "_CURRENT")
-
-    def _current_version(self) -> str | None:
-        try:
-            with open(self._pointer_path()) as fh:
-                return fh.read().strip() or None
-        except FileNotFoundError:
-            return None
-
-    def versions(self) -> list[str]:
-        """Version directories still on disk, oldest→newest (the last is
-        not necessarily committed — crash debris stays until its batch
-        replays; the committed one is ``_current_version()``)."""
-        return sorted(
-            (d for d in os.listdir(self.target_path) if d.startswith("_v")),
-            key=lambda d: int(d[2:]),
-        )
 
     def table(self, version: str | None = None) -> DataFrame:
         """The rollup table as of the latest committed merge — or, with
@@ -119,7 +94,7 @@ class ContinuousRollup:
             raise ValueError(f"unknown rollup version {version!r}")
         if version is None:
             return self.spark.createDataFrame([], self._EMPTY_SCHEMA)
-        return self.spark.read.parquet(os.path.join(self.target_path, version))
+        return self._full(version)
 
     # ---------------------------------------------------------------- running
 
@@ -141,38 +116,12 @@ class ContinuousRollup:
         if current is None:
             merged = updates
         else:
-            existing = self.spark.read.parquet(
-                os.path.join(self.target_path, current)
-            )
-            merged = existing.join(
+            merged = self._full(current).join(
                 updates.select("win_start", "event_type"),
                 ["win_start", "event_type"],
                 "left_anti",
             ).unionByName(updates)
-        out_dir = os.path.join(self.target_path, version)
-        if os.path.exists(out_dir):  # replayed batch: rebuild from scratch
-            shutil.rmtree(out_dir)
-        merged.write.mode("overwrite").parquet(out_dir)
-        # a replayed batch rewrites a directory Spark may have listed before
-        # the crash — drop the stale file-status cache entry or readers hit
-        # FILE_NOT_EXIST on the torn version's old part files
-        self.spark.catalog.refreshByPath(out_dir)
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer_path())
-        self._gc(keep=version)
-
-    def _gc(self, keep: str) -> None:
-        versions = sorted(
-            (d for d in os.listdir(self.target_path) if d.startswith("_v")),
-            key=lambda d: int(d[2:]),
-        )
-        # retain the current version PLUS _KEEP_VERSIONS superseded ones
-        # (the documented mid-swap reader window)
-        for stale in versions[: -(_KEEP_VERSIONS + 1)]:
-            if stale != keep:
-                shutil.rmtree(os.path.join(self.target_path, stale), ignore_errors=True)
+        self._publish(merged, batch_id)
 
     def start(self, available_now: bool = True):
         """Start (or resume) the incremental maintenance query."""

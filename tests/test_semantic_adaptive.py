@@ -4,7 +4,7 @@ The correctness SFs hold ≤2000 vectors, where the adaptive rule
 k = max(8, ceil(n/512)) collapses to the pinned k=8 — so the driver's
 oracle gate proves parity but never exercises adaptivity itself. This
 suite synthesizes a 6000-vector corpus (12 perturbed copies of sf0.001's
-embeddings, scale_bench's exact synthesis rule) where k=12, and pins:
+embeddings, the scale-point synthesis rule) where k=12, and pins:
 
 - engine ≡ DuckDB oracle on the synthesized corpus (the lockstep claim:
   both sides compute the identical count-dependent k, then the identical
@@ -39,7 +39,7 @@ def synth_dir(spark, tmp_path_factory):
 
     Non-embeddings tables are copied verbatim (the oracle CTE reads only
     `embeddings`, but the harness registers every table as a view).
-    Perturbation matches scale_bench.build_fixtures: per-(copy, dim)
+    Perturbation is the scale-point fixtures' rule: per-(copy, dim)
     deterministic nudge so no cell holds artificial twins.
     """
     out = str(tmp_path_factory.mktemp("sf_adaptive"))
