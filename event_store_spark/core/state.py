@@ -388,16 +388,16 @@ class TicketStore(_AtomicJsonState):
     the reference gets MAX(lsn)/MAX(id) for free from Postgres sequences and
     indexes; a parquet topic would need a full footer-stat scan per append
     (two O(table) file listings at 100 TB — the round-1 scale bug). Instead
-    ``EventStore.append`` reserves the next lsn here BEFORE writing and
-    records the batch's high water after computing it from the batch alone,
-    so appends never read pre-existing topic files. A crash between the
-    reservation and the parquet write leaves an lsn gap (never a duplicate
-    lsn), mirroring a WAL that reserves LSNs ahead of the commit record;
-    until repaired, the orphaned reservation also makes max_id/total — and
-    the O(1) gauges built on them — overcount by that one batch (data
-    correctness is unaffected; `EventStore.repair_ticket` rebuilds from the
-    parquet source of truth). Legacy topics without a ticket are recovered
-    by one explicit scan.
+    ``EventStore.append`` computes the batch's high water from the batch
+    alone and saves it here ONCE, before writing — so appends never read
+    pre-existing topic files. The rows become visible later, by the topic's
+    commit-log entry; a crash between the two leaves an lsn gap (never a
+    duplicate lsn), mirroring a WAL that reserves LSNs ahead of the commit
+    record. Until repaired, the orphaned reservation also makes
+    max_id/total — and the O(1) gauges built on them — overcount by that
+    one batch (data correctness is unaffected; `EventStore.repair_ticket`
+    rebuilds from the committed rows). Legacy topics without a ticket are
+    recovered by one explicit scan.
     """
 
     def get(self, topic: str) -> dict | None:
@@ -419,7 +419,6 @@ class TicketStore(_AtomicJsonState):
         total: int,
         key_type: str,
         day_partitioned: bool,
-        clock: int = 0,
         schema: dict | None = None,
     ) -> None:
         data = self._read()
@@ -429,12 +428,6 @@ class TicketStore(_AtomicJsonState):
             "total": total,
             "key_type": key_type,
             "day_partitioned": day_partitioned,
-            # publication clock high water (ms): every published data file
-            # carries a strictly greater mtime/name sequence than any file
-            # of any earlier append, so stream sources that order file
-            # pickup by (modTime, path) observe commit order — the property
-            # the Replicator's keyset cursor depends on
-            "clock": clock,
             # the rows' Spark schema (StructType JSON, all nullable): reads
             # pass it to `.schema(...)` instead of inferring it from footers
             "schema": schema,

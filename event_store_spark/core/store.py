@@ -28,17 +28,32 @@ never run a footer-inference job. A single writer per topic is assumed,
 mirroring the reference's advisory-lock single-writer model
 (`LockManager.java:45-84`); multi-writer coordination would move the lsn
 ticket into a lock service or table MERGE.
+
+Commit point: a topic's rows are the files its commit log names, not what
+a directory listing sees. The log is Spark's own file-sink metadata log
+(``<topic>/_spark_metadata``, the `FileStreamSinkLog` format), so
+``spark.read.parquet(topic)`` and ``readStream.parquet(topic)`` consult it
+themselves and ignore every file it does not name. An append or a
+compaction moves its files into the topic directory — still invisible —
+and becomes visible by ONE log entry, published by ``atomic_write``: the
+role the reference's Postgres commit plays. Entries stamp their files with
+modification times that increase along the log, which is the order a file
+stream source picks them up in, so streams observe commit order. Entries
+name absolute paths, as Spark's sink does, so a store root cannot be moved
+as-is.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import re
 import shutil
 import time
 import uuid
 from functools import reduce
 from operator import add
+from pathlib import Path
+from urllib.parse import quote, unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,13 +67,23 @@ from event_store_spark.core.envelope import (
     typed_key_view,
     validate_metadata,
 )
-from event_store_spark.core.state import TicketStore, TopicMutex
+from event_store_spark.core.state import TicketStore, TopicMutex, atomic_write
 
 TOPIC_SUFFIX = "_events"
 
 #: data-file size target shared by append and compact: an append whose
 #: batch fits writes one file, and compaction sizes its output by it
 TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+#: the topic's commit log directory (Spark's file-sink metadata log)
+LOG_DIR = "_spark_metadata"
+
+#: entry ``n`` is the full snapshot ``n.compact`` exactly when
+#: ``(n + 1) % COMPACT_INTERVAL == 0``. Spark's reader derives the interval
+#: from the snapshot names it finds, so this must stay Spark's default
+#: ``fileSinkLog.compactInterval``; a snapshot makes every earlier entry
+#: obsolete.
+COMPACT_INTERVAL = 10
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
@@ -90,6 +115,113 @@ def _row_bytes(schema: T.StructType) -> Column:
             size = F.lit(8)
         sizes.append(F.coalesce(size, F.lit(0)))
     return reduce(add, sizes)
+
+
+def _uri(path: str) -> str:
+    """``path`` as the ``file://`` URI Hadoop prints for it, so the log names
+    a file exactly as a directory listing — and a stream checkpoint taken
+    over that listing — does."""
+    return "file://" + quote(os.path.abspath(path), safe="/=:@!$&'()*+,;-._~")
+
+
+def _local(uri: str) -> str:
+    return unquote(urlparse(uri).path)
+
+
+def _entry_name(n: int) -> str:
+    return f"{n}.compact" if (n + 1) % COMPACT_INTERVAL == 0 else str(n)
+
+
+def _entry_ids(log: str) -> list[int]:
+    stems = (name.removesuffix(".compact") for name in os.listdir(log))
+    return [int(s) for s in stems if s.isdigit()]
+
+
+def _read_log(log: str) -> tuple[int, list[dict]]:
+    """The latest entry id and the files the log names, in log order: the
+    newest snapshot plus every entry after it, as Spark's reader sees them."""
+    while True:
+        latest = max(_entry_ids(log), default=-1)
+        first = max(0, (latest + 1) // COMPACT_INTERVAL * COMPACT_INTERVAL - 1)
+        try:
+            entries = [
+                Path(log, _entry_name(n)).read_text() for n in range(first, latest + 1)
+            ]
+        except FileNotFoundError:  # a newer snapshot superseded them mid-read
+            if max(_entry_ids(log), default=-1) == latest:
+                raise
+            continue
+        return latest, [json.loads(ln) for e in entries for ln in e.splitlines()[1:]]
+
+
+def _stamp(paths: list[str], live: list[dict]) -> list[dict]:
+    """Log lines (`SinkFileStatus`) for ``paths`` in pickup order. A file
+    stream source picks files up in modificationTime order and skips those
+    older than its newest by ``maxFileAge``, so the times rise strictly past
+    every ``live`` file's and never fall behind the wall clock."""
+    t = max([int(time.time() * 1000) - 1] + [f["modificationTime"] for f in live])
+    return [
+        dict(path=_uri(p), size=os.path.getsize(p), isDir=False, modificationTime=t + i,
+             blockReplication=1, blockSize=32 << 20, action="add")
+        for i, p in enumerate(paths, 1)
+    ]
+
+
+def _commit(log: str, n: int, live: list[dict], added: list[dict]) -> None:
+    """Publish entry ``n`` adding ``added`` to the ``live`` files the log
+    names before it: the one commit point of an append or a compaction. A
+    snapshot entry names every file; the entries it supersedes go after."""
+    snapshot = (n + 1) % COMPACT_INTERVAL == 0
+    named = live + added if snapshot else added
+    lines = ["v1", *(json.dumps(f, separators=(",", ":")) for f in named)]
+    atomic_write(os.path.join(log, _entry_name(n)), "\n".join(lines))
+    for old in _entry_ids(log) if snapshot else []:
+        if old < n:
+            os.remove(os.path.join(log, _entry_name(old)))
+
+
+def _disk_files(path: str) -> list[str]:
+    """Every parquet file a directory listing of ``path`` would read
+    (hidden ``_``/``.`` directories skipped, as Spark skips them)."""
+    out = []
+    for dirpath, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [os.path.join(dirpath, n) for n in names if n.endswith(".parquet")]
+    return out
+
+
+def _move_into(staging: str, path: str) -> list[str]:
+    """Move the data files Spark wrote to ``staging`` into the topic
+    directory ``path``, ``dt=`` subdirectories kept; returns their new paths
+    in (task, dt) order, which is ascending id order: ids are
+    partition-local blocks, day-sorted within each task before assignment,
+    and ISO dt= names sort chronologically."""
+    moved = []
+    for src in sorted(_disk_files(staging), key=lambda f: (os.path.basename(f), f)):
+        moved.append(os.path.join(path, os.path.relpath(src, staging)))
+        os.makedirs(os.path.dirname(moved[-1]), exist_ok=True)
+        os.rename(src, moved[-1])
+    return moved
+
+
+def _open_log(path: str) -> None:
+    """Give the topic its commit log; the caller holds the topic mutex.
+    A topic written before the log existed gets entry 0 naming its files
+    in their (mtime, name) order: paths stay the same, so a stream
+    checkpoint taken over the old listing does not redeliver them. The
+    log directory appears by one rename, so a crash never hides them."""
+    log = os.path.join(path, LOG_DIR)
+    if os.path.isdir(log):
+        return
+    legacy = sorted(
+        _disk_files(path),
+        key=lambda f: (os.path.getmtime(f), os.path.basename(f)),
+    )
+    tmp = f"{log}.{uuid.uuid4().hex}"
+    os.makedirs(tmp)
+    if legacy:
+        _commit(tmp, 0, [], _stamp(legacy, []))
+    os.rename(tmp, log)
 
 
 class EventStore:
@@ -163,11 +295,20 @@ class EventStore:
         post-write re-read); at 100 TB that is two million-file listings
         per append.
 
-        Concurrency: the reserve (read ticket → next lsn → save) and the
-        data write run under a per-topic :class:`TopicMutex`, so concurrent
-        appends to one topic serialize instead of both reserving the same
-        lsn — the advisory-lock single-writer invariant the reference holds
-        (`LockManager.java:45-84`), enforced per append rather than assumed.
+        Commit: the files are written outside the topic, moved in — still
+        invisible — and published by ONE entry of the topic's commit log, so
+        a multi-file or day-partitioned append becomes visible all at once or
+        not at all, and a crash before the entry leaves only an lsn gap.
+        Writing the entry reads the log from its latest snapshot: driver-side
+        JSON, one line per file, which every Spark read of the topic parses
+        too.
+
+        Concurrency: the reserve (read ticket → next lsn → save), the data
+        write and the log entry run under a per-topic :class:`TopicMutex`,
+        so concurrent appends to one topic serialize instead of both
+        reserving the same lsn — the advisory-lock single-writer invariant
+        the reference holds (`LockManager.java:45-84`), enforced per append
+        rather than assumed.
         """
         if key_type not in KEY_TYPES:
             raise ValueError(f"key_type must be one of {KEY_TYPES}")
@@ -179,47 +320,11 @@ class EventStore:
         if validate:
             validate_metadata(df)
 
-        self._recover_compaction(topic)
         self._append_mutex.acquire(topic)
         try:
             return self._append_locked(
                 topic, df, key_type, partition_by_day, payload_cols
             )
-        finally:
-            self._append_mutex.release(topic)
-
-    def _recover_compaction(self, topic: str) -> None:
-        """Heal a compaction interrupted between its two directory renames.
-
-        ``compact`` swaps via ``rename(path, path.old)`` then
-        ``rename(path.compacted, path)`` — a crash between them leaves the
-        topic directory MISSING with all data stranded in ``.old``. Publish
-        of ``.compacted`` completes before the first rename, so when the
-        topic dir is absent: a data-bearing ``.compacted`` means the swap
-        can be FINISHED (roll forward); otherwise ``.old`` is restored
-        (roll back). Either way no committed row is lost. With the topic
-        dir present, a lingering ``.old`` is post-swap debris (the mutex
-        excludes an in-flight compact) and is dropped. ``.compacting`` is
-        never touched here — it may belong to a live compaction's
-        pre-mutex write. Cheap no-op unless crash evidence exists.
-        """
-        path = self.topic_path(topic)
-        old, ordered = f"{path}.old", f"{path}.compacted"
-        if not os.path.isdir(old):
-            return
-        self._append_mutex.acquire(topic)
-        try:
-            if not os.path.isdir(old):  # raced with another healer
-                return
-            if not os.path.exists(path):
-                if os.path.isdir(ordered) and self._has_data(ordered):
-                    os.rename(ordered, path)  # roll forward
-                    shutil.rmtree(old, ignore_errors=True)
-                else:
-                    os.rename(old, path)  # roll back
-                    shutil.rmtree(ordered, ignore_errors=True)
-            else:
-                shutil.rmtree(old, ignore_errors=True)
         finally:
             self._append_mutex.release(topic)
 
@@ -231,6 +336,8 @@ class EventStore:
         partition_by_day: bool,
         payload_cols: list[str],
     ) -> Cursor:
+        path = self.topic_path(topic)
+        _open_log(path)
         ticket = self._ticket(topic)
         if ticket is not None:
             if ticket["day_partitioned"] != partition_by_day:
@@ -267,9 +374,9 @@ class EventStore:
         if partition_by_day:
             # Assign ids AFTER an in-partition day sort: each (task, dt)
             # output file then holds one disjoint ascending id range, so the
-            # ordered publication below yields a total (lsn, id) visibility
-            # order even across dt= subdirectories. The sort is partition-
-            # local — appends stay shuffle-free.
+            # log entry below names files in (lsn, id) order even across
+            # dt= subdirectories. The sort is partition-local — appends stay
+            # shuffle-free.
             src = df.withColumn(
                 "__dt", F.to_date(truncate_millis(ts))
             ).sortWithinPartitions("__dt")
@@ -323,12 +430,7 @@ class EventStore:
                 )
             # Reserve the ticket BEFORE the data write: a crash in between
             # leaves an lsn gap (harmless), while write-then-save could
-            # reissue the same lsn to two appends (cursor corruption). The
-            # reservation also claims this append's publication-clock range
-            # [clock_start+1, clock_start+n] (one tick per data file; files
-            # ≤ rows), so concurrent-topic appends never collide on clocks.
-            prev_clock = ticket.get("clock", 0) if ticket else 0
-            clock_start = max(prev_clock, int(time.time() * 1000))
+            # reissue the same lsn to two appends (cursor corruption).
             self._tickets.save(
                 topic,
                 lsn=lsn,
@@ -336,32 +438,14 @@ class EventStore:
                 total=(ticket["total"] if ticket else 0) + stats.n,
                 key_type=key_type,
                 day_partitioned=partition_by_day,
-                clock=clock_start + stats.n,
                 schema=schema,
             )
-            # Stage-then-publish: write the batch OUTSIDE the topic dir,
-            # then move each data file into place in (lsn, id) order with a
-            # strictly increasing mtime/name sequence. Stream sources order
-            # file pickup by (modTime, path); without this, two appends
-            # committed within one mtime tick interleave alphabetically
-            # (part-00000-<uuidA> < part-00000-<uuidB> < part-00001-<uuidA>)
-            # and the Replicator/Subscription keyset cursor silently drops
-            # the out-of-order rows. Publication order IS commit order —
-            # the role the reference's WAL ordering plays
-            # (EventReplicatorWorker.java:66-72 keyset scan). Local-FS
-            # semantics; on object stores back the topic with a
-            # transactional table format instead.
-            # per-TOPIC staging subdirectory: the orphan sweep below must
-            # never touch another topic's staging, and topic names may
-            # contain any legal character (a name-prefix match would let
-            # 'foo_events' delete 'foo_events-eu_events'-in-flight batches)
-            topic_staging_root = os.path.join(self.root, "_staging", topic)
-            if os.path.isdir(topic_staging_root):
-                # orphans from a crashed append to THIS topic (we hold its
-                # mutex, so no live writer owns them): unpublished staging is
-                # simply a lost batch — its lsn stays a gap, as documented
-                shutil.rmtree(topic_staging_root, ignore_errors=True)
-            staging = os.path.join(topic_staging_root, f"{lsn}-{uuid.uuid4().hex}")
+            # Per-TOPIC staging directory, so it never holds another topic's
+            # batch (topic names may contain any legal character). One left
+            # over is a crashed append's — we hold the mutex — whose lsn
+            # stays a gap.
+            staging = os.path.join(self.root, "_staging", topic, "append")
+            shutil.rmtree(staging, ignore_errors=True)
             # A flat batch that fits the file-size target is written by ONE
             # task from the persisted partitions: ids are partition-local
             # blocks, so the id sort lays them out in order. Day-partitioned
@@ -378,79 +462,15 @@ class EventStore:
                 writer = writer.partitionBy("dt")
             try:
                 writer.parquet(staging)
-                published = self._publish_ordered(
-                    staging, self.topic_path(topic), clock_start
-                )
-                # Reconcile the clock to ticks actually CONSUMED: the
-                # reservation above is one tick per ROW (files ≤ rows, and
-                # the file count isn't known until the write finishes), but
-                # publication spends one per FILE — without this re-save the
-                # clock (and published mtimes) would drift unboundedly ahead
-                # of wall-clock under sustained row throughput. A crash
-                # before this line leaves the over-reservation in place:
-                # bounded (one batch's rows) and safe, merely sparse.
-                self._tickets.save(
-                    topic,
-                    lsn=lsn,
-                    max_id=stats.max_id,
-                    total=(ticket["total"] if ticket else 0) + stats.n,
-                    key_type=key_type,
-                    day_partitioned=partition_by_day,
-                    clock=clock_start + published,
-                    schema=schema,
-                )
+                log = os.path.join(path, LOG_DIR)
+                version, live = _read_log(log)
+                added = _stamp(_move_into(staging, path), live)
+                _commit(log, version + 1, live, added)
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
         finally:
             out.unpersist()
         return Cursor(lsn, stats.max_id)
-
-    @staticmethod
-    def _publish_ordered(staging: str, final: str, clock_start: int) -> int:
-        """Move staged data files into the topic dir in id order, each with
-        the next publication-clock tick as both its mtime and its sortable
-        file-name sequence — so modTime order AND path order agree with
-        commit order, whichever a stream source sorts by. Files land one
-        rename at a time, oldest id range first: a concurrent listing sees a
-        commit-order prefix, never an out-of-order subset.
-
-        Returns the number of files published (= clock ticks consumed);
-        the caller reconciles the ticket clock with it."""
-        import pyarrow.parquet as pq
-
-        files = []
-        for dirpath, _dirs, names in os.walk(staging):
-            rel = os.path.relpath(dirpath, staging)
-            for n in names:
-                if not n.endswith(".parquet"):
-                    continue
-                m = re.search(r"part-(\d+)", n)
-                files.append(
-                    (
-                        int(m.group(1)) if m else 0,
-                        "" if rel == "." else rel,
-                        os.path.join(dirpath, n),
-                    )
-                )
-        # (task index, dt): ascending id ranges by construction — ids are
-        # partition-local blocks, day-sorted within each task before
-        # assignment, and ISO dt= names sort chronologically
-        files.sort()
-        seq = 0
-        for _part, rel, src in files:
-            if pq.ParquetFile(src).metadata.num_rows == 0:
-                continue  # empty task output carries no ids to order
-            seq += 1
-            clk = clock_start + seq
-            dest_dir = os.path.join(final, rel) if rel else final
-            os.makedirs(dest_dir, exist_ok=True)
-            dest = os.path.join(dest_dir, f"part-{clk:020d}-{uuid.uuid4().hex}.parquet")
-            # stamp the clock mtime on the STAGED file: rename preserves it,
-            # so the published file never transiently exposes its wall-clock
-            # write mtime to a concurrent listing
-            os.utime(src, ns=(clk * 1_000_000, clk * 1_000_000))
-            os.rename(src, dest)
-        return seq
 
     def _ticket(self, topic: str) -> dict | None:
         """The topic's append ticket; recovered by one explicit scan for
@@ -462,12 +482,14 @@ class EventStore:
         if ticket is not None and ticket.get("schema") is not None:
             return ticket
         path = self.topic_path(topic)
-        if not self._has_data(path):
+        if not self._parquet_files(path):
             return ticket
         df = self.spark.read.parquet(path)
         schema = _as_nullable(df.schema).jsonValue()
         if ticket is not None:
-            ticket = {**ticket, "schema": schema}
+            # tickets from before the commit log carry a publication clock
+            ticket = {k: v for k, v in ticket.items() if k != "clock"}
+            ticket["schema"] = schema
             self._tickets.save(topic, **ticket)
             return ticket
         row = df.agg(
@@ -481,15 +503,6 @@ class EventStore:
             "total": row.n,
             "key_type": row.kt,
             "day_partitioned": self._is_day_partitioned(topic),
-            # resume the publication clock past every existing file's mtime
-            # so recovered topics keep publishing in commit order
-            "clock": int(
-                max(
-                    (os.path.getmtime(f) for f in self._parquet_files(path)),
-                    default=0.0,
-                )
-                * 1000
-            ),
             "schema": schema,
         }
         self._tickets.save(topic, **ticket)
@@ -527,25 +540,6 @@ class EventStore:
         ticket = self._ticket(topic)
         return ticket["key_type"] if ticket else None
 
-    @staticmethod
-    def _has_data(path: str) -> bool:
-        """Topic dir contains parquet data — directly or inside ``dt=``
-        partition subdirectories (a freshly provisioned topic is an empty
-        directory — X7 — which parquet cannot infer a schema from)."""
-        if not os.path.isdir(path):
-            return False
-        for entry in os.listdir(path):
-            if entry.endswith(".parquet"):
-                return True
-            sub = os.path.join(path, entry)
-            if (
-                entry.startswith("dt=")
-                and os.path.isdir(sub)
-                and any(f.endswith(".parquet") for f in os.listdir(sub))
-            ):
-                return True
-        return False
-
     def _is_day_partitioned(self, topic: str) -> bool:
         path = self.topic_path(topic)
         return os.path.isdir(path) and any(
@@ -565,11 +559,6 @@ class EventStore:
         """Unordered event scan with optional keyset-resume predicate (F1)
         and, for day-partitioned topics, static partition pruning via
         ``start_day``/``end_day`` (ISO dates, inclusive)."""
-        # heal a half-finished compaction BEFORE shape validation: between
-        # compaction's two renames the topic dir is absent, and validating
-        # first would mis-report "not day-partitioned" forever (no retry
-        # could fix it until some other append/compact healed the dir)
-        self._recover_compaction(topic)
         if (start_day or end_day) and not self._is_day_partitioned(topic):
             raise ValueError(
                 f"topic {topic!r} is not day-partitioned; day-range reads "
@@ -625,23 +614,27 @@ class EventStore:
         ``repartitionByRange(lsn, id)`` so each output file covers a
         contiguous cursor range (maximum min/max-stat pruning for
         keyset predicates) and is sorted within, keeping replay merges
-        cheap. Takes the topic's append mutex (X4) for the swap. The swap
-        is TWO renames (old out, compacted in) — not atomic; a crash
-        between them is healed by ``_recover_compaction`` (roll forward if
-        the compacted directory is complete, roll back otherwise), which
-        every append/read/compact runs first. Readers re-list on next
-        query.
+        cheap.
+
+        Commit: the rewrite reads the files of the log version it started
+        from and runs outside the topic's append mutex (X4), so appends go
+        on meanwhile. Under the mutex it moves its files in and publishes
+        ONE snapshot entry naming them plus every file logged after that
+        version; only then are the replaced files (and any a crashed
+        append left unlogged) deleted. A crash at any point leaves either
+        the old file set or the new one visible, never a mix.
 
         Flat topics keep the ordered-visibility invariant through the
         rewrite: the range-partitioned output files hold disjoint ascending
-        (lsn, id) ranges, and they are republished with fresh clock
-        mtimes/names, so a NEW replication stream over the compacted topic
-        still observes commit order (an EXISTING stream's checkpoint refers
-        to replaced files — restart it after compacting, as with any file
-        rewrite). Day-partitioned topics trade that away by construction:
-        dt= is event-time while (lsn, id) is commit-time, so their files
-        cannot be both day-partitioned and cursor-range-disjoint — day
-        layout is the analytics path, flat the replication path.
+        (lsn, id) ranges and the snapshot names them first, in range order,
+        with modification times below those of every later file, so a NEW
+        replication stream over the compacted topic still observes commit
+        order (an EXISTING stream's checkpoint refers to replaced files —
+        restart it after compacting, as with any file rewrite).
+        Day-partitioned topics trade that away by construction: dt= is
+        event-time while (lsn, id) is commit-time, so their files cannot be
+        both day-partitioned and cursor-range-disjoint — day layout is the
+        analytics path, flat the replication path.
 
         ``cluster_by=(col_a, col_b)``: DAY-PARTITIONED topics only — lay
         files out along the Z-order curve of two columns instead of
@@ -652,21 +645,25 @@ class EventStore:
         Refused on flat topics: their files must stay cursor-range
         disjoint or replication's ordered-visibility invariant breaks.
         """
-        self._recover_compaction(topic)
         path = self.topic_path(topic)
-        if not self._has_data(path):
+        log = os.path.join(path, LOG_DIR)
+        self._append_mutex.acquire(topic)
+        try:
+            _open_log(path)
+        finally:
+            self._append_mutex.release(topic)
+        _, files = _read_log(log)
+        if not files:
             return 0
         day_partitioned = self._is_day_partitioned(topic)
-        df = self.spark.read.schema(self.event_schema(topic)).parquet(path)
+        df = (
+            self.spark.read.schema(self.event_schema(topic))
+            .option("basePath", path)
+            .parquet(*(f["path"] for f in files))
+        )
         if target_files is None:
-            # walk dt= subdirectories too: a day-partitioned topic has NO
-            # top-level parquet files, so a flat listing would see total=0
-            # and always compact to a single file
-            total = sum(os.path.getsize(f) for f in self._parquet_files(path))
+            total = sum(f["size"] for f in files)
             target_files = max(1, total // TARGET_FILE_BYTES)
-        tmp = f"{path}.compacting"
-        ordered = f"{path}.compacted"
-        old = f"{path}.old"
         if cluster_by is not None:
             if not day_partitioned:
                 raise ValueError(
@@ -685,36 +682,46 @@ class EventStore:
             laid_out = df.repartitionByRange(
                 target_files, "lsn", "id"
             ).sortWithinPartitions("lsn", "id")
-        writer = laid_out.write.mode("overwrite")
+        writer = laid_out.write
         if day_partitioned:
             # preserve the established hive layout: dt is a partition column
             # on read, so it must go back out via partitionBy or the rewrite
             # silently flips the topic to flat (breaking later
             # partition_by_day appends and start_day/end_day pruning)
             writer = writer.partitionBy("dt")
-        writer.parquet(tmp)
-        self._append_mutex.acquire(topic)
+        staging = os.path.join(
+            self.root, "_staging", topic, f"compact-{uuid.uuid4().hex}"
+        )
         try:
-            ticket = self._ticket(topic)
-            prev_clock = ticket.get("clock", 0) if ticket else 0
-            clock_start = max(prev_clock, int(time.time() * 1000))
-            for stale in (ordered, old):
-                shutil.rmtree(stale, ignore_errors=True)
-            os.makedirs(ordered)
-            # part index of repartitionByRange output = ascending range
-            self._publish_ordered(tmp, ordered, clock_start)
-            n_files = sum(1 for _ in self._parquet_files(ordered))
-            if ticket:
-                self._tickets.save(
-                    topic, **{**ticket, "clock": clock_start + n_files}
-                )
-            os.rename(path, old)
-            os.rename(ordered, path)
-            shutil.rmtree(old)
-            shutil.rmtree(tmp, ignore_errors=True)
+            writer.parquet(staging)
+            self._append_mutex.acquire(topic)
+            try:
+                latest, live = _read_log(log)
+                replaced = {f["path"] for f in files}
+                if not replaced <= {f["path"] for f in live}:
+                    raise RuntimeError(
+                        f"topic {topic!r} was compacted concurrently; "
+                        "nothing was published - retry the compaction"
+                    )
+                # part index of repartitionByRange output = ascending range
+                compacted = _move_into(staging, path)
+                later = [_local(f["path"]) for f in live if f["path"] not in replaced]
+                # the snapshot takes the next snapshot id, after empty entries
+                snapshot = (latest + 1) // COMPACT_INTERVAL * COMPACT_INTERVAL
+                snapshot += COMPACT_INTERVAL - 1
+                for n in range(latest + 1, snapshot):
+                    _commit(log, n, [], [])
+                named = _stamp(compacted + later, live)
+                _commit(log, snapshot, named, [])
+                keep = {os.path.realpath(p) for p in compacted + later}
+                for f in _disk_files(path):
+                    if os.path.realpath(f) not in keep:
+                        os.remove(f)
+            finally:
+                self._append_mutex.release(topic)
         finally:
-            self._append_mutex.release(topic)
-        return n_files
+            shutil.rmtree(staging, ignore_errors=True)
+        return len(compacted)
 
     INT_TYPES = ("bigint", "int", "smallint", "tinyint")
     FRACTIONAL_TYPES = ("double", "float")
@@ -807,13 +814,13 @@ class EventStore:
 
     @staticmethod
     def _parquet_files(path: str) -> list[str]:
-        """All parquet data files under ``path``, including dt= subdirs."""
-        out = []
-        for dirpath, _dirs, files in os.walk(path):
-            out.extend(
-                os.path.join(dirpath, f) for f in files if f.endswith(".parquet")
-            )
-        return out
+        """The data files a read of ``path`` sees: those its commit log
+        names, or every parquet file under it (dt= subdirs included) where
+        there is no log."""
+        log = os.path.join(path, LOG_DIR)
+        if os.path.isdir(log):
+            return [_local(f["path"]) for f in _read_log(log)[1]]
+        return _disk_files(path)
 
     # ----------------------------------------------------------- metrics
 

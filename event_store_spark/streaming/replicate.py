@@ -12,13 +12,11 @@ Re-expresses the reference's Postgres→Kafka replicator
 | per-topic worker threads (`:174-183`) | one streaming query per topic |
 | advisory-lock single writer (X4, `LockManager.java:45-84` + `LockMonitor.java:52-58`) | :class:`streaming.lock.LockManager` lease: acquire at query start (second writer refused), heartbeat per micro-batch, query failure on loss |
 
-Exactness (X2) without ordered arrival. The reference's DB keyset scan gets
-a consistent ordered snapshot per poll for free; a file stream does not — a
-directory listing racing a multi-file append can catch a LATER file and miss
-an EARLIER one of the same lsn (listings are not atomic snapshots), so any
-filter of the form "(lsn, id) > advancing cursor" can silently drop the
-late-arriving row. Exactly-once is therefore anchored on mechanisms that do
-not depend on arrival order:
+Exactness (X2). Appends are atomic to every reader: a topic's rows become
+visible through one entry of its commit log (`core.store`), and the file
+source picks files up in log order, so micro-batches carry whole appends
+in commit order. Exactly-once across crashes rests on the checkpoint
+lineage:
 
 - **Live lineage** (the streaming checkpoint that produced the stored
   bookkeeping is still in use): the file source's seen-files map already
@@ -38,20 +36,12 @@ not depend on arrival order:
   the consumer's keyset dedupe drops what the broker already has).
 
 Scale: replication never globally sorts — micro-batches arrive in append
-(lsn) order from the file source (`EventStore` publishes files in commit
-order) and `sortWithinPartitions` restores the within-batch (lsn, id) order
-cheaply. Downstream consumers that need total order replay via `(lsn, id)`
-exactly like the reference's consumers. The live path does no per-batch
-filtering or target reads; the recovery anti-join is the only extra cost
-and only while a lost checkpoint is being re-established.
-
-Residual (kafka sink only): if a listing race reorders two files of one
-append across micro-batches, records reach the broker out of (lsn, id)
-order within that window; a consumer deduping by per-partition max cursor
-would drop the late rows. Consumers needing strict exactness under
-concurrent appends should use the order-independent stateful first-seen
-dedup (`streaming/stateful.py`) — the files sink is unaffected (anti-join
-absorption is order-free).
+(lsn) order from the file source (the commit log orders file pickup) and
+`sortWithinPartitions` restores the within-batch (lsn, id) order cheaply.
+Downstream consumers that need total order replay via `(lsn, id)` exactly
+like the reference's consumers. The live path does no per-batch filtering
+or target reads; the recovery anti-join is the only extra cost and only
+while a lost checkpoint is being re-established.
 """
 
 from __future__ import annotations
@@ -195,8 +185,8 @@ class Replicator:
                 "start a second writer (X4)"
             )
         ckpt_id, recovery = self._adopt_lineage(topic)
-        # frozen at query start: an ADVANCING cursor filter can outrun a
-        # file the listing missed; the frozen one cannot (module docstring)
+        # frozen at query start: the cursor the previous lineage reached,
+        # which the recovery filters measure the relisted backlog against
         start_cursor = self.progress.last_cursor(topic) or Cursor.zero()
         reader = spark.readStream.schema(self.store.event_schema(topic))
         if self.max_files_per_trigger:
@@ -335,9 +325,8 @@ class Replicator:
 
     def _absorb_existing(self, topic: str, records: DataFrame) -> DataFrame:
         """Recovery-mode exactness for the files sink: drop batch rows whose
-        (lsn, id) already exists in the target — order-independent, so it is
-        immune to the listing races an advancing-cursor filter is not, and
-        it absorbs orphan directories from crashed runs as committed data.
+        (lsn, id) already exists in the target — order-independent, so it
+        holds however the rerun re-chunks the relisted backlog, and it absorbs orphan directories from crashed runs as committed data.
         The target scan is bounded by the batch's lsn range (pushed to
         parquet footer stats, which the cursor-range-named directories keep
         tight), and reads only the two join columns."""

@@ -10,9 +10,10 @@ the offset commit — re-runs that one batch, so projections into external
 systems must be idempotent per batch id (see `eos.py`); the reference
 avoids the window by putting projection+offset in one DB transaction.
 
-Spark shape: the event table is a file-source streaming DataFrame (new
-parquet files = new events, in append order); processing runs in
-``foreachBatch`` wrapped by :func:`exactly_once_batch`; the offsets table
+Spark shape: the event table is a file-source streaming DataFrame (the
+files each commit-log entry adds = new events, in append order);
+processing runs in ``foreachBatch`` wrapped by
+:func:`exactly_once_batch`; the offsets table
 records the high-water cursor + batch id in one atomic update. The source
 checkpoint gives redelivery-with-same-id; the wrapper gives idempotence.
 
@@ -152,9 +153,9 @@ class Subscription:
         """
 
         ckpt_id, recovery = self._adopt_lineage(topic)
-        # frozen at query start (recovery only): filters the relisted
-        # backlog down to never-processed rows; frozen rather than advancing
-        # for the same listing-race reason as the Replicator
+        # frozen at query start (recovery only): the cursor the previous
+        # lineage reached, which filters the relisted backlog down to
+        # never-processed rows
         start_cursor = self.offsets.get_cursor(topic) or Cursor.zero()
 
         def batch_stats(df: DataFrame):

@@ -442,29 +442,6 @@ def test_append_mutex_breaks_stale_lock(store, spark, tmp_path):
     assert cur.lsn == 1
 
 
-def test_publication_clock_consumes_ticks_per_file_not_row(store, spark):
-    """The append reserves one clock tick per ROW (file count unknown until
-    the write lands) but must reconcile to ticks actually consumed — one per
-    FILE — or sustained high-row appends push published mtimes unboundedly
-    into the future (ADVICE r3)."""
-    import time
-
-    rows = [(f"k{i}", "p", TS) for i in range(500)]
-    t0_ms = int(time.time() * 1000)
-    store.append("clk_events", _payload_df(spark, rows))
-    ticket = store.high_water("clk_events")
-    files = list(EventStore._parquet_files(store.topic_path("clk_events")))
-    # clock advanced by the file count (≤ partitions), not by 500 rows:
-    # it stays within real elapsed time + #files of wall-clock
-    assert ticket["clock"] <= int(time.time() * 1000) + len(files)
-    assert ticket["clock"] >= t0_ms  # still monotone past append start
-    # a second append keeps file-name sequence strictly increasing
-    store.append("clk_events", _payload_df(spark, [("kx", "p", TS)]))
-    names = sorted(os.path.basename(f) for f in
-                   EventStore._parquet_files(store.topic_path("clk_events")))
-    assert len(names) == len(set(names)) == len(files) + 1
-
-
 def test_stale_lock_steal_elects_single_winner(tmp_path):
     """Concurrent breakers of ONE stale lock must not both enter the
     critical section: the steal is a rename (one winner) followed by the
@@ -553,12 +530,23 @@ def test_append_mutex_times_out_on_live_contention(store, spark):
     assert store.append("held_events", _payload_df(spark, [("k", "p", TS)])).lsn == 1
 
 
+def _pickup_order(store, topic):
+    """The topic's data files in the order a file stream source picks them
+    up: modificationTime order in the commit log, which must be the log's
+    own order, without ties."""
+    log = os.path.join(store.topic_path(topic), store_module.LOG_DIR)
+    _, entries = store_module._read_log(log)
+    stamps = [e["modificationTime"] for e in entries]
+    assert stamps == sorted(set(stamps)), "log times must rise strictly"
+    return [store_module._local(e["path"]) for e in entries]
+
+
 def _published_ranges(files):
-    """(mtime, name)-ordered per-file (lsn, id) min/max from parquet footers."""
+    """Per-file (lsn, id) min/max from parquet footers, in ``files`` order."""
     import pyarrow.parquet as pq
 
     out = []
-    for f in sorted(files, key=lambda f: (os.path.getmtime(f), os.path.basename(f))):
+    for f in files:
         md = pq.ParquetFile(f).metadata
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         lo = (float("inf"), float("inf"))
@@ -578,28 +566,17 @@ def test_publication_order_matches_commit_order(store, spark, monkeypatch):
     Replicator/Subscription keyset cursor silently DROPS rows that arrive
     below the cursor. Round-3 regression: two appends within one mtime tick
     interleaved alphabetically (part-00000-<uuidA> < part-00000-<uuidB> <
-    part-00001-<uuidA>) and lost half the events. Pins both orderings the
-    ordered publication provides — mtime sequence and sortable file names —
-    with disjoint, ascending per-file (lsn, id) ranges. A batch under the
-    file-size target is one file, so the target is lowered to keep these
-    appends multi-file."""
+    part-00001-<uuidA>) and lost half the events. Pins the pickup order
+    the commit log gives — strictly rising modification times along the
+    log — with disjoint, ascending per-file (lsn, id) ranges. A batch under
+    the file-size target is one file, so the target is lowered to keep
+    these appends multi-file."""
     monkeypatch.setattr(store_module, "TARGET_FILE_BYTES", 1)
     for b in range(3):  # appends land within the same millisecond
         rows = [(f"k{b}-{i}", f"p{b}-{i}", TS) for i in range(4)]
         store.append("ord_events", _payload_df(spark, rows).repartition(4))
-    files = [
-        os.path.join(store.topic_path("ord_events"), f)
-        for f in os.listdir(store.topic_path("ord_events"))
-        if f.endswith(".parquet")
-    ]
+    files = _pickup_order(store, "ord_events")
     assert len(files) > 3  # the regression needs multi-file appends
-    # mtime order, name order, and footer-stat order must all agree
-    by_mtime = sorted(files, key=os.path.getmtime)
-    by_name = sorted(files, key=os.path.basename)
-    assert [os.path.basename(f) for f in by_mtime] == [
-        os.path.basename(f) for f in by_name
-    ]
-    assert len({os.path.getmtime(f) for f in files}) == len(files)  # no ties
     ranges = _published_ranges(files)
     for (prev_lo, prev_hi), (lo, hi) in zip(ranges, ranges[1:]):
         assert prev_hi < lo, f"file ranges overlap or regress: {prev_hi} !< {lo}"
@@ -619,9 +596,8 @@ def test_publication_order_day_partitioned(store, spark):
             _payload_df(spark, rows).repartition(2),
             partition_by_day=True,
         )
-    files = store._parquet_files(store.topic_path("ordday_events"))
+    files = _pickup_order(store, "ordday_events")
     assert len(files) > 2
-    assert len({os.path.getmtime(f) for f in files}) == len(files)
     ranges = _published_ranges(files)
     for (prev_lo, prev_hi), (lo, hi) in zip(ranges, ranges[1:]):
         assert prev_hi < lo, f"file ranges overlap or regress: {prev_hi} !< {lo}"
@@ -634,26 +610,23 @@ def test_publication_order_day_partitioned(store, spark):
 
 def test_compaction_republishes_in_commit_order(store, spark):
     """Flat-topic compaction must keep the ordered-visibility invariant:
-    the rewritten files carry fresh, strictly increasing clock mtimes/names
-    and disjoint ascending (lsn, id) ranges, so a NEW replication stream
-    over the compacted topic still observes commit order."""
+    the snapshot names the rewritten files with strictly rising
+    modification times and disjoint ascending (lsn, id) ranges, so a NEW
+    replication stream over the compacted topic still observes commit
+    order."""
     for b in range(3):
         rows = [(f"k{b}-{i}", f"p{b}-{i}", TS) for i in range(4)]
         store.append("cord_events", _payload_df(spark, rows).repartition(4))
     n = store.compact("cord_events", target_files=3)
     assert n == 3
-    files = store._parquet_files(store.topic_path("cord_events"))
-    assert len({os.path.getmtime(f) for f in files}) == len(files)
-    assert sorted(files, key=os.path.getmtime) == sorted(
-        files, key=lambda f: os.path.basename(f)
-    )
+    files = _pickup_order(store, "cord_events")
+    assert len(files) == 3
     ranges = _published_ranges(files)
     for (_, prev_hi), (lo, _) in zip(ranges, ranges[1:]):
         assert prev_hi < lo
-    # a later append keeps publishing past the compacted files' clocks
+    # a later append keeps publishing past the compacted files' times
     store.append("cord_events", _payload_df(spark, [("kz", "pz", TS)]))
-    files = store._parquet_files(store.topic_path("cord_events"))
-    ranges = _published_ranges(files)
+    ranges = _published_ranges(_pickup_order(store, "cord_events"))
     assert ranges[-1][0][0] == 4  # newest lsn is last in pickup order
 
 
@@ -669,46 +642,6 @@ def _seed_topic(store, spark, topic="rc_events", n=6):
         spark.createDataFrame(rows, "key string, payload string, timestamp timestamp"),
     )
     return topic
-
-
-def test_compaction_crash_between_renames_rolls_forward(store, spark):
-    """Crash AFTER `rename(path, old)` with a complete `.compacted` dir:
-    recovery finishes the swap — no committed row lost, no manual step."""
-    import shutil
-
-    topic = _seed_topic(store, spark, "rf_events")
-    path = store.topic_path(topic)
-    before = sorted((r.id, r.payload) for r in store.read_events(topic).collect())
-
-    # build a complete compacted dir exactly as compact() would, then crash
-    # between the two renames: path gone, data stranded in .old
-    df = spark.read.parquet(path)
-    tmp, ordered, old = f"{path}.compacting", f"{path}.compacted", f"{path}.old"
-    df.repartitionByRange(1, "lsn", "id").sortWithinPartitions("lsn", "id") \
-        .write.mode("overwrite").parquet(tmp)
-    os.makedirs(ordered)
-    store._publish_ordered(tmp, ordered, 10_000_000)
-    shutil.rmtree(tmp)
-    os.rename(path, old)
-
-    got = sorted((r.id, r.payload) for r in store.read_events(topic).collect())
-    assert got == before            # roll-forward healed the swap
-    assert not os.path.exists(old)  # debris cleared
-    assert os.path.isdir(path)
-
-
-def test_compaction_crash_before_publish_rolls_back(store, spark):
-    """Crash with `.old` present but NO usable `.compacted`: recovery
-    restores the original directory."""
-    topic = _seed_topic(store, spark, "rb_events")
-    path = store.topic_path(topic)
-    before = sorted((r.id, r.payload) for r in store.read_events(topic).collect())
-    os.rename(path, f"{path}.old")  # simulated torn swap, nothing to roll forward
-
-    got = sorted((r.id, r.payload) for r in store.read_events(topic).collect())
-    assert got == before
-    assert os.path.isdir(path)
-    assert not os.path.exists(f"{path}.old")
 
 
 def test_staging_sweep_cannot_cross_topics(store, spark):
@@ -904,14 +837,15 @@ def _jobs(spark):
 def test_small_flat_append_writes_one_file(store, spark, monkeypatch):
     """A flat batch under the file-size target lands as ONE file, however
     many partitions it arrives in; above the target it keeps one file per
-    partition, published in (lsn, id) order."""
+    partition, logged in (lsn, id) order."""
     rows = [(f"k{i}", f"p{i}", TS) for i in range(8)]
     store.append("one_events", _payload_df(spark, rows).repartition(4))
     assert len(_parquet_in(store.topic_path("one_events"))) == 1
 
     monkeypatch.setattr(store_module, "TARGET_FILE_BYTES", 1)
     store.append("one_events", _payload_df(spark, rows).repartition(4))
-    files = _parquet_in(store.topic_path("one_events"))
+    assert len(_parquet_in(store.topic_path("one_events"))) == 5
+    files = _pickup_order(store, "one_events")
     assert len(files) == 5
     ranges = _published_ranges(files)
     for (_, prev_hi), (lo, _) in zip(ranges, ranges[1:]):
