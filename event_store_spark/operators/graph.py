@@ -342,9 +342,7 @@ def label_propagation(
     # checkpoint RDD calls queryExecution.toRdd, which under AQE
     # materializes every upstream stage as separate sequential jobs
     # DURING PLAN CONSTRUCTION — three checkpoints made the 2-round kNN
-    # query pay ~1.3 s of construction per invocation and disqualified
-    # it from the registry plan memo (a job during construction refuses
-    # the memo, by design).
+    # query pay ~1.3 s of construction per invocation.
     pure = rounds <= checkpoint_every
     base = nodes.select("node", F.col("label").alias("_seed"))
     e = edges.select("src", "dst")

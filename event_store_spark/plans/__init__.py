@@ -31,7 +31,7 @@ from event_store_spark.plans import graphq as _graphq  # noqa: F401,E402
 from event_store_spark.plans import pq as _pq  # noqa: F401,E402
 from event_store_spark.plans import incremental as _incremental  # noqa: F401,E402
 from event_store_spark.plans import pipeline9 as _pipeline9  # noqa: F401,E402
-from event_store_spark.plans import ir as _ir  # noqa: F401,E402
+from event_store_spark.plans import bm25 as _bm25  # noqa: F401,E402
 from event_store_spark.plans import layout as _layout  # noqa: F401,E402
 from event_store_spark.plans import cep_queries as _cep_queries  # noqa: F401,E402
 from event_store_spark.plans import pipeline10 as _pipeline10  # noqa: F401,E402

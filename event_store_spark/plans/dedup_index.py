@@ -415,8 +415,6 @@ class DedupIndex:
         readable and the append idempotent."""
         import shutil
 
-        from event_store_spark.plans.registry import forget_all_plans
-
         sig = _signatures(batch_docs, self.kind)
         if batch_id is None:
             if sig.isEmpty():
@@ -432,9 +430,6 @@ class DedupIndex:
                 sig.write.mode("overwrite").partitionBy(
                     _PART_COL[self.kind]
                 ).parquet(seg)
-        # a memoized plan pinned the segment listing it first resolved;
-        # evict so the next probe sees this one
-        forget_all_plans(self.spark)
 
     def compact(self) -> None:
         """Merge base + every segment dir into a fresh generation and

@@ -21,9 +21,6 @@ shapes share that commit point:
   reader that resolved the pointer pre-flip (or holds a lazily-listed
   DataFrame over the old directory) finishes its scan instead of dying
   on a mid-read rmtree. Generations ≤ N-2 and crash orphans are swept.
-  A publish also evicts the plan memo: a memoized analyzed plan pins the
-  file listing it first resolved, so serving it after a flip would read
-  the retired generation.
 - `VersionedTable` — a streaming-maintained table published as one
   ``_v<batch_id>`` directory per micro-batch behind a ``_CURRENT``
   pointer: `ContinuousRollup`, `CdcMaterializer`, `JoinAggregateView`
@@ -44,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from event_store_spark.core.state import atomic_write
-from event_store_spark.plans.registry import forget_all_plans
 
 #: superseded `VersionedTable` versions retained beside the current one
 _KEEP_VERSIONS = 2
@@ -145,7 +141,6 @@ class GenerationPair:
             self.flip(new_dir, new_meta)
             if meta is not None and new_meta != self.meta_name:
                 atomic_write(os.path.join(self.path, self.meta_name), meta)
-        forget_all_plans(spark)
         return out
 
     def flip(self, new_dir: str, new_meta: str) -> None:

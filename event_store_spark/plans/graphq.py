@@ -565,7 +565,7 @@ def label_propagation_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits the influence edges. With LP_ROUNDS (2) at or below
     `label_propagation`'s ``checkpoint_every``, the operator takes its
     pure lazy path: no checkpoint and no cache, so the whole query is
-    one plan the registry memoizes. Each round is one labeled-edge join,
+    one lazy plan. Each round is one labeled-edge join,
     ONE `mode(label, deterministic=true)` aggregate per dst (majority,
     ties to the smallest label) and one left join under the clamped
     seeds (see `operators.graph.label_propagation`). All state is

@@ -36,7 +36,7 @@ from event_store_spark.functions.text import (
     word_ngrams,
 )
 from event_store_spark.functions.vectors import as_double, cosine, dot, norm
-from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
+from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table
 
@@ -1634,6 +1634,5 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("sim", 4).alias("sim"),
             F.col("rk").cast("int").alias("rk"),
         )
-        # repartition(1): keeps the per-qid ranking window at width
-        .transform(lambda d: filtered_sort(d, "qid", "rk"))
+        .orderBy("qid", "rk")
     )

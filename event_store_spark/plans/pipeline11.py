@@ -349,8 +349,7 @@ def source_similarity_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # up in the driver's per-query time). The pair catalog is an
         # IN-PLAN literal array over range(1) — spliced as ONE SQL
         # string, not k² Column objects, per the SimHash py4j lesson —
-        # and the query is now a pure lazy plan, so the registry
-        # memoizes its construction too. The final basis-point
+        # and the query is now a pure lazy plan. The final basis-point
         # projection is the IDENTICAL Spark expression, so emitted
         # values are unchanged.
         counts, sources = got

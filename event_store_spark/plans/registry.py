@@ -3,47 +3,12 @@
 Contract (driver verify): each Spark callable takes ``(spark, sf_dir)`` and
 returns a DataFrame whose column names match the oracle SQL's aliases — the
 driver sorts columns by name before value-hashing, so every computed column
-is aliased identically on both sides.
-
-Plan memoization (r12): a registered query is a PURE PLAN BUILDER for the
-overwhelming majority of the inventory — the Python body only composes
-DataFrame lineage, and every call re-pays py4j round trips plus expression
-construction for an identical plan (measured: ~12 s of the sf0.1 suite's
-~80 s engine total is repeated plan construction, median ~50 ms/query).
-`ann_recall_report` has memoized its lazy plan since round 7 with the
-verdict-accepted "memoizes plan, not results" contract; the registry now
-applies the same contract inventory-wide, guarded twice so it can never
-become result caching:
-
-- source guard: the query function's own source must contain no eager
-  marker (collect/count/head/toPandas/localCheckpoint/cache/
-  createDataFrame) — queries that fold driver-side state at construction
-  (mad_outliers' medians, pagerank's edge fold, the SimHash checkpoint)
-  are rebuilt on every call, unmemoized;
-- runtime guard: every construction runs with a before/after Spark job
-  probe (StatusTracker); a construction during which ANY job started —
-  an eager helper the source guard can't see — is handed back
-  unmemoized (a call that merely warmed an already-memoized shared
-  build memoizes on its next, job-free construction).
-
-What is stored is the ANALYZED logical plan; every memo hit returns a
-FRESH `select("*")` wrapper over it — a new QueryExecution, so nothing
-physical (AQE's materialized query stages, shuffle outputs) can leak
-between invocations: each call re-optimizes, re-plans and re-executes
-from the parquet inputs. Handing back the same DataFrame object would
-let a second collect() reuse the first execution's already-materialized
-shuffle stages — precisely the cross-rep result reuse this design must
-exclude. Pinned by
-tests/test_plan_shape.py::test_registry_memoizes_plans_not_results.
+is aliased identically on both sides. Each call builds a fresh lazy plan.
 """
 
 from __future__ import annotations
 
-import inspect
-import os
-import warnings
 from collections.abc import Callable
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,131 +17,12 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-#: eager-construction markers: any hit in the query function's source
-#: excludes it from plan memoization (conservative — a false positive
-#: only costs the old per-call construction). Regexes, not substrings:
-#: `F.count(expr)` / `F.first(expr)` are lazy aggregate EXPRESSIONS and
-#: must not match, while the eager DataFrame methods are written with
-#: empty parens (`.count()`, `.first()`).
-_EAGER_MARKERS = (
-    r"\.collect\(",
-    r"\.count\(\)",
-    r"\.head\(",
-    r"\.take\(",
-    r"\.first\(\)",
-    r"\.toPandas\(",
-    r"localCheckpoint",
-    r"\.cache\(",
-    r"\.persist\(",
-    r"createDataFrame",
-)
-
-#: set once `_jobs_seen` has warned that its total-job probe fell back
-_PROBE_FALLBACK_WARNED = False
-
-#: per-session plan memo: {session: {(name, sf_dir): DataFrame}}
-_PLAN_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
-def _source_is_lazy(fn: QueryFn) -> bool:
-    import re
-
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):  # pragma: no cover - source unavailable
-        return False
-    return not any(re.search(m, src) for m in _EAGER_MARKERS)
-
-
-def _jobs_seen(spark: SparkSession) -> tuple:
-    # every job regardless of job group (ADVICE r12: getJobIdsForGroup(None)
-    # only sees default-group jobs, so a caller that wraps construction in
-    # setJobGroup could slip an eager build past the probe): fold the
-    # AppStatusStore's TOTAL job count (group-independent, one py4j call)
-    # into the probe value next to the default-group high-water id, so a
-    # change in either refuses the memo
-    tracker = spark.sparkContext.statusTracker()
-    ids = tracker.getJobIdsForGroup(None)
-    hi = max(ids) if ids else -1
-    try:
-        total = (
-            spark.sparkContext._jsc.sc()  # noqa: SLF001
-            .statusStore()
-            .jobsList(None)
-            .size()
-        )
-    except Exception as exc:  # internal API drift
-        global _PROBE_FALLBACK_WARNED
-        if not _PROBE_FALLBACK_WARNED:
-            _PROBE_FALLBACK_WARNED = True
-            warnings.warn(
-                "plan memo job probe cannot read the status store's total "
-                f"job count ({exc!r}); it now sees default-group jobs only",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        total = 0
-    return (hi, total)
-
-
-def forget_plan(spark: SparkSession, name: str) -> None:
-    """Drop every memoized plan for ``name`` in this session — for tests
-    that monkeypatch a plan constant and need the next call to rebuild."""
-    memo = _PLAN_MEMO.get(spark)
-    if memo:
-        for key in [k for k in memo if k[0] == name]:
-            del memo[key]
-
-
-def forget_all_plans(spark: SparkSession) -> None:
-    """Evict every memoized plan for this session.
-
-    Called by ``generations.GenerationPair.publish`` (every index
-    generation) and by the two segment appends (``DedupIndex.append``,
-    ``PostingsIndex.append``): a memoized ANALYZED plan pins the
-    parquet file listing and generation paths resolved at first
-    construction, so serving it after maintenance would silently read
-    the retired generation (VERDICT r12 "what's wrong" #3). Eviction
-    only costs the next call one re-construction.
-    """
-    memo = _PLAN_MEMO.get(spark)
-    if memo:
-        memo.clear()
-
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query (and its DuckDB oracle, if SQL-expressible)."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if _source_is_lazy(fn) and not os.environ.get(
-            "SPARK_GRAFT_NO_PLAN_MEMO"
-        ):
-
-            def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-                memo = _PLAN_MEMO.setdefault(spark, {})
-                key = (name, sf_dir)
-                got = memo.get(key)
-                if got is not None:
-                    # fresh QueryExecution per call (module docstring)
-                    return got.select("*")
-                before = _jobs_seen(spark)
-                df = fn(spark, sf_dir)
-                if _jobs_seen(spark) != before:
-                    # an eager helper ran a job during THIS construction —
-                    # don't memoize it (billing driver-side build work
-                    # once would misattribute per-rep cost). A call whose
-                    # construction only warmed an already-memoized shared
-                    # build memoizes on the next, job-free call.
-                    return df
-                memo[key] = df
-                return df
-
-            wrapped.__name__ = fn.__name__
-            wrapped.__doc__ = fn.__doc__
-            wrapped.__wrapped__ = fn
-            QUERIES[name] = wrapped
-        else:
-            QUERIES[name] = fn
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
         return fn

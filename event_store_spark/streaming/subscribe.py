@@ -175,10 +175,12 @@ class Subscription:
                 # batch-id-keyed projection with already-applied data would
                 # collide with the old lineage's keys
                 df = df.where(keyset_after(start_cursor)).persist()
-                stats = batch_stats(df)
-                if stats.n:
-                    processor(df, batch_id)
-                df.unpersist()
+                try:
+                    stats = batch_stats(df)
+                    if stats.n:
+                        processor(df, batch_id)
+                finally:
+                    df.unpersist()
             else:
                 # persist: the processor's action and the stats aggregate
                 # both consume the batch — without it the source files are

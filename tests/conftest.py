@@ -17,6 +17,27 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def jobs_started(spark):
+    """A counter of the Spark jobs this session has started, in any job
+    group: the DAGScheduler's total of submitted jobs, read after stopping
+    any stray streaming query (its triggers are jobs too). No fallback: the
+    fixture first checks that the counter is an int that moves when a job
+    runs, so an internal API drift fails the calling test loudly."""
+
+    def count() -> int:
+        for query in spark.streams.active:
+            query.stop()
+        n = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+        assert type(n) is int, f"job counter is {type(n)}, not int"
+        return n
+
+    n = count()
+    spark.range(1).count()
+    assert count() > n, "job counter did not move when a job ran"
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

@@ -234,29 +234,27 @@ def test_winnow_append_compact_and_stoplist(spark, docs, tmp_path):
         di.WINNOW_MAX_FP_DOCS = old
 
 
-def test_append_and_rebuild_evict_memoized_plans(spark, docs, tmp_path):
-    """A memoized plan pins the signature listing it was built over;
-    append (a new segment) and a rebuild (a generation flip) both evict
-    the session's plan memo, so a registered query sees the change."""
-    from event_store_spark.plans.registry import _PLAN_MEMO, QUERIES, register
+def test_registered_query_sees_append_and_rebuild(spark, docs, tmp_path):
+    """A registered query builds a fresh plan on every call, so it sees
+    the segment an append adds and the generation a rebuild flips to."""
+    from event_store_spark.plans.registry import QUERIES, register
 
     path = str(tmp_path / "sh")
     base = docs.where(~F.col("source").isin(NEW_SOURCE, "src2"))
     DedupIndex.build(spark, base, path, "simhash64")
-    name, key = "test_dedup_signatures", ("test_dedup_signatures", SF)
+    name = "test_dedup_signatures"
     register(name)(lambda s, sf: DedupIndex.open(s, path).signatures())
     try:
-        stale = QUERIES[name](spark, SF)
-        _PLAN_MEMO.setdefault(spark, {})[key] = stale  # memoized pre-append
-        n_base = stale.count()
+        n_base = QUERIES[name](spark, SF).count()
         DedupIndex.open(spark, path).append(docs.where(F.col("source") == "src2"), batch_id=0)
         n_grown = DedupIndex.open(spark, path).signatures().count()
         assert n_grown > n_base
         assert QUERIES[name](spark, SF).count() == n_grown
 
-        _PLAN_MEMO.setdefault(spark, {})[key] = QUERIES[name](spark, SF)
-        DedupIndex.build(spark, base, path, "simhash64")  # flips a generation
-        assert key not in _PLAN_MEMO.get(spark, {})
+        # a rebuild over half the base flips a generation
+        DedupIndex.build(spark, base.where(F.col("doc_id") % 2 == 0), path, "simhash64")
+        n_rebuilt = DedupIndex.open(spark, path).signatures().count()
+        assert n_rebuilt < n_grown
+        assert QUERIES[name](spark, SF).count() == n_rebuilt
     finally:
         QUERIES.pop(name, None)
-        _PLAN_MEMO.get(spark, {}).pop(key, None)

@@ -823,17 +823,6 @@ def _parquet_in(path):
     ]
 
 
-def _jobs(spark):
-    """The registry memo's job probe, after the listener bus has caught up
-    with every job already started."""
-    from event_store_spark.plans.registry import _jobs_seen
-
-    for query in spark.streams.active:  # a stray query's triggers are jobs too
-        query.stop()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return _jobs_seen(spark)
-
-
 def test_small_flat_append_writes_one_file(store, spark, monkeypatch):
     """A flat batch under the file-size target lands as ONE file, however
     many partitions it arrives in; above the target it keeps one file per
@@ -856,15 +845,15 @@ def test_small_flat_append_writes_one_file(store, spark, monkeypatch):
         assert sorted(r.payload for r in got if r.lsn == lsn) == [f"p{i}" for i in range(8)]
 
 
-def test_ticketed_reads_start_no_job(store, spark):
+def test_ticketed_reads_start_no_job(store, spark, jobs_started):
     """The append records the row schema in the ticket, so reading a
     ticketed topic plans without a footer-inference (or key-type) job."""
     store.append("nojob_events", _payload_df(spark, [("a", "1", TS), ("b", "2", TS)]))
-    before = _jobs(spark)
+    before = jobs_started()
     plain = store.read_events("nojob_events")
     typed = store.read_events("nojob_events", typed_key=True)
     ordered = store.replay("nojob_events", after=Cursor(1, -1))
-    assert _jobs(spark) == before
+    assert jobs_started() == before
     assert plain.count() == 2 and ordered.count() == 2
     assert sorted(r.key_view for r in typed.collect()) == ["a", "b"]
     assert plain.schema == store.event_schema("nojob_events")
@@ -882,7 +871,7 @@ def test_append_with_different_schema_refused(store, spark):
     assert [r.payload for r in store.read_events("schema_events").collect()] == ["1"]
 
 
-def test_pre_schema_ticket_infers_schema_once(store, spark):
+def test_pre_schema_ticket_infers_schema_once(store, spark, jobs_started):
     """A ticket saved without a row schema (written before schemas were
     recorded) keeps its counters and gains the schema from one footer
     read; later reads run no job."""
@@ -894,6 +883,6 @@ def test_pre_schema_ticket_infers_schema_once(store, spark):
     assert store._tickets.get("legacy_events")["schema"] is None
     assert store.event_schema("legacy_events") == store.read_events("legacy_events").schema
     assert store.high_water("legacy_events") == ticket
-    before = _jobs(spark)
+    before = jobs_started()
     store.read_events("legacy_events")
-    assert _jobs(spark) == before
+    assert jobs_started() == before

@@ -5,8 +5,8 @@
   readers on the previous generation, a retry publishes, and GC then
   leaves at most the N-1 generation (pairs) or current + 2 versions
   (versioned tables) on disk;
-- no module outside `generations.py` can publish a pointer or evict the
-  plan memo on its own (a static check, no Spark).
+- no module outside `generations.py` can publish a pointer on its own
+  (a static check, no Spark).
 """
 
 from __future__ import annotations
@@ -405,31 +405,7 @@ def test_crash_at_publish_keeps_previous_generation(
 
 #: the only modules that may write a publish pointer
 _POINTER_WRITERS = {"plans/generations.py", "core/state.py"}
-#: the only functions outside generations.py that may evict the plan
-#: memo: segment appends, which write no generation
-_EVICTORS = {
-    ("plans/generations.py", "publish"),
-    ("plans/dedup_index.py", "append"),
-    ("plans/ir.py", "append"),
-}
 _POINTERS = {"_CURRENT", "CELLS", "CODES", "LIVE"}
-
-
-def _calls(tree):
-    """(enclosing function name, call node) for every call in ``tree``."""
-    out = []
-
-    def visit(node, fn):
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(child, child.name)
-            else:
-                if isinstance(child, ast.Call):
-                    out.append((fn, child))
-                visit(child, fn)
-
-    visit(tree, None)
-    return out
 
 
 def _callee(call):
@@ -437,24 +413,20 @@ def _callee(call):
     return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
 
 
-def test_only_generations_publishes_and_evicts():
+def test_only_generations_publishes():
     """A module outside generations.py names a publish pointer only as the
     ``pointer=`` of a `GenerationPair`, so it cannot write (or stage) one
-    itself, and only a publish or a segment append evicts the plan memo.
-    A new artifact kind therefore cannot skip the fsync or the eviction."""
-    evictors, pointers = set(), set()
+    itself. A new artifact kind therefore cannot skip the fsync."""
+    pointers = set()
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        tree = ast.parse(path.read_text())
-        for fn, call in _calls(tree):
-            if _callee(call) == "forget_all_plans":
-                evictors.add((rel, fn))
         if rel in _POINTER_WRITERS:
             continue
+        tree = ast.parse(path.read_text())
         handed = {
             id(kw.value)
-            for _, call in _calls(tree)
-            if _callee(call) == "GenerationPair"
+            for call in ast.walk(tree)
+            if isinstance(call, ast.Call) and _callee(call) == "GenerationPair"
             for kw in call.keywords
             if kw.arg == "pointer"
         }
@@ -466,5 +438,27 @@ def test_only_generations_publishes_and_evicts():
                 and id(node) not in handed
             ):
                 pointers.add((rel, node.lineno, node.value))
-    assert evictors == _EVICTORS
     assert not pointers, pointers
+
+
+def test_index_maintenance_leaves_query_plans_alone():
+    """Artifact maintenance publishes files and nothing else: the modules
+    that write index generations or segments take nothing from the query
+    registry, and no module under the package reads Spark's private
+    status store."""
+    for rel in ("plans/generations.py", "plans/dedup_index.py", "plans/ir.py"):
+        taken = {
+            alias.name
+            for node in ast.walk(ast.parse((PKG / rel).read_text()))
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            for alias in node.names
+            if alias.name.endswith("registry")
+            or (getattr(node, "module", None) or "").endswith("registry")
+        }
+        assert not taken, (rel, taken)
+    readers = [
+        path.relative_to(PKG).as_posix()
+        for path in sorted(PKG.rglob("*.py"))
+        if "statusStore" in path.read_text()
+    ]
+    assert not readers, readers

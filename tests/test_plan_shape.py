@@ -700,33 +700,27 @@ def test_simhash_bucket_guard_trips_loudly(spark, sf_correct, monkeypatch):
     dedup_embedding guard discipline applied to SimHash)."""
     import pytest
 
-    from event_store_spark.plans.registry import forget_plan
-
-    # the guard ceiling is a plan constant read at construction: drop any
-    # memoized plan built under the default ceiling, and drop the
-    # poisoned one afterwards so later tests rebuild under the default
-    forget_plan(spark, "dedup_simhash64")
+    # the guard ceiling is a plan constant read at construction
     monkeypatch.setenv("SPARK_GRAFT_SIMHASH_MAX_BUCKET", "1")
-    try:
-        with pytest.raises(Exception, match="SPARK_GRAFT_SIMHASH_MAX_BUCKET"):
-            QUERIES["dedup_simhash64"](spark, sf_correct).collect()
-    finally:
-        forget_plan(spark, "dedup_simhash64")
+    with pytest.raises(Exception, match="SPARK_GRAFT_SIMHASH_MAX_BUCKET"):
+        QUERIES["dedup_simhash64"](spark, sf_correct).collect()
 
 
 def test_ann_recall_report_memoizes_plan_not_results(spark, sf_correct):
     """VERDICT r7 #4: the seven-subtree union costs ~1.3 s of py4j plan
     construction per call; the LAZY DataFrame is memoized per (session,
-    sf_dir) and re-executed. Same object back, values stable, and the
-    shared cached embeddings scan is seeded (InMemory in the plan)."""
-    from event_store_spark.plans.evalq import ann_recall_report
+    sf_dir); a hit is a fresh QueryExecution over it, so nothing physical
+    (AQE's materialized query stages) carries over between calls. Values
+    stable, and the shared cached embeddings scan is seeded (InMemory in
+    the plan)."""
+    from event_store_spark.plans.evalq import ANN_METHODS, ann_recall_report
 
     df1 = ann_recall_report(spark, sf_correct)
     df2 = ann_recall_report(spark, sf_correct)
-    assert df2 is df1  # plan memo hit
-    from event_store_spark.plans.evalq import ANN_METHODS
-
+    assert df2 is not df1
     r1 = sorted((r.method, r.hits) for r in df1.collect())
+    # df1 just ran; df2's plan must still be unexecuted
+    assert "isFinalPlan=false" in df2._jdf.queryExecution().executedPlan().toString()
     r2 = sorted((r.method, r.hits) for r in df2.collect())
     assert r1 == r2 and len(r1) == len(ANN_METHODS)
     plan = df1._jdf.queryExecution().executedPlan().toString()
@@ -834,10 +828,6 @@ def test_contamination_grouped_carries_set_size_guard(spark, sf_correct, monkeyp
     plan = _plan(spark, sf_correct, "contamination_grouped")
     assert "raise_error" in plan
     monkeypatch.setattr(pl, "CONTAMINATION_MAX_DOCS_PER_GRAM", 1)
-    # the patched cap must reach a FRESH plan, not the session's memo
-    from event_store_spark.plans.registry import forget_plan
-
-    forget_plan(spark, "contamination_grouped")
     with pytest.raises(Exception, match="deny-list"):
         QUERIES["contamination_grouped"](spark, sf_correct).collect()
 
@@ -890,93 +880,33 @@ def test_knn_blas_single_bucket_exchange(spark, sf_correct):
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 
-def test_registry_memoizes_plans_not_results(spark, sf_correct):
-    """r12: the registry hands back the SAME lazy DataFrame for repeated
-    calls of a pure plan-builder query (construction is not re-paid per
-    rep), while queries with eager construction — driver folds, local
-    checkpoints — are rebuilt every call. Values are identical either
-    way; what is memoized is an unexecuted plan."""
-    from event_store_spark.plans import QUERIES
-    from event_store_spark.plans.registry import _source_is_lazy
-
-    from event_store_spark.plans.registry import _PLAN_MEMO
-
-    # first construction may run footer/listing jobs (runtime guard says
-    # "not yet"); the memo lands on the first JOB-FREE construction
-    df1 = QUERIES["q12"](spark, sf_correct)  # noqa: F841 — may warm listing
-    df2 = QUERIES["q12"](spark, sf_correct)
-    assert ("q12", sf_correct) in _PLAN_MEMO.get(spark, {})  # memoized
-    # execute the STORED DataFrame so any physical-state leak would show
-    r1 = sorted(tuple(str(x) for x in r) for r in df2.collect())
-
-    # a memo hit is a FRESH QueryExecution over the stored analyzed plan:
-    # a new object whose plan is unexecuted even though the stored one
-    # just ran — AQE query stages cannot carry over between invocations
-    df3 = QUERIES["q12"](spark, sf_correct)
-    assert df3 is not df2
-    assert "isFinalPlan=false" in df3._jdf.queryExecution().executedPlan().toString()
-    r2 = sorted(tuple(str(x) for x in r) for r in df3.collect())
-    assert r1 == r2 and len(r1) > 0  # re-executed, same values
-
-    # eager constructions stay unmemoized: mad_outliers collects its
-    # per-type medians at build time
-    d1 = QUERIES["mad_outliers"](spark, sf_correct)
-    d2 = QUERIES["mad_outliers"](spark, sf_correct)
-    assert d2 is not d1
-
-    # the source guard sees pagerank's driver-side edge collect; the
-    # SimHash queries became pure plan builders in r13 (their signature
-    # build moved into the memoized `_simhash_blocked*` index builds)
-    from event_store_spark.plans.graphq import pagerank_events
-    from event_store_spark.plans.llm import dedup_simhash
-
-    assert not _source_is_lazy(pagerank_events)
-    assert _source_is_lazy(dedup_simhash)
-
-
-def test_registry_evicts_plans_on_index_maintenance(spark, sf_correct, tmp_path):
-    """r13 (VERDICT r12 staleness hazard): a memoized analyzed plan pins
-    the parquet listing resolved at first construction; every artifact-
-    maintenance path (save_*_index / compact) must evict the session's
-    plan memo so the next call re-resolves the new generation."""
-    from event_store_spark.plans import QUERIES
-    from event_store_spark.plans.registry import _PLAN_MEMO
-
-    QUERIES["q12"](spark, sf_correct)
-    QUERIES["q12"](spark, sf_correct)
-    assert ("q12", sf_correct) in _PLAN_MEMO.get(spark, {})
-
-    from event_store_spark.plans.pipeline5 import save_sq8_index
-
-    save_sq8_index(spark, sf_correct, str(tmp_path / "sq8"))
-    assert _PLAN_MEMO.get(spark, {}) == {}  # evicted, will rebuild
-
-    # rebuilt plans still serve identical values afterwards
-    rows = QUERIES["q12"](spark, sf_correct).collect()
-    assert len(rows) > 0
-
-
-def test_jobs_probe_warns_once_on_fallback(monkeypatch):
-    """When the status store's total-job count cannot be read (internal
-    API drift), the memo's job probe falls back to default-group jobs
-    only — and says so once instead of degrading silently."""
-    import types
-    import warnings
-
-    import pytest
-
+def test_registry_stores_query_functions():
+    """The registry keeps each query function itself: no wrapper sits
+    between a caller and the plan builder."""
     from event_store_spark.plans import registry
 
-    class Context:
-        _jsc = None  # `_jsc.sc()` raises, as on an API drift
+    def probe(spark, sf_dir):
+        raise AssertionError("never called")
 
-        def statusTracker(self):
-            return types.SimpleNamespace(getJobIdsForGroup=lambda group: [3, 5])
+    try:
+        assert registry.register("_registry_probe")(probe) is probe
+        assert QUERIES["_registry_probe"] is probe
+    finally:
+        QUERIES.pop("_registry_probe", None)
+    for name, fn in QUERIES.items():
+        assert fn.__module__ != registry.__name__, name
+        assert not hasattr(fn, "__wrapped__"), name
 
-    fake = types.SimpleNamespace(sparkContext=Context())
-    monkeypatch.setattr(registry, "_PROBE_FALLBACK_WARNED", False)
-    with pytest.warns(RuntimeWarning, match="default-group jobs only"):
-        assert registry._jobs_seen(fake) == (5, 0)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        assert registry._jobs_seen(fake) == (5, 0)
+
+def test_registered_query_builds_fresh_plan_per_call(spark, sf_correct):
+    """Each call of a registered query builds a new lazy plan, so nothing
+    physical (AQE's materialized query stages) carries over between calls:
+    the second plan is unexecuted after the first one ran, and both give
+    the same values."""
+    df1 = QUERIES["q12"](spark, sf_correct)
+    df2 = QUERIES["q12"](spark, sf_correct)
+    assert df2 is not df1
+    r1 = sorted(tuple(str(x) for x in r) for r in df1.collect())
+    assert "isFinalPlan=false" in df2._jdf.queryExecution().executedPlan().toString()
+    r2 = sorted(tuple(str(x) for x in r) for r in df2.collect())
+    assert r1 == r2 and len(r1) > 0

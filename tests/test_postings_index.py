@@ -193,25 +193,21 @@ def test_streaming_maintainer_real_stream(spark, corpus, tmp_path):
     assert idx.stats() == whole.stats()
 
 
-def test_append_evicts_memoized_plans(spark, corpus, tmp_path):
-    """A memoized plan pins the segment listing it was built over; append
-    evicts the session's plan memo, so the next call of a registered
-    query rebuilds and sees the new segment."""
-    from event_store_spark.plans.registry import _PLAN_MEMO, QUERIES, register
+def test_registered_query_sees_append(spark, corpus, tmp_path):
+    """A registered query builds a fresh plan on every call, so the call
+    after an append sees the new segment."""
+    from event_store_spark.plans.registry import QUERIES, register
 
     base, arriving, _ = corpus
     path = str(tmp_path / "ix")
     PostingsIndex.build(spark, base, path)
-    name, key = "test_postings_rows", ("test_postings_rows", SF)
+    name = "test_postings_rows"
     register(name)(lambda s, sf: PostingsIndex.open(s, path).postings())
     try:
-        stale = QUERIES[name](spark, SF)
-        _PLAN_MEMO.setdefault(spark, {})[key] = stale  # memoized pre-append
-        n_base = stale.count()
+        n_base = QUERIES[name](spark, SF).count()
         PostingsIndex.open(spark, path).append(arriving, batch_id=0)
         n_now = PostingsIndex.open(spark, path).postings().count()
         assert n_now > n_base
         assert QUERIES[name](spark, SF).count() == n_now
     finally:
         QUERIES.pop(name, None)
-        _PLAN_MEMO.get(spark, {}).pop(key, None)

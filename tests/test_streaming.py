@@ -262,6 +262,33 @@ def test_subscription_checkpoint_loss_does_not_skip_new_events(spark, tmp_path, 
     assert sub2.lag(topic) == 0
 
 
+def test_recovery_batch_unpersisted_when_processor_raises(spark, tmp_path, store):
+    """The recovery branch persists the keyset-filtered backlog; a
+    processor that raises must not leave it cached for the rest of the
+    session (each crash-restart would pin one more batch)."""
+    import shutil
+
+    topic = _seed(spark, store, n=4, batches=2)
+    offsets = OffsetsTable(str(tmp_path / "offsets.json"))
+    ckpt = str(tmp_path / "ckpt")
+    Subscription(store, offsets, ckpt).run(topic, lambda df, b: None).awaitTermination(120)
+    store.append(
+        topic,
+        spark.createDataFrame([("k4", "4", TS)], "key string, payload string, timestamp timestamp"),
+    )
+    shutil.rmtree(ckpt)  # checkpoint lost: the next run recovers
+
+    def boom(df, batch_id):
+        raise RuntimeError("processor failed")
+
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    q = Subscription(store, offsets, ckpt).run(topic, boom)
+    with pytest.raises(Exception, match="processor failed"):
+        q.awaitTermination(120)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    assert offsets.get(topic) == 3  # the failed batch committed nothing
+
+
 # ---------------------------------------------------------------- S-D
 
 def test_replication_cursor_resume_no_duplicates(spark, tmp_path, store):
@@ -561,24 +588,17 @@ def test_run_records_resumes_mid_batch_after_handler_crash(spark, tmp_path, stor
     assert handled == ["0", "1", "2", "3", "4"]  # exactly once each, in order
 
 
-def test_ticketed_stream_readers_start_no_job(spark, tmp_path, store, monkeypatch):
+def test_ticketed_stream_readers_start_no_job(spark, tmp_path, store, monkeypatch, jobs_started):
     """Replicator.replicate and Subscription.stream take the row schema
     from the topic's ticket: neither starts a Spark job before its query
     runs (a footer-inference read used to, on every call)."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-    from event_store_spark.plans.registry import _jobs_seen
-
-    def jobs():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return _jobs_seen(spark)
-
-    for query in spark.streams.active:  # a stray query's triggers are jobs too
-        query.stop()
-
     topic = _seed(spark, store)
     started = []
-    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **k: started.append(jobs()))
+    monkeypatch.setattr(
+        DataStreamWriter, "start", lambda self, *a, **k: started.append(jobs_started())
+    )
     rep = Replicator(
         store,
         str(tmp_path / "target"),
@@ -586,9 +606,9 @@ def test_ticketed_stream_readers_start_no_job(spark, tmp_path, store, monkeypatc
         str(tmp_path / "rckpt"),
     )
     sub = Subscription(store, OffsetsTable(str(tmp_path / "offsets.json")), str(tmp_path / "sckpt"))
-    before = jobs()
+    before = jobs_started()
     rep.replicate(topic)
     stream = sub.stream(topic)
     assert started == [before]
-    assert jobs() == before
+    assert jobs_started() == before
     assert stream.isStreaming and stream.schema == store.event_schema(topic)
