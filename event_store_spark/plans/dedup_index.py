@@ -207,7 +207,11 @@ class DedupIndex:
     ) -> "DedupIndex":
         """Train-equivalent: compute the corpus signature table and
         persist it as a fresh generation (first build: pointerless
-        original layout, meta written LAST as the completeness marker)."""
+        original layout, meta written LAST as the completeness marker).
+        A rebuild over an existing index replaces it: segments appended
+        to the old generation are retired after the flip."""
+        import shutil
+
         if kind not in KINDS:
             raise ValueError(f"kind must be one of {KINDS}, got {kind!r}")
         idx = cls(spark, path, kind)
@@ -219,6 +223,8 @@ class DedupIndex:
             .parquet(out),
             meta=json.dumps({"kind": kind, "format": 1}),
         )
+        for seg_path in idx._segment_dirs():
+            shutil.rmtree(seg_path, ignore_errors=True)
         return idx
 
     @classmethod

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.plans.registry import ORACLE, QUERIES, register
+from event_store_spark.tables import forget, memo
 
 #: method label → registered query whose top-5 ids to score
 ANN_METHODS = {
@@ -61,19 +62,12 @@ def _recall_oracle() -> str:
     """
 
 
-from weakref import WeakKeyDictionary
-
-#: Composed-report plan memo (weak session key, the _TYPED_MEMO shape).
-#: Building the seven-subtree union costs ~1.3 s of py4j round-trips —
-#: 60% of the report's steady-state wall-clock (VERDICT r7 #4) — and the
-#: composition is deterministic per (session, sf_dir), so the LAZY
-#: DataFrame is built once and every hit returns a fresh `select("*")`
-#: over it. No results are cached; every call re-runs the plan.
-_REPORT_MEMO: "WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-
+# The composed report's PLAN is memoized per session (`tables.memo`):
+# building the seven-subtree union costs ~1.3 s of py4j round-trips —
+# 60% of the report's steady-state wall-clock (VERDICT r7 #4) — and the
+# composition is deterministic per (session, sf_dir). Every call returns
+# a fresh `select("*")` over it; no results are cached, and every call
+# re-runs the plan.
 @register("ann_recall_report", oracle=_recall_oracle())
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@5 per ANN method against the exact cosine top-5 (q33).
@@ -83,36 +77,33 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the corpus from storage once total instead of once per method
     (VERDICT r7 #4 — the report is the only seeder; standalone queries
     keep their pushdown-friendly parquet scans)."""
-    from event_store_spark.plans.llm import _EMB_MEMO, share_embeddings
+    from event_store_spark.plans.llm import share_embeddings
 
-    memo = _REPORT_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        # a fresh QueryExecution per call: handing back the executed
-        # object would let its second collect() reuse the first run's
-        # materialized AQE shuffle stages (cross-call result reuse)
-        return got.select("*")
+    def build() -> DataFrame:
+        # the share is scoped to THIS composition: subtrees built inside
+        # the try capture the shared scan; the finally un-seeds it AND
+        # unpersists (Spark's CacheManager substitutes a cached relation
+        # into ANY later plan matching its logical plan, so a
+        # still-persisted table would silently swap every subsequent
+        # embedding query's pruned parquet scan for the full-width cache —
+        # column pruning lost; the plan-shape suite pins dedup_embedding's
+        # pruned scan). The report's steady-state speed comes from the
+        # PLAN memo; executing the memoized plan re-reads the small scan
+        # either way.
+        shared = share_embeddings(spark, sf_dir)
+        try:
+            return _compose_report(spark, sf_dir)
+        finally:
+            forget(spark, (share_embeddings, sf_dir))
+            shared.unpersist()
 
-    # the share is scoped to THIS composition: subtrees built inside the
-    # try capture the shared scan; the finally un-seeds the memo AND
-    # unpersists (Spark's CacheManager substitutes a cached relation into
-    # ANY later plan matching its logical plan, so a still-persisted
-    # table would silently swap every subsequent embedding query's pruned
-    # parquet scan for the full-width cache — column pruning lost; the
-    # plan-shape suite pins dedup_embedding's pruned scan). The report's
-    # steady-state speed comes from the PLAN memo; executing the memoized
-    # plan re-reads the small scan either way.
-    shared = share_embeddings(spark, sf_dir)
-    try:
-        return _compose_report(spark, sf_dir, memo)
-    finally:
-        _EMB_MEMO.setdefault(spark, {}).pop(sf_dir, None)
-        shared.unpersist()
+    # a fresh QueryExecution per call: handing back the memoized object
+    # would let its second collect() reuse the first run's materialized
+    # AQE shuffle stages (cross-call result reuse)
+    return memo(spark, (ann_recall_report, sf_dir), build).select("*")
 
 
-def _compose_report(
-    spark: SparkSession, sf_dir: str, memo: dict
-) -> DataFrame:
+def _compose_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = QUERIES[_EXACT](spark, sf_dir).select("vec_id")
     tagged = None
     for label, q in sorted(ANN_METHODS.items()):
@@ -121,7 +112,7 @@ def _compose_report(
         )
         tagged = part if tagged is None else tagged.unionAll(part)
     hit = F.broadcast(exact.withColumn("_hit", F.lit(1)))
-    report = (
+    return (
         tagged.join(hit, "vec_id", "left")
         .groupBy("method")
         .agg(
@@ -130,5 +121,3 @@ def _compose_report(
         )
         .orderBy("method")
     )
-    memo[sf_dir] = report
-    return report

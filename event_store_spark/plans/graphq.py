@@ -22,9 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
+from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import load_table
+from event_store_spark.tables import load_table, memo
 
 #: fixed power-step count for the registered query — a production caller
 #: loops on the L1 delta between successive outputs instead (operator
@@ -132,11 +132,6 @@ _KNN_RANKED_CTE = f"""params AS (
           FROM p)"""
 
 
-from weakref import WeakKeyDictionary
-
-_KNN_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _knn_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, nbr, pos, sim) — every in-bucket pair ranked per vector.
 
@@ -149,39 +144,37 @@ def _knn_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot change results; each consumer was re-running the bucketed
     pair join + rank window otherwise (2×~0.9 s of the two graph
     queries' bench time at sf0.1)."""
-    memo = _KNN_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
-    from event_store_spark.functions.vectors import as_double, dot, norm
-    from event_store_spark.plans.llm import adaptive_planes, hyperplane_bucket
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    planes = adaptive_planes(emb.count())
-    emb = emb.withColumn("bucket", hyperplane_bucket(F.col("v"), planes))
-    emb = emb.withColumn("nrm", norm(F.col("v")))
-    a, b = emb.alias("a"), emb.alias("b")
-    sim = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
-    pairs = a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.vec_id") != F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_id"),
-        F.col("b.vec_id").alias("nbr"),
-        sim.alias("sim"),
-    )
-    w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "nbr")
-    # coalesce-before-cache: see tokenized.source_gram_masks
-    ranked = (
-        pairs.withColumn("pos", F.row_number().over(w))
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    memo[sf_dir] = ranked
-    return ranked
+    def build():
+        from event_store_spark.functions.vectors import as_double, dot, norm
+        from event_store_spark.plans.llm import adaptive_planes, hyperplane_bucket
+
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double("embedding").alias("v")
+        )
+        planes = adaptive_planes(emb.count())
+        emb = emb.withColumn("bucket", hyperplane_bucket(F.col("v"), planes))
+        emb = emb.withColumn("nrm", norm(F.col("v")))
+        a, b = emb.alias("a"), emb.alias("b")
+        sim = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
+        pairs = a.join(
+            b,
+            (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.vec_id") != F.col("b.vec_id")),
+        ).select(
+            F.col("a.vec_id").alias("vec_id"),
+            F.col("b.vec_id").alias("nbr"),
+            sim.alias("sim"),
+        )
+        w = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "nbr")
+        # coalesce-before-cache: see tokenized.source_gram_masks
+        return (
+            pairs.withColumn("pos", F.row_number().over(w))
+            .coalesce(spark.sparkContext.defaultParallelism)
+            .cache()
+        )
+
+    return memo(spark, (_knn_ranked, sf_dir), build)
 
 
 @register(
@@ -309,35 +302,33 @@ def _knn_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, pos, nbr, sim) top-KNN_K rows via the GEMM/exact-re-rank
     kernel — bit-identical to `_knn_ranked(...).where(pos <= KNN_K)`
     (pinned by tests/test_knn_blas.py). Memoized + cached alongside
-    `_knn_ranked` under a distinct key; consumers that only need the
+    `_knn_ranked`; consumers that only need the
     top-K edge set (knn_graph_blas, label_propagation_knn) come through
     here so the pair enumeration is GEMM-priced, not fold-priced."""
-    memo = _KNN_MEMO.setdefault(spark, {})
-    got = memo.get(("blas", sf_dir))
-    if got is not None:
-        return got
-    from event_store_spark.functions.vectors import as_double
-    from event_store_spark.plans.llm import adaptive_planes, hyperplane_bucket
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    planes = adaptive_planes(emb.count())
-    emb = emb.withColumn("bucket", hyperplane_bucket(F.col("v"), planes))
-    topk = (
-        emb.groupBy("bucket")
-        .applyInPandas(
-            _knn_blas_bucket_topk,
-            "vec_id bigint, pos int, nbr bigint, sim double",
+    def build():
+        from event_store_spark.functions.vectors import as_double
+        from event_store_spark.plans.llm import adaptive_planes, hyperplane_bucket
+
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double("embedding").alias("v")
         )
-        # narrow before caching (see tokenized.source_gram_masks): the
-        # grouped-map stage caches at the full 8×cores shuffle width and
-        # label_propagation_knn re-scans this table several times per run
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    memo[("blas", sf_dir)] = topk
-    return topk
+        planes = adaptive_planes(emb.count())
+        emb = emb.withColumn("bucket", hyperplane_bucket(F.col("v"), planes))
+        return (
+            emb.groupBy("bucket")
+            .applyInPandas(
+                _knn_blas_bucket_topk,
+                "vec_id bigint, pos int, nbr bigint, sim double",
+            )
+            # narrow before caching (see tokenized.source_gram_masks): the
+            # grouped-map stage caches at the full 8×cores shuffle width and
+            # label_propagation_knn re-scans this table several times per run
+            .coalesce(spark.sparkContext.defaultParallelism)
+            .cache()
+        )
+
+    return memo(spark, (_knn_topk_blas, sf_dir), build)
 
 
 @register(

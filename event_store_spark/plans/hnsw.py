@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +41,7 @@ from pyspark.sql import functions as F
 from event_store_spark.plans.generations import GenerationPair
 from event_store_spark.plans.ivf import _ivf_index
 from event_store_spark.plans.registry import ORACLE, register
+from event_store_spark.tables import memo
 
 #: max neighbors per node per level (HNSW "M"); level-0 gets 2M as usual
 HNSW_M = 8
@@ -165,11 +165,6 @@ def _build_cell_graph(pdf):
     )
 
 
-_HNSW_MEMO: "WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-
 def _hnsw_graph(spark: SparkSession, sf_dir: str, spill: int = 1) -> DataFrame:
     """(cell, vec_id, v, level, nbrs) — the per-cell graphs plus vectors,
     built once per (session, corpus, spill) and cached; production writes
@@ -182,34 +177,32 @@ def _hnsw_graph(spark: SparkSession, sf_dir: str, spill: int = 1) -> DataFrame:
     recall lift composed with graph serving (VERDICT r11 #8a). Per-cell
     builds are independent, so the spilled table is just ``spill``×
     rows through the same Arrow tasks."""
-    memo = _HNSW_MEMO.setdefault(spark, {})
-    got = memo.get((sf_dir, spill))
-    if got is not None:
-        return got
-    from event_store_spark.shipping import ensure_shipped
 
-    ensure_shipped(spark)
-    centroids, assigned = _ivf_index(spark, sf_dir, "full")
-    if spill > 1:
-        from event_store_spark.plans.ivf import assign_spilled
+    def build():
+        from event_store_spark.shipping import ensure_shipped
 
-        membership = assign_spilled(
-            assigned.select("vec_id", "v"), centroids, spill=spill
-        ).select("cell", "vec_id", "v", "rank")
-    else:
-        membership = assigned
-    graph = membership.groupBy("cell").applyInPandas(
-        _build_cell_graph,
-        "cell int, vec_id bigint, level int, nbrs array<array<bigint>>",
-    )
-    # coalesce-before-cache: see tokenized.source_gram_masks
-    out = (
-        membership.join(graph, ["cell", "vec_id"])
-        .coalesce(membership.sparkSession.sparkContext.defaultParallelism)
-        .cache()
-    )
-    memo[(sf_dir, spill)] = out
-    return out
+        ensure_shipped(spark)
+        centroids, assigned = _ivf_index(spark, sf_dir, "full")
+        if spill > 1:
+            from event_store_spark.plans.ivf import assign_spilled
+
+            membership = assign_spilled(
+                assigned.select("vec_id", "v"), centroids, spill=spill
+            ).select("cell", "vec_id", "v", "rank")
+        else:
+            membership = assigned
+        graph = membership.groupBy("cell").applyInPandas(
+            _build_cell_graph,
+            "cell int, vec_id bigint, level int, nbrs array<array<bigint>>",
+        )
+        # coalesce-before-cache: see tokenized.source_gram_masks
+        return (
+            membership.join(graph, ["cell", "vec_id"])
+            .coalesce(membership.sparkSession.sparkContext.defaultParallelism)
+            .cache()
+        )
+
+    return memo(spark, (_hnsw_graph, sf_dir, spill), build)
 
 
 def _search_cell(pdf):

@@ -44,20 +44,11 @@ from event_store_spark.plans.llm import (
     _minhash_signatures,
 )
 from event_store_spark.plans.registry import register
+from event_store_spark.tables import memo
 
 NEW_SOURCE = "src3"  # stands in for the arriving batch
 JACCARD_MIN = 0.5
 
-#: memoized verified-match table per (session, sf_dir): dedup_incremental
-#: and dedup_incremental_admit consume the SAME candidate+verify build —
-#: without the memo each query re-ran the gram-sketch verify join
-#: (VERDICT r9 #2: the pair regressed 1.3→2.2 s at sf0.1 when the sketch
-#: verify landed). WeakKey so a closed session releases the cache.
-from weakref import WeakKeyDictionary
-
-_VM_MEMO: "WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    WeakKeyDictionary()
-)
 
 #: DuckDB mirror: the signature build carries source, candidates are the
 #: asymmetric (new x index) band join, verification is exact distinct-3-gram
@@ -112,46 +103,44 @@ def _verified_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the sketch. Same answers (the oracle is unchanged), a fraction
     of the join payload. Memoized + cached per (session, sf_dir) so the
     two registered consumers run the verify ONCE."""
-    memo = _VM_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
-    from event_store_spark.plans.jaccard import (
-        exact_jaccard,
-        verify_sketches,
-    )
 
-    sig = _minhash_signatures(spark, sf_dir)
-    batch_sig = sig.where(F.col("source") == NEW_SOURCE).select(
-        F.col("doc_id").alias("new_id"), "band", "bandkey"
-    )
-    index_sig = sig.where(F.col("source") != NEW_SOURCE).select(
-        F.col("doc_id").alias("idx_id"), "band", "bandkey"
-    )
-    # no broadcast HINT: a production batch is bounded and AQE broadcasts
-    # it from its measured size; the synthetic scale corpus grows the
-    # "batch" with the corpus (5% of it), and forcing that broadcast
-    # serializes a multi-hundred-MB hash relation on the driver (100×
-    # run measured exponent 3.0 on this query before the hint came out)
-    cand = (
-        index_sig.join(batch_sig, ["band", "bandkey"])
-        .select("new_id", "idx_id")
-        .distinct()
-    )
-    out = (
-        exact_jaccard(
-            _docs(spark, sf_dir), cand, "new_id", "idx_id",
-            min_jaccard=JACCARD_MIN,
-            sketches=verify_sketches(spark, sf_dir),
+    def build():
+        from event_store_spark.plans.jaccard import (
+            exact_jaccard,
+            verify_sketches,
         )
-        .where(F.col("jac") >= JACCARD_MIN)
-        .select("new_id", "idx_id", "jac")
-        # coalesce-before-cache: see tokenized.source_gram_masks
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    memo[sf_dir] = out
-    return out
+
+        sig = _minhash_signatures(spark, sf_dir)
+        batch_sig = sig.where(F.col("source") == NEW_SOURCE).select(
+            F.col("doc_id").alias("new_id"), "band", "bandkey"
+        )
+        index_sig = sig.where(F.col("source") != NEW_SOURCE).select(
+            F.col("doc_id").alias("idx_id"), "band", "bandkey"
+        )
+        # no broadcast HINT: a production batch is bounded and AQE broadcasts
+        # it from its measured size; the synthetic scale corpus grows the
+        # "batch" with the corpus (5% of it), and forcing that broadcast
+        # serializes a multi-hundred-MB hash relation on the driver (100×
+        # run measured exponent 3.0 on this query before the hint came out)
+        cand = (
+            index_sig.join(batch_sig, ["band", "bandkey"])
+            .select("new_id", "idx_id")
+            .distinct()
+        )
+        return (
+            exact_jaccard(
+                _docs(spark, sf_dir), cand, "new_id", "idx_id",
+                min_jaccard=JACCARD_MIN,
+                sketches=verify_sketches(spark, sf_dir),
+            )
+            .where(F.col("jac") >= JACCARD_MIN)
+            .select("new_id", "idx_id", "jac")
+            # coalesce-before-cache: see tokenized.source_gram_masks
+            .coalesce(spark.sparkContext.defaultParallelism)
+            .cache()
+        )
+
+    return memo(spark, (_verified_matches, sf_dir), build)
 
 
 @register(

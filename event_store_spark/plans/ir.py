@@ -5,9 +5,9 @@ At 100 TB the tokenize-and-filter of the scan-form query
 by term (write-time work, like the MinHash signature index), and the
 query is the probe. Since round 9 (VERDICT r8 #6) that table is REAL:
 `PostingsIndex` materializes (bucket, t, doc_id, dl, tf) parquet
-partitioned by a crc32 term bucket once per corpus (the typed_events
-digest/atomic-publish pattern), stores (n_docs, avgdl) in meta.json
-beside it, and its probe reads ONLY the query terms' bucket partitions —
+partitioned by a crc32 term bucket once per corpus (a
+`tables.side_table`), stores (n_docs, avgdl) in meta.json beside it,
+and its probe reads ONLY the query terms' bucket partitions —
 partition pruning does what an inverted index's seek does. The registered
 queries that read it, `bm25_postings_topk` and the scan form, live in
 `plans.bm25`.
@@ -15,20 +15,17 @@ queries that read it, `bm25_postings_topk` and the scan form, live in
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
-import tempfile
 import zlib
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.core.state import atomic_write
 from event_store_spark.plans.generations import GenerationPair
-from event_store_spark.tables import load_table, table_path
+from event_store_spark.tables import load_table, memo, side_table
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -43,25 +40,6 @@ QUERY_TERMS = ("spark", "table", "hash")
 POSTINGS_BUCKETS = 64
 
 # ------------------------------------------------- persisted postings index
-
-_POSTINGS_MEMO: "WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
-    WeakKeyDictionary()
-)
-
-
-def _postings_dir(sf_dir: str) -> str:
-    """Per-corpus cache dir keyed by the source parquet's identity
-    (realpath, mtime_ns, size) — typed_events' digest rule, so a
-    regenerated fixture re-indexes."""
-    src = table_path(sf_dir, "documents")
-    st = os.stat(src)
-    ident = f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    digest = hashlib.md5(ident.encode()).hexdigest()[:16]
-    # layout version suffix: bumping it orphans caches written by older
-    # code (the round-9 flat layout had no generation dir / sum_dl)
-    return os.path.join(
-        tempfile.gettempdir(), "event_store_spark_bm25", digest, "postings-v2"
-    )
 
 
 def term_bucket(term: str) -> int:
@@ -104,8 +82,9 @@ class PostingsIndex:
 
     - ``build``: one tokenize pass → (bucket, t, doc_id, dl, tf) parquet
       PARTITIONED BY the crc32 term bucket; exact integer corpus stats
-      ({n_docs, sum_dl}) land in meta.json, written into the staged dir
-      so one atomic rename publishes rows and stats together.
+      ({n_docs, sum_dl}) land in meta.json, published with the rows as
+      one `GenerationPair` generation; a rebuild over an existing index
+      flips to the new generation and retires the old segments.
     - ``probe(terms)``: filter to the terms' buckets — a PartitionFilters
       prune, the distributed analog of an index seek — then the standard
       Okapi scoring; document frequencies fall out of the rows read,
@@ -135,21 +114,20 @@ class PostingsIndex:
     def build(
         cls, spark: SparkSession, docs: DataFrame, path: str
     ) -> "PostingsIndex":
+        """Index ``docs`` as a fresh generation at ``path`` (first build:
+        the pointerless layout, meta.json written last as the
+        completeness marker). A rebuild over an existing index replaces
+        it: segments appended to the old generation are retired after
+        the flip."""
         idx = cls(spark, path)
-        staged = f"{path}.staged-{os.getpid()}"
-        shutil.rmtree(staged, ignore_errors=True)
-        _postings_rows(docs).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(os.path.join(staged, "rows"))
-        meta = {**_doc_stats(docs), "format": 1}
-        with open(os.path.join(staged, "meta.json"), "w") as fh:
-            json.dump(meta, fh)
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        try:
-            os.rename(staged, path)  # atomic publish
-        except OSError:
-            # another process published first; theirs is equivalent
-            shutil.rmtree(staged, ignore_errors=True)
+        idx._gen.publish(
+            spark,
+            lambda out: _postings_rows(docs).write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(out),
+            meta=lambda out: json.dumps({**_doc_stats(docs), "format": 1}),
+        )
+        idx._retire(idx._segments())
         return idx
 
     @classmethod
@@ -301,6 +279,11 @@ class PostingsIndex:
             .parquet(out),
             meta=stats,
         )
+        self._retire(segs)
+
+    def _retire(self, segs: list[str]) -> None:
+        """Delete segments ``segs``, marker first so a crash mid-way
+        leaves an incomplete segment, which readers ignore."""
         for s in segs:
             try:
                 os.remove(os.path.join(self.path, f"segmeta-b{s}.json"))
@@ -312,23 +295,23 @@ class PostingsIndex:
 
 
 def bm25_index(spark: SparkSession, sf_dir: str) -> PostingsIndex:
-    """The fixture corpus's `PostingsIndex`, built once per corpus under
-    the typed_events digest-cache rule and opened thereafter. In
-    production the build is write-path work (the MinHash DedupIndex cost
-    model); the side table is the batch backfill of that layout."""
-    memo = _POSTINGS_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
-    final = _postings_dir(sf_dir)
-    if os.path.isdir(final):
-        idx = PostingsIndex.open(spark, final)
-    else:
-        idx = PostingsIndex.build(
-            spark, load_table(spark, sf_dir, "documents"), final
-        )
-    memo[sf_dir] = idx
-    return idx
+    """The fixture corpus's `PostingsIndex`, built once per corpus as a
+    `tables.side_table` and opened thereafter. In production the build
+    is write-path work (the MinHash DedupIndex cost model); the side
+    table is the batch backfill of that layout."""
+
+    def write(out: str) -> None:
+        PostingsIndex.build(spark, load_table(spark, sf_dir, "documents"), out)
+
+    # the name's layout version orphans caches written by older code
+    # (the round-9 flat layout had no generation dir / sum_dl)
+    return memo(
+        spark,
+        (bm25_index, sf_dir),
+        lambda: PostingsIndex.open(
+            spark, side_table(spark, sf_dir, "documents", "postings-v2", write)
+        ),
+    )
 
 
 def bm25_postings(spark: SparkSession, sf_dir: str):

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from event_store_spark.functions.vectors import as_double, cosine
 from event_store_spark.plans.generations import GenerationPair, segment_wins
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import load_table
+from event_store_spark.tables import load_table, memo
 
 K = 8
 DIM = 64
@@ -55,66 +55,61 @@ GEMM_ASSIGN_K = 16
 #: 2 MB/cell, far under SEM_MAX_CELL's loud guard.
 ADAPTIVE_TARGET = 512
 
-#: Trained-index memo per live session: an IVF index is built ONCE and then
-#: serves every search — rebuilding the identical deterministic k-means per
-#: query (and per bench rep) charges the build to every lookup, which is not
-#: how an inverted file is used. Keyed (sf_dir, variant) under a weak session
-#: key like tables._TABLE_MEMO; the build is fully deterministic, so reuse
-#: cannot change any result. The cached `assigned` DataFrame IS the inverted
-#: file (corpus rows + their cell), persisted in memory — at cluster scale
-#: this is the index you would write to storage, partitioned by cell.
-from weakref import WeakKeyDictionary
-
-_IVF_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
 
 def _ivf_index(spark: SparkSession, sf_dir: str, variant: str):
-    """Return (centroids, assigned) for the given build variant, memoized."""
-    memo = _IVF_MEMO.setdefault(spark, {})
-    got = memo.get((sf_dir, variant))
-    if got is not None:
-        return got
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    if variant in ("full", "adaptive"):
-        # init from seed rows 1..k, Lloyd-refine over the whole corpus.
-        # "full" pins k = K (=8, the ANN-family parity constant shared
-        # with every IVF oracle's seed CTE); "adaptive" grows k with the
-        # corpus so mean cell occupancy tracks ADAPTIVE_TARGET — the
-        # count() is one aggregate job per BUILD (memoized per session),
-        # the same driver-metadata class as the centroid collect below.
-        k = K
-        if variant == "adaptive":
-            import math
+    """Return (centroids, assigned) for the given build variant.
 
-            k = max(K, math.ceil(emb.count() / ADAPTIVE_TARGET))
-        centroids = sorted(
-            (r["vec_id"] - 1, list(r["v"]))
-            for r in emb.where(F.col("vec_id").between(1, k)).collect()
+    Memoized per session (`tables.memo`): an IVF index is built ONCE and
+    then serves every search — rebuilding the identical deterministic
+    k-means per query (and per bench rep) charges the build to every
+    lookup, which is not how an inverted file is used. The build is fully
+    deterministic, so reuse cannot change any result. The cached
+    `assigned` DataFrame IS the inverted file (corpus rows + their cell),
+    persisted in memory — at cluster scale this is the index you would
+    write to storage, partitioned by cell."""
+
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double("embedding").alias("v")
         )
-        assigned = _assign(emb, centroids)
-        for _ in range(ITERS):
-            centroids = _update(assigned)
+        if variant in ("full", "adaptive"):
+            # init from seed rows 1..k, Lloyd-refine over the whole corpus.
+            # "full" pins k = K (=8, the ANN-family parity constant shared
+            # with every IVF oracle's seed CTE); "adaptive" grows k with the
+            # corpus so mean cell occupancy tracks ADAPTIVE_TARGET — the
+            # count() is one aggregate job per BUILD (memoized per session),
+            # the same driver-metadata class as the centroid collect below.
+            k = K
+            if variant == "adaptive":
+                import math
+
+                k = max(K, math.ceil(emb.count() / ADAPTIVE_TARGET))
+            centroids = sorted(
+                (r["vec_id"] - 1, list(r["v"]))
+                for r in emb.where(F.col("vec_id").between(1, k)).collect()
+            )
             assigned = _assign(emb, centroids)
-    else:  # "sampled": train on a deterministic md5 bottom-k sample
-        sample_rows = (
-            emb.withColumn("_h", F.md5(F.col("vec_id").cast("string")))
-            .orderBy("_h", "vec_id")
-            .limit(SAMPLE)
-            .drop("_h")
-            .collect()
-        )
-        init = [(i, [float(x) for x in r["v"]]) for i, r in enumerate(sample_rows[:K])]
-        sample_df = spark.createDataFrame(
-            [(r["vec_id"], [float(x) for x in r["v"]]) for r in sample_rows],
-            "vec_id bigint, v array<double>",
-        )
-        centroids = _update(_assign(sample_df, init))
-        assigned = _assign(emb, centroids)
-    assigned = assigned.cache()
-    memo[(sf_dir, variant)] = (centroids, assigned)
-    return centroids, assigned
+            for _ in range(ITERS):
+                centroids = _update(assigned)
+                assigned = _assign(emb, centroids)
+        else:  # "sampled": train on a deterministic md5 bottom-k sample
+            sample_rows = (
+                emb.withColumn("_h", F.md5(F.col("vec_id").cast("string")))
+                .orderBy("_h", "vec_id")
+                .limit(SAMPLE)
+                .drop("_h")
+                .collect()
+            )
+            init = [(i, [float(x) for x in r["v"]]) for i, r in enumerate(sample_rows[:K])]
+            sample_df = spark.createDataFrame(
+                [(r["vec_id"], [float(x) for x in r["v"]]) for r in sample_rows],
+                "vec_id bigint, v array<double>",
+            )
+            centroids = _update(_assign(sample_df, init))
+            assigned = _assign(emb, centroids)
+        return centroids, assigned.cache()
+
+    return memo(spark, (_ivf_index, sf_dir, variant), build)
 
 
 def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:

@@ -40,12 +40,6 @@ tests/test_jaccard_verify.py at a forced-small K.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,10 +51,6 @@ from event_store_spark.functions.text import (
 #: sketch width: docs with more distinct grams than this take the exact
 #: row-join path; everything else verifies from the fixed-width sketch
 VERIFY_SKETCH_K = 256
-
-_SK_MEMO: "WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]]" = (
-    WeakKeyDictionary()
-)
 
 
 def _sketch_projection(docs: DataFrame, k: int) -> DataFrame:
@@ -86,8 +76,8 @@ def verify_sketches(
     spark: SparkSession, sf_dir: str, k: int = VERIFY_SKETCH_K
 ) -> DataFrame:
     """The PERSISTED verify-sketch side table for a fixture corpus —
-    (doc_id, _n, _sk) parquet, digest-cached per corpus identity and
-    atomically published (the typed_events/bm25_postings pattern).
+    (doc_id, _n, _sk) parquet, a `tables.side_table` keyed by the corpus
+    identity and ``k``, memoized per session like every other one.
 
     A production dedup pipeline persists these next to the LSH
     signatures it already stores; building them per session charged an
@@ -96,32 +86,20 @@ def verify_sketches(
     probe runs 9.6 s). The bench warm hooks materialize this table under
     the same write-path accounting as the typed events and the BM25
     postings."""
-    from event_store_spark.tables import load_table, table_path
+    from event_store_spark.tables import load_table, memo, side_table
 
-    memo = _SK_MEMO.setdefault(spark, {})
-    got = memo.get((sf_dir, k))
-    if got is not None:
-        return got
-    src = table_path(sf_dir, "documents")
-    st = os.stat(src)
-    ident = f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}|k={k}"
-    digest = hashlib.md5(ident.encode()).hexdigest()[:16]
-    final = os.path.join(
-        tempfile.gettempdir(), "event_store_spark_sketch", digest, "sk"
-    )
-    if not os.path.isdir(final):
-        staged = f"{final}.staged-{os.getpid()}"
+    def write(out: str) -> None:
         _sketch_projection(
             load_table(spark, sf_dir, "documents"), k
-        ).repartition(8).write.mode("overwrite").parquet(staged)
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        try:
-            os.rename(staged, final)  # atomic publish
-        except OSError:
-            shutil.rmtree(staged, ignore_errors=True)
-    df = spark.read.parquet(final)
-    memo[(sf_dir, k)] = df
-    return df
+        ).repartition(8).write.mode("overwrite").parquet(out)
+
+    return memo(
+        spark,
+        (verify_sketches, sf_dir, k),
+        lambda: spark.read.parquet(
+            side_table(spark, sf_dir, "documents", f"sk-k{k}", write)
+        ),
+    )
 
 
 def exact_jaccard(

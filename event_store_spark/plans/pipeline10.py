@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
+from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import hot_table, load_table
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import load_table
+from event_store_spark.tables import load_table, memo
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,13 +259,6 @@ def resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PROFILE_COLS = ["l_discount", "l_extendedprice", "l_quantity", "l_tax"]
 
-#: (session -> {(sf_dir, cols): cached (col, value, cnt) table}) — see
-#: profile_columns' memo note
-from weakref import WeakKeyDictionary as _WKD
-
-_PROFILE_MEMO: "_WKD" = _WKD()
-
-
 @register(
     "profile_columns",
     oracle="\nUNION ALL\n".join(
@@ -312,10 +305,7 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pattern; every later call derives the 4-row report from it. In
     # production this table IS the ANALYZE-stats artifact a lakehouse
     # maintains at write time (Delta/Iceberg column stats).
-    memo = _PROFILE_MEMO.setdefault(spark, {})
-    key = (sf_dir, tuple(PROFILE_COLS))
-    per_val = memo.get(key)
-    if per_val is None:
+    def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
         tagged = li.select(
             F.explode(
@@ -334,14 +324,15 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("e")
         ).select("e.col_name", "e.v")
-        per_val = (
+        return (
             tagged.groupBy("col_name", "v")
             .agg(F.count(F.lit(1)).alias("cnt"))
             # coalesce-before-cache: see tokenized.source_gram_masks
             .coalesce(spark.sparkContext.defaultParallelism)
             .cache()
         )
-        memo[key] = per_val
+
+    per_val = memo(spark, (profile_columns, sf_dir, tuple(PROFILE_COLS)), build)
     agg = per_val.groupBy("col_name").agg(
         F.sum("cnt").cast("bigint").alias("n_rows"),
         F.sum(F.when(F.col("v").isNull(), F.col("cnt")).otherwise(0))

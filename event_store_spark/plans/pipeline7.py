@@ -19,31 +19,26 @@ hash gate.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.operators.bpe import adjacent_pairs, merge_pair
-from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
+from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import load_table
+from event_store_spark.tables import load_table, memo
 
 BPE_ROUNDS = 3
 
-#: Shared 3-round BPE build, memoized per live session (weak key) and
-#: sf_dir — the same cost model as the MinHash index memo (llm.py:92):
-#: `bpe_train_merges` (the merge table) and `bpe_encoded_stats` (its
-#: compression effect) consume the SAME chain, and production trains a
-#: tokenizer once and ships it, so sharing one build is the honest
-#: accounting. The build is deterministic (count desc, (t1, t2) asc tie
-#: break), so reuse cannot change results. Each round's folded corpus is
-#: localCheckpoint()ed, which makes the build LINEAR in rounds — without
-#: it, round r's argmax subplan replays folds 1..r-1, the O(rounds²)
-#: recompute the round-4 verdict flagged on dedup_clusters.
-_BPE_MEMO: "WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
-    WeakKeyDictionary()
-)
+# Shared 3-round BPE build, memoized per session and sf_dir (`tables.memo`,
+# the MinHash index memo's cost model): `bpe_train_merges` (the merge
+# table) and `bpe_encoded_stats` (its compression effect) consume the SAME
+# chain, and production trains a tokenizer once and ships it, so sharing
+# one build is the honest accounting. The build is deterministic (count
+# desc, (t1, t2) asc tie break), so reuse cannot change results. Each
+# round's folded corpus is localCheckpoint()ed, which makes the build
+# LINEAR in rounds — without it, round r's argmax subplan replays folds
+# 1..r-1, the O(rounds²) recompute the round-4 verdict flagged on
+# dedup_clusters.
 
 
 def _bpe_build(
@@ -61,51 +56,49 @@ def _bpe_build(
     the argmax stays a DataFrame end to end."""
     from event_store_spark.functions.text import whitespace_tokens
 
-    memo = _BPE_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
-    docs = load_table(spark, sf_dir, "documents")
-    cur = docs.select(
-        "doc_id", "lang", whitespace_tokens("text").alias("w")
-    ).withColumn("_before", F.size("w"))
-    steps: list[DataFrame] = []
-    for i in range(1, BPE_ROUNDS + 1):
-        pairs = cur.select(F.explode(adjacent_pairs("w")).alias("p")).select(
-            "p.t1", "p.t2"
-        )
-        m = (
-            pairs.groupBy("t1", "t2")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.col("cnt").desc(), "t1", "t2")
-            .limit(1)
-            .select(
-                F.col("t1").alias("_mt1"),
-                F.col("t2").alias("_mt2"),
-                F.col("cnt").alias("_mc"),
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        cur = docs.select(
+            "doc_id", "lang", whitespace_tokens("text").alias("w")
+        ).withColumn("_before", F.size("w"))
+        steps: list[DataFrame] = []
+        for i in range(1, BPE_ROUNDS + 1):
+            pairs = cur.select(F.explode(adjacent_pairs("w")).alias("p")).select(
+                "p.t1", "p.t2"
             )
-            .localCheckpoint(eager=True)
-        )
-        steps.append(
-            m.select(
-                F.lit(i).alias("step"),
-                F.col("_mt1").alias("t1"),
-                F.col("_mt2").alias("t2"),
-                F.col("_mc").alias("cnt"),
+            m = (
+                pairs.groupBy("t1", "t2")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .orderBy(F.col("cnt").desc(), "t1", "t2")
+                .limit(1)
+                .select(
+                    F.col("t1").alias("_mt1"),
+                    F.col("t2").alias("_mt2"),
+                    F.col("cnt").alias("_mc"),
+                )
+                .localCheckpoint(eager=True)
             )
-        )
-        cur = (
-            cur.crossJoin(F.broadcast(m.drop("_mc")))
-            .select(
-                "doc_id",
-                "lang",
-                "_before",
-                merge_pair(F.col("w"), F.col("_mt1"), F.col("_mt2")).alias("w"),
+            steps.append(
+                m.select(
+                    F.lit(i).alias("step"),
+                    F.col("_mt1").alias("t1"),
+                    F.col("_mt2").alias("t2"),
+                    F.col("_mc").alias("cnt"),
+                )
             )
-            .localCheckpoint(eager=True)
-        )
-    memo[sf_dir] = (steps, cur)
-    return steps, cur
+            cur = (
+                cur.crossJoin(F.broadcast(m.drop("_mc")))
+                .select(
+                    "doc_id",
+                    "lang",
+                    "_before",
+                    merge_pair(F.col("w"), F.col("_mt1"), F.col("_mt2")).alias("w"),
+                )
+                .localCheckpoint(eager=True)
+            )
+        return steps, cur
+
+    return memo(spark, (_bpe_build, sf_dir), build)
 
 
 def _round_sql(i: int) -> str:

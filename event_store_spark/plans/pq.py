@@ -24,8 +24,9 @@ step (same convention as `plans/ivf.py`):
 - encode: re-assign with the refined codebook -> M small ints per vector.
 
 The encoded corpus is memoized per (session, sf_dir) like the IVF
-inverted file (`ivf._IVF_MEMO`) — a PQ index is built once and serves
-every query; at cluster scale it is written out as a codes table.
+inverted file (`ivf._ivf_index`, both through `tables.memo`) — a PQ
+index is built once and serves every query; at cluster scale it is
+written out as a codes table.
 
 Reference parity: the reference (kagetech/event-store) has no vector
 search at all — this is part of the LLM-pipeline surface the brief adds
@@ -34,22 +35,18 @@ on top of SURVEY §2.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.vectors import as_double
 from event_store_spark.plans.generations import GenerationPair, segment_wins
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import load_table
+from event_store_spark.tables import load_table, memo
 
 DIM = 64
 M = 8  # subspaces
 DSUB = DIM // M  # dims per subspace
 KPQ = 16  # codes per subspace
-
-_PQ_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 
 def _sub_slices(v: Column) -> Column:
@@ -135,29 +132,28 @@ def _train_update(encoded: DataFrame) -> list[list[tuple[int, list[float]]]]:
 
 def _pq_index(spark: SparkSession, sf_dir: str):
     """(codebook, encoded corpus DataFrame) — memoized per (session, dir)."""
-    memo = _PQ_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    seed_rows = sorted(
-        (r["vec_id"], list(r["v"]))
-        for r in emb.where(F.col("vec_id").between(1, KPQ)).collect()
-    )
-    init = [
-        [
-            (vid - 1, vec[m * DSUB : (m + 1) * DSUB])
-            for vid, vec in seed_rows
+
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double("embedding").alias("v")
+        )
+        seed_rows = sorted(
+            (r["vec_id"], list(r["v"]))
+            for r in emb.where(F.col("vec_id").between(1, KPQ)).collect()
+        )
+        init = [
+            [
+                (vid - 1, vec[m * DSUB : (m + 1) * DSUB])
+                for vid, vec in seed_rows
+            ]
+            for m in range(M)
         ]
-        for m in range(M)
-    ]
-    a0 = emb.withColumn("codes", _encode_expr(F.col("v"), init))
-    book = _train_update(a0)
-    encoded = emb.withColumn("codes", _encode_expr(F.col("v"), book)).cache()
-    memo[sf_dir] = (book, encoded)
-    return book, encoded
+        a0 = emb.withColumn("codes", _encode_expr(F.col("v"), init))
+        book = _train_update(a0)
+        encoded = emb.withColumn("codes", _encode_expr(F.col("v"), book)).cache()
+        return book, encoded
+
+    return memo(spark, (_pq_index, sf_dir), build)
 
 
 def _adc_table(book, qvec: list[float]) -> list[list[float]]:

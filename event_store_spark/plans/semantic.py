@@ -292,16 +292,6 @@ TL_CELL_STRIDE = 1_000_000
 #: cells (the SEM_MAX_CELL loud-guard convention one level up).
 TL_COARSE_MAX = 250_000
 
-from weakref import WeakKeyDictionary
-
-#: memoized two-level assignment per (session, sf_dir) — the
-#: _IVF_MEMO/_MINHASH_MEMO convention: the build is deterministic, so
-#: reuse cannot change results, and the cached frame IS the index
-_TL_MEMO: "WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-
 def _twolevel_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, cell) under the two-level coarse→fine assign — the
     sub-quadratic replacement for the adaptive build's flat assign
@@ -332,7 +322,10 @@ def _twolevel_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     `semantic_dedup_adaptive` there, which is what lets it share the
     adaptive oracle. The crossover is pinned by
     tests/test_semantic_twolevel.py on a 12k-vector synth corpus (k=24,
-    k₁=5) where the two-level path really engages."""
+    k₁=5) where the two-level path really engages.
+
+    Memoized per (session, sf_dir): the build is deterministic, so reuse
+    cannot change results, and the cached frame IS the index."""
     import math
 
     from event_store_spark.plans.ivf import (
@@ -343,94 +336,89 @@ def _twolevel_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivf_index,
         _update,
     )
-    from event_store_spark.tables import load_table
+    from event_store_spark.tables import load_table, memo
 
-    memo = _TL_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
-    from event_store_spark.functions.vectors import as_double
+    def build():
+        from event_store_spark.functions.vectors import as_double
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    n = emb.count()
-    k = max(K, math.ceil(n / ADAPTIVE_TARGET))
-    if k <= GEMM_ASSIGN_K:
-        _, assigned = _ivf_index(spark, sf_dir, "adaptive")
-        memo[sf_dir] = assigned
-        return assigned
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", as_double("embedding").alias("v")
+        )
+        n = emb.count()
+        k = max(K, math.ceil(n / ADAPTIVE_TARGET))
+        if k <= GEMM_ASSIGN_K:
+            return _ivf_index(spark, sf_dir, "adaptive")[1]
 
-    from event_store_spark.shipping import ensure_shipped
+        from event_store_spark.shipping import ensure_shipped
 
-    ensure_shipped(spark)
-    k1 = math.ceil(math.sqrt(k))
-    coarse0 = sorted(
-        (r["vec_id"] - 1, [float(x) for x in r["v"]])
-        for r in emb.where(F.col("vec_id").between(1, k1)).collect()
-    )
-    coarse = _update(_assign(emb, coarse0))
-    a = _assign(emb, coarse)
+        ensure_shipped(spark)
+        k1 = math.ceil(math.sqrt(k))
+        coarse0 = sorted(
+            (r["vec_id"] - 1, [float(x) for x in r["v"]])
+            for r in emb.where(F.col("vec_id").between(1, k1)).collect()
+        )
+        coarse = _update(_assign(emb, coarse0))
+        a = _assign(emb, coarse)
 
-    import numpy as np
-    import pandas as pd
+        import numpy as np
+        import pandas as pd
 
-    target = ADAPTIVE_TARGET
+        target = ADAPTIVE_TARGET
 
-    def fine(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n_c = len(pdf)
-        coarse_id = int(pdf["cell"].iloc[0])
-        if n_c > TL_COARSE_MAX:
-            raise ValueError(
-                f"semantic_dedup_twolevel: coarse cell {coarse_id} holds "
-                f"{n_c} vectors (TL_COARSE_MAX={TL_COARSE_MAX}); raise k1"
-            )
-        pdf = pdf.sort_values("vec_id")
-        base = coarse_id * TL_CELL_STRIDE
-        kc = max(1, math.ceil(n_c / target))
-        if kc == 1 or n_c <= kc:
+        def fine(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            n_c = len(pdf)
+            coarse_id = int(pdf["cell"].iloc[0])
+            if n_c > TL_COARSE_MAX:
+                raise ValueError(
+                    f"semantic_dedup_twolevel: coarse cell {coarse_id} holds "
+                    f"{n_c} vectors (TL_COARSE_MAX={TL_COARSE_MAX}); raise k1"
+                )
+            pdf = pdf.sort_values("vec_id")
+            base = coarse_id * TL_CELL_STRIDE
+            kc = max(1, math.ceil(n_c / target))
+            if kc == 1 or n_c <= kc:
+                return pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"].astype("int64"),
+                        "v": pdf["v"],
+                        "cell": np.full(n_c, base, dtype="int64"),
+                    }
+                )
+            V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
+            C = V[:kc].copy()  # seeds: the cell's lowest vec_ids
+
+            def assign(cents):
+                # argmin ‖v−c‖² = ‖c‖² − 2 v·c (‖v‖² constant per row);
+                # numpy argmin takes the FIRST minimal index = lowest local
+                # cell, the flat build's tie rule
+                return (
+                    (cents * cents).sum(axis=1)[None, :] - 2.0 * (V @ cents.T)
+                ).argmin(axis=1)
+
+            pos = assign(C)
+            for j in range(kc):  # Lloyd update; an empty cluster keeps its seed
+                m = pos == j
+                if m.any():
+                    C[j] = np.round(V[m].mean(axis=0), 6)
+            pos = assign(C)
             return pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].astype("int64"),
                     "v": pdf["v"],
-                    "cell": np.full(n_c, base, dtype="int64"),
+                    "cell": (base + pos).astype("int64"),
                 }
             )
-        V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-        C = V[:kc].copy()  # seeds: the cell's lowest vec_ids
 
-        def assign(cents):
-            # argmin ‖v−c‖² = ‖c‖² − 2 v·c (‖v‖² constant per row);
-            # numpy argmin takes the FIRST minimal index = lowest local
-            # cell, the flat build's tie rule
-            return (
-                (cents * cents).sum(axis=1)[None, :] - 2.0 * (V @ cents.T)
-            ).argmin(axis=1)
-
-        pos = assign(C)
-        for j in range(kc):  # Lloyd update; an empty cluster keeps its seed
-            m = pos == j
-            if m.any():
-                C[j] = np.round(V[m].mean(axis=0), 6)
-        pos = assign(C)
-        return pd.DataFrame(
-            {
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "v": pdf["v"],
-                "cell": (base + pos).astype("int64"),
-            }
+        return (
+            a.select("vec_id", "v", "cell")
+            .groupBy("cell")
+            .applyInPandas(fine, "vec_id bigint, v array<double>, cell bigint")
+            # coalesce-before-cache: see tokenized.source_gram_masks
+            .coalesce(a.sparkSession.sparkContext.defaultParallelism)
+            .cache()
         )
 
-    assigned = (
-        a.select("vec_id", "v", "cell")
-        .groupBy("cell")
-        .applyInPandas(fine, "vec_id bigint, v array<double>, cell bigint")
-        # coalesce-before-cache: see tokenized.source_gram_masks
-        .coalesce(a.sparkSession.sparkContext.defaultParallelism)
-        .cache()
-    )
-    memo[sf_dir] = assigned
-    return assigned
+    return memo(spark, (_twolevel_assigned, sf_dir), build)
 
 
 @register(

@@ -8,10 +8,10 @@ split+hash over ~3 GB of text IS the compute bill for the governance
 queries (VERDICT r9 #5: source_similarity_jaccard 21.0 s and
 duplicate_spans 15.2 s, both re-tokenizing the full corpus per query).
 
-The engine owns the write path, so the fix is the `typed_events` pattern
-(plans/typed_events.py — the parse-at-ingest precedent the round-7
-verdict accepted): tokenize ONCE per corpus into a column-pruned parquet
-side table and serve every consumer from it:
+The engine owns the write path, so the fix is a `tables.side_table`
+(the parse-at-ingest precedent `plans/typed_events.py` set in round 7):
+tokenize ONCE per corpus into a column-pruned parquet side table and
+serve every consumer from it:
 
 - ``w``  — ``whitespace_tokens(text)`` verbatim (the Q32 contract);
 - ``th`` — per-token xxhash64 (duplicate_spans' pre-hash contract);
@@ -24,48 +24,21 @@ string work at query time. Queries keep their oracles unchanged: the
 oracle still tokenizes ``documents.text`` per query (DuckDB has no
 ingest path), which is exactly the comparison the scale story needs.
 
-Publication is atomic (staged dir + os.rename), keyed by a digest of the
-source parquet's identity so a regenerated fixture re-materializes —
-identical discipline to `_typed_dir`. bench.py materializes this in its
+The side table is keyed by the source parquet's identity, so a
+regenerated fixture re-materializes. bench.py materializes this in its
 warm/write-path section (the typed_events accounting), so the build is
 billed to ingest, not to the alphabetically-first text query.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
-import tempfile
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.text import whitespace_tokens, word_ngram_hashes
-from event_store_spark.tables import load_table, parquet_identity, table_path
-
-_TOK_MEMO: "WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-
-def _tok_dir(sf_dir: str) -> str:
-    """Per-corpus cache dir keyed by the documents parquet's identity.
-
-    The digest covers the RECURSIVE part-file listing (relative path,
-    size, mtime of every data file; `tables.parquet_identity`), not just
-    the directory entry: replacing part files in place (same names —
-    e.g. `cp` over a fixture) leaves directory stats unchanged at every
-    level, and a top-level-only key could silently serve stale tokens
-    for a regenerated partitioned corpus (ADVICE r10/r11)."""
-    src = table_path(sf_dir, "documents")
-    digest = hashlib.md5(
-        f"v{_TOK_SCHEMA_VERSION}|{parquet_identity(src)}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(
-        tempfile.gettempdir(), "event_store_spark_tok", digest, "documents_tok"
-    )
+from event_store_spark.tables import load_table, memo, side_table, table_path
 
 
 #: winnow-at-ingest selection (r12, VERDICT r11 #2): the per-doc DISTINCT
@@ -91,9 +64,10 @@ ELSE CAST(array() AS array<bigint>)
 END
 """
 
-#: bump when the projection's schema changes so corpus cache dirs from
-#: older layouts re-materialize instead of missing columns
-_TOK_SCHEMA_VERSION = 2
+#: side-table name; bump its version when the projection's schema changes
+#: so corpus cache dirs from older layouts re-materialize instead of
+#: missing columns
+TOK_TABLE = "documents_tok-v2"
 
 
 def tokenized_projection(df: DataFrame) -> DataFrame:
@@ -124,45 +98,23 @@ def tokenized_docs(spark: SparkSession, sf_dir: str, docs_fn=None) -> DataFrame:
     ONLY when ``sf_dir`` has no documents parquet (unit tests inject an
     in-memory corpus by patching the CALLER's ``load_table``); the
     projection then runs inline, unmaterialized and unmemoized."""
-    memo = _TOK_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
+    if docs_fn is not None and not os.path.exists(table_path(sf_dir, "documents")):
+        return tokenized_projection(docs_fn())
 
-    try:
-        final = _tok_dir(sf_dir)
-    except OSError:
-        src = docs_fn() if docs_fn else load_table(spark, sf_dir, "documents")
-        return tokenized_projection(src)
-    if not os.path.isdir(final):
-        tok = tokenized_projection(load_table(spark, sf_dir, "documents"))
-        staged = f"{final}.staged-{os.getpid()}"
+    def write(out: str) -> None:
         # 8 files: same local scan-parallelism sweet spot as typed_events
-        tok.repartition(8).write.mode("overwrite").parquet(staged)
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        try:
-            os.rename(staged, final)  # atomic publish
-        except OSError:
-            # Losing the publish race is fine (final exists, drop ours);
-            # any other rename failure must surface, not turn into a
-            # confusing missing-path read after the staged dir is gone
-            # (ADVICE r10).
-            shutil.rmtree(staged, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
+        tokenized_projection(load_table(spark, sf_dir, "documents")).repartition(
+            8
+        ).write.mode("overwrite").parquet(out)
 
-    df = spark.read.parquet(final)
-    memo[sf_dir] = df
-    return df
+    return memo(
+        spark,
+        (tokenized_docs, sf_dir),
+        lambda: spark.read.parquet(
+            side_table(spark, sf_dir, "documents", TOK_TABLE, write)
+        ),
+    )
 
-
-_GRAM_SETS_MEMO: "WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-_GRAM_MASKS_MEMO: "WeakKeyDictionary[SparkSession, dict[str, object]]" = (
-    WeakKeyDictionary()
-)
 
 #: mask form applies while the source catalog fits this many bits — the
 #: consumers build k + k(k−1)/2 aggregate columns over the mask table
@@ -190,41 +142,35 @@ def source_gram_masks(spark: SparkSession, sf_dir: str, docs_fn=None):
     (the mad_outliers bounded-fold discipline; a source catalog is a
     mixture-design artifact, not corpus-scaled). Same memo+cache
     accounting as `source_gram_sets`."""
-    memo = _GRAM_MASKS_MEMO.setdefault(spark, {})
-    if sf_dir in memo:
-        return memo[sf_dir]
-    tok = tokenized_docs(spark, sf_dir, docs_fn=docs_fn)
-    sources = sorted(
-        r["source"] for r in tok.select("source").distinct().collect()
-    )
-    if len(sources) > GRAM_MASK_MAX_SOURCES:
-        memo[sf_dir] = None
-        return None
-    bit = F.create_map(
-        *[
-            x
-            for i, s in enumerate(sources)
-            for x in (F.lit(s), F.lit(1 << i).cast("long"))
-        ]
-    )
-    out = (
-        tok.select(bit[F.col("source")].alias("b"), F.explode("g3").alias("g"))
-        .groupBy("g")
-        .agg(F.expr("bit_or(b)").alias("mask"))
-        # the aggregate caches at the session's FULL initial shuffle width
-        # (8×cores — AQE's runtime coalescing does not rewrite the cached
-        # plan), and every consumer then pays per-partition task overhead
-        # on ~hundred-row partitions; narrow without a shuffle
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    memo[sf_dir] = (out, sources)
-    return memo[sf_dir]
 
+    def build():
+        tok = tokenized_docs(spark, sf_dir, docs_fn=docs_fn)
+        sources = sorted(
+            r["source"] for r in tok.select("source").distinct().collect()
+        )
+        if len(sources) > GRAM_MASK_MAX_SOURCES:
+            return None
+        bit = F.create_map(
+            *[
+                x
+                for i, s in enumerate(sources)
+                for x in (F.lit(s), F.lit(1 << i).cast("long"))
+            ]
+        )
+        out = (
+            tok.select(bit[F.col("source")].alias("b"), F.explode("g3").alias("g"))
+            .groupBy("g")
+            .agg(F.expr("bit_or(b)").alias("mask"))
+            # the aggregate caches at the session's FULL initial shuffle width
+            # (8×cores — AQE's runtime coalescing does not rewrite the cached
+            # plan), and every consumer then pays per-partition task overhead
+            # on ~hundred-row partitions; narrow without a shuffle
+            .coalesce(spark.sparkContext.defaultParallelism)
+            .cache()
+        )
+        return out, sources
 
-_GRAM_COMATRIX_MEMO: "WeakKeyDictionary[SparkSession, dict[str, object]]" = (
-    WeakKeyDictionary()
-)
+    return memo(spark, (source_gram_masks, sf_dir), build)
 
 
 def source_gram_comatrix(spark: SparkSession, sf_dir: str, docs_fn=None):
@@ -243,47 +189,46 @@ def source_gram_comatrix(spark: SparkSession, sf_dir: str, docs_fn=None):
     same accounting as the mask build it derives from; the fold runs
     once per (session, corpus) and is billed to the first consumer's
     execution."""
-    memo = _GRAM_COMATRIX_MEMO.setdefault(spark, {})
-    if sf_dir in memo:
-        return memo[sf_dir]
-    got = source_gram_masks(spark, sf_dir, docs_fn=docs_fn)
-    if got is None:
-        memo[sf_dir] = None
-        return None
-    per_gram, sources = got
-    k = len(sources)
 
-    def _fold(batches):
-        import numpy as np
-        import pyarrow as pa
+    def build():
+        got = source_gram_masks(spark, sf_dir, docs_fn=docs_fn)
+        if got is None:
+            return None
+        per_gram, sources = got
+        k = len(sources)
 
-        m = np.zeros((k, k), dtype=np.int64)
-        for batch in batches:
-            masks = batch.column(0).to_numpy(zero_copy_only=False)
-            bits = (masks[:, None] >> np.arange(k)) & 1
-            m += bits.T @ bits
-        iu = np.triu_indices(k)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(iu[0].astype("int32")),
-                pa.array(iu[1].astype("int32")),
-                pa.array(m[iu]),
-            ],
-            names=["i", "j", "n"],
+        def _fold(batches):
+            import numpy as np
+            import pyarrow as pa
+
+            m = np.zeros((k, k), dtype=np.int64)
+            for batch in batches:
+                masks = batch.column(0).to_numpy(zero_copy_only=False)
+                bits = (masks[:, None] >> np.arange(k)) & 1
+                m += bits.T @ bits
+            iu = np.triu_indices(k)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(iu[0].astype("int32")),
+                    pa.array(iu[1].astype("int32")),
+                    pa.array(m[iu]),
+                ],
+                names=["i", "j", "n"],
+            )
+
+        counts = (
+            per_gram.select("mask")
+            .mapInArrow(_fold, "i int, j int, n long")
+            .groupBy("i", "j")
+            .agg(F.sum("n").alias("n"))
+            # ≤k(k+1)/2 rows: one cached block; the GEMM stage upstream of
+            # the exchange keeps the mask cache's width
+            .coalesce(1)
+            .cache()
         )
+        return counts, sources
 
-    counts = (
-        per_gram.select("mask")
-        .mapInArrow(_fold, "i int, j int, n long")
-        .groupBy("i", "j")
-        .agg(F.sum("n").alias("n"))
-        # ≤k(k+1)/2 rows: one cached block; the GEMM stage upstream of
-        # the exchange keeps the mask cache's width
-        .coalesce(1)
-        .cache()
-    )
-    memo[sf_dir] = (counts, sources)
-    return memo[sf_dir]
+    return memo(spark, (source_gram_comatrix, sf_dir), build)
 
 
 def source_gram_sets(spark: SparkSession, sf_dir: str, docs_fn=None) -> DataFrame:
@@ -297,18 +242,14 @@ def source_gram_sets(spark: SparkSession, sf_dir: str, docs_fn=None) -> DataFram
     (source, gram) table once per consumer, shuffling the gram space
     twice per query. Bounded by the distinct-gram space; at 100 TB this
     IS the persisted vocabulary index a curation pipeline maintains."""
-    memo = _GRAM_SETS_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
-    out = (
-        tokenized_docs(spark, sf_dir, docs_fn=docs_fn)
+    return memo(
+        spark,
+        (source_gram_sets, sf_dir),
+        lambda: tokenized_docs(spark, sf_dir, docs_fn=docs_fn)
         .select("source", F.explode("g3").alias("g"))
         .groupBy("g")
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
         # same cached-width note as `source_gram_masks`
         .coalesce(spark.sparkContext.defaultParallelism)
-        .cache()
+        .cache(),
     )
-    memo[sf_dir] = out
-    return out

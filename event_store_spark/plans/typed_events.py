@@ -13,45 +13,22 @@ table; every subsequent query is a flat typed scan with zero JSON work.
 forms (q28 at plans/relational.py, q52 at plans/relational_ext2.py) stay
 registered as the fallback for corpora the engine did not ingest.
 
-Publication is atomic (write staged dir, os.rename into place) following
-the repo's pointer-flip discipline, keyed by a digest of the source
-parquet's identity (path, mtime, size) so a regenerated fixture
-invalidates the cache. In production this column would be materialized by
-`EventStore.append` itself at write time; the side table is the batch
-backfill of exactly that layout.
+The table is a `tables.side_table`: written once per corpus, published
+with one rename and keyed by the source parquet's identity (every data
+file's path, size and mtime), so a regenerated fixture invalidates it.
+In production this column would be materialized by `EventStore.append`
+itself at write time; the side table is the batch backfill of exactly
+that layout.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
+from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import load_table, parquet_identity, table_path
-
-_TYPED_MEMO: "WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-
-def _typed_dir(sf_dir: str) -> str:
-    """Deterministic per-corpus cache dir keyed by the source parquet's
-    identity. As in `plans.tokenized._tok_dir` (ADVICE r10/r11), the
-    digest covers the RECURSIVE part-file listing — relative path, size,
-    mtime per data file (`tables.parquet_identity`) — so replacing part
-    files in place (same names, any nesting level) still invalidates."""
-    src = table_path(sf_dir, "events")
-    digest = hashlib.md5(parquet_identity(src).encode()).hexdigest()[:16]
-    return os.path.join(
-        tempfile.gettempdir(), "event_store_spark_typed", digest, "events_typed"
-    )
+from event_store_spark.tables import load_table, memo, side_table
 
 
 def typed_projection(df: DataFrame) -> DataFrame:
@@ -80,35 +57,24 @@ def typed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced by typed projections). Materialized once per corpus; served
     as a plain parquet scan thereafter — scans prune to the queried
     typed column, and no JSON parser runs at query time."""
-    memo = _TYPED_MEMO.setdefault(spark, {})
-    got = memo.get(sf_dir)
-    if got is not None:
-        return got
 
-    final = _typed_dir(sf_dir)
-    if not os.path.isdir(final):
-        typed = typed_projection(load_table(spark, sf_dir, "events"))
-        staged = f"{final}.staged-{os.getpid()}"
+    def write(out: str) -> None:
         # Spread the write so readers scan in parallel: the fixture arrives
         # as 1-2 row-groups, and a single-file typed table would serialize
         # every downstream agg on one core. At cluster scale the append
         # path's natural partitioning does this; here 8 files ~ the local
         # sweet spot (scan threads vs per-file footer overhead).
-        typed.repartition(8).write.mode("overwrite").parquet(staged)
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        try:
-            os.rename(staged, final)  # atomic publish
-        except OSError:
-            # Losing the publish race is fine (final exists — theirs is
-            # equivalent); any other rename failure must surface rather
-            # than become a missing-path read (ADVICE r10, as tokenized)
-            shutil.rmtree(staged, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
+        typed_projection(load_table(spark, sf_dir, "events")).repartition(
+            8
+        ).write.mode("overwrite").parquet(out)
 
-    df = spark.read.parquet(final)
-    memo[sf_dir] = df
-    return df
+    return memo(
+        spark,
+        (typed_events, sf_dir),
+        lambda: spark.read.parquet(
+            side_table(spark, sf_dir, "events", "events_typed", write)
+        ),
+    )
 
 
 @register(

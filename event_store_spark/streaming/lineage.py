@@ -20,7 +20,7 @@ import os
 def checkpoint_lineage_id(ckpt_dir: str) -> str:
     """Return the lineage id for a checkpoint dir, minting one if absent.
 
-    The mint is ATOMIC (temp file + os.replace) and an empty marker is
+    The mint is ATOMIC (`core.state.atomic_write`) and an empty marker is
     treated as absent: a plain truncate-then-write could be killed mid-way,
     leaving an existing empty marker that would be returned as lineage ''
     forever — and two checkpoints sharing lineage '' makes their batch ids
@@ -36,21 +36,12 @@ def checkpoint_lineage_id(ckpt_dir: str) -> str:
             return existing
     except FileNotFoundError:
         pass
-    import tempfile
     import uuid
 
+    from event_store_spark.core.state import atomic_write
+
     ckpt_id = uuid.uuid4().hex
-    fd, tmp = tempfile.mkstemp(dir=ckpt_dir)
-    try:
-        with os.fdopen(fd, "w") as f:
-            f.write(ckpt_id)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, marker)
-    except BaseException:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-        raise
+    atomic_write(marker, ckpt_id)
     # a concurrent minter may have won the replace race — the file's
     # content, not our local value, is the lineage
     with open(marker) as f:

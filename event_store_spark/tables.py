@@ -1,14 +1,31 @@
-"""Test-fixture table loading (TESTDATA.md star schema + events/documents/embeddings).
+"""Fixture tables, and the one cache for everything derived from them.
 
 ``load_tables`` reads each parquet lazily — Catalyst prunes columns and pushes
 filters into the scan, so loading "all tables" costs nothing until an action.
 At cluster scale the same call works over directory-partitioned datasets; the
 paths are the only local-mode artifact.
+
+Every derived artifact the plans layer reuses goes through one of two
+mechanisms here, never a module-level dict of its own:
+
+- ``memo(spark, key, build)`` — the per-session store (analyzed table
+  scans, cached projections, trained indexes, shared builds). Each key
+  leads with its builder function, so keys from different builders
+  cannot collide. Entries of a session whose context has stopped are
+  dropped on the next miss.
+- ``side_table(spark, sf_dir, table, name, write)`` — the write-once
+  per-corpus directory (typed events, tokenized documents, verify
+  sketches, BM25 postings), keyed by the source table's on-disk
+  identity and published with one rename.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,8 +52,8 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def parquet_identity(src: str) -> str:
-    """Content identity of a parquet table on disk, for cache-dir keys
-    (`plans.tokenized._tok_dir` / `plans.typed_events._typed_dir`).
+    """Content identity of a parquet table on disk, the key of its side
+    tables (`side_table_dir`).
 
     Walks the tree RECURSIVELY and digests (relative path, size,
     mtime_ns) of every DATA file: a top-level-only listing stats
@@ -61,16 +78,76 @@ def parquet_identity(src: str) -> str:
     return os.path.realpath(src) + "||" + ";".join(parts)
 
 
-#: analyzed-DataFrame memo per live session — schema inference costs ~75 ms
-#: of py4j + footer reads per `spark.read.parquet`, which multiplied across
-#: a 79-query suite is seconds of pure driver overhead. Fixture tables are
-#: immutable, and a DataFrame is an immutable plan, so reuse is safe; keyed
-#: weakly by session so a restarted session re-reads.
-from weakref import WeakKeyDictionary
+#: session -> {key: artifact}: the one per-session store behind `memo`
+_SESSION_MEMO: dict = {}
 
-_TABLE_MEMO: "WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    WeakKeyDictionary()
-)
+
+def memo(spark: SparkSession, key: tuple, build: Callable[[], object] | None = None):
+    """The session's artifact for ``key``, running ``build()`` on a miss
+    and keeping its result (``None`` included). ``key`` starts with the
+    builder function, e.g. ``(_minhash_candidates, sf_dir)``. With no
+    ``build`` this only looks up: a miss returns None and stores nothing.
+
+    A memoized DataFrame holds its session, so a weak session key would
+    never free anything; instead a miss drops the entries of every
+    session whose context has stopped."""
+    entries = _SESSION_MEMO.get(spark)
+    if entries is not None and key in entries:
+        return entries[key]
+    if build is None:
+        return None
+    for stopped in [s for s in _SESSION_MEMO if s.sparkContext._jsc is None]:
+        del _SESSION_MEMO[stopped]
+    value = build()
+    _SESSION_MEMO.setdefault(spark, {})[key] = value
+    return value
+
+
+def forget(spark: SparkSession, key: tuple):
+    """Drop the session's entry for ``key`` and return it (None if absent).
+    Unpersisting a cached entry is the caller's job."""
+    return _SESSION_MEMO.get(spark, {}).pop(key, None)
+
+
+def side_table_dir(sf_dir: str, table: str, name: str) -> str:
+    """Where the side table ``name`` derived from ``table`` lives: a
+    temp-dir path keyed by ``name`` (which carries any layout version)
+    and the source's `parquet_identity`, so an in-place rewrite of the
+    source gets a fresh directory. Raises OSError if the source cannot
+    be read."""
+    ident = f"{name}|{parquet_identity(table_path(sf_dir, table))}"
+    digest = hashlib.md5(ident.encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), "event_store_spark_side", digest, name)
+
+
+def side_table(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    name: str,
+    write: Callable[[str], None],
+) -> str:
+    """The published directory of side table ``name`` over ``sf_dir``'s
+    ``table``, writing it first if this corpus identity has none.
+
+    ``write(staged)`` fills a private staging directory, which one
+    ``os.rename`` publishes. Losing the publish race keeps the winner's
+    directory (the two are equivalent); any other rename failure raises
+    rather than become a missing-path read later. An unreadable source
+    raises OSError before anything is written."""
+    final = side_table_dir(sf_dir, table, name)
+    if not os.path.isdir(final):
+        staged = f"{final}.staged-{os.getpid()}"
+        shutil.rmtree(staged, ignore_errors=True)
+        write(staged)
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        try:
+            os.rename(staged, final)
+        except OSError:
+            shutil.rmtree(staged, ignore_errors=True)
+            if not os.path.isdir(final):
+                raise
+    return final
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -81,12 +158,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timestamp[ns]. We read nanos as epoch-int64 via the legacy conf and
     rebuild a TimestampType column (exact: the fixture has no sub-microsecond
     components, and `div 1000` floors identically to DuckDB's ns→us cast).
-    """
-    memo = _TABLE_MEMO.setdefault(spark, {})
-    cached = memo.get((sf_dir, name))
-    if cached is not None:
-        return cached
 
+    The analyzed DataFrame is memoized per session: schema inference costs
+    ~75 ms of py4j + footer reads per `spark.read.parquet`, which across a
+    79-query suite is seconds of pure driver overhead. Fixture tables are
+    immutable and a DataFrame is an immutable plan, so reuse is safe.
+    """
+    return memo(
+        spark, (load_table, sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from event_store_spark.shipping import ensure_shipped
@@ -112,14 +195,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
-    memo[(sf_dir, name)] = df
     return df
-
-
-#: memoized hot projections — see hot_table
-_HOT_MEMO: "WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]]" = (
-    WeakKeyDictionary()
-)
 
 
 def hot_table(
@@ -137,19 +213,15 @@ def hot_table(
     events 3x for 0.04 s of actual aggregation). At 100 TB the same
     pattern holds per projection, not per table: cache what a query
     family re-reads (events is ~3 % of corpus bytes), never the wide
-    fact tables. Entries release through the benchmark fence like every
-    other memoized artifact (plans/cache_release.py)."""
-    key = (sf_dir, name, tuple(cols) if cols else None)
-    memo = _HOT_MEMO.setdefault(spark, {})
-    got = memo.get(key)
-    if got is not None:
-        return got
-    df = load_table(spark, sf_dir, name)
-    if cols:
-        df = df.select(*cols)
-    df = df.cache()
-    memo[key] = df
-    return df
+    fact tables. Entries live in the session store (`memo`) and are
+    dropped with it once the session stops."""
+    cols = tuple(cols) if cols else None
+
+    def build() -> DataFrame:
+        df = load_table(spark, sf_dir, name)
+        return (df.select(*cols) if cols else df).cache()
+
+    return memo(spark, (hot_table, sf_dir, name, cols), build)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

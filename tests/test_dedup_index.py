@@ -258,3 +258,23 @@ def test_registered_query_sees_append_and_rebuild(spark, docs, tmp_path):
         assert QUERIES[name](spark, SF).count() == n_rebuilt
     finally:
         QUERIES.pop(name, None)
+
+
+def test_rebuild_over_existing_index_retires_segments(spark, docs, tmp_path):
+    """build → append → build at the same path serves exactly the second
+    build's corpus: the first generation's appended segment is retired,
+    not unioned on as duplicate signature rows."""
+    path = str(tmp_path / "rb")
+    base = docs.where(~F.col("source").isin(NEW_SOURCE, "src2"))
+    grown = docs.where(F.col("source") != NEW_SOURCE)
+    DedupIndex.build(spark, base, path, "simhash64")
+    DedupIndex.open(spark, path).append(
+        docs.where(F.col("source") == "src2"), batch_id=0
+    )
+    idx = DedupIndex.build(spark, grown, path, "simhash64")
+
+    sig = idx.signatures()
+    assert sig.count() == sig.select("doc_id", "block_idx").distinct().count()
+    want = DedupIndex.build(spark, grown, str(tmp_path / "fresh"), "simhash64")
+    assert sorted(rows(sig)) == sorted(rows(want.signatures()))
+    assert not [d for d in os.listdir(path) if d.startswith("segment")]

@@ -364,14 +364,15 @@ def test_profile_columns_single_scan_single_heavy_exchange(spark, sf_correct):
     from event_store_spark.plans import pipeline6 as _p6
     from event_store_spark.plans.pipeline6 import PROFILE_COLS
 
+    from event_store_spark.tables import forget
+
     # force the COLD plan: the (col, value) count table is memoized per
-    # session AND persisted — clearing the dict alone is not enough,
+    # session AND persisted — dropping the memo entry alone is not enough,
     # because the CacheManager substitutes any still-persisted relation
     # whose logical plan matches the rebuilt one
-    memo = _p6._PROFILE_MEMO.setdefault(spark, {})
-    for _df in memo.values():
-        _df.unpersist()
-    memo.clear()
+    per_val = forget(spark, (_p6.profile_columns, sf_correct, tuple(PROFILE_COLS)))
+    if per_val is not None:
+        per_val.unpersist()
     plan = _plan(spark, sf_correct, "profile_columns")
     assert plan.count("Scan parquet") == 1, plan.count("Scan parquet")
     assert "Expand" not in plan
@@ -412,10 +413,9 @@ def test_bpe_chain_is_checkpointed_and_shared(spark, sf_correct):
     and (b) `bpe_encoded_stats` is ONE hash agg over the shared merged
     corpus, not a re-derivation of the merge chain."""
     from event_store_spark.plans import pipeline7 as p7
+    from event_store_spark.tables import forget
 
-    memo = p7._BPE_MEMO.get(spark)
-    if memo is not None:
-        memo.pop(sf_correct, None)  # force a fresh build
+    forget(spark, (p7._bpe_build, sf_correct))  # force a fresh build
     plan = _plan(spark, sf_correct, "bpe_train_merges")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Scan parquet" not in plan  # rides the checkpointed argmaxes

@@ -211,3 +211,22 @@ def test_registered_query_sees_append(spark, corpus, tmp_path):
         assert QUERIES[name](spark, SF).count() == n_now
     finally:
         QUERIES.pop(name, None)
+
+
+def test_rebuild_over_existing_index_replaces_it(spark, corpus, tmp_path):
+    """build → append → build at the same path publishes the second
+    build as a new generation and retires the old segments; the rebuild
+    must not be mistaken for a lost publish race that keeps old rows."""
+    base, arriving, _ = corpus
+    path = str(tmp_path / "ix")
+    PostingsIndex.build(spark, base, path)
+    PostingsIndex.open(spark, path).append(arriving, batch_id=0)
+    idx = PostingsIndex.build(spark, base, path)
+
+    want = PostingsIndex.build(spark, base, str(tmp_path / "fresh"))
+    assert idx.stats() == want.stats()
+    assert idx.postings().count() == want.postings().count()
+    assert _scores(idx.probe(QUERY_TERMS)) == _scores(want.probe(QUERY_TERMS))
+    assert not [
+        d for d in os.listdir(path) if d.startswith(("segment", "segmeta"))
+    ]

@@ -31,10 +31,9 @@ from event_store_spark.plans.ivf import ADAPTIVE_TARGET, GEMM_ASSIGN_K
 from event_store_spark.plans.semantic import (
     SEM_MAX_CELL,
     TL_CELL_STRIDE,
-    _TL_MEMO,
     _twolevel_assigned,
 )
-from event_store_spark.tables import TABLE_NAMES, load_table
+from event_store_spark.tables import TABLE_NAMES, forget, load_table
 
 SRC = "/root/testdata/sf0.001"
 COPIES = 24  # 24 * 500 = 12000 vectors -> k = 24 > GEMM_ASSIGN_K
@@ -116,7 +115,7 @@ def test_twolevel_report_integrity_and_determinism(spark, synth_dir):
     )
     assert any(r["dropped_cnt"] > 0 for r in rows1)  # perturbed copies dup
     # a fresh build (memo cleared) reproduces the identical report
-    _TL_MEMO.setdefault(spark, {}).pop(synth_dir, None)
+    forget(spark, (_twolevel_assigned, synth_dir))
     rows2 = QUERIES["semantic_dedup_twolevel"](spark, synth_dir).collect()
     assert [tuple(r) for r in rows1] == [tuple(r) for r in rows2]
 

@@ -4,7 +4,12 @@ side table (plans/tokenized.py) — pins the ADVICE r10 fixes."""
 import os
 import shutil
 
-from event_store_spark.plans.tokenized import _tok_dir
+from event_store_spark.plans.tokenized import TOK_TABLE
+from event_store_spark.tables import side_table_dir
+
+
+def _tok_dir(sf_dir: str) -> str:
+    return side_table_dir(sf_dir, "documents", TOK_TABLE)
 
 
 def _write_corpus(dirpath):

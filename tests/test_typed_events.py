@@ -13,11 +13,15 @@ from __future__ import annotations
 import os
 
 from event_store_spark.plans.typed_events import (
-    _typed_dir,
     q28_typed,
     q52_typed,
     typed_events,
 )
+from event_store_spark.tables import side_table_dir
+
+
+def _typed_dir(sf_dir: str) -> str:
+    return side_table_dir(sf_dir, "events", "events_typed")
 
 
 def _executed_plan(df) -> str:
