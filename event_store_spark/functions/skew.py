@@ -12,7 +12,7 @@ plan (proved by the equivalence tests), only the shuffle layout changes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

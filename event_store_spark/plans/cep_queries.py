@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import hot_table, load_table
+from event_store_spark.tables import hot_table
 
 CEP_WITHIN_US = 172_800_000_000  # 48 h (fixture events are ~7 h apart per user)
 

@@ -28,10 +28,11 @@ module makes that layout real):
   caller's residual exactly as in `dedup_incremental` — signatures
   alone cannot compute Jaccard); SimHash probes are self-sufficient
   and return each new doc's best match within Hamming ≤ 3.
-- ``append(batch_docs)`` — fold a new batch's signatures into a
-  SEGMENT directory (the admitted batch becomes part of the corpus the
-  NEXT batch probes against).
-- ``compact()`` — merge base + segment into a fresh generation behind
+- ``append(batch_docs, batch_id)`` — a new batch's signatures become
+  the batch's segment of a `SegmentLog` under ``segments/`` (the
+  admitted batch becomes part of the corpus the NEXT batch probes
+  against).
+- ``compact()`` — merge base + segments into a fresh generation behind
   `GenerationPair`'s atomic pointer flip (deferred GC for in-flight
   readers, segment-wins on doc_id collisions — the same rules the ANN
   compactions follow).
@@ -55,7 +56,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.generations import GenerationPair
+from event_store_spark.plans.generations import GenerationPair, SegmentLog
 
 KINDS = ("minhash", "simhash64", "winnow", "substring")
 
@@ -198,6 +199,7 @@ class DedupIndex:
         self.path = path
         self.kind = kind
         self._gen = GenerationPair(path, "sigs", "meta.json")
+        self._log = SegmentLog(spark, os.path.join(path, "segments"))
 
     # ----------------------------------------------------------- lifecycle
 
@@ -210,8 +212,6 @@ class DedupIndex:
         original layout, meta written LAST as the completeness marker).
         A rebuild over an existing index replaces it: segments appended
         to the old generation are retired after the flip."""
-        import shutil
-
         if kind not in KINDS:
             raise ValueError(f"kind must be one of {KINDS}, got {kind!r}")
         idx = cls(spark, path, kind)
@@ -223,8 +223,7 @@ class DedupIndex:
             .parquet(out),
             meta=json.dumps({"kind": kind, "format": 1}),
         )
-        for seg_path in idx._segment_dirs():
-            shutil.rmtree(seg_path, ignore_errors=True)
+        idx._log.retire(idx._log.ids())
         return idx
 
     @classmethod
@@ -233,32 +232,13 @@ class DedupIndex:
             kind = json.load(fh)["kind"]
         return cls(spark, path, kind)
 
-    def _segment_dirs(self) -> list[str]:
-        """All segment directories: the unkeyed ``segment`` plus any
-        batch-keyed ``segment-b<id>`` dirs (streaming appends). Dirs
-        holding no parquet data file (a crash between an empty
-        partitioned write's _SUCCESS and `append`'s skip-guard) are
-        ignored — a partitioned dir without data files has no readable
-        schema and would wedge every subsequent read."""
-        return sorted(
-            p
-            for name in os.listdir(self.path)
-            if name == "segment" or name.startswith("segment-b")
-            if os.path.isdir(p := os.path.join(self.path, name))
-            if any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(p)
-                for f in files
-            )
-        )
-
     def signatures(self, include_segment: bool = True) -> DataFrame:
         """The live signature table (lazy, partition-prunable); segment
         rows union on when present so probes see appended batches."""
         live_dir, _ = self._gen.live()
         sig = self.spark.read.parquet(os.path.join(self.path, live_dir))
         if include_segment:
-            for seg in self._segment_dirs():
+            for seg in self._log.paths():
                 sig = sig.unionByName(self.spark.read.parquet(seg))
         return sig
 
@@ -400,55 +380,30 @@ class DedupIndex:
 
     # --------------------------------------------------------- maintenance
 
-    def append(self, batch_docs: DataFrame, batch_id: int | None = None) -> None:
-        """Fold an (admitted) batch's signatures into a segment dir —
-        the next probe sees them without a base rewrite.
-
-        With ``batch_id`` (streaming `foreachBatch` callers) the batch
-        gets its OWN deterministic ``segment-b<id>`` directory written
-        with overwrite, so a crash-redelivered micro-batch rewrites its
-        segment instead of appending duplicate signature rows — the same
-        idempotent-by-name discipline as `write_avro_container_dist`'s
-        part files. Without it, rows append to the shared ``segment``.
-
-        A batch whose signature frame is EMPTY (every doc dropped
-        upstream, or every doc shorter than the scheme's minimum) writes
-        NOTHING: a partitioned overwrite of zero rows leaves a dir with
-        only _SUCCESS, whose schema cannot be inferred — one
-        all-duplicates micro-batch would wedge every later
-        `signatures()`/`probe`. The skip (plus removing a stale dir a
-        crashed redelivery might have left) keeps the segment set
-        readable and the append idempotent."""
-        import shutil
-
-        sig = _signatures(batch_docs, self.kind)
-        if batch_id is None:
-            if sig.isEmpty():
-                return
-            sig.write.mode("append").partitionBy(_PART_COL[self.kind]).parquet(
-                os.path.join(self.path, "segment")
-            )
-        else:
-            seg = os.path.join(self.path, f"segment-b{batch_id}")
-            if sig.isEmpty():
-                shutil.rmtree(seg, ignore_errors=True)
-            else:
-                sig.write.mode("overwrite").partitionBy(
-                    _PART_COL[self.kind]
-                ).parquet(seg)
+    def append(self, batch_docs: DataFrame, batch_id: int) -> None:
+        """Fold an (admitted) batch's signatures into the index as the
+        batch's own segment — the next probe sees them without a base
+        rewrite. A crash-redelivered micro-batch rewrites its segment
+        instead of appending duplicate signature rows, and a batch with
+        no signature rows (every doc dropped upstream, or shorter than
+        the scheme's minimum) leaves no segment (`SegmentLog.write`)."""
+        self._log.write(
+            batch_id,
+            _signatures(batch_docs, self.kind),
+            partition_by=(_PART_COL[self.kind],),
+        )
 
     def compact(self) -> None:
         """Merge base + every segment dir into a fresh generation and
         flip; no-op without segments. Collisions on doc_id resolve
         segment-wins (a re-ingested doc's newest signatures replace the
         base's), the ANN compactions' rule."""
-        import shutil
-
-        seg_dirs = self._segment_dirs()
-        if not seg_dirs:
+        ids = self._log.ids()
+        if not ids:
             return
         live_dir, _ = self._gen.live()
         base = self.spark.read.parquet(os.path.join(self.path, live_dir))
+        seg_dirs = self._log.paths(upto=ids[-1])
         seg = self.spark.read.parquet(seg_dirs[0])
         for extra in seg_dirs[1:]:
             seg = seg.unionByName(self.spark.read.parquet(extra))
@@ -464,5 +419,4 @@ class DedupIndex:
             .parquet(out),
             meta=json.dumps({"kind": self.kind, "format": 1}),
         )
-        for seg_path in seg_dirs:
-            shutil.rmtree(seg_path, ignore_errors=True)
+        self._log.retire(ids)

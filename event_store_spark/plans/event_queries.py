@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import hot_table, load_table
+from event_store_spark.tables import hot_table
 
 # fixed replay cursor for Q35 (mid-range of the 2024-01 event window)
 CURSOR_TS = "2024-01-10 00:00:00"

@@ -5,7 +5,7 @@ event and the way Structured Streaming's file sink commits a batch: the
 new version is written in full under a fresh name, then ONE atomic,
 fsync'd replace of a small pointer file (`write_pointer`) makes it live.
 Readers resolve through the pointer, so a crash at any point leaves
-either the old version or the new one fully live, never a mix. Two
+either the old version or the new one fully live, never a mix. Three
 shapes share that commit point:
 
 - `GenerationPair` — an index that is a PAIR of artifacts, a bulk
@@ -29,6 +29,19 @@ shapes share that commit point:
   replay of the committed one is skipped by the caller. The current
   version plus ``_KEEP_VERSIONS`` superseded ones stay on disk for
   readers mid-swap and for time travel.
+- `SegmentLog` — an artifact that grows one ``b<batch_id>`` segment
+  directory per streaming batch: the `JoinAggregateView` side copies,
+  `CurationPipeline`'s admitted corpus and seen-hash ledger, the
+  `DedupIndex` and `PostingsIndex` segments, and the typed and tokenized
+  ingest tables. Each segment's ``_SEGMENT.<batch_id>`` marker is its
+  commit point (written last; readers list markers, never directories),
+  and a fold rewrites the snapshot plus the oldest segments as one
+  ``snap<batch_id>`` directory behind the ``_SNAP`` pointer. A segment is
+  rewritten under its own batch id, so recomputing a replayed batch is
+  idempotent.
+
+Every pointer, segment marker and ``_SNAP`` included, is written through
+`write_pointer`.
 """
 
 from __future__ import annotations
@@ -44,6 +57,12 @@ from event_store_spark.core.state import atomic_write
 
 #: superseded `VersionedTable` versions retained beside the current one
 _KEEP_VERSIONS = 2
+#: `SegmentLog.fold` waits until this many segments are live below its
+#: bound: a long-lived stream otherwise grows one directory per batch
+SEGMENTS_PER_FOLD = 8
+#: `SegmentLog` names: per-batch marker prefix and fold pointer
+_MARKER = "_SEGMENT."
+_SNAP = "_SNAP"
 
 
 def write_pointer(path: str, text: str) -> None:
@@ -210,3 +229,138 @@ class VersionedTable:
                 shutil.rmtree(
                     os.path.join(self.target_path, stale), ignore_errors=True
                 )
+
+
+def _holds_rows(path: str) -> bool:
+    """Whether any parquet file under ``path`` holds a row. An empty
+    unpartitioned write leaves one schema-only file and an empty
+    partitioned one none; the footers answer without a Spark job."""
+    import pyarrow.parquet as pq
+
+    return any(
+        pq.read_metadata(os.path.join(d, f)).num_rows
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _id_after(name: str, prefix: str) -> int | None:
+    """``<prefix><int>`` → the int, anything else → None."""
+    rest = name[len(prefix):] if name.startswith(prefix) else ""
+    return int(rest) if rest.isdigit() else None
+
+
+class SegmentLog:
+    """The ``b<batch_id>`` segments of a batch-appended artifact at
+    ``root``, each live once its ``_SEGMENT.<batch_id>`` marker exists,
+    plus at most one live ``snap<w>`` fold of every segment ≤ ``w``."""
+
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        self.spark = spark
+        self.root = root
+
+    def _dir(self, batch_id: int) -> str:
+        return os.path.join(self.root, f"b{batch_id}")
+
+    def _marker(self, batch_id: int) -> str:
+        return os.path.join(self.root, f"{_MARKER}{batch_id}")
+
+    def _snapshot(self) -> tuple[int, str | None]:
+        """(watermark, snapshot dir name); (-1, None) before the first
+        fold. A malformed pointer raises: it never names no snapshot."""
+        try:
+            with open(os.path.join(self.root, _SNAP)) as fh:
+                text = fh.read()
+        except FileNotFoundError:
+            return -1, None
+        parts = text.split()
+        if len(parts) != 2 or not parts[0].isdigit():
+            raise ValueError(f"malformed {_SNAP} in {self.root}: {text!r}")
+        return int(parts[0]), parts[1]
+
+    def watermark(self) -> int:
+        """The highest batch id folded into the snapshot, -1 if none."""
+        return self._snapshot()[0]
+
+    def ids(self) -> list[int]:
+        """Marked segment ids above the watermark, in numeric order."""
+        w = self.watermark()
+        if not os.path.isdir(self.root):
+            return []
+        ids = (_id_after(n, _MARKER) for n in os.listdir(self.root))
+        return sorted(i for i in ids if i is not None and i > w)
+
+    def paths(self, upto: int | None = None) -> list[str]:
+        """The live snapshot, then the marked segments ≤ ``upto``."""
+        _, snap = self._snapshot()
+        out = [os.path.join(self.root, snap)] if snap else []
+        return out + [
+            self._dir(i) for i in self.ids() if upto is None or i <= upto
+        ]
+
+    def read(self, upto: int | None = None, schema=None) -> DataFrame:
+        """The live rows ≤ ``upto``; an empty ``schema`` frame when there
+        are none (with no schema, Spark's own no-input error)."""
+        paths = self.paths(upto)
+        if not paths and schema is not None:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.parquet(*paths)
+
+    def meta(self, batch_id: int) -> str:
+        """The text the segment's marker carries."""
+        with open(self._marker(batch_id)) as fh:
+            return fh.read()
+
+    def write(
+        self,
+        batch_id: int,
+        df: DataFrame,
+        partition_by: tuple[str, ...] = (),
+        meta: str = "",
+    ) -> None:
+        """Overwrite segment ``batch_id`` with ``df`` and mark it; a batch
+        with no rows leaves no segment, and one the snapshot already
+        holds is left alone."""
+        if batch_id <= self.watermark():
+            return
+        out, marker = self._dir(batch_id), self._marker(batch_id)
+        if os.path.exists(marker):
+            os.remove(marker)
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(out)
+        # a rewritten segment must not serve a listing cached before it
+        self.spark.catalog.refreshByPath(out)
+        if _holds_rows(out):
+            write_pointer(marker, meta)
+        else:
+            shutil.rmtree(out, ignore_errors=True)
+
+    def fold(self, upto: int) -> None:
+        """Once ``SEGMENTS_PER_FOLD`` live segments are ≤ ``upto``, write
+        the snapshot plus them as ``snap<upto>``, flip ``_SNAP`` to it,
+        then delete every segment ≤ ``upto`` and every other snapshot
+        (which also clears what a crash after an earlier flip left). The
+        snapshot is unpartitioned, so only unpartitioned logs fold."""
+        folded = [i for i in self.ids() if i <= upto]
+        if len(folded) < SEGMENTS_PER_FOLD:
+            return
+        name = f"snap{upto}"
+        out = os.path.join(self.root, name)
+        self.read(upto).write.mode("overwrite").parquet(out)
+        self.spark.catalog.refreshByPath(out)
+        write_pointer(os.path.join(self.root, _SNAP), f"{upto} {name}")
+        for n in os.listdir(self.root):
+            marked, seg = _id_after(n, _MARKER), _id_after(n, "b")
+            if marked is not None and marked <= upto:
+                os.remove(os.path.join(self.root, n))
+            elif (seg is not None and seg <= upto) or (
+                n.startswith("snap") and n != name
+            ):
+                shutil.rmtree(os.path.join(self.root, n), ignore_errors=True)
+
+    def retire(self, ids: list[int]) -> None:
+        """Delete segments ``ids``, each marker before its directory."""
+        for i in ids:
+            if os.path.exists(self._marker(i)):
+                os.remove(self._marker(i))
+            shutil.rmtree(self._dir(i), ignore_errors=True)

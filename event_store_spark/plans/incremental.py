@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from event_store_spark.functions.text import whitespace_tokens
 from event_store_spark.plans.llm import (
     LSH_BAND,
     N_MINHASH,

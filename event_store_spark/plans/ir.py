@@ -17,14 +17,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.core.state import atomic_write
-from event_store_spark.plans.generations import GenerationPair
+from event_store_spark.plans.generations import GenerationPair, SegmentLog
 from event_store_spark.tables import load_table, memo, side_table
 
 BM25_K1 = 1.2
@@ -89,13 +87,12 @@ class PostingsIndex:
       prune, the distributed analog of an index seek — then the standard
       Okapi scoring; document frequencies fall out of the rows read,
       (n_docs, avgdl) ride as literals from ``stats()``.
-    - ``append(docs, batch_id)``: an arriving batch's rows go to a
-      deterministic ``segment-b<id>`` dir (overwrite — crash redelivery
-      rewrites bytes, never duplicates) with its own ``segmeta-b<id>``
-      stats written LAST as the segment-complete marker; empty batches
-      write nothing and clear any stale dir (the DedupIndex empty-append
-      rule). Stats fold by integer addition, so probes over base +
-      segments score with the exact same avgdl a rebuild would.
+    - ``append(docs, batch_id)``: an arriving batch's rows become the
+      batch's segment of a `SegmentLog` under ``segments/`` (crash
+      redelivery rewrites bytes, never duplicates), and its integer
+      stats ride in the segment's marker, written LAST; an empty batch
+      leaves no segment. Stats fold by integer addition, so probes over
+      base + segments score with the exact same avgdl a rebuild would.
     - ``compact()``: merge base + segments into a fresh generation
       behind `GenerationPair`'s atomic pointer flip (deferred GC);
       doc_id collisions resolve segment-wins (a re-ingested doc's newest
@@ -107,6 +104,7 @@ class PostingsIndex:
         self.spark = spark
         self.path = path
         self._gen = GenerationPair(path, "rows", "meta.json")
+        self._log = SegmentLog(spark, os.path.join(path, "segments"))
 
     # ----------------------------------------------------------- lifecycle
 
@@ -127,7 +125,7 @@ class PostingsIndex:
             .parquet(out),
             meta=lambda out: json.dumps({**_doc_stats(docs), "format": 1}),
         )
-        idx._retire(idx._segments())
+        idx._log.retire(idx._log.ids())
         return idx
 
     @classmethod
@@ -137,31 +135,12 @@ class PostingsIndex:
             raise FileNotFoundError(f"no postings index at {path}")
         return cls(spark, path)
 
-    def _segments(self) -> list[str]:
-        """Complete segment ids: a segment counts only once its stats
-        marker exists (written last), so a crash mid-append is invisible
-        to readers."""
-        ids = (
-            name[len("segmeta-b"):-len(".json")]
-            for name in os.listdir(self.path)
-            if name.startswith("segmeta-b") and name.endswith(".json")
-        )
-        return sorted(
-            s
-            for s in ids
-            if os.path.isdir(os.path.join(self.path, f"segment-b{s}"))
-        )
-
     def postings(self, include_segments: bool = True) -> DataFrame:
         live_dir, _ = self._gen.live()
         post = self.spark.read.parquet(os.path.join(self.path, live_dir))
         if include_segments:
-            for seg in self._segments():
-                post = post.unionByName(
-                    self.spark.read.parquet(
-                        os.path.join(self.path, f"segment-b{seg}")
-                    )
-                )
+            for seg in self._log.paths():
+                post = post.unionByName(self.spark.read.parquet(seg))
         return post
 
     def stats(self) -> dict:
@@ -171,9 +150,8 @@ class PostingsIndex:
         with open(os.path.join(self.path, live_meta)) as fh:
             meta = json.load(fh)
         n_docs, sum_dl = meta["n_docs"], meta["sum_dl"]
-        for seg in self._segments():
-            with open(os.path.join(self.path, f"segmeta-b{seg}.json")) as fh:
-                m = json.load(fh)
+        for i in self._log.ids():
+            m = json.loads(self._log.meta(i))
             n_docs += m["n_docs"]
             sum_dl += m["sum_dl"]
         return {
@@ -215,20 +193,12 @@ class PostingsIndex:
     # --------------------------------------------------------- maintenance
 
     def append(self, docs: DataFrame, batch_id: int) -> None:
-        seg_dir = os.path.join(self.path, f"segment-b{batch_id}")
-        seg_meta = os.path.join(self.path, f"segmeta-b{batch_id}.json")
-        stats = _doc_stats(docs)
-        if stats["n_docs"] == 0:
-            shutil.rmtree(seg_dir, ignore_errors=True)
-            try:
-                os.remove(seg_meta)
-            except OSError:
-                pass
-        else:
-            _postings_rows(docs).write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(seg_dir)
-            atomic_write(seg_meta, json.dumps(stats))  # marker LAST
+        self._log.write(
+            batch_id,
+            _postings_rows(docs),
+            partition_by=("bucket",),
+            meta=json.dumps(_doc_stats(docs)),
+        )
 
     def compact(self) -> None:
         """Merge base + segments into a fresh generation and flip.
@@ -240,19 +210,15 @@ class PostingsIndex:
         contract). Before compaction a twice-ingested doc transiently
         double-counts in probes, the same disclosed window DedupIndex
         has; an ingest gate that feeds each doc once never sees it."""
-        segs = self._segments()
-        if not segs:
+        ids = self._log.ids()
+        if not ids:
             return
         live_dir, _ = self._gen.live()
         base = self.spark.read.parquet(os.path.join(self.path, live_dir))
         seg = None
-        # order by NUMERIC batch id — lexicographic would rank b9 > b10
-        for order, s in enumerate(
-            sorted(segs, key=lambda x: int(x) if x.isdigit() else 0)
-        ):
-            part = self.spark.read.parquet(
-                os.path.join(self.path, f"segment-b{s}")
-            ).withColumn("_b", F.lit(order))
+        # the log lists segments in NUMERIC batch id order
+        for order, path in enumerate(self._log.paths(upto=ids[-1])):
+            part = self.spark.read.parquet(path).withColumn("_b", F.lit(order))
             seg = part if seg is None else seg.unionByName(part)
         latest = seg.groupBy("doc_id").agg(F.max("_b").alias("_b"))
         seg = seg.join(latest, ["doc_id", "_b"]).drop("_b")
@@ -279,19 +245,7 @@ class PostingsIndex:
             .parquet(out),
             meta=stats,
         )
-        self._retire(segs)
-
-    def _retire(self, segs: list[str]) -> None:
-        """Delete segments ``segs``, marker first so a crash mid-way
-        leaves an incomplete segment, which readers ignore."""
-        for s in segs:
-            try:
-                os.remove(os.path.join(self.path, f"segmeta-b{s}.json"))
-            except OSError:
-                pass
-            shutil.rmtree(
-                os.path.join(self.path, f"segment-b{s}"), ignore_errors=True
-            )
+        self._log.retire(ids)
 
 
 def bm25_index(spark: SparkSession, sf_dir: str) -> PostingsIndex:

@@ -43,10 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.functions.text import (
-    whitespace_tokens,
-    word_ngram_hashes,
-)
+from event_store_spark.functions.text import whitespace_tokens
 from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table

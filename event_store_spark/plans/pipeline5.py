@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.functions.text import whitespace_tokens, word_ngram_hashes
+from event_store_spark.functions.text import whitespace_tokens
 from event_store_spark.functions.vectors import as_double, cosine
 from event_store_spark.plans.generations import GenerationPair, segment_wins
 from event_store_spark.plans.registry import register

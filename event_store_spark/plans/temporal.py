@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from event_store_spark.operators.temporal import asof_join as generic_asof_join
 from event_store_spark.operators.temporal import interval_join as generic_interval_join
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import hot_table, load_table
+from event_store_spark.tables import hot_table
 
 #: search radius (5 min in µs); the operator buckets time at the window
 #: width (2×radius), so each left row probes at most 2 buckets

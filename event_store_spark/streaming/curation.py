@@ -19,13 +19,17 @@ Per micro-batch, inside ONE idempotent foreachBatch transaction:
 3. per-source quota — remaining capacity = quota − already-admitted
    (an O(#sources) aggregate of the admitted table, rides as a map
    literal), filled in doc_id order within the batch;
-4. publish — admitted rows and the batch's new hashes land in
-   per-batch subdirs (`admitted/b<id>`, `seen/b<id>`), then the LAST
-   step records the batch id behind an fsync+os.replace pointer.
-   Replayed batches with id <= the pointer are skipped whole, so a
-   crash anywhere re-runs the batch against the exact pre-batch state
-   (subdir overwrite is idempotent) — the repo's standard EOS
-   composition (ivm/cdc/rollup pointer discipline).
+4. publish — admitted rows and the batch's new hashes land as the
+   batch's segments of two `plans.generations.SegmentLog`s
+   (``admitted/``, ``seen/``), then the LAST step records the batch id
+   behind an fsync+os.replace pointer. Reads take only segments at or
+   below that pointer, and replayed batches with id <= it are skipped
+   whole, so a crash anywhere re-runs the batch against the exact
+   pre-batch state (a segment is rewritten under its own batch id) — the
+   repo's standard EOS composition (ivm/cdc/rollup pointer discipline).
+   After the commit each log folds its segments into one snapshot every
+   ``SEGMENTS_PER_FOLD`` batches, so the seen-ledger anti-join never
+   pays a listing that grows with the stream.
 
 Scale: the gate is map-side; the seen-ledger probe is one hash-keyed
 anti-join per batch (ledger sharded by its own parquet layout, batch
@@ -43,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from event_store_spark.core.state import atomic_write
+from event_store_spark.plans.generations import SegmentLog
 
 #: batch-plan constants (plans/pipeline.py quality_filter/corpus_curation)
 QUALITY_MIN = 0.55
@@ -56,17 +61,13 @@ class CurationPipeline:
         target_path: str,
         checkpoint: str,
         quota: int = 40,
-        compact_every: int = 16,
     ):
         self.spark = spark
         self.target_path = target_path
         self.checkpoint = checkpoint
         self.quota = quota
-        #: fold per-batch subdirs into one snapshot once this many
-        #: accumulate (ivm's cadence): a long-lived ingest otherwise
-        #: grows one directory per micro-batch forever, and the
-        #: seen-ledger anti-join pays the listing every batch
-        self.compact_every = compact_every
+        self._admitted = SegmentLog(spark, os.path.join(target_path, "admitted"))
+        self._seen = SegmentLog(spark, os.path.join(target_path, "seen"))
 
     # ------------------------------------------------------------ state
 
@@ -84,68 +85,12 @@ class CurationPipeline:
         os.makedirs(self.target_path, exist_ok=True)
         atomic_write(self._ptr(), json.dumps({"batch_id": batch_id}))
 
-    def _snapshot(self, kind: str) -> tuple[int, str] | None:
-        """(watermark batch id, dir name) of the kind's folded snapshot."""
-        try:
-            with open(os.path.join(self.target_path, kind, "_SNAP")) as fh:
-                w, name = fh.read().split()
-                return int(w), name
-        except OSError:
-            return None
-
-    def _subdirs(self, kind: str, upto: int) -> list[str]:
-        """Committed per-batch subdirs (snapshot watermark < id <= upto)."""
-        root = os.path.join(self.target_path, kind)
-        if not os.path.isdir(root):
-            return []
-        snap = self._snapshot(kind)
-        base_w = snap[0] if snap else -1
-        out = []
-        for d in os.listdir(root):
-            if d.startswith("b") and d[1:].isdigit() and base_w < int(d[1:]) <= upto:
-                out.append(os.path.join(root, d))
-        return out
-
-    def _read_state(self, kind: str, upto: int) -> list[str]:
-        """All committed paths of a kind: snapshot (if any) + live subdirs."""
-        dirs = self._subdirs(kind, upto)
-        snap = self._snapshot(kind)
-        if snap is not None:
-            dirs.insert(0, os.path.join(self.target_path, kind, snap[1]))
-        return dirs
-
-    def _maybe_compact(self, kind: str, upto: int) -> None:
-        """Fold snapshot + per-batch subdirs into one snap<upto> dir behind
-        an atomic _SNAP pointer flip (ivm's crash-safe ordering: fold
-        written fully, pointer flipped, inputs GC'd — a crash leaves the
-        pointer naming a complete snapshot or the prior state)."""
-        import shutil
-
-        live = self._subdirs(kind, upto)
-        if len(live) < self.compact_every:
-            return
-        paths = self._read_state(kind, upto)
-        root = os.path.join(self.target_path, kind)
-        out = os.path.join(root, f"snap{upto}")
-        if os.path.exists(out):
-            shutil.rmtree(out)  # crashed earlier attempt at the same fold
-        self.spark.read.parquet(*paths).write.mode("overwrite").parquet(out)
-        self.spark.catalog.refreshByPath(out)
-        old_snap = self._snapshot(kind)
-        atomic_write(os.path.join(root, "_SNAP"), f"{upto} snap{upto}")
-        for p in live:
-            shutil.rmtree(p, ignore_errors=True)
-        if old_snap is not None and old_snap[1] != f"snap{upto}":
-            shutil.rmtree(os.path.join(root, old_snap[1]), ignore_errors=True)
-
     def table(self) -> DataFrame:
         """The admitted corpus so far (committed batches only)."""
-        dirs = self._read_state("admitted", self._last_batch())
-        if not dirs:
-            return self.spark.createDataFrame(
-                [], "doc_id bigint, source string, lang string, n_chars bigint"
-            )
-        return self.spark.read.parquet(*dirs)
+        return self._admitted.read(
+            upto=self._last_batch(),
+            schema="doc_id bigint, source string, lang string, n_chars bigint",
+        )
 
     # ------------------------------------------------------------- sink
 
@@ -170,7 +115,7 @@ class CurationPipeline:
             )
         )
 
-        seen_dirs = self._read_state("seen", last)
+        seen_dirs = self._seen.paths(upto=last)
         if seen_dirs:
             ledger = self.spark.read.parquet(*seen_dirs)
             passed = passed.join(ledger, passed["_h"] == ledger["h"], "left_anti")
@@ -209,20 +154,15 @@ class CurationPipeline:
         )
 
         # publish: data first, pointer LAST (the commit point)
-        admitted.drop("_h").write.mode("overwrite").parquet(
-            os.path.join(self.target_path, "admitted", f"b{batch_id}")
-        )
+        self._admitted.write(batch_id, admitted.drop("_h"))
         # the ledger records EVERY quality-passing hash (quota rejects
         # included): a later duplicate of a quota-rejected doc is still a
         # duplicate — exactly the batch plan's dedup-before-quota order
-        fresh.select(F.col("_h").alias("h")).write.mode("overwrite").parquet(
-            os.path.join(self.target_path, "seen", f"b{batch_id}")
-        )
+        self._seen.write(batch_id, fresh.select(F.col("_h").alias("h")))
         self._commit(batch_id)
-        # post-commit maintenance: fold per-batch subdirs once enough
-        # accumulate (everything folded is <= the committed pointer)
-        self._maybe_compact("seen", batch_id)
-        self._maybe_compact("admitted", batch_id)
+        # post-commit maintenance: everything folded is <= the pointer
+        self._seen.fold(batch_id)
+        self._admitted.fold(batch_id)
 
     def start(self, docs_stream: DataFrame) -> StreamingQuery:
         return (

@@ -25,10 +25,12 @@ addition. This module maintains exactly that:
   commit marker; replays of committed batches skip; replays of
   uncommitted batches rebuild) — crucially the side
   snapshots are also rolled forward idempotently: a replayed committed
-  batch must not re-append its deltas. Side subdirs self-compact every
-  ``compact_every`` batches behind a _SNAP pointer (same flip
-  discipline), so a long-running stream's listing/read cost stays
-  bounded instead of growing one subdir per micro-batch.
+  batch must not re-append its deltas. Each side is a
+  `plans.generations.SegmentLog`: a batch's delta is its own marked
+  segment, rewritten on replay and ignored once folded, and the log
+  folds its segments into one snapshot every ``SEGMENTS_PER_FOLD``
+  batches, so a long-running stream's listing/read cost stays bounded
+  instead of growing one subdir per micro-batch.
 
 Aggregates: any dict of column → additive measure (``sum(expr)`` /
 ``count(*)`` shapes), the incrementally-mergeable class. MIN/MAX are
@@ -44,13 +46,11 @@ aggregate. Nothing ever re-reads both full sides.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.core.state import atomic_write
-from event_store_spark.plans.generations import VersionedTable
+from event_store_spark.plans.generations import SegmentLog, VersionedTable
 
 
 class JoinAggregateView(VersionedTable):
@@ -75,18 +75,12 @@ class JoinAggregateView(VersionedTable):
         *,
         left_schema: str,
         right_schema: str,
-        compact_every: int = 8,
     ) -> None:
         """``left_schema``/``right_schema``: Spark DDL of each side's delta
         rows (the columns in ``left_cols``/``right_cols``). They make the
         pre-first-commit :meth:`table` schema EXACT — the first cut
         fabricated all-string groups / all-double measures, so a consumer
-        unioning across the first commit hit a type mismatch (ADVICE r5).
-
-        ``compact_every``: fold the per-batch side-delta subdirectories
-        into one snapshot once this many accumulate since the last fold —
-        long-running streams otherwise grow unbounded small files and
-        ever-longer per-refresh listing/read work (ADVICE r5)."""
+        unioning across the first commit hit a type mismatch (ADVICE r5)."""
         super().__init__(spark, target_path)
         self.join_keys = list(join_keys)
         self.left_cols = list(left_cols)  # incl. join keys
@@ -96,65 +90,27 @@ class JoinAggregateView(VersionedTable):
         self.checkpoint = checkpoint
         self.left_schema = left_schema
         self.right_schema = right_schema
-        self.compact_every = int(compact_every)
+        self._sides = {
+            side: SegmentLog(spark, os.path.join(target_path, f"_side_{side}"))
+            for side in ("l", "r")
+        }
 
     # ------------------------------------------------------------- plumbing
 
-    def _side_dir(self, side: str) -> str:
-        return os.path.join(self.target_path, f"_side_{side}")
-
-    def _snap_pointer(self, side: str) -> str:
-        return os.path.join(self._side_dir(side), "_SNAP")
-
-    def _side_snapshot(self, side: str) -> tuple[int, str] | None:
-        """(watermark, dirname) of the compacted snapshot covering every
-        side delta with batch id <= watermark, or None before the first
-        compaction. The pointer file is the commit marker (os.replace),
-        same contract as _CURRENT."""
-        try:
-            with open(self._snap_pointer(side)) as fh:
-                w, name = fh.read().split()
-                return int(w), name
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def _side_subdirs(self, side: str) -> list[tuple[int, str]]:
-        """Live per-batch delta subdirs as (batch_id, path)."""
-        d = self._side_dir(side)
-        out = []
-        if os.path.isdir(d):
-            for sub in os.listdir(d):
-                if sub.startswith("b") and sub[1:].isdigit():
-                    out.append((int(sub[1:]), os.path.join(d, sub)))
-        return sorted(out)
-
     def _side_pre(self, side: str, batch_id: int, schema) -> DataFrame:
-        """The side's accumulated snapshot BEFORE this batch: the compacted
-        snapshot (if any) plus per-batch subdirectories in
-        (watermark, batch_id). Per-batch subdirs + overwrite writes make
-        the roll-forward idempotent under any crash/replay interleaving —
-        a replayed batch overwrites its own subdir and never
-        double-appends, and an uncommitted replay whose subdir already
-        exists is EXCLUDED from its own pre-state by the id < batch_id
-        filter."""
-        snap = self._side_snapshot(side)
-        base_w = -1
-        paths = []
-        if snap is not None:
-            base_w, name = snap
-            if base_w >= batch_id:
-                # compaction only ever covers committed batches, and a
-                # committed batch never reaches the delta rule again
-                raise RuntimeError(
-                    f"side snapshot watermark {base_w} >= batch {batch_id}"
-                )
-            paths.append(os.path.join(self._side_dir(side), name))
-        paths.extend(
-            p for i, p in self._side_subdirs(side) if base_w < i < batch_id
-        )
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*paths)
+        """The side's accumulated rows BEFORE this batch: its log's live
+        segments below ``batch_id``. A replayed uncommitted batch whose
+        segment already exists is thereby EXCLUDED from its own
+        pre-state, and rewriting that segment never double-appends."""
+        log = self._sides[side]
+        watermark = log.watermark()
+        if watermark >= batch_id:
+            # folds only ever cover committed batches, and a committed
+            # batch never reaches the delta rule again
+            raise RuntimeError(
+                f"side snapshot watermark {watermark} >= batch {batch_id}"
+            )
+        return log.read(upto=batch_id - 1, schema=schema)
 
     def table(self) -> DataFrame:
         current = self._current_version()
@@ -224,63 +180,11 @@ class JoinAggregateView(VersionedTable):
                     )
                 )
             self._publish(merged, batch_id)
-        # roll the side snapshots forward: each batch's delta goes to its
-        # OWN subdir with overwrite semantics (idempotent under replay;
-        # see _side_pre for why the layout also keeps the pre-state exact)
+        # roll the side copies forward: each batch's delta is its OWN
+        # segment (see _side_pre); a replay of a folded batch is a no-op
         for side, delta_df in (("l", dl), ("r", dr)):
-            snap = self._side_snapshot(side)
-            if snap is not None and batch_id <= snap[0]:
-                # replay of a batch already folded into the snapshot
-                # (ADVICE r6): re-creating b{id} here would orphan it
-                # forever — id <= the snapshot watermark is excluded from
-                # pre-state and from every future fold, so it would
-                # accumulate on each such replay. The data is already in
-                # the snapshot; skip.
-                continue
-            sub = os.path.join(self._side_dir(side), f"b{batch_id}")
-            delta_df.write.mode("overwrite").parquet(sub)
-            self.spark.catalog.refreshByPath(sub)
-            self._maybe_compact(side, upto=batch_id)
-
-    def _maybe_compact(self, side: str, upto: int) -> None:
-        """Fold per-batch side subdirs with id <= upto (all committed by
-        this point — the view pointer flipped before the side writes)
-        into one snapshot dir once `compact_every` accumulate.
-
-        Crash-safe ordering: the folded snapshot is fully written under a
-        fresh name FIRST, then the _SNAP pointer flips (os.replace), then
-        superseded inputs are GC'd — a crash at any point leaves the
-        pointer naming a complete snapshot or the old state, and orphan
-        dirs are re-folded or overwritten by the next attempt."""
-        snap = self._side_snapshot(side)
-        base_w = snap[0] if snap else -1
-        live = [
-            (i, p) for i, p in self._side_subdirs(side) if base_w < i <= upto
-        ]
-        if len(live) < self.compact_every:
-            return
-        paths = [p for _, p in live]
-        if snap is not None:
-            paths.insert(0, os.path.join(self._side_dir(side), snap[1]))
-        name = f"snap{upto}"
-        out = os.path.join(self._side_dir(side), name)
-        if os.path.exists(out):
-            shutil.rmtree(out)  # crashed earlier attempt at the same fold
-        self.spark.read.parquet(*paths).write.mode("overwrite").parquet(out)
-        self.spark.catalog.refreshByPath(out)
-        atomic_write(self._snap_pointer(side), f"{upto} {name}")
-        for _, p in live:
-            shutil.rmtree(p, ignore_errors=True)
-        if snap is not None and snap[1] != name:
-            shutil.rmtree(
-                os.path.join(self._side_dir(side), snap[1]), ignore_errors=True
-            )
-        # sweep below-watermark orphans too: subdirs a pre-fix replay
-        # re-created after their content was folded (their data is in the
-        # snapshot by the fold invariant, so removal is always safe)
-        for i, p in self._side_subdirs(side):
-            if i <= base_w:
-                shutil.rmtree(p, ignore_errors=True)
+            self._sides[side].write(batch_id, delta_df)
+            self._sides[side].fold(batch_id)
 
     # ------------------------------------------------------------- running
 

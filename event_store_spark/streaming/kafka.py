@@ -25,8 +25,6 @@ the serialized payload and can be restored by consumers, and broker
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -29,8 +29,8 @@ witnesses no pair.
 Exactly-once across crashes, the engine's standard discipline:
 - the admitted-docs sink writes to a DETERMINISTIC per-batch directory
   (``out_dir/batch-<id>``, overwrite) — redelivery rewrites bytes;
-- the index append uses `DedupIndex.append(batch_id=...)` — a
-  deterministic ``segment-b<id>`` directory, overwrite — so a
+- the index append uses `DedupIndex.append(batch_id=...)` — the
+  batch's own `SegmentLog` segment, rewritten on redelivery — so a
   redelivered batch cannot duplicate signature rows;
 - the batch id commits LAST via one atomic JSON replace
   (`exactly_once_batch`); any crash before it replays the whole batch

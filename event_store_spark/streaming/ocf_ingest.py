@@ -43,7 +43,7 @@ import json
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from event_store_spark.avro.container import read_avro_container

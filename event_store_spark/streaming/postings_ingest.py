@@ -2,10 +2,11 @@
 
 `plans.ir.PostingsIndex.build` backfills an EXISTING corpus's inverted
 index in one pass; this maintainer keeps it current for a GROWING
-document stream: each arriving micro-batch's postings rows land in a
-deterministic ``segment-b<id>`` dir via `PostingsIndex.append` (overwrite
-— a crash-redelivered batch rewrites bytes, never duplicates; the
-segment's integer stats marker commits last), so `probe()` sees new
+document stream: each arriving micro-batch's postings rows become that
+batch's segment of the index's `plans.generations.SegmentLog` via
+`PostingsIndex.append` (a crash-redelivered batch rewrites its segment,
+never duplicates; the segment's marker, which carries its integer stats,
+commits last), so `probe()` sees new
 documents immediately with the exact avgdl/n_docs a rebuild would
 compute, and `compact()` folds segments into a fresh generation behind
 the atomic pointer flip at the operator's cadence. The typed_events

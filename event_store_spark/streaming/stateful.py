@@ -14,7 +14,7 @@ pinned against that batch plan by the test.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame

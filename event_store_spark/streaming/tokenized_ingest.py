@@ -6,10 +6,10 @@ current for a GROWING document log — the exact analog of
 `streaming.typed_ingest.TypedEventsMaterializer` for the `documents`
 envelope. Each arriving micro-batch is tokenized once (the shared
 `tokenized_projection`, so the streaming and batch paths cannot drift)
-and appended as its own batch subdir with the repo's
-overwrite-by-batch-id idempotence: a replayed batch rewrites its own
-subdir and never duplicates, and no pointer machinery is needed because
-the table is append-only additive.
+and appended as that batch's segment of a `plans.generations.SegmentLog`
+(the typed_ingest layout): a replayed batch rewrites its own segment and
+never duplicates, a segment is read only once its marker is written, and
+the log folds its segments every ``SEGMENTS_PER_FOLD`` batches.
 
 This closes the parse-at-ingest story for text the way typed_ingest
 closed it for JSON props: the governance/dedup/fingerprint consumers
@@ -24,11 +24,10 @@ with column pruning, and a `g3`-only consumer never touches a string.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.plans.tokenized import tokenized_projection
 
 
@@ -37,28 +36,23 @@ class TokenizedDocsMaterializer:
         self.spark = spark
         self.target_path = target_path
         self.checkpoint = checkpoint
+        self._log = SegmentLog(spark, target_path)
 
     def start(self, docs_stream: DataFrame) -> StreamingQuery:
         """Attach to a streaming documents frame (file/kafka source with
         at least (doc_id, text); envelope metadata columns are carried
         through when present, exactly like the batch backfill)."""
-
-        def sink(df: DataFrame, batch_id: int) -> None:
-            out = os.path.join(self.target_path, f"b{batch_id}")
-            # overwrite-by-batch-id: replay after a crash rewrites the
-            # same subdir — idempotent, exactly-once table contents
-            tokenized_projection(df).write.mode("overwrite").parquet(out)
-            self.spark.catalog.refreshByPath(out)
-
         return (
-            docs_stream.writeStream.foreachBatch(sink)
+            docs_stream.writeStream.foreachBatch(self._sink)
             .option("checkpointLocation", self.checkpoint)
             .trigger(availableNow=True)
             .start()
         )
 
+    def _sink(self, df: DataFrame, batch_id: int) -> None:
+        self._log.write(batch_id, tokenized_projection(df))
+        self._log.fold(batch_id)
+
     def table(self) -> DataFrame:
-        """The live tokenized table (union of batch subdirs, lazy scan)."""
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            self.target_path
-        )
+        """The live tokenized table (snapshot plus marked segments, lazy)."""
+        return self._log.read()

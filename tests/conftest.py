@@ -46,3 +46,31 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture
+def crash_gc_after_next_fold(monkeypatch):
+    """Returns ``arm()``: once called, the first ``shutil.rmtree`` after
+    the next segment-log ``_SNAP`` flip raises — a crash between a fold's
+    commit point and its GC."""
+    import shutil
+
+    from event_store_spark.plans import generations
+
+    real_write, real_rmtree = generations.write_pointer, shutil.rmtree
+    state = {"armed": False, "flipped": False, "crashed": False}
+
+    def write_pointer(path, text):
+        real_write(path, text)
+        if state["armed"] and os.path.basename(path) == "_SNAP":
+            state["flipped"] = True
+
+    def rmtree(path, *args, **kwargs):
+        if state["flipped"] and not state["crashed"]:
+            state["crashed"] = True
+            raise OSError(f"injected crash before removing {path}")
+        real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(generations, "write_pointer", write_pointer)
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    return lambda: state.update(armed=True)

@@ -87,7 +87,7 @@ def test_append_then_compact_equals_rebuild(spark, docs, tmp_path):
     batch = docs.where(F.col("source") == NEW_SOURCE)
 
     grown = DedupIndex.build(spark, base, str(tmp_path / "grown"), "simhash64")
-    grown.append(extra)
+    grown.append(extra, batch_id=0)
     whole = DedupIndex.build(
         spark,
         docs.where(F.col("source") != NEW_SOURCE),
@@ -98,7 +98,7 @@ def test_append_then_compact_equals_rebuild(spark, docs, tmp_path):
     assert rows(grown.probe(batch)) == want  # segment union serves
 
     grown.compact()
-    assert not os.path.isdir(tmp_path / "grown" / "segment")
+    assert not os.listdir(tmp_path / "grown" / "segments")
     assert rows(grown.probe(batch)) == want  # folded base serves
 
     reopened = DedupIndex.open(spark, str(tmp_path / "grown"))
@@ -124,7 +124,7 @@ def test_compact_segment_wins_and_deferred_gc(spark, docs, tmp_path):
         r["block"]
         for r in idx.signatures().where(F.col("doc_id") == vid).collect()
     )
-    idx.append(mutated)
+    idx.append(mutated, batch_id=0)
     idx.compact()
 
     live = idx.signatures(include_segment=False)
@@ -145,7 +145,7 @@ def test_compact_segment_wins_and_deferred_gc(spark, docs, tmp_path):
     # deferred GC: first compact published sigs-1, original sigs/ kept
     names = set(os.listdir(path))
     assert "sigs-1" in names and "sigs" in names
-    idx.append(mutated)
+    idx.append(mutated, batch_id=1)
     idx.compact()  # second flip sweeps the N-2 generation
     names = set(os.listdir(path))
     assert "sigs-2" in names and "sigs-1" in names and "sigs" not in names
@@ -206,7 +206,7 @@ def test_winnow_append_compact_and_stoplist(spark, docs, tmp_path):
     batch = docs.where(F.col("source") == NEW_SOURCE)
 
     grown = DedupIndex.build(spark, base, str(tmp_path / "g"), "winnow")
-    grown.append(extra)
+    grown.append(extra, batch_id=0)
     whole = DedupIndex.build(
         spark,
         docs.where(F.col("source") != NEW_SOURCE),
@@ -277,4 +277,4 @@ def test_rebuild_over_existing_index_retires_segments(spark, docs, tmp_path):
     assert sig.count() == sig.select("doc_id", "block_idx").distinct().count()
     want = DedupIndex.build(spark, grown, str(tmp_path / "fresh"), "simhash64")
     assert sorted(rows(sig)) == sorted(rows(want.signatures()))
-    assert not [d for d in os.listdir(path) if d.startswith("segment")]
+    assert not os.listdir(os.path.join(path, "segments"))

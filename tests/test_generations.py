@@ -3,8 +3,11 @@
 - a one-token pointer (the early IVF/PQ format) still opens;
 - a crash at the commit point (the pointer write) of any publish leaves
   readers on the previous generation, a retry publishes, and GC then
-  leaves at most the N-1 generation (pairs) or current + 2 versions
-  (versioned tables) on disk;
+  leaves at most the N-1 generation (pairs), current + 2 versions
+  (versioned tables) or the live snapshot plus the marked segments above
+  it (segment logs) on disk;
+- for every segment-log user, an empty batch leaves no segment and a
+  segment directory without its marker is never read;
 - no module outside `generations.py` can publish a pointer on its own
   (a static check, no Spark).
 """
@@ -16,13 +19,19 @@ import datetime
 import json
 import os
 import pathlib
+import shutil
 from typing import Callable, NamedTuple
 
 import pytest
 from pyspark.sql import functions as F
 
 from event_store_spark.plans import generations
-from event_store_spark.plans.generations import GenerationPair, VersionedTable
+from event_store_spark.plans.generations import (
+    GenerationPair,
+    SegmentLog,
+    VersionedTable,
+)
+from event_store_spark.tables import load_table
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "event_store_spark"
 
@@ -74,8 +83,8 @@ def test_one_token_pointer_indexes_open_and_search(spark, sf_smoke, tmp_path):
 class Case(NamedTuple):
     publish: Callable[[], None]
     read: Callable[[], object]
-    #: the pair under test, or the versioned table under test
-    target: GenerationPair | VersionedTable
+    #: the pair, versioned table or segment log under test
+    target: GenerationPair | VersionedTable | SegmentLog
 
 
 def _rows(df, *cols):
@@ -195,8 +204,6 @@ def _hnsw_compact(spark, tmp_path, sf):
 
 
 def _docs(spark, sf):
-    from event_store_spark.tables import load_table
-
     return load_table(spark, sf, "documents").select("doc_id", "source", "text")
 
 
@@ -342,6 +349,28 @@ def _distinct_view(spark, tmp_path, sf):
     )
 
 
+def _segment_log(spark, tmp_path, n):
+    log = SegmentLog(spark, str(tmp_path / "log"))
+    for i in range(n):
+        log.write(i, spark.createDataFrame([(i,)], "x bigint"))
+    return log
+
+
+def _segment_append(spark, tmp_path, sf):
+    log = _segment_log(spark, tmp_path, 2)
+    return Case(
+        lambda: log.write(2, spark.createDataFrame([(2,)], "x bigint")),
+        lambda: _rows(log.read(), "x"),
+        log,
+    )
+
+
+def _segment_fold(spark, tmp_path, sf):
+    n = generations.SEGMENTS_PER_FOLD
+    log = _segment_log(spark, tmp_path, n)
+    return Case(lambda: log.fold(n - 1), lambda: _rows(log.read(), "x"), log)
+
+
 CASES = {
     "ivf_retrain": _ivf_retrain,
     "ivf_compact": _ivf_compact,
@@ -354,12 +383,16 @@ CASES = {
     "cdc": _cdc,
     "join_view": _join_view,
     "distinct_view": _distinct_view,
+    "segment_append": _segment_append,
+    "segment_fold": _segment_fold,
 }
 
 
 def _live(target):
     if isinstance(target, GenerationPair):
         return target.live()
+    if isinstance(target, SegmentLog):
+        return target.paths()
     return target._current_version()
 
 
@@ -396,16 +429,152 @@ def test_crash_at_publish_keeps_previous_generation(
             n for n in os.listdir(target.path) if n == d or n.startswith(d + "-")
         }
         assert on_disk == {live_before[0], live_after[0]}
+    elif isinstance(target, SegmentLog):
+        on_disk = {
+            os.path.join(target.root, n)
+            for n in os.listdir(target.root)
+            if n.startswith(("b", "snap"))
+        }
+        assert on_disk == set(live_after)
     else:
         assert target.versions() == ["_v1", "_v2", "_v3"]
         assert live_after == "_v3"
+
+
+# ------------------------------------------------------ segment-log users
+
+
+class User(NamedTuple):
+    #: the user's per-batch path: ``append(batch_id, empty)``
+    append: Callable[[int, bool], None]
+    read: Callable[[], object]
+    #: the user's segment log directory
+    root: str
+
+
+def _postings_user(spark, tmp_path, sf):
+    from event_store_spark.plans.ir import PostingsIndex
+
+    docs = _docs(spark, sf)
+    idx = PostingsIndex.build(
+        spark, docs.where(F.col("doc_id") % 2 == 0), str(tmp_path / "ix")
+    )
+    odd = docs.where(F.col("doc_id") % 2 == 1)
+    return User(
+        lambda i, empty: idx.append(odd.limit(0) if empty else odd, batch_id=i),
+        lambda: (idx.stats(), _rows(idx.postings(), "doc_id", "t", "tf")),
+        str(tmp_path / "ix" / "segments"),
+    )
+
+
+def _dedup_user(spark, tmp_path, sf):
+    from event_store_spark.plans.dedup_index import DedupIndex
+
+    docs = _docs(spark, sf)
+    idx = DedupIndex.build(
+        spark,
+        docs.where(F.col("doc_id") % 2 == 0),
+        str(tmp_path / "ix"),
+        "simhash64",
+    )
+    odd = docs.where(F.col("doc_id") % 2 == 1)
+    return User(
+        lambda i, empty: idx.append(odd.limit(0) if empty else odd, batch_id=i),
+        lambda: _rows(idx.signatures(), "doc_id", "block_idx", "block"),
+        str(tmp_path / "ix" / "segments"),
+    )
+
+
+def _ivm_user(spark, tmp_path, sf):
+    from event_store_spark.streaming.ivm import JoinAggregateView
+
+    view = JoinAggregateView(
+        spark,
+        join_keys=["c_key"],
+        left_cols=["c_key", "nation"],
+        right_cols=["c_key", "amount"],
+        group_cols=["nation"],
+        measures={"revenue": F.sum("amount")},
+        target_path=str(tmp_path / "mv"),
+        checkpoint=str(tmp_path / "ck"),
+        left_schema="c_key bigint, nation string",
+        right_schema="c_key bigint, amount double",
+    )
+    schema = "_side string, c_key bigint, nation string, amount double"
+    rows = [("l", 7, "N7", None), ("r", 7, None, 8.0)]
+
+    def append(i, empty):
+        view._merge(spark.createDataFrame([] if empty else rows, schema), i)
+
+    def read():
+        pre = view._side_pre("l", 99, "c_key bigint, nation string")
+        return _rows(pre, "c_key", "nation")
+
+    return User(append, read, str(tmp_path / "mv" / "_side_l"))
+
+
+def _curation_user(spark, tmp_path, sf):
+    from event_store_spark.streaming.curation import CurationPipeline
+
+    docs = load_table(spark, sf, "documents").select(
+        "doc_id", "source", "lang", "n_chars", "text"
+    )
+    pipe = CurationPipeline(spark, str(tmp_path / "cur"), str(tmp_path / "ck"))
+    return User(
+        lambda i, empty: pipe._gate(docs.limit(0) if empty else docs, i),
+        lambda: _rows(pipe.table(), "doc_id"),
+        str(tmp_path / "cur" / "admitted"),
+    )
+
+
+def _typed_user(spark, tmp_path, sf):
+    from event_store_spark.streaming.typed_ingest import TypedEventsMaterializer
+
+    events = load_table(spark, sf, "events")
+    mat = TypedEventsMaterializer(
+        spark, str(tmp_path / "typed"), str(tmp_path / "ck")
+    )
+    return User(
+        lambda i, empty: mat._sink(events.limit(0) if empty else events, i),
+        lambda: _rows(mat.table(), "event_id", "key_name"),
+        str(tmp_path / "typed"),
+    )
+
+
+USERS = {
+    "postings": _postings_user,
+    "dedup": _dedup_user,
+    "ivm_side": _ivm_user,
+    "curation": _curation_user,
+    "typed_ingest": _typed_user,
+}
+
+
+@pytest.mark.parametrize("name", sorted(USERS))
+def test_empty_batch_and_unmarked_segment_are_invisible(
+    spark, sf_smoke, tmp_path, name
+):
+    """An empty batch leaves no segment directory and no marker, and a
+    segment directory holding data but no marker (a crash before the
+    marker write) is never read."""
+    user = USERS[name](spark, tmp_path, sf_smoke)
+    user.append(0, False)
+    before = user.read()
+    assert sorted(os.listdir(user.root)) == ["_SEGMENT.0", "b0"]
+
+    user.append(1, True)
+    assert sorted(os.listdir(user.root)) == ["_SEGMENT.0", "b0"]
+    assert user.read() == before
+
+    shutil.copytree(os.path.join(user.root, "b0"), os.path.join(user.root, "b5"))
+    assert user.read() == before
 
 
 # ------------------------------------------------------ static discipline
 
 #: the only modules that may write a publish pointer
 _POINTER_WRITERS = {"plans/generations.py", "core/state.py"}
-_POINTERS = {"_CURRENT", "CELLS", "CODES", "LIVE"}
+_POINTERS = {"_CURRENT", "CELLS", "CODES", "LIVE", "_SNAP", "_SEGMENT"}
 
 
 def _callee(call):

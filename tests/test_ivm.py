@@ -4,9 +4,13 @@ every batch, under interleaved two-side deltas and replays."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from event_store_spark.plans import generations
+from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.streaming.ivm import JoinAggregateView
 
 CUST = [  # c_key, nation
@@ -218,16 +222,25 @@ def test_ivm_empty_table_schema_matches_post_commit(spark, tmp_path):
     view.table().unionByName(view.table()).collect()
 
 
+def _side_dirs(spark, tmp_path, side):
+    """(watermark, segment batch ids on disk, snapshot dirs on disk)."""
+    root = tmp_path / "mv" / f"_side_{side}"
+    names = os.listdir(root)
+    segs = sorted(int(n[1:]) for n in names if n[:1] == "b" and n[1:].isdigit())
+    snaps = sorted(n for n in names if n.startswith("snap"))
+    return SegmentLog(spark, str(root)).watermark(), segs, snaps
+
+
 def test_ivm_side_compaction_bounds_subdirs_and_preserves_state(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
-    """With compact_every=2, per-batch side subdirs fold into one
-    snapshot behind the _SNAP pointer: the dir count stays bounded,
-    and the view still equals the full recompute after every fold —
-    including a post-compaction delta that must read pre-state through
-    the snapshot."""
+    """With two segments per fold, per-batch side segments fold into one
+    snapshot: the dir count stays bounded, and the view still equals the
+    full recompute after every fold — including a post-compaction delta
+    that must read pre-state through the snapshot."""
+    monkeypatch.setattr(generations, "SEGMENTS_PER_FOLD", 2)
     src = str(tmp_path / "src")
-    view = _view(spark, tmp_path, compact_every=2)
+    view = _view(spark, tmp_path)
     batches = [
         _tagged(spark, CUST[:2], []),
         _tagged(spark, [], ORDERS[:2]),
@@ -238,9 +251,9 @@ def test_ivm_side_compaction_bounds_subdirs_and_preserves_state(
         b.coalesce(1).write.mode("append").parquet(src)
     _run(spark, view, src)
     for side in ("l", "r"):
-        assert view._side_snapshot(side) is not None
-        n_sub = len(view._side_subdirs(side))
-        assert n_sub < len(batches), f"side {side}: {n_sub} subdirs, no fold"
+        watermark, segs, snaps = _side_dirs(spark, tmp_path, side)
+        assert watermark >= 0 and len(snaps) == 1, (side, watermark, snaps)
+        assert len(segs) < len(batches), f"side {side}: {segs}, no fold"
     got = {r.nation: (r.revenue, r.n_orders) for r in view.table().collect()}
     assert got == _full_recompute(spark, CUST, ORDERS[:5])
 
@@ -251,36 +264,76 @@ def test_ivm_side_compaction_bounds_subdirs_and_preserves_state(
     assert got == _full_recompute(spark, CUST, ORDERS)
 
 
-def test_ivm_replay_of_folded_batch_leaves_no_orphan_subdir(spark, tmp_path):
+#: four batches with rows on both sides, so every batch adds a segment
+#: to each side log
+BOTH_SIDES = [
+    (CUST[:1], ORDERS[:1]),
+    (CUST[1:2], ORDERS[1:2]),
+    (CUST[2:3], ORDERS[2:4]),
+    (CUST[3:], ORDERS[4:]),
+]
+
+
+def test_ivm_replay_of_folded_batch_leaves_no_orphan_subdir(
+    spark, tmp_path, monkeypatch
+):
     """ADVICE r6: replaying a committed batch whose side delta was already
-    folded into a _SNAP snapshot must NOT re-create its b{id} subdir —
-    such a dir (id <= snapshot watermark) is excluded from pre-state and
-    every future fold, so it would be a permanent orphan. The view's
-    state must also stay correct after the replay."""
-    src = str(tmp_path / "src")
-    view = _view(spark, tmp_path, compact_every=2)
-    batches = [
-        _tagged(spark, CUST[:2], []),
-        _tagged(spark, [], ORDERS[:2]),
-        _tagged(spark, CUST[2:], ORDERS[2:4]),
-        _tagged(spark, [], ORDERS[4:5]),
-    ]
-    for b in batches:
-        b.coalesce(1).write.mode("append").parquet(src)
-    _run(spark, view, src)
-    snaps = {side: view._side_snapshot(side) for side in ("l", "r")}
-    assert all(s is not None for s in snaps.values())
+    folded into the snapshot must NOT re-create its b{id} segment — it
+    would sit below the watermark, outside pre-state and every future
+    fold. The view's state must also stay correct after the replay."""
+    monkeypatch.setattr(generations, "SEGMENTS_PER_FOLD", 2)
+    view = _view(spark, tmp_path)
+    for i, (c, o) in enumerate(BOTH_SIDES):
+        view._merge(_tagged(spark, c, o), i)
+    last = len(BOTH_SIDES) - 1
+    for side in ("l", "r"):
+        assert _side_dirs(spark, tmp_path, side) == (last, [], [f"snap{last}"])
 
-    # replay a batch below each side's snapshot watermark via the public
-    # merge path (exactly what a checkpoint-loss restart does)
-    for side, snap in snaps.items():
-        folded_id = snap[0]  # watermark batch itself is folded
-        view._merge(batches[folded_id], folded_id)
-        subdirs = dict(view._side_subdirs(side))
-        assert folded_id not in subdirs, (
-            f"side {side}: replay re-created folded subdir b{folded_id}"
-        )
-        assert all(i > snap[0] for i in subdirs), subdirs
-
+    # a checkpoint restart redelivers the last committed batch
+    view._merge(_tagged(spark, *BOTH_SIDES[last]), last)
+    for side in ("l", "r"):
+        assert _side_dirs(spark, tmp_path, side) == (last, [], [f"snap{last}"])
     got = {r.nation: (r.revenue, r.n_orders) for r in view.table().collect()}
-    assert got == _full_recompute(spark, CUST, ORDERS[:5])
+    assert got == _full_recompute(spark, CUST, ORDERS)
+
+
+def test_ivm_crash_after_fold_flip_is_swept_by_next_fold(
+    spark, tmp_path, monkeypatch, crash_gc_after_next_fold
+):
+    """A crash between a side log's second _SNAP flip and its GC leaves
+    the folded segments and the superseded snapshot behind; after the
+    restart the next fold removes both, and the view is still exact."""
+    monkeypatch.setattr(generations, "SEGMENTS_PER_FOLD", 2)
+    custs = [(10 + i, f"N{i % 3}") for i in range(6)]
+    orders = [(100 + i, 10 + i, float(i + 1)) for i in range(6)]
+    batches = [_tagged(spark, custs[i : i + 1], orders[i : i + 1]) for i in range(6)]
+    view = _view(spark, tmp_path)
+    for i in range(3):  # the first fold, at batch 1, runs clean
+        view._merge(batches[i], i)
+    crash_gc_after_next_fold()
+    with pytest.raises(OSError, match="injected crash"):
+        view._merge(batches[3], 3)
+
+    # restart: the uncommitted batch 3 is redelivered, then the stream
+    # goes on through one more fold
+    view = _view(spark, tmp_path)
+    for i in range(3, 6):
+        view._merge(batches[i], i)
+    for side in ("l", "r"):
+        watermark, segs, snaps = _side_dirs(spark, tmp_path, side)
+        assert watermark == 5
+        assert not [i for i in segs if i <= watermark], (side, segs)
+        assert snaps == ["snap5"], (side, snaps)
+    got = {r.nation: (r.revenue, r.n_orders) for r in view.table().collect()}
+    assert got == _full_recompute(spark, custs, orders)
+
+
+def test_ivm_malformed_snapshot_pointer_raises(spark, tmp_path):
+    """A torn or hand-edited _SNAP must fail the batch, not read as "no
+    snapshot" (which would silently drop every folded side row)."""
+    view = _view(spark, tmp_path)
+    view._merge(_tagged(spark, *BOTH_SIDES[0]), 0)
+    root = tmp_path / "mv" / "_side_r"
+    (root / "_SNAP").write_text("garbage")
+    with pytest.raises(ValueError, match="malformed"):
+        view._merge(_tagged(spark, *BOTH_SIDES[1]), 1)

@@ -6,9 +6,14 @@ boundaries."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from event_store_spark.plans import generations
+from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.streaming.curation import (
     LEN_HI,
     LEN_LO,
@@ -148,15 +153,22 @@ def test_cross_batch_duplicate_and_quota_reject_interplay(spark, tmp_path):
     assert admitted == [0, 1, 12]
 
 
-def test_ledger_compaction_bounds_subdirs_and_preserves_state(
-    spark, sf_smoke, tmp_path
-):
-    """With compact_every=2, the seen/admitted per-batch subdirs fold into
-    snapshots behind _SNAP pointers: dir counts stay bounded, the final
-    admitted corpus still equals the batch chain, and dedup still sees
-    hashes that live only in the snapshot."""
-    import os
+def _log_dirs(spark, root):
+    """(watermark, segment batch ids on disk, snapshot dirs on disk)."""
+    names = os.listdir(root)
+    segs = sorted(int(n[1:]) for n in names if n[:1] == "b" and n[1:].isdigit())
+    snaps = sorted(n for n in names if n.startswith("snap"))
+    return SegmentLog(spark, str(root)).watermark(), segs, snaps
 
+
+def test_ledger_compaction_bounds_subdirs_and_preserves_state(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """With two segments per fold, the seen/admitted per-batch segments
+    fold into snapshots: dir counts stay bounded, the final admitted
+    corpus still equals the batch chain, and dedup still sees hashes
+    that live only in the snapshot."""
+    monkeypatch.setattr(generations, "SEGMENTS_PER_FOLD", 2)
     docs = load_table(spark, sf_smoke, "documents").select(
         "doc_id", "source", "lang", "n_chars", "text"
     )
@@ -164,8 +176,7 @@ def test_ledger_compaction_bounds_subdirs_and_preserves_state(
     _deliver_in_batches(spark, docs, src, n_batches=6)
 
     pipe = CurationPipeline(
-        spark, str(tmp_path / "cur"), str(tmp_path / "ck"),
-        quota=QUOTA, compact_every=2,
+        spark, str(tmp_path / "cur"), str(tmp_path / "ck"), quota=QUOTA
     )
     q = pipe.start(
         spark.readStream.schema(docs.schema)
@@ -175,9 +186,9 @@ def test_ledger_compaction_bounds_subdirs_and_preserves_state(
     q.awaitTermination(240)
 
     for kind in ("seen", "admitted"):
-        assert pipe._snapshot(kind) is not None, kind
-        n_sub = len(pipe._subdirs(kind, pipe._last_batch()))
-        assert n_sub < 6, f"{kind}: {n_sub} subdirs, no fold"
+        watermark, segs, snaps = _log_dirs(spark, tmp_path / "cur" / kind)
+        assert watermark >= 0 and len(snaps) == 1, (kind, watermark, snaps)
+        assert len(segs) < 6, f"{kind}: {segs}, no fold"
 
     got = sorted((r.doc_id, r.source, r.lang) for r in pipe.table().collect())
     want = sorted(
@@ -201,3 +212,51 @@ def test_ledger_compaction_bounds_subdirs_and_preserves_state(
     )
     q.awaitTermination(240)
     assert 99_999_999 not in {r.doc_id for r in pipe.table().collect()}
+
+
+def test_crash_after_fold_flip_is_swept_by_next_fold(
+    spark, sf_smoke, tmp_path, monkeypatch, crash_gc_after_next_fold
+):
+    """A crash between the seen ledger's second _SNAP flip and its GC
+    leaves the folded segments and the superseded snapshot behind; after
+    the restart the next fold removes both, and the admitted corpus is
+    still the batch chain's."""
+    monkeypatch.setattr(generations, "SEGMENTS_PER_FOLD", 2)
+    docs = load_table(spark, sf_smoke, "documents").select(
+        "doc_id", "source", "lang", "n_chars", "text"
+    )
+    rows = docs.orderBy("doc_id").collect()
+    cut = -(-len(rows) // 6)
+    batches = [
+        spark.createDataFrame(rows[i : i + cut], docs.schema)
+        for i in range(0, len(rows), cut)
+    ]
+    assert len(batches) == 6
+
+    def pipe():
+        return CurationPipeline(
+            spark, str(tmp_path / "cur"), str(tmp_path / "ck"), quota=QUOTA
+        )
+
+    for i in range(3):  # the first fold, at batch 1, runs clean
+        pipe()._gate(batches[i], i)
+    crash_gc_after_next_fold()
+    with pytest.raises(OSError, match="injected crash"):
+        pipe()._gate(batches[3], 3)
+
+    # restart: batch 3 is redelivered (a no-op, it committed before the
+    # fold), then the stream goes on through one more fold
+    restarted = pipe()
+    for i in range(3, 6):
+        restarted._gate(batches[i], i)
+    watermark, segs, snaps = _log_dirs(spark, tmp_path / "cur" / "seen")
+    assert watermark == 5
+    assert not [i for i in segs if i <= watermark], segs
+    assert snaps == ["snap5"], snaps
+
+    got = sorted((r.doc_id, r.source, r.lang) for r in restarted.table().collect())
+    want = sorted(
+        (r.doc_id, r.source, r.lang)
+        for r in _batch_reference(spark, sf_smoke).collect()
+    )
+    assert got == want

@@ -114,8 +114,9 @@ def test_gate_matches_sequential_reference_and_redelivery(
         r["doc_id"]
         for r in spark.read.parquet(str(tmp_path / "out" / "batch-0")).collect()
     ) == expected[0]
-    segs = [d for d in os.listdir(idx_path) if d.startswith("segment-b")]
-    assert segs == ["segment-b0"]
+    assert sorted(os.listdir(os.path.join(idx_path, "segments"))) == [
+        "_SEGMENT.0", "b0"
+    ]
 
     # batch 2 probes base + admitted segment: 20 dups the ADMITTED 11
     process(_df(spark, b2), 1)
