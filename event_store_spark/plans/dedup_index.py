@@ -34,8 +34,8 @@ module makes that layout real):
   against).
 - ``compact()`` — merge base + segments into a fresh generation behind
   `GenerationPair`'s atomic pointer flip (deferred GC for in-flight
-  readers, segment-wins on doc_id collisions — the same rules the ANN
-  compactions follow).
+  readers; a doc_id's rows come from the newest batch that holds it,
+  `SegmentLog.newest` — the rule every segment-log compaction follows).
 
 Scale shape: the index is the big side and stays partitioned parquet on
 shared storage; every probe touches O(|batch| × bucket occupancy) rows
@@ -395,22 +395,14 @@ class DedupIndex:
 
     def compact(self) -> None:
         """Merge base + every segment dir into a fresh generation and
-        flip; no-op without segments. Collisions on doc_id resolve
-        segment-wins (a re-ingested doc's newest signatures replace the
-        base's), the ANN compactions' rule."""
+        flip; no-op without segments. A re-ingested doc keeps only its
+        newest batch's signatures (`SegmentLog.newest`)."""
         ids = self._log.ids()
         if not ids:
             return
-        live_dir, _ = self._gen.live()
-        base = self.spark.read.parquet(os.path.join(self.path, live_dir))
-        seg_dirs = self._log.paths(upto=ids[-1])
-        seg = self.spark.read.parquet(seg_dirs[0])
-        for extra in seg_dirs[1:]:
-            seg = seg.unionByName(self.spark.read.parquet(extra))
-        seg_ids = seg.select("doc_id").distinct()
+        base = self.signatures(include_segment=False)
         merged = _enforce_stoplist(
-            base.join(seg_ids, "doc_id", "left_anti").unionByName(seg),
-            self.kind,
+            self._log.newest("doc_id", base, upto=ids[-1]), self.kind
         )
         self._gen.publish(
             self.spark,

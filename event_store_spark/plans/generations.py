@@ -22,13 +22,14 @@ shapes share that commit point:
   DataFrame over the old directory) finishes its scan instead of dying
   on a mid-read rmtree. Generations ≤ N-2 and crash orphans are swept.
 - `VersionedTable` — a streaming-maintained table published as one
-  ``_v<batch_id>`` directory per micro-batch behind a ``_CURRENT``
-  pointer: `ContinuousRollup`, `CdcMaterializer`, `JoinAggregateView`
-  and `DistinctCountView`. The flip is the batch's commit marker, so a
-  replayed uncommitted batch rebuilds its directory and re-flips, and a
-  replay of the committed one is skipped by the caller. The current
-  version plus ``_KEEP_VERSIONS`` superseded ones stay on disk for
-  readers mid-swap and for time travel.
+  ``_v<n>`` directory per commit behind a ``_CURRENT`` pointer:
+  `ContinuousRollup`, `CdcMaterializer`, `JoinAggregateView` and
+  `DistinctCountView`. The pointer also carries the sink's exactly-once
+  ledger (`streaming.eos`), so the flip is the batch's one commit point:
+  a replayed uncommitted batch rebuilds the next version and flips, and
+  whether a batch is already applied is decided by `streaming.eos`
+  alone. The current version plus ``_KEEP_VERSIONS`` superseded ones
+  stay on disk for readers mid-swap and for time travel.
 - `SegmentLog` — an artifact that grows one ``b<batch_id>`` segment
   directory per streaming batch: the `JoinAggregateView` side copies,
   `CurationPipeline`'s admitted corpus and seen-hash ledger, the
@@ -37,15 +38,21 @@ shapes share that commit point:
   commit point (written last; readers list markers, never directories),
   and a fold rewrites the snapshot plus the oldest segments as one
   ``snap<batch_id>`` directory behind the ``_SNAP`` pointer. A segment is
-  rewritten under its own batch id, so recomputing a replayed batch is
-  idempotent.
+  rewritten under its own batch id, so recomputing a replayed
+  uncommitted batch is idempotent; a committed one never reaches the
+  log again (`streaming.eos` skips it), so a write at or below the
+  fold watermark raises. The ivf, pq and sq8 additions streams are
+  segment logs too, and every compaction of a log keeps, per key
+  group, only the newest segment's rows (`SegmentLog.newest`).
 
-Every pointer, segment marker and ``_SNAP`` included, is written through
-`write_pointer`.
+Every pointer, the segment markers, ``_SNAP`` and the exactly-once
+ledgers (``_LEDGER``, or the ``_CURRENT`` of a versioned table)
+included, is written through `write_pointer`.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 from typing import Callable
@@ -63,6 +70,8 @@ SEGMENTS_PER_FOLD = 8
 #: `SegmentLog` names: per-batch marker prefix and fold pointer
 _MARKER = "_SEGMENT."
 _SNAP = "_SNAP"
+#: a streaming sink's exactly-once ledger file (`streaming.eos`)
+LEDGER = "_LEDGER"
 
 
 def write_pointer(path: str, text: str) -> None:
@@ -74,8 +83,9 @@ def write_pointer(path: str, text: str) -> None:
 def segment_wins(base: DataFrame, seg: DataFrame, key: str) -> DataFrame:
     """``base`` ∪ ``seg`` with one row per ``key``, the SEGMENT row winning
     a collision (a re-assigned or re-encoded vector replaces its stale base
-    row deterministically). A row_number, not an anti-join: a segment can
-    hold one key twice, and the fold must still emit it once."""
+    row deterministically). ``seg`` is already newest-wins across batches
+    (`SegmentLog.newest`); a row_number, not an anti-join, because one
+    batch can still hold a key twice and the fold must emit it once."""
     return (
         base.withColumn("_pri", F.lit(0))
         .unionByName(seg.select(*base.columns).withColumn("_pri", F.lit(1)))
@@ -183,26 +193,31 @@ class GenerationPair:
 
 
 class VersionedTable:
-    """A table at ``target_path`` published one ``_v<batch_id>`` directory
-    per batch behind the ``_CURRENT`` pointer."""
+    """A table at ``target_path`` published one ``_v<n>`` directory per
+    commit behind the ``_CURRENT`` pointer, whose text is the sink's
+    exactly-once ledger followed by the version name."""
 
     def __init__(self, spark: SparkSession, target_path: str) -> None:
         self.spark = spark
         self.target_path = target_path
+        self.ledger = os.path.join(target_path, "_CURRENT")
         os.makedirs(target_path, exist_ok=True)
+
+    def _pointer(self) -> list[str]:
+        try:
+            with open(self.ledger) as fh:
+                return fh.read().split()
+        except FileNotFoundError:
+            return []
 
     def _current_version(self) -> str | None:
         """The committed version's directory name, None before the first."""
-        try:
-            with open(os.path.join(self.target_path, "_CURRENT")) as fh:
-                return fh.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return (self._pointer() or [None])[-1]
 
     def versions(self) -> list[str]:
         """Version directories still on disk, oldest→newest (the last is
-        not necessarily committed — crash debris stays until its batch
-        replays; the committed one is ``_current_version()``)."""
+        not necessarily committed — crash debris stays until the next
+        publish rewrites it; the committed one is ``_current_version()``)."""
         return sorted(
             (d for d in os.listdir(self.target_path) if d.startswith("_v")),
             key=lambda d: int(d[2:]),
@@ -211,19 +226,32 @@ class VersionedTable:
     def _full(self, version: str) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.target_path, version))
 
-    def _publish(self, df: DataFrame, batch_id: int) -> None:
-        """Write ``df`` as ``_v<batch_id>``, flip ``_CURRENT`` to it, then
-        GC all but the current version and ``_KEEP_VERSIONS`` older ones."""
-        version = f"_v{batch_id}"
+    def _publish(
+        self, df: DataFrame, commit: Callable[[str], None] | None = None
+    ) -> None:
+        """Write ``df`` as the next version, flip ``_CURRENT`` to it, then
+        GC all but the current version and ``_KEEP_VERSIONS`` older ones.
+
+        ``commit(version)`` is the flip of a stream batch: the
+        exactly-once wrapper's commit, which records the batch's ledger
+        beside the version. Without it (a publish outside the stream) the
+        flip keeps the ledger the pointer holds. Version names count up
+        from the committed one, so a publish after a crash rewrites the
+        crashed publish's directory."""
+        held = self._pointer()
+        version = f"_v{int(held[-1][2:]) + 1}" if held else "_v0"
         out_dir = os.path.join(self.target_path, version)
         if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)  # replayed uncommitted batch: rebuild
+            shutil.rmtree(out_dir)  # a crashed publish's directory
         df.write.mode("overwrite").parquet(out_dir)
-        # a replayed batch rewrites a directory Spark may have listed before
-        # the crash — drop the stale file-status cache entry or readers hit
-        # FILE_NOT_EXIST on the torn version's old part files
+        # a rewritten version must not serve a file listing Spark cached
+        # before the crash, or readers hit FILE_NOT_EXIST on the torn
+        # version's old part files
         self.spark.catalog.refreshByPath(out_dir)
-        write_pointer(os.path.join(self.target_path, "_CURRENT"), version)
+        if commit is None:
+            write_pointer(self.ledger, " ".join(held[:-1] + [version]))
+        else:
+            commit(version)
         for stale in self.versions()[: -(_KEEP_VERSIONS + 1)]:
             if stale != version:
                 shutil.rmtree(
@@ -299,13 +327,41 @@ class SegmentLog:
             self._dir(i) for i in self.ids() if upto is None or i <= upto
         ]
 
+    def _frames(self, upto: int | None) -> list[DataFrame]:
+        """One frame per live source ≤ ``upto``: partitioned segments are
+        separate partition roots, which one parquet read cannot list."""
+        return [self.spark.read.parquet(p) for p in self.paths(upto)]
+
     def read(self, upto: int | None = None, schema=None) -> DataFrame:
         """The live rows ≤ ``upto``; an empty ``schema`` frame when there
         are none (with no schema, Spark's own no-input error)."""
-        paths = self.paths(upto)
-        if not paths and schema is not None:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*paths)
+        frames = self._frames(upto)
+        if not frames:
+            if schema is not None:
+                return self.spark.createDataFrame([], schema)
+            return self.spark.read.parquet()
+        return functools.reduce(DataFrame.unionByName, frames)
+
+    def newest(self, key: str, base: DataFrame | None = None,
+               upto: int | None = None) -> DataFrame:
+        """The live rows ≤ ``upto`` (under ``base``'s rows, if given),
+        keeping for each ``key`` group only the rows of the newest source
+        that holds it: ``base`` ranks below the snapshot, the snapshot
+        below every segment, and segments rank by batch id. A group is
+        many rows (a document's signatures or postings), so a re-appended
+        key replaces its whole group. A fold keeps every row of the
+        segments it folds, so only logs that never fold tell those
+        segments apart. Needs ``base`` or a live segment."""
+        parts = ([] if base is None else [base]) + self._frames(upto)
+        ranked = parts[0].withColumn("_rank", F.lit(0))
+        for rank, part in enumerate(parts[1:], 1):
+            ranked = ranked.unionByName(part.withColumn("_rank", F.lit(rank)))
+        top = F.max("_rank").over(Window.partitionBy(key))
+        return (
+            ranked.withColumn("_top", top)
+            .where(F.col("_rank") == F.col("_top"))
+            .drop("_rank", "_top")
+        )
 
     def meta(self, batch_id: int) -> str:
         """The text the segment's marker carries."""
@@ -320,10 +376,13 @@ class SegmentLog:
         meta: str = "",
     ) -> None:
         """Overwrite segment ``batch_id`` with ``df`` and mark it; a batch
-        with no rows leaves no segment, and one the snapshot already
-        holds is left alone."""
+        with no rows leaves no segment. Only committed batches fold, and
+        a committed batch is never applied again, so a batch the
+        snapshot already holds is a caller bug and raises."""
         if batch_id <= self.watermark():
-            return
+            raise ValueError(
+                f"batch {batch_id} is already folded into {self.root}"
+            )
         out, marker = self._dir(batch_id), self._marker(batch_id)
         if os.path.exists(marker):
             os.remove(marker)

@@ -38,7 +38,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.generations import GenerationPair
+from event_store_spark.plans.generations import GenerationPair, SegmentLog
 from event_store_spark.plans.ivf import _ivf_index
 from event_store_spark.plans.registry import ORACLE, register
 from event_store_spark.tables import memo
@@ -547,7 +547,8 @@ def hnsw_search(
     )
     if additions_path is not None:
         adds = (
-            spark.read.parquet(additions_path)
+            SegmentLog(spark, additions_path)
+            .read(schema=graph.select("cell", "vec_id", "v").schema)
             .where(F.col("cell").isin(cells))
             .select(
                 "vec_id",
@@ -568,19 +569,22 @@ def hnsw_search(
 def compact_hnsw_index(
     spark: SparkSession, path: str, additions_path: str
 ) -> None:
-    """Fold a streamed additions segment (an `ivf_assign_stream` target —
-    the segment layout is SHARED with IVF) into the graph: only the
-    TOUCHED cells re-link (their base vectors + the segment's, one
-    `_build_cell_graph` task per cell); untouched cells' graph rows carry
-    over unchanged. Published behind the same GenerationPair flip as
-    `save_hnsw_index` — a reader mid-scan on the previous generation
-    finishes (deferred GC)."""
+    """Fold a streamed additions log (an `ivf_assign_stream` target —
+    the layout is SHARED with IVF) into the graph: only the TOUCHED
+    cells re-link (their base vectors + the additions', newest batch
+    winning per vec_id, one `_build_cell_graph` task per cell);
+    untouched cells' graph rows carry over unchanged. Published behind
+    the same GenerationPair flip as `save_hnsw_index` — a reader
+    mid-scan on the previous generation finishes (deferred GC)."""
     import os as _os
 
     gp = GenerationPair(path, "graph", "hnsw.json")
     d, m = gp.live()
     base = spark.read.parquet(_os.path.join(path, d))
-    adds = spark.read.parquet(additions_path).select("cell", "vec_id", "v")
+    log = SegmentLog(spark, additions_path)
+    if not log.paths():
+        return
+    adds = log.newest("vec_id").select("cell", "vec_id", "v")
     src_cols = ["cell", "vec_id", "v"]
     if "rank" in base.columns:
         # spilled base (save_hnsw_index(spill>1)): segment rows are

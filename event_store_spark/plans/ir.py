@@ -94,10 +94,11 @@ class PostingsIndex:
       leaves no segment. Stats fold by integer addition, so probes over
       base + segments score with the exact same avgdl a rebuild would.
     - ``compact()``: merge base + segments into a fresh generation
-      behind `GenerationPair`'s atomic pointer flip (deferred GC);
-      doc_id collisions resolve segment-wins (a re-ingested doc's newest
-      postings replace the base's) and stats are RECOMPUTED from the
-      merged rows — self-healing, same rules as the ANN compactions.
+      behind `GenerationPair`'s atomic pointer flip (deferred GC); a
+      re-ingested doc keeps only its newest batch's postings
+      (`SegmentLog.newest`) and stats are RECOMPUTED from the merged
+      rows — self-healing, the rule every segment-log compaction
+      follows.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -203,27 +204,18 @@ class PostingsIndex:
     def compact(self) -> None:
         """Merge base + segments into a fresh generation and flip.
 
-        Collisions resolve NEWEST-wins at every level: segment rows
-        replace base rows for a re-ingested doc_id, and when a doc was
-        appended in several batches the highest batch id's rows win
-        (batch ids ascend with ingest order — exactly_once_batch's
-        contract). Before compaction a twice-ingested doc transiently
-        double-counts in probes, the same disclosed window DedupIndex
-        has; an ingest gate that feeds each doc once never sees it."""
+        A re-ingested doc keeps only the rows of the newest batch that
+        holds it (`SegmentLog.newest`; batch ids ascend with ingest order
+        within the maintainer's checkpoint, which `streaming.eos` pins).
+        Before compaction a twice-ingested doc transiently double-counts
+        in probes, the same disclosed window DedupIndex has; an ingest
+        gate that feeds each doc once never sees it."""
         ids = self._log.ids()
         if not ids:
             return
-        live_dir, _ = self._gen.live()
-        base = self.spark.read.parquet(os.path.join(self.path, live_dir))
-        seg = None
-        # the log lists segments in NUMERIC batch id order
-        for order, path in enumerate(self._log.paths(upto=ids[-1])):
-            part = self.spark.read.parquet(path).withColumn("_b", F.lit(order))
-            seg = part if seg is None else seg.unionByName(part)
-        latest = seg.groupBy("doc_id").agg(F.max("_b").alias("_b"))
-        seg = seg.join(latest, ["doc_id", "_b"]).drop("_b")
-        seg_ids = seg.select("doc_id").distinct()
-        merged = base.join(seg_ids, "doc_id", "left_anti").unionByName(seg)
+        merged = self._log.newest(
+            "doc_id", self.postings(include_segments=False), upto=ids[-1]
+        )
 
         def stats(out: str) -> str:
             # recomputed from the written rows (exact: one first(dl) per

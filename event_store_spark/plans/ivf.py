@@ -25,11 +25,17 @@ cells, exactly like `ann_multiprobe_topk`'s probe union."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.vectors import as_double, cosine
-from event_store_spark.plans.generations import GenerationPair, segment_wins
+from event_store_spark.plans.generations import (
+    GenerationPair,
+    SegmentLog,
+    segment_wins,
+)
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table, memo
 
@@ -584,13 +590,11 @@ def save_ivf_index(
     assignment table written parquet PARTITIONED BY cell — the on-disk
     inverted file, so a single-cell search lists exactly ``cell=c/``
     and partition pruning does the rest). Live additions are a SEPARATE
-    segment: `streaming.index.ivf_assign_stream` maintains its own
-    stream-managed cell-partitioned dir (its `_spark_metadata` log is
-    what makes the sink exactly-once, and that log must own its
-    directory), and `load_ivf_index(..., additions_path=...)` unions
-    base + delta lazily — the FAISS add-vs-retrain split as base+segment
-    serving; this function is the periodic retrain checkpoint that
-    folds the segment back in."""
+    segment log: `streaming.index.ivf_assign_stream` appends one
+    cell-partitioned segment per micro-batch to its own directory, and
+    `load_ivf_index(..., additions_path=...)` unions base + additions
+    lazily — the FAISS add-vs-retrain split as base+segment serving;
+    this function is the periodic retrain checkpoint."""
     import json
 
     centroids, assigned = _ivf_index(spark, sf_dir, variant)
@@ -612,9 +616,9 @@ def load_ivf_index(
 ):
     """(centroids, assigned) from a saved index — no retraining, no
     corpus scan; the assignment table stays lazy (cell-pruned reads).
-    ``additions_path`` unions a live-additions segment (an
+    ``additions_path`` unions the live rows of an additions log (an
     `ivf_assign_stream` target) under the same schema — both sides are
-    cell-partitioned, so a cell probe prunes base and segment alike."""
+    cell-partitioned, so a cell probe prunes base and segments alike."""
     import json
     import os
 
@@ -623,7 +627,7 @@ def load_ivf_index(
         centroids = [(int(cell), [float(x) for x in c]) for cell, c in json.load(fh)]
     assigned = spark.read.parquet(os.path.join(path, cells_dir))
     if additions_path is not None:
-        adds = spark.read.parquet(additions_path)
+        adds = SegmentLog(spark, additions_path).read(schema=assigned.schema)
         assigned = assigned.unionByName(adds.select(*assigned.columns))
     return centroids, assigned
 
@@ -678,6 +682,19 @@ def ivf_search(
     )
 
 
+def fold_additions(
+    spark: SparkSession, base_dir: str, additions_path: str
+) -> DataFrame:
+    """The base rows at ``base_dir`` with the additions log folded in,
+    the newest batch winning per vec_id — the shared fold of the ivf, pq
+    and sq8 compactions; an empty log folds nothing."""
+    base = spark.read.parquet(base_dir)
+    log = SegmentLog(spark, additions_path)
+    if not log.paths():
+        return base
+    return segment_wins(base, log.newest("vec_id"), "vec_id")
+
+
 def _generations(path: str) -> GenerationPair:
     return GenerationPair(path, "cells", "centroids.json", pointer="CELLS")
 
@@ -697,7 +714,7 @@ def _cells_dirname(path: str) -> str:
 def compact_ivf_index(
     spark: SparkSession, path: str, additions_path: str
 ) -> None:
-    """Fold a streamed additions segment into the base index WITHOUT
+    """Fold a streamed additions log into the base index WITHOUT
     retraining — the cheap half of index maintenance (Lucene-style
     segment merge), distinct from `save_ivf_index`'s periodic retrain:
     centroids are untouched, so every existing cell assignment stays
@@ -706,15 +723,14 @@ def compact_ivf_index(
     Publication is a generation flip (`GenerationPair.publish`): a crash
     at any point leaves either the old or the new generation fully live,
     and the N-1 generation survives for in-flight readers. The additions
-    segment is left in place — its stream owns its directory and
-    checkpoint, and re-folding the same rows on the next compaction is
-    idempotent. When a vec_id exists in BOTH base and segment (a
-    re-assigned/updated vector), the SEGMENT row wins explicitly, so the
-    stale base assignment can never be resurrected."""
-    import os
-
-    base = spark.read.parquet(os.path.join(path, _cells_dirname(path)))
-    merged = segment_wins(base, spark.read.parquet(additions_path), "vec_id")
+    log is left in place — its stream owns its directory and checkpoint,
+    and re-folding the same rows on the next compaction is idempotent. A
+    vec_id added in several batches folds as its newest batch's row, and
+    one in BOTH base and additions (a re-assigned/updated vector) as the
+    addition, so a stale assignment can never be resurrected."""
+    merged = fold_additions(
+        spark, os.path.join(path, _cells_dirname(path)), additions_path
+    )
     # compaction never retrains: the pointer keeps naming the SAME
     # centroids file, only the cells generation advances
     _generations(path).publish(

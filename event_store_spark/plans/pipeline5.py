@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from event_store_spark.functions.text import whitespace_tokens
 from event_store_spark.functions.vectors import as_double, cosine
-from event_store_spark.plans.generations import GenerationPair, segment_wins
+from event_store_spark.plans.generations import GenerationPair
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table
 
@@ -399,18 +399,21 @@ def save_sq8_index(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 
 def compact_sq8_index(spark: SparkSession, path: str, additions_path: str) -> None:
-    """Fold a `sq8_encode_stream` additions segment into the base codes
+    """Fold a `sq8_encode_stream` additions log into the base codes
     table. Compaction is not RETRAIN: the streaming encoder quantizes
     under the FROZEN published limits (saturating at the code ends), so
-    segment codes are exactly as valid under those limits as the base's,
+    addition codes are exactly as valid under those limits as the base's,
     and folding is the same flat union + generation flip as
-    `pq.compact_pq_index` (segment wins on vec_id collisions; N-1
+    `pq.compact_pq_index` (newest addition wins per vec_id; N-1
     generation kept for in-flight readers). Moving the limits themselves
     remains `save_sq8_index`'s retrain, which re-encodes everything."""
     import os
 
-    base = spark.read.parquet(os.path.join(path, _sq8_live_names(path)[0]))
-    merged = segment_wins(base, spark.read.parquet(additions_path), "vec_id")
+    from event_store_spark.plans.ivf import fold_additions
+
+    merged = fold_additions(
+        spark, os.path.join(path, _sq8_live_names(path)[0]), additions_path
+    )
     # compaction never retrains: the pointer keeps naming the SAME
     # limits file, only the codes generation advances
     _sq8_generations(path).publish(

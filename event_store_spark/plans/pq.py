@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.vectors import as_double
-from event_store_spark.plans.generations import GenerationPair, segment_wins
+from event_store_spark.plans.generations import GenerationPair
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table, memo
 
@@ -399,18 +399,21 @@ def load_pq_index(spark: SparkSession, path: str):
 
 
 def compact_pq_index(spark: SparkSession, path: str, additions_path: str) -> None:
-    """Fold a `pq_encode_stream` additions segment into the base codes
+    """Fold a `pq_encode_stream` additions log into the base codes
     table WITHOUT re-encoding — the codebook is untouched, so every code
     stays valid; the fold is one union + flat rewrite. Same generation
-    flip as `ivf.compact_ivf_index`: the N-1 generation survives for
-    in-flight readers, and re-folding the same segment is idempotent
-    (full rewrite, not append). When a vec_id exists in BOTH base and
-    segment with different codes (a re-encoded vector), the SEGMENT row
-    wins explicitly, so the stale base code can never be resurrected."""
+    flip and newest-wins fold (`ivf.fold_additions`) as
+    `ivf.compact_ivf_index`: the N-1 generation survives for in-flight
+    readers, re-folding the same log is idempotent (full rewrite, not
+    append), and a re-encoded vector's stale code can never be
+    resurrected."""
     import os
 
-    base = spark.read.parquet(os.path.join(path, _codes_dirname(path)))
-    merged = segment_wins(base, spark.read.parquet(additions_path), "vec_id")
+    from event_store_spark.plans.ivf import fold_additions
+
+    merged = fold_additions(
+        spark, os.path.join(path, _codes_dirname(path)), additions_path
+    )
     # compaction never retrains: the pointer keeps naming the SAME
     # codebook file, only the codes generation advances
     _generations(path).publish(

@@ -151,10 +151,13 @@ class VectorIndex:
         embeddings (columns ``vec_id``, ``v: array<double>``), writing a
         serving segment at ``segment_path``; the trained state (IVF
         centroids / PQ codebook / SQ8 limits) is loaded from THIS index,
-        so callers never hand-carry the codebook. Serve base + segment
-        via ``search(additions_path=...)`` (IVF) or by unioning the
-        segment onto the codes table (flat kinds); ``compact`` folds the
-        segment back in. Returns the StreamingQuery (availableNow)."""
+        so callers never hand-carry the codebook. ``segment_path`` is a
+        `generations.SegmentLog`, one segment per micro-batch: serve base
+        + additions via ``search(additions_path=...)`` (IVF, HNSW) or by
+        unioning ``SegmentLog(spark, segment_path).read()`` onto the
+        codes table (flat kinds); ``compact`` folds them back in, the
+        newest batch winning per vec_id. Returns the StreamingQuery
+        (availableNow)."""
         if self.kind == "ivf":
             from event_store_spark.plans.ivf import load_ivf_index
             from event_store_spark.streaming.index import ivf_assign_stream
@@ -197,7 +200,7 @@ class VectorIndex:
         (`pq_encode_stream` segment), or the SQ8 codes table
         (`sq8_encode_stream` segment — valid since round 8's encoder
         quantizes under the FROZEN published limits) — all behind the
-        same atomic pointer-flip publication with segment-wins collision
+        same atomic pointer-flip publication with newest-wins collision
         handling. Moving the trained state itself (centroid retrain,
         codebook retrain, limits retrain) stays the periodic `build`."""
         if self.kind == "ivf":

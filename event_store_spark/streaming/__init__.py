@@ -1,6 +1,6 @@
 """Structured Streaming layer: subscribe, replicate, exactly-once sinks."""
 
-from event_store_spark.streaming.eos import exactly_once_batch
+from event_store_spark.streaming.eos import exactly_once
 from event_store_spark.streaming.kafka import (
     kafka_reader_options,
     kafka_source_to_records,
@@ -36,7 +36,7 @@ __all__ = [
     "OcfIngest",
     "benchmark_grams",
     "contamination_gate",
-    "exactly_once_batch",
+    "exactly_once",
     "kafka_reader_options",
     "kafka_writer_options",
     "kafka_source_to_records",

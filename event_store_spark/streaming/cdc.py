@@ -9,9 +9,10 @@ consumer: parse the envelope declaratively (`from_json`, no UDF), fold
 each micro-batch to its per-key winners, and merge into a versioned
 parquet table behind the same atomic pointer flip / idempotent-replay
 contract as `streaming.rollup.ContinuousRollup` (both are a
-`plans.generations.VersionedTable`; crash-safe: the flip
-is the commit marker; a replayed batch rebuilds its version directory
-and re-flips; a batch that already flipped is skipped).
+`plans.generations.VersionedTable`; crash-safe: the flip is the commit
+point and carries the sink's `streaming.eos` ledger, so a replayed
+uncommitted batch rebuilds the next version and flips, and `eos` skips
+a committed one).
 
 Ordering/late data: every materialized row carries its change's
 ``(ts_ms, seq)``; a merge keeps, per key, the LARGEST such stamp across
@@ -36,9 +37,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from event_store_spark.plans.generations import VersionedTable
+from event_store_spark.streaming.eos import ExactlyOnceSink
 
 
-class CdcMaterializer(VersionedTable):
+class CdcMaterializer(VersionedTable, ExactlyOnceSink):
     """Materialize Debezium changes for one table.
 
     ``row_schema`` is the Spark DDL of the table row (the Debezium
@@ -123,11 +125,8 @@ class CdcMaterializer(VersionedTable):
 
     # --------------------------------------------------------------- merging
 
-    def _merge(self, changes: DataFrame, batch_id: int) -> None:
+    def _apply(self, changes: DataFrame, batch_id: int, commit) -> None:
         current = self._current_version()
-        version = f"_v{batch_id}"
-        if current == version:
-            return  # replay after commit flip: idempotent skip
         # last key: a TOTAL order over the row content (xxhash64 of the
         # row struct). Without it, two updates to one key with equal
         # (ts_ms, seq) tie after `_deleted` and row_number picks an
@@ -163,9 +162,9 @@ class CdcMaterializer(VersionedTable):
             merged = existing.join(touched, self.keys, "left_anti").unionByName(
                 winners
             )
-        self._publish(merged, batch_id)
+        self._publish(merged, commit)
 
-    def gc_tombstones(self, older_than_ms: int, batch_id: int) -> int:
+    def gc_tombstones(self, older_than_ms: int) -> int:
         """Drop tombstones with ``ts_ms < older_than_ms`` from the current
         state — the log-compaction step the module docstring records as
         standard CDC debt. Safe once the feed's max lateness has passed
@@ -174,10 +173,10 @@ class CdcMaterializer(VersionedTable):
         change can carry a smaller stamp the tombstone is dead weight
         (exactly a compacted topic's delete-retention window).
 
-        Publishes as a new version under the same pointer-flip contract —
-        ``batch_id`` must be a fresh id (e.g. max processed + 1); in-flight
-        readers keep their snapshot, replays skip. Returns the number of
-        tombstones dropped."""
+        Publishes as a new version under the same pointer-flip contract;
+        the flip keeps the ledger's (lineage, batch id), so the stream's
+        next batch applies as usual, and in-flight readers keep their
+        snapshot. Returns the number of tombstones dropped."""
         current = self._current_version()
         if current is None:
             return 0
@@ -194,18 +193,5 @@ class CdcMaterializer(VersionedTable):
         n = full.where(dead).count()
         if n == 0:
             return 0
-        self._publish(full.where(~dead), batch_id)
+        self._publish(full.where(~dead))
         return n
-
-    # --------------------------------------------------------------- running
-
-    def start(self, changes_stream: DataFrame, available_now: bool = True):
-        """Run the materializer over a parsed change stream."""
-        writer = (
-            changes_stream.writeStream.foreachBatch(self._merge)
-            .outputMode("update")
-            .option("checkpointLocation", self.checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

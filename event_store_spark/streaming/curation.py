@@ -10,7 +10,7 @@ corpus, a stream's can only be ARRIVAL order — identical when documents
 arrive in doc_id order (how the pin test drives it) and first-come-wins
 otherwise (the only meaningful streaming semantics).
 
-Per micro-batch, inside ONE idempotent foreachBatch transaction:
+Per micro-batch, inside ONE `streaming.eos` exactly-once batch:
 
 1. quality gate — the shared `quality_score` closed form + length
    bounds, map-side (stateless, no shuffle);
@@ -21,15 +21,15 @@ Per micro-batch, inside ONE idempotent foreachBatch transaction:
    literal), filled in doc_id order within the batch;
 4. publish — admitted rows and the batch's new hashes land as the
    batch's segments of two `plans.generations.SegmentLog`s
-   (``admitted/``, ``seen/``), then the LAST step records the batch id
-   behind an fsync+os.replace pointer. Reads take only segments at or
-   below that pointer, and replayed batches with id <= it are skipped
-   whole, so a crash anywhere re-runs the batch against the exact
-   pre-batch state (a segment is rewritten under its own batch id) — the
-   repo's standard EOS composition (ivm/cdc/rollup pointer discipline).
-   After the commit each log folds its segments into one snapshot every
-   ``SEGMENTS_PER_FOLD`` batches, so the seen-ledger anti-join never
-   pays a listing that grows with the stream.
+   (``admitted/``, ``seen/``), then the LAST step commits the sink's
+   `streaming.eos` ledger. Reads take only segments below the batch
+   (or, for `table`, at or below the ledger), so a crash anywhere
+   re-runs the batch against the exact pre-batch state (a segment is
+   rewritten under its own batch id), and `eos` decides which batches
+   are already applied. After the commit each log folds its segments
+   into one snapshot every ``SEGMENTS_PER_FOLD`` batches, so the
+   seen-ledger anti-join never pays a listing that grows with the
+   stream.
 
 Scale: the gate is map-side; the seen-ledger probe is one hash-keyed
 anti-join per batch (ledger sharded by its own parquet layout, batch
@@ -39,22 +39,20 @@ per-corpus driver state.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from event_store_spark.core.state import atomic_write
-from event_store_spark.plans.generations import SegmentLog
+from event_store_spark.plans.generations import LEDGER, SegmentLog
+from event_store_spark.streaming.eos import ExactlyOnceSink, read_ledger
 
 #: batch-plan constants (plans/pipeline.py quality_filter/corpus_curation)
 QUALITY_MIN = 0.55
 LEN_LO, LEN_HI = 100, 20_000
 
 
-class CurationPipeline:
+class CurationPipeline(ExactlyOnceSink):
     def __init__(
         self,
         spark: SparkSession,
@@ -66,40 +64,21 @@ class CurationPipeline:
         self.target_path = target_path
         self.checkpoint = checkpoint
         self.quota = quota
+        self.ledger = os.path.join(target_path, LEDGER)
         self._admitted = SegmentLog(spark, os.path.join(target_path, "admitted"))
         self._seen = SegmentLog(spark, os.path.join(target_path, "seen"))
 
-    # ------------------------------------------------------------ state
-
-    def _ptr(self) -> str:
-        return os.path.join(self.target_path, "BATCH")
-
-    def _last_batch(self) -> int:
-        try:
-            with open(self._ptr()) as fh:
-                return json.load(fh)["batch_id"]
-        except OSError:
-            return -1
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(self.target_path, exist_ok=True)
-        atomic_write(self._ptr(), json.dumps({"batch_id": batch_id}))
+    _ADMITTED = "doc_id bigint, source string, lang string, n_chars bigint"
 
     def table(self) -> DataFrame:
         """The admitted corpus so far (committed batches only)."""
-        return self._admitted.read(
-            upto=self._last_batch(),
-            schema="doc_id bigint, source string, lang string, n_chars bigint",
-        )
+        upto = (read_ledger(self.ledger) or ("", -1))[1]
+        return self._admitted.read(upto=upto, schema=self._ADMITTED)
 
     # ------------------------------------------------------------- sink
 
-    def _gate(self, df: DataFrame, batch_id: int) -> None:
+    def _apply(self, df: DataFrame, batch_id: int, commit) -> None:
         from event_store_spark.functions.text import quality_score
-
-        last = self._last_batch()
-        if batch_id <= last:
-            return  # committed batch replayed whole: skip (idempotent)
 
         keep = (quality_score() >= QUALITY_MIN) & F.col("n_chars").between(
             LEN_LO, LEN_HI
@@ -115,10 +94,10 @@ class CurationPipeline:
             )
         )
 
-        seen_dirs = self._seen.paths(upto=last)
+        seen_dirs = self._seen.paths(upto=batch_id - 1)
         if seen_dirs:
-            ledger = self.spark.read.parquet(*seen_dirs)
-            passed = passed.join(ledger, passed["_h"] == ledger["h"], "left_anti")
+            seen = self.spark.read.parquet(*seen_dirs)
+            passed = passed.join(seen, passed["_h"] == seen["h"], "left_anti")
         w_dedup = Window.partitionBy("_h").orderBy("doc_id")
         fresh = (
             passed.withColumn("_rn", F.row_number().over(w_dedup))
@@ -126,11 +105,12 @@ class CurationPipeline:
             .drop("_rn")
         )
 
+        before = self._admitted.read(upto=batch_id - 1, schema=self._ADMITTED)
         admitted_counts = {
             r["source"]: r["n"]
-            for r in self.table().groupBy("source").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect()
+            for r in before.groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         }
         cap_map = (
             F.create_map(
@@ -153,21 +133,15 @@ class CurationPipeline:
             .drop("_rk")
         )
 
-        # publish: data first, pointer LAST (the commit point)
+        # publish: data first, ledger LAST (the commit point)
         self._admitted.write(batch_id, admitted.drop("_h"))
-        # the ledger records EVERY quality-passing hash (quota rejects
+        # the seen log records EVERY quality-passing hash (quota rejects
         # included): a later duplicate of a quota-rejected doc is still a
         # duplicate — exactly the batch plan's dedup-before-quota order
         self._seen.write(batch_id, fresh.select(F.col("_h").alias("h")))
-        self._commit(batch_id)
-        # post-commit maintenance: everything folded is <= the pointer
+        commit()
+        # post-commit maintenance: everything folded is committed
         self._seen.fold(batch_id)
         self._admitted.fold(batch_id)
 
-    def start(self, docs_stream: DataFrame) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.foreachBatch(self._gate)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    _gate = ExactlyOnceSink._merge

@@ -1,56 +1,144 @@
-"""Exactly-once foreachBatch composition (SURVEY §2.8 X2/X3).
+"""Exactly-once streaming sinks: the one owner of "already applied"
+(SURVEY §2.8 X2/X3).
 
-The reference gets exactly-once two ways: Kafka transactions wrapping
-events+cursor (`EventReplicatorWorker.java:184-208`) and caller-composed DB
-transactions wrapping projection+offset (`ReactorKafkaEventStore.java:214-246`).
-Spark's sinks have no cross-system transactions, so the engine uses the
-canonical Structured-Streaming EOS pattern instead:
+The reference gets exactly-once by committing its cursor in the same
+Kafka transaction as the data (`EventReplicatorWorker.java:184-208`) and
+by caller-composed DB transactions wrapping projection+offset
+(`ReactorKafkaEventStore.java:214-246`). Spark's sinks have no
+cross-system transactions, so the engine uses Structured Streaming's
+pattern instead: a replayable source, the checkpoint's write-ahead
+offset log, and a sink that is idempotent per batch id. A batch id
+means something only inside ONE checkpoint, though: a lost checkpoint
+restarts ids at 0 while a file source relists every file. So every sink
+keeps a ledger of ``{lineage, batch_id}`` — the checkpoint's lineage
+(`streaming.lineage`) and the last batch it applied — and this module
+alone decides from it:
 
-    idempotent-by-batchId: the bookkeeping store remembers the last batch_id
-    applied per topic; a redelivered batch (same id after crash/restart) is
-    skipped entirely, and the user's projection runs at most once per id.
+- `applied`: a batch at or below the ledger's id, in the ledger's
+  lineage, is already applied and is skipped whole.
+- `exactly_once`: the wrapper every derived sink runs its batches
+  through. It reads the checkpoint's lineage once, at query start, and
+  hands the batch a ``commit`` that writes the ledger through
+  `generations.write_pointer` as the batch's commit point: its last
+  write, or the ``_CURRENT`` flip of a `VersionedTable`, whose pointer
+  carries the ledger. Maintenance after the commit (segment folds,
+  version GC) is never needed by a replay.
+- One rule for a lineage the ledger has not seen: raise, before the
+  query starts, naming the checkpoint and the artifact. Never skip,
+  never duplicate, never rebuild silently: only a file source
+  guarantees that a fresh checkpoint replays all history, so an
+  automatic rebuild could drop history. The artifact is derived, so
+  deleting it (and its checkpoint) rebuilds it from the source.
 
-Combined with the checkpointed source (which replays the same batch with the
-same id after failure), this yields end-to-end exactly-once for any sink
-whose writes are deterministic AND idempotent per batch (e.g. overwrite
-keyed by batch_id/cursor). The boundary is the commit step: ``process``
-effects and the batch-id commit are two separate steps, so a crash BETWEEN
-them reruns ``process`` once on redelivery — at-least-once for external
-effects that aren't idempotent. The reference closes the same gap by
-composing projection+offset in one DB transaction
-(`ReactorKafkaEventStore.java:214-246`); here the engine's own bookkeeping
-(offset/cursor/batch id) rides one atomic file replace, and user-supplied
-projections must be batch-idempotent to get the same guarantee.
+`Replicator` and `Subscription` keep their own cursor recovery for an
+unseen lineage instead, which the event log's total (lsn, id) order
+makes possible; they test "already applied" with `applied`, inline.
+
+The boundary is the commit: a sink's writes before it must be
+idempotent per batch (overwrite under the batch id), because a crash
+between them and the commit reruns the batch.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
+
+from event_store_spark.plans import generations
+from event_store_spark.streaming.lineage import checkpoint_lineage_id
+
+#: ``apply(df, batch_id, commit)``: runs a batch not yet applied and
+#: calls ``commit(*payload)`` as its commit point
+Apply = Callable[[DataFrame, int, Callable[..., None]], None]
 
 
-def exactly_once_batch(
-    topic: str,
-    process: Callable[[DataFrame, int], None],
-    get_last_batch_id: Callable[[str], int | None],
-    commit: Callable[[str, int], None],
+def applied(held: tuple | None, lineage: str, batch_id: int) -> bool:
+    """The one "already applied" rule: ``held``, the ``(lineage,
+    batch_id)`` a sink recorded last (None, or a None id, before its
+    first batch), covers batch ``batch_id`` of ``lineage``."""
+    return (
+        held is not None
+        and held[0] == lineage
+        and held[1] is not None
+        and batch_id <= held[1]
+    )
+
+
+def read_ledger(ledger: str) -> tuple[str, int] | None:
+    """The ``(lineage, batch_id)`` a ledger file holds, None if there is
+    none. A ledger of no known lineage (an artifact written before
+    ledgers existed) reads as lineage ''."""
+    try:
+        with open(ledger) as fh:
+            parts = fh.read().split()
+    except FileNotFoundError:
+        return None
+    if len(parts) < 2 or not parts[1].isdigit():
+        return "", -1
+    return parts[0], int(parts[1])
+
+
+def exactly_once(
+    checkpoint: str, ledger: str, apply: Apply
 ) -> Callable[[DataFrame, int], None]:
-    """Wrap ``process`` so redelivered micro-batches are no-ops.
-
-    ``commit(topic, batch_id)`` must persist the batch id atomically WITH
-    the effects of ``process`` (the JSON state stores do this: the id rides
-    in the same atomic file replace as the offset/cursor). If ``process``
-    also writes to an external system outside that commit, those writes run
-    again when a crash lands between them — make them idempotent per
-    batch id (overwrite, not append) to keep end-to-end exactly-once.
-    """
+    """The foreachBatch function of a sink whose ledger file is
+    ``ledger``, for a query on ``checkpoint``. Raises at once if the
+    ledger holds another checkpoint's batches."""
+    lineage = checkpoint_lineage_id(checkpoint)
+    held = read_ledger(ledger)
+    artifact = os.path.dirname(ledger)
+    if held is not None and held[0] != lineage:
+        raise RuntimeError(
+            f"{artifact} was written under another checkpoint than "
+            f"{checkpoint}: batch ids of two checkpoints are incomparable, "
+            "so its batches can be neither skipped nor reapplied. Restore "
+            f"that checkpoint, or delete {artifact} to rebuild it from the "
+            "source."
+        )
+    os.makedirs(artifact, exist_ok=True)
 
     def fn(df: DataFrame, batch_id: int) -> None:
-        last = get_last_batch_id(topic)
-        if last is not None and batch_id <= last:
-            return  # redelivery after crash — effects already applied
-        process(df, batch_id)
-        commit(topic, batch_id)
+        if applied(read_ledger(ledger), lineage, batch_id):
+            return
+        apply(
+            df,
+            batch_id,
+            lambda *payload: generations.write_pointer(
+                ledger, " ".join((lineage, str(batch_id), *payload))
+            ),
+        )
 
     return fn
+
+
+def start(
+    stream: DataFrame, checkpoint: str, ledger: str, apply: Apply
+) -> StreamingQuery:
+    """Run everything ``stream`` has now into a sink through
+    `exactly_once` (availableNow). Update mode: a streaming aggregation
+    emits the groups each batch touched, and any other query appends."""
+    return (
+        stream.writeStream.foreachBatch(exactly_once(checkpoint, ledger, apply))
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+class ExactlyOnceSink:
+    """Base of a derived streaming sink: it sets ``checkpoint`` and
+    ``ledger`` (its ledger file's path) and implements ``_apply`` (an
+    `Apply`)."""
+
+    def _merge(self, df: DataFrame, batch_id: int) -> None:
+        """One batch through the wrapper, as the stream runs it."""
+        exactly_once(self.checkpoint, self.ledger, self._apply)(df, batch_id)
+
+    def start(self, stream: DataFrame) -> StreamingQuery:
+        """Start (or resume) the sink's availableNow query over
+        ``stream``."""
+        return start(stream, self.checkpoint, self.ledger, self._apply)

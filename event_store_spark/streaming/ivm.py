@@ -21,16 +21,17 @@ addition. This module maintains exactly that:
   keep the module self-contained;
 - the view table lives behind the same atomic pointer flip /
   idempotent-replay contract as `ContinuousRollup`/`CdcMaterializer`
-  (all are a `plans.generations.VersionedTable`; the flip is the
-  commit marker; replays of committed batches skip; replays of
-  uncommitted batches rebuild) — crucially the side
-  snapshots are also rolled forward idempotently: a replayed committed
-  batch must not re-append its deltas. Each side is a
-  `plans.generations.SegmentLog`: a batch's delta is its own marked
-  segment, rewritten on replay and ignored once folded, and the log
-  folds its segments into one snapshot every ``SEGMENTS_PER_FOLD``
-  batches, so a long-running stream's listing/read cost stays bounded
-  instead of growing one subdir per micro-batch.
+  (all are a `plans.generations.VersionedTable` whose flip carries the
+  `streaming.eos` ledger and is the batch's one commit point; `eos`
+  skips a committed batch whole, and an uncommitted one rebuilds) —
+  crucially the side snapshots roll forward idempotently too. Each side
+  is a `plans.generations.SegmentLog`: a batch's delta is its own marked
+  segment, written BEFORE the flip (a replay of an uncommitted batch
+  rewrites it; the delta rule reads only the segments below the
+  batch), and after the flip the log folds its segments into one
+  snapshot every ``SEGMENTS_PER_FOLD`` batches, so a long-running
+  stream's listing/read cost stays bounded instead of growing one
+  subdir per micro-batch.
 
 Aggregates: any dict of column → additive measure (``sum(expr)`` /
 ``count(*)`` shapes), the incrementally-mergeable class. MIN/MAX are
@@ -51,15 +52,19 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.plans.generations import SegmentLog, VersionedTable
+from event_store_spark.streaming.eos import ExactlyOnceSink
 
 
-class JoinAggregateView(VersionedTable):
+class JoinAggregateView(VersionedTable, ExactlyOnceSink):
     """Maintain ``agg(R ⋈ S) GROUP BY group_cols`` incrementally.
 
     ``join_keys``: equi-join column names shared by both sides.
     ``measures``: output column → (side-qualified) additive expression
     built by the caller from the joined frame, e.g.
     ``{"revenue": F.sum(F.col("amount")), "n": F.count(F.lit(1))}``.
+    The stream `start` takes must carry a ``_side`` column ('l' | 'r')
+    plus each side's columns (the other side's NULL) — the union shape a
+    two-source file/CDC feed produces.
     """
 
     def __init__(
@@ -99,18 +104,9 @@ class JoinAggregateView(VersionedTable):
 
     def _side_pre(self, side: str, batch_id: int, schema) -> DataFrame:
         """The side's accumulated rows BEFORE this batch: its log's live
-        segments below ``batch_id``. A replayed uncommitted batch whose
-        segment already exists is thereby EXCLUDED from its own
-        pre-state, and rewriting that segment never double-appends."""
-        log = self._sides[side]
-        watermark = log.watermark()
-        if watermark >= batch_id:
-            # folds only ever cover committed batches, and a committed
-            # batch never reaches the delta rule again
-            raise RuntimeError(
-                f"side snapshot watermark {watermark} >= batch {batch_id}"
-            )
-        return log.read(upto=batch_id - 1, schema=schema)
+        segments below ``batch_id``, so the batch's own segment, written
+        first, is excluded from its pre-state."""
+        return self._sides[side].read(upto=batch_id - 1, schema=schema)
 
     def table(self) -> DataFrame:
         current = self._current_version()
@@ -150,59 +146,42 @@ class JoinAggregateView(VersionedTable):
             *[m.alias(name) for name, m in self.measures.items()]
         )
 
-    def _merge(self, tagged: DataFrame, batch_id: int) -> None:
-        current = self._current_version()
-        version = f"_v{batch_id}"
+    def _apply(self, tagged: DataFrame, batch_id: int, commit) -> None:
         dl = tagged.where(F.col("_side") == "l").select(*self.left_cols)
         dr = tagged.where(F.col("_side") == "r").select(*self.right_cols)
-        if current != version:
-            delta = self._delta_view(dl, dr, batch_id)
-            if current is None:
-                merged = delta
-            else:
-                existing = self.table()
-                meas = list(self.measures)
-                merged = (
-                    existing.alias("e")
-                    .join(delta.alias("d"), self.group_cols, "full_outer")
-                    .select(
-                        *[
-                            F.coalesce(f"e.{c}", f"d.{c}").alias(c)
-                            for c in self.group_cols
-                        ],
-                        *[
-                            (
-                                F.coalesce(F.col(f"e.{m}"), F.lit(0))
-                                + F.coalesce(F.col(f"d.{m}"), F.lit(0))
-                            ).alias(m)
-                            for m in meas
-                        ],
-                    )
+        for log, delta_df in zip(self._sides.values(), (dl, dr)):
+            # a fold a crash cut short after the previous batch's flip
+            log.fold(batch_id - 1)
+            log.write(batch_id, delta_df)
+        delta = self._delta_view(dl, dr, batch_id)
+        current = self._current_version()
+        if current is None:
+            merged = delta
+        else:
+            meas = list(self.measures)
+            merged = (
+                self._full(current).alias("e")
+                .join(delta.alias("d"), self.group_cols, "full_outer")
+                .select(
+                    *[
+                        F.coalesce(f"e.{c}", f"d.{c}").alias(c)
+                        for c in self.group_cols
+                    ],
+                    *[
+                        (
+                            F.coalesce(F.col(f"e.{m}"), F.lit(0))
+                            + F.coalesce(F.col(f"d.{m}"), F.lit(0))
+                        ).alias(m)
+                        for m in meas
+                    ],
                 )
-            self._publish(merged, batch_id)
-        # roll the side copies forward: each batch's delta is its OWN
-        # segment (see _side_pre); a replay of a folded batch is a no-op
-        for side, delta_df in (("l", dl), ("r", dr)):
-            self._sides[side].write(batch_id, delta_df)
-            self._sides[side].fold(batch_id)
-
-    # ------------------------------------------------------------- running
-
-    def start(self, tagged_stream: DataFrame, available_now: bool = True):
-        """`tagged_stream` must carry a `_side` column ('l' | 'r') plus
-        each side's columns (the other side's NULL) — the union shape a
-        two-source file/CDC feed produces."""
-        writer = (
-            tagged_stream.writeStream.foreachBatch(self._merge)
-            .outputMode("update")
-            .option("checkpointLocation", self.checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+            )
+        self._publish(merged, commit)
+        for log in self._sides.values():
+            log.fold(batch_id)
 
 
-class DistinctCountView(VersionedTable):
+class DistinctCountView(VersionedTable, ExactlyOnceSink):
     """Incrementally-maintained per-group DISTINCT counts.
 
     COUNT(DISTINCT) is not additive — re-appearing members must not
@@ -273,11 +252,7 @@ class DistinctCountView(VersionedTable):
             ),
         )
 
-    def _merge(self, batch_df: DataFrame, batch_id: int) -> None:
-        current = self._current_version()
-        version = f"_v{batch_id}"
-        if current == version:
-            return  # replay of a committed batch
+    def _apply(self, batch_df: DataFrame, batch_id: int, commit) -> None:
         delta = batch_df.groupBy(*self.group_cols).agg(
             F.hll_sketch_agg(self.value_col).alias("sk")
         )
@@ -290,14 +265,4 @@ class DistinctCountView(VersionedTable):
                 .groupBy(*self.group_cols)
                 .agg(F.hll_union_agg("sk").alias("sk"))
             )
-        self._publish(merged, batch_id)
-
-    def start(self, stream: DataFrame, available_now: bool = True):
-        writer = (
-            stream.writeStream.foreachBatch(self._merge)
-            .outputMode("update")
-            .option("checkpointLocation", self.checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        self._publish(merged, commit)

@@ -1,12 +1,18 @@
-"""Checkpoint-lineage identity shared by Replicator and Subscription.
+"""Checkpoint-lineage identity: which checkpoint produced a batch id.
 
 Spark streaming batch ids are only comparable within ONE checkpoint's
 lifetime: if the checkpoint directory is lost, ids restart at 0 while the
-file source relists every file. Any idempotence gate of the form
-``batch_id <= stored_batch_id`` therefore needs to know WHICH checkpoint
-produced the stored id — otherwise the whole relisted backlog (including
-never-processed events) can land in a "stale" batch 0 and be silently
-skipped. The marker lives INSIDE the checkpoint dir so it dies with it.
+file source relists every file. A "batch_id <= stored batch id" test
+that does not know WHICH checkpoint produced the stored id can therefore
+skip the whole relisted backlog (never-processed events included) as a
+"stale" batch 0, or apply it again beside what it already wrote. The
+marker lives INSIDE the checkpoint dir so it dies with it.
+
+The one rule (`streaming.eos`): a sink's ledger records the lineage
+with its last batch id, and a lineage the ledger has not seen raises
+before the query starts. `Replicator` and `Subscription` instead recover
+a new lineage from their cursor (the event log's total (lsn, id) order
+makes that possible).
 
 (The reference never faces this: its progress cursor lives in one Kafka
 transaction with the data, `EventReplicatorWorker.java:184-208`.)

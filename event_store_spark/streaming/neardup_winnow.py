@@ -26,15 +26,18 @@ MAX_FP_DOCS stoplist as the registered query: a fingerprint carried by
 more live batch documents than the cap is non-discriminative and
 witnesses no pair.
 
-Exactly-once across crashes, the engine's standard discipline:
+Exactly-once across crashes, the engine's standard discipline
+(`streaming.eos`):
 - the admitted-docs sink writes to a DETERMINISTIC per-batch directory
   (``out_dir/batch-<id>``, overwrite) — redelivery rewrites bytes;
 - the index append uses `DedupIndex.append(batch_id=...)` — the
   batch's own `SegmentLog` segment, rewritten on redelivery — so a
   redelivered batch cannot duplicate signature rows;
-- the batch id commits LAST via one atomic JSON replace
-  (`exactly_once_batch`); any crash before it replays the whole batch
-  over those idempotent writes.
+- the gate's ledger (``out_dir/_LEDGER``) commits LAST; any crash
+  before it replays the whole batch over those idempotent writes, and
+  `eos` alone decides which batches are already applied. A checkpoint
+  the ledger has not seen raises: rebuild by deleting ``out_dir`` and
+  rebuilding the index.
 
 Scale shape: the probe broadcasts only the BATCH's fingerprints (the
 index side never shuffles — partition-pruned parquet), the within-batch
@@ -50,29 +53,26 @@ micro-batch-sized edge list, never anything corpus-sized.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from event_store_spark.core.state import atomic_write
 from event_store_spark.plans.dedup_index import DedupIndex
-from event_store_spark.streaming.eos import exactly_once_batch
+from event_store_spark.plans.generations import LEDGER
+from event_store_spark.streaming.eos import ExactlyOnceSink, exactly_once
 
 
-class WinnowDedupGate:
+class WinnowDedupGate(ExactlyOnceSink):
     """foreachBatch gate: drop near-dups, land survivors, grow the index.
 
     Subclasses (streaming/substring_gate.py) swap the duplicate
-    criterion by overriding ``REQUIRED_KIND``/``GATE_NAME`` and
-    ``admitted``; the state bookkeeping, exactly-once sink discipline,
-    and index fold are shared."""
+    criterion by overriding ``REQUIRED_KIND`` and ``admitted``; the
+    exactly-once sink discipline and index fold are shared."""
 
     REQUIRED_KIND = "winnow"
-    GATE_NAME = "winnow-gate"
 
-    def __init__(self, index: DedupIndex, out_dir: str, state_path: str):
+    def __init__(self, index: DedupIndex, out_dir: str, checkpoint: str):
         if index.kind != self.REQUIRED_KIND:
             raise ValueError(
                 f"gate requires a {self.REQUIRED_KIND} index, "
@@ -80,20 +80,8 @@ class WinnowDedupGate:
             )
         self.index = index
         self.out_dir = out_dir
-        self.state_path = state_path
-
-    # ------------------------------------------------------------- state
-
-    def _last_batch_id(self, _topic: str) -> int | None:
-        try:
-            with open(self.state_path) as fh:
-                return json.load(fh)["batch_id"]
-        except OSError:
-            return None
-
-    def _commit(self, _topic: str, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self.state_path) or ".", exist_ok=True)
-        atomic_write(self.state_path, json.dumps({"batch_id": batch_id}))
+        self.checkpoint = checkpoint
+        self.ledger = os.path.join(out_dir, LEDGER)
 
     # -------------------------------------------------------------- gate
 
@@ -178,23 +166,16 @@ class WinnowDedupGate:
         )
         return batch_docs.join(F.broadcast(drop_df), "doc_id", "left_anti")
 
+    def _apply(self, df: DataFrame, batch_id: int, commit) -> None:
+        out = os.path.join(self.out_dir, f"batch-{batch_id}")
+        self.admitted(df).write.mode("overwrite").parquet(out)
+        # re-read what the sink landed: one source of truth for the
+        # index fold, and the recompute-vs-landed gap a retried
+        # nondeterministic upstream could open is closed by reading
+        # the committed bytes
+        self.index.append(self.index.spark.read.parquet(out), batch_id=batch_id)
+        commit()
+
     def foreach_batch(self):
         """The exactly-once foreachBatch function for writeStream."""
-
-        def process(df: DataFrame, batch_id: int) -> None:
-            keep = self.admitted(df)
-            keep.write.mode("overwrite").parquet(
-                os.path.join(self.out_dir, f"batch-{batch_id}")
-            )
-            # re-read what the sink landed: one source of truth for the
-            # index fold, and the recompute-vs-landed gap a retried
-            # nondeterministic upstream could open is closed by reading
-            # the committed bytes
-            landed = self.index.spark.read.parquet(
-                os.path.join(self.out_dir, f"batch-{batch_id}")
-            )
-            self.index.append(landed, batch_id=batch_id)
-
-        return exactly_once_batch(
-            self.GATE_NAME, process, self._last_batch_id, self._commit
-        )
+        return exactly_once(self.checkpoint, self.ledger, self._apply)

@@ -4,9 +4,10 @@
 index in one pass; this maintainer keeps it current for a GROWING
 document stream: each arriving micro-batch's postings rows become that
 batch's segment of the index's `plans.generations.SegmentLog` via
-`PostingsIndex.append` (a crash-redelivered batch rewrites its segment,
-never duplicates; the segment's marker, which carries its integer stats,
-commits last), so `probe()` sees new
+`PostingsIndex.append` (a crash-redelivered uncommitted batch rewrites
+its segment, never duplicates; the segment's marker carries its integer
+stats, and the maintainer's `streaming.eos` ledger, ``_LEDGER`` in the
+index directory, commits after it), so `probe()` sees new
 documents immediately with the exact avgdl/n_docs a rebuild would
 compute, and `compact()` folds segments into a fresh generation behind
 the atomic pointer flip at the operator's cadence. The typed_events
@@ -21,26 +22,24 @@ probes prune on; compaction is one shuffle-free union rewrite.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
 
+from event_store_spark.plans.generations import LEDGER
 from event_store_spark.plans.ir import PostingsIndex
+from event_store_spark.streaming.eos import ExactlyOnceSink
 
 
-class Bm25PostingsMaintainer:
+class Bm25PostingsMaintainer(ExactlyOnceSink):
+    """`start(docs_stream)` attaches to a streaming documents frame
+    (doc_id, text, ...)."""
+
     def __init__(self, index: PostingsIndex, checkpoint: str):
         self.index = index
         self.checkpoint = checkpoint
+        self.ledger = os.path.join(index.path, LEDGER)
 
-    def start(self, docs_stream: DataFrame) -> StreamingQuery:
-        """Attach to a streaming documents frame (doc_id, text, ...)."""
-
-        def sink(df: DataFrame, batch_id: int) -> None:
-            self.index.append(df, batch_id=batch_id)
-
-        return (
-            docs_stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    def _apply(self, df: DataFrame, batch_id: int, commit) -> None:
+        self.index.append(df, batch_id=batch_id)
+        commit()

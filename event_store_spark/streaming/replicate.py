@@ -21,10 +21,11 @@ lineage:
 - **Live lineage** (the streaming checkpoint that produced the stored
   bookkeeping is still in use): the file source's seen-files map already
   delivers every file exactly once, batches replayed after a crash are
-  skipped by batch id, and the files sink overwrites a directory keyed by
-  the batch's own high water — no row filter at all. The progress cursor is
-  monotone (`max` over batch high waters) bookkeeping for lag/resume, not a
-  correctness gate.
+  skipped by `streaming.eos.applied` (a stored batch id counts only in
+  the lineage that stored it), and the files sink overwrites a directory
+  keyed by the batch's own high water — no row filter at all. The
+  progress cursor is monotone (`max` over batch high waters) bookkeeping
+  for lag/resume, not a correctness gate.
 - **Recovery lineage** (fresh or lost checkpoint; batch ids restart and the
   source relists every file): the files sink anti-joins each batch against
   the target's existing (lsn, id) pairs (scan bounded by the batch's lsn
@@ -56,6 +57,7 @@ from event_store_spark.core.cursor import Cursor, keyset_after
 from event_store_spark.core.envelope import canonical_metadata_entries
 from event_store_spark.core.state import ProgressStore
 from event_store_spark.core.store import EventStore
+from event_store_spark.streaming.eos import applied
 from event_store_spark.streaming.lock import LockManager
 
 
@@ -199,12 +201,11 @@ class Replicator:
                 # fail the query before writing — the streaming analog of
                 # LockMonitor's exit(1) (`LockMonitor.java:52-58`, X6)
                 raise RuntimeError("replicator lock lost; failing query (X4/X6)")
-            saved_batch = self.progress.last_batch_id(topic)
-            if (
-                self.progress.last_ckpt_id(topic) == ckpt_id
-                and saved_batch is not None
-                and batch_id <= saved_batch
-            ):
+            held = (
+                self.progress.last_ckpt_id(topic),
+                self.progress.last_batch_id(topic),
+            )
+            if applied(held, ckpt_id, batch_id):
                 return  # redelivered batch whose commit record already landed
             saved_cursor = self.progress.last_cursor(topic) or Cursor.zero()
             batch = df

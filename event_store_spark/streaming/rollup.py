@@ -13,10 +13,12 @@ Exactly-once composition:
   batch id → same cumulative rows), so the upsert is idempotent by
   construction — re-merging a replayed batch writes identical values;
 - the table swap is a crash-safe pointer flip (`plans.generations.
-  VersionedTable`): each merge writes a fresh ``_v<epoch>`` parquet
-  directory, then atomically replaces the ``_CURRENT`` pointer file. A
-  crash between the two leaves the previous version intact and the
-  replayed batch re-produces the same new version.
+  VersionedTable`): each merge writes a fresh ``_v<n>`` parquet
+  directory, then atomically replaces the ``_CURRENT`` pointer file,
+  which carries the sink's exactly-once ledger. A crash between the two
+  leaves the previous version intact and the replayed batch re-produces
+  the same new version; a replay of a committed batch, and a checkpoint
+  the ledger has not seen, are `streaming.eos`'s to decide.
 - late rows: ``withWatermark`` bounds state; rows later than the watermark
   delay are dropped by the aggregation (never reach the table). The
   watermark itself persists across restarts in the checkpoint commit log.
@@ -36,18 +38,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.plans.generations import VersionedTable
+from event_store_spark.streaming.eos import ExactlyOnceSink
 
 
-class ContinuousRollup(VersionedTable):
+class ContinuousRollup(VersionedTable, ExactlyOnceSink):
     """Incrementally-maintained hourly rollup of an events stream.
 
     Parameters mirror the batch q36 contract: tumbling ``window_duration``
     windows per ``event_type`` with count + sum(value).
 
     Single maintainer per target: the streaming checkpoint serializes runs
-    that share it; running a SECOND maintainer with a different checkpoint
-    against the same ``target_path`` would interleave pointer flips (wrap
-    the maintainer in `streaming.lock.LockManager` if deployment can't
+    that share it; a SECOND maintainer with a different checkpoint raises
+    at start once the table holds a batch of the first (`streaming.eos`),
+    but two started together would interleave pointer flips (wrap the
+    maintainer in `streaming.lock.LockManager` if deployment can't
     guarantee single ownership). Readers are always safe: they only follow
     the committed pointer, and ``_KEEP_VERSIONS`` superseded versions stay
     on disk for readers mid-swap.
@@ -98,21 +102,13 @@ class ContinuousRollup(VersionedTable):
 
     # ---------------------------------------------------------------- running
 
-    def _merge(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int, commit) -> None:
         updates = batch_df.select(
             F.col("window.start").alias("win_start"),
             "event_type",
             *self._VALUE_COLS,
         )
         current = self._current_version()
-        version = f"_v{batch_id}"
-        if current == version:
-            # replay of a batch that already committed (crash AFTER the
-            # pointer flip, before the checkpoint recorded the batch): the
-            # flip is the commit marker, so the table already contains this
-            # batch's merge — rebuilding would read and overwrite the SAME
-            # directory (self-referential rebuild). Skip: idempotent.
-            return
         if current is None:
             merged = updates
         else:
@@ -121,28 +117,20 @@ class ContinuousRollup(VersionedTable):
                 ["win_start", "event_type"],
                 "left_anti",
             ).unionByName(updates)
-        self._publish(merged, batch_id)
+        self._publish(merged, commit)
 
-    def start(self, available_now: bool = True):
-        """Start (or resume) the incremental maintenance query."""
+    def start(self):
+        """Start (or resume) the availableNow maintenance query."""
         schema = self.spark.read.parquet(self.source_path).schema
         reader = self.spark.readStream.schema(schema)
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         stream = reader.parquet(self.source_path)
-        agg = self._aggregate(stream)
-        writer = (
-            agg.writeStream.outputMode("update")
-            .option("checkpointLocation", self.checkpoint)
-            .foreachBatch(self._merge)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return super().start(self._aggregate(stream))
 
     def run_available(self) -> None:
         """Process everything currently in the source, then stop."""
-        q = self.start(available_now=True)
+        q = self.start()
         q.awaitTermination()
 
     # ------------------------------------------------------------- aggregate

@@ -12,10 +12,11 @@ avoids the window by putting projection+offset in one DB transaction.
 
 Spark shape: the event table is a file-source streaming DataFrame (the
 files each commit-log entry adds = new events, in append order);
-processing runs in ``foreachBatch`` wrapped by
-:func:`exactly_once_batch`; the offsets table
-records the high-water cursor + batch id in one atomic update. The source
-checkpoint gives redelivery-with-same-id; the wrapper gives idempotence.
+processing runs in ``foreachBatch``, which skips a batch the offsets
+table already covers (`streaming.eos.applied`, on the offsets table's
+lineage and batch id); the offsets table records the high-water cursor +
+batch id in one atomic update. The source checkpoint gives
+redelivery-with-same-id; the skip gives idempotence.
 
 Scale: the file source scales to object-store event logs (listing cost is
 amortized via maxFilesPerTrigger — the analog of the reference's batched
@@ -36,7 +37,7 @@ from pyspark.sql.streaming import StreamingQuery
 from event_store_spark.core.cursor import Cursor, keyset_after
 from event_store_spark.core.state import OffsetsTable
 from event_store_spark.core.store import EventStore
-from event_store_spark.streaming.eos import exactly_once_batch
+from event_store_spark.streaming.eos import applied
 
 
 class Subscription:
@@ -165,6 +166,10 @@ class Subscription:
             ).first()
 
         def process_and_offset(df: DataFrame, batch_id: int) -> None:
+            held = (self.offsets.last_ckpt_id(topic),
+                    self.offsets.last_batch_id(topic))
+            if applied(held, ckpt_id, batch_id):
+                return  # redelivery after crash — effects already applied
             if self.source == "kafka":
                 self._kafka_process_and_offset(topic, processor, df, batch_id, ckpt_id)
                 return
@@ -217,22 +222,9 @@ class Subscription:
                     ckpt_id=ckpt_id,
                 )
 
-        def last_batch_id_in_lineage(t: str) -> int | None:
-            # stored batch ids from a DIFFERENT checkpoint lineage are
-            # incomparable with this run's ids — never skip on their account
-            if self.offsets.last_ckpt_id(t) != ckpt_id:
-                return None
-            return self.offsets.last_batch_id(t)
-
-        fn = exactly_once_batch(
-            topic,
-            process_and_offset,
-            get_last_batch_id=last_batch_id_in_lineage,
-            commit=lambda t, b: None,  # committed atomically inside upsert
-        )
         writer = (
             self.stream(topic)
-            .writeStream.foreachBatch(fn)
+            .writeStream.foreachBatch(process_and_offset)
             .option("checkpointLocation", f"{self.checkpoint_root}/{topic}")
         )
         if available_now:

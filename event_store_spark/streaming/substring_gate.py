@@ -21,8 +21,9 @@ one posting per token (≈ token count rows, parquet-bucketed by gram
 hash), while winnowing keeps ~2/(W+1) of that — choose per corpus.
 
 Everything else — deterministic per-batch sink dirs, batch-keyed
-segment appends, the atomic commit-last JSON, crash-replay
-idempotence — is inherited from `WinnowDedupGate` unchanged.
+segment appends, the `streaming.eos` ledger committed last, crash-replay
+idempotence, ``start(stream)`` — is inherited from `WinnowDedupGate`
+unchanged.
 
 Scale shape: the probe broadcasts only the batch's postings onto the
 partition-pruned index (index side never shuffles); the within-batch
@@ -45,7 +46,6 @@ class SubstringDedupGate(WinnowDedupGate):
     grow the postings index."""
 
     REQUIRED_KIND = "substring"
-    GATE_NAME = "substring-gate"
 
     def admitted(self, batch_docs: DataFrame) -> DataFrame:
         """The batch minus documents sharing a ≥ MIN_SUB_LEN-token

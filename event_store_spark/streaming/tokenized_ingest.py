@@ -7,9 +7,10 @@ current for a GROWING document log — the exact analog of
 envelope. Each arriving micro-batch is tokenized once (the shared
 `tokenized_projection`, so the streaming and batch paths cannot drift)
 and appended as that batch's segment of a `plans.generations.SegmentLog`
-(the typed_ingest layout): a replayed batch rewrites its own segment and
-never duplicates, a segment is read only once its marker is written, and
-the log folds its segments every ``SEGMENTS_PER_FOLD`` batches.
+(the typed_ingest layout and `streaming.eos` ledger): a replayed
+uncommitted batch rewrites its own segment and never duplicates, a
+segment is read only once its marker is written, and the log folds its
+segments every ``SEGMENTS_PER_FOLD`` batches.
 
 This closes the parse-at-ingest story for text the way typed_ingest
 closed it for JSON props: the governance/dedup/fingerprint consumers
@@ -24,35 +25,14 @@ with column pruning, and a `g3`-only consumer never touches a string.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
-
-from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.plans.tokenized import tokenized_projection
+from event_store_spark.streaming.typed_ingest import TypedEventsMaterializer
 
 
-class TokenizedDocsMaterializer:
-    def __init__(self, spark: SparkSession, target_path: str, checkpoint: str):
-        self.spark = spark
-        self.target_path = target_path
-        self.checkpoint = checkpoint
-        self._log = SegmentLog(spark, target_path)
+class TokenizedDocsMaterializer(TypedEventsMaterializer):
+    """`start(docs_stream)` attaches to a streaming documents frame
+    (file/kafka source with at least (doc_id, text); envelope metadata
+    columns are carried through when present, exactly like the batch
+    backfill)."""
 
-    def start(self, docs_stream: DataFrame) -> StreamingQuery:
-        """Attach to a streaming documents frame (file/kafka source with
-        at least (doc_id, text); envelope metadata columns are carried
-        through when present, exactly like the batch backfill)."""
-        return (
-            docs_stream.writeStream.foreachBatch(self._sink)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def _sink(self, df: DataFrame, batch_id: int) -> None:
-        self._log.write(batch_id, tokenized_projection(df))
-        self._log.fold(batch_id)
-
-    def table(self) -> DataFrame:
-        """The live tokenized table (snapshot plus marked segments, lazy)."""
-        return self._log.read()
+    _project = staticmethod(tokenized_projection)

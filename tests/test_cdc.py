@@ -208,7 +208,7 @@ def test_cdc_tombstone_gc_drops_only_aged_deletes(spark, tmp_path):
     assert mat.table().count() == 0  # both deleted
     v_before = mat._current_version()
 
-    dropped = mat.gc_tombstones(older_than_ms=500, batch_id=999)
+    dropped = mat.gc_tombstones(older_than_ms=500)
     assert dropped == 1
     assert mat._current_version() != v_before
     # key 2's tombstone survived: a late update stamped BEFORE it still loses
@@ -218,7 +218,7 @@ def test_cdc_tombstone_gc_drops_only_aged_deletes(spark, tmp_path):
     _run(spark, mat, src)
     assert [r.id for r in mat.table().select("id").collect()] == []
     # no-op when nothing qualifies
-    assert mat.gc_tombstones(older_than_ms=500, batch_id=1000) == 0
+    assert mat.gc_tombstones(older_than_ms=500) == 0
 
 
 def test_cdc_gc_keeps_null_stamped_live_rows(spark, tmp_path):
@@ -241,9 +241,37 @@ def test_cdc_gc_keeps_null_stamped_live_rows(spark, tmp_path):
     _run(spark, mat, src)
     assert [r.id for r in mat.table().select("id").collect()] == [1]
 
-    dropped = mat.gc_tombstones(older_than_ms=500, batch_id=999)
+    dropped = mat.gc_tombstones(older_than_ms=500)
     assert dropped == 1  # only key 2's aged tombstone
     # the NULL-stamped live row is still materialized
     assert [r.id for r in mat.table().select("id").collect()] == [1]
     full = mat._full(mat._current_version())
     assert full.count() == 1
+
+
+def test_cdc_stream_batch_after_tombstone_gc_is_applied(spark, tmp_path):
+    """A tombstone GC is a publish outside the stream: it keeps the
+    stream's exactly-once ledger, so the next stream batch still
+    applies (a GC version named after a batch id made that batch look
+    already applied, and its change never appeared)."""
+    src = str(tmp_path / "src")
+    _write_batch(
+        spark,
+        src,
+        [
+            _env("c", 10, 1, {"id": 1, "name": "a", "amount": 1}),
+            _env("d", 20, 2, before={"id": 1, "name": "a", "amount": 1}),
+        ],
+        0,
+    )
+    mat = _mat(spark, tmp_path)
+    _run(spark, mat, src)
+    assert mat.gc_tombstones(older_than_ms=500) == 1
+    gc_version = mat._current_version()
+
+    _write_batch(
+        spark, src, [_env("c", 30, 3, {"id": 7, "name": "new", "amount": 7})], 1
+    )
+    _run(spark, mat, src)
+    assert mat._current_version() != gc_version
+    assert [r.id for r in mat.table().select("id").collect()] == [7]

@@ -278,3 +278,31 @@ def test_rebuild_over_existing_index_retires_segments(spark, docs, tmp_path):
     want = DedupIndex.build(spark, grown, str(tmp_path / "fresh"), "simhash64")
     assert sorted(rows(sig)) == sorted(rows(want.signatures()))
     assert not os.listdir(os.path.join(path, "segments"))
+
+
+def test_compact_keeps_only_the_newest_batch_of_a_reappended_doc(
+    spark, docs, tmp_path
+):
+    """A doc appended in two batches compacts to the newest batch's
+    signatures alone (one simhash64 signature is 4 block rows), so a
+    probe can match its new text only — not the union of both batches'
+    rows, which let it match the old text too."""
+    idx = DedupIndex.build(
+        spark, docs.where(F.col("doc_id") % 2 == 0), str(tmp_path / "ix"),
+        "simhash64",
+    )
+    odd = docs.where(F.col("doc_id") == 1)
+    other = docs.where(F.col("doc_id") == 3).select("text").first()["text"]
+    idx.append(odd, batch_id=0)
+    idx.append(odd.withColumn("text", F.lit(other)), batch_id=1)
+    idx.compact()
+
+    got = rows(idx.signatures().where(F.col("doc_id") == 1)
+               .select("block_idx", "block").orderBy("block_idx"))
+    fresh = DedupIndex.build(
+        spark, odd.withColumn("text", F.lit(other)), str(tmp_path / "new"),
+        "simhash64",
+    )
+    assert got == rows(fresh.signatures().select("block_idx", "block")
+                       .orderBy("block_idx"))
+    assert len(got) == 4

@@ -93,9 +93,13 @@ def _rows(df, *cols):
 
 def _ivf_adds(spark, tmp_path, assigned, offset):
     adds = str(tmp_path / "adds")
-    assigned.where(F.col("vec_id") < 3).select(
-        (F.col("vec_id") + offset).alias("vec_id"), "v", "cell"
-    ).write.mode("overwrite").parquet(adds)
+    SegmentLog(spark, adds).write(
+        0,
+        assigned.where(F.col("vec_id") < 3).select(
+            (F.col("vec_id") + offset).alias("vec_id"), "v", "cell"
+        ),
+        ("cell",),
+    )
     return adds
 
 
@@ -187,9 +191,13 @@ def _hnsw_compact(spark, tmp_path, sf):
     save_hnsw_index(spark, sf, path)
     _, graph = load_hnsw_index(spark, path)
     adds = str(tmp_path / "adds")
-    graph.where(F.col("vec_id") < 3).select(
-        "cell", (F.col("vec_id") + 4_000_000).alias("vec_id"), "v"
-    ).write.parquet(adds)
+    SegmentLog(spark, adds).write(
+        0,
+        graph.where(F.col("vec_id") < 3).select(
+            "cell", (F.col("vec_id") + 4_000_000).alias("vec_id"), "v"
+        ),
+        ("cell",),
+    )
     compact_hnsw_index(spark, path, adds)
 
     def read():
@@ -570,11 +578,203 @@ def test_empty_batch_and_unmarked_segment_are_invisible(
     assert user.read() == before
 
 
+# ------------------------------------------------------ crash sweep
+
+
+class Sink(NamedTuple):
+    #: ``make(spark, sf, root)``: the sink writing under ``root``, on the
+    #: checkpoint ``root/ck`` (called again on restart)
+    make: Callable
+    #: ``batches(spark, sf)``: the stream's three batches, static frames
+    batches: Callable
+    rows: Callable[[object], object]
+
+
+def _thirds(df, key):
+    return [df.where(F.col(key) % 3 == i) for i in range(3)]
+
+
+def _typed_sink(spark, sf, root):
+    from event_store_spark.streaming.typed_ingest import TypedEventsMaterializer
+
+    return TypedEventsMaterializer(
+        spark, os.path.join(root, "typed"), os.path.join(root, "ck")
+    )
+
+
+def _join_sink(spark, sf, root):
+    from event_store_spark.streaming.ivm import JoinAggregateView
+
+    return JoinAggregateView(
+        spark,
+        join_keys=["c_key"],
+        left_cols=["c_key", "nation"],
+        right_cols=["c_key", "amount"],
+        group_cols=["nation"],
+        measures={"revenue": F.sum("amount"), "n": F.count(F.lit(1))},
+        target_path=os.path.join(root, "mv"),
+        checkpoint=os.path.join(root, "ck"),
+        left_schema="c_key bigint, nation string",
+        right_schema="c_key bigint, amount double",
+    )
+
+
+def _join_batches(spark, sf):
+    schema = "_side string, c_key bigint, nation string, amount double"
+    # batch 2 joins rows only batch 1's side segments hold, both ways
+    rows = [
+        [("l", 1, "DE", None), ("l", 2, "FR", None), ("r", 1, None, 10.0)],
+        [("l", 3, "DE", None), ("r", 2, None, 5.0), ("r", 5, None, 7.0)],
+        [("l", 5, "JP", None), ("r", 3, None, 1.0), ("r", 1, None, 2.0)],
+    ]
+    return [spark.createDataFrame(r, schema) for r in rows]
+
+
+def _curation_sink(spark, sf, root):
+    from event_store_spark.streaming.curation import CurationPipeline
+
+    return CurationPipeline(
+        spark, os.path.join(root, "cur"), os.path.join(root, "ck"), quota=30
+    )
+
+
+def _gate_sink(spark, sf, root):
+    from event_store_spark.plans.dedup_index import DedupIndex
+    from event_store_spark.streaming.neardup_winnow import WinnowDedupGate
+
+    path = os.path.join(root, "ix")
+    if os.path.exists(os.path.join(path, "meta.json")):
+        idx = DedupIndex.open(spark, path)
+    else:
+        base = _docs(spark, sf).where(
+            ~F.col("source").isin("src2", "src3") & (F.col("doc_id") < 250)
+        )
+        idx = DedupIndex.build(spark, base, path, "winnow")
+    return WinnowDedupGate(idx, os.path.join(root, "out"), os.path.join(root, "ck"))
+
+
+def _gate_rows(gate):
+    out = os.path.join(gate.out_dir, "batch-*")
+    return (
+        _rows(gate.index.spark.read.parquet(out), "doc_id"),
+        _rows(gate.index.signatures(), "doc_id", "part", "fp"),
+    )
+
+
+SINKS = {
+    "typed_ingest": Sink(
+        _typed_sink,
+        lambda spark, sf: _thirds(load_table(spark, sf, "events"), "event_id"),
+        lambda mat: _rows(mat.table(), "event_id", "key_name"),
+    ),
+    "join_view": Sink(
+        _join_sink, _join_batches, lambda v: _rows(v.table(), "nation", "revenue", "n")
+    ),
+    "curation": Sink(
+        _curation_sink,
+        lambda spark, sf: _thirds(
+            load_table(spark, sf, "documents").select(
+                "doc_id", "source", "lang", "n_chars", "text"
+            ),
+            "doc_id",
+        ),
+        lambda pipe: _rows(pipe.table(), "doc_id"),
+    ),
+    "winnow_gate": Sink(
+        _gate_sink,
+        lambda spark, sf: _thirds(
+            _docs(spark, sf).where(
+                F.col("source").isin("src2", "src3") & (F.col("doc_id") < 250)
+            ),
+            "doc_id",
+        ),
+        _gate_rows,
+    ),
+}
+#: one batch's side effects, in the order a batch meets them
+EFFECTS = ("write", "marker", "ledger", "fold")
+#: the rows a crash-free run over all three batches leaves, per sink
+_ONE_PASS: dict = {}
+
+
+def _arm_crash(monkeypatch, effect):
+    """Returns ``arm()``: once called, the next ``effect`` raises instead
+    of happening — a parquet write, a segment marker, the ledger (a
+    ``_LEDGER`` or a versioned table's ``_CURRENT``) or a fold's ``_SNAP``
+    flip."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    state = {"armed": False}
+
+    def hit(kind):
+        if state["armed"] and kind == effect:
+            state["armed"] = False
+            raise OSError(f"injected crash at the {effect}")
+
+    real_pointer, real_parquet = generations.write_pointer, DataFrameWriter.parquet
+
+    def write_pointer(path, text):
+        name = os.path.basename(path)
+        hit(
+            "marker" if name.startswith("_SEGMENT.")
+            else "fold" if name == "_SNAP"
+            else "ledger" if name in ("_LEDGER", "_CURRENT")
+            else None
+        )
+        real_pointer(path, text)
+
+    def parquet(self, *args, **kwargs):
+        hit("write")
+        return real_parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(generations, "write_pointer", write_pointer)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return lambda: state.update(armed=True)
+
+
+@pytest.mark.parametrize(
+    "name,effect",
+    [
+        (name, effect)
+        for name in sorted(SINKS)
+        for effect in EFFECTS
+        # the gate's index segments never fold
+        if (name, effect) != ("winnow_gate", "fold")
+    ],
+)
+def test_crash_at_each_side_effect_of_a_batch_replays_to_one_pass(
+    spark, sf_smoke, tmp_path, monkeypatch, name, effect
+):
+    """A crash at any side effect of a batch, then a restart on the same
+    checkpoint that redelivers the batch and goes on, leaves the
+    artifact equal to a crash-free run's."""
+    monkeypatch.setattr(generations, "SEGMENTS_PER_FOLD", 2)
+    sink = SINKS[name]
+    batches = sink.batches(spark, sf_smoke)
+    if name not in _ONE_PASS:
+        clean = sink.make(spark, sf_smoke, str(tmp_path / "clean"))
+        for i, batch in enumerate(batches):
+            clean._merge(batch, i)
+        _ONE_PASS[name] = sink.rows(clean)
+
+    root = str(tmp_path / "crashed")
+    arm = _arm_crash(monkeypatch, effect)
+    sink.make(spark, sf_smoke, root)._merge(batches[0], 0)
+    arm()
+    with pytest.raises(OSError, match=f"injected crash at the {effect}"):
+        sink.make(spark, sf_smoke, root)._merge(batches[1], 1)
+
+    restarted = sink.make(spark, sf_smoke, root)
+    for i in (1, 2):
+        restarted._merge(batches[i], i)
+    assert sink.rows(restarted) == _ONE_PASS[name]
+
+
 # ------------------------------------------------------ static discipline
 
 #: the only modules that may write a publish pointer
 _POINTER_WRITERS = {"plans/generations.py", "core/state.py"}
-_POINTERS = {"_CURRENT", "CELLS", "CODES", "LIVE", "_SNAP", "_SEGMENT"}
+_POINTERS = {"_CURRENT", "CELLS", "CODES", "LIVE", "_SNAP", "_SEGMENT", "_LEDGER"}
 
 
 def _callee(call):
@@ -608,6 +808,120 @@ def test_only_generations_publishes():
             ):
                 pointers.add((rel, node.lineno, node.value))
     assert not pointers, pointers
+
+
+#: the streams that recover an unseen checkpoint from their own cursor
+_CURSOR_STREAMS = {
+    "streaming/replicate.py": {"Replicator.replicate"},
+    "streaming/subscribe.py": {"Subscription.run", "Subscription.run_records"},
+}
+
+
+def _functions(tree):
+    """(qualified name, node) of every function, methods as Class.name."""
+    for node in tree.body:
+        if isinstance(node, ast.ClassDef):
+            for item in node.body:
+                if isinstance(item, ast.FunctionDef):
+                    yield f"{node.name}.{item.name}", item
+        elif isinstance(node, ast.FunctionDef):
+            yield node.name, node
+
+
+def test_every_stream_runs_through_the_exactly_once_wrapper():
+    """Every ``.writeStream`` in the package hands ``foreachBatch`` a
+    function built by `eos.exactly_once`, except the two streams that
+    recover an unseen checkpoint from their own cursor. A new sink
+    therefore cannot decide "already applied" from batch ids alone, nor
+    use Spark's file sink (which skips a new checkpoint's batch 0)."""
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for name, fn in _functions(ast.parse(path.read_text())):
+            if name in _CURSOR_STREAMS.get(rel, ()):
+                continue
+            wrapped = {
+                node.targets[0].id
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Assign)
+                and isinstance(node.value, ast.Call)
+                and _callee(node.value) == "exactly_once"
+                and isinstance(node.targets[0], ast.Name)
+            }
+            ok = [
+                call
+                for call in ast.walk(fn)
+                if isinstance(call, ast.Call)
+                and _callee(call) == "foreachBatch"
+                and call.args
+                and (
+                    (isinstance(call.args[0], ast.Call)
+                     and _callee(call.args[0]) == "exactly_once")
+                    or getattr(call.args[0], "id", None) in wrapped
+                )
+            ]
+            streams = [
+                node for node in ast.walk(fn)
+                if isinstance(node, ast.Attribute) and node.attr == "writeStream"
+            ]
+            if len(ok) < len(streams):
+                bad.append((rel, name))
+    assert not bad, bad
+
+
+def _names(node) -> set[str]:
+    """Names ``node`` computes with directly: a call's arguments are the
+    callee's business, so the walk does not enter calls."""
+    if isinstance(node, ast.Call):
+        return set()
+    found = {node.id} if isinstance(node, ast.Name) else set()
+    for child in ast.iter_child_nodes(node):
+        found |= _names(child)
+    return found
+
+
+def _compares_batch_id(fn) -> list[int]:
+    """Lines of ``fn`` that compare a batch id (the ``batch_id`` name, or
+    a name computed from it) with anything, other than an ``if`` whose
+    body only raises (a guard against a caller bug, not a decision)."""
+    tainted = {"batch_id"}
+    grew = True
+    while grew:
+        grew = False
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign) and _names(node.value) & tainted:
+                for target in node.targets:
+                    if isinstance(target, ast.Name) and target.id not in tainted:
+                        tainted.add(target.id)
+                        grew = True
+    guards = {
+        id(node.test)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.If)
+        and len(node.body) == 1
+        and isinstance(node.body[0], ast.Raise)
+    }
+    return [
+        node.lineno
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Compare)
+        and id(node) not in guards
+        and _names(node) & tainted
+    ]
+
+
+def test_only_eos_decides_already_applied():
+    """No module outside `streaming/eos.py` compares a batch id with
+    anything: "already applied" is `eos.applied`'s decision alone."""
+    found = [
+        (path.relative_to(PKG).as_posix(), line)
+        for path in sorted(PKG.rglob("*.py"))
+        if path.relative_to(PKG).as_posix() != "streaming/eos.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.FunctionDef)
+        for line in _compares_batch_id(node)
+    ]
+    assert not found, found
 
 
 def test_index_maintenance_leaves_query_plans_alone():

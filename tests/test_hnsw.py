@@ -15,6 +15,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.plans.hnsw import (
     HNSW_EF,
     HNSW_M,
@@ -199,7 +200,7 @@ def test_persisted_hnsw_build_open_search_compact(spark, tmp_path):
         "vec_id bigint, v array<double>, cell int",
     )
     seg = str(tmp_path / "seg")
-    adds.write.partitionBy("cell").parquet(seg)
+    SegmentLog(spark, seg).write(0, adds, ("cell",))
     with_seg = [
         (r.vec_id, r.sim)
         for r in reopened.search(qv, k=5, additions_path=seg).collect()
@@ -501,9 +502,9 @@ def test_persisted_spilled_hnsw_dedupes_and_compacts(spark, tmp_path):
     seg = str(tmp_path / "seg")
     rows = [(7_000_000 + i, (q + 0.005 * (i + 1)).tolist(), cells[0])
             for i in range(2)]
-    spark.createDataFrame(
-        rows, "vec_id bigint, v array<double>, cell int"
-    ).write.parquet(seg)
+    SegmentLog(spark, seg).write(
+        0, spark.createDataFrame(rows, "vec_id bigint, v array<double>, cell int")
+    )
     compact_hnsw_index(spark, path, seg)
     after = [(r.vec_id, r.sim) for r in
              hnsw_search(spark, path, qv, k=5, nprobe=2).collect()]

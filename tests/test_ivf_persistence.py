@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from event_store_spark.plans import QUERIES
+from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.plans.ivf import (
     _ivf_index,
     load_ivf_index,
@@ -208,7 +209,7 @@ def test_pq_encode_stream_segment_serves_with_base(spark, sf_smoke, tmp_path):
     q = pq_encode_stream(stream, book, adds, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
-    seg = spark.read.parquet(adds)
+    seg = SegmentLog(spark, adds).read()
     # streamed codes == the batch build's codes for the same vectors
     batch_codes = {
         r.vec_id: list(r.codes)
@@ -455,7 +456,7 @@ def test_vector_index_maintain_and_compact_all_kinds(spark, sf_smoke, tmp_path):
         q = idx.maintain(stream, str(tmp_path / f"{kind}_adds"),
                          str(tmp_path / f"{kind}_ck"))
         q.awaitTermination(120)
-        seg_n = spark.read.parquet(str(tmp_path / f"{kind}_adds")).count()
+        seg_n = SegmentLog(spark, str(tmp_path / f"{kind}_adds")).read().count()
         assert seg_n == 3, kind
 
         idx.compact(str(tmp_path / f"{kind}_adds"))
@@ -498,7 +499,7 @@ def test_pq_compaction_folds_segment_behind_pointer(spark, sf_smoke, tmp_path):
     q.awaitTermination(120)
 
     v1 = [float(x) for x in mem_encoded.where(F.col("vec_id") == 1).first()["v"]]
-    served = codes.unionByName(spark.read.parquet(adds))
+    served = codes.unionByName(SegmentLog(spark, adds).read())
     want = [(r.vec_id, r.adist) for r in pq_search(served, book, v1, k=4).collect()]
 
     vi = VectorIndex.open(spark, idx)
@@ -731,9 +732,13 @@ def test_compaction_segment_wins_over_stale_base(spark, sf_smoke, tmp_path):
     base_n = assigned.count()
     donor = assigned.where(F.col("vec_id") == 2).first()
     adds = str(tmp_path / "ivf_adds")
-    assigned.where(F.col("vec_id") == 2).select(
-        F.lit(1).cast("long").alias("vec_id"), "v", "cell"
-    ).write.parquet(adds)
+    SegmentLog(spark, adds).write(
+        0,
+        assigned.where(F.col("vec_id") == 2).select(
+            F.lit(1).cast("long").alias("vec_id"), "v", "cell"
+        ),
+        ("cell",),
+    )
     compact_ivf_index(spark, idx, adds)
     _, merged = load_ivf_index(spark, idx)
     assert merged.count() == base_n  # update, not insert
@@ -748,9 +753,12 @@ def test_compaction_segment_wins_over_stale_base(spark, sf_smoke, tmp_path):
     pbase_n = codes.count()
     pdonor = codes.where(F.col("vec_id") == 2).first()
     padds = str(tmp_path / "pq_adds")
-    codes.where(F.col("vec_id") == 2).select(
-        F.lit(1).cast("long").alias("vec_id"), "codes"
-    ).write.parquet(padds)
+    SegmentLog(spark, padds).write(
+        0,
+        codes.where(F.col("vec_id") == 2).select(
+            F.lit(1).cast("long").alias("vec_id"), "codes"
+        ),
+    )
     compact_pq_index(spark, pidx, padds)
     _, merged_codes = load_pq_index(spark, pidx)
     assert merged_codes.count() == pbase_n
@@ -791,14 +799,14 @@ def test_sq8_encode_stream_matches_batch_and_saturates(spark, sf_smoke, tmp_path
 
     got = {
         r.vec_id: list(r.q)
-        for r in spark.read.parquet(str(tmp_path / "adds")).collect()
+        for r in SegmentLog(spark, str(tmp_path / "adds")).read().collect()
     }
     want = {r.vec_id: list(r.q) for r in sq8_quantize(new, mns, mxs).collect()}
     assert got == want and len(got) == 6
 
     # base + segment serve as a union with no vec_id overlap
     merged = base_codes.unionByName(
-        spark.read.parquet(str(tmp_path / "adds"))
+        SegmentLog(spark, str(tmp_path / "adds")).read()
     )
     assert merged.count() == base_codes.count() + 6
 
@@ -811,3 +819,34 @@ def test_sq8_encode_stream_matches_batch_and_saturates(spark, sf_smoke, tmp_path
     codes = {r.vec_id: set(r.q) for r in sq8_quantize(wild, mns, mxs).collect()}
     assert codes[99] <= {127, 0}   # degenerate dims (mx=mn) encode 0
     assert codes[98] <= {-128, 0}
+
+
+def test_compaction_keeps_the_newest_addition_of_a_vec_id(
+    spark, sf_smoke, tmp_path
+):
+    """A vec_id added in two batches compacts to the later batch's row,
+    on every run: the two additions used to tie in the fold, so either
+    could survive."""
+    from event_store_spark.plans.ivf import compact_ivf_index
+
+    idx = str(tmp_path / "ivf")
+    save_ivf_index(spark, sf_smoke, idx)
+    _, assigned = load_ivf_index(spark, idx)
+    donors = assigned.where(F.col("vec_id").isin(2, 3)).orderBy("vec_id").collect()
+    adds = SegmentLog(spark, str(tmp_path / "adds"))
+    for batch_id, donor in enumerate(donors):
+        adds.write(
+            batch_id,
+            spark.createDataFrame(
+                [(9_000_000, list(donor.v), donor.cell)],
+                "vec_id bigint, v array<double>, cell int",
+            ),
+            ("cell",),
+        )
+    for _ in range(3):
+        compact_ivf_index(spark, idx, adds.root)
+        _, merged = load_ivf_index(spark, idx)
+        got = merged.where(F.col("vec_id") == 9_000_000).collect()
+        assert [(list(r.v), r.cell) for r in got] == [
+            (list(donors[1].v), donors[1].cell)
+        ]

@@ -21,7 +21,9 @@ from event_store_spark.plans.dedup_index import (
     WINNOW_MAX_FP_DOCS,
     DedupIndex,
 )
+from event_store_spark.plans.generations import write_pointer
 from event_store_spark.plans.pipeline11 import MAX_FP_DOCS, MIN_SHARED
+from event_store_spark.streaming.lineage import checkpoint_lineage_id
 from event_store_spark.streaming.neardup_winnow import WinnowDedupGate
 from event_store_spark.tables import load_table
 from tests.test_winnowing_properties import select_doubled
@@ -97,7 +99,7 @@ def test_gate_matches_sequential_reference_and_redelivery(
     index_docs, arriving = corpus
     idx = DedupIndex.build(spark, index_docs, str(tmp_path / "ix"), "winnow")
     gate = WinnowDedupGate(
-        idx, str(tmp_path / "out"), str(tmp_path / "gate.json")
+        idx, str(tmp_path / "out"), str(tmp_path / "ck")
     )
     fn = gate.foreach_batch()
 
@@ -125,7 +127,9 @@ def test_gate_matches_sequential_reference_and_redelivery(
     # crash-redelivery of the LAST batch (ledger rolled back): outputs
     # and signature rows are rewritten byte-idempotently, not duplicated
     n_sig = idx.signatures().count()
-    gate._commit("winnow-gate", 1)
+    write_pointer(
+        gate.ledger, f"{checkpoint_lineage_id(str(tmp_path / 'ck'))} 1"
+    )
     fn(arriving.where(F.col("doc_id").isin(cuts[2])), 2)
     assert idx.signatures().count() == n_sig
     assert sorted(
@@ -194,7 +198,7 @@ def test_gate_pair_threshold_chains_and_empty_batch(spark, tmp_path):
     batch1 = [(1, E), (2, G), (3, D), (4, A), (5, C), (6, P), (7, Q), (8, R)]
     idx = DedupIndex.build(spark, index_docs, str(tmp_path / "ix"), "winnow")
     gate = WinnowDedupGate(
-        idx, str(tmp_path / "out"), str(tmp_path / "gate.json")
+        idx, str(tmp_path / "out"), str(tmp_path / "ck")
     )
     fn = gate.foreach_batch()
     fn(df(batch1), 0)
@@ -235,7 +239,7 @@ def test_gate_through_real_stream(spark, corpus, tmp_path):
     index_docs, arriving = corpus
     idx = DedupIndex.build(spark, index_docs, str(tmp_path / "ix"), "winnow")
     gate = WinnowDedupGate(
-        idx, str(tmp_path / "out"), str(tmp_path / "gate.json")
+        idx, str(tmp_path / "out"), str(tmp_path / "ck")
     )
     src = str(tmp_path / "src")
     for i, lo in enumerate(range(0, 50, 17)):
@@ -245,14 +249,10 @@ def test_gate_through_real_stream(spark, corpus, tmp_path):
         ).parquet(os.path.join(src, f"part{i}"))
 
     def run():
-        q = (
+        q = gate.start(
             spark.readStream.schema(arriving.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src + "/part*")
-            .writeStream.foreachBatch(gate.foreach_batch())
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
         )
         q.awaitTermination(240)
 

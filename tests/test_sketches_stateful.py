@@ -323,6 +323,7 @@ def test_streaming_ivf_assignment_matches_batch(spark, sf_smoke, tmp_path):
     layout: searching cell c reads exactly cell=c/)."""
     import os
 
+    from event_store_spark.plans.generations import SegmentLog
     from event_store_spark.plans.ivf import _ivf_index
     from event_store_spark.streaming.index import ivf_assign_stream
     from event_store_spark.functions.vectors import as_double
@@ -339,10 +340,13 @@ def test_streaming_ivf_assignment_matches_batch(spark, sf_smoke, tmp_path):
     q = ivf_assign_stream(stream, centroids, idx, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
-    got = {r.vec_id: r.cell for r in spark.read.parquet(idx).collect()}
+    log = SegmentLog(spark, idx)
+    got = {r.vec_id: r.cell for r in log.read().collect()}
     expected = {r.vec_id: r.cell for r in batch_assigned.collect()}
     assert got == expected
-    cells = {d for d in os.listdir(idx) if d.startswith("cell=")}
+    cells = {
+        d for seg in log.paths() for d in os.listdir(seg) if d.startswith("cell=")
+    }
     assert cells == {f"cell={c}" for c in set(expected.values())}
 
 

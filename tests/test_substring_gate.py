@@ -91,7 +91,7 @@ def test_gate_matches_sequential_reference_and_redelivery(
     index = DedupIndex.build(spark, _df(spark, corpus), idx_path, "substring")
 
     gate = SubstringDedupGate(
-        index, str(tmp_path / "out"), str(tmp_path / "state.json")
+        index, str(tmp_path / "out"), str(tmp_path / "ck")
     )
     process = gate.foreach_batch()
     b1 = {k: v for k, v in arriving.items() if k < 20}
@@ -157,7 +157,7 @@ def test_short_and_subthreshold_docs_pass(spark, docs, tmp_path):
         spark, _df(spark, corpus), str(tmp_path / "idx3"), "substring"
     )
     gate = SubstringDedupGate(
-        index, str(tmp_path / "out3"), str(tmp_path / "st3.json")
+        index, str(tmp_path / "out3"), str(tmp_path / "ck3")
     )
     batch = {
         50: _w("s", MIN_SUB_LEN - 1) + _w("q", 10),  # 15-token overlap
