@@ -16,6 +16,12 @@ compacted topic. In a cluster deployment the same interface is backed by a
 transactional table (Delta MERGE or a DB); the data plane never touches it
 except once per micro-batch.
 
+The state files (these two and the append :class:`TicketStore`) are safe
+for concurrent writers: every update is one read-modify-write under the
+file's writer lease. :class:`Lease` is the one single-writer lock
+protocol, and its docstring describes it; :class:`TopicMutex` and
+`streaming.lock.LockManager` are leases too.
+
 Exactly-once composition: both stores record the ``batch_id`` that produced
 each update, so a `foreachBatch` sink can make redelivered batches no-ops
 (idempotent-by-batchId — the Spark answer to the reference's Kafka
@@ -29,6 +35,8 @@ import os
 import tempfile
 import threading
 import time
+import uuid
+from collections.abc import Callable
 
 from event_store_spark.core.cursor import Cursor
 
@@ -67,36 +75,163 @@ def atomic_write(path: str, text: str) -> None:
         raise
 
 
+class Lease:
+    """A single-writer lease on one file; its holder's token is the file's
+    content. The one implementation of the protocol every single-writer
+    lock here uses: the per-topic append mutex (:class:`TopicMutex`), the
+    replicator lock (`streaming.lock.LockManager`) and the writer lock of
+    each state file (:class:`_AtomicJsonState`).
+
+    - **Take.** An ``O_EXCL`` create names the token; the create can
+      succeed for one caller only. A file that already names the token is
+      held (re-entrant: ``take`` refreshes its mtime).
+    - **Staleness.** A lease whose mtime is older than ``stale_seconds``
+      is an orphan (its holder crashed): holders that live long refresh
+      it. The holder is read BEFORE the staleness is judged, so the
+      observed holder is never newer than the verdict.
+    - **Single-winner break.** A stale lease is renamed to a private
+      grave, ``<path>.stale.<uuid>``: ``os.rename`` of one source path
+      succeeds for one breaker only. The winner then checks the grave: if
+      it names another holder than the one observed (a release and a
+      fresh take slipped in between the verdict and the rename), it
+      buried a LIVE lease and restores it with ``os.link``, which cannot
+      clobber a lease created meanwhile. Otherwise it drops the grave and
+      joins the ``O_EXCL`` race again, so a break never hands over
+      ownership by itself. A lease that vanishes under a taker makes it
+      retry, a bounded number of times.
+    - **Restore window.** While a breaker restores a live lease, the file
+      is briefly missing, so ``holds`` reads a missing file once more
+      after a short pause before reporting the lease lost.
+
+    Residual exposure: if a third taker creates the lease inside the
+    restore window, the restored holder has lost it and learns so at its
+    next ``holds``/``refresh``. On a shared filesystem with atomic rename
+    and hard links the protocol holds unchanged.
+    """
+
+    #: vanished-file retries of one ``take``
+    RETRIES = 16
+    #: the pause before ``holds`` reads a missing lease again
+    RESTORE_PAUSE = 0.1
+    #: the poll interval of ``wait``
+    POLL = 0.02
+
+    def __init__(self, path: str, stale_seconds: float):
+        self.path = path
+        self.stale_seconds = stale_seconds
+
+    def holder(self) -> str | None:
+        """The token the lease file names; None if there is none."""
+        try:
+            with open(self.path) as f:
+                return f.read().strip()
+        except OSError:
+            return None
+
+    def _stale(self) -> bool:
+        try:
+            return time.time() - os.path.getmtime(self.path) > self.stale_seconds
+        except FileNotFoundError:
+            return False
+
+    def take(self, token: str) -> bool:
+        """One attempt to hold the lease for ``token``; never blocks on a
+        live foreign lease."""
+        for _ in range(self.RETRIES):
+            try:
+                fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            except FileExistsError:
+                pass
+            else:
+                with os.fdopen(fd, "w") as f:
+                    f.write(token)
+                return True
+            observed = self.holder()
+            if observed is None:
+                continue  # released between the create and the read
+            if observed == token:
+                try:
+                    os.utime(self.path)
+                    return True
+                except FileNotFoundError:
+                    continue
+            if not self._stale():
+                return False
+            grave = f"{self.path}.stale.{uuid.uuid4().hex}"
+            try:
+                os.rename(self.path, grave)
+            except FileNotFoundError:
+                continue  # another breaker, or a release, came first
+            buried = Lease(grave, self.stale_seconds).holder()
+            if buried is not None and buried != observed:
+                try:
+                    os.link(grave, self.path)
+                except FileExistsError:
+                    pass  # a third taker won; the buried holder learns it
+                os.unlink(grave)
+                return False
+            os.unlink(grave)
+        return False
+
+    def wait(self, token: str, timeout_seconds: float) -> bool:
+        """The blocking form of ``take``: poll until ``timeout_seconds``
+        pass; False if they do."""
+        deadline = time.monotonic() + timeout_seconds
+        while not self.take(token):
+            if time.monotonic() > deadline:
+                return False
+            time.sleep(self.POLL)
+        return True
+
+    def holds(self, token: str) -> bool:
+        """True iff the lease names ``token``, read once more after a
+        short pause when the file is missing (the restore window)."""
+        held = self.holder()
+        if held is None:
+            time.sleep(self.RESTORE_PAUSE)
+            held = self.holder()
+        return held == token
+
+    def refresh(self, token: str) -> bool:
+        """The holder's heartbeat: False when the lease is lost."""
+        if not self.holds(token):
+            return False
+        try:
+            os.utime(self.path)
+        except OSError:
+            return False
+        return True
+
+    def drop(self, token: str) -> None:
+        """Release the lease, only if it names ``token``: a holder whose
+        lease was broken must not remove the breaker's."""
+        if self.holds(token):
+            try:
+                os.unlink(self.path)
+            except FileNotFoundError:
+                pass
+
+
 class TopicMutex:
-    """O_EXCL-based per-topic append mutex.
+    """Per-topic append mutex: a :class:`Lease` on ``<lock_dir>/<topic>.lock``.
 
     :class:`TicketStore`'s ``save`` is an atomic file replace, but the
     reserve step in ``EventStore.append`` is a read-modify-write (read
-    ticket → compute next lsn → save) — two concurrent appends to one topic
-    could both read the same ticket and reserve the same lsn, violating the
-    never-a-duplicate-lsn invariant. This mutex serializes that critical
-    section, the file-system analog of the reference's advisory lock
-    (`LockManager.java:45-84` — there one lock guards the whole writer; here
-    one short-lived lock guards each append's reserve+write).
+    ticket → compute next lsn → save) that spans the data write: two
+    concurrent appends to one topic could both read the same ticket and
+    reserve the same lsn. This mutex serializes that critical section, the
+    file-system analog of the reference's advisory lock
+    (`LockManager.java:45-84` — there one lock guards the whole writer;
+    here one short-lived lease guards each append's reserve+write).
 
-    Acquire blocks up to ``timeout_seconds`` (appends are short); a lock
-    file older than ``stale_seconds`` is an orphan from a crashed append.
-
-    Two properties the first-cut replace-and-verify steal did NOT have
-    (ADVICE r3):
-
-    - **Single steal winner.** A stale lock is broken by *renaming* it to a
-      steal-private name: ``os.rename`` of one source path can succeed for
-      exactly one caller, so concurrent breakers cannot both conclude they
-      removed the stale lock (replace-then-read-back let breaker B replace
-      again after A's verify, leaving both inside the critical section).
-      The winner merely *removes* the orphan; ownership is then decided by
-      the same ``O_EXCL`` create every acquirer races on.
-    - **Holder heartbeat.** A legitimately long append (a large parquet
-      write can exceed ``stale_seconds``) must not look like an orphan: the
-      holder refreshes the lock file's mtime from a daemon thread every
-      ``stale_seconds / 4``, so only a crashed (or SIGSTOPped longer than
-      ``stale_seconds``) holder ever goes stale.
+    ``acquire`` polls the lease up to ``timeout_seconds``; a lease older
+    than ``stale_seconds`` is an orphan from a crashed append and is
+    broken by the lease's protocol. A holder refreshes its lease from a
+    daemon thread every ``stale_seconds / 4``, so a legitimately long
+    append never looks orphaned. Each acquire takes a fresh token, kept
+    per (topic, thread): ``owns`` and ``release`` act only on the calling
+    thread's own acquire, so a sibling thread's acquire after a theft can
+    neither pass the victim's ``owns`` nor be released by it.
     """
 
     def __init__(self, lock_dir: str, timeout_seconds: float = 30.0, stale_seconds: float = 120.0):
@@ -104,186 +239,76 @@ class TopicMutex:
         self.timeout_seconds = timeout_seconds
         self.stale_seconds = stale_seconds
         os.makedirs(lock_dir, exist_ok=True)
-        # (topic, thread-id) → (token, stop-event, thread) for locks THIS
-        # instance holds. Keyed per THREAD, not per topic (review r5): with
-        # a per-topic slot, a thread whose lock was stolen-and-released
-        # could have its entry clobbered by a sibling thread's fresh
-        # acquire, making the victim's owns() compare the thief's token
-        # against itself (guard bypassed) and its release() unlink the
-        # sibling's live lock. acquire/owns/release all run on the
-        # acquiring thread (append is synchronous), so thread identity
-        # scopes each acquire correctly.
-        self._held: dict[
-            tuple[str, int], tuple[str, threading.Event, threading.Thread]
-        ] = {}
+        #: (topic, thread id) → (token, heartbeat stop event)
+        self._held: dict[tuple[str, int], tuple[str, threading.Event]] = {}
         self._held_guard = threading.Lock()
 
     def _path(self, topic: str) -> str:
         return os.path.join(self.lock_dir, f"{topic}.lock")
 
+    def _lease(self, topic: str) -> Lease:
+        return Lease(self._path(topic), self.stale_seconds)
+
     def _held_key(self, topic: str) -> tuple[str, int]:
         return (topic, threading.get_ident())
 
     def acquire(self, topic: str) -> None:
-        import uuid
-
-        path = self._path(topic)
-        token = uuid.uuid4().hex  # per-acquire identity (pid is shared by threads)
-        deadline = time.monotonic() + self.timeout_seconds
-        while True:
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                with os.fdopen(fd, "w") as f:
-                    f.write(token)
-                self._start_heartbeat(topic, path, token)
-                return
-            except FileExistsError:
-                pass
-            try:
-                if (time.time() - os.path.getmtime(path)) > self.stale_seconds:
-                    # read the holder we are about to judge, then RE-CHECK
-                    # staleness: observed must be captured at-or-before the
-                    # staleness judgment (a fresh lock swapped in between a
-                    # stale verdict and the holder read would make the
-                    # grave verification below vacuously pass and delete a
-                    # LIVE lock). The read happens only on the stale branch
-                    # — not once per 20 ms poll (review r5 efficiency).
-                    observed = self._holder(path)
-                    if observed is None:
-                        continue  # released under us — rejoin O_EXCL race
-                    if (time.time() - os.path.getmtime(path)) <= self.stale_seconds:
-                        continue  # refreshed/replaced after the first check
-                    # orphaned lock (holder crashed mid-append, heartbeat
-                    # dead): move it aside under a steal-private name —
-                    # exactly one renamer can win because the source path
-                    # exists only once. Losers see FileNotFoundError and
-                    # rejoin the O_EXCL race.
-                    grave = f"{path}.stale.{token}"
-                    try:
-                        os.rename(path, grave)
-                    except FileNotFoundError:
-                        continue  # another breaker (or a release) beat us
-                    # TOCTOU guard (same protocol as streaming.lock,
-                    # ADVICE r4): if a release + fresh acquire slipped in
-                    # between the staleness check and the rename, we just
-                    # buried a LIVE lock — verify the grave still names
-                    # the stale holder we observed, else restore it
-                    # atomically (os.link cannot clobber a newer lock)
-                    grave_holder = self._holder(grave)
-                    if grave_holder is not None and grave_holder != observed:
-                        try:
-                            os.link(grave, path)
-                        except FileExistsError:
-                            pass  # a third acquirer re-created; victim's
-                            # next heartbeat/owns() check notices
-                        os.unlink(grave)
-                        # Residual (documented): if the live holder RELEASED
-                        # in the rename→link window, the link resurrects a
-                        # just-released lock as an orphan — a liveness cost
-                        # only (ages out after stale_seconds), never a
-                        # safety violation; the heartbeat's transient-miss
-                        # tolerance below keeps the restored holder alive.
-                        continue  # live lock: keep waiting for release
-                    os.unlink(grave)
-                    continue  # compete for the fresh lock via O_EXCL
-            except FileNotFoundError:
-                continue  # released between open and stat — retry now
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"append mutex for topic {topic!r} held beyond "
-                    f"{self.timeout_seconds}s (stale after {self.stale_seconds}s)"
-                )
-            time.sleep(0.02)
-
-    def _start_heartbeat(self, topic: str, path: str, token: str) -> None:
+        token = uuid.uuid4().hex
+        lease = self._lease(topic)
+        if not lease.wait(token, self.timeout_seconds):
+            raise TimeoutError(
+                f"append mutex for topic {topic!r} held beyond "
+                f"{self.timeout_seconds}s (stale after {self.stale_seconds}s)"
+            )
         stop = threading.Event()
 
         def beat() -> None:
             while not stop.wait(self.stale_seconds / 4.0):
-                try:
-                    # refresh only if the file is still OUR lock (a thief's
-                    # lock must not be kept alive by a stale holder's beat).
-                    # A single miss is re-checked after a short pause: a
-                    # concurrent breaker's rename→verify→link restore makes
-                    # the file transiently absent even though ownership
-                    # survives — exiting on first miss would leave a live
-                    # long append heartbeat-less and genuinely stealable
-                    # (review r5).
-                    if self._holder(path) == token:
-                        os.utime(path)
-                        continue
-                    time.sleep(0.05)
-                    if self._holder(path) == token:
-                        os.utime(path)
-                    else:
-                        return  # confirmed foreign/gone: stop beating
-                except OSError:
+                if not lease.refresh(token):
                     return
 
-        t = threading.Thread(target=beat, name=f"mutex-heartbeat-{topic}", daemon=True)
         with self._held_guard:
-            self._held[self._held_key(topic)] = (token, stop, t)
-        t.start()
-
-    @staticmethod
-    def _holder(path: str) -> str | None:
-        try:
-            with open(path) as f:
-                return f.read().strip()
-        except (FileNotFoundError, OSError):
-            return None
+            self._held[self._held_key(topic)] = (token, stop)
+        threading.Thread(target=beat, name=f"mutex-heartbeat-{topic}", daemon=True).start()
 
     def owns(self, topic: str) -> bool:
-        """True iff the lock file still carries THIS instance's live
-        acquire token — the commit-point re-verification for multi-writer
-        coordination: a writer SIGSTOPped past ``stale_seconds`` can have
-        its lock stolen mid-append; re-checking ownership immediately
-        before the irrevocable step (the lsn ticket save) turns the
-        silent double-reservation into a loud abort. The residual window
-        (theft between this check and the save) is one filesystem op wide
-        versus ``stale_seconds`` for the heartbeat to lapse first —
-        the same verify-then-act structure as `LockMonitor.check_once`.
-
-        Scoped to the CALLING thread's acquire (the bookkeeping is keyed
-        by (topic, thread)): a sibling thread's fresh acquire after this
-        thread's lock was stolen must not make the victim's check pass
-        against the sibling's token (review r5)."""
+        """True iff the calling thread's acquire still holds the lease —
+        the commit-point re-check: a writer paused past ``stale_seconds``
+        can have its lease broken mid-append, and re-checking right before
+        the irrevocable step (the lsn ticket save) turns a silent double
+        reservation into a loud abort."""
         with self._held_guard:
             held = self._held.get(self._held_key(topic))
-        if held is None:
-            return False
-        return self._holder(self._path(topic)) == held[0]
+        return held is not None and self._lease(topic).holds(held[0])
 
     def release(self, topic: str) -> None:
+        """Release the calling thread's acquire of ``topic``, if any."""
         with self._held_guard:
             held = self._held.pop(self._held_key(topic), None)
         if held is not None:
-            token, stop, thread = held
+            token, stop = held
             stop.set()
-            path = self._path(topic)
-            # unlink only our own lock: if we were SIGSTOPped past
-            # stale_seconds and stolen from, the thief's lock must survive
-            if self._holder(path) == token:
-                try:
-                    os.unlink(path)
-                except FileNotFoundError:
-                    pass
-            return
-        # release() without a tracked acquire (legacy/test path): best-effort
-        try:
-            os.unlink(self._path(topic))
-        except FileNotFoundError:
-            pass
+            self._lease(topic).drop(token)
 
 
 class _AtomicJsonState:
-    """A tiny key→value store with atomic whole-file replace."""
+    """A tiny key→value store in one JSON file. Every change is one
+    read-modify-write under the file's writer lease (a :class:`Lease` on
+    ``<path>.lock``), so concurrent writers never lose each other's
+    updates; reads take no lease, because the write is an atomic replace.
+    Lock order: a caller may hold a topic mutex while it updates a state
+    file, never the other way round."""
+
+    #: a writer lease older than this is an orphan of a crashed writer
+    STALE_SECONDS = 30.0
 
     def __init__(self, path: str, initial: dict | None = None):
         self.path = path
+        self._initial = initial or {}
+        self._lease = Lease(f"{path}.lock", self.STALE_SECONDS)
         if not os.path.exists(path):
             os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-            self._write(initial or {})
+            self._update(lambda data: None)
 
     def _read(self) -> dict:
         with open(self.path) as f:
@@ -291,6 +316,22 @@ class _AtomicJsonState:
 
     def _write(self, data: dict) -> None:
         atomic_write(self.path, json.dumps(data))
+
+    def _update(self, change: Callable[[dict], None]) -> None:
+        """Apply ``change`` to the state in place and write it, under the
+        writer lease; a missing file reads as the initial state."""
+        token = uuid.uuid4().hex
+        if not self._lease.wait(token, 2 * self.STALE_SECONDS):
+            raise TimeoutError(f"state file {self.path!r} stayed locked")
+        try:
+            try:
+                data = self._read()
+            except FileNotFoundError:
+                data = dict(self._initial)
+            change(data)
+            self._write(data)
+        finally:
+            self._lease.drop(token)
 
 
 class OffsetsTable(_AtomicJsonState):
@@ -356,9 +397,8 @@ class OffsetsTable(_AtomicJsonState):
         cursor: Cursor | None = None,
         ckpt_id: str | None = None,
     ) -> None:
-        data = self._read()
-        data[f"{topic}/{partition}"] = self._entry(offset, batch_id, cursor, ckpt_id)
-        self._write(data)
+        entry = self._entry(offset, batch_id, cursor, ckpt_id)
+        self._update(lambda data: data.update({f"{topic}/{partition}": entry}))
 
     def upsert_many(
         self,
@@ -374,10 +414,11 @@ class OffsetsTable(_AtomicJsonState):
         partitions' cursors are stale — widening the at-least-once window
         beyond the documented one batch (ADVICE r3).
         """
-        data = self._read()
-        for partition, offset, batch_id, cursor, ckpt_id in rows:
-            data[f"{topic}/{partition}"] = self._entry(offset, batch_id, cursor, ckpt_id)
-        self._write(data)
+        entries = {
+            f"{topic}/{partition}": self._entry(offset, batch_id, cursor, ckpt_id)
+            for partition, offset, batch_id, cursor, ckpt_id in rows
+        }
+        self._update(lambda data: data.update(entries))
 
 
 class TicketStore(_AtomicJsonState):
@@ -405,10 +446,7 @@ class TicketStore(_AtomicJsonState):
 
     def drop(self, topic: str) -> None:
         """Forget a topic's ticket (it will be rebuilt from parquet)."""
-        data = self._read()
-        if topic in data:
-            del data[topic]
-            self._write(data)
+        self._update(lambda data: data.pop(topic, None))
 
     def save(
         self,
@@ -421,8 +459,7 @@ class TicketStore(_AtomicJsonState):
         day_partitioned: bool,
         schema: dict | None = None,
     ) -> None:
-        data = self._read()
-        data[topic] = {
+        entry = {
             "lsn": lsn,
             "max_id": max_id,
             "total": total,
@@ -432,7 +469,7 @@ class TicketStore(_AtomicJsonState):
             # pass it to `.schema(...)` instead of inferring it from footers
             "schema": schema,
         }
-        self._write(data)
+        self._update(lambda data: data.update({topic: entry}))
 
 
 class ProgressStore(_AtomicJsonState):
@@ -464,13 +501,12 @@ class ProgressStore(_AtomicJsonState):
         batch_id: int | None = None,
         ckpt_id: str | None = None,
     ) -> None:
-        data = self._read()
-        data[topic] = {
+        entry = {
             "cursor": cursor.serialize(),
             "batch_id": batch_id,
             "ckpt_id": ckpt_id,
         }
-        self._write(data)
+        self._update(lambda data: data.update({topic: entry}))
 
     def topics(self) -> list[str]:
         return sorted(k for k in self._read() if k != NOOP_KEY)

@@ -36,12 +36,13 @@ shapes share that commit point:
   `DedupIndex` and `PostingsIndex` segments, and the typed and tokenized
   ingest tables. Each segment's ``_SEGMENT.<batch_id>`` marker is its
   commit point (written last; readers list markers, never directories),
-  and a fold rewrites the snapshot plus the oldest segments as one
-  ``snap<batch_id>`` directory behind the ``_SNAP`` pointer. A segment is
-  rewritten under its own batch id, so recomputing a replayed
-  uncommitted batch is idempotent; a committed one never reaches the
-  log again (`streaming.eos` skips it), so a write at or below the
-  fold watermark raises. The ivf, pq and sq8 additions streams are
+  or, in a log an exactly-once sink writes, the sink's ledger: readers
+  list no segment above the ledger's batch id. A fold rewrites the
+  snapshot plus the oldest segments as one ``snap<batch_id>`` directory
+  behind the ``_SNAP`` pointer. A segment is rewritten under its own
+  batch id, so recomputing a replayed uncommitted batch is idempotent;
+  a committed one never reaches the log again (`streaming.eos` skips
+  it), so a write at or below the fold watermark raises. The ivf, pq and sq8 additions streams are
   segment logs too, and every compaction of a log keeps, per key
   group, only the newest segment's rows (`SegmentLog.newest`).
 
@@ -53,6 +54,7 @@ included, is written through `write_pointer`.
 from __future__ import annotations
 
 import functools
+import math
 import os
 import shutil
 from typing import Callable
@@ -78,6 +80,20 @@ def write_pointer(path: str, text: str) -> None:
     """The commit point of every publish: atomically replace the pointer
     file at ``path`` with ``text``."""
     atomic_write(path, text)
+
+
+def read_ledger(ledger: str) -> tuple[str, int] | None:
+    """The ``(lineage, batch_id)`` a ledger file holds, None if there is
+    none. A ledger of no known lineage (an artifact written before
+    ledgers existed) reads as lineage ''."""
+    try:
+        with open(ledger) as fh:
+            parts = fh.read().split()
+    except FileNotFoundError:
+        return None
+    if len(parts) < 2 or not parts[1].isdigit():
+        return "", -1
+    return parts[0], int(parts[1])
 
 
 def segment_wins(base: DataFrame, seg: DataFrame, key: str) -> DataFrame:
@@ -282,11 +298,18 @@ def _id_after(name: str, prefix: str) -> int | None:
 class SegmentLog:
     """The ``b<batch_id>`` segments of a batch-appended artifact at
     ``root``, each live once its ``_SEGMENT.<batch_id>`` marker exists,
-    plus at most one live ``snap<w>`` fold of every segment ≤ ``w``."""
+    plus at most one live ``snap<w>`` fold of every segment ≤ ``w``.
 
-    def __init__(self, spark: SparkSession, root: str) -> None:
+    A log written by an exactly-once sink is committed by the sink's
+    ledger (``ledger``, by default ``root/_LEDGER``): a segment above the
+    ledger's batch id is not committed yet, and nothing lists it. A log
+    with no ledger file lists every marked segment."""
+
+    def __init__(self, spark: SparkSession, root: str,
+                 ledger: str | None = None) -> None:
         self.spark = spark
         self.root = root
+        self.ledger = ledger or os.path.join(root, LEDGER)
 
     def _dir(self, batch_id: int) -> str:
         return os.path.join(self.root, f"b{batch_id}")
@@ -312,12 +335,15 @@ class SegmentLog:
         return self._snapshot()[0]
 
     def ids(self) -> list[int]:
-        """Marked segment ids above the watermark, in numeric order."""
+        """Marked, committed segment ids above the watermark, in numeric
+        order."""
         w = self.watermark()
         if not os.path.isdir(self.root):
             return []
+        held = read_ledger(self.ledger)
+        top = math.inf if held is None else held[1]
         ids = (_id_after(n, _MARKER) for n in os.listdir(self.root))
-        return sorted(i for i in ids if i is not None and i > w)
+        return sorted(i for i in ids if i is not None and w < i <= top)
 
     def paths(self, upto: int | None = None) -> list[str]:
         """The live snapshot, then the marked segments ≤ ``upto``."""

@@ -22,7 +22,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.generations import GenerationPair, SegmentLog
+from event_store_spark.plans.generations import LEDGER, GenerationPair, SegmentLog
 from event_store_spark.tables import load_table, memo, side_table
 
 BM25_K1 = 1.2
@@ -105,7 +105,10 @@ class PostingsIndex:
         self.spark = spark
         self.path = path
         self._gen = GenerationPair(path, "rows", "meta.json")
-        self._log = SegmentLog(spark, os.path.join(path, "segments"))
+        # committed by the streaming maintainer's ledger, if it has one
+        self._log = SegmentLog(
+            spark, os.path.join(path, "segments"), os.path.join(path, LEDGER)
+        )
 
     # ----------------------------------------------------------- lifecycle
 

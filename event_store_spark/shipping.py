@@ -7,7 +7,9 @@ that's `--py-files`; here we build the zip once per session and register it
 with ``sc.addPyFile`` — the exact same mechanism, self-serve.
 
 Called automatically by every code path that creates a Python UDF, so the
-engine works no matter where the driving process imports it from.
+engine works no matter where the driving process imports it from. A
+context whose executors' ``PYTHONPATH`` already starts with the package's
+parent directory (every `session.get_spark` context) ships nothing.
 """
 
 from __future__ import annotations
@@ -30,6 +32,12 @@ def ensure_shipped(spark: SparkSession | None = None) -> None:
     if app_id in _SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    # workers of a `session.get_spark` context import the package from
+    # this tree already (`session.python_worker_conf`): no zip needed
+    pythonpath = sc.getConf().get("spark.executorEnv.PYTHONPATH", "")
+    if pythonpath.split(os.pathsep)[0] == os.path.dirname(pkg_dir):
+        _SHIPPED.add(app_id)
+        return
     # ALWAYS rebuild into a private temp file, then atomically publish under
     # a content-hash name: a predictable pid-keyed path was reused blindly,
     # so a stale zip (pid recycling) or a pre-planted file at the guessable

@@ -22,8 +22,8 @@ Per micro-batch, inside ONE `streaming.eos` exactly-once batch:
 4. publish — admitted rows and the batch's new hashes land as the
    batch's segments of two `plans.generations.SegmentLog`s
    (``admitted/``, ``seen/``), then the LAST step commits the sink's
-   `streaming.eos` ledger. Reads take only segments below the batch
-   (or, for `table`, at or below the ledger), so a crash anywhere
+   `streaming.eos` ledger. Reads take only segments below the batch,
+   and both logs list nothing above the ledger, so a crash anywhere
    re-runs the batch against the exact pre-batch state (a segment is
    rewritten under its own batch id), and `eos` decides which batches
    are already applied. After the commit each log folds its segments
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from event_store_spark.plans.generations import LEDGER, SegmentLog
-from event_store_spark.streaming.eos import ExactlyOnceSink, read_ledger
+from event_store_spark.streaming.eos import ExactlyOnceSink
 
 #: batch-plan constants (plans/pipeline.py quality_filter/corpus_curation)
 QUALITY_MIN = 0.55
@@ -65,15 +65,16 @@ class CurationPipeline(ExactlyOnceSink):
         self.checkpoint = checkpoint
         self.quota = quota
         self.ledger = os.path.join(target_path, LEDGER)
-        self._admitted = SegmentLog(spark, os.path.join(target_path, "admitted"))
-        self._seen = SegmentLog(spark, os.path.join(target_path, "seen"))
+        self._admitted = SegmentLog(
+            spark, os.path.join(target_path, "admitted"), self.ledger
+        )
+        self._seen = SegmentLog(spark, os.path.join(target_path, "seen"), self.ledger)
 
     _ADMITTED = "doc_id bigint, source string, lang string, n_chars bigint"
 
     def table(self) -> DataFrame:
         """The admitted corpus so far (committed batches only)."""
-        upto = (read_ledger(self.ledger) or ("", -1))[1]
-        return self._admitted.read(upto=upto, schema=self._ADMITTED)
+        return self._admitted.read(schema=self._ADMITTED)
 
     # ------------------------------------------------------------- sink
 

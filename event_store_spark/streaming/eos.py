@@ -67,20 +67,6 @@ def applied(held: tuple | None, lineage: str, batch_id: int) -> bool:
     )
 
 
-def read_ledger(ledger: str) -> tuple[str, int] | None:
-    """The ``(lineage, batch_id)`` a ledger file holds, None if there is
-    none. A ledger of no known lineage (an artifact written before
-    ledgers existed) reads as lineage ''."""
-    try:
-        with open(ledger) as fh:
-            parts = fh.read().split()
-    except FileNotFoundError:
-        return None
-    if len(parts) < 2 or not parts[1].isdigit():
-        return "", -1
-    return parts[0], int(parts[1])
-
-
 def exactly_once(
     checkpoint: str, ledger: str, apply: Apply
 ) -> Callable[[DataFrame, int], None]:
@@ -88,7 +74,7 @@ def exactly_once(
     ``ledger``, for a query on ``checkpoint``. Raises at once if the
     ledger holds another checkpoint's batches."""
     lineage = checkpoint_lineage_id(checkpoint)
-    held = read_ledger(ledger)
+    held = generations.read_ledger(ledger)
     artifact = os.path.dirname(ledger)
     if held is not None and held[0] != lineage:
         raise RuntimeError(
@@ -101,7 +87,7 @@ def exactly_once(
     os.makedirs(artifact, exist_ok=True)
 
     def fn(df: DataFrame, batch_id: int) -> None:
-        if applied(read_ledger(ledger), lineage, batch_id):
+        if applied(generations.read_ledger(ledger), lineage, batch_id):
             return
         apply(
             df,

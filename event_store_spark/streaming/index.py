@@ -17,7 +17,8 @@ Layout: ``target_path`` is a `plans.generations.SegmentLog`, one
 segment per micro-batch (IVF's partitioned by cell, which IS the
 inverted-file layout: a search for cell c lists exactly ``cell=c/`` of
 each segment), and the stream's `streaming.eos` ledger (``_LEDGER``)
-commits after the segment. `streaming.eos` alone decides which batches
+commits after the segment; readers list no segment above it.
+`streaming.eos` alone decides which batches
 are already applied; a checkpoint the ledger has not seen raises (Spark's
 own file sink would skip a new checkpoint's batch 0 as already
 committed). Serve base + additions through ``load_ivf_index(...,
@@ -28,13 +29,12 @@ winning per vec_id (`SegmentLog.newest`).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.generations import LEDGER, SegmentLog
+from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.streaming import eos
 
 
@@ -53,7 +53,7 @@ def _additions(
         log.write(batch_id, encode(df), partition_by)
         commit()
 
-    return eos.start(stream, checkpoint, os.path.join(target_path, LEDGER), apply)
+    return eos.start(stream, checkpoint, log.ledger, apply)
 
 
 def ivf_assign_stream(

@@ -15,21 +15,12 @@ Re-expresses the reference's advisory-lock pair:
   heartbeating at every micro-batch and failing the query on loss
   (fail-fast X6 — the streaming analog of killing the process).
 
-Steal protocol: an expired lease is broken by RENAMING it to a
-steal-private name — `os.rename` of one source path succeeds for exactly
-one caller, so concurrent breakers cannot both conclude they removed it;
-ownership of the fresh lease is then decided by the same `O_EXCL` create
-every acquirer races on (single winner, same as `TopicMutex`). The
-breaker then re-reads the grave and verifies the holder it buried is the
-stale holder it observed — if a release+fresh-acquire slipped in between
-the expiry check and the rename, the live lease is restored atomically
-(`os.link`, which cannot clobber a newer lease) and the steal aborts.
-Residual exposure: if a third acquirer creates a lease before the
-restore, the renamed victim holds a lost lock for at most one heartbeat
-interval (its next heartbeat sees a foreign holder and stops writing).
-On a shared filesystem (HDFS/NFS/object store with atomic rename) the
-same protocol holds; a real cluster deployment can swap in a DB advisory
-lock behind this interface unchanged.
+The lease is a `core.state.Lease` (the one lease protocol: O_EXCL take,
+single-winner break of a stale lease, restore of a live one buried by a
+race; its docstring describes it) whose token is the owner id. On a
+shared filesystem (HDFS/NFS/object store with atomic rename) the same
+protocol holds; a real cluster deployment can swap in a DB advisory lock
+behind this interface unchanged.
 """
 
 from __future__ import annotations
@@ -38,111 +29,34 @@ import os
 import time
 import uuid
 
+from event_store_spark.core.state import Lease
+
 LOCK_NAME = "_event_replicator_lock"  # parity: LockManager.java LOCK_NAME
 
 
 class LockManager:
-    """Lease-file lock: atomic create + owner id + heartbeat mtime."""
+    """The replicator's lease on ``<root>/_event_replicator_lock``, held
+    by ``owner``; stale after ``lease_seconds`` without a heartbeat."""
 
     def __init__(self, root: str, owner: str | None = None, lease_seconds: float = 30.0):
         self.path = os.path.join(root, LOCK_NAME)
         self.owner = owner or uuid.uuid4().hex
         self.lease_seconds = lease_seconds
         os.makedirs(root, exist_ok=True)
-
-    # ----------------------------------------------------------- protocol
+        self._lease = Lease(self.path, lease_seconds)
 
     def acquire(self) -> bool:
-        """Try to take (or re-assert) the lock; never blocks on a live
-        foreign lease.
-
-        True when this owner holds the lease afterwards: fresh acquire,
-        reentrant re-acquire (refreshes the heartbeat, like the advisory
-        lock's session scope), or takeover of an expired lease. Expired
-        leases are broken with the single-winner rename protocol
-        (`TopicMutex.acquire`): exactly one breaker can rename the stale
-        file aside, and OWNERSHIP is then decided by the O_EXCL create
-        every acquirer races on — replace-then-read-back could let two
-        stealers both conclude they won (ADVICE r3's TopicMutex flaw,
-        which this class shared).
-        """
-        for _ in range(16):  # bounded retry: vanished-file races rejoin
-            try:
-                fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                with os.fdopen(fd, "w") as f:
-                    f.write(self.owner)
-                return True
-            except FileExistsError:
-                pass
-            holder = self._holder()
-            if holder is None:
-                continue  # released between O_EXCL and read — retry create
-            if holder == self.owner:
-                os.utime(self.path)  # heartbeat on re-assert
-                return True
-            if self._expired():
-                grave = f"{self.path}.stale.{self.owner}.{uuid.uuid4().hex}"
-                try:
-                    os.rename(self.path, grave)
-                except FileNotFoundError:
-                    continue  # another breaker (or a release) beat us
-                # TOCTOU guard (ADVICE r4): between _expired() and the
-                # rename, the stale lease may have been released AND a
-                # fresh foreign lease created — then we just renamed a
-                # LIVE lease. The grave is steal-private, so its content
-                # is stable: verify it still names the stale holder we
-                # observed; if not, restore it atomically (os.link fails
-                # on an existing path, so a newer lease is never
-                # clobbered) and report the lock as held.
-                grave_holder = None
-                try:
-                    with open(grave) as f:
-                        grave_holder = f.read().strip()
-                except FileNotFoundError:
-                    pass
-                if grave_holder is not None and grave_holder != holder:
-                    try:
-                        os.link(grave, self.path)
-                    except FileExistsError:
-                        # a third acquirer already re-created the lease;
-                        # the renamed victim loses it and notices at its
-                        # next heartbeat (holder mismatch -> stop
-                        # writing) — the residual exposure is bounded by
-                        # one heartbeat interval
-                        pass
-                    os.unlink(grave)
-                    return False  # live foreign lease
-                os.unlink(grave)
-                continue  # compete for the fresh lease via O_EXCL
-            return False  # live foreign lease
-        return False
+        """Take (or re-assert, refreshing the heartbeat) the lease; never
+        blocks on a live foreign lease. True when this owner holds it."""
+        return self._lease.take(self.owner)
 
     def heartbeat(self) -> bool:
-        """Refresh the lease; False means the lock was lost (foreign owner
-        or vanished file) — the caller must stop writing."""
-        if self._holder() != self.owner:
-            return False
-        os.utime(self.path)
-        return True
+        """Refresh the lease; False means the lock was lost — the caller
+        must stop writing."""
+        return self._lease.refresh(self.owner)
 
     def release(self) -> None:
-        if self._holder() == self.owner:
-            os.unlink(self.path)
-
-    # ------------------------------------------------------------ helpers
-
-    def _holder(self) -> str | None:
-        try:
-            with open(self.path) as f:
-                return f.read().strip()
-        except FileNotFoundError:
-            return None
-
-    def _expired(self) -> bool:
-        try:
-            return (time.time() - os.path.getmtime(self.path)) > self.lease_seconds
-        except FileNotFoundError:
-            return False
+        self._lease.drop(self.owner)
 
 
 class LockMonitor:

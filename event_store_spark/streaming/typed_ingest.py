@@ -8,7 +8,7 @@ typed table as that batch's segment of a `plans.generations.SegmentLog`
 — a replayed uncommitted batch rewrites its own segment and never
 duplicates, `streaming.eos`'s ledger (``_LEDGER``, committed after the
 segment) decides which batches are already applied, a segment is read
-only once its marker is written, and the log folds its segments into
+only once that ledger commits it, and the log folds its segments into
 one snapshot every ``SEGMENTS_PER_FOLD`` batches instead of growing one
 directory per batch forever.
 
@@ -25,11 +25,9 @@ every downstream agg scans it with column pruning.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from event_store_spark.plans.generations import LEDGER, SegmentLog
+from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.plans.typed_events import typed_projection
 from event_store_spark.streaming.eos import ExactlyOnceSink
 
@@ -43,8 +41,8 @@ class TypedEventsMaterializer(ExactlyOnceSink):
         self.spark = spark
         self.target_path = target_path
         self.checkpoint = checkpoint
-        self.ledger = os.path.join(target_path, LEDGER)
         self._log = SegmentLog(spark, target_path)
+        self.ledger = self._log.ledger
 
     #: the map-side parse each batch is written as
     _project = staticmethod(typed_projection)
@@ -58,5 +56,5 @@ class TypedEventsMaterializer(ExactlyOnceSink):
     _sink = _apply
 
     def table(self) -> DataFrame:
-        """The live table (snapshot plus marked segments, lazy)."""
+        """The live table (snapshot plus committed segments, lazy)."""
         return self._log.read()

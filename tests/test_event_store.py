@@ -672,8 +672,10 @@ def test_replicator_lock_steal_elects_single_winner(tmp_path):
     a = LockManager(root, owner="a", lease_seconds=0.2)
     b = LockManager(root, owner="b", lease_seconds=0.2)
     got_a, got_b = a.acquire(), b.acquire()
-    assert got_a != got_b or (got_a and a._holder() != b.owner)
-    winners = [m.owner for m, got in ((a, got_a), (b, got_b)) if got and m._holder() == m.owner]
+    assert got_a != got_b or (got_a and a._lease.holder() != b.owner)
+    winners = [
+        m.owner for m, got in ((a, got_a), (b, got_b)) if got and m._lease.holder() == m.owner
+    ]
     assert len(winners) == 1
 
 

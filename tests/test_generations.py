@@ -770,6 +770,50 @@ def test_crash_at_each_side_effect_of_a_batch_replays_to_one_pass(
     assert sink.rows(restarted) == _ONE_PASS[name]
 
 
+# ------------------------------------------------------ uncommitted segments
+
+
+def test_typed_table_hides_a_batch_its_ledger_did_not_commit(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """Batch 1's segment is marked, but its ledger write fails: the batch
+    is not committed, so the typed table shows batch 0's events only."""
+    events = load_table(spark, sf_smoke, "events")
+    even, odd = (events.where(F.col("event_id") % 2 == i) for i in (0, 1))
+    mat = _typed_sink(spark, sf_smoke, str(tmp_path))
+    mat._merge(even, 0)
+    arm = _arm_crash(monkeypatch, "ledger")
+    arm()
+    with pytest.raises(OSError, match="injected crash at the ledger"):
+        mat._merge(odd, 1)
+    assert os.path.exists(os.path.join(mat.target_path, "_SEGMENT.1"))
+    assert _rows(mat.table(), "event_id") == _rows(even, "event_id")
+
+
+def test_additions_reader_hides_segments_above_the_ledger(
+    spark, sf_smoke, tmp_path
+):
+    """An additions log whose ledger holds batch 0 serves batch 0's
+    vectors only, though batch 1's segment is marked."""
+    from event_store_spark.plans.ivf import load_ivf_index, save_ivf_index
+
+    path = str(tmp_path / "ivf")
+    save_ivf_index(spark, sf_smoke, path)
+    adds = _ivf_adds(spark, tmp_path, load_ivf_index(spark, path)[1], 5_000_000)
+    log = SegmentLog(spark, adds)
+    generations.write_pointer(os.path.join(adds, generations.LEDGER), "lineage 0")
+    log.write(
+        1,
+        spark.read.parquet(*log.paths()).withColumn(
+            "vec_id", F.col("vec_id") + 1_000
+        ),
+        ("cell",),
+    )
+    _, served = load_ivf_index(spark, path, additions_path=adds)
+    added = served.where(F.col("vec_id") >= 5_000_000)
+    assert _rows(added, "vec_id") == [(5_000_000,), (5_000_001,), (5_000_002,)]
+
+
 # ------------------------------------------------------ static discipline
 
 #: the only modules that may write a publish pointer
@@ -945,3 +989,47 @@ def test_index_maintenance_leaves_query_plans_alone():
         if "statusStore" in path.read_text()
     ]
     assert not readers, readers
+
+
+#: the lease's module: the one home of the lock protocol's primitives
+_LEASE_MODULE = "core/state.py"
+
+
+def test_only_the_lease_takes_or_breaks_a_lock():
+    """``os.O_EXCL``, ``os.link`` and the ``.stale.`` grave name appear
+    only in the lease's module, and a state file is written only by its
+    locked ``_AtomicJsonState._update``: a second copy of the lock
+    protocol, or a state-file write outside the writer lease, fails."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        locked = {
+            id(node)
+            for name, fn in _functions(tree)
+            if rel == _LEASE_MODULE and name == "_AtomicJsonState._update"
+            for node in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            primitive = rel != _LEASE_MODULE and (
+                (
+                    isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "os"
+                    and node.attr in ("O_EXCL", "link")
+                )
+                or (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and ".stale." in node.value
+                )
+            )
+            unlocked_write = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "_write"
+                and id(node) not in locked
+            )
+            if primitive or unlocked_write:
+                found.append((rel, node.lineno))
+    assert not found, found

@@ -12,11 +12,12 @@ from __future__ import annotations
 
 import datetime
 import os
+import threading
 
 import pytest
 
 from event_store_spark.core import EventStore
-from event_store_spark.core.state import ProgressStore
+from event_store_spark.core.state import Lease, ProgressStore
 from event_store_spark.streaming import LockManager, LockMonitor, Replicator
 
 TS = datetime.datetime(2025, 1, 4, 12, 0, 0)
@@ -61,7 +62,7 @@ def test_steal_race_restores_live_lease(tmp_path, monkeypatch):
     assert stale.acquire()
     os.utime(stale.path, (0, 0))  # looks expired to the breaker
 
-    orig_expired = LockManager._expired
+    orig_expired = Lease._stale
 
     def expired_then_swap(self):
         out = orig_expired(self)
@@ -73,7 +74,7 @@ def test_steal_race_restores_live_lease(tmp_path, monkeypatch):
             assert live.acquire()
         return out
 
-    monkeypatch.setattr(LockManager, "_expired", expired_then_swap)
+    monkeypatch.setattr(Lease, "_stale", expired_then_swap)
     assert breaker.acquire() is False  # live lease detected, not stolen
     monkeypatch.undo()
 
@@ -83,6 +84,41 @@ def test_steal_race_restores_live_lease(tmp_path, monkeypatch):
     # no grave litter left behind
     leftovers = [p for p in os.listdir(tmp_path) if ".stale." in p]
     assert leftovers == []
+
+
+def test_heartbeat_holds_through_a_breakers_restore(tmp_path, monkeypatch):
+    """A breaker that buried a live lease (a release and a fresh acquire
+    slipped in between its expiry check and its rename) restores it with
+    ``os.link``; until then the lease file is missing. The live holder's
+    heartbeat inside that window must still report the lock held, or a
+    live replicator query fails with "lock lost"."""
+    dead = LockManager(str(tmp_path), owner="dead", lease_seconds=10)
+    live = LockManager(str(tmp_path), owner="live", lease_seconds=10)
+    breaker = LockManager(str(tmp_path), owner="breaker", lease_seconds=10)
+    assert dead.acquire()
+    os.utime(dead.path, (0, 0))  # looks expired to the breaker
+    real_rename, real_link = os.rename, os.link
+    beats, swapped = [], []
+
+    def release_and_acquire_then_rename(src, dst):
+        if src == dead.path and not swapped:
+            swapped.append(src)
+            os.unlink(src)  # the dead holder's lease goes...
+            assert live.acquire()  # ...and a live instance takes it
+        real_rename(src, dst)
+
+    def heartbeat_then_link(src, dst):
+        restore = threading.Timer(0.02, real_link, (src, dst))
+        restore.start()
+        beats.append(live.heartbeat())  # the file is missing right now
+        restore.join()
+
+    monkeypatch.setattr(os, "rename", release_and_acquire_then_rename)
+    monkeypatch.setattr(os, "link", heartbeat_then_link)
+    assert breaker.acquire() is False
+    monkeypatch.undo()
+    assert beats == [True]
+    assert live.heartbeat() is True
 
 
 def test_fresh_lease_is_not_stolen(tmp_path):

@@ -12,12 +12,19 @@ from __future__ import annotations
 
 import datetime
 import os
+import sys
 import threading
 
 import pytest
 
 from event_store_spark.core import EventStore
-from event_store_spark.core.state import TopicMutex
+from event_store_spark.core.cursor import Cursor
+from event_store_spark.core.state import (
+    OffsetsTable,
+    ProgressStore,
+    TicketStore,
+    TopicMutex,
+)
 
 TS = datetime.datetime(2025, 1, 4, 12, 0, 0)
 
@@ -73,6 +80,44 @@ def test_mutex_steal_race_restores_live_lock(tmp_path, monkeypatch):
     assert live.owns("t_events") is True  # survived the attempted steal
     leftovers = [p for p in os.listdir(tmp_path) if ".stale." in p]
     assert leftovers == []
+
+
+def test_owns_holds_through_a_breakers_restore(tmp_path, monkeypatch):
+    """While a breaker restores a live lock it buried (``os.link`` after
+    the rename), the lock file is missing; the live holder's ``owns``
+    inside that window must still report the mutex held, or a live
+    append aborts with "lost the topic mutex"."""
+    stale = TopicMutex(str(tmp_path), timeout_seconds=5, stale_seconds=10)
+    live = TopicMutex(str(tmp_path), timeout_seconds=5, stale_seconds=10)
+    breaker = TopicMutex(str(tmp_path), timeout_seconds=1, stale_seconds=10)
+    stale.acquire("t_events")
+    stale._held[stale._held_key("t_events")][1].set()  # heartbeat dies
+    path = stale._path("t_events")
+    os.utime(path, (0, 0))
+    real_rename, real_link = os.rename, os.link
+    owned, swapped = [], []
+
+    def release_and_acquire_then_rename(src, dst):
+        if src == path and not swapped:
+            swapped.append(src)
+            os.unlink(src)  # the stale holder releases...
+            live.acquire("t_events")  # ...and a live writer acquires
+        real_rename(src, dst)
+
+    def owns_then_link(src, dst):
+        restore = threading.Timer(0.02, real_link, (src, dst))
+        restore.start()
+        owned.append(live.owns("t_events"))  # the file is missing right now
+        restore.join()
+
+    monkeypatch.setattr(os, "rename", release_and_acquire_then_rename)
+    monkeypatch.setattr(os, "link", owns_then_link)
+    with pytest.raises(TimeoutError):
+        breaker.acquire("t_events")
+    monkeypatch.undo()
+    assert owned == [True]
+    assert live.owns("t_events") is True
+    live.release("t_events")
 
 
 def test_append_aborts_when_mutex_stolen_before_commit(spark, tmp_path, monkeypatch):
@@ -174,3 +219,79 @@ def test_owns_is_thread_scoped_after_theft(tmp_path):
     assert result["owns"] is False  # victim's guard fires
     assert m.owns("tv_events") is True  # sibling's lock survived the release
     m.release("tv_events")
+
+
+# ------------------------------------------------------ shared state files
+
+#: saves per writer in the state-file races
+_SAVES = 300
+
+
+def _ticket_save(store, topic, i):
+    store.save(
+        topic, lsn=i, max_id=i, total=i, key_type="string", day_partitioned=False
+    )
+
+
+def _offsets_save(store, topic, i):
+    # both write paths of the table, alternately
+    if i % 2:
+        store.upsert(topic, i, batch_id=i)
+    else:
+        store.upsert_many(topic, [(0, i, i, None, None)])
+
+
+#: store → (save value i on a topic, the value a topic reads back)
+_STATE_FILES = {
+    TicketStore: (
+        _ticket_save, lambda store, topic: (store.get(topic) or {}).get("lsn")
+    ),
+    ProgressStore: (
+        lambda store, topic, i: store.save(topic, Cursor(i, 0), batch_id=i),
+        lambda store, topic: store.last_batch_id(topic),
+    ),
+    OffsetsTable: (_offsets_save, lambda store, topic: store.get(topic)),
+}
+
+
+@pytest.mark.parametrize("kind", list(_STATE_FILES), ids=lambda k: k.__name__)
+def test_concurrent_state_file_writers_lose_no_update(tmp_path, kind):
+    """Two writers, each with its own store over ONE file, save to their
+    own topic concurrently. Every update is a read-modify-write of the
+    whole file, so an unlocked writer can replace the file with a copy
+    read before the other's save: that save is lost (a reverted ticket
+    reissues an lsn, a reverted offset undercounts for good). Every save
+    must read back its own value, and the file must end exact."""
+    save, read = _STATE_FILES[kind]
+    path = str(tmp_path / "state.json")
+    topics = ("a_events", "b_events")
+    reverted, errors = [], []
+    start = threading.Barrier(len(topics))
+
+    def writer(topic):
+        try:
+            store = kind(path)
+            start.wait(30)
+            for i in range(1, _SAVES + 1):
+                save(store, topic, i)
+                if read(store, topic) != i:
+                    reverted.append((topic, i))
+        except Exception as e:  # pragma: no cover - failure diagnostics
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(t,)) for t in topics]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the writers' read-modify-writes
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert reverted == []
+    final = kind(path)
+    assert [read(final, t) for t in topics] == [_SAVES, _SAVES]
+    assert not os.path.exists(path + ".lock")

@@ -257,3 +257,32 @@ def test_add_py_file_mid_session_reaches_every_worker(spark, tmp_path):
             yield pd.DataFrame({"value": [importlib.import_module(mod).VALUE]})
 
     assert {r.value for r in _tasks(spark, load, "value string")} == {mod}
+
+
+def test_get_spark_session_ships_no_package_zip(spark, tmp_path, monkeypatch):
+    """A get_spark context's workers import the package from the source
+    tree (its executors' PYTHONPATH starts there), so a pandas UDF needs
+    no shipped zip and `ensure_shipped` leaves none in the temp dir."""
+    import tempfile
+
+    import event_store_spark
+    from event_store_spark import shipping
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(shipping, "_SHIPPED", set())
+    shipping.ensure_shipped(spark)
+
+    def where(batches):
+        import pandas as pd
+
+        import event_store_spark
+
+        for _ in batches:
+            yield pd.DataFrame({"file": [event_store_spark.__file__]})
+
+    tree = os.path.dirname(os.path.dirname(os.path.abspath(event_store_spark.__file__)))
+    files = {r.file for r in _tasks(spark, where, "file string")}
+    assert list(tmp_path.glob("event_store_spark_pyfiles_*.zip")) == []
+    assert files and all(
+        os.path.abspath(f).startswith(tree + os.sep) for f in files
+    ), files
