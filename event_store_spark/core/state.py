@@ -489,8 +489,8 @@ class ProgressStore(_AtomicJsonState):
     def last_ckpt_id(self, topic: str) -> str | None:
         """Checkpoint-lineage marker recorded with the last save: batch ids
         are only comparable within one streaming checkpoint's lifetime, so
-        the replicator stores WHICH checkpoint produced the bookkeeping and
-        switches to order-independent recovery when the lineage changes."""
+        the replicator stores WHICH checkpoint produced the bookkeeping; a
+        new lineage starts from its floor (`streaming.eos.floor`)."""
         v = self._read().get(topic)
         return v.get("ckpt_id") if isinstance(v, dict) else None
 

@@ -15,34 +15,43 @@ Re-expresses the reference's Postgres→Kafka replicator
 Exactness (X2). Appends are atomic to every reader: a topic's rows become
 visible through one entry of its commit log (`core.store`), and the file
 source picks files up in log order, so micro-batches carry whole appends
-in commit order. Exactly-once across crashes rests on the checkpoint
-lineage:
+in commit order. Exactly-once across crashes rests on one rule per
+checkpoint lineage, `streaming.eos.floor`:
 
-- **Live lineage** (the streaming checkpoint that produced the stored
-  bookkeeping is still in use): the file source's seen-files map already
-  delivers every file exactly once, batches replayed after a crash are
-  skipped by `streaming.eos.applied` (a stored batch id counts only in
-  the lineage that stored it), and the files sink overwrites a directory
-  keyed by the batch's own high water — no row filter at all. The
-  progress cursor is monotone (`max` over batch high waters) bookkeeping
-  for lag/resume, not a correctness gate.
-- **Recovery lineage** (fresh or lost checkpoint; batch ids restart and the
-  source relists every file): the files sink anti-joins each batch against
-  the target's existing (lsn, id) pairs (scan bounded by the batch's lsn
-  range, pushed to footer stats) — already-replicated rows and orphan
-  directories from a crashed run are ABSORBED, never pruned, so a crash
-  between a directory write and the progress save cannot lose or duplicate
-  regardless of how the rerun re-chunks batches. The kafka sink filters by
-  the cursor FROZEN at query start (at-least-once re-production past it;
-  the consumer's keyset dedupe drops what the broker already has).
+- **The floor.** A lineage's start records the cursor at or below which
+  rows may already be in the target: the larger of the progress cursor
+  and the target's own high water (the highest ``cursor=`` directory
+  name, read as the end of its lsn, or unbounded if it does not parse;
+  for the kafka sink, the broker's highest (lsn, id) when the topic can
+  be read). A brand-new pipeline gets floor zero. Once progress is saved
+  under the lineage, every restart on the checkpoint reuses the recorded
+  floor, so a crash inside a recovery cannot turn it into a live run.
+- **One path per batch.** A batch the progress store already holds for
+  this lineage is skipped (`streaming.eos.applied`). One aggregate gives
+  the batch's lowest and highest (lsn, id) and its count. Rows above the
+  floor overwrite a directory keyed by their own high water: a crash
+  before the progress save redelivers the same rows, which overwrite the
+  same directory, and the name is above every directory an earlier
+  lineage left. Rows at or below the floor are anti-joined against the
+  target's (lsn, id) pairs (scan bounded by their lsn range, pushed to
+  footer stats) and only the missing ones are written, appended to the
+  directory named by their high water, so orphans of a crashed run are
+  absorbed, never replaced, however the rerun re-chunks the backlog.
+  The kafka sink splits the same way: rows above the floor are produced;
+  rows at or below it are anti-joined against the broker's headers, or,
+  when the topic cannot be read, produced past the progress cursor
+  (at-least-once; the consumer's keyset dedupe drops what the broker
+  already has).
+- The progress cursor is monotone (`max` over batch high waters)
+  bookkeeping for lag and for the next lineage's floor.
 
 Scale: replication never globally sorts — micro-batches arrive in append
 (lsn) order from the file source (the commit log orders file pickup) and
 `sortWithinPartitions` restores the within-batch (lsn, id) order cheaply.
 Downstream consumers that need total order replay via `(lsn, id)` exactly
-like the reference's consumers. The live path does no per-batch filtering
-or target reads; the recovery anti-join is the only extra cost and only
-while a lost checkpoint is being re-established.
+like the reference's consumers. A batch above the floor does no target
+read; the anti-join is the only extra cost and only while a lost
+checkpoint's backlog is relisted.
 """
 
 from __future__ import annotations
@@ -57,8 +66,34 @@ from event_store_spark.core.cursor import Cursor, keyset_after
 from event_store_spark.core.envelope import canonical_metadata_entries
 from event_store_spark.core.state import ProgressStore
 from event_store_spark.core.store import EventStore
-from event_store_spark.streaming.eos import applied
+from event_store_spark.streaming import eos
 from event_store_spark.streaming.lock import LockManager
+
+#: the floor a target directory name that does not parse gives: above
+#: every row, so each row is checked against the target
+UNBOUNDED = Cursor(2**63 - 1, 2**63 - 1)
+
+
+def _dir_cursor(name: str) -> Cursor:
+    """The cursor a target directory ``cursor=<lsn>_<id>`` bounds: the
+    end of its lsn, since a crashed run's directory name is no bound on
+    the ids of its rows."""
+    try:
+        lsn, id_ = name[len("cursor="):].split("_")
+        int(id_)
+        return Cursor(int(lsn), UNBOUNDED.id)
+    except ValueError:
+        return UNBOUNDED
+
+
+def _absent(records: DataFrame, existing: DataFrame, lo: int, hi: int) -> DataFrame:
+    """The rows of ``records`` (lsn ``lo``..``hi``) whose (lsn, id) is not
+    in the ``existing`` (lsn, id) frame, which is read only in that lsn
+    range: order-independent, so it holds however a rerun re-chunks the
+    relisted backlog. On parquet the range pushes down to footer stats,
+    which the cursor-named directories keep tight."""
+    existing = existing.where(F.col("lsn").between(lo, hi))
+    return records.join(existing, ["lsn", "id"], "left_anti")
 
 
 def to_kafka_records(df: DataFrame) -> DataFrame:
@@ -161,16 +196,17 @@ class Replicator:
         self.kafka_record_sink = kafka_record_sink
         #: recovery read-back (closes the kafka duplicate window): a
         #: callable `(topic) -> DataFrame` returning the target topic's
-        #: existing records in the `format("kafka")` SOURCE schema. When
-        #: set, recovery-mode batches anti-join against the (lsn, id)
-        #: pairs already ON the broker — the same absorption the files
-        #: sink does against its target — so even foreign read_committed
-        #: consumers see every event exactly once across checkpoint loss
-        #: (and a crash MID-produce converges: only the missing rows
-        #: re-produce). When unset and bootstrap_servers names a real
-        #: broker, the default reader is a batch `format("kafka")` read of
-        #: the topic; frozen-cursor at-least-once remains the fallback
-        #: when the target topic cannot be read at all.
+        #: existing records in the `format("kafka")` SOURCE schema. A new
+        #: lineage's floor covers the broker's highest (lsn, id), and rows
+        #: at or below the floor anti-join against the (lsn, id) pairs
+        #: already ON the broker — the same absorption the files sink does
+        #: against its target — so even foreign read_committed consumers
+        #: see every event exactly once across checkpoint loss (and a
+        #: crash MID-produce converges: only the missing rows re-produce).
+        #: When unset and bootstrap_servers names a real broker, the
+        #: default reader is a batch `format("kafka")` read of the topic;
+        #: producing past the progress cursor (at-least-once) remains the
+        #: fallback when the target topic cannot be read at all.
         self.kafka_record_reader = kafka_record_reader
 
     def target_path(self, topic: str) -> str:
@@ -186,10 +222,11 @@ class Replicator:
                 "another replicator instance holds the lock; refusing to "
                 "start a second writer (X4)"
             )
-        ckpt_id, recovery = self._adopt_lineage(topic)
-        # frozen at query start: the cursor the previous lineage reached,
-        # which the recovery filters measure the relisted backlog against
-        start_cursor = self.progress.last_cursor(topic) or Cursor.zero()
+        lineage, floor = eos.floor(
+            f"{self.checkpoint_root}/{topic}",
+            self.progress.last_ckpt_id(topic),
+            lambda: self._replicated_to(topic),
+        )
         reader = spark.readStream.schema(self.store.event_schema(topic))
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
@@ -205,87 +242,32 @@ class Replicator:
                 self.progress.last_ckpt_id(topic),
                 self.progress.last_batch_id(topic),
             )
-            if applied(held, ckpt_id, batch_id):
+            if eos.applied(held, lineage, batch_id):
                 return  # redelivered batch whose commit record already landed
-            saved_cursor = self.progress.last_cursor(topic) or Cursor.zero()
-            batch = df
-            if recovery and self.sink == "kafka":
-                # bulk-exclude what the broker already has; anything past
-                # the frozen cursor re-produces at-least-once (F1)
-                batch = df.where(keyset_after(start_cursor))
-            # cache so the high-water agg and the write evaluate the
+            done = self.progress.last_cursor(topic) or Cursor.zero()
+            # cache so the aggregate and the writes evaluate the
             # (maxFilesPerTrigger-bounded) batch once, not twice
-            staged = to_kafka_records(batch).sortWithinPartitions("lsn", "id").persist()
-            records = staged
+            staged = to_kafka_records(df).sortWithinPartitions("lsn", "id").persist()
             try:
-                if recovery and self.sink == "files":
-                    records = self._absorb_existing(topic, staged)
-                elif recovery and self.sink == "kafka":
-                    records = self._absorb_broker(topic, staged)
-                hw = records.agg(F.max(F.struct("lsn", "id"))).first()[0]
-                if records is staged:
-                    hw_all = hw
-                else:
-                    # absorbed rows are replicated too (they're in the
-                    # target) — the bookkeeping cursor must cover them or
-                    # the lag gauge never clears after a recovery
-                    hw_all = staged.agg(F.max(F.struct("lsn", "id"))).first()[0]
-                advance = (
-                    max(saved_cursor, Cursor(hw_all["lsn"], hw_all["id"]))
-                    if hw_all is not None
-                    else saved_cursor
-                )
-                if hw is None:
-                    # nothing new to write (redelivery of fully-replicated
-                    # data, or an empty trigger) — record the bookkeeping
-                    self.progress.save(
-                        topic, advance, batch_id=batch_id, ckpt_id=ckpt_id
-                    )
-                    return
-                new_cursor = Cursor(hw["lsn"], hw["id"])
-                if self.sink == "kafka":
-                    # Broker-native path (S2/S3): produce (key, value,
-                    # headers) records. The reference wraps events + the
-                    # progress record in ONE Kafka transaction
-                    # (`EventReplicatorWorker.java:184-208`); Spark's Kafka
-                    # sink is at-least-once, so exactly-once is restored on
-                    # the consumer side by the (lsn, id) header cursor —
-                    # redelivered records carry an already-seen cursor and
-                    # are dropped by Subscription's per-partition keyset
-                    # filter (`subscribe.Subscription._kafka_process_and_offset`,
-                    # F1) before any projection runs.
-                    from event_store_spark.streaming.kafka import (
-                        kafka_writer_options,
-                        records_to_kafka_sink,
-                    )
-
-                    out = records_to_kafka_sink(records)
-                    if self.kafka_record_sink is not None:
-                        self.kafka_record_sink(out)
-                    else:
-                        (
-                            out.write.format("kafka")
-                            .options(
-                                **kafka_writer_options(self.bootstrap_servers, topic)
-                            )
-                            .save()
+                lo, hi, n = staged.agg(
+                    F.min(F.struct("lsn", "id")),
+                    F.max(F.struct("lsn", "id")),
+                    F.count(F.lit(1)),
+                ).first()
+                if n:
+                    top = Cursor(hi["lsn"], hi["id"])
+                    if Cursor(lo["lsn"], lo["id"]) <= floor:
+                        self._write_missing(
+                            topic,
+                            staged.where(~keyset_after(floor)),
+                            lo["lsn"],
+                            min(top, floor).lsn,
+                            done,
                         )
-                else:
-                    # The directory is keyed by the batch's OWN high water —
-                    # a crash between this write and the progress save
-                    # redelivers the same row range, which OVERWRITES the
-                    # same directory (the Spark-file analog of the
-                    # reference's Kafka transaction). An orphan left by a
-                    # run whose checkpoint was then lost is ABSORBED by the
-                    # recovery anti-join, never duplicated: a surviving
-                    # batch can't share an orphan's name, because sharing
-                    # the max row means the anti-join already removed it.
-                    records.write.mode("overwrite").parquet(
-                        f"{self.target_path(topic)}/cursor={new_cursor.serialize().replace(':', '_')}"
-                    )
-                self.progress.save(
-                    topic, advance, batch_id=batch_id, ckpt_id=ckpt_id
-                )
+                    if top > floor:
+                        self._write_new(topic, staged.where(keyset_after(floor)), top)
+                    done = max(done, top)
+                self.progress.save(topic, done, batch_id=batch_id, ckpt_id=lineage)
             finally:
                 staged.unpersist()
 
@@ -297,111 +279,127 @@ class Replicator:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
-    def _adopt_lineage(self, topic: str) -> tuple[str, bool]:
-        """Identify the streaming checkpoint's lifetime and decide the run
-        mode. A marker INSIDE the checkpoint dir (so it dies with it) names
-        the lineage; progress records which lineage produced its bookkeeping.
-        Mismatch ⇒ batch ids are incomparable and the source will relist
-        every file ⇒ the run stays in recovery mode (anti-join absorption /
-        frozen-cursor filter) for its whole lifetime — flipping modes
-        mid-run would re-replicate the relisted backlog. A brand-new
-        pipeline (no progress, no target data) adopts the lineage
-        immediately and runs live."""
-        from event_store_spark.streaming.lineage import checkpoint_lineage_id
+    def _dir(self, topic: str, cursor: Cursor) -> str:
+        return f"{self.target_path(topic)}/cursor={cursor.serialize().replace(':', '_')}"
 
-        ckpt_id = checkpoint_lineage_id(f"{self.checkpoint_root}/{topic}")
-        recovery = self.progress.last_ckpt_id(topic) != ckpt_id
-        if (
-            recovery
-            and self.progress.last_cursor(topic) is None
-            and not self._target_has_data(topic)
-        ):
-            self.progress.save(topic, Cursor.zero(), batch_id=None, ckpt_id=ckpt_id)
-            recovery = False
-        return ckpt_id, recovery
+    def _replicated_to(self, topic: str) -> Cursor | None:
+        """Where an earlier lineage may have replicated ``topic`` to (None:
+        nowhere, a brand-new pipeline): the progress cursor, or past it
+        the target's own high water. For the files sink that is the
+        highest ``cursor=`` directory name, and a name that does not parse
+        bounds nothing; for the kafka sink, the broker's highest (lsn, id)
+        when the target topic can be read."""
+        done = self.progress.last_cursor(topic)
+        if self.sink == "kafka":
+            pairs = self._broker_pairs(topic) if done else None
+            if pairs is None:
+                return done
+            top = pairs.agg(F.max(F.struct("lsn", "id"))).first()[0]
+            return max(done, Cursor(top["lsn"], top["id"])) if top else done
+        base = self.target_path(topic)
+        names = os.listdir(base) if os.path.isdir(base) else []
+        marks = [_dir_cursor(n) for n in names if n.startswith("cursor=")]
+        return max([done] + marks if done else marks, default=None)
 
-    def _target_has_data(self, topic: str) -> bool:
-        target = self.target_path(topic)
-        return os.path.isdir(target) and any(EventStore._parquet_files(target))
+    def _write_new(self, topic: str, records: DataFrame, top: Cursor) -> None:
+        """Rows above the floor, whose high water is ``top``."""
+        if self.sink == "kafka":
+            self._produce(topic, records)
+        else:
+            # The directory is keyed by the rows' OWN high water — a crash
+            # between this write and the progress save redelivers the same
+            # row range, which OVERWRITES the same directory (the
+            # Spark-file analog of the reference's Kafka transaction). Its
+            # name is above the floor, which is at or above every name an
+            # earlier lineage left, so it never replaces their rows.
+            records.write.mode("overwrite").parquet(self._dir(topic, top))
 
-    def _absorb_existing(self, topic: str, records: DataFrame) -> DataFrame:
-        """Recovery-mode exactness for the files sink: drop batch rows whose
-        (lsn, id) already exists in the target — order-independent, so it
-        holds however the rerun re-chunks the relisted backlog, and it absorbs orphan directories from crashed runs as committed data.
-        The target scan is bounded by the batch's lsn range (pushed to
-        parquet footer stats, which the cursor-range-named directories keep
-        tight), and reads only the two join columns."""
-        if not self._target_has_data(topic):
-            return records
-        bounds = records.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-        ).first()
-        if bounds.lo is None:
-            return records
-        existing = (
-            self.store.spark.read.parquet(self.target_path(topic))
-            .where((F.col("lsn") >= bounds.lo) & (F.col("lsn") <= bounds.hi))
-            .select("lsn", "id")
-        )
-        return records.join(existing, ["lsn", "id"], "left_anti")
-
-    def _broker_records(self, topic: str):
-        """The target topic's existing records (kafka SOURCE schema), or
-        None when the topic cannot be read — injected reader first, then
-        a batch `format("kafka")` read of the real broker."""
-        if self.kafka_record_reader is not None:
-            return self.kafka_record_reader(topic)
-        try:
-            src = (
-                self.store.spark.read.format("kafka")
-                .option("kafka.bootstrap.servers", self.bootstrap_servers)
-                .option("subscribe", topic)
-                .option("startingOffsets", "earliest")
-                .option("kafka.isolation.level", "read_committed")
-                .option("includeHeaders", "true")
-                .load()
+    def _write_missing(
+        self, topic: str, records: DataFrame, lo: int, hi: int, done: Cursor
+    ) -> None:
+        """Rows at or below the floor (lsn ``lo``..``hi``): write those
+        the target lacks, replacing nothing. The files sink appends them
+        to the directory named by their high water, which is at or below
+        the floor, so no live write of this lineage can overwrite it; the
+        kafka sink produces them. When the broker cannot be read, it
+        produces the rows past ``done``, the progress cursor, instead:
+        at-least-once, never a loss (MIGRATION.md)."""
+        if self.sink == "kafka":
+            pairs = self._broker_pairs(topic)
+            missing = (
+                records.where(keyset_after(done))
+                if pairs is None
+                else _absent(records, pairs, lo, hi)
             )
-            # `.load()` is lazy: with the connector present but the broker
-            # unreachable, failure would otherwise surface at action time
-            # inside `_absorb_broker`'s anti-join and FAIL the recovery
-            # batch instead of engaging the frozen-cursor fallback. Force a
-            # cheap eager probe here so unreadability is detected where the
-            # fallback can still catch it (ADVICE r7).
-            src.limit(1).isEmpty()
-            return src
-        except Exception:
-            # connector absent / broker unreadable: the frozen-cursor
-            # at-least-once fallback is SAFE (never loses), just wider
-            return None
+            if not missing.isEmpty():
+                self._produce(topic, missing)
+            return
+        target = self.target_path(topic)
+        os.makedirs(target, exist_ok=True)
+        existing = self.store.spark.read.schema("lsn long, id long").parquet(target)
+        missing = _absent(records, existing.select("lsn", "id"), lo, hi)
+        top = missing.agg(F.max(F.struct("lsn", "id"))).first()[0]
+        if top is not None:
+            missing.write.mode("append").parquet(
+                self._dir(topic, Cursor(top["lsn"], top["id"]))
+            )
 
-    def _absorb_broker(self, topic: str, records: DataFrame) -> DataFrame:
-        """Recovery-mode exactness for the KAFKA sink (the `_absorb_existing`
-        pattern pointed at the broker): drop batch rows whose (lsn, id) is
-        already on the target topic, read back from its (lsn, id) headers —
-        order-independent, so it absorbs a crash MID-produce too (only the
-        rows that never landed re-produce; a torn batch converges with zero
-        duplicates instead of re-producing whole). The read is bounded to
-        the batch's lsn range after decode (Kafka cannot push the predicate,
-        so recovery re-reads the topic — a recovery-only cost, same trade
-        the reference makes reading its progress topic start-to-end). Falls
-        back to the frozen-cursor filter (bounded at-least-once, see
-        MIGRATION.md) when the topic cannot be read."""
-        src = self._broker_records(topic)
-        if src is None:
-            return records
-        bounds = records.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-        ).first()
-        if bounds.lo is None:
-            return records
+    def _produce(self, topic: str, records: DataFrame) -> None:
+        """Broker-native path (S2/S3): produce (key, value, headers)
+        records. The reference wraps events + the progress record in ONE
+        Kafka transaction (`EventReplicatorWorker.java:184-208`); Spark's
+        Kafka sink is at-least-once, so exactly-once is restored on the
+        consumer side by the (lsn, id) header cursor — redelivered records
+        carry an already-seen cursor and are dropped by Subscription's
+        per-partition keyset filter
+        (`subscribe.Subscription._kafka_process_and_offset`, F1) before any
+        projection runs."""
+        from event_store_spark.streaming.kafka import (
+            kafka_writer_options,
+            records_to_kafka_sink,
+        )
+
+        out = records_to_kafka_sink(records)
+        if self.kafka_record_sink is not None:
+            self.kafka_record_sink(out)
+        else:
+            out.write.format("kafka").options(
+                **kafka_writer_options(self.bootstrap_servers, topic)
+            ).save()
+
+    def _broker_pairs(self, topic: str) -> DataFrame | None:
+        """The (lsn, id) pairs on the target topic, read back from its
+        headers, or None when the topic cannot be read — injected reader
+        first, then a batch `format("kafka")` read of the real broker.
+        Kafka cannot push a predicate down, so every read scans the topic;
+        only a lineage's start and its batches at or below the floor read
+        it."""
+        if self.kafka_record_reader is not None:
+            src = self.kafka_record_reader(topic)
+        else:
+            try:
+                src = (
+                    self.store.spark.read.format("kafka")
+                    .option("kafka.bootstrap.servers", self.bootstrap_servers)
+                    .option("subscribe", topic)
+                    .option("startingOffsets", "earliest")
+                    .option("kafka.isolation.level", "read_committed")
+                    .option("includeHeaders", "true")
+                    .load()
+                )
+                # `.load()` is lazy: with the connector present but the
+                # broker unreachable, failure would otherwise surface at
+                # action time and FAIL the batch instead of engaging the
+                # progress-cursor fallback, so probe eagerly here
+                src.limit(1).isEmpty()
+            except Exception:
+                # connector absent / broker unreadable: the progress-cursor
+                # at-least-once fallback is SAFE (never loses), just wider
+                return None
         hdr = lambda n: F.expr(  # noqa: E731
             f"decode(filter(headers, h -> h.key = '{n}')[0].value, 'UTF-8')"
         ).cast("long")
-        existing = (
-            src.select(hdr("lsn").alias("lsn"), hdr("id").alias("id"))
-            .where((F.col("lsn") >= bounds.lo) & (F.col("lsn") <= bounds.hi))
-        )
-        return records.join(existing, ["lsn", "id"], "left_anti")
+        return src.select(hdr("lsn").alias("lsn"), hdr("id").alias("id"))
 
     def replicate_all(self, available_now: bool = True) -> list[StreamingQuery]:
         """One query per discovered `_events` table (S7/F2 + per-topic workers)."""

@@ -14,9 +14,13 @@ Spark shape: the event table is a file-source streaming DataFrame (the
 files each commit-log entry adds = new events, in append order);
 processing runs in ``foreachBatch``, which skips a batch the offsets
 table already covers (`streaming.eos.applied`, on the offsets table's
-lineage and batch id); the offsets table records the high-water cursor +
-batch id in one atomic update. The source checkpoint gives
-redelivery-with-same-id; the skip gives idempotence.
+lineage and batch id) and drops the rows at or below the checkpoint's
+floor (`streaming.eos.floor`: where an earlier lineage got to); the
+offsets table records the high-water cursor + batch id in one atomic
+update. The source checkpoint gives redelivery-with-same-id; the skip
+gives idempotence; the floor makes a lost checkpoint's relisted backlog
+deliver only never-processed rows, on every restart alike.
+`run_records` needs neither: its rule is the live cursor filter.
 
 Scale: the file source scales to object-store event logs (listing cost is
 amortized via maxFilesPerTrigger — the analog of the reference's batched
@@ -37,7 +41,7 @@ from pyspark.sql.streaming import StreamingQuery
 from event_store_spark.core.cursor import Cursor, keyset_after
 from event_store_spark.core.state import OffsetsTable
 from event_store_spark.core.store import EventStore
-from event_store_spark.streaming.eos import applied
+from event_store_spark.streaming import eos
 
 
 class Subscription:
@@ -127,16 +131,17 @@ class Subscription:
         cursor and batch id in one atomic update. Redelivered batches are
         skipped before the processor runs.
 
-        Checkpoint loss is survived, not silently mis-skipped: batch-id
-        idempotence is gated on the checkpoint LINEAGE that produced the
-        stored id (`streaming.lineage`, same mechanism as
-        `Replicator._adopt_lineage`). When the lineage changes — checkpoint
-        dir deleted, ids restart at 0, the file source relists everything —
-        stored batch ids are ignored for the whole recovery run and the
-        relisted backlog is instead filtered by the (lsn, id) cursor FROZEN
-        at query start: already-processed rows are dropped, never-processed
-        ones flow through. Without the guard, the entire backlog could land
-        in a "stale" batch 0 and be skipped (ADVICE r3 — silent event loss).
+        Checkpoint loss is survived, not silently mis-skipped: batch ids
+        count only in the checkpoint LINEAGE that stored them
+        (`streaming.lineage`), and a new lineage starts from the floor
+        `eos.floor` records — the offsets table's cursor, or zero for a
+        brand-new subscription. Every batch drops its rows at or below the
+        floor before the processor runs, so the relisted backlog of a lost
+        checkpoint delivers only never-processed rows, and a restart
+        inside that recovery reuses the same floor. Without it the whole
+        backlog could land in a "stale" batch 0 and be skipped (ADVICE r3
+        — silent event loss). The processor is not called for a batch
+        with no rows left.
 
         Kafka source: Spark's Kafka producer is at-least-once, so individual
         records can also be duplicated inside otherwise-new batches. The
@@ -150,86 +155,52 @@ class Subscription:
         cursor is per PARTITION, not global: Kafka only orders within a
         partition, so a lagging partition's fresh rows may carry smaller
         (lsn, id) than an advanced partition's cursor — a single topic-level
-        cursor would wrongly drop them.
+        cursor would wrongly drop them. Those cursors hold in every
+        lineage, so the kafka branch needs no floor.
         """
 
-        ckpt_id, recovery = self._adopt_lineage(topic)
-        # frozen at query start (recovery only): the cursor the previous
-        # lineage reached, which filters the relisted backlog down to
-        # never-processed rows
-        start_cursor = self.offsets.get_cursor(topic) or Cursor.zero()
-
-        def batch_stats(df: DataFrame):
-            return df.agg(
-                F.max(F.struct("lsn", "id")).alias("hw"),
-                F.count(F.lit(1)).alias("n"),
-            ).first()
+        lineage, floor = eos.floor(
+            f"{self.checkpoint_root}/{topic}",
+            self.offsets.last_ckpt_id(topic),
+            lambda: self.offsets.get_cursor(topic),
+        )
 
         def process_and_offset(df: DataFrame, batch_id: int) -> None:
             held = (self.offsets.last_ckpt_id(topic),
                     self.offsets.last_batch_id(topic))
-            if applied(held, ckpt_id, batch_id):
+            if eos.applied(held, lineage, batch_id):
                 return  # redelivery after crash — effects already applied
             if self.source == "kafka":
-                self._kafka_process_and_offset(topic, processor, df, batch_id, ckpt_id)
+                self._kafka_process_and_offset(topic, processor, df, batch_id, lineage)
                 return
-            if recovery:
-                # relisted backlog: keep only rows past the frozen cursor,
-                # and invoke the processor ONLY if anything new remains —
-                # a recovery lineage restarts batch ids at 0, so calling a
-                # batch-id-keyed projection with already-applied data would
-                # collide with the old lineage's keys
-                df = df.where(keyset_after(start_cursor)).persist()
-                try:
-                    stats = batch_stats(df)
-                    if stats.n:
-                        processor(df, batch_id)
-                finally:
-                    df.unpersist()
-            else:
-                # persist: the processor's action and the stats aggregate
-                # both consume the batch — without it the source files are
-                # scanned twice per trigger (the recovery/kafka branches
-                # already persist for the same reason)
-                df = df.persist()
-                try:
+            # persist: the aggregate and the processor both consume the
+            # batch — without it the source files are scanned twice
+            df = df.where(keyset_after(floor)).persist()
+            try:
+                hw, n = df.agg(
+                    F.max(F.struct("lsn", "id")), F.count(F.lit(1))
+                ).first()
+                if n:
+                    # never with no rows: a batch-id-keyed projection
+                    # must not see a new lineage's id for applied data
                     processor(df, batch_id)
-                    stats = batch_stats(df)
-                finally:
-                    df.unpersist()
-            prev_offset = self.offsets.get(topic)
-            if stats.n:
-                # the stored offset is a 0-based running consumed-row index
-                # (Kafka-offset semantics): last consumed = prev + batch rows,
-                # making the lag gauge pure arithmetic (A2)
-                cursor = Cursor(stats.hw["lsn"], stats.hw["id"])
-                self.offsets.upsert(
-                    topic,
-                    prev_offset + stats.n,
-                    batch_id=batch_id,
-                    cursor=cursor,
-                    ckpt_id=ckpt_id,
-                )
-            else:
-                # empty redelivery: record the batch id but PRESERVE the
-                # consumed position (overwriting with -1 would reset the
-                # gauge and drop the resume cursor)
-                self.offsets.upsert(
-                    topic,
-                    prev_offset,
-                    batch_id=batch_id,
-                    cursor=self.offsets.get_cursor(topic),
-                    ckpt_id=ckpt_id,
-                )
+            finally:
+                df.unpersist()
+            # the stored offset is a 0-based running consumed-row index
+            # (Kafka-offset semantics), making the lag gauge pure
+            # arithmetic (A2); a batch with no rows keeps the cursor
+            cursor = Cursor(hw["lsn"], hw["id"]) if n else self.offsets.get_cursor(topic)
+            self.offsets.upsert(
+                topic,
+                self.offsets.get(topic) + n,
+                batch_id=batch_id,
+                cursor=cursor,
+                ckpt_id=lineage,
+            )
 
-        writer = (
-            self.stream(topic)
-            .writeStream.foreachBatch(process_and_offset)
-            .option("checkpointLocation", f"{self.checkpoint_root}/{topic}")
+        return self._start(
+            topic, process_and_offset, f"{self.checkpoint_root}/{topic}", available_now
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def run_records(
         self,
@@ -272,10 +243,6 @@ class Subscription:
                 "run_records requires the files source: per-record total "
                 "order is the parquet event log's (lsn, id) contract"
             )
-        from event_store_spark.streaming.lineage import checkpoint_lineage_id
-
-        ckpt = f"{self.checkpoint_root}/{topic}_records"
-        ckpt_id = checkpoint_lineage_id(ckpt)
 
         def process(df: DataFrame, batch_id: int) -> None:
             cursor = self.offsets.get_cursor(topic) or Cursor.zero()
@@ -290,39 +257,28 @@ class Subscription:
                     prev + n,
                     batch_id=batch_id,
                     cursor=Cursor(row["lsn"], row["id"]),
-                    ckpt_id=ckpt_id,
                 )
 
+        return self._start(
+            topic, process, f"{self.checkpoint_root}/{topic}_records", available_now
+        )
+
+    def _start(
+        self,
+        topic: str,
+        process: Callable[[DataFrame, int], None],
+        checkpoint: str,
+        available_now: bool,
+    ) -> StreamingQuery:
+        """Start ``process`` over the topic's stream on ``checkpoint``."""
         writer = (
             self.stream(topic)
             .writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", checkpoint)
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.start()
-
-    def _adopt_lineage(self, topic: str) -> tuple[str, bool]:
-        """Identify the streaming checkpoint's lifetime and decide the run
-        mode (mirror of `Replicator._adopt_lineage`): lineage mismatch ⇒
-        batch ids are incomparable and the source relists every file ⇒ the
-        run stays in recovery mode (frozen-cursor keyset filter) for its
-        whole lifetime. A brand-new subscription (no bookkeeping at all)
-        adopts the lineage immediately and runs live."""
-        from event_store_spark.streaming.lineage import checkpoint_lineage_id
-
-        ckpt_id = checkpoint_lineage_id(f"{self.checkpoint_root}/{topic}")
-        recovery = self.offsets.last_ckpt_id(topic) != ckpt_id
-        if (
-            recovery
-            and self.offsets.last_batch_id(topic) is None
-            and self.offsets.get_cursor(topic) is None
-        ):
-            self.offsets.upsert(
-                topic, self.offsets.get(topic), batch_id=None, ckpt_id=ckpt_id
-            )
-            recovery = False
-        return ckpt_id, recovery
 
     def _kafka_process_and_offset(
         self,
@@ -330,7 +286,7 @@ class Subscription:
         processor: Callable[[DataFrame, int], None],
         df: DataFrame,
         batch_id: int,
-        ckpt_id: str | None = None,
+        lineage: str,
     ) -> None:
         """Kafka-branch batch step: keyset-dedupe, project, record offsets.
 
@@ -391,7 +347,7 @@ class Subscription:
                 prev = cursors.get(p) or self.offsets.get_cursor(topic, p)
                 hw = row["hw"]
                 cur = Cursor(hw["lsn"], hw["id"]) if hw is not None else prev
-                rows.append((p, row["off"], batch_id, cur, ckpt_id))
+                rows.append((p, row["off"], batch_id, cur, lineage))
             if 0 not in seen:
                 # no partition-0 rows this batch: preserve its position but
                 # still record the batch id for redelivery skipping
@@ -401,7 +357,7 @@ class Subscription:
                         self.offsets.get(topic, 0),
                         batch_id,
                         self.offsets.get_cursor(topic, 0),
-                        ckpt_id,
+                        lineage,
                     )
                 )
             # all partitions + the batch id land in one atomic replace:

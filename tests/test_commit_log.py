@@ -1,5 +1,5 @@
 """The topic commit log (``<topic>/_spark_metadata``): one visibility point
-per append and per compaction.
+per append and per compaction; and the consumers of the log.
 
 - a compaction keeps an append that commits while it rewrites;
 - a crash at any side effect of an append or a compaction leaves each lsn
@@ -7,7 +7,10 @@ per append and per compaction.
 - the log is Spark's own file-sink format: batch reads, day-range reads
   and file streams all see exactly the logged files, in commit order;
 - a topic written before the log existed keeps its rows and its stream
-  checkpoints across its first new append.
+  checkpoints across its first new append;
+- a crash at any side effect of the Replicator or the Subscription, then
+  a restart on the same checkpoint or on a lost one, replicates and
+  delivers every event exactly once.
 """
 
 from __future__ import annotations
@@ -15,13 +18,15 @@ from __future__ import annotations
 import datetime
 import os
 import shutil
+import zlib
 
 import pytest
 from pyspark.sql import DataFrameWriter
 
 from event_store_spark.core import EventStore
 from event_store_spark.core import store as store_module
-from event_store_spark.core.state import TicketStore
+from event_store_spark.core.state import OffsetsTable, ProgressStore, TicketStore
+from event_store_spark.streaming import Replicator, Subscription, eos
 
 TS = datetime.datetime(2025, 1, 4, 21, 13, 41, 442000)
 TOPIC = "log_events"
@@ -80,40 +85,44 @@ class _Crash(Exception):
     pass
 
 
+class _Faults:
+    """Counts side effects while armed and raises at the armed one."""
+
+    armed = None
+    seen = 0
+
+    def arm(self, k):
+        self.armed, self.seen = k, 0
+
+    def disarm(self):
+        """Disarm; True if the armed side effect was reached."""
+        fired = self.armed is not None and self.seen >= self.armed
+        self.armed = None
+        return fired
+
+    def hit(self):
+        if self.armed is not None:
+            self.seen += 1
+            if self.seen == self.armed:
+                raise _Crash(f"injected at side effect {self.seen}")
+
+    def counted(self, fn, applies=lambda *a, **k: True):
+        """``fn``, counting a side effect before each call ``applies`` to."""
+
+        def wrapped(*args, **kwargs):
+            if applies(*args, **kwargs):
+                self.hit()
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+
 @pytest.fixture
 def faults(monkeypatch):
     """Counts the store's side effects — the staging (parquet) write, each
     file move out of staging, each log-entry ``atomic_write`` and each
     ``TicketStore.save`` — and raises at the armed one."""
-
-    class Faults:
-        armed = None
-        seen = 0
-
-        def arm(self, k):
-            self.armed, self.seen = k, 0
-
-        def disarm(self):
-            """Disarm; True if the armed side effect was reached."""
-            fired = self.armed is not None and self.seen >= self.armed
-            self.armed = None
-            return fired
-
-        def hit(self):
-            if self.armed is not None:
-                self.seen += 1
-                if self.seen == self.armed:
-                    raise _Crash(f"injected at side effect {self.seen}")
-
-    f = Faults()
-
-    def counted(fn, applies=lambda *a, **k: True):
-        def wrapped(*args, **kwargs):
-            if applies(*args, **kwargs):
-                f.hit()
-            return fn(*args, **kwargs)
-
-        return wrapped
+    f = _Faults()
 
     def writes_staging(_writer, path, *args, **kwargs):
         return "_staging" in path
@@ -122,11 +131,11 @@ def faults(monkeypatch):
         return "_staging" in str(src)
 
     monkeypatch.setattr(
-        DataFrameWriter, "parquet", counted(DataFrameWriter.parquet, writes_staging)
+        DataFrameWriter, "parquet", f.counted(DataFrameWriter.parquet, writes_staging)
     )
-    monkeypatch.setattr(os, "rename", counted(os.rename, moves_out_of_staging))
-    monkeypatch.setattr(TicketStore, "save", counted(TicketStore.save))
-    monkeypatch.setattr(store_module, "atomic_write", counted(store_module.atomic_write))
+    monkeypatch.setattr(os, "rename", f.counted(os.rename, moves_out_of_staging))
+    monkeypatch.setattr(TicketStore, "save", f.counted(TicketStore.save))
+    monkeypatch.setattr(store_module, "atomic_write", f.counted(store_module.atomic_write))
     return f
 
 
@@ -296,3 +305,135 @@ def test_topic_without_log_adopts_its_files(spark, tmp_path):
     new = _stream_batches(spark, store, TOPIC, checkpoint)
     delivered = [pair for batch in new for pair in batch]
     assert delivered == [(lsn, i) for lsn, i, _ in after[12:]]
+
+
+# ------------------------------------------------------ consumer crash sweep
+
+
+class _Projection:
+    """A processor whose effect commits with its batch's offsets, as the
+    reference's projection and offset share one DB transaction: a batch
+    is staged, and the offsets upsert that records it moves its per-lsn
+    (count, CRC) into ``by_lsn``. A crash drops what is staged."""
+
+    def __init__(self, faults):
+        self.faults = faults
+        self.staged: dict[int, list] = {}
+        self.by_lsn: dict[int, tuple[int, int]] = {}
+
+    def __call__(self, df, batch_id):
+        self.faults.hit()
+        self.staged[batch_id] = df.select("lsn", "payload").collect()
+
+    def commit(self, batch_id):
+        for r in self.staged.pop(batch_id, ()):
+            n, crc = self.by_lsn.get(r.lsn, (0, 0))
+            self.by_lsn[r.lsn] = (n + 1, crc + zlib.crc32(r.payload.encode()))
+
+
+@pytest.fixture
+def consumer_faults(monkeypatch):
+    """Counts the consumers' side effects — each floor record at a query's
+    start, the Replicator's target directory write and progress save, the
+    Subscription's processor (the `_Projection` counts its own call) and
+    offset upsert — and raises at the armed one. Returns the faults and
+    the projection."""
+    f = _Faults()
+    projection = _Projection(f)
+    upsert = OffsetsTable.upsert
+
+    def upsert_and_commit(self, *args, **kwargs):
+        f.hit()
+        upsert(self, *args, **kwargs)
+        projection.commit(kwargs["batch_id"])
+
+    def writes_target(_writer, path, *args, **kwargs):
+        return "cursor=" in path
+
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", f.counted(DataFrameWriter.parquet, writes_target)
+    )
+    monkeypatch.setattr(ProgressStore, "save", f.counted(ProgressStore.save))
+    monkeypatch.setattr(OffsetsTable, "upsert", upsert_and_commit)
+    monkeypatch.setattr(eos, "atomic_write", f.counted(eos.atomic_write))
+    return f, projection
+
+
+def _drained(start) -> bool:
+    """Start a query with ``start()`` and wait for it; False if an
+    injected crash stopped it."""
+    try:
+        start().awaitTermination(120)
+        return True
+    except Exception as e:  # the streaming wrapper of the injected crash
+        if "injected at side effect" not in str(e):
+            raise
+        return False
+
+
+@pytest.mark.parametrize("restart", ["same", "lost"])
+def test_consumer_crash_sweep(spark, tmp_path, consumer_faults, restart):
+    """Make the k-th side effect of a replicate-then-subscribe run over
+    three appends (one micro-batch each) raise, for every k until a run
+    completes; then restart both consumers, on the same checkpoints or on
+    lost ones, reading everything in one micro-batch, so a lost
+    checkpoint's batch straddles its floor. After every restart the
+    ingest invariants hold: the subscriber committed each lsn's count and
+    CRC once, the target holds every event once, neither consumer lags,
+    and replay returns the events sent."""
+    faults, projection = consumer_faults
+    store = EventStore(spark, str(tmp_path / "store"))
+    sent: dict[int, list[str]] = {}
+    for b in range(3):
+        df, payloads = _batch(spark, b, 4)
+        sent[store.append(TOPIC, df).lsn] = payloads
+    want = {
+        lsn: (len(p), sum(zlib.crc32(x.encode()) for x in p)) for lsn, p in sent.items()
+    }
+
+    def consumers(run, max_files):
+        return (
+            Replicator(
+                store, str(run / "target"), ProgressStore(str(run / "progress.json")),
+                str(run / "ck" / "rep"), max_files_per_trigger=max_files,
+            ),
+            Subscription(
+                store, OffsetsTable(str(run / "offsets.json")),
+                str(run / "ck" / "sub"), max_files_per_trigger=max_files,
+            ),
+        )
+
+    k = 0
+    while True:
+        k += 1
+        run = tmp_path / f"run{k}"
+        projection.by_lsn.clear()
+        rep, sub = consumers(run, 1)
+        faults.arm(k)
+        if _drained(lambda: rep.replicate(TOPIC)):
+            _drained(lambda: sub.run(TOPIC, projection))
+        fired = faults.disarm()
+        projection.staged.clear()
+        if restart == "lost":
+            shutil.rmtree(run / "ck")
+        rep, sub = consumers(run, None)
+        assert _drained(lambda: rep.replicate(TOPIC))
+        assert _drained(lambda: sub.run(TOPIC, projection))
+
+        where = f"crash at side effect {k}, restart on the {restart} checkpoint"
+        assert projection.by_lsn == want, where
+        target = [
+            (r.lsn, r.id, r.value.decode())
+            for r in spark.read.parquet(rep.target_path(TOPIC)).collect()
+        ]
+        assert len({(lsn, i) for lsn, i, _ in target}) == len(target), where
+        replicated: dict[int, list[str]] = {}
+        for lsn, _, payload in target:
+            replicated.setdefault(lsn, []).append(payload)
+        assert {lsn: sorted(p) for lsn, p in replicated.items()} == sent, where
+        assert (rep.lag(TOPIC), sub.lag(TOPIC)) == (0, 0), where
+        assert _by_lsn(store) == sent, where
+        if not fired:
+            break
+    # two floors, then 3 batches x (directory, progress, processor, offsets)
+    assert k == 15

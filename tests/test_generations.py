@@ -854,11 +854,14 @@ def test_only_generations_publishes():
     assert not pointers, pointers
 
 
-#: the streams that recover an unseen checkpoint from their own cursor
+#: the writers of the streams that recover an unseen checkpoint from the
+#: event log's (lsn, id) order instead of a ledger
 _CURSOR_STREAMS = {
     "streaming/replicate.py": {"Replicator.replicate"},
-    "streaming/subscribe.py": {"Subscription.run", "Subscription.run_records"},
+    "streaming/subscribe.py": {"Subscription._start"},
 }
+#: the modules that may read a checkpoint's lineage marker
+_LINEAGE_READERS = {"streaming/eos.py", "streaming/lineage.py"}
 
 
 def _functions(tree):
@@ -911,6 +914,30 @@ def test_every_stream_runs_through_the_exactly_once_wrapper():
             if len(ok) < len(streams):
                 bad.append((rel, name))
     assert not bad, bad
+
+
+def test_only_eos_reads_the_checkpoint_lineage():
+    """No module outside `streaming/eos.py` and `streaming/lineage.py`
+    calls ``checkpoint_lineage_id``, and each cursor-stream module takes
+    its lineage and floor from `eos.floor`: a consumer cannot mint a
+    lineage and decide for itself which rows a new checkpoint may
+    already have applied."""
+    minted, floors = [], set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            if _callee(node) == "checkpoint_lineage_id" and rel not in _LINEAGE_READERS:
+                minted.append((rel, node.lineno))
+            if (
+                isinstance(node.func, ast.Attribute)
+                and node.func.attr == "floor"
+                and getattr(node.func.value, "id", None) == "eos"
+            ):
+                floors.add(rel)
+    assert not minted, minted
+    assert floors == set(_CURSOR_STREAMS), floors
 
 
 def _names(node) -> set[str]:

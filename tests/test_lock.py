@@ -18,7 +18,7 @@ import pytest
 
 from event_store_spark.core import EventStore
 from event_store_spark.core.state import Lease, ProgressStore
-from event_store_spark.streaming import LockManager, LockMonitor, Replicator
+from event_store_spark.streaming import LockManager, LockMonitor, Replicator, eos
 
 TS = datetime.datetime(2025, 1, 4, 12, 0, 0)
 
@@ -194,15 +194,15 @@ def test_lock_loss_fails_streaming_query(spark, tmp_path, monkeypatch):
         store, str(tmp_path / "t"), progress, str(tmp_path / "ck"), lock=mine
     )
 
-    orig_adopt = rep._adopt_lineage
+    real_floor = eos.floor
 
-    def adopt_then_takeover(topic):
-        out = orig_adopt(topic)
+    def floor_then_takeover(*args):
+        out = real_floor(*args)
         with open(mine.path, "w") as f:  # another instance took the lease
             f.write("thief")
         return out
 
-    monkeypatch.setattr(rep, "_adopt_lineage", adopt_then_takeover)
+    monkeypatch.setattr(eos, "floor", floor_then_takeover)
     q = rep.replicate("y_events")
     with pytest.raises(Exception, match="lock lost"):
         q.awaitTermination(120)

@@ -263,9 +263,10 @@ def test_subscription_checkpoint_loss_does_not_skip_new_events(spark, tmp_path, 
 
 
 def test_recovery_batch_unpersisted_when_processor_raises(spark, tmp_path, store):
-    """The recovery branch persists the keyset-filtered backlog; a
-    processor that raises must not leave it cached for the rest of the
-    session (each crash-restart would pin one more batch)."""
+    """A batch's rows above the floor are persisted for the processor; a
+    processor that raises during recovery must not leave them cached for
+    the rest of the session (each crash-restart would pin one more
+    batch)."""
     import shutil
 
     topic = _seed(spark, store, n=4, batches=2)
@@ -287,6 +288,51 @@ def test_recovery_batch_unpersisted_when_processor_raises(spark, tmp_path, store
         q.awaitTermination(120)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
     assert offsets.get(topic) == 3  # the failed batch committed nothing
+
+
+def test_subscription_restart_inside_recovery_keeps_the_floor(spark, tmp_path, store):
+    """Checkpoint loss, then a run that commits one batch and crashes on
+    the next, which straddles the old cursor. The restart on that
+    checkpoint reuses the floor the lineage recorded when it started, so
+    no event at or below the old cursor is delivered a second time."""
+    topic = "straddle_events"
+    for i in range(3):
+        store.append(
+            topic,
+            spark.createDataFrame(
+                [(f"k{i}", str(i), TS)], "key string, payload string, timestamp timestamp"
+            ),
+        )
+    offsets = OffsetsTable(str(tmp_path / "offsets.json"))
+    delivered: list[str] = []
+
+    def record(df, batch_id):
+        delivered.extend(r["payload"] for r in df.collect())
+
+    Subscription(store, offsets, str(tmp_path / "ck1")).run(topic, record).awaitTermination(120)
+    assert sorted(delivered) == ["0", "1", "2"]
+    store.append(
+        topic,
+        spark.createDataFrame([("k3", "3", TS)], "key string, payload string, timestamp timestamp"),
+    )
+
+    def crash_on_second_batch(df, batch_id):
+        if batch_id == 1:
+            raise RuntimeError("crash inside recovery")
+        record(df, batch_id)
+
+    ck2 = str(tmp_path / "ck2")
+    q = Subscription(store, offsets, ck2, max_files_per_trigger=2).run(
+        topic, crash_on_second_batch
+    )
+    with pytest.raises(Exception, match="crash inside recovery"):
+        q.awaitTermination(120)
+    assert offsets.last_batch_id(topic) == 0  # one recovery batch committed
+
+    sub = Subscription(store, offsets, ck2, max_files_per_trigger=2)
+    sub.run(topic, record).awaitTermination(120)
+    assert sorted(delivered) == ["0", "1", "2", "3"]
+    assert sub.lag(topic) == 0
 
 
 # ---------------------------------------------------------------- S-D
@@ -403,6 +449,77 @@ def test_replication_absorbs_uncommitted_cursor_dirs(spark, tmp_path, store):
     assert t.select("lsn", "id").distinct().count() == 5
     # bookkeeping caught up past the orphan so the lag gauge reads clean
     assert rep2.lag(topic) == 0
+
+
+def test_replication_keeps_rows_of_a_partial_orphan_after_checkpoint_loss(
+    spark, tmp_path, store
+):
+    """A crashed run left ``cursor=<hw>`` holding every row of its batch
+    but the maximum, then the checkpoint was lost. The floor the new
+    lineage records covers that directory's name, so the rerun anti-joins
+    the batch and adds the missing row beside the orphan's rows instead
+    of overwriting the directory with it: 7 of 7 rows, none twice."""
+    from event_store_spark.streaming.replicate import to_kafka_records
+
+    topic = _seed(spark, store, n=4, batches=2)
+    progress = ProgressStore(str(tmp_path / "progress.json"))
+    rep = Replicator(store, str(tmp_path / "kafka"), progress, str(tmp_path / "ck1"))
+    rep.replicate(topic).awaitTermination(120)
+    store.append(
+        topic,
+        spark.createDataFrame(
+            [(f"kN{i}", f"new{i}", TS) for i in range(3)],
+            "key string, payload string, timestamp timestamp",
+        ),
+    )
+    batch = to_kafka_records(store.read_events(topic, after=progress.last_cursor(topic)))
+    top = batch.agg(F.max(F.struct("lsn", "id"))).first()[0]
+    batch.where(F.col("id") != top["id"]).write.parquet(
+        f"{rep.target_path(topic)}/cursor={top['lsn']}_{top['id']}"
+    )
+
+    rep2 = Replicator(store, str(tmp_path / "kafka"), progress, str(tmp_path / "ck2"))
+    rep2.replicate(topic).awaitTermination(120)
+    t = spark.read.parquet(rep2.target_path(topic))
+    assert t.count() == 7
+    assert t.select("lsn", "id").distinct().count() == 7
+    assert rep2.lag(topic) == 0
+
+
+def test_replication_on_a_restored_checkpoint_keeps_rows_once(spark, tmp_path, store):
+    """A checkpoint restored from a backup after a newer lineage has
+    replicated past it: the progress store holds the newer lineage, so
+    the restored one starts from a floor above what that lineage wrote
+    and checks the files it relists against the target, instead of
+    rewriting their rows under other directory names."""
+    import shutil
+
+    topic = _seed(spark, store, n=4, batches=2)
+    progress = ProgressStore(str(tmp_path / "progress.json"))
+    target, ck1 = str(tmp_path / "kafka"), str(tmp_path / "ck1")
+    Replicator(store, target, progress, ck1).replicate(topic).awaitTermination(120)
+    shutil.copytree(ck1, str(tmp_path / "backup"))
+    for i in range(2):
+        store.append(
+            topic,
+            spark.createDataFrame(
+                [(f"kN{i}", f"new{i}", TS)], "key string, payload string, timestamp timestamp"
+            ),
+        )
+    # the newer lineage writes the two appends as two directories ...
+    Replicator(
+        store, target, progress, str(tmp_path / "ck2"), max_files_per_trigger=1
+    ).replicate(topic).awaitTermination(120)
+
+    # ... the restored one reads them as one batch
+    shutil.rmtree(ck1)
+    shutil.copytree(str(tmp_path / "backup"), ck1)
+    rep = Replicator(store, target, progress, ck1)
+    rep.replicate(topic).awaitTermination(120)
+    t = spark.read.parquet(rep.target_path(topic))
+    assert t.count() == 6
+    assert t.select("lsn", "id").distinct().count() == 6
+    assert rep.lag(topic) == 0
 
 
 def test_replication_survives_checkpoint_loss(spark, tmp_path, store):
