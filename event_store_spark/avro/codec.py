@@ -29,6 +29,7 @@ from __future__ import annotations
 import io
 import json
 import struct
+from collections.abc import Callable
 
 CONFLUENT_MAGIC = b"\x00"
 
@@ -238,3 +239,37 @@ class RecordCodec:
         if t == "string":
             return decode_string(buf)
         raise ValueError(f"unsupported type {t}")
+
+
+def projection(reader: RecordCodec, writer: RecordCodec) -> Callable[[dict], dict]:
+    """Avro schema resolution from ``writer`` to ``reader``, resolved once
+    per writer: the returned function maps one record the writer codec
+    decoded to the reader's fields, in reader order.
+
+    A reader field takes the writer field of its own name, else of its
+    first declared alias (a rename); a field the writer lacks takes its
+    Avro default (a ``bytes`` default is the JSON string's ISO-8859-1
+    bytes, per the spec), or null if it is nullable; writer fields the
+    reader lacks are dropped. A required reader field with none of these
+    raises, naming the field."""
+    present = {name for name, _ in writer.fields}
+    plan: list[tuple[str, str | None, object]] = []
+    for f in reader.schema["fields"]:
+        name, t = f["name"], f["type"]
+        src = next((k for k in (name, *f.get("aliases", ())) if k in present), None)
+        if src is not None or (isinstance(t, list) and "default" not in f):
+            plan.append((name, src, None))
+        elif "default" in f:
+            d = f["default"]
+            base = t[1] if isinstance(t, list) else t
+            plan.append((name, None, d.encode("latin-1")
+                         if base == "bytes" and isinstance(d, str) else d))
+        else:
+            raise ValueError(
+                f"reader field {name!r} is absent from writer schema "
+                f"{writer.name} and has no default"
+            )
+    return lambda decoded: {
+        name: default if src is None else decoded[src]
+        for name, src, default in plan
+    }

@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from event_store_spark.avro.codec import RecordCodec, frame, unframe
+from event_store_spark.avro.codec import RecordCodec, frame, projection, unframe
 from event_store_spark.shipping import ensure_shipped
 
 _AVRO_TO_SPARK = {
@@ -100,22 +100,10 @@ def from_confluent_avro(
     out_type = spark_type_of(reader)
     codecs = {sid: RecordCodec(s) for sid, s in (writer_schemas or {}).items()}
     codecs.setdefault(schema_id, reader)
-    reader_fields = list(reader.fields)
-    defaults: dict[str, object] = {}
-    #: reader field → the writer-record keys that feed it: its own name
-    #: first, then declared aliases in order (Avro schema-resolution rule:
-    #: a reader field whose name is absent from the writer record matches a
-    #: writer field named by one of its aliases — the field-RENAME path of
-    #: the registry evolution matrix)
-    lookup_names: dict[str, list[str]] = {}
-    for f in reader.schema["fields"]:
-        lookup_names[f["name"]] = [f["name"], *f.get("aliases", [])]
-        if "default" in f:
-            d = f["default"]
-            base = f["type"][1] if isinstance(f["type"], list) else f["type"]
-            if base == "bytes" and isinstance(d, str):
-                d = d.encode("latin-1")  # Avro JSON encodes bytes defaults ISO-8859-1
-            defaults[f["name"]] = d
+    names = [n for n, _ in reader.fields]
+    #: schema id → (writer codec, its projection to the reader), resolved
+    #: in each task on the first frame that carries the id
+    resolved: dict[int, tuple] = {}
 
     @F.pandas_udf(out_type)
     def de(col: pd.Series) -> pd.DataFrame:
@@ -127,33 +115,19 @@ def from_confluent_avro(
                 # null FIELDS, so the placeholder emitted here is replaced
                 # by a genuine NULL struct in the F.when wrapper below —
                 # downstream `decoded IS NULL` does identify shredded rows.
-                rows.append({n: None for n, _ in reader_fields})
+                rows.append(dict.fromkeys(names))
                 continue
             sid, body = unframe(bytes(b))
-            if writer_schemas is None and sid != schema_id:
-                raise ValueError(f"schema id mismatch: frame {sid} != {schema_id}")
-            codec = codecs.get(sid)
-            if codec is None:
-                raise ValueError(f"frame schema id {sid} not registered for subject")
-            decoded = codec.decode(body)
-            row = {}
-            for name, t in reader_fields:
-                src = next(
-                    (k for k in lookup_names[name] if k in decoded), None
-                )
-                if src is not None:
-                    row[name] = decoded[src]
-                elif name in defaults:
-                    row[name] = defaults[name]
-                elif isinstance(t, list):  # nullable without explicit default
-                    row[name] = None
-                else:
-                    raise ValueError(
-                        f"field {name!r} absent from writer schema {sid} "
-                        "and has no default"
-                    )
-            rows.append(row)
-        return pd.DataFrame(rows, columns=[n for n, _ in reader_fields])
+            if sid not in resolved:
+                if writer_schemas is None and sid != schema_id:
+                    raise ValueError(f"schema id mismatch: frame {sid} != {schema_id}")
+                codec = codecs.get(sid)
+                if codec is None:
+                    raise ValueError(f"frame schema id {sid} not registered for subject")
+                resolved[sid] = codec, projection(reader, codec)
+            codec, project = resolved[sid]
+            rows.append(project(codec.decode(body)))
+        return pd.DataFrame(rows, columns=names)
 
     # a true null struct for NULL payloads (crypto-shredded rows): Arrow
     # pandas UDFs cannot emit struct-level nulls themselves (only a struct

@@ -629,8 +629,13 @@ class EventStore:
         (lsn, id) ranges and the snapshot names them first, in range order,
         with modification times below those of every later file, so a NEW
         replication stream over the compacted topic still observes commit
-        order (an EXISTING stream's checkpoint refers to replaced files —
-        restart it after compacting, as with any file rewrite).
+        order. An EXISTING stream keeps its checkpoint: its file source
+        sees the rewritten files as new and delivers their rows again, and
+        `Replicator.replicate` and `Subscription.run` drop every row at or
+        below the cursor they committed, so each event still reaches them
+        exactly once. A batch a stream planned over the replaced files
+        but had not run when they were deleted finds them gone, so
+        compact between a consumer's drains.
         Day-partitioned topics trade that away by construction: dt= is
         event-time while (lsn, id) is commit-time, so their files cannot be
         both day-partitioned and cursor-range-disjoint — day layout is the

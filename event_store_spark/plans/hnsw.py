@@ -33,12 +33,12 @@ rows; nothing corpus-global exists anywhere.
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.generations import GenerationPair, SegmentLog
 from event_store_spark.plans.ivf import _ivf_index
 from event_store_spark.plans.registry import ORACLE, register
 from event_store_spark.tables import memo
@@ -458,76 +458,60 @@ def centroid_probe_cells(graph, query_v, nprobe: int, ef: int | None = None):
     return [c for _, c, _ in best[:nprobe]]
 
 
-# ------------------------------------------------- index persistence API
+# ------------------------------------------ persisted index (VectorIndex)
 
-def save_hnsw_index(
-    spark: SparkSession, sf_dir: str, path: str, spill: int = 1
-) -> None:
-    """Persist the per-cell HNSW index: `graph/` (parquet PARTITIONED BY
-    cell — vec_id, v, level, per-level adjacency; a cell probe lists
-    exactly `cell=c/`) + `hnsw.json` (the IVF centroids the cells were
-    trained by, plus the graph parameters). Retrains publish behind the
-    repo-wide `GenerationPair` pointer flip — readers never observe a
-    graph under foreign centroids."""
-    import json as _json
-
+def hnsw_train(spark: SparkSession, sf_dir: str, spill: int = 1):
+    """(rows, meta text) of a persisted per-cell HNSW index: the graph
+    table (cell, vec_id, v, level, per-level adjacency; written
+    partitioned by cell, so a cell probe lists exactly ``cell=c/``) and
+    the IVF centroids the cells were trained by plus the graph
+    parameters. ``spill`` > 1 links every vector into its ``spill``
+    nearest cells' graphs (`_hnsw_graph`)."""
     centroids, _ = _ivf_index(spark, sf_dir, "full")
-    graph = _hnsw_graph(spark, sf_dir, spill)
     meta = {
         "centroids": [[cell, list(c)] for cell, c in centroids],
         "m": HNSW_M,
         "ef": HNSW_EF,
         "spill": spill,
     }
-    GenerationPair(path, "graph", "hnsw.json").publish(
-        spark,
-        lambda out: graph.write.mode("overwrite").partitionBy("cell").parquet(out),
-        meta=_json.dumps(meta),
-    )
+    return _hnsw_graph(spark, sf_dir, spill), json.dumps(meta)
 
 
-def load_hnsw_index(spark: SparkSession, path: str):
-    """(centroids, graph DataFrame) — lazy, cell-pruned reads."""
-    import json as _json
-    import os as _os
-
-    gp = GenerationPair(path, "graph", "hnsw.json")
-    d, m = gp.live()
-    with open(_os.path.join(path, m)) as fh:
-        meta = _json.load(fh)
-    centroids = [
-        (int(cell), [float(x) for x in c]) for cell, c in meta["centroids"]
+def hnsw_parse(text: str) -> list[tuple[int, list[float]]]:
+    """The centroids an `hnsw_train` meta text holds."""
+    return [
+        (int(cell), [float(x) for x in c])
+        for cell, c in json.loads(text)["centroids"]
     ]
-    return centroids, spark.read.parquet(_os.path.join(path, d))
 
 
 def hnsw_search(
-    spark: SparkSession,
-    path: str,
+    rows: DataFrame,
+    centroids: list[tuple[int, list[float]]],
     query_v: list[float],
     k: int = 5,
     nprobe: int = 1,
-    additions_path: str | None = None,
     use_centroid_graph: bool | None = None,
+    *,
+    key: str,
 ) -> DataFrame:
-    """Top-k over the persisted graph: pick the nprobe entry cells (exact
+    """Top-k over a persisted graph: pick the nprobe entry cells (exact
     centroid scan below CENTROID_GRAPH_MIN cells; the centroid-layer
-    graph walk above it — the global HNSW entry, VERDICT r10 #8a), walk
-    those cells' graphs (one Arrow task each, partition-pruned reads),
-    and — the base+segment serving split shared with IVF — brute-force
-    the (small) live-additions segment's rows in the probed cells
-    exactly, since streamed vectors are not linked into the graph until
-    `compact`. Both paths emit sims in the engine's exact fold order, so
-    the union ranks consistently."""
+    graph walk above it, the global HNSW entry, memoized under ``key``,
+    the index's path), walk those cells' graphs (one Arrow task each,
+    partition-pruned reads), and brute-force exactly the probed cells'
+    rows with no graph level: streamed additions, which are not linked
+    into the graph until compaction (the base+segment serving split
+    shared with IVF). Both paths emit sims in the engine's exact fold
+    order, so the union ranks consistently."""
     import numpy as np
 
     from event_store_spark.functions.vectors import cosine
 
-    centroids, graph = load_hnsw_index(spark, path)
     if use_centroid_graph is None:
         use_centroid_graph = len(centroids) >= CENTROID_GRAPH_MIN
     if use_centroid_graph:
-        top = _centroid_graph(path, centroids)
+        top = _centroid_graph(key, centroids)
         cells = centroid_probe_cells(top, query_v, nprobe)
     else:
         q = np.asarray(query_v, dtype=np.float64)
@@ -536,61 +520,42 @@ def hnsw_search(
             for cell, c in centroids
         )
         cells = [cell for _, cell in ranked[:nprobe]]
-    probed = (
-        graph.where(F.col("cell").isin(cells))
+    probed = rows.where(F.col("cell").isin(cells))
+    walked = (
+        probed.where(F.col("level").isNotNull())
         .withColumn("qv", F.lit([float(x) for x in query_v]))
         .withColumn("q_id", F.lit(-1).cast("bigint"))
         .withColumn("k", F.lit(int(k)))
+        .groupBy("cell")
+        .applyInPandas(_search_cell, "vec_id bigint, sim double")
     )
-    found = probed.groupBy("cell").applyInPandas(
-        _search_cell, "vec_id bigint, sim double"
+    unlinked = probed.where(F.col("level").isNull()).select(
+        "vec_id",
+        cosine(F.col("v"), F.lit([float(x) for x in query_v])).alias("sim"),
     )
-    if additions_path is not None:
-        adds = (
-            SegmentLog(spark, additions_path)
-            .read(schema=graph.select("cell", "vec_id", "v").schema)
-            .where(F.col("cell").isin(cells))
-            .select(
-                "vec_id",
-                cosine(
-                    F.col("v"), F.lit([float(x) for x in query_v])
-                ).alias("sim"),
-            )
-        )
-        found = found.unionByName(adds)
-    # spilled bases (save_hnsw_index(spill>1)) hold a vector in several
+    # spilled graphs (hnsw_train(spill>1)) hold a vector in several
     # cells; a multi-cell probe then surfaces it once per cell with the
     # SAME exact-fold sim — collapse before ranking (the aggregation is
     # over at most nprobe*k + segment rows, never the corpus)
-    found = found.groupBy("vec_id").agg(F.max("sim").alias("sim"))
+    found = walked.unionByName(unlinked).groupBy("vec_id").agg(
+        F.max("sim").alias("sim")
+    )
     return found.orderBy(F.col("sim").desc(), "vec_id").limit(k)
 
 
-def compact_hnsw_index(
-    spark: SparkSession, path: str, additions_path: str
-) -> None:
-    """Fold a streamed additions log (an `ivf_assign_stream` target —
-    the layout is SHARED with IVF) into the graph: only the TOUCHED
-    cells re-link (their base vectors + the additions', newest batch
-    winning per vec_id, one `_build_cell_graph` task per cell);
-    untouched cells' graph rows carry over unchanged. Published behind
-    the same GenerationPair flip as `save_hnsw_index` — a reader
-    mid-scan on the previous generation finishes (deferred GC)."""
-    import os as _os
-
-    gp = GenerationPair(path, "graph", "hnsw.json")
-    d, m = gp.live()
-    base = spark.read.parquet(_os.path.join(path, d))
-    log = SegmentLog(spark, additions_path)
-    if not log.paths():
-        return
-    adds = log.newest("vec_id").select("cell", "vec_id", "v")
+def hnsw_relink(base: DataFrame, adds: DataFrame) -> DataFrame:
+    """The graph rows ``base`` with the additions ``adds`` (cell-assigned
+    vectors, newest batch per vec_id) linked in: only the TOUCHED cells
+    re-link (their base vectors plus the additions, one
+    `_build_cell_graph` task per cell); untouched cells' rows carry over
+    unchanged."""
+    adds = adds.select("cell", "vec_id", "v")
     src_cols = ["cell", "vec_id", "v"]
     if "rank" in base.columns:
-        # spilled base (save_hnsw_index(spill>1)): segment rows are
-        # rank-1 (primary-cell) assignments — the streamed maintainer is
-        # the shared unspilled IVF assigner; spilled re-links happen at
-        # the periodic retrain
+        # spilled base (hnsw_train(spill>1)): segment rows are rank-1
+        # (primary-cell) assignments — the streamed maintainer is the
+        # shared unspilled IVF assigner; spilled re-links happen at the
+        # periodic retrain
         src_cols.append("rank")
         adds = adds.withColumn("rank", F.lit(1).cast("int"))
     touched = [r["cell"] for r in adds.select("cell").distinct().collect()]
@@ -606,16 +571,7 @@ def compact_hnsw_index(
     relinked = relink_src.join(relinked, ["cell", "vec_id"]).select(
         *untouched.columns
     )
-    with open(_os.path.join(path, m)) as fh:
-        meta_body = fh.read()
-    gp.publish(
-        spark,
-        lambda out: untouched.unionByName(relinked)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out),
-        meta=meta_body,
-    )
+    return untouched.unionByName(relinked)
 
 
 @register("ann_hnsw_topk", oracle=ORACLE["ann_ivf_topk"])

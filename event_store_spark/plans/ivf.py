@@ -25,17 +25,12 @@ cells, exactly like `ann_multiprobe_topk`'s probe union."""
 
 from __future__ import annotations
 
-import os
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.vectors import as_double, cosine
-from event_store_spark.plans.generations import (
-    GenerationPair,
-    SegmentLog,
-    segment_wins,
-)
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table, memo
 
@@ -393,8 +388,8 @@ def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned-index rows BEFORE the cell probe, so the scored candidate
     set is (query's cell ∩ filter) — semantics the oracle mirrors
     exactly. The label rides a vec_id equi-join against the embeddings
-    table pruned to (vec_id, label); on a persisted index (`save_ivf_
-    index` stores cell-partitioned parquet) the same predicate pushes
+    table pruned to (vec_id, label); on a persisted index (an ivf
+    `VectorIndex` stores cell-partitioned parquet) the same predicate pushes
     into the parquet scan of the index itself and cell pruning +
     row-group filter stats compose. At 100 TB the documented trade-off
     applies: a highly selective filter empties cells, and a serving
@@ -577,59 +572,21 @@ def ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- index persistence API
+# ------------------------------------------ persisted index (VectorIndex)
 
-def save_ivf_index(
-    spark: SparkSession, sf_dir: str, path: str, variant: str = "full"
-) -> None:
-    """Persist the trained IVF index: the FAISS write_index analog.
-
-    Two artifacts, matching what the two halves of the index ARE:
-    ``centroids.json`` (k×d doubles — driver-side metadata, the only
-    state a searcher must load before planning) and ``cells/`` (the
-    assignment table written parquet PARTITIONED BY cell — the on-disk
-    inverted file, so a single-cell search lists exactly ``cell=c/``
-    and partition pruning does the rest). Live additions are a SEPARATE
-    segment log: `streaming.index.ivf_assign_stream` appends one
-    cell-partitioned segment per micro-batch to its own directory, and
-    `load_ivf_index(..., additions_path=...)` unions base + additions
-    lazily — the FAISS add-vs-retrain split as base+segment serving;
-    this function is the periodic retrain checkpoint."""
-    import json
-
+def ivf_train(spark: SparkSession, sf_dir: str, variant: str = "full"):
+    """(rows, meta text) of a persisted IVF index: the cell-assigned
+    corpus, written partitioned by cell (the on-disk inverted file, so a
+    single-cell search lists exactly ``cell=c/``), and the centroids it
+    was assigned by (k×d doubles, the only state a searcher loads before
+    planning). ``variant`` is `_ivf_index`'s build variant."""
     centroids, assigned = _ivf_index(spark, sf_dir, variant)
-    # A retrain over an existing index publishes both halves (assignments
-    # AND the centroids they were trained by) as one generation behind one
-    # pointer flip: an in-place overwrite would race readers and leave a
-    # crash window serving new assignments under old centroids.
-    _generations(path).publish(
-        spark,
-        lambda out: assigned.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out),
-        meta=json.dumps([[cell, c] for cell, c in centroids]),
-    )
+    return assigned, json.dumps([[cell, c] for cell, c in centroids])
 
 
-def load_ivf_index(
-    spark: SparkSession, path: str, additions_path: str | None = None
-):
-    """(centroids, assigned) from a saved index — no retraining, no
-    corpus scan; the assignment table stays lazy (cell-pruned reads).
-    ``additions_path`` unions the live rows of an additions log (an
-    `ivf_assign_stream` target) under the same schema — both sides are
-    cell-partitioned, so a cell probe prunes base and segments alike."""
-    import json
-    import os
-
-    cells_dir, centroids_file = _live_names(path)
-    with open(os.path.join(path, centroids_file)) as fh:
-        centroids = [(int(cell), [float(x) for x in c]) for cell, c in json.load(fh)]
-    assigned = spark.read.parquet(os.path.join(path, cells_dir))
-    if additions_path is not None:
-        adds = SegmentLog(spark, additions_path).read(schema=assigned.schema)
-        assigned = assigned.unionByName(adds.select(*assigned.columns))
-    return centroids, assigned
+def ivf_parse(text: str) -> list[tuple[int, list[float]]]:
+    """The centroids an `ivf_train` meta text holds (exact doubles)."""
+    return [(int(cell), [float(x) for x in c]) for cell, c in json.loads(text)]
 
 
 def ivf_search(
@@ -679,62 +636,4 @@ def ivf_search(
         .select("vec_id", F.round(sim, 4).alias("sim"))
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(k)
-    )
-
-
-def fold_additions(
-    spark: SparkSession, base_dir: str, additions_path: str
-) -> DataFrame:
-    """The base rows at ``base_dir`` with the additions log folded in,
-    the newest batch winning per vec_id — the shared fold of the ivf, pq
-    and sq8 compactions; an empty log folds nothing."""
-    base = spark.read.parquet(base_dir)
-    log = SegmentLog(spark, additions_path)
-    if not log.paths():
-        return base
-    return segment_wins(base, log.newest("vec_id"), "vec_id")
-
-
-def _generations(path: str) -> GenerationPair:
-    return GenerationPair(path, "cells", "centroids.json", pointer="CELLS")
-
-
-def _live_names(path: str) -> tuple[str, str]:
-    """The LIVE (cells dir, centroids file) pair. The `CELLS` pointer names
-    both (`cells-<n> centroids-<n>.json` after a retrain), so the pair
-    always flips atomically; a pointerless layout is the first build's
-    (cells, centroids.json)."""
-    return _generations(path).live()
-
-
-def _cells_dirname(path: str) -> str:
-    return _live_names(path)[0]
-
-
-def compact_ivf_index(
-    spark: SparkSession, path: str, additions_path: str
-) -> None:
-    """Fold a streamed additions log into the base index WITHOUT
-    retraining — the cheap half of index maintenance (Lucene-style
-    segment merge), distinct from `save_ivf_index`'s periodic retrain:
-    centroids are untouched, so every existing cell assignment stays
-    valid; the merge is one union + cell-partitioned rewrite.
-
-    Publication is a generation flip (`GenerationPair.publish`): a crash
-    at any point leaves either the old or the new generation fully live,
-    and the N-1 generation survives for in-flight readers. The additions
-    log is left in place — its stream owns its directory and checkpoint,
-    and re-folding the same rows on the next compaction is idempotent. A
-    vec_id added in several batches folds as its newest batch's row, and
-    one in BOTH base and additions (a re-assigned/updated vector) as the
-    addition, so a stale assignment can never be resurrected."""
-    merged = fold_additions(
-        spark, os.path.join(path, _cells_dirname(path)), additions_path
-    )
-    # compaction never retrains: the pointer keeps naming the SAME
-    # centroids file, only the cells generation advances
-    _generations(path).publish(
-        spark,
-        lambda out: merged.write.mode("overwrite").partitionBy("cell").parquet(out),
-        meta=None,
     )

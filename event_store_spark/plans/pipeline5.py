@@ -22,12 +22,13 @@ DuckDB-oracle-checked, no corpus-global single-partition stage.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.text import whitespace_tokens
 from event_store_spark.functions.vectors import as_double, cosine
-from event_store_spark.plans.generations import GenerationPair
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table
 
@@ -334,12 +335,12 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- SQ8 index persistence API
+# ---------------------------------- persisted SQ8 index (VectorIndex)
 
 def sq8_quantize(emb: DataFrame, mns: list[float], mxs: list[float]) -> DataFrame:
     """(vec_id, q: array<tinyint>) under the given per-dimension limits —
-    the ONE quantization expression shared by the batch save and the
-    streaming encode twin. SATURATING: components outside [mn, mx] clamp
+    the ONE quantization expression shared by `sq8_train` and the
+    streamed additions of `VectorIndex.maintain`. SATURATING: components outside [mn, mx] clamp
     to the code range ends (standard scalar-quantizer behavior; without
     the clamp an out-of-range streamed vector would wrap through the
     tinyint cast into a silently wrong code). For the training corpus the
@@ -365,15 +366,12 @@ def sq8_quantize(emb: DataFrame, mns: list[float], mxs: list[float]) -> DataFram
     )
 
 
-def save_sq8_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Persist the SQ8 index: limits.json (per-dimension (min, max) — the
-    whole codebook is 2×DIM doubles) and the quantized corpus as a flat
-    (vec_id, q: array<tinyint>) parquet table — the 4×-smaller artifact a
-    100 TB vector corpus ships instead of raw floats. Flat layout like
-    `pq.save_pq_index` (scoring is a scan, not a probe); limits written
-    last as the completeness marker."""
-    import json
-
+def sq8_train(spark: SparkSession, sf_dir: str):
+    """(rows, meta text) of a persisted SQ8 index: the quantized corpus
+    as a flat (vec_id, q: array<tinyint>) table, the 4×-smaller artifact
+    a 100 TB vector corpus ships instead of raw floats (flat like PQ:
+    scoring is a scan, not a probe), and its per-dimension limits, the
+    whole codebook at 2×DIM doubles: one posexplode + DIM-row aggregate."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
@@ -386,63 +384,13 @@ def save_sq8_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     )
     mns = [float(mn) for _, mn, _ in rows]
     mxs = [float(mx) for _, _, mx in rows]
-    quant = sq8_quantize(emb, mns, mxs)
-    # retrain over an existing index: both halves (codes AND the limits
-    # they were quantized by) publish as one generation behind one pointer
-    # flip — int8 codes reconstructed under the wrong limits are wrong
-    # values (the PQ/IVF pair discipline)
-    _sq8_generations(path).publish(
-        spark,
-        lambda out: quant.write.mode("overwrite").parquet(out),
-        meta=json.dumps({"mns": mns, "mxs": mxs}),
-    )
+    return sq8_quantize(emb, mns, mxs), json.dumps({"mns": mns, "mxs": mxs})
 
 
-def compact_sq8_index(spark: SparkSession, path: str, additions_path: str) -> None:
-    """Fold a `sq8_encode_stream` additions log into the base codes
-    table. Compaction is not RETRAIN: the streaming encoder quantizes
-    under the FROZEN published limits (saturating at the code ends), so
-    addition codes are exactly as valid under those limits as the base's,
-    and folding is the same flat union + generation flip as
-    `pq.compact_pq_index` (newest addition wins per vec_id; N-1
-    generation kept for in-flight readers). Moving the limits themselves
-    remains `save_sq8_index`'s retrain, which re-encodes everything."""
-    import os
-
-    from event_store_spark.plans.ivf import fold_additions
-
-    merged = fold_additions(
-        spark, os.path.join(path, _sq8_live_names(path)[0]), additions_path
-    )
-    # compaction never retrains: the pointer keeps naming the SAME
-    # limits file, only the codes generation advances
-    _sq8_generations(path).publish(
-        spark, lambda out: merged.write.mode("overwrite").parquet(out), meta=None
-    )
-
-
-def _sq8_generations(path: str) -> GenerationPair:
-    return GenerationPair(path, "codes", "limits.json", pointer="CODES")
-
-
-def _sq8_live_names(path: str) -> tuple[str, str]:
-    """Resolve the LIVE (codes dir, limits file) pair via the `CODES`
-    pointer; pointerless = the original (codes, limits.json) layout."""
-    return _sq8_generations(path).live()
-
-
-def load_sq8_index(spark: SparkSession, path: str):
-    """((mns, mxs), codes DataFrame) from a saved SQ8 index."""
-    import json
-    import os
-
-    codes_dir, limits_file = _sq8_live_names(path)
-    with open(os.path.join(path, limits_file)) as fh:
-        lims = json.load(fh)
-    return (
-        ([float(x) for x in lims["mns"]], [float(x) for x in lims["mxs"]]),
-        spark.read.parquet(os.path.join(path, codes_dir)),
-    )
+def sq8_parse(text: str) -> tuple[list[float], list[float]]:
+    """The (mns, mxs) limits an `sq8_train` meta text holds."""
+    lims = json.loads(text)
+    return [float(x) for x in lims["mns"]], [float(x) for x in lims["mxs"]]
 
 
 def sq8_search(

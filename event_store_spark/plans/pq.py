@@ -35,11 +35,12 @@ on top of SURVEY §2.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.functions.vectors import as_double
-from event_store_spark.plans.generations import GenerationPair
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table, memo
 
@@ -337,88 +338,34 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- index persistence API
+# ------------------------------------------ persisted index (VectorIndex)
 
-def save_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Persist the PQ index: codebook.json (M×K×DSUB doubles + the sparse
-    code-id lists — driver metadata) and the encoded corpus as a flat
-    (vec_id, codes) parquet table, the ~4-byte-per-vector artifact that
-    replaces the raw embeddings on the serving path. No partitioning:
+def pq_train(spark: SparkSession, sf_dir: str):
+    """(rows, meta text) of a persisted PQ index: the encoded corpus as a
+    flat (vec_id, codes) table, the ~4-byte-per-vector artifact that
+    replaces the raw embeddings on the serving path, and the codebook
+    (M×K×DSUB doubles with the sparse code-id lists). No partitioning:
     ADC serving is a FLAT SCAN by design (every row is scored against
     the per-query lookup table), so the layout optimizes for sequential
-    columnar reads, not pruning — the opposite trade from
-    `ivf.save_ivf_index`, matching how FAISS stores Flat-PQ vs IVF
-    lists. Codebook written last as the completeness marker."""
-    import json
-
+    columnar reads, not pruning, the opposite trade from IVF, matching
+    how FAISS stores Flat-PQ vs IVF lists."""
     book, encoded = _pq_index(spark, sf_dir)
-    # A retrain over an existing index publishes BOTH halves (codes AND the
-    # codebook that encoded them) as one generation behind one pointer
-    # flip — ADC codes are meaningless under the wrong codebook, so the two
-    # artifacts must never be observable out of step (the IVF pair
-    # discipline, where the stake is merely wrong pruning; here it is
-    # wrong distances).
-    _generations(path).publish(
-        spark,
-        lambda out: encoded.select("vec_id", "codes")
-        .write.mode("overwrite")
-        .parquet(out),
-        meta=json.dumps([[[cid, c] for cid, c in rows] for rows in book]),
-    )
+    meta = json.dumps([[[cid, c] for cid, c in rows] for rows in book])
+    return encoded.select("vec_id", "codes"), meta
 
 
-def _generations(path: str) -> GenerationPair:
-    return GenerationPair(path, "codes", "codebook.json", pointer="CODES")
+def pq_parse(text: str) -> list[list[tuple[int, list[float]]]]:
+    """The codebook a `pq_train` meta text holds (exact doubles)."""
+    return [
+        [(int(cid), [float(x) for x in c]) for cid, c in rows]
+        for rows in json.loads(text)
+    ]
 
 
-def _live_names(path: str) -> tuple[str, str]:
-    """The LIVE (codes dir, codebook file) pair: the `CODES` pointer names
-    both (generations `codes-<n> codebook-<n>.json`) so the pair flips
-    atomically; a pointerless layout is the original (codes,
-    codebook.json)."""
-    return _generations(path).live()
-
-
-def _codes_dirname(path: str) -> str:
-    return _live_names(path)[0]
-
-
-def load_pq_index(spark: SparkSession, path: str):
-    """(codebook, codes DataFrame) from a saved index — the serving-side
-    state: 1 KiB-scale codebook on the driver, lazy codes scan."""
-    import json
-    import os
-
-    codes_dir, codebook_file = _live_names(path)
-    with open(os.path.join(path, codebook_file)) as fh:
-        book = [
-            [(int(cid), [float(x) for x in c]) for cid, c in rows]
-            for rows in json.load(fh)
-        ]
-    return book, spark.read.parquet(os.path.join(path, codes_dir))
-
-
-def compact_pq_index(spark: SparkSession, path: str, additions_path: str) -> None:
-    """Fold a `pq_encode_stream` additions log into the base codes
-    table WITHOUT re-encoding — the codebook is untouched, so every code
-    stays valid; the fold is one union + flat rewrite. Same generation
-    flip and newest-wins fold (`ivf.fold_additions`) as
-    `ivf.compact_ivf_index`: the N-1 generation survives for in-flight
-    readers, re-folding the same log is idempotent (full rewrite, not
-    append), and a re-encoded vector's stale code can never be
-    resurrected."""
-    import os
-
-    from event_store_spark.plans.ivf import fold_additions
-
-    merged = fold_additions(
-        spark, os.path.join(path, _codes_dirname(path)), additions_path
-    )
-    # compaction never retrains: the pointer keeps naming the SAME
-    # codebook file, only the codes generation advances
-    _generations(path).publish(
-        spark, lambda out: merged.write.mode("overwrite").parquet(out), meta=None
-    )
+def pq_encode(emb: DataFrame, codebook: list) -> DataFrame:
+    """(vec_id, codes) of arriving embeddings under a trained codebook:
+    the broadcast argmin per subspace, map-side, no shuffle."""
+    return emb.select("vec_id", _encode_expr(F.col("v"), codebook).alias("codes"))
 
 
 def pq_search(

@@ -1,106 +1,142 @@
-"""One facade over the four ANN index persistence APIs (VERDICT r6 #7;
-the HNSW-per-cell kind joined in round 10 — VERDICT r9 #8).
+"""The one lifecycle of the persisted ANN indexes: IVF, PQ, SQ8 and
+per-cell HNSW.
 
-`save_ivf_index`/`save_pq_index`/`save_sq8_index` grew independently with
-parallel save/load/search triples; :class:`VectorIndex` unifies them
-behind one lifecycle —
+    idx = VectorIndex.build(spark, sf_dir, path, "ivf")  # train + publish
+    idx = VectorIndex.open(spark, path)                  # live generation
+    idx.search(query_vec, k=5)                           # native top-k plan
+    idx.maintain(stream, additions_path, checkpoint)     # streamed additions
+    idx.compact(additions_path)                          # fold them in
 
-    idx = VectorIndex.build(spark, sf_dir, path, kind="ivf")   # train+persist
-    idx = VectorIndex.open(spark, path)                        # kind from manifest
-    idx.search(query_vec, k=5)                                 # native top-k plan
-    idx.compact(additions_path)                                # ivf segment fold
-
-— without changing any on-disk layout: the facade delegates to the
-existing per-kind functions (whose layouts each match what the index IS:
-cell-partitioned inverted file for IVF, flat code tables for PQ/SQ8), so
-indexes saved by the old API open under the facade and vice versa. The
-only new artifact is `index.json` naming the kind; `open` falls back to
-sniffing the per-kind completeness markers for pre-facade indexes.
+An index is a `generations.GenerationPair`: a bulk parquet directory and
+the meta file that must never be observed out of step with it (centroids,
+codebook, limits or graph parameters), published by one pointer flip.
+Each publish also refreshes the root copy of the meta file, so that
+marker alone names the kind. A kind module keeps only what differs
+between kinds (`_Kind`): its training and meta text, its map-side
+encoder for arriving vectors, its search kernel, and for HNSW the
+touched-cell relink that replaces the newest-wins fold at compaction.
 
 Search result shape stays native to the kind ((vec_id, sim) cosine for
-IVF/SQ8, (vec_id, adist) squared-L2 ADC for PQ) — a facade that forced
-one score type would silently re-rank. Post-compaction search equality +
-recall are pinned by tests/test_ivf_persistence.py.
+IVF/SQ8/HNSW, (vec_id, adist) squared-L2 ADC for PQ): one forced score
+type would silently re-rank.
 """
 
 from __future__ import annotations
 
-import json
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
-KINDS = ("ivf", "pq", "sq8", "hnsw")
+from event_store_spark.plans import hnsw, ivf, pipeline5, pq
+from event_store_spark.plans.generations import (
+    GenerationPair,
+    SegmentLog,
+    segment_wins,
+)
 
-#: per-kind completeness marker written by the underlying save (also the
-#: sniff key for pre-facade indexes)
-_MARKERS = {
-    "ivf": "centroids.json",
-    "pq": "codebook.json",
-    "sq8": "limits.json",
-    "hnsw": "hnsw.json",
+
+class _Kind(NamedTuple):
+    #: the index's (bulk dir, meta file) names and pointer at a path
+    pair: Callable[[str], GenerationPair]
+    #: ``train(spark, sf_dir, **options)`` → (rows, meta text)
+    train: Callable
+    #: meta text → the trained state searches and encoders take
+    parse: Callable
+    #: ``encode(embeddings, trained)`` → additions rows
+    encode: Callable[[DataFrame, object], DataFrame]
+    #: ``search(rows, trained, query_v, k[, nprobe])`` → top-k rows
+    search: Callable[..., DataFrame]
+    #: rows are partitioned by cell: a search probes cells and serves an
+    #: additions log beside them; otherwise it scans the flat table
+    cells: bool
+    #: ``relink(base, additions)`` → rows, the compaction of a kind that
+    #: is not the newest-wins fold
+    relink: Callable[[DataFrame, DataFrame], DataFrame] | None = None
+
+
+#: the kinds, in the order `open` looks for their meta marker
+_KINDS = {
+    "ivf": _Kind(
+        lambda path: GenerationPair(path, "cells", "centroids.json", pointer="CELLS"),
+        ivf.ivf_train, ivf.ivf_parse, ivf._assign, ivf.ivf_search, True,
+    ),
+    "pq": _Kind(
+        lambda path: GenerationPair(path, "codes", "codebook.json", pointer="CODES"),
+        pq.pq_train, pq.pq_parse, pq.pq_encode, pq.pq_search, False,
+    ),
+    "sq8": _Kind(
+        lambda path: GenerationPair(path, "codes", "limits.json", pointer="CODES"),
+        pipeline5.sq8_train, pipeline5.sq8_parse,
+        lambda emb, limits: pipeline5.sq8_quantize(emb, *limits),
+        pipeline5.sq8_search, False,
+    ),
+    "hnsw": _Kind(
+        lambda path: GenerationPair(path, "graph", "hnsw.json"),
+        hnsw.hnsw_train, hnsw.hnsw_parse, ivf._assign, hnsw.hnsw_search, True,
+        hnsw.hnsw_relink,
+    ),
 }
+KINDS = tuple(_KINDS)
+
+
+def _spec(kind: str) -> _Kind:
+    if kind not in _KINDS:
+        raise ValueError(f"unknown index kind {kind!r}; one of {KINDS}")
+    return _KINDS[kind]
 
 
 class VectorIndex:
+    """The index of kind ``kind`` at ``path``, opened on its live
+    generation: ``live`` names its (bulk dir, meta file) and ``trained``
+    is the parsed meta (IVF/HNSW centroids, PQ codebook, SQ8 (mns, mxs))."""
+
     def __init__(self, spark: SparkSession, path: str, kind: str):
-        if kind not in KINDS:
-            raise ValueError(f"unknown index kind {kind!r}; one of {KINDS}")
+        self._kind = _spec(kind)
         self.spark = spark
         self.path = path
         self.kind = kind
-
-    # ------------------------------------------------------------ lifecycle
+        self._pair = self._kind.pair(path)
+        self.live = self._pair.live()
+        with open(os.path.join(path, self.live[1])) as fh:
+            self._meta = fh.read()
+        self.trained = self._kind.parse(self._meta)
 
     @classmethod
     def build(
-        cls,
-        spark: SparkSession,
-        sf_dir: str,
-        path: str,
-        kind: str,
-        *,
-        variant: str = "full",
+        cls, spark: SparkSession, sf_dir: str, path: str, kind: str, **options
     ) -> "VectorIndex":
-        """Train on the corpus at ``sf_dir`` and persist at ``path``.
-
-        ``variant`` is IVF-only (``"full"`` | ``"sampled"`` — the
-        100 TB build trains centroids on the md5 bottom-k sample)."""
-        idx = cls(spark, path, kind)
-        if kind == "ivf":
-            from event_store_spark.plans.ivf import save_ivf_index
-
-            save_ivf_index(spark, sf_dir, path, variant)
-        elif kind == "hnsw":
-            from event_store_spark.plans.hnsw import save_hnsw_index
-
-            save_hnsw_index(spark, sf_dir, path)
-        elif kind == "pq":
-            from event_store_spark.plans.pq import save_pq_index
-
-            save_pq_index(spark, sf_dir, path)
-        else:
-            from event_store_spark.plans.pipeline5 import save_sq8_index
-
-            save_sq8_index(spark, sf_dir, path)
-        with open(os.path.join(path, "index.json"), "w") as fh:
-            json.dump({"kind": kind}, fh)
-        return idx
+        """Train on the corpus at ``sf_dir`` and publish the result as the
+        live generation at ``path`` (a retrain when an index is there).
+        ``options`` go to the kind's training: ``variant`` for IVF
+        (``"full"`` | ``"sampled"`` | ``"adaptive"``), ``spill`` for HNSW."""
+        spec = _spec(kind)
+        rows, meta = spec.train(spark, sf_dir, **options)
+        _publish(spark, spec, path, rows, meta)
+        return cls(spark, path, kind)
 
     @classmethod
     def open(cls, spark: SparkSession, path: str) -> "VectorIndex":
-        """Open a persisted index; kind from the manifest, else sniffed
-        from the per-kind completeness marker (pre-facade layouts)."""
-        manifest = os.path.join(path, "index.json")
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                return cls(spark, path, json.load(fh)["kind"])
-        for kind, marker in _MARKERS.items():
-            if os.path.exists(os.path.join(path, marker)):
+        """Open the index at ``path``; its kind is the one whose root meta
+        file is there (an ``index.json`` left by older builds is ignored)."""
+        for kind, spec in _KINDS.items():
+            if os.path.exists(os.path.join(path, spec.pair(path).meta_name)):
                 return cls(spark, path, kind)
         raise FileNotFoundError(f"no vector index at {path}")
 
-    # ------------------------------------------------------------- serving
+    def rows(self, additions_path: str | None = None) -> DataFrame:
+        """The live generation's rows, lazily read; with ``additions_path``
+        also the committed rows of that additions log, whose columns the
+        base lacks (an HNSW graph's ``level``, ``nbrs``) read as null."""
+        base = self.spark.read.parquet(os.path.join(self.path, self.live[0]))
+        if additions_path is None:
+            return base
+        adds = SegmentLog(self.spark, additions_path).read(schema=base.schema)
+        return base.unionByName(
+            adds.select(*(c for c in base.columns if c in adds.columns)),
+            allowMissingColumns=True,
+        )
 
     def search(
         self,
@@ -110,112 +146,75 @@ class VectorIndex:
         nprobe: int = 1,
         additions_path: str | None = None,
     ) -> DataFrame:
-        """Top-k under the kind's native plan. ``nprobe``/
-        ``additions_path`` are cell-probing knobs (cell fan-out;
-        live-additions segment union — ivf and hnsw) and rejected for
-        the flat-scan kinds, where they cannot mean anything."""
-        if self.kind == "ivf":
-            from event_store_spark.plans.ivf import ivf_search, load_ivf_index
-
-            centroids, assigned = load_ivf_index(
-                self.spark, self.path, additions_path
-            )
-            return ivf_search(assigned, centroids, query_v, k=k, nprobe=nprobe)
-        if self.kind == "hnsw":
-            from event_store_spark.plans.hnsw import hnsw_search
-
-            return hnsw_search(
-                self.spark, self.path, query_v, k=k, nprobe=nprobe,
-                additions_path=additions_path,
-            )
-        if additions_path is not None or nprobe != 1:
-            raise ValueError(
-                f"{self.kind} is a flat-scan index: nprobe/additions_path "
-                "do not apply (cell-probing-kind knobs: ivf/hnsw)"
-            )
-        if self.kind == "pq":
-            from event_store_spark.plans.pq import load_pq_index, pq_search
-
-            book, codes = load_pq_index(self.spark, self.path)
-            return pq_search(codes, book, query_v, k=k)
-        from event_store_spark.plans.pipeline5 import load_sq8_index, sq8_search
-
-        limits, codes = load_sq8_index(self.spark, self.path)
-        return sq8_search(codes, limits, query_v, k=k)
-
-    # --------------------------------------------------------- maintenance
+        """Top-k under the kind's native plan. ``nprobe`` (cell fan-out)
+        and ``additions_path`` (serve an additions log beside the base)
+        are cell-probing knobs, rejected by the flat-scan kinds, where
+        they cannot mean anything."""
+        if not self._kind.cells:
+            if additions_path is not None or nprobe != 1:
+                raise ValueError(
+                    f"{self.kind} is a flat-scan index: nprobe/additions_path "
+                    "do not apply (cell-probing-kind knobs: ivf/hnsw)"
+                )
+            return self._kind.search(self.rows(), self.trained, query_v, k=k)
+        # HNSW memoizes its centroid-layer graph per index
+        key = {"key": self.path} if self.kind == "hnsw" else {}
+        return self._kind.search(
+            self.rows(additions_path), self.trained, query_v, k=k,
+            nprobe=nprobe, **key,
+        )
 
     def maintain(self, embeddings_stream: DataFrame, segment_path: str,
                  checkpoint: str):
-        """Start the kind's streaming maintenance pass over arriving
-        embeddings (columns ``vec_id``, ``v: array<double>``), writing a
-        serving segment at ``segment_path``; the trained state (IVF
-        centroids / PQ codebook / SQ8 limits) is loaded from THIS index,
-        so callers never hand-carry the codebook. ``segment_path`` is a
-        `generations.SegmentLog`, one segment per micro-batch: serve base
-        + additions via ``search(additions_path=...)`` (IVF, HNSW) or by
-        unioning ``SegmentLog(spark, segment_path).read()`` onto the
-        codes table (flat kinds); ``compact`` folds them back in, the
-        newest batch winning per vec_id. Returns the StreamingQuery
-        (availableNow)."""
-        if self.kind == "ivf":
-            from event_store_spark.plans.ivf import load_ivf_index
-            from event_store_spark.streaming.index import ivf_assign_stream
+        """Start the availableNow pass that encodes arriving embeddings
+        (columns ``vec_id``, ``v: array<double>``) under this index's
+        FROZEN trained state, map-side with no shuffle, and appends them
+        to the additions log at ``segment_path``: a
+        `generations.SegmentLog`, one segment per micro-batch (partitioned
+        by cell for the cell kinds), committed by the stream's
+        `streaming.eos` ledger. Serve it with ``search(additions_path=)``
+        or ``rows(additions_path)``; ``compact`` folds it in. Retraining
+        stays the periodic ``build``. Returns the StreamingQuery."""
+        from event_store_spark.streaming import eos
 
-            centroids, _ = load_ivf_index(self.spark, self.path)
-            return ivf_assign_stream(
-                embeddings_stream, centroids, segment_path, checkpoint
-            )
-        if self.kind == "hnsw":
-            # the segment layout is SHARED with IVF (cell-partitioned flat
-            # rows): arriving vectors are cell-assigned map-side under the
-            # graph's OWN centroids; search brute-forces the segment's
-            # probed cells exactly until `compact` re-links them
-            from event_store_spark.plans.hnsw import load_hnsw_index
-            from event_store_spark.streaming.index import ivf_assign_stream
+        log = SegmentLog(self.spark, segment_path)
+        partition_by = ("cell",) if self._kind.cells else ()
 
-            centroids, _ = load_hnsw_index(self.spark, self.path)
-            return ivf_assign_stream(
-                embeddings_stream, centroids, segment_path, checkpoint
-            )
-        if self.kind == "pq":
-            from event_store_spark.plans.pq import load_pq_index
-            from event_store_spark.streaming.index import pq_encode_stream
+        def apply(df: DataFrame, batch_id: int, commit) -> None:
+            log.write(batch_id, self._kind.encode(df, self.trained), partition_by)
+            commit()
 
-            book, _ = load_pq_index(self.spark, self.path)
-            return pq_encode_stream(
-                embeddings_stream, book, segment_path, checkpoint
-            )
-        from event_store_spark.plans.pipeline5 import load_sq8_index
-        from event_store_spark.streaming.index import sq8_encode_stream
-
-        (mns, mxs), _ = load_sq8_index(self.spark, self.path)
-        return sq8_encode_stream(
-            embeddings_stream, mns, mxs, segment_path, checkpoint
-        )
+        return eos.start(embeddings_stream, checkpoint, log.ledger, apply)
 
     def compact(self, additions_path: str) -> None:
-        """Fold a streamed additions segment into the base: the IVF
-        inverted file (`ivf_assign_stream` segment), the PQ codes table
-        (`pq_encode_stream` segment), or the SQ8 codes table
-        (`sq8_encode_stream` segment — valid since round 8's encoder
-        quantizes under the FROZEN published limits) — all behind the
-        same atomic pointer-flip publication with newest-wins collision
-        handling. Moving the trained state itself (centroid retrain,
-        codebook retrain, limits retrain) stays the periodic `build`."""
-        if self.kind == "ivf":
-            from event_store_spark.plans.ivf import compact_ivf_index
-
-            compact_ivf_index(self.spark, self.path, additions_path)
-        elif self.kind == "hnsw":
-            from event_store_spark.plans.hnsw import compact_hnsw_index
-
-            compact_hnsw_index(self.spark, self.path, additions_path)
-        elif self.kind == "pq":
-            from event_store_spark.plans.pq import compact_pq_index
-
-            compact_pq_index(self.spark, self.path, additions_path)
+        """Fold an additions log into a new generation without retraining:
+        per vec_id the newest addition wins over older ones and over the
+        base (HNSW instead relinks the touched cells' graphs). The pointer
+        flip publishes it, the superseded generation outlives the flip
+        for in-flight readers, re-folding the same log is idempotent, and
+        a log with no committed segment publishes nothing."""
+        log = SegmentLog(self.spark, additions_path)
+        if not log.paths():
+            return
+        base, adds = self.rows(), log.newest("vec_id")
+        if self._kind.relink is None:
+            # the trained state is unchanged: the pointer keeps naming
+            # the live meta file
+            rows, meta = segment_wins(base, adds, "vec_id"), None
         else:
-            from event_store_spark.plans.pipeline5 import compact_sq8_index
+            rows, meta = self._kind.relink(base, adds), self._meta
+        _publish(self.spark, self._kind, self.path, rows, meta)
+        self.live = self._pair.live()
 
-            compact_sq8_index(self.spark, self.path, additions_path)
+
+def _publish(
+    spark: SparkSession, kind: _Kind, path: str, rows: DataFrame, meta: str | None
+) -> None:
+    """Write ``rows`` as the next generation at ``path`` and flip to it
+    with ``meta`` (None: keep the live meta file)."""
+    partition_by = ("cell",) if kind.cells else ()
+    kind.pair(path).publish(
+        spark,
+        lambda out: rows.write.mode("overwrite").partitionBy(*partition_by).parquet(out),
+        meta=meta,
+    )

@@ -13,11 +13,6 @@ from event_store_spark.streaming.contamination import (
     contamination_gate,
 )
 from event_store_spark.streaming.curation import CurationPipeline
-from event_store_spark.streaming.index import (
-    ivf_assign_stream,
-    pq_encode_stream,
-    sq8_encode_stream,
-)
 from event_store_spark.streaming.neardup_winnow import WinnowDedupGate
 from event_store_spark.streaming.lock import LockManager, LockMonitor
 from event_store_spark.streaming.ocf_ingest import OcfIngest
@@ -42,7 +37,4 @@ __all__ = [
     "kafka_source_to_records",
     "records_to_kafka_sink",
     "kafka_stream",
-    "ivf_assign_stream",
-    "pq_encode_stream",
-    "sq8_encode_stream",
 ]

@@ -28,8 +28,11 @@ checkpoint lineage, `streaming.eos.floor`:
   floor, so a crash inside a recovery cannot turn it into a live run.
 - **One path per batch.** A batch the progress store already holds for
   this lineage is skipped (`streaming.eos.applied`). One aggregate gives
-  the batch's lowest and highest (lsn, id) and its count. Rows above the
-  floor overwrite a directory keyed by their own high water: a crash
+  the batch's lowest and highest (lsn, id) and its count. The batch's
+  floor is the larger of the lineage's floor and the progress cursor,
+  since rows at or below the cursor were replicated already and come
+  back when `EventStore.compact` rewrites them under new file paths.
+  Rows above it overwrite a directory keyed by their own high water: a crash
   before the progress save redelivers the same rows, which overwrite the
   same directory, and the name is above every directory an earlier
   lineage left. Rows at or below the floor are anti-joined against the
@@ -245,6 +248,9 @@ class Replicator:
             if eos.applied(held, lineage, batch_id):
                 return  # redelivered batch whose commit record already landed
             done = self.progress.last_cursor(topic) or Cursor.zero()
+            # rows at or below the committed cursor may be in the target
+            # too: a compaction relists them under new file paths
+            low = max(floor, done)
             # cache so the aggregate and the writes evaluate the
             # (maxFilesPerTrigger-bounded) batch once, not twice
             staged = to_kafka_records(df).sortWithinPartitions("lsn", "id").persist()
@@ -256,16 +262,16 @@ class Replicator:
                 ).first()
                 if n:
                     top = Cursor(hi["lsn"], hi["id"])
-                    if Cursor(lo["lsn"], lo["id"]) <= floor:
+                    if Cursor(lo["lsn"], lo["id"]) <= low:
                         self._write_missing(
                             topic,
-                            staged.where(~keyset_after(floor)),
+                            staged.where(~keyset_after(low)),
                             lo["lsn"],
-                            min(top, floor).lsn,
+                            min(top, low).lsn,
                             done,
                         )
-                    if top > floor:
-                        self._write_new(topic, staged.where(keyset_after(floor)), top)
+                    if top > low:
+                        self._write_new(topic, staged.where(keyset_after(low)), top)
                     done = max(done, top)
                 self.progress.save(topic, done, batch_id=batch_id, ckpt_id=lineage)
             finally:

@@ -546,7 +546,7 @@ def streaming_semantic_dedup(
     """Cross-batch SemDeDup: the streaming twin of `plans.semantic` —
     each arriving embedding is assigned to its trained k-means cell
     MAP-SIDE (broadcast centroid argmin, the same `_assign` expression the
-    batch build and `ivf_assign_stream` use; zero shuffle before the
+    batch build and `VectorIndex.maintain` use; zero shuffle before the
     keyed state op), then probes the cell's live member set held in the
     streaming state store.
 

@@ -15,7 +15,8 @@ files each commit-log entry adds = new events, in append order);
 processing runs in ``foreachBatch``, which skips a batch the offsets
 table already covers (`streaming.eos.applied`, on the offsets table's
 lineage and batch id) and drops the rows at or below the checkpoint's
-floor (`streaming.eos.floor`: where an earlier lineage got to); the
+floor (`streaming.eos.floor`: where an earlier lineage got to) or the
+offsets table's cursor (a compaction relists processed rows); the
 offsets table records the high-water cursor + batch id in one atomic
 update. The source checkpoint gives redelivery-with-same-id; the skip
 gives idempotence; the floor makes a lost checkpoint's relisted backlog
@@ -136,9 +137,11 @@ class Subscription:
         (`streaming.lineage`), and a new lineage starts from the floor
         `eos.floor` records — the offsets table's cursor, or zero for a
         brand-new subscription. Every batch drops its rows at or below the
-        floor before the processor runs, so the relisted backlog of a lost
-        checkpoint delivers only never-processed rows, and a restart
-        inside that recovery reuses the same floor. Without it the whole
+        floor, or at or below the offsets table's committed cursor, before
+        the processor runs, so the relisted backlog of a lost checkpoint,
+        and the rows `EventStore.compact` rewrites under new file paths,
+        deliver only never-processed rows, and a restart inside that
+        recovery reuses the same floor. Without it the whole
         backlog could land in a "stale" batch 0 and be skipped (ADVICE r3
         — silent event loss). The processor is not called for a batch
         with no rows left.
@@ -173,9 +176,13 @@ class Subscription:
             if self.source == "kafka":
                 self._kafka_process_and_offset(topic, processor, df, batch_id, lineage)
                 return
+            # rows at or below the committed cursor were processed, by
+            # this lineage or an earlier one: a compaction relists them
+            # under new file paths
+            done = self.offsets.get_cursor(topic)
             # persist: the aggregate and the processor both consume the
             # batch — without it the source files are scanned twice
-            df = df.where(keyset_after(floor)).persist()
+            df = df.where(keyset_after(max(floor, done or Cursor.zero()))).persist()
             try:
                 hw, n = df.agg(
                     F.max(F.struct("lsn", "id")), F.count(F.lit(1))
@@ -189,7 +196,7 @@ class Subscription:
             # the stored offset is a 0-based running consumed-row index
             # (Kafka-offset semantics), making the lag gauge pure
             # arithmetic (A2); a batch with no rows keeps the cursor
-            cursor = Cursor(hw["lsn"], hw["id"]) if n else self.offsets.get_cursor(topic)
+            cursor = Cursor(hw["lsn"], hw["id"]) if n else done
             self.offsets.upsert(
                 topic,
                 self.offsets.get(topic) + n,

@@ -207,17 +207,20 @@ def _distinct(spark, root, ck, src):
 
 
 class _Additions:
-    """An additions stream (a function, not a class) as a sink handle."""
+    """An index's additions stream (`VectorIndex.maintain`) as a sink handle."""
 
     def __init__(self, spark, kind, target, ck):
         self.spark, self.kind, self.target, self.ck = spark, kind, target, ck
 
     def start(self, stream):
-        from event_store_spark.streaming import index
+        from event_store_spark.plans.vector_index import VectorIndex
 
-        return getattr(index, f"{self.kind}_stream")(
-            stream, *_trained(self.spark, self.kind), self.target, self.ck
+        kind = {"ivf_assign": "ivf", "pq_encode": "pq", "sq8_encode": "sq8"}
+        idx = VectorIndex.build(
+            self.spark, SF, os.path.join(os.path.dirname(self.target), "index"),
+            kind[self.kind],
         )
+        return idx.maintain(stream, self.target, self.ck)
 
     def _merge(self, df, batch_id):
         """The reference: encode a static frame as one segment."""

@@ -47,24 +47,23 @@ def test_one_token_pointer_reads_as_dir_plus_original_meta(tmp_path):
 
 def test_one_token_pointer_indexes_open_and_search(spark, sf_smoke, tmp_path):
     """IVF and PQ indexes whose pointer names only the bulk dir (the
-    early format) load and serve through both the module loaders and
-    the `VectorIndex` facade, exactly as before the pointer existed."""
-    from event_store_spark.plans.ivf import (
-        _ivf_index,
-        load_ivf_index,
-        save_ivf_index,
-    )
-    from event_store_spark.plans.pq import load_pq_index, save_pq_index
+    early format) open, read and serve through `VectorIndex`, exactly
+    as before the pointer existed."""
+    from event_store_spark.plans.ivf import _ivf_index
     from event_store_spark.plans.vector_index import VectorIndex
+
+    def load(spark, path):
+        idx = VectorIndex.open(spark, path)
+        return idx.trained, idx.rows()
 
     _, assigned = _ivf_index(spark, sf_smoke, "full")
     qv = [float(x) for x in assigned.where(F.col("vec_id") == 0).first()["v"]]
-    for kind, save, load, pointer, bulk in (
-        ("ivf", save_ivf_index, load_ivf_index, "CELLS", "cells"),
-        ("pq", save_pq_index, load_pq_index, "CODES", "codes"),
+    for kind, pointer, bulk in (
+        ("ivf", "CELLS", "cells"),
+        ("pq", "CODES", "codes"),
     ):
         path = str(tmp_path / kind)
-        save(spark, sf_smoke, path)
+        VectorIndex.build(spark, sf_smoke, path, kind)
         meta, rows = load(spark, path)
         want_rows = sorted(map(tuple, rows.collect()))
         want_hits = VectorIndex.open(spark, path).search(qv, k=5).collect()
@@ -104,92 +103,86 @@ def _ivf_adds(spark, tmp_path, assigned, offset):
 
 
 def _ivf_retrain(spark, tmp_path, sf):
-    from event_store_spark.plans.ivf import load_ivf_index, save_ivf_index
+    from event_store_spark.plans.vector_index import VectorIndex
 
     path = str(tmp_path / "ivf")
-    save_ivf_index(spark, sf, path)
-    save_ivf_index(spark, sf, path)
+    VectorIndex.build(spark, sf, path, "ivf")
+    VectorIndex.build(spark, sf, path, "ivf")
 
     def read():
-        centroids, assigned = load_ivf_index(spark, path)
-        return centroids, _rows(assigned, "vec_id", "cell")
+        idx = VectorIndex.open(spark, path)
+        return idx.trained, _rows(idx.rows(), "vec_id", "cell")
 
     return Case(
-        lambda: save_ivf_index(spark, sf, path),
+        lambda: VectorIndex.build(spark, sf, path, "ivf"),
         read,
         GenerationPair(path, "cells", "centroids.json", "CELLS"),
     )
 
 
 def _ivf_compact(spark, tmp_path, sf):
-    from event_store_spark.plans.ivf import (
-        compact_ivf_index,
-        load_ivf_index,
-        save_ivf_index,
-    )
+    from event_store_spark.plans.vector_index import VectorIndex
 
     path = str(tmp_path / "ivf")
-    save_ivf_index(spark, sf, path)
-    adds = _ivf_adds(spark, tmp_path, load_ivf_index(spark, path)[1], 3_000_000)
-    compact_ivf_index(spark, path, adds)
+    VectorIndex.build(spark, sf, path, "ivf")
+    adds = _ivf_adds(
+        spark, tmp_path, VectorIndex.open(spark, path).rows(), 3_000_000
+    )
+    VectorIndex.open(spark, path).compact(adds)
 
     def read():
-        centroids, assigned = load_ivf_index(spark, path)
-        return centroids, _rows(assigned, "vec_id", "cell")
+        idx = VectorIndex.open(spark, path)
+        return idx.trained, _rows(idx.rows(), "vec_id", "cell")
 
     return Case(
-        lambda: compact_ivf_index(spark, path, adds),
+        lambda: VectorIndex.open(spark, path).compact(adds),
         read,
         GenerationPair(path, "cells", "centroids.json", "CELLS"),
     )
 
 
 def _pq_retrain(spark, tmp_path, sf):
-    from event_store_spark.plans.pq import load_pq_index, save_pq_index
+    from event_store_spark.plans.vector_index import VectorIndex
 
     path = str(tmp_path / "pq")
-    save_pq_index(spark, sf, path)
-    save_pq_index(spark, sf, path)
+    VectorIndex.build(spark, sf, path, "pq")
+    VectorIndex.build(spark, sf, path, "pq")
 
     def read():
-        book, codes = load_pq_index(spark, path)
-        return book, _rows(codes, "vec_id", "codes")
+        idx = VectorIndex.open(spark, path)
+        return idx.trained, _rows(idx.rows(), "vec_id", "codes")
 
     return Case(
-        lambda: save_pq_index(spark, sf, path),
+        lambda: VectorIndex.build(spark, sf, path, "pq"),
         read,
         GenerationPair(path, "codes", "codebook.json", "CODES"),
     )
 
 
 def _sq8_retrain(spark, tmp_path, sf):
-    from event_store_spark.plans.pipeline5 import load_sq8_index, save_sq8_index
+    from event_store_spark.plans.vector_index import VectorIndex
 
     path = str(tmp_path / "sq8")
-    save_sq8_index(spark, sf, path)
-    save_sq8_index(spark, sf, path)
+    VectorIndex.build(spark, sf, path, "sq8")
+    VectorIndex.build(spark, sf, path, "sq8")
 
     def read():
-        limits, codes = load_sq8_index(spark, path)
-        return limits, _rows(codes, "vec_id", "q")
+        idx = VectorIndex.open(spark, path)
+        return idx.trained, _rows(idx.rows(), "vec_id", "q")
 
     return Case(
-        lambda: save_sq8_index(spark, sf, path),
+        lambda: VectorIndex.build(spark, sf, path, "sq8"),
         read,
         GenerationPair(path, "codes", "limits.json", "CODES"),
     )
 
 
 def _hnsw_compact(spark, tmp_path, sf):
-    from event_store_spark.plans.hnsw import (
-        compact_hnsw_index,
-        load_hnsw_index,
-        save_hnsw_index,
-    )
+    from event_store_spark.plans.vector_index import VectorIndex
 
     path = str(tmp_path / "hnsw")
-    save_hnsw_index(spark, sf, path)
-    _, graph = load_hnsw_index(spark, path)
+    VectorIndex.build(spark, sf, path, "hnsw")
+    graph = VectorIndex.open(spark, path).rows()
     adds = str(tmp_path / "adds")
     SegmentLog(spark, adds).write(
         0,
@@ -198,14 +191,14 @@ def _hnsw_compact(spark, tmp_path, sf):
         ),
         ("cell",),
     )
-    compact_hnsw_index(spark, path, adds)
+    VectorIndex.open(spark, path).compact(adds)
 
     def read():
-        centroids, graph = load_hnsw_index(spark, path)
-        return centroids, _rows(graph, "vec_id", "cell", "level")
+        idx = VectorIndex.open(spark, path)
+        return idx.trained, _rows(idx.rows(), "vec_id", "cell", "level")
 
     return Case(
-        lambda: compact_hnsw_index(spark, path, adds),
+        lambda: VectorIndex.open(spark, path).compact(adds),
         read,
         GenerationPair(path, "graph", "hnsw.json"),
     )
@@ -795,11 +788,13 @@ def test_additions_reader_hides_segments_above_the_ledger(
 ):
     """An additions log whose ledger holds batch 0 serves batch 0's
     vectors only, though batch 1's segment is marked."""
-    from event_store_spark.plans.ivf import load_ivf_index, save_ivf_index
+    from event_store_spark.plans.vector_index import VectorIndex
 
     path = str(tmp_path / "ivf")
-    save_ivf_index(spark, sf_smoke, path)
-    adds = _ivf_adds(spark, tmp_path, load_ivf_index(spark, path)[1], 5_000_000)
+    VectorIndex.build(spark, sf_smoke, path, "ivf")
+    adds = _ivf_adds(
+        spark, tmp_path, VectorIndex.open(spark, path).rows(), 5_000_000
+    )
     log = SegmentLog(spark, adds)
     generations.write_pointer(os.path.join(adds, generations.LEDGER), "lineage 0")
     log.write(
@@ -809,7 +804,7 @@ def test_additions_reader_hides_segments_above_the_ledger(
         ),
         ("cell",),
     )
-    _, served = load_ivf_index(spark, path, additions_path=adds)
+    served = VectorIndex.open(spark, path).rows(additions_path=adds)
     added = served.where(F.col("vec_id") >= 5_000_000)
     assert _rows(added, "vec_id") == [(5_000_000,), (5_000_001,), (5_000_002,)]
 

@@ -145,9 +145,9 @@ def _exact_topk_over_cells(spark, index_path, qv, cells, k=5, extra=None):
     from pyspark.sql import functions as F
 
     from event_store_spark.functions.vectors import cosine
-    from event_store_spark.plans.hnsw import load_hnsw_index
+    from event_store_spark.plans.vector_index import VectorIndex
 
-    _, graph = load_hnsw_index(spark, index_path)
+    graph = VectorIndex.open(spark, index_path).rows()
     side = graph.where(F.col("cell").isin(cells)).select("vec_id", "v")
     if extra is not None:
         side = side.unionByName(extra.select("vec_id", "v"))
@@ -165,14 +165,13 @@ def _exact_topk_over_cells(spark, index_path, qv, cells, k=5, extra=None):
 def test_persisted_hnsw_build_open_search_compact(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from event_store_spark.plans.hnsw import hnsw_search, load_hnsw_index
     from event_store_spark.plans.vector_index import VectorIndex
     from event_store_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
     path = str(tmp_path / "hnsw_idx")
     idx = VectorIndex.build(spark, sf, path, kind="hnsw")
-    # open sniffs the kind from the manifest
+    # open sniffs the kind from the meta marker
     reopened = VectorIndex.open(spark, path)
     assert reopened.kind == "hnsw"
 
@@ -182,7 +181,7 @@ def test_persisted_hnsw_build_open_search_compact(spark, tmp_path):
         .where(F.col("vec_id") == 0)
         .collect()[0]["embedding"]
     ]
-    centroids, _ = load_hnsw_index(spark, path)
+    centroids = VectorIndex.open(spark, path).trained
     import numpy as np
 
     q = np.asarray(qv)
@@ -237,7 +236,6 @@ def test_persisted_hnsw_build_open_search_compact(spark, tmp_path):
 def test_persisted_hnsw_nprobe_unions_cells(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from event_store_spark.plans.hnsw import load_hnsw_index
     from event_store_spark.plans.vector_index import VectorIndex
     from event_store_spark.tables import load_table
 
@@ -252,7 +250,7 @@ def test_persisted_hnsw_nprobe_unions_cells(spark, tmp_path):
     ]
     import numpy as np
 
-    centroids, _ = load_hnsw_index(spark, path)
+    centroids = VectorIndex.open(spark, path).trained
     q = np.asarray(qv)
     cells2 = [c for _, c in sorted(
         (float(((q - np.asarray(v)) ** 2).sum()), c) for c, v in centroids
@@ -267,7 +265,6 @@ def test_persisted_hnsw_search_k_above_topk(spark, tmp_path):
     so hnsw_search(k=12) silently dropped true neighbors ranked 6..12."""
     from pyspark.sql import functions as F
 
-    from event_store_spark.plans.hnsw import load_hnsw_index
     from event_store_spark.plans.vector_index import VectorIndex
     from event_store_spark.tables import load_table
 
@@ -282,7 +279,7 @@ def test_persisted_hnsw_search_k_above_topk(spark, tmp_path):
     ]
     import numpy as np
 
-    centroids, _ = load_hnsw_index(spark, path)
+    centroids = VectorIndex.open(spark, path).trained
     q = np.asarray(qv)
     cells = [c for _, c in sorted(
         (float(((q - np.asarray(v)) ** 2).sum()), c) for c, v in centroids
@@ -371,12 +368,13 @@ def test_hnsw_search_centroid_graph_equals_exact_scan(spark, tmp_path):
         .where(F.col("vec_id") == 3)
         .collect()[0]["embedding"]
     ]
+    idx = VectorIndex.open(spark, path)
     a = [(r.vec_id, r.sim) for r in
-         hnsw_search(spark, path, qv, k=5, nprobe=2,
-                     use_centroid_graph=False).collect()]
+         hnsw_search(idx.rows(), idx.trained, qv, k=5, nprobe=2,
+                     use_centroid_graph=False, key=path).collect()]
     b = [(r.vec_id, r.sim) for r in
-         hnsw_search(spark, path, qv, k=5, nprobe=2,
-                     use_centroid_graph=True).collect()]
+         hnsw_search(idx.rows(), idx.trained, qv, k=5, nprobe=2,
+                     use_centroid_graph=True, key=path).collect()]
     assert a == b
 
 
@@ -405,14 +403,15 @@ def test_centroid_graph_fresh_through_maintain_compact_rebuild(spark, tmp_path):
     ]
 
     def both(additions=None):
+        opened = VectorIndex.open(spark, path)
         a = [(r.vec_id, round(r.sim, 6)) for r in
-             hnsw_search(spark, path, qv, k=5, nprobe=2,
-                         additions_path=additions,
-                         use_centroid_graph=False).collect()]
+             hnsw_search(opened.rows(additions), opened.trained, qv, k=5,
+                         nprobe=2, use_centroid_graph=False,
+                         key=path).collect()]
         b = [(r.vec_id, round(r.sim, 6)) for r in
-             hnsw_search(spark, path, qv, k=5, nprobe=2,
-                         additions_path=additions,
-                         use_centroid_graph=True).collect()]
+             hnsw_search(opened.rows(additions), opened.trained, qv, k=5,
+                         nprobe=2, use_centroid_graph=True,
+                         key=path).collect()]
         return a, b
 
     a, b = both()
@@ -445,7 +444,7 @@ def test_centroid_graph_fresh_through_maintain_compact_rebuild(spark, tmp_path):
 
 
 def test_persisted_spilled_hnsw_dedupes_and_compacts(spark, tmp_path):
-    """VERDICT r11 #8a, persisted path: save_hnsw_index(spill=2) links
+    """Persisted path: an HNSW build with spill=2 links
     every vector into its two nearest cells' graphs. A 2-cell probe can
     then surface one vector from both cells — search must emit each
     vec_id once (max-sim collapse), and the result must equal the exact
@@ -455,18 +454,13 @@ def test_persisted_spilled_hnsw_dedupes_and_compacts(spark, tmp_path):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from event_store_spark.plans.hnsw import (
-        hnsw_search,
-        load_hnsw_index,
-        save_hnsw_index,
-        compact_hnsw_index,
-    )
+    from event_store_spark.plans.vector_index import VectorIndex
     from event_store_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
     path = str(tmp_path / "hnsw_sp")
-    save_hnsw_index(spark, sf, path, spill=2)
-    centroids, graph = load_hnsw_index(spark, path)
+    idx = VectorIndex.build(spark, sf, path, "hnsw", spill=2)
+    centroids, graph = idx.trained, idx.rows()
     gdf = graph.select("cell", "vec_id", "rank").toPandas()
     n_vec = gdf["vec_id"].nunique()
     assert len(gdf) == 2 * n_vec  # every vector in exactly two cells
@@ -478,7 +472,7 @@ def test_persisted_spilled_hnsw_dedupes_and_compacts(spark, tmp_path):
         .collect()[0]["embedding"]
     ]
     got = [(r.vec_id, r.sim) for r in
-           hnsw_search(spark, path, qv, k=5, nprobe=2).collect()]
+           idx.search(qv, k=5, nprobe=2).collect()]
     assert len({v for v, _ in got}) == 5  # deduped
 
     # exact reference over the probed cells' spilled membership
@@ -505,8 +499,8 @@ def test_persisted_spilled_hnsw_dedupes_and_compacts(spark, tmp_path):
     SegmentLog(spark, seg).write(
         0, spark.createDataFrame(rows, "vec_id bigint, v array<double>, cell int")
     )
-    compact_hnsw_index(spark, path, seg)
+    idx.compact(seg)
     after = [(r.vec_id, r.sim) for r in
-             hnsw_search(spark, path, qv, k=5, nprobe=2).collect()]
+             idx.search(qv, k=5, nprobe=2).collect()]
     assert len({v for v, _ in after}) == 5
     assert any(v >= 7_000_000 for v, _ in after)

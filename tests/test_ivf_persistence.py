@@ -3,7 +3,7 @@ oracle-checked plans; streamed additions land in the same layout.
 
 The lifecycle a vector store actually runs — train once, persist, serve
 from the persisted layout, keep it current with the maintenance stream
-(`ivf_assign_stream`), retrain periodically — with search equality
+(`VectorIndex.maintain`), retrain periodically — with search equality
 pinned against `ann_ivf_topk` / `ann_ivf_nprobe` (whose values are
 themselves driver-oracle-checked)."""
 
@@ -16,12 +16,14 @@ from pyspark.sql import functions as F
 
 from event_store_spark.plans import QUERIES
 from event_store_spark.plans.generations import SegmentLog
-from event_store_spark.plans.ivf import (
-    _ivf_index,
-    load_ivf_index,
-    save_ivf_index,
-    ivf_search,
-)
+from event_store_spark.plans.ivf import _ivf_index, ivf_search
+from event_store_spark.plans.vector_index import VectorIndex
+
+
+def _load(spark, path, additions_path=None):
+    """(trained state, rows) of the index at ``path``."""
+    idx = VectorIndex.open(spark, path)
+    return idx.trained, idx.rows(additions_path)
 
 
 def _query_vec(assigned):
@@ -30,8 +32,8 @@ def _query_vec(assigned):
 
 def test_save_load_search_matches_in_session_plans(spark, sf_smoke, tmp_path):
     idx = str(tmp_path / "ivf")
-    save_ivf_index(spark, sf_smoke, idx)
-    centroids, assigned = load_ivf_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    centroids, assigned = _load(spark, idx)
 
     mem_centroids, mem_assigned = _ivf_index(spark, sf_smoke, "full")
     assert centroids == mem_centroids  # exact doubles through JSON
@@ -72,8 +74,8 @@ def test_search_plan_is_partition_pruned_no_join(spark, sf_smoke, tmp_path):
     parquet partition pruning — the executed plan has no join/exchange
     beyond TakeOrdered, and scans only the probed cell directory."""
     idx = str(tmp_path / "ivf")
-    save_ivf_index(spark, sf_smoke, idx)
-    centroids, assigned = load_ivf_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    centroids, assigned = _load(spark, idx)
     qv = _query_vec(assigned)
     df = ivf_search(assigned, centroids, qv, k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -85,17 +87,15 @@ def test_search_plan_is_partition_pruned_no_join(spark, sf_smoke, tmp_path):
 
 
 def test_streamed_additions_join_the_persisted_index(spark, sf_smoke, tmp_path):
-    """ivf_assign_stream maintains a live-additions SEGMENT (its own
+    """VectorIndex.maintain keeps a live-additions SEGMENT (its own
     stream-managed dir — the sink's `_spark_metadata` log is the
     exactly-once mechanism and must own its directory); loading with
     additions_path serves base + segment, and search returns streamed
     vectors."""
-    from event_store_spark.streaming.index import ivf_assign_stream
-
     idx = str(tmp_path / "ivf")
     adds_dir = str(tmp_path / "ivf_adds")
-    save_ivf_index(spark, sf_smoke, idx)
-    centroids, assigned = load_ivf_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    centroids, assigned = _load(spark, idx)
     base_n = assigned.count()
 
     # new vectors = exact copies of vec 1..3 re-keyed (land in same cells,
@@ -110,15 +110,14 @@ def test_streamed_additions_join_the_persisted_index(spark, sf_smoke, tmp_path):
         spark.readStream.schema(spark.read.parquet(src).schema)
         .parquet(src)
     )
-    q = ivf_assign_stream(
+    q = VectorIndex.open(spark, idx).maintain(
         stream,
-        centroids,
-        target_path=adds_dir,
+        adds_dir,
         checkpoint=str(tmp_path / "ck"),
     )
     q.awaitTermination(120)
 
-    _, reloaded = load_ivf_index(spark, idx, additions_path=adds_dir)
+    _, reloaded = _load(spark, idx, additions_path=adds_dir)
     assert reloaded.count() == base_n + 3
     # streamed copies got the SAME cells as their originals (map-side
     # assignment equality with the batch build)
@@ -141,16 +140,11 @@ def test_pq_save_load_search_matches_in_session_plan(spark, sf_smoke, tmp_path):
     """PQ lifecycle: the persisted codes table (no raw vectors) serves
     the same ADC top-5 as the in-session, oracle-checked ann_pq_topk;
     the serving plan is a joinless, shuffle-free scan + TakeOrdered."""
-    from event_store_spark.plans.pq import (
-        _pq_index,
-        load_pq_index,
-        pq_search,
-        save_pq_index,
-    )
+    from event_store_spark.plans.pq import _pq_index, pq_search
 
     idx = str(tmp_path / "pq")
-    save_pq_index(spark, sf_smoke, idx)
-    book, codes = load_pq_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "pq")
+    book, codes = _load(spark, idx)
 
     mem_book, mem_encoded = _pq_index(spark, sf_smoke)
     assert book == mem_book  # exact doubles through JSON
@@ -186,18 +180,12 @@ def test_pq_encode_stream_segment_serves_with_base(spark, sf_smoke, tmp_path):
     broadcast codebook, the codes segment unions onto the persisted base,
     and an exact copy of vector 1 ties its original at ADC distance 0
     from codes alone."""
-    from event_store_spark.plans.pq import (
-        _pq_index,
-        load_pq_index,
-        pq_search,
-        save_pq_index,
-    )
-    from event_store_spark.streaming.index import pq_encode_stream
+    from event_store_spark.plans.pq import _pq_index, pq_search
 
     idx = str(tmp_path / "pq")
     adds = str(tmp_path / "pq_adds")
-    save_pq_index(spark, sf_smoke, idx)
-    book, codes = load_pq_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "pq")
+    book, codes = _load(spark, idx)
 
     _, mem_encoded = _pq_index(spark, sf_smoke)
     new = mem_encoded.where(F.col("vec_id").between(1, 3)).select(
@@ -206,7 +194,7 @@ def test_pq_encode_stream_segment_serves_with_base(spark, sf_smoke, tmp_path):
     src = str(tmp_path / "new_vecs")
     new.write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = pq_encode_stream(stream, book, adds, str(tmp_path / "ck"))
+    q = VectorIndex.open(spark, idx).maintain(stream, adds, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
     seg = SegmentLog(spark, adds).read()
@@ -229,13 +217,10 @@ def test_compact_folds_segment_into_base(spark, sf_smoke, tmp_path):
     without retraining; a re-compaction of the same segment is
     idempotent (no duplicate vec_ids), and search serves the merged
     base alone."""
-    from event_store_spark.plans.ivf import compact_ivf_index
-    from event_store_spark.streaming.index import ivf_assign_stream
-
     idx = str(tmp_path / "ivf")
     adds_dir = str(tmp_path / "adds")
-    save_ivf_index(spark, sf_smoke, idx)
-    centroids, assigned = load_ivf_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    centroids, assigned = _load(spark, idx)
     base_n = assigned.count()
 
     new = assigned.where(F.col("vec_id").between(1, 3)).select(
@@ -244,16 +229,16 @@ def test_compact_folds_segment_into_base(spark, sf_smoke, tmp_path):
     src = str(tmp_path / "new_vecs")
     new.write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = ivf_assign_stream(stream, centroids, adds_dir, str(tmp_path / "ck"))
+    q = VectorIndex.open(spark, idx).maintain(stream, adds_dir, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
-    compact_ivf_index(spark, idx, adds_dir)
-    c2, merged = load_ivf_index(spark, idx)  # no additions_path needed now
+    VectorIndex.open(spark, idx).compact(adds_dir)
+    c2, merged = _load(spark, idx)  # no additions_path needed now
     assert c2 == centroids  # compaction never retrains
     assert merged.count() == base_n + 3
 
-    compact_ivf_index(spark, idx, adds_dir)  # idempotent re-fold
-    _, again = load_ivf_index(spark, idx)
+    VectorIndex.open(spark, idx).compact(adds_dir)  # idempotent re-fold
+    _, again = _load(spark, idx)
     assert again.count() == base_n + 3
 
     # NOTE: DataFrames loaded BEFORE a compaction pin their file listing
@@ -268,16 +253,12 @@ def test_sq8_save_load_search_matches_in_session_plan(spark, sf_smoke, tmp_path)
     """SQ8 lifecycle: the persisted int8 codes + 2xDIM-double limits
     serve the same reconstructed-cosine top-5 as the oracle-checked
     ann_sq8_topk; the serving plan is a joinless scan + TakeOrdered."""
-    from event_store_spark.plans.pipeline5 import (
-        load_sq8_index,
-        save_sq8_index,
-        sq8_search,
-    )
+    from event_store_spark.plans.pipeline5 import sq8_search
     from event_store_spark.tables import load_table
 
     idx = str(tmp_path / "sq8")
-    save_sq8_index(spark, sf_smoke, idx)
-    limits, codes = load_sq8_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "sq8")
+    limits, codes = _load(spark, idx)
     assert codes.schema["q"].dataType.simpleString() == "array<tinyint>"
 
     qv = [
@@ -314,17 +295,12 @@ def test_compact_publishes_by_pointer_flip(spark, sf_smoke, tmp_path):
     orphan generation from a crash-before-flip is invisible to loads and
     swept by the next compaction; a retrain save after a compaction is
     still what loads resolve."""
-    from event_store_spark.plans.ivf import (
-        _cells_dirname,
-        compact_ivf_index,
-    )
-    from event_store_spark.streaming.index import ivf_assign_stream
-
     idx = str(tmp_path / "ivf")
     adds_dir = str(tmp_path / "adds")
-    save_ivf_index(spark, sf_smoke, idx)
-    assert _cells_dirname(idx) == "cells"  # fresh index: original layout
-    centroids, assigned = load_ivf_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    # fresh index: original layout
+    assert VectorIndex.open(spark, idx).live[0] == "cells"
+    centroids, assigned = _load(spark, idx)
     base_n = assigned.count()
 
     new = assigned.where(F.col("vec_id").between(1, 2)).select(
@@ -333,38 +309,38 @@ def test_compact_publishes_by_pointer_flip(spark, sf_smoke, tmp_path):
     src = str(tmp_path / "new_vecs")
     new.write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = ivf_assign_stream(stream, centroids, adds_dir, str(tmp_path / "ck"))
+    q = VectorIndex.open(spark, idx).maintain(stream, adds_dir, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
-    compact_ivf_index(spark, idx, adds_dir)
-    live = _cells_dirname(idx)
+    VectorIndex.open(spark, idx).compact(adds_dir)
+    live = VectorIndex.open(spark, idx).live[0]
     assert live.startswith("cells-")
     assert os.path.isdir(os.path.join(idx, live))
     # ADVICE r7: the just-superseded generation SURVIVES this flip so a
     # reader that resolved it pre-flip finishes its scan; it is GC'd by
     # the NEXT flip, along with any crash orphans
     assert os.path.isdir(os.path.join(idx, "cells"))
-    _, merged = load_ivf_index(spark, idx)
+    _, merged = _load(spark, idx)
     assert merged.count() == base_n + 2
 
     # crash-before-flip: a fully-staged but unpublished generation is
     # ignored by loads and swept by the next compaction
     orphan = os.path.join(idx, "cells-99")
     os.makedirs(orphan)
-    _, still = load_ivf_index(spark, idx)
+    _, still = _load(spark, idx)
     assert still.count() == base_n + 2
     prev = live
-    compact_ivf_index(spark, idx, adds_dir)
+    VectorIndex.open(spark, idx).compact(adds_dir)
     assert not os.path.exists(orphan)
     assert os.path.isdir(os.path.join(idx, prev))  # N-1 kept for readers
     assert not os.path.isdir(os.path.join(idx, "cells"))  # N-2 swept now
 
     # retrain after compaction: save must publish a generation the
     # pointer names (the old code overwrote shadowed `cells/`)
-    save_ivf_index(spark, sf_smoke, idx)
-    gen = _cells_dirname(idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    gen = VectorIndex.open(spark, idx).live[0]
     assert gen.startswith("cells-")
-    _, retrained = load_ivf_index(spark, idx)
+    _, retrained = _load(spark, idx)
     assert retrained.count() == base_n
 
 
@@ -408,7 +384,8 @@ def test_vector_index_facade_unifies_three_kinds(spark, sf_smoke, tmp_path):
     # pre-facade layout (no manifest): open() sniffs the marker
     import os
 
-    os.remove(str(tmp_path / "pq" / "index.json"))
+    with open(str(tmp_path / "pq" / "index.json"), "w") as fh:
+        fh.write('{"kind": "ivf"}')  # an older build's manifest is ignored
     assert VectorIndex.open(spark, str(tmp_path / "pq")).kind == "pq"
 
     with pytest.raises(ValueError, match="cell-probing"):
@@ -434,15 +411,8 @@ def test_vector_index_maintain_and_compact_all_kinds(spark, sf_smoke, tmp_path):
     new.write.parquet(src)
 
     loaders = {
-        "ivf": lambda p: __import__(
-            "event_store_spark.plans.ivf", fromlist=["load_ivf_index"]
-        ).load_ivf_index(spark, p)[1],
-        "pq": lambda p: __import__(
-            "event_store_spark.plans.pq", fromlist=["load_pq_index"]
-        ).load_pq_index(spark, p)[1],
-        "sq8": lambda p: __import__(
-            "event_store_spark.plans.pipeline5", fromlist=["load_sq8_index"]
-        ).load_sq8_index(spark, p)[1],
+        kind: lambda p: VectorIndex.open(spark, p).rows()
+        for kind in ("ivf", "pq", "sq8")
     }
     for kind in ("ivf", "pq", "sq8"):
         path = str(tmp_path / kind)
@@ -472,20 +442,13 @@ def test_pq_compaction_folds_segment_behind_pointer(spark, sf_smoke, tmp_path):
     """PQ segment fold: codes merge without re-encoding, publication is
     the atomic CODES pointer flip, re-fold is idempotent, and ADC search
     over the folded base reproduces base+segment serving exactly."""
-    from event_store_spark.plans.pq import (
-        _codes_dirname,
-        _pq_index,
-        load_pq_index,
-        pq_search,
-        save_pq_index,
-    )
+    from event_store_spark.plans.pq import _pq_index, pq_search
     from event_store_spark.plans.vector_index import VectorIndex
-    from event_store_spark.streaming.index import pq_encode_stream
 
     idx = str(tmp_path / "pq")
     adds = str(tmp_path / "adds")
     VectorIndex.build(spark, sf_smoke, idx, "pq")
-    book, codes = load_pq_index(spark, idx)
+    book, codes = _load(spark, idx)
     base_n = codes.count()
 
     _, mem_encoded = _pq_index(spark, sf_smoke)
@@ -495,7 +458,7 @@ def test_pq_compaction_folds_segment_behind_pointer(spark, sf_smoke, tmp_path):
     src = str(tmp_path / "new_vecs")
     new.write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = pq_encode_stream(stream, book, adds, str(tmp_path / "ck"))
+    q = VectorIndex.open(spark, idx).maintain(stream, adds, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
     v1 = [float(x) for x in mem_encoded.where(F.col("vec_id") == 1).first()["v"]]
@@ -504,15 +467,15 @@ def test_pq_compaction_folds_segment_behind_pointer(spark, sf_smoke, tmp_path):
 
     vi = VectorIndex.open(spark, idx)
     vi.compact(adds)
-    assert _codes_dirname(idx).startswith("codes-")
-    book2, merged = load_pq_index(spark, idx)
+    assert VectorIndex.open(spark, idx).live[0].startswith("codes-")
+    book2, merged = _load(spark, idx)
     assert book2 == book  # compaction never re-trains the codebook
     assert merged.count() == base_n + 2
     got = [(r.vec_id, r.adist) for r in vi.search(v1, k=4).collect()]
     assert got == want
 
     vi.compact(adds)  # idempotent re-fold
-    _, again = load_pq_index(spark, idx)
+    _, again = _load(spark, idx)
     assert again.count() == base_n + 2
 
 
@@ -524,12 +487,11 @@ def test_vector_index_compaction_preserves_recall(spark, sf_smoke, tmp_path):
     import numpy as np
 
     from event_store_spark.plans.vector_index import VectorIndex
-    from event_store_spark.streaming.index import ivf_assign_stream
 
     path = str(tmp_path / "ivf")
     adds_dir = str(tmp_path / "adds")
     idx = VectorIndex.build(spark, sf_smoke, path, "ivf")
-    centroids, assigned = load_ivf_index(spark, path)
+    centroids, assigned = _load(spark, path)
     qv = _query_vec(assigned)
 
     new = assigned.where(F.col("vec_id").between(2, 4)).select(
@@ -538,7 +500,7 @@ def test_vector_index_compaction_preserves_recall(spark, sf_smoke, tmp_path):
     src = str(tmp_path / "new_vecs")
     new.write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = ivf_assign_stream(stream, centroids, adds_dir, str(tmp_path / "ck"))
+    q = idx.maintain(stream, adds_dir, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
     def _recall(rows, exact_ids):
@@ -584,13 +546,10 @@ def test_retrain_pointer_names_centroids_and_cells_as_one_pair(
     centroids is closed by construction."""
     import math
 
-    from event_store_spark.plans.ivf import _live_names, compact_ivf_index
-    from event_store_spark.streaming.index import ivf_assign_stream
-
     idx = str(tmp_path / "ivf")
     adds_dir = str(tmp_path / "adds")
-    save_ivf_index(spark, sf_smoke, idx)
-    centroids, assigned = load_ivf_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    centroids, assigned = _load(spark, idx)
 
     new = assigned.where(F.col("vec_id") == 1).select(
         (F.col("vec_id") + 5_000_000).alias("vec_id"), "v"
@@ -598,16 +557,16 @@ def test_retrain_pointer_names_centroids_and_cells_as_one_pair(
     src = str(tmp_path / "new_vecs")
     new.write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = ivf_assign_stream(stream, centroids, adds_dir, str(tmp_path / "ck"))
+    q = VectorIndex.open(spark, idx).maintain(stream, adds_dir, str(tmp_path / "ck"))
     q.awaitTermination(120)
-    compact_ivf_index(spark, idx, adds_dir)
+    VectorIndex.open(spark, idx).compact(adds_dir)
 
-    save_ivf_index(spark, sf_smoke, idx)  # retrain after compaction
-    cells_dir, cfile = _live_names(idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")  # retrain after compaction
+    cells_dir, cfile = VectorIndex.open(spark, idx).live
     assert cells_dir.startswith("cells-")
     assert cfile.startswith("centroids-")
 
-    c2, a2 = load_ivf_index(spark, idx)
+    c2, a2 = _load(spark, idx)
     cmap = dict(c2)
     for r in a2.collect():
         d = {
@@ -621,24 +580,16 @@ def test_retrain_pointer_names_centroids_and_cells_as_one_pair(
 
 
 def test_pq_retrain_after_compaction_publishes_pair(spark, sf_smoke, tmp_path):
-    """save_pq_index over a compacted index must publish (codes, codebook)
+    """A PQ retrain over a compacted index must publish (codes, codebook)
     as one pointer pair — ADC codes under the wrong codebook are wrong
     DISTANCES, so the two can never be observable out of step; the old
     overwrite-in-place was also shadowed by a post-compaction pointer."""
-    from event_store_spark.plans.pq import (
-        _live_names,
-        _pq_index,
-        compact_pq_index,
-        load_pq_index,
-        pq_search,
-        save_pq_index,
-    )
-    from event_store_spark.streaming.index import pq_encode_stream
+    from event_store_spark.plans.pq import _pq_index, pq_search
 
     idx = str(tmp_path / "pq")
     adds = str(tmp_path / "adds")
-    save_pq_index(spark, sf_smoke, idx)
-    book, codes = load_pq_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "pq")
+    book, codes = _load(spark, idx)
     base_n = codes.count()
 
     _, mem_encoded = _pq_index(spark, sf_smoke)
@@ -648,14 +599,14 @@ def test_pq_retrain_after_compaction_publishes_pair(spark, sf_smoke, tmp_path):
     src = str(tmp_path / "new_vecs")
     new.write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = pq_encode_stream(stream, book, adds, str(tmp_path / "ck"))
+    q = VectorIndex.open(spark, idx).maintain(stream, adds, str(tmp_path / "ck"))
     q.awaitTermination(120)
-    compact_pq_index(spark, idx, adds)
+    VectorIndex.open(spark, idx).compact(adds)
 
-    save_pq_index(spark, sf_smoke, idx)  # retrain after compaction
-    codes_dir, bfile = _live_names(idx)
+    VectorIndex.build(spark, sf_smoke, idx, "pq")  # retrain after compaction
+    codes_dir, bfile = VectorIndex.open(spark, idx).live
     assert codes_dir.startswith("codes-") and bfile.startswith("codebook-")
-    book2, codes2 = load_pq_index(spark, idx)
+    book2, codes2 = _load(spark, idx)
     assert book2 == book  # deterministic build retrains to the same book
     assert codes2.count() == base_n  # retrain is a fresh full encode
     # search over the retrained pair reproduces the oracle-checked plan
@@ -676,23 +627,18 @@ def test_sq8_retrain_publishes_pair(spark, sf_smoke, tmp_path):
     """SQ8 retrain over an existing index flips (codes, limits) as one
     pointer pair (codes under the wrong limits reconstruct wrong values);
     the retrained index reproduces the oracle-checked ann_sq8_topk."""
-    from event_store_spark.plans.pipeline5 import (
-        _sq8_live_names,
-        load_sq8_index,
-        save_sq8_index,
-        sq8_search,
-    )
+    from event_store_spark.plans.pipeline5 import sq8_search
 
     idx = str(tmp_path / "sq8")
-    save_sq8_index(spark, sf_smoke, idx)
-    assert _sq8_live_names(idx) == ("codes", "limits.json")
-    limits, codes = load_sq8_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "sq8")
+    assert VectorIndex.open(spark, idx).live == ("codes", "limits.json")
+    limits, codes = _load(spark, idx)
     base_n = codes.count()
 
-    save_sq8_index(spark, sf_smoke, idx)  # retrain in place
-    codes_dir, lfile = _sq8_live_names(idx)
+    VectorIndex.build(spark, sf_smoke, idx, "sq8")  # retrain in place
+    codes_dir, lfile = VectorIndex.open(spark, idx).live
     assert codes_dir == "codes-1" and lfile == "limits-1.json"
-    limits2, codes2 = load_sq8_index(spark, idx)
+    limits2, codes2 = _load(spark, idx)
     assert limits2 == limits  # deterministic retrain
     assert codes2.count() == base_n
 
@@ -718,17 +664,10 @@ def test_compaction_segment_wins_over_stale_base(spark, sf_smoke, tmp_path):
     keep the SEGMENT row deterministically — dropDuplicates kept an
     arbitrary one, which could resurrect the stale base row. Pinned for
     both compactable layouts (IVF assignments, PQ codes)."""
-    from event_store_spark.plans.ivf import compact_ivf_index
-    from event_store_spark.plans.pq import (
-        compact_pq_index,
-        load_pq_index,
-        save_pq_index,
-    )
-
     # --- IVF: re-assign vec_id=1 to vec_id=2's (v, cell) via the segment
     idx = str(tmp_path / "ivf")
-    save_ivf_index(spark, sf_smoke, idx)
-    _, assigned = load_ivf_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    _, assigned = _load(spark, idx)
     base_n = assigned.count()
     donor = assigned.where(F.col("vec_id") == 2).first()
     adds = str(tmp_path / "ivf_adds")
@@ -739,8 +678,8 @@ def test_compaction_segment_wins_over_stale_base(spark, sf_smoke, tmp_path):
         ),
         ("cell",),
     )
-    compact_ivf_index(spark, idx, adds)
-    _, merged = load_ivf_index(spark, idx)
+    VectorIndex.open(spark, idx).compact(adds)
+    _, merged = _load(spark, idx)
     assert merged.count() == base_n  # update, not insert
     got = merged.where(F.col("vec_id") == 1).collect()
     assert len(got) == 1
@@ -748,8 +687,8 @@ def test_compaction_segment_wins_over_stale_base(spark, sf_smoke, tmp_path):
 
     # --- PQ: re-encode vec_id=1 with vec_id=2's codes via the segment
     pidx = str(tmp_path / "pq")
-    save_pq_index(spark, sf_smoke, pidx)
-    _, codes = load_pq_index(spark, pidx)
+    VectorIndex.build(spark, sf_smoke, pidx, "pq")
+    _, codes = _load(spark, pidx)
     pbase_n = codes.count()
     pdonor = codes.where(F.col("vec_id") == 2).first()
     padds = str(tmp_path / "pq_adds")
@@ -759,8 +698,8 @@ def test_compaction_segment_wins_over_stale_base(spark, sf_smoke, tmp_path):
             F.lit(1).cast("long").alias("vec_id"), "codes"
         ),
     )
-    compact_pq_index(spark, pidx, padds)
-    _, merged_codes = load_pq_index(spark, pidx)
+    VectorIndex.open(spark, pidx).compact(padds)
+    _, merged_codes = _load(spark, pidx)
     assert merged_codes.count() == pbase_n
     pgot = merged_codes.where(F.col("vec_id") == 1).collect()
     assert len(pgot) == 1
@@ -773,16 +712,11 @@ def test_sq8_encode_stream_matches_batch_and_saturates(spark, sf_smoke, tmp_path
     micro-batches equal the batch quantization under the same frozen
     limits; components outside the trained range SATURATE to the code
     ends instead of wrapping through the tinyint cast."""
-    from event_store_spark.plans.pipeline5 import (
-        load_sq8_index,
-        save_sq8_index,
-        sq8_quantize,
-    )
-    from event_store_spark.streaming.index import sq8_encode_stream
+    from event_store_spark.plans.pipeline5 import sq8_quantize
 
     idx = str(tmp_path / "sq8")
-    save_sq8_index(spark, sf_smoke, idx)
-    (mns, mxs), base_codes = load_sq8_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "sq8")
+    (mns, mxs), base_codes = _load(spark, idx)
 
     from event_store_spark.plans.ivf import _ivf_index
 
@@ -793,8 +727,8 @@ def test_sq8_encode_stream_matches_batch_and_saturates(spark, sf_smoke, tmp_path
     src = str(tmp_path / "new_vecs")
     new.write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = sq8_encode_stream(stream, mns, mxs, str(tmp_path / "adds"),
-                          str(tmp_path / "ck"))
+    q = VectorIndex.open(spark, idx).maintain(stream, str(tmp_path / "adds"),
+                                              str(tmp_path / "ck"))
     q.awaitTermination(120)
 
     got = {
@@ -827,11 +761,9 @@ def test_compaction_keeps_the_newest_addition_of_a_vec_id(
     """A vec_id added in two batches compacts to the later batch's row,
     on every run: the two additions used to tie in the fold, so either
     could survive."""
-    from event_store_spark.plans.ivf import compact_ivf_index
-
     idx = str(tmp_path / "ivf")
-    save_ivf_index(spark, sf_smoke, idx)
-    _, assigned = load_ivf_index(spark, idx)
+    VectorIndex.build(spark, sf_smoke, idx, "ivf")
+    _, assigned = _load(spark, idx)
     donors = assigned.where(F.col("vec_id").isin(2, 3)).orderBy("vec_id").collect()
     adds = SegmentLog(spark, str(tmp_path / "adds"))
     for batch_id, donor in enumerate(donors):
@@ -844,8 +776,8 @@ def test_compaction_keeps_the_newest_addition_of_a_vec_id(
             ("cell",),
         )
     for _ in range(3):
-        compact_ivf_index(spark, idx, adds.root)
-        _, merged = load_ivf_index(spark, idx)
+        VectorIndex.open(spark, idx).compact(adds.root)
+        _, merged = _load(spark, idx)
         got = merged.where(F.col("vec_id") == 9_000_000).collect()
         assert [(list(r.v), r.cell) for r in got] == [
             (list(donors[1].v), donors[1].cell)

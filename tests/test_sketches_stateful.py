@@ -325,7 +325,7 @@ def test_streaming_ivf_assignment_matches_batch(spark, sf_smoke, tmp_path):
 
     from event_store_spark.plans.generations import SegmentLog
     from event_store_spark.plans.ivf import _ivf_index
-    from event_store_spark.streaming.index import ivf_assign_stream
+    from event_store_spark.plans.vector_index import VectorIndex
     from event_store_spark.functions.vectors import as_double
 
     emb = load_table(spark, sf_smoke, "embeddings").select(
@@ -337,7 +337,8 @@ def test_streaming_ivf_assignment_matches_batch(spark, sf_smoke, tmp_path):
     emb.coalesce(2).write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
     idx = str(tmp_path / "ivf_index")
-    q = ivf_assign_stream(stream, centroids, idx, str(tmp_path / "ck"))
+    base = VectorIndex.build(spark, sf_smoke, str(tmp_path / "base"), "ivf")
+    q = base.maintain(stream, idx, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
     log = SegmentLog(spark, idx)

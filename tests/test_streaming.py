@@ -546,6 +546,43 @@ def test_replication_survives_checkpoint_loss(spark, tmp_path, store):
     assert t.select("lsn", "id").distinct().count() == 5  # no duplicates
 
 
+def test_compaction_redelivers_nothing_to_running_consumers(spark, tmp_path, store):
+    """`EventStore.compact` gives the compacted rows new file paths, which
+    a file source delivers again to consumers that keep their
+    checkpoints. The replicator and the subscription drop every row at or
+    below the cursor they committed, so each event still arrives once."""
+    topic = _seed(spark, store, n=15, topic="compacted_events", batches=3)
+    progress = ProgressStore(str(tmp_path / "progress.json"))
+    offsets = OffsetsTable(str(tmp_path / "offsets.json"))
+    rep = Replicator(store, str(tmp_path / "kafka"), progress, str(tmp_path / "rck"))
+    sub = Subscription(store, offsets, str(tmp_path / "sck"))
+    delivered: list[tuple[int, int]] = []
+
+    def record(df, batch_id):
+        delivered.extend((r["lsn"], r["id"]) for r in df.select("lsn", "id").collect())
+
+    def drain():
+        rep.replicate(topic).awaitTermination(120)
+        sub.run(topic, record).awaitTermination(120)
+
+    drain()
+    assert len(delivered) == 15
+    assert store.compact(topic, target_files=1) == 1
+    rows = [(f"k{i}", str(i), TS) for i in range(15, 20)]
+    store.append(
+        topic,
+        spark.createDataFrame(rows, "key string, payload string, timestamp timestamp"),
+    )
+    drain()
+
+    target = spark.read.parquet(rep.target_path(topic))
+    assert target.count() == 20
+    assert target.select("lsn", "id").distinct().count() == 20
+    assert len(delivered) == 20 and len(set(delivered)) == 20
+    assert rep.lag(topic) == 0
+    assert sub.lag(topic) == 0
+
+
 def test_streaming_hopping_window_matches_batch(spark, tmp_path, sf_smoke):
     """S-B extension: 2h/1h hopping windows over the streamed events table
     match the q56 batch analog on the same data."""
