@@ -5,7 +5,9 @@ scale to a multi-executor cluster: AQE on (runtime re-plan, skew-join
 handling, partition coalescing), shuffle partitions sized to the local core
 count rather than the 200 default, Arrow enabled for every pandas_udf
 boundary, UTC session timezone so timestamp semantics match the DuckDB
-oracle and are cluster-invariant.
+oracle and are cluster-invariant. A new local JVM runs one C2 compiler
+thread (:data:`DRIVER_JAVA_OPTIONS`): the JIT was most of the CPU of a
+short micro-batch or query.
 """
 
 from __future__ import annotations
@@ -26,6 +28,20 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     except (OSError, StopIteration, ValueError, IndexError):
         return "16g"
     return f"{min(16 * 1024, max(1024, kib // 2048))}m"
+
+
+#: HotSpot's compiler threads for a new local context's driver JVM (in
+#: local mode also the executor): one C1 and one C2 thread, where HotSpot
+#: picks one C1 and two C2 on 4 vCPUs. Spark code in a short micro-batch
+#: or query runs briefly, and compiling it was most of its CPU: a warm
+#: perfbench ``ingest_bulk`` cycle (3.2 CPU-s) spent 1.9-3.1 s in the JIT.
+#: One C2 thread compiles less, not later: on 4 vCPUs the JIT time up to
+#: the seventh cycle fell from 25.3 to 16.3 s, and the median ``op_cpu_s``
+#: from 3.25 to 2.64 s (``ingest_bulk``) and from 0.281 to 0.233 s
+#: (``analytics_suite``), while the sf0.1 ``bench.py`` inventory ran 3.7 %
+#: longer. Spark puts ``spark.driver.defaultJavaOptions`` before a
+#: caller's ``spark.driver.extraJavaOptions``.
+DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
 
 
 def python_worker_conf() -> dict[str, str]:
@@ -53,23 +69,20 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or all
     local cores. On a real cluster the master/conf come from spark-submit;
     everything set here is safe to carry over. A new local-master
-    context also gets :func:`python_worker_conf`; ``extra_conf`` overrides
-    any of it, and a reused active session is left as it is.
+    context also gets :func:`python_worker_conf` and one C2 compiler
+    thread (:data:`DRIVER_JAVA_OPTIONS`); ``extra_conf`` overrides any of
+    it, and a reused active session is left as it is.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     builder = (
         SparkSession.builder.appName(app_name)
-        # shuffle width defaults to the core count; at scale it must ride
-        # the INPUT (the standard cluster-sizing rule — a 100× corpus
-        # through a fixed 32-way shuffle makes every reducer sort 100×
-        # more rows), so the scale harness overrides it via env
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8))
-            ),
-        )
+        # shuffle width defaults to the core count (at least 8); at scale
+        # it must ride the INPUT (the standard cluster-sizing rule — a 100×
+        # corpus through a fixed 32-way shuffle makes every reducer sort
+        # 100× more rows), which AQE's initial width below allows;
+        # ``extra_conf`` can pin a width
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # let AQE pick each shuffle's width between 1 and 8×cores from the
@@ -112,7 +125,7 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]").config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
-        )
+        ).config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
         for k, v in python_worker_conf().items():
             builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

@@ -1,6 +1,6 @@
 """The Python daemon (``event_store_spark._pyworker``): its change-aware
-``invalidate_caches`` on its own, the ``get_spark`` wiring, and a live
-session's workers."""
+``invalidate_caches`` on its own, the ``get_spark`` wiring (daemon and
+driver JVM options), and a live session's workers and JVM."""
 
 from __future__ import annotations
 
@@ -193,11 +193,31 @@ def test_get_spark_daemon_wiring_yields(built):
     mine = {
         "spark.python.daemon.module": "pyspark.daemon",
         "spark.executorEnv.PYTHONPATH": "/elsewhere",
+        "spark.driver.defaultJavaOptions": "",
     }
     assert {k: built(extra_conf=mine)[k] for k in mine} == mine
     reused = built(active=object())
-    assert "spark.python.daemon.module" not in reused
-    assert "spark.executorEnv.PYTHONPATH" not in reused
+    assert not set(mine) & set(reused)
+
+
+def test_get_spark_gives_a_new_local_jvm_one_c2_thread(built):
+    """A caller's extraJavaOptions pass through as they are; Spark puts
+    them after the default options on the JVM's command line."""
+    extra = "-Djava.io.tmpdir=/elsewhere -XX:-UsePerfData"
+    opts = built(extra_conf={"spark.driver.extraJavaOptions": extra})
+    assert opts["spark.driver.defaultJavaOptions"] == "-XX:CICompilerCount=2"
+    assert opts["spark.driver.extraJavaOptions"] == extra
+
+
+def test_session_jvm_runs_one_c2_thread(spark):
+    """The live JVM took the option at its start: one C1 and one C2
+    thread, not HotSpot's own count for the machine."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    option = bean.getVMOption("CICompilerCount")
+    assert (option.getValue(), option.getOrigin().name()) == ("2", "VM_CREATION")
 
 
 def _tasks(spark, udf, schema: str):
