@@ -23,8 +23,9 @@ protocol, and its docstring describes it; :class:`TopicMutex` and
 `streaming.lock.LockManager` are leases too.
 
 Exactly-once composition: both stores record the ``batch_id`` that produced
-each update, so a `foreachBatch` sink can make redelivered batches no-ops
-(idempotent-by-batchId — the Spark answer to the reference's Kafka
+each update and, between a keyset batch's plan and its commit, the
+``pending`` batch (`streaming.keyset`): a restart reruns exactly that
+batch, under the same id (the Spark-file answer to the reference's Kafka
 transactions, SURVEY §2.8 X2/X3).
 """
 
@@ -334,7 +335,42 @@ class _AtomicJsonState:
             self._lease.drop(token)
 
 
-class OffsetsTable(_AtomicJsonState):
+class _ConsumerState(_AtomicJsonState):
+    """The bookkeeping of an event-log consumer: per topic one entry with
+    the committed ``cursor`` and ``batch_id`` and, while a keyset batch is
+    between its plan and its commit, the ``pending`` batch it planned
+    (`streaming.keyset`). The commit replaces the entry, which clears it."""
+
+    def _key(self, topic: str) -> str:
+        return topic
+
+    def _entry(self, data: dict, topic: str) -> dict:
+        v = data.get(self._key(topic))
+        return dict(v) if isinstance(v, dict) else {"cursor": v} if v else {}
+
+    def position(self, topic: str) -> tuple[Cursor, int, Cursor | None]:
+        """The committed cursor (zero before the first commit), the id of
+        the next batch and, if a planned batch has not committed, its high
+        water: the batch to rerun. A plan at or below the cursor (another
+        instance's, overtaken) is no batch to rerun."""
+        entry = self._entry(self._read(), topic)
+        cursor = Cursor.parse(entry["cursor"]) if entry.get("cursor") else Cursor.zero()
+        pending = entry.get("pending")
+        if pending and Cursor.parse(pending["cursor"]) > cursor:
+            return cursor, pending["batch_id"], Cursor.parse(pending["cursor"])
+        last = entry.get("batch_id")
+        return cursor, 0 if last is None else last + 1, None
+
+    def plan(self, topic: str, batch_id: int, hi: Cursor) -> None:
+        """Record batch ``batch_id`` with high water ``hi`` as pending: one
+        atomic write, before the batch's first side effect."""
+        pending = {"batch_id": batch_id, "cursor": hi.serialize()}
+        self._update(lambda data: data.update(
+            {self._key(topic): {**self._entry(data, topic), "pending": pending}}
+        ))
+
+
+class OffsetsTable(_ConsumerState):
     """events.topic_offsets analog; offset −1 = nothing consumed yet.
 
     Against a Kafka source the offset is the partition offset (a single
@@ -342,6 +378,9 @@ class OffsetsTable(_AtomicJsonState):
     consumption position is the ``(lsn, id)`` cursor — ``id`` alone is only
     unique within one append — so the cursor is stored alongside.
     """
+
+    def _key(self, topic: str) -> str:
+        return f"{topic}/0"
 
     def get(self, topic: str, partition: int = 0) -> int:
         return self._read().get(f"{topic}/{partition}", {}).get("offset", -1)
@@ -368,37 +407,14 @@ class OffsetsTable(_AtomicJsonState):
         return self._read().get(f"{topic}/{partition}", {}).get("batch_id")
 
     def last_ckpt_id(self, topic: str, partition: int = 0) -> str | None:
-        """Checkpoint-lineage marker recorded with the last upsert (see
-        `streaming.lineage`): batch ids are only comparable within one
-        checkpoint's lifetime, so consumers record WHICH checkpoint produced
-        the bookkeeping and disable batch-id skipping when it changes."""
+        """Checkpoint-lineage marker recorded with the last upsert of the
+        Kafka-source subscription (see `streaming.lineage`): its batch ids
+        are only comparable within one checkpoint's lifetime."""
         return self._read().get(f"{topic}/{partition}", {}).get("ckpt_id")
 
-    @staticmethod
-    def _entry(
-        offset: int,
-        batch_id: int | None,
-        cursor: Cursor | None,
-        ckpt_id: str | None,
-    ) -> dict:
-        entry = {"offset": offset, "batch_id": batch_id}
-        if cursor is not None:
-            entry["cursor"] = cursor.serialize()
-        if ckpt_id is not None:
-            entry["ckpt_id"] = ckpt_id
-        return entry
-
-    def upsert(
-        self,
-        topic: str,
-        offset: int,
-        partition: int = 0,
-        batch_id: int | None = None,
-        cursor: Cursor | None = None,
-        ckpt_id: str | None = None,
-    ) -> None:
-        entry = self._entry(offset, batch_id, cursor, ckpt_id)
-        self._update(lambda data: data.update({f"{topic}/{partition}": entry}))
+    def upsert(self, topic: str, offset: int, partition: int = 0, batch_id: int | None = None,
+               cursor: Cursor | None = None, ckpt_id: str | None = None) -> None:
+        self.upsert_many(topic, [(partition, offset, batch_id, cursor, ckpt_id)])
 
     def upsert_many(
         self,
@@ -414,10 +430,13 @@ class OffsetsTable(_AtomicJsonState):
         partitions' cursors are stale — widening the at-least-once window
         beyond the documented one batch (ADVICE r3).
         """
-        entries = {
-            f"{topic}/{partition}": self._entry(offset, batch_id, cursor, ckpt_id)
-            for partition, offset, batch_id, cursor, ckpt_id in rows
-        }
+        entries = {}
+        for partition, offset, batch_id, cursor, ckpt_id in rows:
+            entry = entries[f"{topic}/{partition}"] = {"offset": offset, "batch_id": batch_id}
+            if cursor is not None:
+                entry["cursor"] = cursor.serialize()
+            if ckpt_id is not None:
+                entry["ckpt_id"] = ckpt_id
         self._update(lambda data: data.update(entries))
 
 
@@ -472,40 +491,21 @@ class TicketStore(_AtomicJsonState):
         self._update(lambda data: data.update({topic: entry}))
 
 
-class ProgressStore(_AtomicJsonState):
+class ProgressStore(_ConsumerState):
     """Replication progress: last replicated cursor per topic (last-write-wins)."""
 
     def __init__(self, path: str):
         super().__init__(path, initial={NOOP_KEY: Cursor.zero().serialize()})
 
     def last_cursor(self, topic: str) -> Cursor | None:
-        v = self._read().get(topic)
-        return Cursor.parse(v["cursor"] if isinstance(v, dict) else v) if v else None
+        c = self._entry(self._read(), topic).get("cursor")
+        return Cursor.parse(c) if c else None
 
     def last_batch_id(self, topic: str) -> int | None:
-        v = self._read().get(topic)
-        return v.get("batch_id") if isinstance(v, dict) else None
+        return self._entry(self._read(), topic).get("batch_id")
 
-    def last_ckpt_id(self, topic: str) -> str | None:
-        """Checkpoint-lineage marker recorded with the last save: batch ids
-        are only comparable within one streaming checkpoint's lifetime, so
-        the replicator stores WHICH checkpoint produced the bookkeeping; a
-        new lineage starts from its floor (`streaming.eos.floor`)."""
-        v = self._read().get(topic)
-        return v.get("ckpt_id") if isinstance(v, dict) else None
-
-    def save(
-        self,
-        topic: str,
-        cursor: Cursor,
-        batch_id: int | None = None,
-        ckpt_id: str | None = None,
-    ) -> None:
-        entry = {
-            "cursor": cursor.serialize(),
-            "batch_id": batch_id,
-            "ckpt_id": ckpt_id,
-        }
+    def save(self, topic: str, cursor: Cursor, batch_id: int | None = None) -> None:
+        entry = {"cursor": cursor.serialize(), "batch_id": batch_id}
         self._update(lambda data: data.update({topic: entry}))
 
     def topics(self) -> list[str]:

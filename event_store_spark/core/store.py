@@ -40,7 +40,11 @@ role the reference's Postgres commit plays. Entries stamp their files with
 modification times that increase along the log, which is the order a file
 stream source picks them up in, so streams observe commit order. Entries
 name absolute paths, as Spark's sink does, so a store root cannot be moved
-as-is.
+as-is. Each line also carries its file's row count and (lsn, id) ``low``
+and ``high``, read from the file's footer when it is logged (Spark's
+readers ignore the extra fields); the keyset consumers plan their batches
+from them (`log_files`, `streaming.keyset`). A line logged before lines
+carried them has them read from its footer when it is planned.
 """
 
 from __future__ import annotations
@@ -53,6 +57,7 @@ import uuid
 from functools import reduce
 from operator import add
 from pathlib import Path
+from typing import NamedTuple
 from urllib.parse import quote, unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -154,15 +159,57 @@ def _read_log(log: str) -> tuple[int, list[dict]]:
         return latest, [json.loads(ln) for e in entries for ln in e.splitlines()[1:]]
 
 
+def _bounds(path: str) -> dict:
+    """The row count of the data file at ``path`` and, if it has rows,
+    their (lsn, id) ``low`` and ``high``, from its parquet footer (driver
+    side, no Spark job). A row group of one lsn (every append's) bounds
+    its rows exactly; one of several lsns (a compacted file's) is bounded
+    by its lowest lsn with its lowest id and its highest lsn with its
+    highest id, which may be wider than its rows, never narrower."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    leaf = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
+    lows, highs = [], []
+    for g in range(meta.num_row_groups):
+        group = meta.row_group(g)
+        if group.num_rows:
+            lsn, id_ = (group.column(leaf[c]).statistics for c in ("lsn", "id"))
+            lows.append([lsn.min, id_.min])
+            highs.append([lsn.max, id_.max])
+    if not lows:
+        return {"rows": 0}
+    return {"rows": meta.num_rows, "low": min(lows), "high": max(highs)}
+
+
+class LoggedFile(NamedTuple):
+    """A data file the commit log names, with its row count and (lsn, id)
+    bounds (None for a file with no rows)."""
+
+    path: str
+    rows: int
+    low: Cursor | None
+    high: Cursor | None
+
+    @classmethod
+    def of(cls, line: dict) -> LoggedFile:
+        """A log line's file; a line written before lines carried bounds
+        has them read from the file's footer."""
+        b = line if "rows" in line else _bounds(_local(line["path"]))
+        low, high = (Cursor(*b["low"]), Cursor(*b["high"])) if b["rows"] else (None, None)
+        return cls(line["path"], b["rows"], low, high)
+
+
 def _stamp(paths: list[str], live: list[dict]) -> list[dict]:
-    """Log lines (`SinkFileStatus`) for ``paths`` in pickup order. A file
-    stream source picks files up in modificationTime order and skips those
-    older than its newest by ``maxFileAge``, so the times rise strictly past
-    every ``live`` file's and never fall behind the wall clock."""
+    """Log lines (`SinkFileStatus`, plus each file's :func:`_bounds`) for
+    ``paths`` in pickup order. A file stream source picks files up in
+    modificationTime order and skips those older than its newest by
+    ``maxFileAge``, so the times rise strictly past every ``live`` file's
+    and never fall behind the wall clock."""
     t = max([int(time.time() * 1000) - 1] + [f["modificationTime"] for f in live])
     return [
         dict(path=_uri(p), size=os.path.getsize(p), isDir=False, modificationTime=t + i,
-             blockReplication=1, blockSize=32 << 20, action="add")
+             blockReplication=1, blockSize=32 << 20, action="add", **_bounds(p))
         for i, p in enumerate(paths, 1)
     ]
 
@@ -629,13 +676,12 @@ class EventStore:
         (lsn, id) ranges and the snapshot names them first, in range order,
         with modification times below those of every later file, so a NEW
         replication stream over the compacted topic still observes commit
-        order. An EXISTING stream keeps its checkpoint: its file source
-        sees the rewritten files as new and delivers their rows again, and
-        `Replicator.replicate` and `Subscription.run` drop every row at or
-        below the cursor they committed, so each event still reaches them
-        exactly once. A batch a stream planned over the replaced files
-        but had not run when they were deleted finds them gone, so
-        compact between a consumer's drains.
+        order. The keyset consumers (`Replicator`, `Subscription`) plan
+        from the files' logged (lsn, id) bounds and read only rows past
+        their cursor, so a compaction redelivers nothing to them. A batch
+        planned over the replaced files that reads them after they are
+        deleted fails, and its rerun reads the compacted files; compact
+        between a consumer's drains.
         Day-partitioned topics trade that away by construction: dt= is
         event-time while (lsn, id) is commit-time, so their files cannot be
         both day-partitioned and cursor-range-disjoint — day layout is the
@@ -651,21 +697,12 @@ class EventStore:
         disjoint or replication's ordered-visibility invariant breaks.
         """
         path = self.topic_path(topic)
-        log = os.path.join(path, LOG_DIR)
-        self._append_mutex.acquire(topic)
-        try:
-            _open_log(path)
-        finally:
-            self._append_mutex.release(topic)
+        log = self._log(topic)
         _, files = _read_log(log)
         if not files:
             return 0
         day_partitioned = self._is_day_partitioned(topic)
-        df = (
-            self.spark.read.schema(self.event_schema(topic))
-            .option("basePath", path)
-            .parquet(*(f["path"] for f in files))
-        )
+        df = self.read_files(topic, [f["path"] for f in files])
         if target_files is None:
             total = sum(f["size"] for f in files)
             target_files = max(1, total // TARGET_FILE_BYTES)
@@ -816,6 +853,37 @@ class EventStore:
                         )
                     )
         return zvalue(dims[0], dims[1])
+
+    def _log(self, topic: str) -> str:
+        """The topic's commit log directory, opened first (under the
+        append mutex) for a topic written before the log existed."""
+        path = self.topic_path(topic)
+        log = os.path.join(path, LOG_DIR)
+        if not os.path.isdir(log):
+            self._append_mutex.acquire(topic)
+            try:
+                _open_log(path)
+            finally:
+                self._append_mutex.release(topic)
+        return log
+
+    def log_files(self, topic: str) -> list[LoggedFile]:
+        """The files the topic's commit log names, in log order, with
+        their row counts and (lsn, id) bounds: what a keyset consumer
+        plans its batches from (`streaming.keyset`). Driver-side JSON;
+        no Spark job. A topic with no directory has no files."""
+        if not os.path.isdir(self.topic_path(topic)):
+            return []
+        return [LoggedFile.of(f) for f in _read_log(self._log(topic))[1]]
+
+    def read_files(self, topic: str, paths: list[str]) -> DataFrame:
+        """The rows of the topic's data files ``paths`` (log paths), with
+        the ticket's row schema and ``dt`` from the paths."""
+        return (
+            self.spark.read.schema(self.event_schema(topic))
+            .option("basePath", self.topic_path(topic))
+            .parquet(*paths)
+        )
 
     @staticmethod
     def _parquet_files(path: str) -> list[str]:

@@ -83,17 +83,21 @@ def write_pointer(path: str, text: str) -> None:
 
 
 def read_ledger(ledger: str) -> tuple[str, int] | None:
-    """The ``(lineage, batch_id)`` a ledger file holds, None if there is
-    none. A ledger of no known lineage (an artifact written before
-    ledgers existed) reads as lineage ''."""
+    """The ``(lineage, batch_id)`` a ledger file holds (batch -1: none
+    committed yet), None if there is no file. A file that holds no ledger
+    (a versioned table's ``_CURRENT`` from before ledgers) raises."""
     try:
         with open(ledger) as fh:
             parts = fh.read().split()
     except FileNotFoundError:
         return None
-    if len(parts) < 2 or not parts[1].isdigit():
-        return "", -1
-    return parts[0], int(parts[1])
+    try:
+        return parts[0], int(parts[1])
+    except (IndexError, ValueError):
+        raise ValueError(
+            f"{ledger} holds no exactly-once ledger; delete "
+            f"{os.path.dirname(ledger)} to rebuild it from the source"
+        ) from None
 
 
 def segment_wins(base: DataFrame, seg: DataFrame, key: str) -> DataFrame:
@@ -219,16 +223,21 @@ class VersionedTable:
         self.ledger = os.path.join(target_path, "_CURRENT")
         os.makedirs(target_path, exist_ok=True)
 
-    def _pointer(self) -> list[str]:
+    def _pointer(self) -> tuple[list[str], str | None]:
+        """The pointer's ledger tokens and its version name (None before
+        the first version: a sink's start writes its ledger alone)."""
         try:
             with open(self.ledger) as fh:
-                return fh.read().split()
+                held = fh.read().split()
         except FileNotFoundError:
-            return []
+            return [], None
+        if held and held[-1].startswith("_v"):
+            return held[:-1], held[-1]
+        return held, None
 
     def _current_version(self) -> str | None:
         """The committed version's directory name, None before the first."""
-        return (self._pointer() or [None])[-1]
+        return self._pointer()[1]
 
     def versions(self) -> list[str]:
         """Version directories still on disk, oldest→newest (the last is
@@ -254,8 +263,8 @@ class VersionedTable:
         flip keeps the ledger the pointer holds. Version names count up
         from the committed one, so a publish after a crash rewrites the
         crashed publish's directory."""
-        held = self._pointer()
-        version = f"_v{int(held[-1][2:]) + 1}" if held else "_v0"
+        held, current = self._pointer()
+        version = f"_v{int(current[2:]) + 1}" if current else "_v0"
         out_dir = os.path.join(self.target_path, version)
         if os.path.exists(out_dir):
             shutil.rmtree(out_dir)  # a crashed publish's directory
@@ -265,7 +274,7 @@ class VersionedTable:
         # version's old part files
         self.spark.catalog.refreshByPath(out_dir)
         if commit is None:
-            write_pointer(self.ledger, " ".join(held[:-1] + [version]))
+            write_pointer(self.ledger, " ".join(held + [version]))
         else:
             commit(version)
         for stale in self.versions()[: -(_KEEP_VERSIONS + 1)]:
@@ -302,8 +311,9 @@ class SegmentLog:
 
     A log written by an exactly-once sink is committed by the sink's
     ledger (``ledger``, by default ``root/_LEDGER``): a segment above the
-    ledger's batch id is not committed yet, and nothing lists it. A log
-    with no ledger file lists every marked segment."""
+    ledger's batch id is not committed yet, and nothing lists it; the
+    sink writes its ledger (batch -1) when it starts, before its first
+    segment. A log with no ledger file lists every marked segment."""
 
     def __init__(self, spark: SparkSession, root: str,
                  ledger: str | None = None) -> None:

@@ -21,8 +21,10 @@ alone decides from it:
   hands the batch a ``commit`` that writes the ledger through
   `generations.write_pointer` as the batch's commit point: its last
   write, or the ``_CURRENT`` flip of a `VersionedTable`, whose pointer
-  carries the ledger. Maintenance after the commit (segment folds,
-  version GC) is never needed by a replay.
+  carries the ledger. A sink with no ledger gets ``{lineage, -1}`` at
+  query start, so its artifact holds nothing committed until its first
+  batch commits. Maintenance after the commit (segment folds, version
+  GC) is never needed by a replay.
 - One rule for a lineage the ledger has not seen: raise, before the
   query starts, naming the checkpoint and the artifact. Never skip,
   never duplicate, never rebuild silently: only a file source
@@ -30,25 +32,12 @@ alone decides from it:
   automatic rebuild could drop history. The artifact is derived, so
   deleting it (and its checkpoint) rebuilds it from the source.
 
-The event-log consumers, `Replicator` and `Subscription`, recover an
-unseen lineage instead of refusing it, because the log's total (lsn, id)
-order lets them tell which rows an earlier lineage may have applied. One
-rule, `floor`, answers that for both:
-
-- A start on a lineage records its *floor* in the checkpoint, beside
-  the lineage marker (so it dies with the checkpoint): the (lsn, id)
-  cursor at or below which rows may already be applied. It is where the
-  consumer's bookkeeping says the earlier lineages got to (zero for a
-  brand-new consumer), and it is recorded again at each start until a
-  batch of the lineage commits, so a restored older checkpoint also
-  starts above what newer lineages applied.
-- Once the bookkeeping holds the lineage, every start reads the recorded
-  floor back (zero if there is none: a checkpoint made before floors
-  were recorded), so a restart inside a recovery keeps its floor.
-- A batch is skipped whole if `applied`. Rows above the floor are new;
-  rows at or below it are checked against what the consumer already
-  holds (the Subscription drops them, the Replicator writes only the
-  ones its target lacks).
+The files `Replicator` and `Subscription` are no streaming queries and
+keep no ledger: they batch by (lsn, id) keyset over the event log and
+rerun a planned, uncommitted batch exactly (`streaming.keyset`). The
+Kafka-source `Subscription` records its checkpoint's `lineage` with each
+offsets commit and skips batches by `applied` too; its per-partition
+(lsn, id) cursors make a new lineage's redelivered backlog harmless.
 
 The boundary is the commit: a sink's writes before it must be
 idempotent per batch (overwrite under the batch id), because a crash
@@ -63,18 +52,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from event_store_spark.core.cursor import Cursor
-from event_store_spark.core.state import atomic_write
 from event_store_spark.plans import generations
 from event_store_spark.streaming.lineage import checkpoint_lineage_id
 
 #: ``apply(df, batch_id, commit)``: runs a batch not yet applied and
 #: calls ``commit(*payload)`` as its commit point
 Apply = Callable[[DataFrame, int, Callable[..., None]], None]
-
-#: the floor file, beside the lineage marker inside a checkpoint
-FLOOR = "_esp_floor"
-
 
 def applied(held: tuple | None, lineage: str, batch_id: int) -> bool:
     """The one "already applied" rule: ``held``, the ``(lineage,
@@ -88,22 +71,11 @@ def applied(held: tuple | None, lineage: str, batch_id: int) -> bool:
     )
 
 
-def floor(
-    checkpoint: str, held: str | None, recover: Callable[[], Cursor | None]
-) -> tuple[str, Cursor]:
-    """The lineage of ``checkpoint`` and its floor. While ``held``, the
-    lineage of the consumer's bookkeeping, is another one, each start
-    records ``recover()`` (None: zero), where the bookkeeping says the
-    earlier lineages got to; once it holds this lineage, starts read the
-    recorded floor back (zero if none was recorded)."""
-    lineage = checkpoint_lineage_id(checkpoint)
-    path = os.path.join(checkpoint, FLOOR)
-    if held != lineage:
-        atomic_write(path, (recover() or Cursor.zero()).serialize())
-    elif not os.path.exists(path):
-        return lineage, Cursor.zero()
-    with open(path) as f:
-        return lineage, Cursor.parse(f.read())
+def lineage(checkpoint: str) -> str:
+    """The lineage of ``checkpoint``, for a consumer that keeps its own
+    ``(lineage, batch_id)`` bookkeeping (the Kafka-source `Subscription`)
+    and decides with `applied`."""
+    return checkpoint_lineage_id(checkpoint)
 
 
 def exactly_once(
@@ -124,6 +96,8 @@ def exactly_once(
             "source."
         )
     os.makedirs(artifact, exist_ok=True)
+    if held is None:
+        generations.write_pointer(ledger, f"{lineage} -1")
 
     def fn(df: DataFrame, batch_id: int) -> None:
         if applied(generations.read_ledger(ledger), lineage, batch_id):

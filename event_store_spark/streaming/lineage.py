@@ -8,13 +8,13 @@ skip the whole relisted backlog (never-processed events included) as a
 "stale" batch 0, or apply it again beside what it already wrote. The
 marker lives INSIDE the checkpoint dir so it dies with it.
 
-Only `streaming.eos` reads the marker, and it owns both rules built on
-it. A sink's ledger records the lineage with its last batch id, and a
-lineage the ledger has not seen raises before the query starts.
-`Replicator` and `Subscription` instead recover a new lineage from the
-event log's total (lsn, id) order: `eos.floor` records, beside this
-marker, the cursor at or below which the lineage's rows may already be
-applied, so the floor dies with the checkpoint too.
+Only `streaming.eos` reads the marker, and it owns the rule built on
+it: a sink's ledger records the lineage with its last batch id, and a
+lineage the ledger has not seen raises before the query starts. The
+Kafka-source `Subscription` records it with its offsets (`eos.lineage`).
+The files `Replicator` and `Subscription` have no checkpoint, so no
+lineage: their position is their bookkeeping's cursor and pending batch
+(`streaming.keyset`).
 
 (The reference never faces this: its progress cursor lives in one Kafka
 transaction with the data, `EventReplicatorWorker.java:184-208`.)

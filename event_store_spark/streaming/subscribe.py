@@ -1,34 +1,32 @@
-"""Subscribe: streaming consumption with offsets-table exactly-once (X3).
+"""Subscribe: consumption with offsets-table exactly-once (X3).
 
 Re-expresses `ReactorKafkaEventStore.subscribe` (reference:
 `ReactorKafkaEventStore.java:233-246` + intended-usage doc :214-232): the
-caller gets a stream of events and composes per-batch processing with an
-offset update so that a crash never skips work and never re-runs a batch
-whose offset committed (`ReactorKafkaEventStoreIT.java:262-317`). The
-residual window — crash after the processor's external effects but before
-the offset commit — re-runs that one batch, so projections into external
-systems must be idempotent per batch id (see `eos.py`); the reference
-avoids the window by putting projection+offset in one DB transaction.
+caller gets the topic's events batch by batch and composes per-batch
+processing with an offset update so that a crash never skips work and
+never re-runs a batch whose offset committed
+(`ReactorKafkaEventStoreIT.java:262-317`). The residual window — crash
+after the processor's external effects but before the offset commit —
+re-runs that one batch, same rows and same batch id, so projections into
+external systems must be idempotent per batch id; the reference avoids
+the window by putting projection+offset in one DB transaction.
 
-Spark shape: the event table is a file-source streaming DataFrame (the
-files each commit-log entry adds = new events, in append order);
-processing runs in ``foreachBatch``, which skips a batch the offsets
-table already covers (`streaming.eos.applied`, on the offsets table's
-lineage and batch id) and drops the rows at or below the checkpoint's
-floor (`streaming.eos.floor`: where an earlier lineage got to) or the
-offsets table's cursor (a compaction relists processed rows); the
-offsets table records the high-water cursor + batch id in one atomic
-update. The source checkpoint gives redelivery-with-same-id; the skip
-gives idempotence; the floor makes a lost checkpoint's relisted backlog
-deliver only never-processed rows, on every restart alike.
-`run_records` needs neither: its rule is the live cursor filter.
+Files source: keyset batches over the topic's commit log
+(`streaming.keyset`). A batch is the rows past the offsets table's cursor
+in the files the log names, up to a high water taken from the files'
+logged (lsn, id) bounds; the offsets entry records it as pending before
+the processor runs and commits its high water and batch id after, in one
+atomic update each. A restart reruns a pending batch exactly, and rows at
+or below the cursor are never read again, so neither a crash nor
+`EventStore.compact` redelivers a processed row. No checkpoint exists.
+``max_files_per_trigger`` bounds a batch (the analog of the reference's
+batched pulls, `EventReplicatorWorker.java:71,134`).
 
-Scale: the file source scales to object-store event logs (listing cost is
-amortized via maxFilesPerTrigger — the analog of the reference's batched
-pulls, `EventReplicatorWorker.java:71,134`); ``source="kafka"`` consumes a
-broker directly through `streaming.kafka` (format("kafka") + offsets-table
-seek + read_committed) with the SAME decoded event shape, so the EOS
-composition in `run()` is source-agnostic.
+Kafka source: ``source="kafka"`` consumes a broker directly through
+`streaming.kafka` (format("kafka") + offsets-table seek + read_committed)
+in a Structured Streaming query, with the SAME decoded event shape, so a
+processor is source-agnostic; its exactly-once rule is described in
+:meth:`Subscription.run`.
 """
 
 from __future__ import annotations
@@ -43,6 +41,7 @@ from event_store_spark.core.cursor import Cursor, keyset_after
 from event_store_spark.core.state import OffsetsTable
 from event_store_spark.core.store import EventStore
 from event_store_spark.streaming import eos
+from event_store_spark.streaming.keyset import Batch, Drain
 
 
 class Subscription:
@@ -78,18 +77,15 @@ class Subscription:
         #: whole EOS path below .load() is exercised without a broker.
         self.kafka_raw_source = kafka_raw_source
 
-    def _spark(self) -> SparkSession:
-        return self.store.spark
-
     def stream(self, topic: str) -> DataFrame:
         """Streaming DataFrame over the event table (decode-on-read, T6).
 
         ``source="kafka"`` consumes the broker directly: `format("kafka")`
         with read_committed isolation and `startingOffsets` seeked from the
         offsets table (S4/S5, `ReactorKafkaEventStore.java:233-291`);
-        ``source="files"`` streams the parquet event table. Both yield the
-        same decoded event shape, so `run()`'s EOS composition is
-        source-agnostic.
+        ``source="files"`` streams the parquet event table, for the
+        caller's own streaming queries (`run` reads keyset batches
+        instead). Both yield the same decoded event shape.
         """
         if self.source == "kafka":
             from event_store_spark.streaming.kafka import kafka_stream
@@ -99,14 +95,14 @@ class Subscription:
                 from event_store_spark.streaming.replicate import from_kafka_records
 
                 return from_kafka_records(
-                    kafka_source_to_records(self.kafka_raw_source(self._spark()))
+                    kafka_source_to_records(self.kafka_raw_source(self.store.spark))
                 )
             extra = {}
             if self.max_files_per_trigger:
                 # O2 batching: the offset-count analog of maxFilesPerTrigger
                 extra["maxOffsetsPerTrigger"] = str(self.max_files_per_trigger)
             return kafka_stream(
-                self._spark(),
+                self.store.spark,
                 self.bootstrap_servers,
                 topic,
                 self.offsets,
@@ -114,107 +110,64 @@ class Subscription:
                 **extra,
             )
         path = self.store.topic_path(topic)
-        reader = self._spark().readStream.schema(self.store.event_schema(topic))
+        reader = self.store.spark.readStream.schema(self.store.event_schema(topic))
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         return reader.parquet(path)
 
-    def run(
-        self,
-        topic: str,
-        processor: Callable[[DataFrame, int], None],
-        available_now: bool = True,
-    ) -> StreamingQuery:
-        """Process the topic exactly once per micro-batch.
+    def run(self, topic: str, processor: Callable[[DataFrame, int], None],
+            available_now: bool = True) -> Drain | StreamingQuery:
+        """Process the topic exactly once per batch.
 
         ``processor(batch_df, batch_id)`` is the user projection; after it
         returns, the offsets table records the batch's high-water (lsn, id)
-        cursor and batch id in one atomic update. Redelivered batches are
-        skipped before the processor runs.
+        cursor and batch id in one atomic update.
 
-        Checkpoint loss is survived, not silently mis-skipped: batch ids
-        count only in the checkpoint LINEAGE that stored them
-        (`streaming.lineage`), and a new lineage starts from the floor
-        `eos.floor` records — the offsets table's cursor, or zero for a
-        brand-new subscription. Every batch drops its rows at or below the
-        floor, or at or below the offsets table's committed cursor, before
-        the processor runs, so the relisted backlog of a lost checkpoint,
-        and the rows `EventStore.compact` rewrites under new file paths,
-        deliver only never-processed rows, and a restart inside that
-        recovery reuses the same floor. Without it the whole
-        backlog could land in a "stale" batch 0 and be skipped (ADVICE r3
-        — silent event loss). The processor is not called for a batch
-        with no rows left.
+        Files source: keyset batches over the topic's commit log
+        (`streaming.keyset`). Before the processor runs, the offsets
+        entry records the batch as pending (its id and high water); a
+        restart that finds it reruns exactly that batch, the same rows
+        under the same batch id, so a processor idempotent per batch id
+        applies each event once. Batch ids count up across restarts, and
+        the processor is never called with no rows. No checkpoint is read
+        or written.
 
-        Kafka source: Spark's Kafka producer is at-least-once, so individual
-        records can also be duplicated inside otherwise-new batches. The
-        kafka branch therefore (a) filters each batch by the per-partition
-        (lsn, id) keyset cursor BEFORE the processor runs — the consumer-side
-        dedupe the replicator's sink relies on (F1) — and (b) stores REAL
-        broker offsets per partition (max of the batch's offset column, duped
-        records included: they were consumed) so a restart's seek(last+1)
-        addresses actual broker positions, alongside the per-partition
-        high-water (lsn, id) cursor for the next keyset filter. The dedupe
-        cursor is per PARTITION, not global: Kafka only orders within a
-        partition, so a lagging partition's fresh rows may carry smaller
-        (lsn, id) than an advanced partition's cursor — a single topic-level
-        cursor would wrongly drop them. Those cursors hold in every
-        lineage, so the kafka branch needs no floor.
+        Kafka source: a streaming query on ``checkpoint_root``. Spark's
+        Kafka producer is at-least-once, so individual records can also be
+        duplicated inside otherwise-new batches. The kafka branch therefore
+        (a) skips a batch the offsets table already holds for the
+        checkpoint's lineage (`streaming.eos.applied`), (b) filters each
+        batch by the per-partition (lsn, id) keyset cursor BEFORE the
+        processor runs — the consumer-side dedupe the replicator's sink
+        relies on (F1) — and (c) stores REAL broker offsets per partition
+        (max of the batch's offset column, duped records included: they
+        were consumed) so a restart's seek(last+1) addresses actual broker
+        positions, alongside the per-partition high-water (lsn, id) cursor
+        for the next keyset filter. The dedupe cursor is per PARTITION, not
+        global: Kafka only orders within a partition, so a lagging
+        partition's fresh rows may carry smaller (lsn, id) than an advanced
+        partition's cursor — a single topic-level cursor would wrongly
+        drop them. Those cursors hold in every lineage, so a lost
+        checkpoint redelivers nothing the processor has seen.
         """
+        if self.source == "kafka":
+            return self._run_kafka(topic, processor, available_now)
 
-        lineage, floor = eos.floor(
-            f"{self.checkpoint_root}/{topic}",
-            self.offsets.last_ckpt_id(topic),
-            lambda: self.offsets.get_cursor(topic),
-        )
-
-        def process_and_offset(df: DataFrame, batch_id: int) -> None:
-            held = (self.offsets.last_ckpt_id(topic),
-                    self.offsets.last_batch_id(topic))
-            if eos.applied(held, lineage, batch_id):
-                return  # redelivery after crash — effects already applied
-            if self.source == "kafka":
-                self._kafka_process_and_offset(topic, processor, df, batch_id, lineage)
-                return
-            # rows at or below the committed cursor were processed, by
-            # this lineage or an earlier one: a compaction relists them
-            # under new file paths
-            done = self.offsets.get_cursor(topic)
-            # persist: the aggregate and the processor both consume the
-            # batch — without it the source files are scanned twice
-            df = df.where(keyset_after(max(floor, done or Cursor.zero()))).persist()
-            try:
-                hw, n = df.agg(
-                    F.max(F.struct("lsn", "id")), F.count(F.lit(1))
-                ).first()
-                if n:
-                    # never with no rows: a batch-id-keyed projection
-                    # must not see a new lineage's id for applied data
-                    processor(df, batch_id)
-            finally:
-                df.unpersist()
+        def apply(df, rows: int, batch_id: int, batch: Batch, rerun: bool) -> None:
+            if rows:
+                processor(df, batch_id)
             # the stored offset is a 0-based running consumed-row index
             # (Kafka-offset semantics), making the lag gauge pure
-            # arithmetic (A2); a batch with no rows keeps the cursor
-            cursor = Cursor(hw["lsn"], hw["id"]) if n else done
+            # arithmetic (A2)
             self.offsets.upsert(
-                topic,
-                self.offsets.get(topic) + n,
-                batch_id=batch_id,
-                cursor=cursor,
-                ckpt_id=lineage,
+                topic, self.offsets.get(topic) + rows, batch_id=batch_id, cursor=batch.hi
             )
 
-        return self._start(
-            topic, process_and_offset, f"{self.checkpoint_root}/{topic}", available_now
-        )
+        return Drain(self.store, topic, self.offsets, apply, self.max_files_per_trigger,
+                     available_now)
 
-    def run_records(
-        self,
-        topic: str,
-        handler: Callable[..., None],
-        available_now: bool = True,
-    ) -> StreamingQuery:
+    def run_records(self, topic: str, handler: Callable[..., None],
+                    available_now: bool = True) -> Drain:
         """Per-RECORD consumption with per-event offset transactionality —
         the reference's record-level reactive path
         (`ReactorKafkaEventStore.subscribe` returning a Flux the app acks
@@ -224,10 +177,9 @@ class Subscription:
         Each event is delivered to ``handler(row)`` in total (lsn, id)
         replay order, and the offsets table commits THAT record's cursor
         before the next delivery — a crash (or handler exception) resumes
-        at the exact record, not the batch boundary: every redelivered
-        frame is keyset-filtered by the LIVE cursor, so already-handled
-        rows never reach the handler again regardless of checkpoint
-        lineage. The residual window is ONE event (crash between the
+        at the exact record, not the batch boundary: every batch starts
+        past the committed cursor, so already-handled rows never reach the
+        handler again. The residual window is ONE event (crash between the
         handler's external effect and its cursor commit re-delivers that
         single record; the reference closes the same window by putting
         projection and offset in one DB transaction), so handlers project
@@ -251,33 +203,33 @@ class Subscription:
                 "order is the parquet event log's (lsn, id) contract"
             )
 
-        def process(df: DataFrame, batch_id: int) -> None:
-            cursor = self.offsets.get_cursor(topic) or Cursor.zero()
-            fresh = df.where(keyset_after(cursor)).orderBy("lsn", "id")
+        def apply(df, rows: int, batch_id: int, batch: Batch, rerun: bool) -> None:
             prev = self.offsets.get(topic)
-            n = 0
-            for row in fresh.toLocalIterator():
+            for n, row in enumerate(
+                df.orderBy("lsn", "id").toLocalIterator() if rows else (), 1
+            ):
                 handler(row)
-                n += 1
                 self.offsets.upsert(
-                    topic,
-                    prev + n,
-                    batch_id=batch_id,
-                    cursor=Cursor(row["lsn"], row["id"]),
+                    topic, prev + n, batch_id=batch_id, cursor=Cursor(row["lsn"], row["id"])
                 )
+            self.offsets.upsert(topic, prev + rows, batch_id=batch_id, cursor=batch.hi)
 
-        return self._start(
-            topic, process, f"{self.checkpoint_root}/{topic}_records", available_now
-        )
+        return Drain(self.store, topic, self.offsets, apply, self.max_files_per_trigger,
+                     available_now)
 
-    def _start(
-        self,
-        topic: str,
-        process: Callable[[DataFrame, int], None],
-        checkpoint: str,
-        available_now: bool,
-    ) -> StreamingQuery:
-        """Start ``process`` over the topic's stream on ``checkpoint``."""
+    def _run_kafka(self, topic: str, processor: Callable[[DataFrame, int], None],
+                   available_now: bool) -> StreamingQuery:
+        """The Kafka source's streaming query on ``checkpoint_root``."""
+        checkpoint = f"{self.checkpoint_root}/{topic}"
+        lineage = eos.lineage(checkpoint)
+
+        def process(df: DataFrame, batch_id: int) -> None:
+            held = (self.offsets.last_ckpt_id(topic),
+                    self.offsets.last_batch_id(topic))
+            if eos.applied(held, lineage, batch_id):
+                return  # redelivery after crash — effects already applied
+            self._kafka_process_and_offset(topic, processor, df, batch_id, lineage)
+
         writer = (
             self.stream(topic)
             .writeStream.foreachBatch(process)
@@ -287,14 +239,8 @@ class Subscription:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
-    def _kafka_process_and_offset(
-        self,
-        topic: str,
-        processor: Callable[[DataFrame, int], None],
-        df: DataFrame,
-        batch_id: int,
-        lineage: str,
-    ) -> None:
+    def _kafka_process_and_offset(self, topic: str, processor: Callable[[DataFrame, int], None],
+                                  df: DataFrame, batch_id: int, lineage: str) -> None:
         """Kafka-branch batch step: keyset-dedupe, project, record offsets.
 
         partition/offset ride in the decoded event's metadata map (see

@@ -9,8 +9,7 @@ per append and per compaction; and the consumers of the log.
 - a topic written before the log existed keeps its rows and its stream
   checkpoints across its first new append;
 - a crash at any side effect of the Replicator or the Subscription, then
-  a restart on the same checkpoint or on a lost one, replicates and
-  delivers every event exactly once.
+  a restart, replicates and delivers every event exactly once.
 """
 
 from __future__ import annotations
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrameWriter
 from event_store_spark.core import EventStore
 from event_store_spark.core import store as store_module
 from event_store_spark.core.state import OffsetsTable, ProgressStore, TicketStore
-from event_store_spark.streaming import Replicator, Subscription, eos
+from event_store_spark.streaming import Replicator, Subscription
 
 TS = datetime.datetime(2025, 1, 4, 21, 13, 41, 442000)
 TOPIC = "log_events"
@@ -333,8 +332,8 @@ class _Projection:
 
 @pytest.fixture
 def consumer_faults(monkeypatch):
-    """Counts the consumers' side effects — each floor record at a query's
-    start, the Replicator's target directory write and progress save, the
+    """Counts the consumers' side effects — each batch's pending plan, the
+    Replicator's target directory write and progress save, the
     Subscription's processor (the `_Projection` counts its own call) and
     offset upsert — and raises at the armed one. Returns the faults and
     the projection."""
@@ -355,7 +354,8 @@ def consumer_faults(monkeypatch):
     )
     monkeypatch.setattr(ProgressStore, "save", f.counted(ProgressStore.save))
     monkeypatch.setattr(OffsetsTable, "upsert", upsert_and_commit)
-    monkeypatch.setattr(eos, "atomic_write", f.counted(eos.atomic_write))
+    for book in (ProgressStore, OffsetsTable):
+        monkeypatch.setattr(book, "plan", f.counted(book.plan))
     return f, projection
 
 
@@ -374,13 +374,13 @@ def _drained(start) -> bool:
 @pytest.mark.parametrize("restart", ["same", "lost"])
 def test_consumer_crash_sweep(spark, tmp_path, consumer_faults, restart):
     """Make the k-th side effect of a replicate-then-subscribe run over
-    three appends (one micro-batch each) raise, for every k until a run
-    completes; then restart both consumers, on the same checkpoints or on
-    lost ones, reading everything in one micro-batch, so a lost
-    checkpoint's batch straddles its floor. After every restart the
-    ingest invariants hold: the subscriber committed each lsn's count and
-    CRC once, the target holds every event once, neither consumer lags,
-    and replay returns the events sent."""
+    three appends (one batch each) raise, for every k until a run
+    completes; then restart both consumers, on the same checkpoint roots
+    or on lost ones (which the consumers never created), with no batch
+    size cap, so a crashed batch is rerun and the rest read as one.
+    After every restart the ingest invariants hold: the subscriber
+    committed each lsn's count and CRC once, the target holds every event
+    once, neither consumer lags, and replay returns the events sent."""
     faults, projection = consumer_faults
     store = EventStore(spark, str(tmp_path / "store"))
     sent: dict[int, list[str]] = {}
@@ -414,8 +414,9 @@ def test_consumer_crash_sweep(spark, tmp_path, consumer_faults, restart):
             _drained(lambda: sub.run(TOPIC, projection))
         fired = faults.disarm()
         projection.staged.clear()
+        assert not (run / "ck").exists()
         if restart == "lost":
-            shutil.rmtree(run / "ck")
+            shutil.rmtree(run / "ck", ignore_errors=True)
         rep, sub = consumers(run, None)
         assert _drained(lambda: rep.replicate(TOPIC))
         assert _drained(lambda: sub.run(TOPIC, projection))
@@ -435,5 +436,5 @@ def test_consumer_crash_sweep(spark, tmp_path, consumer_faults, restart):
         assert _by_lsn(store) == sent, where
         if not fired:
             break
-    # two floors, then 3 batches x (directory, progress, processor, offsets)
-    assert k == 15
+    # 3 batches x (plan, directory, progress) + 3 x (plan, processor, offsets)
+    assert k == 19

@@ -783,6 +783,45 @@ def test_typed_table_hides_a_batch_its_ledger_did_not_commit(
     assert _rows(mat.table(), "event_id") == _rows(even, "event_id")
 
 
+def test_first_batch_without_its_ledger_commit_is_invisible(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """The sink writes its ledger (batch -1) when it starts, so a FIRST
+    batch whose segment is marked but whose ledger write fails is not
+    committed either: the typed table lists no segment (it listed the
+    batch's 500 events while the ledger appeared only with the first
+    commit)."""
+    from event_store_spark.streaming import eos
+
+    events = load_table(spark, sf_smoke, "events")
+    even = events.where(F.col("event_id") % 2 == 0)
+    mat = _typed_sink(spark, sf_smoke, str(tmp_path))
+    merge = eos.exactly_once(mat.checkpoint, mat.ledger, mat._apply)
+    assert generations.read_ledger(mat.ledger)[1] == -1
+    arm = _arm_crash(monkeypatch, "ledger")
+    arm()
+    with pytest.raises(OSError, match="injected crash at the ledger"):
+        merge(even, 0)
+    assert os.path.exists(os.path.join(mat.target_path, "_SEGMENT.0"))
+    assert mat._log.paths() == []
+    assert mat._log.read(schema=mat._project(even).schema).count() == 0
+
+
+def test_a_ledger_alone_is_no_version_yet(spark, tmp_path):
+    """A versioned table whose ``_CURRENT`` holds only a sink's starting
+    ledger has no version; its first publish is ``_v0`` and keeps the
+    ledger. A ``_CURRENT`` from before ledgers holds none and raises."""
+    table = VersionedTable(spark, str(tmp_path / "t"))
+    generations.write_pointer(table.ledger, "lineage -1")
+    assert table._current_version() is None
+    table._publish(spark.range(3))
+    assert table._current_version() == "_v0"
+    assert generations.read_ledger(table.ledger) == ("lineage", -1)
+    generations.write_pointer(table.ledger, "_v0")
+    with pytest.raises(ValueError, match="holds no exactly-once ledger"):
+        generations.read_ledger(table.ledger)
+
+
 def test_additions_reader_hides_segments_above_the_ledger(
     spark, sf_smoke, tmp_path
 ):
@@ -849,11 +888,11 @@ def test_only_generations_publishes():
     assert not pointers, pointers
 
 
-#: the writers of the streams that recover an unseen checkpoint from the
-#: event log's (lsn, id) order instead of a ledger
+#: the writers of the streams that keep their own (lineage, batch id)
+#: bookkeeping instead of a ledger: the Kafka-source Subscription, whose
+#: per-partition (lsn, id) cursors absorb an unseen checkpoint
 _CURSOR_STREAMS = {
-    "streaming/replicate.py": {"Replicator.replicate"},
-    "streaming/subscribe.py": {"Subscription._start"},
+    "streaming/subscribe.py": {"Subscription._run_kafka"},
 }
 #: the modules that may read a checkpoint's lineage marker
 _LINEAGE_READERS = {"streaming/eos.py", "streaming/lineage.py"}
@@ -913,26 +952,34 @@ def test_every_stream_runs_through_the_exactly_once_wrapper():
 
 def test_only_eos_reads_the_checkpoint_lineage():
     """No module outside `streaming/eos.py` and `streaming/lineage.py`
-    calls ``checkpoint_lineage_id``, and each cursor-stream module takes
-    its lineage and floor from `eos.floor`: a consumer cannot mint a
-    lineage and decide for itself which rows a new checkpoint may
-    already have applied."""
-    minted, floors = [], set()
-    for path in sorted(PKG.rglob("*.py")):
-        rel = path.relative_to(PKG).as_posix()
-        for node in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(node, ast.Call):
-                continue
-            if _callee(node) == "checkpoint_lineage_id" and rel not in _LINEAGE_READERS:
-                minted.append((rel, node.lineno))
-            if (
-                isinstance(node.func, ast.Attribute)
-                and node.func.attr == "floor"
-                and getattr(node.func.value, "id", None) == "eos"
-            ):
-                floors.add(rel)
+    calls ``checkpoint_lineage_id``: a consumer cannot mint a lineage
+    and decide for itself which batches a new checkpoint has applied."""
+    minted = [
+        (rel, node.lineno)
+        for path in sorted(PKG.rglob("*.py"))
+        if (rel := path.relative_to(PKG).as_posix()) not in _LINEAGE_READERS
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call) and _callee(node) == "checkpoint_lineage_id"
+    ]
     assert not minted, minted
-    assert floors == set(_CURSOR_STREAMS), floors
+
+
+def test_file_topic_consumers_start_no_stream():
+    """The keyset consumers (`streaming/keyset.py`, the Replicator, and
+    the Subscription outside its Kafka-source path) build no
+    ``writeStream`` and pass no ``checkpointLocation``."""
+    found = []
+    for rel in ("streaming/keyset.py", "streaming/replicate.py", "streaming/subscribe.py"):
+        for name, fn in _functions(ast.parse((PKG / rel).read_text())):
+            if name in _CURSOR_STREAMS.get(rel, ()):
+                continue
+            found += [
+                (rel, name, node.lineno)
+                for node in ast.walk(fn)
+                if (isinstance(node, ast.Attribute) and node.attr == "writeStream")
+                or (isinstance(node, ast.Constant) and node.value == "checkpointLocation")
+            ]
+    assert not found, found
 
 
 def _names(node) -> set[str]:

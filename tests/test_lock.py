@@ -18,7 +18,7 @@ import pytest
 
 from event_store_spark.core import EventStore
 from event_store_spark.core.state import Lease, ProgressStore
-from event_store_spark.streaming import LockManager, LockMonitor, Replicator, eos
+from event_store_spark.streaming import LockManager, LockMonitor, Replicator
 
 TS = datetime.datetime(2025, 1, 4, 12, 0, 0)
 
@@ -176,10 +176,10 @@ def test_second_replicator_refused(spark, tmp_path):
 
 
 def test_lock_loss_fails_streaming_query(spark, tmp_path, monkeypatch):
-    """Lease stolen mid-run (holder presumed dead) → the next micro-batch's
-    heartbeat fails the query before writing, mirroring LockMonitor's
+    """Lease stolen mid-run (holder presumed dead) → the next batch's
+    heartbeat fails the run before writing, mirroring LockMonitor's
     exit(1). The takeover is injected deterministically between this
-    instance's acquire and its first micro-batch."""
+    instance's acquire and its first batch."""
     store = EventStore(spark, str(tmp_path / "store"))
     store.append(
         "y_events",
@@ -194,15 +194,15 @@ def test_lock_loss_fails_streaming_query(spark, tmp_path, monkeypatch):
         store, str(tmp_path / "t"), progress, str(tmp_path / "ck"), lock=mine
     )
 
-    real_floor = eos.floor
+    real_acquire = mine.acquire
 
-    def floor_then_takeover(*args):
-        out = real_floor(*args)
+    def acquire_then_takeover():
+        held = real_acquire()
         with open(mine.path, "w") as f:  # another instance took the lease
             f.write("thief")
-        return out
+        return held
 
-    monkeypatch.setattr(eos, "floor", floor_then_takeover)
+    monkeypatch.setattr(mine, "acquire", acquire_then_takeover)
     q = rep.replicate("y_events")
     with pytest.raises(Exception, match="lock lost"):
         q.awaitTermination(120)

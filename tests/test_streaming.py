@@ -263,11 +263,10 @@ def test_subscription_checkpoint_loss_does_not_skip_new_events(spark, tmp_path, 
 
 
 def test_recovery_batch_unpersisted_when_processor_raises(spark, tmp_path, store):
-    """A batch's rows above the floor are persisted for the processor; a
-    processor that raises during recovery must not leave them cached for
-    the rest of the session (each crash-restart would pin one more
-    batch)."""
-    import shutil
+    """A processor that raises must not leave its batch cached for the
+    rest of the session (each crash-restart would pin one more batch),
+    and the failed batch commits nothing."""
+    import os
 
     topic = _seed(spark, store, n=4, batches=2)
     offsets = OffsetsTable(str(tmp_path / "offsets.json"))
@@ -277,7 +276,7 @@ def test_recovery_batch_unpersisted_when_processor_raises(spark, tmp_path, store
         topic,
         spark.createDataFrame([("k4", "4", TS)], "key string, payload string, timestamp timestamp"),
     )
-    shutil.rmtree(ckpt)  # checkpoint lost: the next run recovers
+    assert not os.path.exists(ckpt)  # the subscription keeps no checkpoint
 
     def boom(df, batch_id):
         raise RuntimeError("processor failed")
@@ -290,11 +289,11 @@ def test_recovery_batch_unpersisted_when_processor_raises(spark, tmp_path, store
     assert offsets.get(topic) == 3  # the failed batch committed nothing
 
 
-def test_subscription_restart_inside_recovery_keeps_the_floor(spark, tmp_path, store):
-    """Checkpoint loss, then a run that commits one batch and crashes on
-    the next, which straddles the old cursor. The restart on that
-    checkpoint reuses the floor the lineage recorded when it started, so
-    no event at or below the old cursor is delivered a second time."""
+def test_subscription_restart_reruns_the_pending_batch(spark, tmp_path, store):
+    """A run on a new checkpoint root whose processor crashes on its
+    batch: the batch stays pending in the offsets entry, and the restart
+    reruns exactly it, under the same batch id, so no event at or below
+    the committed cursor is delivered a second time and none is lost."""
     topic = "straddle_events"
     for i in range(3):
         store.append(
@@ -327,7 +326,8 @@ def test_subscription_restart_inside_recovery_keeps_the_floor(spark, tmp_path, s
     )
     with pytest.raises(Exception, match="crash inside recovery"):
         q.awaitTermination(120)
-    assert offsets.last_batch_id(topic) == 0  # one recovery batch committed
+    assert offsets.last_batch_id(topic) == 0  # the crashed batch committed nothing
+    assert offsets.position(topic)[1:] == (1, store.log_files(topic)[-1].high)
 
     sub = Subscription(store, offsets, ck2, max_files_per_trigger=2)
     sub.run(topic, record).awaitTermination(120)
@@ -409,45 +409,46 @@ def test_streaming_dedup_within_watermark(spark, tmp_path, sf_smoke):
     assert len(ids) == len(set(ids)) == 200  # one row per event, none lost
 
 
-def test_replication_absorbs_uncommitted_cursor_dirs(spark, tmp_path, store):
-    """Crash between a cursor-directory write and the progress save, plus
-    checkpoint loss, re-chunks batches: the rerun relists every file while
-    the orphan directory holds rows past the committed cursor. Recovery
-    anti-joins each batch against the target, so the orphan is ABSORBED as
-    committed data (its rows are not rewritten) and nothing duplicates —
-    order-independent, unlike the cursor-prune it replaces, which silently
-    lost rows whenever a listing race had reordered arrival."""
-    from event_store_spark.streaming.replicate import to_kafka_records
+def test_replication_rerun_overwrites_its_pending_directory(
+    spark, tmp_path, store, monkeypatch
+):
+    """A crash between a batch's directory write and its progress save
+    leaves the batch pending in the progress entry. The restart, on
+    another checkpoint root (the replicator keeps none), reruns exactly
+    that batch: it overwrites the same ``cursor=<hi>`` directory, so the
+    target holds every row once and the lag reads 0."""
+    import os
 
     topic = _seed(spark, store, n=4, batches=2)
     progress = ProgressStore(str(tmp_path / "progress.json"))
     rep = Replicator(store, str(tmp_path / "kafka"), progress, str(tmp_path / "ck1"))
     rep.replicate(topic).awaitTermination(120)
-
-    # new events arrive; a crashed run wrote them under an oddly-chunked
-    # cursor dir but died before saving progress
+    committed = progress.last_cursor(topic)
     store.append(
         topic,
         spark.createDataFrame(
             [("kN", "new", TS)], "key string, payload string, timestamp timestamp"
         ),
     )
-    committed = progress.last_cursor(topic)
-    orphan = f"{rep.target_path(topic)}/cursor=3_999"
-    to_kafka_records(
-        store.read_events(topic, after=committed)
-    ).write.parquet(orphan)
 
-    # fresh checkpoint → batch ids restart; rerun must not duplicate
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the progress save")
+
+    monkeypatch.setattr(ProgressStore, "save", crash)
+    with pytest.raises(RuntimeError, match="crash before the progress save"):
+        rep.replicate(topic).awaitTermination(120)
+    monkeypatch.undo()
+    after, batch_id, pending = progress.position(topic)
+    assert (after, batch_id) == (committed, 1) and pending is not None
+    dirs = sorted(os.listdir(rep.target_path(topic)))
+
     rep2 = Replicator(store, str(tmp_path / "kafka"), progress, str(tmp_path / "ck2"))
     rep2.replicate(topic).awaitTermination(120)
-    import os
-
-    assert os.path.isdir(orphan)  # absorbed as committed data, not pruned
+    assert sorted(os.listdir(rep2.target_path(topic))) == dirs  # same directory
     t = spark.read.parquet(rep2.target_path(topic))
-    assert t.count() == 5  # orphan's row counted once, nothing rewritten
+    assert t.count() == 5
     assert t.select("lsn", "id").distinct().count() == 5
-    # bookkeeping caught up past the orphan so the lag gauge reads clean
+    assert progress.last_cursor(topic) == pending
     assert rep2.lag(topic) == 0
 
 
@@ -487,17 +488,21 @@ def test_replication_keeps_rows_of_a_partial_orphan_after_checkpoint_loss(
 
 
 def test_replication_on_a_restored_checkpoint_keeps_rows_once(spark, tmp_path, store):
-    """A checkpoint restored from a backup after a newer lineage has
-    replicated past it: the progress store holds the newer lineage, so
-    the restored one starts from a floor above what that lineage wrote
-    and checks the files it relists against the target, instead of
-    rewriting their rows under other directory names."""
+    """A checkpoint directory restored from a backup (here one an earlier
+    streaming replicator left) after replication went on past it: the
+    replicator keeps its position in the progress store alone, so the
+    restored directory changes nothing and no row is written twice."""
+    import os
     import shutil
 
     topic = _seed(spark, store, n=4, batches=2)
     progress = ProgressStore(str(tmp_path / "progress.json"))
     target, ck1 = str(tmp_path / "kafka"), str(tmp_path / "ck1")
     Replicator(store, target, progress, ck1).replicate(topic).awaitTermination(120)
+    assert not os.path.exists(ck1)
+    os.makedirs(os.path.join(ck1, topic, "offsets"))
+    with open(os.path.join(ck1, topic, "offsets", "0"), "w") as f:
+        f.write("v1\n{}\n")
     shutil.copytree(ck1, str(tmp_path / "backup"))
     for i in range(2):
         store.append(
@@ -742,27 +747,77 @@ def test_run_records_resumes_mid_batch_after_handler_crash(spark, tmp_path, stor
     assert handled == ["0", "1", "2", "3", "4"]  # exactly once each, in order
 
 
-def test_ticketed_stream_readers_start_no_job(spark, tmp_path, store, monkeypatch, jobs_started):
-    """Replicator.replicate and Subscription.stream take the row schema
-    from the topic's ticket: neither starts a Spark job before its query
-    runs (a footer-inference read used to, on every call)."""
-    from pyspark.sql.streaming.readwriter import DataStreamWriter
-
+def test_ticketed_stream_readers_start_no_job(spark, tmp_path, store, jobs_started):
+    """Subscription.stream takes the row schema from the topic's ticket:
+    building the stream starts no Spark job (a footer-inference read used
+    to, on every call)."""
     topic = _seed(spark, store)
-    started = []
-    monkeypatch.setattr(
-        DataStreamWriter, "start", lambda self, *a, **k: started.append(jobs_started())
-    )
-    rep = Replicator(
-        store,
-        str(tmp_path / "target"),
-        ProgressStore(str(tmp_path / "progress.json")),
-        str(tmp_path / "rckpt"),
-    )
     sub = Subscription(store, OffsetsTable(str(tmp_path / "offsets.json")), str(tmp_path / "sckpt"))
     before = jobs_started()
-    rep.replicate(topic)
     stream = sub.stream(topic)
-    assert started == [before]
     assert jobs_started() == before
     assert stream.isStreaming and stream.schema == store.event_schema(topic)
+
+
+def test_file_topic_consumers_start_no_stream_and_keep_no_checkpoint(
+    spark, tmp_path, store, monkeypatch
+):
+    """The Replicator (both sinks) and the files Subscription (run and
+    run_records) start no DataStreamWriter and create nothing under their
+    checkpoint roots: their position is their bookkeeping entry alone."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("a file-topic consumer started a streaming query")
+
+    monkeypatch.setattr(DataStreamWriter, "start", refuse)
+    topic = _seed(spark, store, n=4)
+    ck = tmp_path / "ck"
+    produced = []
+    for sink in ("files", "kafka"):
+        Replicator(
+            store, str(tmp_path / "target"), ProgressStore(str(tmp_path / f"{sink}.json")),
+            str(ck / sink), sink=sink, bootstrap_servers="injected:9092",
+            kafka_record_sink=lambda out: produced.append(out.count()),
+        ).replicate(topic).awaitTermination(120)
+    seen = []
+    sub = Subscription(store, OffsetsTable(str(tmp_path / "offsets.json")), str(ck / "sub"))
+    sub.run(topic, lambda df, batch_id: seen.append(df.count())).awaitTermination(120)
+    records = Subscription(store, OffsetsTable(str(tmp_path / "rec.json")), str(ck / "rec"))
+    records.run_records(topic, seen.append).awaitTermination(120)
+    assert produced == [4] and seen[0] == 4 and len(seen) == 5
+    assert spark.read.parquet(f"{tmp_path}/target/{topic}").count() == 4
+    assert not ck.exists()
+
+
+def test_keyset_batches_run_only_their_writes(spark, tmp_path, store, jobs_started):
+    """Job budget of one keyset batch over a one-file append: the
+    replicator runs 1 Spark job (its directory write) and the
+    subscription only its processor's; each batch leaves one progress
+    record on the handle, with the durations a StreamingQuery reports."""
+    topic = _seed(spark, store, n=3, batches=1)
+    hw = store.high_water(topic)
+    rep = Replicator(
+        store, str(tmp_path / "target"), ProgressStore(str(tmp_path / "progress.json")),
+        str(tmp_path / "rck"),
+    )
+    sub = Subscription(store, OffsetsTable(str(tmp_path / "offsets.json")), str(tmp_path / "sck"))
+    before = jobs_started()
+    q = rep.replicate(topic)
+    q.awaitTermination(120)
+    assert jobs_started() - before == 1
+    before = jobs_started()
+    s = sub.run(topic, lambda df, batch_id: df.collect())
+    s.awaitTermination(120)
+    assert jobs_started() - before == 1
+    for handle in (q, s):
+        (p,) = handle.recentProgress
+        assert handle.lastProgress == p and not handle.isActive
+        assert (p["batchId"], p["numInputRows"], p["numFiles"]) == (0, 3, 1)
+        assert p["startOffset"] == Cursor.zero().serialize()
+        assert p["endOffset"] == Cursor(hw["lsn"], hw["max_id"]).serialize()
+        assert set(p["durationMs"]) == {"triggerExecution", "latestOffset", "addBatch", "walCommit"}
+    before = jobs_started()
+    assert rep.replicate(topic).recentProgress == []  # nothing new: no job
+    assert sub.run(topic, lambda df, batch_id: None).recentProgress == []
+    assert jobs_started() == before

@@ -10,8 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from event_store_spark.core import EventStore
-from event_store_spark.core.state import OffsetsTable, ProgressStore
-from event_store_spark.streaming import Replicator, Subscription
+from event_store_spark.core.state import OffsetsTable
+from event_store_spark.streaming import Subscription, eos
 from event_store_spark.streaming.metrics import ProgressMetricsListener
 from event_store_spark.streaming.replicate import from_kafka_records, to_kafka_records
 from event_store_spark.streaming.subscribe import kafka_starting_offsets
@@ -77,13 +77,23 @@ def test_kafka_starting_offsets_seek(tmp_path):
 
 
 def test_progress_metrics_listener(spark, store, tmp_path):
+    """The listener counts the input rows of a derived sink's streaming
+    query (an `eos.start` query over the topic's stream)."""
     topic = _seed(spark, store)
     listener = ProgressMetricsListener()
     spark.streams.addListener(listener)
     try:
-        progress = ProgressStore(str(tmp_path / "progress.json"))
-        rep = Replicator(store, str(tmp_path / "kafka"), progress, str(tmp_path / "ck"))
-        q = rep.replicate(topic)
+        offsets = OffsetsTable(str(tmp_path / "offsets.json"))
+        stream = Subscription(store, offsets, str(tmp_path / "sck")).stream(topic)
+
+        def count_then_commit(df, batch_id, commit):
+            df.count()
+            commit()
+
+        q = eos.start(
+            stream, str(tmp_path / "ck"), str(tmp_path / "sink" / "_LEDGER"),
+            count_then_commit,
+        )
         q.awaitTermination(120)
         # listener callbacks are async; poll briefly
         import time
