@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.plans.registry import ORACLE, QUERIES, register
-from event_store_spark.tables import forget, memo
 
 #: method label → registered query whose top-5 ids to score
 ANN_METHODS = {
@@ -62,45 +61,12 @@ def _recall_oracle() -> str:
     """
 
 
-# The composed report's PLAN is memoized per session (`tables.memo`):
-# building the seven-subtree union costs ~1.3 s of py4j round-trips —
-# 60% of the report's steady-state wall-clock (VERDICT r7 #4) — and the
-# composition is deterministic per (session, sf_dir). Every call returns
-# a fresh `select("*")` over it; no results are cached, and every call
-# re-runs the plan.
 @register("ann_recall_report", oracle=_recall_oracle())
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@5 per ANN method against the exact cosine top-5 (q33).
-
-    The union evaluates seven embedding subtrees in ONE job; seeding the
-    session's shared cached embeddings scan first means each subtree
-    reads the corpus from storage once total instead of once per method
-    (VERDICT r7 #4 — the report is the only seeder; standalone queries
-    keep their pushdown-friendly parquet scans)."""
-    from event_store_spark.plans.llm import share_embeddings
-
-    def build() -> DataFrame:
-        # the share is scoped to THIS composition: subtrees built inside
-        # the try capture the shared scan; the finally un-seeds it AND
-        # unpersists (Spark's CacheManager substitutes a cached relation
-        # into ANY later plan matching its logical plan, so a
-        # still-persisted table would silently swap every subsequent
-        # embedding query's pruned parquet scan for the full-width cache —
-        # column pruning lost; the plan-shape suite pins dedup_embedding's
-        # pruned scan). The report's steady-state speed comes from the
-        # PLAN memo; executing the memoized plan re-reads the small scan
-        # either way.
-        shared = share_embeddings(spark, sf_dir)
-        try:
-            return _compose_report(spark, sf_dir)
-        finally:
-            forget(spark, (share_embeddings, sf_dir))
-            shared.unpersist()
-
-    # a fresh QueryExecution per call: handing back the memoized object
-    # would let its second collect() reuse the first run's materialized
-    # AQE shuffle stages (cross-call result reuse)
-    return memo(spark, (ann_recall_report, sf_dir), build).select("*")
+    """recall@5 per ANN method against the exact cosine top-5 (q33): one
+    union of the methods' registered plans, evaluated in ONE job over the
+    memoized index builds."""
+    return _compose_report(spark, sf_dir)
 
 
 def _compose_report(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,9 +27,6 @@ CURSOR_ID = 5000
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pinned hot projection (tables.hot_table): these operators re-scan
-    # events several times per plan, and at sf0.1 the repeated parquet
-    # materialization IS the job floor (VERDICT r10 #4)
     return hot_table(spark, sf_dir, "events")
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_store_spark.plans.generations import LEDGER, GenerationPair, SegmentLog
-from event_store_spark.tables import load_table, memo, side_table
+from event_store_spark.tables import load_table, side_table
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -254,12 +254,8 @@ def bm25_index(spark: SparkSession, sf_dir: str) -> PostingsIndex:
 
     # the name's layout version orphans caches written by older code
     # (the round-9 flat layout had no generation dir / sum_dl)
-    return memo(
-        spark,
-        (bm25_index, sf_dir),
-        lambda: PostingsIndex.open(
-            spark, side_table(spark, sf_dir, "documents", "postings-v2", write)
-        ),
+    return PostingsIndex.open(
+        spark, side_table(spark, sf_dir, "documents", "postings-v2", write)
     )
 
 

@@ -211,32 +211,6 @@ def minhash_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo(spark, (minhash_cc_labels, sf_dir), build)
 
 
-# Shared embeddings scan, seeded by `share_embeddings` into the session
-# store (`tables.memo`): when seeded, every _emb consumer serves from ONE
-# cached scan instead of re-reading parquet per plan subtree. Only the
-# evaluation harness seeds it (ann_recall_report unions seven embedding
-# subtrees in one job — VERDICT r7 #4); standalone queries keep the plain
-# pushdown-friendly parquet scan, which is the right default at corpus
-# scale where whole-table caching would thrash executor storage.
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    got = memo(spark, (share_embeddings, sf_dir))
-    if got is not None:
-        return got
-    return load_table(spark, sf_dir, "embeddings")
-
-
-def share_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seed (idempotently) the session's shared cached embeddings scan.
-    Deterministic reuse — the cache holds exactly what the parquet scan
-    yields, so consumers' results cannot change; eval-path-sized by
-    intent (an eval runs over a sampled query set at 100 TB)."""
-    return memo(
-        spark,
-        (share_embeddings, sf_dir),
-        lambda: load_table(spark, sf_dir, "embeddings").cache(),
-    )
-
-
 #: dedup_embedding's target mean bucket occupancy: planes are sized so the
 #: expected bucket holds about this many vectors (the knob that makes bucket
 #: count track corpus size instead of staying fixed — VERDICT r4 item 3)
@@ -473,64 +447,50 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cand.agg(F.count(F.lit(1)).cast("bigint").alias("near_dup_pairs"))
 
 
-# blocked SimHash signature tables, memoized + cached per (session,
-# corpus, form) — the SAME persisted-signature-index accounting as
-# `_minhash_signatures` above and `plans.dedup_index`'s simhash kind
-# (which writes exactly this block-partitioned layout to storage): the
-# signature build is deterministic (md5 → fixed bit rule), built once
-# per corpus in production and probed by every dedup pass, so the
-# per-execution rebuild the r12 plan paid (a localCheckpoint of the
-# scan→md5→sum pipeline on every invocation, ~1.4-2.0 s of each rep's
-# 2.1-2.5 s at sf0.1) charged an ingest-time index build to every
-# lookup. The r12 skew note stands: the repartition BEFORE the cache
-# spreads the streamed side of the pair probe (one 8-bit block value
-# holds 65% of docs at sf0.1), and the cached partitioning preserves
-# that spread for every consumer.
+# blocked SimHash signature tables: the repartition spreads the streamed
+# side of the pair probe (one 8-bit block value holds 65% of docs at
+# sf0.1).
 
 
 def _simhash_blocked32(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sig_int, block_idx, block) — the 32-bit blocked SimHash
-    signature index (4 pigeonhole blocks of 8 bits), cached."""
-
-    def build():
-        docs = _docs(spark, sf_dir)
-        token_hashes = docs.select(
-            "doc_id", F.explode(whitespace_tokens("text")).alias("t")
-        ).select("doc_id", F.md5("t").alias("h"))
-        # one SUM(±1) aggregate column per signature bit over the token rows
-        # (map-side partials, no 32× position explode) — see dedup_simhash64.
-        # Bit p = high bit of hex char p; the full 32-char digest parsed once
-        # into 4 int chunks (chunk c = chars 8c-7..8c), then one shift+mask
-        # per bit — same collapse as _simhash64_chunks, same bit values as
-        # the substr-isin('89abcdef') form the oracle keeps.
-        chunked = token_hashes.select(
-            "doc_id",
-            *[
-                F.conv(F.expr(f"substr(h, {8 * c + 1}, 8)"), 16, 10)
-                .cast("long")
-                .alias(f"c{c + 1}")
-                for c in range(4)
-            ],
-        )
-        sig = _simhash_sig(
-            chunked,
-            32,
-            lambda p: (
-                f"(shiftright(c{(p - 1) // 8 + 1}, {31 - 4 * ((p - 1) % 8)})"
-                " & 1) = 1"
-            ),
-        )
-        # 4 pigeonhole blocks of 8 bits; Hamming distance as one codegen op:
-        # parse the bit string once per row, then bit_count(xor) per pair.
-        return (
-            sig.withColumn("sig_int", F.conv("sig", 2, 10).cast("long"))
-            .withColumn("block_idx", F.explode(F.sequence(F.lit(0), F.lit(3))))
-            .withColumn("block", F.expr("substr(sig, block_idx * 8 + 1, 8)"))
-            .repartition(2 * spark.sparkContext.defaultParallelism)
-            .cache()
-        )
-
-    return memo(spark, (_simhash_blocked32, sf_dir), build)
+    signature index (4 pigeonhole blocks of 8 bits), built per call: its
+    one registered query reads it once."""
+    docs = _docs(spark, sf_dir)
+    token_hashes = docs.select(
+        "doc_id", F.explode(whitespace_tokens("text")).alias("t")
+    ).select("doc_id", F.md5("t").alias("h"))
+    # one SUM(±1) aggregate column per signature bit over the token rows
+    # (map-side partials, no 32× position explode) — see dedup_simhash64.
+    # Bit p = high bit of hex char p; the full 32-char digest parsed once
+    # into 4 int chunks (chunk c = chars 8c-7..8c), then one shift+mask
+    # per bit — same collapse as _simhash64_chunks, same bit values as
+    # the substr-isin('89abcdef') form the oracle keeps.
+    chunked = token_hashes.select(
+        "doc_id",
+        *[
+            F.conv(F.expr(f"substr(h, {8 * c + 1}, 8)"), 16, 10)
+            .cast("long")
+            .alias(f"c{c + 1}")
+            for c in range(4)
+        ],
+    )
+    sig = _simhash_sig(
+        chunked,
+        32,
+        lambda p: (
+            f"(shiftright(c{(p - 1) // 8 + 1}, {31 - 4 * ((p - 1) % 8)})"
+            " & 1) = 1"
+        ),
+    )
+    # 4 pigeonhole blocks of 8 bits; Hamming distance as one codegen op:
+    # parse the bit string once per row, then bit_count(xor) per pair.
+    return (
+        sig.withColumn("sig_int", F.conv("sig", 2, 10).cast("long"))
+        .withColumn("block_idx", F.explode(F.sequence(F.lit(0), F.lit(3))))
+        .withColumn("block", F.expr("substr(sig, block_idx * 8 + 1, 8)"))
+        .repartition(2 * spark.sparkContext.defaultParallelism)
+    )
 
 
 def _simhash_blocked64(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1064,7 +1024,9 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     DEDUP_TARGET_BUCKET instead of n/16 (round 4 fixed planes=4 and the
     guard became the binding constraint at scale); the oracle SQL computes
     the identical formula, so both sides bucket identically at any SF."""
-    emb = _emb(spark, sf_dir).select("vec_id", as_double("embedding").alias("v"))
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     planes = adaptive_planes(emb.count())
     return embedding_near_dup_pairs(
         emb, planes=planes, max_bucket=DEDUP_MAX_BUCKET, vectorized=True
@@ -1094,7 +1056,7 @@ def dedup_embedding_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking attribute (URL domain, shard, source). Bucket sizes are the
     key's cardinality profile, so this is only safe when that profile is
     known-bounded; the unlabeled/default path is `dedup_embedding`."""
-    emb = _emb(spark, sf_dir).select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         as_double("embedding").alias("v"),
@@ -1128,7 +1090,9 @@ def q33_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a JVM fold per row; top-5 is TakeOrderedAndProject. At 100 TB this plan
     is a full scan by design — `ann_lsh_topk` is the sublinear variant.
     """
-    emb = _emb(spark, sf_dir).select("vec_id", as_double("embedding").alias("v"))
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     target = emb.where(F.col("vec_id") == 0).select(F.col("v").alias("tv"))
     return (
         emb.where(F.col("vec_id") != 0)
@@ -1168,7 +1132,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 buckets). The scale path for similarity search: the bucket equi-join
     prunes ~15/16 of the corpus before any scoring; real deployments swap
     the planes for random projections and probe multiple buckets."""
-    emb = _emb(spark, sf_dir).select("vec_id", as_double("embedding").alias("v"))
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     bucketed = emb.withColumn("bucket", hyperplane_bucket(F.col("v")))
     target = bucketed.where(F.col("vec_id") == 0).select(
         F.col("v").alias("tv"), F.col("bucket").alias("tb")
@@ -1234,7 +1200,9 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own bucket — a candidate's bucket matches at most one probe, so no
     pair dedup is needed. Scale path: probes stay O(bits) while the scored
     fraction stays sublinear."""
-    emb = _emb(spark, sf_dir).select("vec_id", as_double("embedding").alias("v"))
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     bucketed = emb.withColumn("bucket", hyperplane_bucket(F.col("v")))
     target = bucketed.where(F.col("vec_id") == 0).select(
         F.col("v").alias("tv"), F.col("bucket").alias("tb")
@@ -1589,7 +1557,9 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the query side stays a broadcast until millions of queries,
     at which point both sides hash-partition on the bucket — the same plan
     with the broadcast hint removed."""
-    emb = _emb(spark, sf_dir).select("vec_id", as_double("embedding").alias("v"))
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     bucketed = emb.withColumn("bucket", hyperplane_bucket(F.col("v")))
     queries = bucketed.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("bucket").alias("qb")

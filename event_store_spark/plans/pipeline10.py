@@ -304,7 +304,7 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-type median tables are O(#event_types) rows — a bounded
     # driver fold (the k-centroids discipline), inlined as literal maps so
     # neither pass pays a broadcast-exchange build job: three sequential
-    # aggregates over the cached projection and nothing else.
+    # aggregates over the events projection and nothing else.
     ev = hot_table(spark, sf_dir, "events").select("event_type", "value")
     med_rows = ev.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.5)).alias("med")
@@ -454,10 +454,9 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a failed gate carries its violation COUNT — the triage number —
     not just a boolean."""
 
-    # hot pinned narrow projections (VERDICT r10 #4): six sub-plans scan
-    # five tables; the RI checks read customer/orders twice each. lineitem
-    # is cached ONLY as the 2-column projection the checks need — never
-    # the wide fact table (tables.hot_table docstring).
+    # narrow projections: six sub-plans scan five tables; the RI checks
+    # read customer/orders twice each, and lineitem only as the 2 columns
+    # the checks need
     cust = hot_table(spark, sf_dir, "customer", ("c_custkey",))
     orders = hot_table(spark, sf_dir, "orders", ("o_custkey", "o_orderkey"))
     li = hot_table(spark, sf_dir, "lineitem", ("l_orderkey", "l_quantity"))

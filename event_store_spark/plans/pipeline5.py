@@ -275,11 +275,7 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/ivf.py); scoring stays brute-force-over-candidates by design —
     compose with the LSH/IVF pruners for sublinear scans; top-5 is
     TakeOrdered, never a global sort."""
-    from event_store_spark.plans.llm import _emb
-
-    # llm._emb: serves from the session's shared cached scan when the
-    # eval harness has seeded it (VERDICT r7 #4); plain scan otherwise
-    emb = _emb(spark, sf_dir).select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
     lims = (

@@ -19,19 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
+from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import load_table, memo
+from event_store_spark.tables import load_table
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pinned hot projection — but ONLY under the real loader: tests inject
-    # in-memory corpora by patching this module's load_table, and those
-    # frames must not be memoized under a shared sf_dir key
-    from event_store_spark import tables as _tables
-
-    if load_table is _tables.load_table:
-        return _tables.hot_table(spark, sf_dir, "events")
+    # this module's load_table: tests inject in-memory corpora by patching it
     return load_table(spark, sf_dir, "events")
 
 
@@ -298,41 +292,25 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     NDV for `approx_count_distinct` and the whole report collapses to
     a map-side scalar agg; exact kept for oracle parity.
     """
-    # (col, value) count-table memo (VERDICT r9 #3 "count-table
-    # memoization the rest"): the heavy NDV-bounded aggregate — the only
-    # stage that touches corpus-sized data — is built once per
-    # (session, corpus, column set) and cached, the _minhash_signatures
-    # pattern; every later call derives the 4-row report from it. In
-    # production this table IS the ANALYZE-stats artifact a lakehouse
-    # maintains at write time (Delta/Iceberg column stats).
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        tagged = li.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("col_name"),
-                            # explicit double pins the array element type:
-                            # PROFILE_COLS are all numeric today, but a
-                            # diverging column type must not become an
-                            # analysis error in the array() (ADVICE r10)
-                            F.col(c).cast("double").alias("v"),
-                        )
-                        for c in PROFILE_COLS
-                    ]
-                )
-            ).alias("e")
-        ).select("e.col_name", "e.v")
-        return (
-            tagged.groupBy("col_name", "v")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            # coalesce-before-cache: see tokenized.source_gram_masks
-            .coalesce(spark.sparkContext.defaultParallelism)
-            .cache()
-        )
-
-    per_val = memo(spark, (profile_columns, sf_dir, tuple(PROFILE_COLS)), build)
+    li = load_table(spark, sf_dir, "lineitem")
+    tagged = li.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("col_name"),
+                        # explicit double pins the array element type:
+                        # PROFILE_COLS are all numeric today, but a
+                        # diverging column type must not become an
+                        # analysis error in the array() (ADVICE r10)
+                        F.col(c).cast("double").alias("v"),
+                    )
+                    for c in PROFILE_COLS
+                ]
+            )
+        ).alias("e")
+    ).select("e.col_name", "e.v")
+    per_val = tagged.groupBy("col_name", "v").agg(F.count(F.lit(1)).alias("cnt"))
     agg = per_val.groupBy("col_name").agg(
         F.sum("cnt").cast("bigint").alias("n_rows"),
         F.sum(F.when(F.col("v").isNull(), F.col("cnt")).otherwise(0))
@@ -481,7 +459,7 @@ def sample_weighted_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= 10)
         .select("lang", "doc_id", "n_chars")
         # repartition(1) keeps the corpus-sized ranking window at width
-        .transform(lambda d: filtered_sort(d, "lang", "doc_id"))
+        .orderBy("lang", "doc_id")
     )
 
 

@@ -42,9 +42,6 @@ from event_store_spark.tables import hot_table, load_table
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pinned hot projection (tables.hot_table): these operators re-scan
-    # events several times per plan, and at sf0.1 the repeated parquet
-    # materialization IS the job floor (VERDICT r10 #4)
     return hot_table(spark, sf_dir, "events")
 
 

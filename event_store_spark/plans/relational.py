@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
+from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table
 
@@ -413,7 +413,7 @@ def q15_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= 3)
         .select("n_name", "rn", "c_custkey", F.round("c_acctbal", 2).alias("acctbal"))
         # repartition(1): keeps the corpus-sized ranking window at width
-        .transform(lambda d: filtered_sort(d, "n_name", "rn"))
+        .orderBy("n_name", "rn")
     )
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_store_spark.plans.finalsort import catalog_sort, filtered_sort
+from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
 from event_store_spark.tables import load_table
 
@@ -113,7 +113,7 @@ def q59_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         sup.join(F.broadcast(dominant), sup.s_suppkey == dominant.l_suppkey, "left_semi")
         .select("s_name")
-        .transform(lambda d: filtered_sort(d, "s_name"))
+        .orderBy("s_name")
     )
 
 

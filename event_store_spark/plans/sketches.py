@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from event_store_spark.plans.finalsort import catalog_sort
 from event_store_spark.plans.registry import register
-from event_store_spark.tables import hot_table, load_table, memo
+from event_store_spark.tables import hot_table, load_table
 
 #: HLL++ relative standard deviation target; the audit accepts 5×rsd —
 #: generous against the ~3σ tail while still catching real drift
@@ -343,8 +343,8 @@ def bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is THE scan-pruning pattern at 100 TB (Spark's own runtime
     row-group filters build exactly this structure): the materialized
-    filter is O(k × slots) BITS — k bitmaps of 64 longs, built once per
-    (session, corpus) from a bounded ≤ 12,288-row collect and shipped to
+    filter is O(k × slots) BITS — k bitmaps of 64 longs, built from a
+    bounded ≤ 12,288-row collect and shipped to
     probe tasks as LITERALS — so probing is a pure map-side bit test
     (three shiftright/AND lookups per row); the fact table never
     shuffles, joins, or aggregates to discover which keys might match.
@@ -369,47 +369,35 @@ def bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
             10,
         ).cast("int")
 
-    # the build-key set is memoized per (session, corpus) — it is the
-    # Bloom filter's BUILD ARTIFACT (a real deployment materializes the
-    # filter once and probes it many times; rebuilding per probe would
-    # charge the build to every lookup, the _minhash_signatures
-    # precedent). Cached lazily — no eager-checkpoint job — and bounded:
-    # distinct keys ≤ |part|. Within one call the cache also collapses
-    # the two consumers (filter build + the audit's membership join) to
-    # one lineitem scan (measured 2.59 → 2.16 s at 10×).
-    def build_filter():
-        li = load_table(spark, sf_dir, "lineitem")
-        build = (
-            li.where(
-                (F.col("l_returnflag") == "R") & (F.col("l_quantity") >= 48)
-            )
-            .select(F.col("l_partkey").alias("k"))
-            .distinct()
-            # coalesce-before-cache: see tokenized.source_gram_masks
-            .coalesce(spark.sparkContext.defaultParallelism)
-            .cache()
+    # the build-key set (distinct keys ≤ |part|) feeds both the filter
+    # and the audit's membership join; built per call, as its one
+    # registered query reads it once
+    li = load_table(spark, sf_dir, "lineitem")
+    build = (
+        li.where(
+            (F.col("l_returnflag") == "R") & (F.col("l_quantity") >= 48)
         )
-        # materialize the filter itself as k BITMAPS of 4096 bits (64
-        # longs each) — the structure is O(k x slots) BITS regardless of
-        # build-set size, so collecting it is a bounded driver fold
-        # (≤ 12,288 rows; the centroid-collect class) and probing becomes
-        # a pure map-side expression riding as literals: exactly how a
-        # runtime row-group filter ships to scan tasks
-        filt_rows = (
-            build.select(F.explode(seeds).alias("seed"), "k")
-            .select("seed", slot(F.col("k"), F.col("seed")).alias("slot"))
-            .distinct()
-            .collect()
-        )
-        bits = [[0] * 64 for _ in range(BLOOM_K)]
-        for r in filt_rows:
-            bits[r["seed"]][r["slot"] >> 6] |= 1 << (r["slot"] & 63)
-        signed = [
-            [w - (1 << 64) if w >= (1 << 63) else w for w in b] for b in bits
-        ]
-        return build, signed
-
-    build, signed = memo(spark, (bloom_prefilter, sf_dir), build_filter)
+        .select(F.col("l_partkey").alias("k"))
+        .distinct()
+    )
+    # materialize the filter itself as k BITMAPS of 4096 bits (64
+    # longs each) — the structure is O(k x slots) BITS regardless of
+    # build-set size, so collecting it is a bounded driver fold
+    # (≤ 12,288 rows; the centroid-collect class) and probing becomes
+    # a pure map-side expression riding as literals: exactly how a
+    # runtime row-group filter ships to scan tasks
+    filt_rows = (
+        build.select(F.explode(seeds).alias("seed"), "k")
+        .select("seed", slot(F.col("k"), F.col("seed")).alias("slot"))
+        .distinct()
+        .collect()
+    )
+    bits = [[0] * 64 for _ in range(BLOOM_K)]
+    for r in filt_rows:
+        bits[r["seed"]][r["slot"] >> 6] |= 1 << (r["slot"] & 63)
+    signed = [
+        [w - (1 << 64) if w >= (1 << 63) else w for w in b] for b in bits
+    ]
     probe = part.select(F.col("p_partkey").alias("k"))
     hit_exprs = []
     for s in range(BLOOM_K):

@@ -49,9 +49,6 @@ _RADIUS_US = 300_000_000
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pinned hot projection (tables.hot_table): these operators re-scan
-    # events several times per plan, and at sf0.1 the repeated parquet
-    # materialization IS the job floor (VERDICT r10 #4)
     return hot_table(spark, sf_dir, "events")
 
 

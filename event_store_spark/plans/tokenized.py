@@ -97,7 +97,7 @@ def tokenized_docs(spark: SparkSession, sf_dir: str, docs_fn=None) -> DataFrame:
     ``docs_fn``: zero-arg thunk returning the documents DataFrame — used
     ONLY when ``sf_dir`` has no documents parquet (unit tests inject an
     in-memory corpus by patching the CALLER's ``load_table``); the
-    projection then runs inline, unmaterialized and unmemoized."""
+    projection then runs inline and unmaterialized."""
     if docs_fn is not None and not os.path.exists(table_path(sf_dir, "documents")):
         return tokenized_projection(docs_fn())
 
@@ -107,13 +107,7 @@ def tokenized_docs(spark: SparkSession, sf_dir: str, docs_fn=None) -> DataFrame:
             8
         ).write.mode("overwrite").parquet(out)
 
-    return memo(
-        spark,
-        (tokenized_docs, sf_dir),
-        lambda: spark.read.parquet(
-            side_table(spark, sf_dir, "documents", TOK_TABLE, write)
-        ),
-    )
+    return spark.read.parquet(side_table(spark, sf_dir, "documents", TOK_TABLE, write))
 
 
 #: mask form applies while the source catalog fits this many bits — the

@@ -26,6 +26,7 @@ every downstream agg scans it with column pruning.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from event_store_spark.plans.generations import SegmentLog
 from event_store_spark.plans.typed_events import typed_projection
@@ -47,6 +48,9 @@ class TypedEventsMaterializer(ExactlyOnceSink):
     #: the map-side parse each batch is written as
     _project = staticmethod(typed_projection)
 
+    #: the table's schema, recorded by `start`
+    _schema = None
+
     def _apply(self, df: DataFrame, batch_id: int, commit=lambda: None) -> None:
         """One batch's segment; called directly, it commits no ledger."""
         self._log.write(batch_id, self._project(df))
@@ -55,6 +59,12 @@ class TypedEventsMaterializer(ExactlyOnceSink):
 
     _sink = _apply
 
+    def start(self, stream: DataFrame) -> StreamingQuery:
+        # the projected schema comes from the plan alone (no job), so a
+        # started sink with nothing committed yet reads an empty table
+        self._schema = self._project(stream).schema
+        return super().start(stream)
+
     def table(self) -> DataFrame:
         """The live table (snapshot plus committed segments, lazy)."""
-        return self._log.read()
+        return self._log.read(schema=self._schema)

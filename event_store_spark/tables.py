@@ -5,18 +5,28 @@ filters into the scan, so loading "all tables" costs nothing until an action.
 At cluster scale the same call works over directory-partitioned datasets; the
 paths are the only local-mode artifact.
 
-Every derived artifact the plans layer reuses goes through one of two
-mechanisms here, never a module-level dict of its own:
+The cache rule. A plan recomputes from lineage by default; it may
+materialize only through one of two mechanisms here, never a
+module-level dict of its own, and only where a measured first call plus
+build wins over recomputing (the verdict table in CHANGES.md):
 
 - ``memo(spark, key, build)`` — the per-session store (analyzed table
-  scans, cached projections, trained indexes, shared builds). Each key
-  leads with its builder function, so keys from different builders
-  cannot collide. Entries of a session whose context has stopped are
-  dropped on the next miss.
+  scans, trained indexes, builds several registered queries share). Each
+  key leads with its builder function, then its source directory; a
+  ``.cache()`` in a plan sits in such a build. An entry lives only as
+  long as its source directory's `parquet_identity`: once a data file
+  under it changes, the next call drops every entry of that directory
+  and unpersists their cached data, so the store holds one generation per
+  corpus. Entries of a session whose context has stopped are dropped on
+  the next miss.
 - ``side_table(spark, sf_dir, table, name, write)`` — the write-once
   per-corpus directory (typed events, tokenized documents, verify
   sketches, BM25 postings), keyed by the source table's on-disk
   identity and published with one rename.
+
+Any other cache a function takes it unpersists before it returns;
+``localCheckpoint`` cuts lineage (an iterative operator's rounds, the
+fixed BPE chain) and is not a session cache.
 """
 
 from __future__ import annotations
@@ -78,35 +88,74 @@ def parquet_identity(src: str) -> str:
     return os.path.realpath(src) + "||" + ";".join(parts)
 
 
-#: session -> {key: artifact}: the one per-session store behind `memo`
+#: session -> {source: (identity, {key: artifact})}: the one per-session
+#: store behind `memo`, one generation per source directory
 _SESSION_MEMO: dict = {}
+
+
+def _source_identity(src) -> str | None:
+    """`parquet_identity` of a memo key's source directory (its second
+    element); None when that element names no directory."""
+    if isinstance(src, str) and os.path.isdir(src):
+        return parquet_identity(src)
+    return None
+
+
+def _release(spark: SparkSession, src, entries: dict) -> None:
+    """Unpersist every cached DataFrame the dropped ``entries`` hold, then
+    refresh any other cached plan that reads ``src``."""
+
+    def unpersist(v):
+        if isinstance(v, DataFrame):
+            v.unpersist()
+        elif isinstance(v, (tuple, list)):
+            for x in v:
+                unpersist(x)
+
+    for v in entries.values():
+        unpersist(v)
+    if isinstance(src, str):
+        spark.catalog.refreshByPath(src)
 
 
 def memo(spark: SparkSession, key: tuple, build: Callable[[], object] | None = None):
     """The session's artifact for ``key``, running ``build()`` on a miss
     and keeping its result (``None`` included). ``key`` starts with the
-    builder function, e.g. ``(_minhash_candidates, sf_dir)``. With no
-    ``build`` this only looks up: a miss returns None and stores nothing.
+    builder function, then the source directory, e.g.
+    ``(_minhash_candidates, sf_dir)``. With no ``build`` this only looks
+    up: a miss returns None and stores nothing.
 
-    A memoized DataFrame holds its session, so a weak session key would
-    never free anything; instead a miss drops the entries of every
-    session whose context has stopped."""
-    entries = _SESSION_MEMO.get(spark)
-    if entries is not None and key in entries:
-        return entries[key]
+    An entry lives as long as its source directory's `parquet_identity`:
+    once any data file under it changes, the next call drops every entry
+    of that directory and releases their cached data, so the store holds
+    one generation per corpus. A memoized DataFrame holds its session, so
+    a weak session key would never free anything; instead a miss drops
+    the entries of every session whose context has stopped."""
+    src = key[1] if len(key) > 1 else None
+    ident = _source_identity(src)
+    corpora = _SESSION_MEMO.get(spark, {})
+    gen = corpora.get(src)
+    if gen is not None and gen[0] != ident:
+        _release(spark, src, corpora.pop(src)[1])
+        gen = None
+    if gen is not None and key in gen[1]:
+        return gen[1][key]
     if build is None:
         return None
     for stopped in [s for s in _SESSION_MEMO if s.sparkContext._jsc is None]:
         del _SESSION_MEMO[stopped]
     value = build()
-    _SESSION_MEMO.setdefault(spark, {})[key] = value
+    corpora = _SESSION_MEMO.setdefault(spark, {})
+    corpora.setdefault(src, (ident, {}))[1][key] = value
     return value
 
 
 def forget(spark: SparkSession, key: tuple):
     """Drop the session's entry for ``key`` and return it (None if absent).
     Unpersisting a cached entry is the caller's job."""
-    return _SESSION_MEMO.get(spark, {}).pop(key, None)
+    src = key[1] if len(key) > 1 else None
+    gen = _SESSION_MEMO.get(spark, {}).get(src)
+    return gen[1].pop(key, None) if gen is not None else None
 
 
 def side_table_dir(sf_dir: str, table: str, name: str) -> str:
@@ -201,27 +250,15 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def hot_table(
     spark: SparkSession, sf_dir: str, name: str, cols: tuple[str, ...] | None = None
 ) -> DataFrame:
-    """A memoized ``.cache()``d projection of one fixture table — the
-    engine's pinned hot working set.
+    """One fixture table projected to ``cols`` (every column when None).
 
-    The single-node oracle reads every query from the OS page cache; a
-    Spark deployment gets the same effect by pinning its hottest narrow
-    projections (events is ~5 columns and feeds dozens of registered
-    queries). Sub-second queries otherwise pay a fresh parquet scan —
-    footer decode + row-group materialization — per pass, which at sf0.1
-    IS the job floor the r10 verdict flagged (mad_outliers re-scanned
-    events 3x for 0.04 s of actual aggregation). At 100 TB the same
-    pattern holds per projection, not per table: cache what a query
-    family re-reads (events is ~3 % of corpus bytes), never the wide
-    fact tables. Entries live in the session store (`memo`) and are
-    dropped with it once the session stops."""
-    cols = tuple(cols) if cols else None
-
-    def build() -> DataFrame:
-        df = load_table(spark, sf_dir, name)
-        return (df.select(*cols) if cols else df).cache()
-
-    return memo(spark, (hot_table, sf_dir, name, cols), build)
+    Not cached: pinning the projection in memory was measured no faster
+    over the 29 registered queries that read it (first call plus build,
+    15.7 s uncached against 16.4 s cached at sf0.1 on 4 vCPU, HEAD ahead
+    in 4 of 10 pairs), so each
+    query scans the parquet with its own pruning."""
+    df = load_table(spark, sf_dir, name)
+    return df.select(*cols) if cols else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

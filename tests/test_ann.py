@@ -16,10 +16,13 @@ def _top5(spark, sf, name):
 
 def test_multiprobe_probes_five_distinct_buckets(spark, sf_correct):
     """The exploded probe set is the query bucket + its 4 Hamming-1 flips."""
-    from event_store_spark.plans.llm import _emb, _flip_bit
+    from event_store_spark.plans.llm import _flip_bit
     from event_store_spark.functions.vectors import as_double
+    from event_store_spark.tables import load_table
 
-    emb = _emb(spark, sf_correct).select("vec_id", as_double("embedding").alias("v"))
+    emb = load_table(spark, sf_correct, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
     bucket = F.concat(
         *[
             F.when(F.col("v")[p * 16] >= F.col("v")[p * 16 + 8], "1").otherwise("0")

@@ -790,21 +790,26 @@ def test_first_batch_without_its_ledger_commit_is_invisible(
     batch whose segment is marked but whose ledger write fails is not
     committed either: the typed table lists no segment (it listed the
     batch's 500 events while the ledger appeared only with the first
-    commit)."""
+    commit). A started sink with nothing committed reads an empty table
+    (``table()`` raised UNABLE_TO_INFER_SCHEMA before its first commit)."""
     from event_store_spark.streaming import eos
 
     events = load_table(spark, sf_smoke, "events")
     even = events.where(F.col("event_id") % 2 == 0)
     mat = _typed_sink(spark, sf_smoke, str(tmp_path))
-    merge = eos.exactly_once(mat.checkpoint, mat.ledger, mat._apply)
+    source = str(tmp_path / "source")
+    os.makedirs(source)
+    mat.start(spark.readStream.schema(events.schema).parquet(source)).awaitTermination()
     assert generations.read_ledger(mat.ledger)[1] == -1
+    assert mat.table().count() == 0
+    merge = eos.exactly_once(mat.checkpoint, mat.ledger, mat._apply)
     arm = _arm_crash(monkeypatch, "ledger")
     arm()
     with pytest.raises(OSError, match="injected crash at the ledger"):
         merge(even, 0)
     assert os.path.exists(os.path.join(mat.target_path, "_SEGMENT.0"))
     assert mat._log.paths() == []
-    assert mat._log.read(schema=mat._project(even).schema).count() == 0
+    assert mat.table().count() == 0
 
 
 def test_a_ledger_alone_is_no_version_yet(spark, tmp_path):

@@ -361,18 +361,8 @@ def test_profile_columns_single_scan_single_heavy_exchange(spark, sf_correct):
     exchange by the NDV, and a 4-key final aggregate derives the report —
     no Expand (the multi-distinct rewrite), no join, no per-column
     branches (the prior union form paid 8 stages of job floor at sf0.1)."""
-    from event_store_spark.plans import pipeline6 as _p6
     from event_store_spark.plans.pipeline6 import PROFILE_COLS
 
-    from event_store_spark.tables import forget
-
-    # force the COLD plan: the (col, value) count table is memoized per
-    # session AND persisted — dropping the memo entry alone is not enough,
-    # because the CacheManager substitutes any still-persisted relation
-    # whose logical plan matches the rebuilt one
-    per_val = forget(spark, (_p6.profile_columns, sf_correct, tuple(PROFILE_COLS)))
-    if per_val is not None:
-        per_val.unpersist()
     plan = _plan(spark, sf_correct, "profile_columns")
     assert plan.count("Scan parquet") == 1, plan.count("Scan parquet")
     assert "Expand" not in plan
@@ -706,13 +696,13 @@ def test_simhash_bucket_guard_trips_loudly(spark, sf_correct, monkeypatch):
         QUERIES["dedup_simhash64"](spark, sf_correct).collect()
 
 
-def test_ann_recall_report_memoizes_plan_not_results(spark, sf_correct):
-    """VERDICT r7 #4: the seven-subtree union costs ~1.3 s of py4j plan
-    construction per call; the LAZY DataFrame is memoized per (session,
-    sf_dir); a hit is a fresh QueryExecution over it, so nothing physical
-    (AQE's materialized query stages) carries over between calls. Values
-    stable, and the shared cached embeddings scan is seeded (InMemory in
-    the plan)."""
+def test_ann_recall_report_is_a_fresh_plan_per_call(spark, sf_correct):
+    """The report is one union of the methods' registered plans, built
+    per call (neither the plan nor a shared embeddings scan is memoized):
+    two calls are separate QueryExecutions, nothing physical (AQE's
+    materialized query stages) carries over between them, the values are
+    stable, and the subtrees read the memoized ANN index builds (InMemory
+    in the plan)."""
     from event_store_spark.plans.evalq import ANN_METHODS, ann_recall_report
 
     df1 = ann_recall_report(spark, sf_correct)
