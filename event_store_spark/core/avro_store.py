@@ -108,7 +108,7 @@ class AvroEventStore(EventStore):
         ).drop("payload")
         # keep the CALLER's key_type: canonical_key is idempotent (the
         # staged key is UTF-8 bytes of the string form, and re-encoding
-        # round-trips), so the ticket records the true type — encrypted
+        # round-trips), so the descriptor records the true type — encrypted
         # and plaintext saves stay interchangeable per topic
         # (EventStore.java:94) and typed key views keep working
         return self.append(

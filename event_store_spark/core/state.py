@@ -16,11 +16,12 @@ compacted topic. In a cluster deployment the same interface is backed by a
 transactional table (Delta MERGE or a DB); the data plane never touches it
 except once per micro-batch.
 
-The state files (these two and the append :class:`TicketStore`) are safe
-for concurrent writers: every update is one read-modify-write under the
-file's writer lease. :class:`Lease` is the one single-writer lock
-protocol, and its docstring describes it; :class:`TopicMutex` and
-`streaming.lock.LockManager` are leases too.
+Both state files are safe for concurrent writers: every update is one
+read-modify-write under the file's writer lease. An event topic keeps no
+state file: its commit log (`core.store`) is its only record.
+:class:`Lease` is the one single-writer lock protocol, and its docstring
+describes it; :class:`TopicMutex` and `streaming.lock.LockManager` are
+leases too.
 
 Exactly-once composition: both stores record the ``batch_id`` that produced
 each update and, between a keyset batch's plan and its commit, the
@@ -216,14 +217,13 @@ class Lease:
 class TopicMutex:
     """Per-topic append mutex: a :class:`Lease` on ``<lock_dir>/<topic>.lock``.
 
-    :class:`TicketStore`'s ``save`` is an atomic file replace, but the
-    reserve step in ``EventStore.append`` is a read-modify-write (read
-    ticket → compute next lsn → save) that spans the data write: two
-    concurrent appends to one topic could both read the same ticket and
-    reserve the same lsn. This mutex serializes that critical section, the
+    ``EventStore.append`` is a read-modify-write of the topic's commit log
+    (read the log → next lsn → write the data → log entry ``n + 1``):
+    two concurrent appends to one topic could both read the same log and
+    take the same lsn. This mutex serializes that critical section, the
     file-system analog of the reference's advisory lock
     (`LockManager.java:45-84` — there one lock guards the whole writer;
-    here one short-lived lease guards each append's reserve+write).
+    here one short-lived lease guards each append's read+write).
 
     ``acquire`` polls the lease up to ``timeout_seconds``; a lease older
     than ``stale_seconds`` is an orphan from a crashed append and is
@@ -276,8 +276,8 @@ class TopicMutex:
         """True iff the calling thread's acquire still holds the lease —
         the commit-point re-check: a writer paused past ``stale_seconds``
         can have its lease broken mid-append, and re-checking right before
-        the irrevocable step (the lsn ticket save) turns a silent double
-        reservation into a loud abort."""
+        the irrevocable step (the log entry) turns a silent double lsn
+        into a loud abort."""
         with self._held_guard:
             held = self._held.get(self._held_key(topic))
         return held is not None and self._lease(topic).holds(held[0])
@@ -438,57 +438,6 @@ class OffsetsTable(_ConsumerState):
             if ckpt_id is not None:
                 entry["ckpt_id"] = ckpt_id
         self._update(lambda data: data.update(entries))
-
-
-class TicketStore(_AtomicJsonState):
-    """Per-topic append ticket: high-water ``(lsn, max_id)``, cumulative row
-    count, and layout facts (``key_type``, day-partitioning, row schema).
-
-    The Spark-file analog of the reference's transactional id/lsn sequence:
-    the reference gets MAX(lsn)/MAX(id) for free from Postgres sequences and
-    indexes; a parquet topic would need a full footer-stat scan per append
-    (two O(table) file listings at 100 TB — the round-1 scale bug). Instead
-    ``EventStore.append`` computes the batch's high water from the batch
-    alone and saves it here ONCE, before writing — so appends never read
-    pre-existing topic files. The rows become visible later, by the topic's
-    commit-log entry; a crash between the two leaves an lsn gap (never a
-    duplicate lsn), mirroring a WAL that reserves LSNs ahead of the commit
-    record. Until repaired, the orphaned reservation also makes
-    max_id/total — and the O(1) gauges built on them — overcount by that
-    one batch (data correctness is unaffected; `EventStore.repair_ticket`
-    rebuilds from the committed rows). Legacy topics without a ticket are
-    recovered by one explicit scan.
-    """
-
-    def get(self, topic: str) -> dict | None:
-        return self._read().get(topic)
-
-    def drop(self, topic: str) -> None:
-        """Forget a topic's ticket (it will be rebuilt from parquet)."""
-        self._update(lambda data: data.pop(topic, None))
-
-    def save(
-        self,
-        topic: str,
-        *,
-        lsn: int,
-        max_id: int,
-        total: int,
-        key_type: str,
-        day_partitioned: bool,
-        schema: dict | None = None,
-    ) -> None:
-        entry = {
-            "lsn": lsn,
-            "max_id": max_id,
-            "total": total,
-            "key_type": key_type,
-            "day_partitioned": day_partitioned,
-            # the rows' Spark schema (StructType JSON, all nullable): reads
-            # pass it to `.schema(...)` instead of inferring it from footers
-            "schema": schema,
-        }
-        self._update(lambda data: data.update({topic: entry}))
 
 
 class ProgressStore(_ConsumerState):

@@ -23,11 +23,9 @@ subscription and replay handle one split per append; a larger batch (and
 every day-partitioned one) writes one file per input partition. Appends
 never shuffle: id assignment is `monotonically_increasing_id()`
 (partition-local), and replay order is reconstructed from (lsn, id) at
-read time. The topic's row schema is recorded in its ticket, so reads
-never run a footer-inference job. A single writer per topic is assumed,
-mirroring the reference's advisory-lock single-writer model
-(`LockManager.java:45-84`); multi-writer coordination would move the lsn
-ticket into a lock service or table MERGE.
+read time. Appends to one topic serialize on a per-topic mutex, the
+file-system analog of the reference's advisory-lock single-writer model
+(`LockManager.java:45-84`).
 
 Commit point: a topic's rows are the files its commit log names, not what
 a directory listing sees. The log is Spark's own file-sink metadata log
@@ -43,8 +41,19 @@ name absolute paths, as Spark's sink does, so a store root cannot be moved
 as-is. Each line also carries its file's row count and (lsn, id) ``low``
 and ``high``, read from the file's footer when it is logged (Spark's
 readers ignore the extra fields); the keyset consumers plan their batches
-from them (`log_files`, `streaming.keyset`). A line logged before lines
-carried them has them read from its footer when it is planned.
+from them (`log_files`, `streaming.keyset`), and so does a keyset read
+(`read_events(after=)`). A log whose lines predate them gets them once,
+from the footers, by a snapshot naming the same files.
+
+The log is the topic's only record, as the events table is the
+reference's: the next lsn is one past the largest logged ``high``, and
+the high water, the lags and the row total are the largest logged
+``high`` and the sum of the logged ``rows``, so an append that fails
+before its entry leaves no trace in any of them. What the log does not
+hold — the key type, the day layout and the row schema — is in a
+write-once descriptor beside it (``<topic>/_topic.json``), which the
+topic's first non-empty append writes before its data; reads pass its
+schema to ``.schema(...)`` instead of running a footer-inference job.
 """
 
 from __future__ import annotations
@@ -72,7 +81,7 @@ from event_store_spark.core.envelope import (
     typed_key_view,
     validate_metadata,
 )
-from event_store_spark.core.state import TicketStore, TopicMutex, atomic_write
+from event_store_spark.core.state import TopicMutex, atomic_write
 
 TOPIC_SUFFIX = "_events"
 
@@ -82,6 +91,15 @@ TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 #: the topic's commit log directory (Spark's file-sink metadata log)
 LOG_DIR = "_spark_metadata"
+
+#: the topic's write-once descriptor: key type, day layout, row schema
+DESCRIPTOR = "_topic.json"
+
+#: Spark lists the root paths of a read with a Spark job once they are
+#: more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+#: (this, its default); a keyset read naming more files reads the topic
+#: directory instead (`EventStore.read_events`)
+LISTING_THRESHOLD = 32
 
 #: entry ``n`` is the full snapshot ``n.compact`` exactly when
 #: ``(n + 1) % COMPACT_INTERVAL == 0``. Spark's reader derives the interval
@@ -193,11 +211,48 @@ class LoggedFile(NamedTuple):
 
     @classmethod
     def of(cls, line: dict) -> LoggedFile:
-        """A log line's file; a line written before lines carried bounds
-        has them read from the file's footer."""
-        b = line if "rows" in line else _bounds(_local(line["path"]))
-        low, high = (Cursor(*b["low"]), Cursor(*b["high"])) if b["rows"] else (None, None)
-        return cls(line["path"], b["rows"], low, high)
+        """A log line's file, with the bounds the line carries."""
+        rows = line["rows"]
+        low, high = (Cursor(*line["low"]), Cursor(*line["high"])) if rows else (None, None)
+        return cls(line["path"], rows, low, high)
+
+
+def _committed(files: list[LoggedFile]) -> tuple[Cursor, int]:
+    """The largest (lsn, id) the logged ``files`` hold (zero for none)
+    and their row total."""
+    high = max((f.high for f in files if f.rows), default=Cursor.zero())
+    return high, sum(f.rows for f in files)
+
+
+class Batch(NamedTuple):
+    """The files whose rows in (``after``, ``hi``] make one batch, and
+    how many rows that is, when every file lies inside the range (None
+    otherwise: a file straddles an end)."""
+
+    after: Cursor
+    hi: Cursor
+    paths: list[str]
+    rows: int | None
+
+
+def plan(files: list[LoggedFile], after: Cursor, max_files: int | None = None,
+         hi: Cursor | None = None) -> Batch | None:
+    """The next batch past ``after`` (None: nothing to read), or, given
+    ``hi``, the batch that reruns (``after``, ``hi``]: the files whose
+    high is past ``after``; ``max_files`` caps them at those with the
+    smallest highs, the largest of which is ``hi``, and every other file
+    whose low is at or below ``hi`` joins, so overlapping compacted files
+    stay correct (`streaming.keyset`)."""
+    live = [f for f in files if f.rows and f.high > after]
+    if hi is None:
+        if not live:
+            return None
+        highs = sorted(f.high for f in live)
+        hi = highs[min(max_files or len(highs), len(highs)) - 1]
+    chosen = [f for f in live if f.low <= hi]
+    inside = all(f.low > after and f.high <= hi for f in chosen)
+    rows = sum(f.rows for f in chosen) if inside else None
+    return Batch(after, hi, [f.path for f in chosen], rows)
 
 
 def _stamp(paths: list[str], live: list[dict]) -> list[dict]:
@@ -227,6 +282,16 @@ def _commit(log: str, n: int, live: list[dict], added: list[dict]) -> None:
             os.remove(os.path.join(log, _entry_name(old)))
 
 
+def _snapshot(log: str, latest: int, named: list[dict]) -> int:
+    """Publish the first snapshot entry after ``latest``, naming
+    ``named``, with empty entries before it; returns its id."""
+    snapshot = (latest + 1) // COMPACT_INTERVAL * COMPACT_INTERVAL + COMPACT_INTERVAL - 1
+    for n in range(latest + 1, snapshot):
+        _commit(log, n, [], [])
+    _commit(log, snapshot, named, [])
+    return snapshot
+
+
 def _disk_files(path: str) -> list[str]:
     """Every parquet file a directory listing of ``path`` would read
     (hidden ``_``/``.`` directories skipped, as Spark skips them)."""
@@ -251,24 +316,32 @@ def _move_into(staging: str, path: str) -> list[str]:
     return moved
 
 
-def _open_log(path: str) -> None:
-    """Give the topic its commit log; the caller holds the topic mutex.
+def _open_log(path: str) -> tuple[str, int, list[dict]]:
+    """The topic's commit log directory, latest entry id and named files
+    (:func:`_read_log`), upgraded first; the caller holds the topic mutex.
     A topic written before the log existed gets entry 0 naming its files
     in their (mtime, name) order: paths stay the same, so a stream
     checkpoint taken over the old listing does not redeliver them. The
-    log directory appears by one rename, so a crash never hides them."""
+    log directory appears by one rename, so a crash never hides them.
+    Lines logged before lines carried bounds get them from the footers,
+    once, by a snapshot naming the same files, so later reads of the log
+    open no data file."""
     log = os.path.join(path, LOG_DIR)
-    if os.path.isdir(log):
-        return
-    legacy = sorted(
-        _disk_files(path),
-        key=lambda f: (os.path.getmtime(f), os.path.basename(f)),
-    )
-    tmp = f"{log}.{uuid.uuid4().hex}"
-    os.makedirs(tmp)
-    if legacy:
-        _commit(tmp, 0, [], _stamp(legacy, []))
-    os.rename(tmp, log)
+    if not os.path.isdir(log):
+        legacy = sorted(
+            _disk_files(path),
+            key=lambda f: (os.path.getmtime(f), os.path.basename(f)),
+        )
+        tmp = f"{log}.{uuid.uuid4().hex}"
+        os.makedirs(tmp)
+        if legacy:
+            _commit(tmp, 0, [], _stamp(legacy, []))
+        os.rename(tmp, log)
+    latest, live = _read_log(log)
+    if all("rows" in f for f in live):
+        return log, latest, live
+    live = [f if "rows" in f else {**f, **_bounds(_local(f["path"]))} for f in live]
+    return log, _snapshot(log, latest, live), live
 
 
 class EventStore:
@@ -278,7 +351,6 @@ class EventStore:
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
-        self._tickets = TicketStore(os.path.join(root, "_meta", "tickets.json"))
         self._append_mutex = TopicMutex(os.path.join(root, "_meta", "locks"))
 
     # ------------------------------------------------------------- paths
@@ -334,28 +406,31 @@ class EventStore:
         exactly the invariant the reference's commit-LSN stamping provides);
         ``id`` is unique within the append.
 
-        Scale: an append touches ONLY the incoming batch — the next lsn,
-        layout and key-type checks come from the :class:`TicketStore`
-        bookkeeping (O(1)), and the batch's high-water id is computed from
-        the cached batch itself, never by re-reading the topic. The round-1
+        Scale: an append touches ONLY the incoming batch and the commit
+        log — the next lsn is one past the largest logged ``high``, the
+        layout, key-type and schema checks read the topic's descriptor,
+        and the batch's high-water id is computed from the cached batch
+        itself, never by re-reading the topic's files. The round-1
         implementation paid two O(table) scans per append (MAX(lsn) +
         post-write re-read); at 100 TB that is two million-file listings
         per append.
 
         Commit: the files are written outside the topic, moved in — still
-        invisible — and published by ONE entry of the topic's commit log, so
-        a multi-file or day-partitioned append becomes visible all at once or
-        not at all, and a crash before the entry leaves only an lsn gap.
-        Writing the entry reads the log from its latest snapshot: driver-side
-        JSON, one line per file, which every Spark read of the topic parses
-        too.
+        invisible — and published by ONE entry of the topic's commit log,
+        the append's only irrevocable step, so a multi-file or
+        day-partitioned append becomes visible all at once or not at all.
+        A crash before the entry leaves no trace in any record: the next
+        append takes the same lsn, and the crashed append's unlogged files
+        stay invisible until `compact` deletes them. The log is read once,
+        from its latest snapshot: driver-side JSON, one line per file,
+        which every Spark read of the topic parses too.
 
-        Concurrency: the reserve (read ticket → next lsn → save), the data
-        write and the log entry run under a per-topic :class:`TopicMutex`,
-        so concurrent appends to one topic serialize instead of both
-        reserving the same lsn — the advisory-lock single-writer invariant
-        the reference holds (`LockManager.java:45-84`), enforced per append
-        rather than assumed.
+        Concurrency: the log read, the data write and the log entry run
+        under a per-topic :class:`TopicMutex`, so concurrent appends to
+        one topic serialize instead of both taking the same lsn — the
+        advisory-lock single-writer invariant the reference holds
+        (`LockManager.java:45-84`), enforced per append rather than
+        assumed.
         """
         if key_type not in KEY_TYPES:
             raise ValueError(f"key_type must be one of {KEY_TYPES}")
@@ -384,22 +459,23 @@ class EventStore:
         payload_cols: list[str],
     ) -> Cursor:
         path = self.topic_path(topic)
-        _open_log(path)
-        ticket = self._ticket(topic)
-        if ticket is not None:
-            if ticket["day_partitioned"] != partition_by_day:
+        log, version, live = _open_log(path)
+        high, _ = _committed([LoggedFile.of(f) for f in live])
+        desc = self._descriptor(topic)
+        if desc is not None:
+            if desc["day_partitioned"] != partition_by_day:
                 raise ValueError(
                     f"topic {topic!r} layout is "
-                    f"{'day-partitioned' if ticket['day_partitioned'] else 'flat'}; "
+                    f"{'day-partitioned' if desc['day_partitioned'] else 'flat'}; "
                     "appends must match the established layout"
                 )
-            if ticket["key_type"] != key_type:
+            if desc["key_type"] != key_type:
                 raise ValueError(
-                    f"topic {topic!r} stores {ticket['key_type']!r} keys; cannot "
+                    f"topic {topic!r} stores {desc['key_type']!r} keys; cannot "
                     f"append {key_type!r} keys (reference: one key type per "
                     "table, events_schema.sql DDL)"
                 )
-        lsn = (ticket["lsn"] if ticket else 0) + 1
+        lsn = high.lsn + 1
         ts = (
             F.col("timestamp").cast("timestamp_ltz")
             if "timestamp" in df.columns
@@ -435,13 +511,13 @@ class EventStore:
         else:
             out = df.select(F.monotonically_increasing_id().alias("id"), *body)
         # One row schema per topic, like one key type: reads trust the
-        # ticket's schema instead of inferring it from file footers
+        # descriptor's schema instead of inferring it from file footers
         row_schema = out.schema
         schema = _as_nullable(row_schema).jsonValue()
-        if ticket is not None and ticket.get("schema") not in (None, schema):
+        if desc is not None and desc["schema"] != schema:
             raise ValueError(
                 f"topic {topic!r} stores rows of "
-                f"{T.StructType.fromJson(ticket['schema']).simpleString()}; cannot "
+                f"{T.StructType.fromJson(desc['schema']).simpleString()}; cannot "
                 f"append {T.StructType.fromJson(schema).simpleString()}"
             )
         # Persist so the high-water agg and the write see the SAME partition
@@ -458,41 +534,16 @@ class EventStore:
                 F.sum(_row_bytes(row_schema)).alias("bytes"),
             ).first()
             if stats.n == 0:
-                return (
-                    Cursor(ticket["lsn"], ticket["max_id"])
-                    if ticket
-                    else Cursor.zero()
-                )
-            # MERGE-guard (multi-writer coordination, PERF.md design made
-            # real): re-verify mutex ownership immediately before the
-            # irrevocable lsn reservation. A writer paused past the
-            # heartbeat (SIGSTOP, long GC) can have its lock stolen and a
-            # second writer reserve the SAME lsn; aborting here turns that
-            # silent cursor corruption into a loud retryable failure.
-            if not self._append_mutex.owns(topic):
-                raise RuntimeError(
-                    f"append lost the topic mutex for {topic!r} before the "
-                    "lsn reservation (stolen after a heartbeat lapse?); "
-                    "nothing was committed - retry the append"
-                )
-            # Reserve the ticket BEFORE the data write: a crash in between
-            # leaves an lsn gap (harmless), while write-then-save could
-            # reissue the same lsn to two appends (cursor corruption).
-            self._tickets.save(
-                topic,
-                lsn=lsn,
-                max_id=stats.max_id,
-                total=(ticket["total"] if ticket else 0) + stats.n,
-                key_type=key_type,
-                day_partitioned=partition_by_day,
-                schema=schema,
+                return high
+            if desc is None:
+                desc = dict(key_type=key_type, day_partitioned=partition_by_day, schema=schema)
+                atomic_write(os.path.join(path, DESCRIPTOR), json.dumps(desc))
+            # A staging directory of this append's own, under its topic's:
+            # a writer whose mutex was stolen while it paused never empties,
+            # writes into or moves out of the one its thief stages in.
+            staging = os.path.join(
+                self.root, "_staging", topic, f"append-{uuid.uuid4().hex}"
             )
-            # Per-TOPIC staging directory, so it never holds another topic's
-            # batch (topic names may contain any legal character). One left
-            # over is a crashed append's — we hold the mutex — whose lsn
-            # stays a gap.
-            staging = os.path.join(self.root, "_staging", topic, "append")
-            shutil.rmtree(staging, ignore_errors=True)
             # A flat batch that fits the file-size target is written by ONE
             # task from the persisted partitions: ids are partition-local
             # blocks, so the id sort lays them out in order. Day-partitioned
@@ -509,9 +560,19 @@ class EventStore:
                 writer = writer.partitionBy("dt")
             try:
                 writer.parquet(staging)
-                log = os.path.join(path, LOG_DIR)
-                version, live = _read_log(log)
                 added = _stamp(_move_into(staging, path), live)
+                # MERGE-guard (multi-writer coordination, PERF.md design
+                # made real): re-verify mutex ownership immediately before
+                # the log entry. A writer paused past the heartbeat
+                # (SIGSTOP, long GC) can have its lock stolen and a second
+                # writer log the SAME lsn; aborting here turns that silent
+                # cursor corruption into a loud retryable failure.
+                if not self._append_mutex.owns(topic):
+                    raise RuntimeError(
+                        f"append lost the topic mutex for {topic!r} before "
+                        "its log entry (stolen after a heartbeat lapse?); "
+                        "nothing was committed - retry the append"
+                    )
                 _commit(log, version + 1, live, added)
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
@@ -519,79 +580,49 @@ class EventStore:
             out.unpersist()
         return Cursor(lsn, stats.max_id)
 
-    def _ticket(self, topic: str) -> dict | None:
-        """The topic's append ticket; recovered by one explicit scan for
-        topics written before the ticket store existed (or after losing it —
-        the parquet data remains the source of truth). A ticket written
-        before row schemas were recorded keeps its counters and gains the
-        schema from one footer inference."""
-        ticket = self._tickets.get(topic)
-        if ticket is not None and ticket.get("schema") is not None:
-            return ticket
-        path = self.topic_path(topic)
-        if not self._parquet_files(path):
-            return ticket
-        df = self.spark.read.parquet(path)
-        schema = _as_nullable(df.schema).jsonValue()
-        if ticket is not None:
-            # tickets from before the commit log carry a publication clock
-            ticket = {k: v for k, v in ticket.items() if k != "clock"}
-            ticket["schema"] = schema
-            self._tickets.save(topic, **ticket)
-            return ticket
-        row = df.agg(
-            F.max(F.struct("lsn", "id")).alias("hw"),
-            F.count(F.lit(1)).alias("n"),
-            F.any_value("key_type").alias("kt"),
-        ).first()
-        ticket = {
-            "lsn": row.hw["lsn"],
-            "max_id": row.hw["id"],
-            "total": row.n,
-            "key_type": row.kt,
-            "day_partitioned": self._is_day_partitioned(topic),
-            "schema": schema,
+    def _descriptor(self, topic: str) -> dict | None:
+        """The topic's descriptor ``{key_type, day_partitioned, schema}``
+        (the schema as all-nullable StructType JSON); None for a topic
+        without rows. A topic whose log names rows but which has no
+        descriptor (written before descriptors existed) has it inferred
+        once, by one footer read and one aggregate, and written."""
+        path = os.path.join(self.topic_path(topic), DESCRIPTOR)
+        try:
+            with open(path) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            if not any(f.rows for f in self.log_files(topic)):
+                return None
+        df = self.spark.read.parquet(self.topic_path(topic))
+        desc = {
+            "key_type": df.agg(F.any_value("key_type")).first()[0],
+            "day_partitioned": "dt" in df.columns,
+            "schema": _as_nullable(df.schema).jsonValue(),
         }
-        self._tickets.save(topic, **ticket)
-        return ticket
+        atomic_write(path, json.dumps(desc))
+        return desc
 
     def event_schema(self, topic: str) -> T.StructType:
         """The schema of the topic's rows (``dt`` included on day-partitioned
-        topics), from its ticket — readers pass it to ``.schema(...)`` so no
-        read starts a footer-inference job. A topic without rows has no
-        schema; parquet reports that as it always has."""
-        ticket = self._ticket(topic)
-        if ticket is None or ticket.get("schema") is None:
+        topics), from its descriptor — readers pass it to ``.schema(...)``
+        so no read starts a footer-inference job. A topic without rows has
+        no schema; parquet reports that as it always has."""
+        desc = self._descriptor(topic)
+        if desc is None:
             return self.spark.read.parquet(self.topic_path(topic)).schema
-        return T.StructType.fromJson(ticket["schema"])
+        return T.StructType.fromJson(desc["schema"])
 
     def high_water(self, topic: str) -> dict | None:
-        """Bookkept high-water facts ``{lsn, max_id, total, ...}`` (O(1) once
-        ticketed) — the substrate for lag gauges and resume decisions."""
-        return self._ticket(topic)
-
-    def repair_ticket(self, topic: str) -> dict | None:
-        """Rebuild the append ticket from the parquet source of truth.
-
-        Run after a crash that landed between the ticket reservation and the
-        data write: the orphaned reservation makes max_id/total (and the
-        gauges derived from them) overcount by that batch until repaired.
-        One explicit O(topic) scan — the cost the ticket otherwise avoids on
-        every append. Mirrors the reference recovering its counters from the
-        table itself after losing a sequence cache."""
-        self._tickets.drop(topic)
-        return self._ticket(topic)
-
-    def _topic_key_type(self, topic: str) -> str | None:
-        """The topic's established key type (None for new/empty topics)."""
-        ticket = self._ticket(topic)
-        return ticket["key_type"] if ticket else None
-
-    def _is_day_partitioned(self, topic: str) -> bool:
-        path = self.topic_path(topic)
-        return os.path.isdir(path) and any(
-            e.startswith("dt=") for e in os.listdir(path)
-        )
+        """``{lsn, max_id, total}`` — the largest logged (lsn, id) high and
+        the sum of the logged row counts — plus the topic's descriptor:
+        the substrate for lag gauges and resume decisions. A driver-side
+        read of the commit log, which every append and drain poll does
+        too; None for a topic without rows."""
+        desc = self._descriptor(topic)
+        if desc is None:
+            return None
+        high, total = self.committed(topic)
+        return {"lsn": high.lsn, "max_id": high.id, "total": total, **desc}
 
     # -------------------------------------------------------------- read
 
@@ -605,25 +636,40 @@ class EventStore:
     ) -> DataFrame:
         """Unordered event scan with optional keyset-resume predicate (F1)
         and, for day-partitioned topics, static partition pruning via
-        ``start_day``/``end_day`` (ISO dates, inclusive)."""
-        if (start_day or end_day) and not self._is_day_partitioned(topic):
+        ``start_day``/``end_day`` (ISO dates, inclusive).
+
+        A keyset read names only the logged files whose high is past
+        ``after`` (:func:`plan`, the keyset consumers' rule), so files
+        wholly at or below the cursor are never opened; a selection of
+        more than :data:`LISTING_THRESHOLD` files reads the topic
+        directory with the keyset predicate instead, which starts no
+        listing job."""
+        schema = self.event_schema(topic)
+        if (start_day or end_day) and "dt" not in schema.fieldNames():
             raise ValueError(
                 f"topic {topic!r} is not day-partitioned; day-range reads "
                 "require append(..., partition_by_day=True)"
             )
-        df = self.spark.read.schema(self.event_schema(topic)).parquet(
-            self.topic_path(topic)
-        )
+        batch = None if after is None else plan(self.log_files(topic), after)
+        if after is not None and not batch:
+            df = self.spark.createDataFrame([], schema)
+        elif batch and len(batch.paths) <= LISTING_THRESHOLD:
+            df = self.read_files(topic, batch.paths)
+        else:
+            # the log's own file index: past the threshold Spark lists the
+            # named paths with a job of one task per path, which costs more
+            # than the footers the keyset predicate's row-group pruning reads
+            df = self.spark.read.schema(schema).parquet(self.topic_path(topic))
+        if after is not None:
+            df = df.where(keyset_after(after))
         if start_day is not None:
             df = df.where(F.col("dt") >= F.lit(start_day).cast("date"))
         if end_day is not None:
             df = df.where(F.col("dt") <= F.lit(end_day).cast("date"))
-        if after is not None:
-            df = df.where(keyset_after(after))
         if typed_key:
             df = df.withColumn(
                 "key_view",
-                typed_key_view(F.col("key"), self._topic_key_type(topic)),
+                typed_key_view(F.col("key"), self._descriptor(topic)["key_type"]),
             )
         return df
 
@@ -668,7 +714,7 @@ class EventStore:
         on meanwhile. Under the mutex it moves its files in and publishes
         ONE snapshot entry naming them plus every file logged after that
         version; only then are the replaced files (and any a crashed
-        append left unlogged) deleted. A crash at any point leaves either
+        append left unlogged or staged) deleted. A crash at any point leaves either
         the old file set or the new one visible, never a mix.
 
         Flat topics keep the ordered-visibility invariant through the
@@ -697,12 +743,11 @@ class EventStore:
         disjoint or replication's ordered-visibility invariant breaks.
         """
         path = self.topic_path(topic)
-        log = self._log(topic)
-        _, files = _read_log(log)
+        log, _, files = self._log(topic)
         if not files:
             return 0
-        day_partitioned = self._is_day_partitioned(topic)
         df = self.read_files(topic, [f["path"] for f in files])
+        day_partitioned = "dt" in df.columns
         if target_files is None:
             total = sum(f["size"] for f in files)
             target_files = max(1, total // TARGET_FILE_BYTES)
@@ -748,17 +793,15 @@ class EventStore:
                 # part index of repartitionByRange output = ascending range
                 compacted = _move_into(staging, path)
                 later = [_local(f["path"]) for f in live if f["path"] not in replaced]
-                # the snapshot takes the next snapshot id, after empty entries
-                snapshot = (latest + 1) // COMPACT_INTERVAL * COMPACT_INTERVAL
-                snapshot += COMPACT_INTERVAL - 1
-                for n in range(latest + 1, snapshot):
-                    _commit(log, n, [], [])
-                named = _stamp(compacted + later, live)
-                _commit(log, snapshot, named, [])
+                _snapshot(log, latest, _stamp(compacted + later, live))
                 keep = {os.path.realpath(p) for p in compacted + later}
                 for f in _disk_files(path):
                     if os.path.realpath(f) not in keep:
                         os.remove(f)
+                # no append stages while we hold the mutex: any append
+                # staging directory left is a crashed (or aborting) one's
+                for d in Path(self.root, "_staging", topic).glob("append-*"):
+                    shutil.rmtree(d, ignore_errors=True)
             finally:
                 self._append_mutex.release(topic)
         finally:
@@ -854,18 +897,20 @@ class EventStore:
                     )
         return zvalue(dims[0], dims[1])
 
-    def _log(self, topic: str) -> str:
-        """The topic's commit log directory, opened first (under the
-        append mutex) for a topic written before the log existed."""
+    def _log(self, topic: str) -> tuple[str, int, list[dict]]:
+        """The topic's commit log (:func:`_open_log`), upgraded first under
+        the append mutex if it is missing or its lines lack bounds."""
         path = self.topic_path(topic)
         log = os.path.join(path, LOG_DIR)
-        if not os.path.isdir(log):
-            self._append_mutex.acquire(topic)
-            try:
-                _open_log(path)
-            finally:
-                self._append_mutex.release(topic)
-        return log
+        if os.path.isdir(log):
+            latest, live = _read_log(log)
+            if all("rows" in f for f in live):
+                return log, latest, live
+        self._append_mutex.acquire(topic)
+        try:
+            return _open_log(path)
+        finally:
+            self._append_mutex.release(topic)
 
     def log_files(self, topic: str) -> list[LoggedFile]:
         """The files the topic's commit log names, in log order, with
@@ -874,34 +919,32 @@ class EventStore:
         no Spark job. A topic with no directory has no files."""
         if not os.path.isdir(self.topic_path(topic)):
             return []
-        return [LoggedFile.of(f) for f in _read_log(self._log(topic))[1]]
+        return [LoggedFile.of(f) for f in self._log(topic)[2]]
+
+    def committed(self, topic: str) -> tuple[Cursor, int]:
+        """The largest (lsn, id) the topic's commit log names (zero for
+        none) and the sum of its logged row counts: a driver-side log
+        read, no Spark job."""
+        return _committed(self.log_files(topic))
 
     def read_files(self, topic: str, paths: list[str]) -> DataFrame:
         """The rows of the topic's data files ``paths`` (log paths), with
-        the ticket's row schema and ``dt`` from the paths."""
+        the descriptor's row schema and ``dt`` from the paths. Spark lists
+        more root paths than ``parallelPartitionDiscovery.threshold`` (32)
+        with one Spark job."""
         return (
             self.spark.read.schema(self.event_schema(topic))
             .option("basePath", self.topic_path(topic))
             .parquet(*paths)
         )
 
-    @staticmethod
-    def _parquet_files(path: str) -> list[str]:
-        """The data files a read of ``path`` sees: those its commit log
-        names, or every parquet file under it (dt= subdirs included) where
-        there is no log."""
-        log = os.path.join(path, LOG_DIR)
-        if os.path.isdir(log):
-            return [_local(f["path"]) for f in _read_log(log)[1]]
-        return _disk_files(path)
-
     # ----------------------------------------------------------- metrics
 
     def lag(self, topic: str, cursor: Cursor) -> int:
         """Replication lag: high-water lsn − cursor.lsn (A1 analog).
 
-        O(1) arithmetic from the append ticket — the reference's gauge is
-        likewise bookkeeping math, not a scan
+        The high water is the largest lsn the commit log names, from its
+        per-file bounds — a driver-side log read, no Spark job; the
+        reference's gauge is likewise bookkeeping math, not a scan
         (`EventReplicatorWorker.java:242-248`)."""
-        ticket = self._ticket(topic)
-        return (ticket["lsn"] if ticket else 0) - cursor.lsn
+        return self.committed(topic)[0].lsn - cursor.lsn

@@ -9,12 +9,14 @@ streaming query and no checkpoint:
 
 - **The plan.** Every log line carries its file's row count and (lsn,
   id) low and high (`EventStore.log_files`). A batch is the files whose
-  high is past the consumer's cursor. ``max_files`` caps it at the files
-  with the smallest highs; the largest of those is the batch's high water
-  ``hi``, and every other file whose low is at or below ``hi`` joins it,
-  so overlapping compacted files stay correct. The batch's rows are its
-  files' rows in (cursor, hi]. ``hi`` comes from the log, never from the
-  append ticket, which is reserved before its data is written.
+  high is past the consumer's cursor (`core.store.plan`, the rule a
+  keyset read, ``read_events(after=)``, applies too). ``max_files`` caps
+  it at the files with the smallest highs; the largest of those is the
+  batch's high water ``hi``, and every other file whose low is at or
+  below ``hi`` joins it, so overlapping compacted files stay correct. The
+  batch's rows are its files' rows in (cursor, hi]. ``hi`` comes from the
+  log, the topic's only record, so a batch never covers a row that is
+  not yet visible.
 - **One crash rule.** Before its first side effect, the consumer records
   the batch as ``pending`` (its id and ``hi``) in its bookkeeping entry,
   one atomic write (`core.state`). Then it writes, and then it commits
@@ -36,46 +38,17 @@ import collections
 import threading
 import time
 from collections.abc import Callable
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from event_store_spark.core.cursor import Cursor, keyset_after
-from event_store_spark.core.store import EventStore, LoggedFile
+from event_store_spark.core.cursor import keyset_after
+from event_store_spark.core.store import Batch, EventStore, LoggedFile, plan
 
 #: seconds a polling drain waits after a poll that found no new files
 POLL_SECONDS = 0.1
 #: progress records a drain keeps, as Spark's
 #: ``spark.sql.streaming.numRecentProgressUpdates`` default
 RECENT_PROGRESS = 100
-
-
-@dataclass(frozen=True)
-class Batch:
-    """The files whose rows in (``after``, ``hi``] make one batch, and
-    how many rows that is, when every file lies inside the range (None
-    otherwise: a file straddles an end)."""
-
-    after: Cursor
-    hi: Cursor
-    paths: list[str]
-    rows: int | None
-
-
-def plan(files: list[LoggedFile], after: Cursor, max_files: int | None = None,
-         hi: Cursor | None = None) -> Batch | None:
-    """The next batch past ``after`` (None: nothing to read), or, given
-    ``hi``, the batch that reruns (``after``, ``hi``]."""
-    live = [f for f in files if f.rows and f.high > after]
-    if hi is None:
-        if not live:
-            return None
-        highs = sorted(f.high for f in live)
-        hi = highs[min(max_files or len(highs), len(highs)) - 1]
-    chosen = [f for f in live if f.low <= hi]
-    inside = all(f.low > after and f.high <= hi for f in chosen)
-    rows = sum(f.rows for f in chosen) if inside else None
-    return Batch(after, hi, [f.path for f in chosen], rows)
 
 
 #: ``apply(df, rows, batch_id, batch, rerun)``: a consumer's side effects

@@ -322,24 +322,22 @@ class Subscription:
 
     def lag(self, topic: str) -> int:
         """Consumer lag (A2 analog): events appended beyond the last
-        processed position, as O(1) arithmetic — appended total (from the
-        store's append ticket) minus consumed count (from the offsets
-        table). The reference's gauge is likewise end-offset − processed − 2
-        (txn-marker correction, `ReactorKafkaEventStore.java:379-400`);
-        without Kafka transaction markers the correction term is zero.
-        Round 1 computed this with a full keyset scan-and-count — an
-        O(table) Spark job per gauge read.
+        processed position — the sum of the row counts the topic's commit
+        log names minus the consumed count (from the offsets table), both
+        driver-side reads with no Spark job. The reference's gauge is
+        likewise end-offset − processed − 2 (txn-marker correction,
+        `ReactorKafkaEventStore.java:379-400`); without Kafka transaction
+        markers the correction term is zero.
 
         File-source only: against Kafka the stored offsets are REAL broker
         positions and lag is broker end-offset − consumed, which needs the
-        broker's end offsets (admin API), not the store ticket."""
+        broker's end offsets (admin API), not the store's log."""
         if self.source == "kafka":
             raise ValueError(
                 "lag gauge applies to the file source; Kafka lag = broker "
                 "end offset - stored offset (query the broker admin API)"
             )
-        ticket = self.store.high_water(topic)
-        total = ticket["total"] if ticket else 0
+        _, total = self.store.committed(topic)
         consumed = self.offsets.get(topic) + 1  # stored as 0-based index
         return total - consumed
 

@@ -167,7 +167,7 @@ def test_encrypted_and_plaintext_saves_share_topic_and_key_type(spark, tmp_path)
     """save(topic, df, name) and save(..., encryption_key=...) are
     interchangeable per topic (EventStore.java:94): the encrypted path
     records the CALLER's key_type, so mixing them neither trips the
-    ticket key-type check nor degrades the typed key view."""
+    descriptor key-type check nor degrades the typed key view."""
     import datetime
 
     from event_store_spark.avro import LocalSchemaRegistry

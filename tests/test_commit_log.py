@@ -3,7 +3,8 @@ per append and per compaction; and the consumers of the log.
 
 - a compaction keeps an append that commits while it rewrites;
 - a crash at any side effect of an append or a compaction leaves each lsn
-  all-or-nothing, with no duplicate and no reissued lsn;
+  all-or-nothing, with no duplicate and no reissued lsn, and a failed
+  append leaves no trace in the gauges the log gives;
 - the log is Spark's own file-sink format: batch reads, day-range reads
   and file streams all see exactly the logged files, in commit order;
 - a topic written before the log existed keeps its rows and its stream
@@ -24,7 +25,8 @@ from pyspark.sql import DataFrameWriter
 
 from event_store_spark.core import EventStore
 from event_store_spark.core import store as store_module
-from event_store_spark.core.state import OffsetsTable, ProgressStore, TicketStore
+from event_store_spark.core.cursor import Cursor
+from event_store_spark.core.state import OffsetsTable, ProgressStore
 from event_store_spark.streaming import Replicator, Subscription
 
 TS = datetime.datetime(2025, 1, 4, 21, 13, 41, 442000)
@@ -119,8 +121,9 @@ class _Faults:
 @pytest.fixture
 def faults(monkeypatch):
     """Counts the store's side effects — the staging (parquet) write, each
-    file move out of staging, each log-entry ``atomic_write`` and each
-    ``TicketStore.save`` — and raises at the armed one."""
+    file move out of staging and each ``atomic_write`` (a topic's first
+    append writes its descriptor with one, and every log entry is one) —
+    and raises at the armed one."""
     f = _Faults()
 
     def writes_staging(_writer, path, *args, **kwargs):
@@ -133,45 +136,106 @@ def faults(monkeypatch):
         DataFrameWriter, "parquet", f.counted(DataFrameWriter.parquet, writes_staging)
     )
     monkeypatch.setattr(os, "rename", f.counted(os.rename, moves_out_of_staging))
-    monkeypatch.setattr(TicketStore, "save", f.counted(TicketStore.save))
     monkeypatch.setattr(store_module, "atomic_write", f.counted(store_module.atomic_write))
     return f
+
+
+def _check_records(store, committed, where):
+    """Replay returns the ``committed`` batches (lsn → payloads), and the
+    gauges the commit log gives agree: ``high_water``'s row total and the
+    lag of a cursor at zero, the largest committed lsn."""
+    if committed:
+        assert _by_lsn(store) == committed, where
+    else:
+        assert store.log_files(TOPIC) == [], where
+    high_water = store.high_water(TOPIC) or {"total": 0}
+    assert high_water["total"] == sum(len(p) for p in committed.values()), where
+    assert store.lag(TOPIC, Cursor.zero()) == max(committed, default=0), where
 
 
 @pytest.mark.parametrize("layout", ["single", "multi", "day"])
 def test_append_crash_sweep(spark, tmp_path, monkeypatch, faults, layout):
     """Make the k-th side effect of an append raise, for every k until the
     append completes; after each, a fresh store on the same root retries.
-    Each lsn is all-or-nothing, no (lsn, id) repeats, replay equals the
-    committed batches and no lsn is issued twice. ``multi`` lowers the file
-    target so one append writes several files."""
+    A topic's first append (whose first side effect is its descriptor
+    write) is swept on a new root per k, then later appends on the last
+    one. Each lsn is all-or-nothing, no (lsn, id) repeats, replay equals
+    the committed batches, every append takes the lsn after the last
+    committed one, and the gauges equal what the committed rows give.
+    ``multi`` lowers the file target so one append writes several files."""
     if layout == "multi":
         monkeypatch.setattr(store_module, "TARGET_FILE_BYTES", 1)
-    root = str(tmp_path / "store")
-    store = EventStore(spark, root)
-    committed: dict[int, list[str]] = {}
-    df, payloads = _batch(spark, "seed")
-    committed[store.append(TOPIC, df, partition_by_day=layout == "day").lsn] = payloads
-    k = 0
-    while True:
-        k += 1
+    day = layout == "day"
+
+    def attempt(root, committed, k):
+        """Append with side effect ``k`` armed, then check and, after a
+        crash, retry from a fresh store; True if side effect ``k`` ran."""
+        store = EventStore(spark, root)
         df, payloads = _batch(spark, k)
         faults.arm(k)
         try:
-            cursor = store.append(TOPIC, df, partition_by_day=layout == "day")
+            cursor = store.append(TOPIC, df, partition_by_day=day)
         except _Crash:
             cursor = None
         fired = faults.disarm()
         store = EventStore(spark, root)
         if cursor is None:
-            assert _by_lsn(store) == committed, f"crash at side effect {k}"
-            cursor = store.append(TOPIC, df, partition_by_day=layout == "day")
-        assert cursor.lsn > max(committed), "lsn reissued"
+            _check_records(store, committed, f"crash at side effect {k}")
+            cursor = store.append(TOPIC, df, partition_by_day=day)
+        assert cursor.lsn == max(committed, default=0) + 1, "lsn reissued or skipped"
         committed[cursor.lsn] = payloads
-        assert _by_lsn(store) == committed, f"retry after side effect {k}"
-        if not fired:
+        _check_records(store, committed, f"retry after side effect {k}")
+        return fired
+
+    first = 0
+    while True:
+        first += 1
+        root, committed = str(tmp_path / f"first{first}"), {}
+        if not attempt(root, committed, first):
             break
-    assert k > 3  # the sweep reached past the ticket save and the write
+    later = 0
+    while True:
+        later += 1
+        if not attempt(root, committed, later):
+            break
+    # the sweeps reached past the descriptor, the staging write and a move
+    assert first > 3 and later > 2
+
+
+def test_failed_append_leaves_consumer_lags_at_zero(spark, tmp_path, monkeypatch):
+    """An append whose staging write fails leaves no trace: drained after
+    it, neither the Replicator nor the Subscription lags, and after one
+    more append and drain neither does. Regression: the append ticket
+    reserved the failed batch's lsn and rows, so the replicator lagged by
+    one lsn and the subscription by the failed rows until a repair."""
+    store = EventStore(spark, str(tmp_path / "store"))
+    for b in range(2):
+        store.append(TOPIC, _batch(spark, b, 3)[0])
+    rep = Replicator(store, str(tmp_path / "target"), ProgressStore(str(tmp_path / "p.json")))
+    sub = Subscription(store, OffsetsTable(str(tmp_path / "o.json")), str(tmp_path / "ck"))
+    seen = []
+
+    def drain_and_lags():
+        rep.replicate(TOPIC).awaitTermination(120)
+        sub.run(TOPIC, lambda df, _id: seen.extend(r.payload for r in df.collect()))
+        return rep.lag(TOPIC), sub.lag(TOPIC)
+
+    real = DataFrameWriter.parquet
+
+    def fail_staging(self, path, *args, **kwargs):
+        if "_staging" in path:
+            raise _Crash("staging write failed")
+        return real(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", fail_staging)
+        with pytest.raises(_Crash):
+            store.append(TOPIC, _batch(spark, "lost", 5)[0])
+    assert drain_and_lags() == (0, 0)
+    assert store.high_water(TOPIC)["total"] == 6 and store.lag(TOPIC, Cursor.zero()) == 2
+    assert store.append(TOPIC, _batch(spark, 2, 3)[0]).lsn == 3
+    assert drain_and_lags() == (0, 0)
+    assert sorted(seen) == sorted(p for b in range(3) for p in _batch(spark, b, 3)[1])
 
 
 @pytest.mark.parametrize("layout", ["flat", "day"])
@@ -207,7 +271,8 @@ def test_compact_crash_sweep(spark, tmp_path, faults, layout):
     # the last compaction deleted everything it replaced, crash debris too
     path = store.topic_path(TOPIC)
     on_disk = {os.path.realpath(f) for f in store_module._disk_files(path)}
-    assert on_disk == {os.path.realpath(f) for f in EventStore._parquet_files(path)}
+    logged = {os.path.realpath(store_module._local(f.path)) for f in store.log_files(TOPIC)}
+    assert on_disk == logged
 
 
 def _stream_batches(spark, store, topic, checkpoint, max_files=None):
@@ -267,7 +332,7 @@ def test_log_is_sparks_file_sink_format(spark, tmp_path, layout):
     else:
         # a stray file the log does not name stays invisible
         stray = os.path.join(path, "part-99999-stray.parquet")
-        shutil.copy(EventStore._parquet_files(path)[0], stray)
+        shutil.copy(store_module._local(store.log_files(TOPIC)[0].path), stray)
         batches = _stream_batches(spark, store, TOPIC, str(tmp_path / "ck"), 1)
         assert len(batches) == 6  # 3 compacted files + 3 appends
         delivered = [pair for batch in batches for pair in batch]
@@ -276,18 +341,16 @@ def test_log_is_sparks_file_sink_format(spark, tmp_path, layout):
 
 
 def test_topic_without_log_adopts_its_files(spark, tmp_path):
-    """A topic written before the commit log (parquet files plus a ticket
-    with a publication clock, no log) replays the same before and after its
-    first new append, and a stream checkpoint taken over the old listing
-    sees only the new rows."""
+    """A topic written before the commit log (parquet files, no log and no
+    descriptor) replays the same before and after its first new append,
+    and a stream checkpoint taken over the old listing sees only the new
+    rows."""
     store = EventStore(spark, str(tmp_path / "store"))
     for b in range(3):
         store.append(TOPIC, _batch(spark, b, 4)[0])
     path = store.topic_path(TOPIC)
     shutil.rmtree(os.path.join(path, store_module.LOG_DIR))
-    data = store._tickets._read()
-    data[TOPIC]["clock"] = 1
-    store._tickets._write(data)
+    os.remove(os.path.join(path, store_module.DESCRIPTOR))
 
     store = EventStore(spark, store.root)
     before = [(r.lsn, r.id, r.payload) for r in store.replay(TOPIC).collect()]
@@ -299,7 +362,6 @@ def test_topic_without_log_adopts_its_files(spark, tmp_path):
     after = [(r.lsn, r.id, r.payload) for r in store.replay(TOPIC).collect()]
     assert after[:12] == before
     assert [lsn for lsn, _, _ in after[12:]] == [4] * 4
-    assert "clock" not in store.high_water(TOPIC)
     assert os.listdir(os.path.join(path, store_module.LOG_DIR)) != []
     new = _stream_batches(spark, store, TOPIC, checkpoint)
     delivered = [pair for batch in new for pair in batch]

@@ -12,6 +12,7 @@ Reference tests mirrored (by behavior, not code):
 from __future__ import annotations
 
 import datetime
+import json
 import os
 
 import pytest
@@ -270,10 +271,11 @@ def test_day_partitioned_topic_prunes_and_orders(store, spark):
 
 
 def test_append_never_reads_preexisting_files(store, spark):
-    """An append is O(batch): lsn/layout/key-type come from the ticket store
-    and the high water from the batch itself. Proven the hard way — corrupt
-    every pre-existing parquet file; a second append must still succeed
-    because it never opens them (round 1 paid two O(table) scans here)."""
+    """An append is O(batch): the lsn comes from the commit log's per-file
+    bounds, layout/key-type from the topic's descriptor and the high water
+    from the batch itself. Proven the hard way — corrupt every
+    pre-existing parquet file; a second append must still succeed because
+    it never opens them (round 1 paid two O(table) scans here)."""
     import os
 
     store.append("nt_events", _payload_df(spark, [("a", "1", TS), ("b", "2", TS)]))
@@ -283,21 +285,26 @@ def test_append_never_reads_preexisting_files(store, spark):
             with open(os.path.join(path, f), "wb") as fh:
                 fh.write(b"not a parquet file")
     cur = store.append("nt_events", _payload_df(spark, [("c", "3", TS)]))
-    assert cur.lsn == 2  # ticket-derived, monotone past the corrupted batch
-    assert store.lag("nt_events", Cursor.zero()) == 2  # gauge is O(1) too
+    assert cur.lsn == 2  # log-derived, monotone past the corrupted batch
+    assert store.lag("nt_events", Cursor.zero()) == 2  # the gauge reads the log too
 
 
-def test_ticket_recovery_after_state_loss(store, spark, tmp_path):
-    """Losing the ticket store must not reissue lsns: the next append
-    recovers the high water by one explicit scan of the parquet source of
-    truth, then resumes O(1) bookkeeping."""
+def test_append_after_state_loss(store, spark, tmp_path, jobs_started):
+    """Losing ``_meta`` (the append mutexes) must not reissue lsns, and
+    costs nothing: the lsn comes from the topic's commit log, so the next
+    append starts no more Spark jobs than one before the loss (a recovery
+    scan used to run here)."""
     import shutil
 
     store.append("rec_events", _payload_df(spark, [("a", "1", TS)]))
+    before = jobs_started()
     store.append("rec_events", _payload_df(spark, [("b", "2", TS)]))
+    normal = jobs_started() - before
     shutil.rmtree(str(tmp_path / "store" / "_meta"))
     fresh = EventStore(store.spark, store.root)
+    before = jobs_started()
     cur = fresh.append("rec_events", _payload_df(spark, [("c", "3", TS)]))
+    assert jobs_started() - before <= normal
     assert cur.lsn == 3
     lsns = sorted(
         r.lsn for r in fresh.read_events("rec_events").select("lsn").distinct().collect()
@@ -355,8 +362,7 @@ def test_compaction_size_estimate_walks_day_partitions(store, spark):
         partition_by_day=True,
     )
     total = sum(
-        __import__("os").path.getsize(f)
-        for f in EventStore._parquet_files(store.topic_path("csz_events"))
+        os.path.getsize(store_module._local(f.path)) for f in store.log_files("csz_events")
     )
     assert total > 0
     assert store.compact("csz_events") >= 1  # auto-estimate path runs
@@ -369,36 +375,10 @@ def test_view_bridges_to_sql(store, spark):
     assert got.payload == "hello"
 
 
-def test_repair_ticket_after_orphaned_reservation(store, spark):
-    """Crash window honesty: a ticket reservation whose data write never
-    landed overcounts the gauges; repair_ticket rebuilds from parquet."""
-    store.append("rep_events", _payload_df(spark, [("k", "p", TS)]))
-    store.append("rep_events", _payload_df(spark, [("k", "p", TS)]))
-    true_ticket = dict(store.high_water("rep_events"))
-    # simulate the crash: reservation saved, parquet write lost
-    store._tickets.save(
-        "rep_events",
-        lsn=true_ticket["lsn"] + 1,
-        max_id=true_ticket["max_id"] + 5,
-        total=true_ticket["total"] + 5,
-        key_type=true_ticket["key_type"],
-        day_partitioned=true_ticket["day_partitioned"],
-    )
-    assert store.lag("rep_events", Cursor.zero()) == true_ticket["lsn"] + 1  # inflated
-    repaired = store.repair_ticket("rep_events")
-    assert repaired["lsn"] == true_ticket["lsn"]
-    assert repaired["max_id"] == true_ticket["max_id"]
-    assert repaired["total"] == true_ticket["total"]
-    assert store.lag("rep_events", Cursor.zero()) == true_ticket["lsn"]
-    # appends continue correctly after repair
-    cur = store.append("rep_events", _payload_df(spark, [("k", "p", TS)]))
-    assert cur.lsn == true_ticket["lsn"] + 1
-
-
 def test_concurrent_appends_serialize_unique_lsns(store, spark):
-    """Two appends racing on one topic must never reserve the same lsn
-    (TicketStore.save alone is a read-modify-write; the per-topic
-    TopicMutex serializes the reserve+write critical section)."""
+    """Two appends racing on one topic must never take the same lsn (an
+    append is a read-modify-write of the commit log; the per-topic
+    TopicMutex serializes the read+write critical section)."""
     import threading
 
     cursors, errors = [], []
@@ -520,7 +500,7 @@ def test_heartbeat_protects_long_held_lock_from_steal(tmp_path):
 
 def test_append_mutex_times_out_on_live_contention(store, spark):
     """A fresh (non-stale) foreign lock makes append fail fast with
-    TimeoutError rather than corrupting the ticket."""
+    TimeoutError rather than taking a second writer's lsn."""
     store._append_mutex.acquire("held_events")
     store._append_mutex.timeout_seconds = 0.3
     with pytest.raises(TimeoutError, match="held_events"):
@@ -645,16 +625,23 @@ def _seed_topic(store, spark, topic="rc_events", n=6):
 
 
 def test_staging_sweep_cannot_cross_topics(store, spark):
-    """The orphan sweep is scoped to the topic's own staging subdirectory:
-    a topic whose name prefixes another's can never delete the other's
-    in-flight staging."""
-    a = _seed_topic(store, spark, "foo_events")
-    staging_other = os.path.join(store.root, "_staging", "foo_events-eu_events")
-    os.makedirs(staging_other, exist_ok=True)
-    marker = os.path.join(staging_other, "inflight.parquet")
-    open(marker, "w").write("x")
-    _seed_topic(store, spark, "foo_events")  # second append sweeps ITS orphans
-    assert os.path.exists(marker)  # the other topic's staging survived
+    """An append removes only its own staging directory, under its
+    topic's, and a compaction sweeps the append staging a crashed append
+    of its topic left: a topic whose name prefixes another's can never
+    delete the other's in-flight staging."""
+    _seed_topic(store, spark, "foo_events")
+    staging = os.path.join(store.root, "_staging")
+    other = os.path.join(staging, "foo_events-eu_events", "append-inflight")
+    crashed = os.path.join(staging, "foo_events", "append-crashed")
+    for d in (other, crashed):
+        os.makedirs(d)
+        open(os.path.join(d, "part-0.parquet"), "w").write("x")
+    _seed_topic(store, spark, "foo_events")  # a second append stages and cleans up
+    assert os.listdir(os.path.join(staging, "foo_events")) == ["append-crashed"]
+    store.compact("foo_events")
+    assert not os.path.exists(crashed)
+    assert os.listdir(other) == ["part-0.parquet"]  # the other topic's staging survived
+    assert len(store.read_events("foo_events").collect()) == 12
 
 
 def test_replicator_lock_steal_elects_single_winner(tmp_path):
@@ -848,8 +835,9 @@ def test_small_flat_append_writes_one_file(store, spark, monkeypatch):
 
 
 def test_ticketed_reads_start_no_job(store, spark, jobs_started):
-    """The append records the row schema in the ticket, so reading a
-    ticketed topic plans without a footer-inference (or key-type) job."""
+    """The first append records the row schema in the topic's descriptor,
+    so reading the topic plans without a footer-inference (or key-type)
+    job."""
     store.append("nojob_events", _payload_df(spark, [("a", "1", TS), ("b", "2", TS)]))
     before = jobs_started()
     plain = store.read_events("nojob_events")
@@ -863,7 +851,7 @@ def test_ticketed_reads_start_no_job(store, spark, jobs_started):
 
 def test_append_with_different_schema_refused(store, spark):
     """One row schema per topic, as one key type: readers trust the
-    ticket's schema, so an append that would change it is refused and
+    descriptor's schema, so an append that would change it is refused and
     nothing is written."""
     store.append("schema_events", _payload_df(spark, [("a", "1", TS)]))
     other = spark.createDataFrame([("b", 2, TS)], "key string, payload int, timestamp timestamp")
@@ -873,18 +861,135 @@ def test_append_with_different_schema_refused(store, spark):
     assert [r.payload for r in store.read_events("schema_events").collect()] == ["1"]
 
 
-def test_pre_schema_ticket_infers_schema_once(store, spark, jobs_started):
-    """A ticket saved without a row schema (written before schemas were
-    recorded) keeps its counters and gains the schema from one footer
-    read; later reads run no job."""
-    store.append("legacy_events", _payload_df(spark, [("a", "1", TS)]))
-    ticket = store.high_water("legacy_events")
-    store._tickets.save(
-        "legacy_events", **{k: v for k, v in ticket.items() if k != "schema"}
-    )
-    assert store._tickets.get("legacy_events")["schema"] is None
+@pytest.mark.parametrize("day", [False, True], ids=["flat", "day"])
+def test_topic_without_descriptor_infers_it_once(store, spark, jobs_started, day):
+    """A topic whose log names rows but which has no descriptor (written
+    before descriptors existed) infers its key type, layout and schema
+    once, by a footer read and an aggregate, and writes the descriptor
+    the topic's first append would have written (``dt`` of a day layout
+    included); later reads run no job, the high water is unchanged, and
+    the next append is accepted."""
+    rows = [("a", "1", TS)]
+    store.append("legacy_events", _payload_df(spark, rows), partition_by_day=day)
+    high_water = store.high_water("legacy_events")
+    descriptor = os.path.join(store.topic_path("legacy_events"), store_module.DESCRIPTOR)
+    with open(descriptor) as f:
+        written = json.load(f)
+    os.remove(descriptor)
     assert store.event_schema("legacy_events") == store.read_events("legacy_events").schema
-    assert store.high_water("legacy_events") == ticket
+    with open(descriptor) as f:
+        assert json.load(f) == written
+    assert store.high_water("legacy_events") == high_water
     before = jobs_started()
-    store.read_events("legacy_events")
+    store.read_events("legacy_events", typed_key=True)
     assert jobs_started() == before
+    store.append("legacy_events", _payload_df(spark, [("b", "2", TS)]), partition_by_day=day)
+    assert sorted(r.payload for r in store.read_events("legacy_events").collect()) == ["1", "2"]
+
+
+def test_log_lines_without_bounds_get_them_once(store, spark):
+    """A log whose lines predate per-line bounds gets them from the files'
+    footers once, by a snapshot naming the same files, on its first read.
+    After that an append and the gauges read only the log, so an old file
+    that cannot be read no longer stops them."""
+    cursors = _two_row_appends(store, spark, "bare_events", 3)
+    log = os.path.join(store.topic_path("bare_events"), store_module.LOG_DIR)
+    for name in os.listdir(log):
+        entry = os.path.join(log, name)
+        head, *lines = open(entry).read().splitlines()
+        bare = [
+            {k: v for k, v in json.loads(ln).items() if k not in ("rows", "low", "high")}
+            for ln in lines
+        ]
+        with open(entry, "w") as f:
+            f.write("\n".join([head, *(json.dumps(ln) for ln in bare)]))
+    assert store.lag("bare_events", Cursor.zero()) == 3
+    assert all("rows" in line for line in store_module._read_log(log)[1])
+    for f in store.log_files("bare_events"):
+        with open(store_module._local(f.path), "wb") as fh:
+            fh.write(b"not a parquet file")
+    assert store.append("bare_events", _payload_df(spark, [("z", "last", TS)])).lsn == 4
+    assert store.lag("bare_events", Cursor.zero()) == 4
+    assert store.high_water("bare_events")["total"] == 7
+    got = store.read_events("bare_events", after=cursors[-1]).collect()
+    assert [r.payload for r in got] == ["last"]
+
+
+def _spy(fn, calls, record=lambda first, *rest: first):
+    """``fn``, appending ``record(*args)`` to ``calls`` before each call."""
+
+    def wrapped(*args):
+        calls.append(record(*args))
+        return fn(*args)
+
+    return wrapped
+
+
+def test_append_commits_by_one_log_entry(store, spark, monkeypatch):
+    """After a topic's first append, an append's one durable write is its
+    commit-log entry: one ``atomic_write``, into the log, and no lease but
+    the topic's append mutex (no state file is read-modify-written)."""
+    from event_store_spark.core import state
+
+    store.append("commit_events", _payload_df(spark, [("a", "1", TS)]))
+    writes, leases = [], []
+    for module in (store_module, state):
+        monkeypatch.setattr(module, "atomic_write", _spy(module.atomic_write, writes))
+    monkeypatch.setattr(
+        state.Lease, "take", _spy(state.Lease.take, leases, lambda lease, _: lease.path)
+    )
+    store.append("commit_events", _payload_df(spark, [("b", "2", TS)]))
+    log = os.path.join(store.topic_path("commit_events"), store_module.LOG_DIR)
+    assert [os.path.dirname(p) for p in writes] == [log]
+    assert set(leases) == {store._append_mutex._path("commit_events")}
+
+
+def _two_row_appends(store, spark, topic, n):
+    return [
+        store.append(topic, _payload_df(spark, [(f"k{i}", f"p{i}", TS), (f"j{i}", f"q{i}", TS)]))
+        for i in range(n)
+    ]
+
+
+def test_keyset_read_opens_only_files_past_the_cursor(store, spark):
+    """``read_events(after=)`` (and so ``replay``) reads only the logged
+    files whose high is past the cursor, the keyset consumers' plan: a
+    file wholly at or below the cursor is never opened, so it may hold
+    garbage. A cursor inside a file filters its rows; a cursor at the
+    high water selects no file and yields an empty frame with the topic's
+    schema."""
+    cursors = _two_row_appends(store, spark, "kr_events", 4)
+    for f in store.log_files("kr_events"):
+        if f.high <= cursors[1]:
+            with open(store_module._local(f.path), "wb") as fh:
+                fh.write(b"not a parquet file")
+    got = store.read_events("kr_events", after=cursors[1]).collect()
+    assert sorted(r.payload for r in got) == ["p2", "p3", "q2", "q3"]
+    replayed = store.replay("kr_events", after=cursors[1]).collect()
+    assert [r.lsn for r in replayed] == [3, 3, 4, 4]
+    inside = Cursor(3, min(r.id for r in replayed if r.lsn == 3))
+    assert len(store.replay("kr_events", after=inside).collect()) == 3
+    empty = store.read_events("kr_events", after=cursors[-1], typed_key=True)
+    assert empty.count() == 0
+    assert empty.drop("key_view").schema == store.event_schema("kr_events")
+
+
+def test_keyset_read_of_many_files_starts_no_job(store, spark, monkeypatch, jobs_started):
+    """Spark lists more than 32 root paths with a Spark job; a keyset
+    read selecting more files than that reads the topic directory with
+    the keyset predicate instead, and still plans without a job."""
+    monkeypatch.setattr(store_module, "TARGET_FILE_BYTES", 1)
+    rows = [(f"k{i}", f"p{i}", TS) for i in range(40)]
+    one_per_partition = spark.sparkContext.parallelize(rows, len(rows))
+    store.append("many_events", spark.createDataFrame(
+        one_per_partition, "key string, payload string, timestamp timestamp"
+    ))
+    files = store.log_files("many_events")
+    assert len(files) > store_module.LISTING_THRESHOLD
+    before = jobs_started()
+    df = store.read_events("many_events", after=Cursor.zero())
+    assert jobs_started() == before
+    assert sorted(r.payload for r in df.collect()) == sorted(p for _, p, _ in rows)
+    after = sorted(f.high for f in files)[5]
+    got = store.read_events("many_events", after=after).collect()
+    assert len(got) == len(rows) - 6

@@ -68,8 +68,9 @@ def _check_bounds(store, exact):
 def test_every_logged_file_carries_its_bounds(spark, tmp_path, monkeypatch, layout):
     """Appends log exact bounds (one lsn per file); a compaction, plain or
     Z-ordered, logs bounds that cover its files' rows; lines logged
-    before lines carried bounds, and the legacy entry of a topic written
-    before the log, read the same bounds from the footers."""
+    before lines carried bounds get the same bounds from the footers,
+    written back to the log once, and so does the legacy entry of a topic
+    written before the log."""
     if layout == "multi":
         monkeypatch.setattr(store_module, "TARGET_FILE_BYTES", 1)
     day = layout == "day"
@@ -93,6 +94,7 @@ def test_every_logged_file_carries_its_bounds(spark, tmp_path, monkeypatch, layo
             f.write("\n".join([head, *(json.dumps(ln) for ln in bare)]))
     assert "rows" not in _lines(store)[0]
     assert store.log_files(TOPIC) == want
+    assert all("rows" in line for line in _lines(store))
 
     # a topic written before the log: its adopted entry carries bounds
     shutil.rmtree(log)

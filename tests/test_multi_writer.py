@@ -3,9 +3,9 @@
 The reference holds a single-writer invariant via a Postgres advisory
 lock (LockManager.java:45-84); here concurrent appends to one topic
 serialize on the per-topic TopicMutex over a shared filesystem, and the
-commit point (lsn ticket save) re-verifies ownership so a writer whose
-lock was stolen after a heartbeat lapse aborts loudly instead of
-double-reserving an lsn.
+commit point (the commit-log entry) re-verifies ownership so a writer
+whose lock was stolen after a heartbeat lapse aborts loudly instead of
+logging a second writer's lsn.
 """
 
 from __future__ import annotations
@@ -19,12 +19,7 @@ import pytest
 
 from event_store_spark.core import EventStore
 from event_store_spark.core.cursor import Cursor
-from event_store_spark.core.state import (
-    OffsetsTable,
-    ProgressStore,
-    TicketStore,
-    TopicMutex,
-)
+from event_store_spark.core.state import OffsetsTable, ProgressStore, TopicMutex
 
 TS = datetime.datetime(2025, 1, 4, 12, 0, 0)
 
@@ -122,8 +117,7 @@ def test_owns_holds_through_a_breakers_restore(tmp_path, monkeypatch):
 
 def test_append_aborts_when_mutex_stolen_before_commit(spark, tmp_path, monkeypatch):
     """The MERGE-guard: ownership re-verified at the commit point; a stolen
-    mutex aborts the append BEFORE the lsn reservation, committing
-    nothing."""
+    mutex aborts the append BEFORE its log entry, committing nothing."""
     store = EventStore(spark, str(tmp_path / "store"))
     store.append("mw_events", _df(spark, "seed"))
 
@@ -134,12 +128,62 @@ def test_append_aborts_when_mutex_stolen_before_commit(spark, tmp_path, monkeypa
     with pytest.raises(RuntimeError, match="lost the topic mutex"):
         store.append("mw_events", _df(spark, "late"))
     monkeypatch.undo()
-    # nothing committed: ticket lsn unchanged, no data from the aborted batch
+    # nothing committed: no data from the aborted batch
     assert store.read_events("mw_events").where("key like 'late%'").count() == 0
     cur = store.append("mw_events", _df(spark, "retry"))
-    # the guard fired BEFORE the lsn reservation, so the aborted append
-    # left no gap: seed=1, retry=2
+    # the guard fired BEFORE the log entry, so the retry takes the
+    # aborted append's lsn: seed=1, retry=2
     assert cur.lsn == 2
+
+
+def test_append_stolen_before_staging_spares_the_thiefs_rows(spark, tmp_path, monkeypatch):
+    """Writer A holds the topic mutex and pauses before staging its data;
+    writer B breaks the lease and appends, and A resumes while B's files
+    sit in B's staging directory. A stages apart from B, so it neither
+    deletes nor moves B's files: B commits every row, A aborts at its
+    log entry, and A's retry lands after B's."""
+    from event_store_spark.core import store as store_module
+    from event_store_spark.core.state import Lease
+
+    root = str(tmp_path / "store")
+    a, b = EventStore(spark, root), EventStore(spark, root)
+    a.append("mw_events", _df(spark, "seed"))
+    a_paused, resume_a, a_errors = threading.Event(), threading.Event(), []
+    real_row_bytes, real_move_into = store_module._row_bytes, store_module._move_into
+
+    def row_bytes(schema):  # A's pause point: mutex held, nothing staged
+        if threading.current_thread() is writer_a:
+            a_paused.set()
+            resume_a.wait(120)
+        return real_row_bytes(schema)
+
+    def move_into(staging, path):  # B's files are staged: A resumes
+        if threading.current_thread() is not writer_a and not resume_a.is_set():
+            resume_a.set()
+            writer_a.join(300)
+        return real_move_into(staging, path)
+
+    def append_a():
+        try:
+            a.append("mw_events", _df(spark, "a"))
+        except RuntimeError as e:
+            a_errors.append(e)
+
+    monkeypatch.setattr(store_module, "_row_bytes", row_bytes)
+    monkeypatch.setattr(store_module, "_move_into", move_into)
+    writer_a = threading.Thread(target=append_a)
+    writer_a.start()
+    assert a_paused.wait(120)
+    with monkeypatch.context() as m:
+        m.setattr(Lease, "_stale", lambda lease: True)  # A's lease looks orphaned
+        b_cursor = b.append("mw_events", _df(spark, "b"))
+    assert not writer_a.is_alive()
+    assert len(a_errors) == 1 and "lost the topic mutex" in str(a_errors[0])
+    assert b_cursor.lsn == 2
+    assert a.append("mw_events", _df(spark, "a")).lsn == 3
+    keys = sorted(bytes(r.key).decode() for r in a.read_events("mw_events").collect())
+    assert keys == sorted(f"{t}-{i}" for t in ("seed", "a", "b") for i in range(3))
+    assert a.high_water("mw_events")["total"] == 9
 
 
 def test_two_instances_interleaved_appends_one_lsn_each(spark, tmp_path):
@@ -227,12 +271,6 @@ def test_owns_is_thread_scoped_after_theft(tmp_path):
 _SAVES = 300
 
 
-def _ticket_save(store, topic, i):
-    store.save(
-        topic, lsn=i, max_id=i, total=i, key_type="string", day_partitioned=False
-    )
-
-
 def _offsets_save(store, topic, i):
     # both write paths of the table, alternately
     if i % 2:
@@ -243,9 +281,6 @@ def _offsets_save(store, topic, i):
 
 #: store → (save value i on a topic, the value a topic reads back)
 _STATE_FILES = {
-    TicketStore: (
-        _ticket_save, lambda store, topic: (store.get(topic) or {}).get("lsn")
-    ),
     ProgressStore: (
         lambda store, topic, i: store.save(topic, Cursor(i, 0), batch_id=i),
         lambda store, topic: store.last_batch_id(topic),
@@ -259,8 +294,8 @@ def test_concurrent_state_file_writers_lose_no_update(tmp_path, kind):
     """Two writers, each with its own store over ONE file, save to their
     own topic concurrently. Every update is a read-modify-write of the
     whole file, so an unlocked writer can replace the file with a copy
-    read before the other's save: that save is lost (a reverted ticket
-    reissues an lsn, a reverted offset undercounts for good). Every save
+    read before the other's save: that save is lost (a reverted progress
+    cursor replicates again, a reverted offset undercounts for good). Every save
     must read back its own value, and the file must end exact."""
     save, read = _STATE_FILES[kind]
     path = str(tmp_path / "state.json")

@@ -748,7 +748,7 @@ def test_run_records_resumes_mid_batch_after_handler_crash(spark, tmp_path, stor
 
 
 def test_ticketed_stream_readers_start_no_job(spark, tmp_path, store, jobs_started):
-    """Subscription.stream takes the row schema from the topic's ticket:
+    """Subscription.stream takes the row schema from the topic's descriptor:
     building the stream starts no Spark job (a footer-inference read used
     to, on every call)."""
     topic = _seed(spark, store)
